@@ -5,7 +5,7 @@ Arrow-batched `mapInPandas` operators.
 Container decoding (JPEG/PNG/WAV/MP4) requires codec libraries that are NOT
 in this environment — that step is stubbed behind NotImplementedError, with
 a deterministic RAW container format standing in so every downstream stage
-(feature extraction, resize, frame sampling) is REAL, runs on real numpy
+(feature extraction, frame sampling, hashing) is REAL, runs on real numpy
 arrays, and is tested end-to-end. The Spark-side plumbing — schemas, batch
 iteration, output shapes, partition sizing — is exactly what a production
 deployment keeps; only `_decode_*` swaps to PIL/soundfile/pyav.
@@ -172,29 +172,6 @@ def image_features(df: DataFrame, id_col: str = "media_id", data_col: str = "dat
         run,
         schema="media_id long, n_bytes long, width int, height int, channels int, "
         "mean_px double, std_px double",
-    )
-
-
-def resize_images(
-    df: DataFrame, out_w: int, out_h: int, id_col: str = "media_id", data_col: str = "data"
-) -> DataFrame:
-    """Nearest-neighbor resize, re-encoded to RAWI (real resampling logic —
-    the interpolation a training pipeline applies before batching)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, b in zip(pdf[id_col], pdf[data_col]):
-                a = _decode_image(bytes(b))
-                h, w, _ = a.shape
-                yi = (np.arange(out_h) * h // out_h)[:, None]
-                xi = (np.arange(out_w) * w // out_w)[None, :]
-                ids.append(mid)
-                payloads.append(encode_rawi(a[yi, xi]))
-            yield pd.DataFrame({"media_id": ids, "data": payloads})
-
-    return df.select(id_col, data_col).mapInPandas(
-        run, schema="media_id long, data binary"
     )
 
 

@@ -889,68 +889,3 @@ def seq_pattern_error_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_matches").cast("bigint").alias("total_matches"),
         F.max("n_matches").cast("bigint").alias("max_per_user"),
     )
-
-
-# --------------------------------------------------------------------------
-# Motif MEASURES rollup (round 14 pre-build — REGISTRATION PENDING r15,
-# same window-cap reason as the multimodal pre-builds): MATCH_RECOGNIZE
-# MEASURES over the vc*p funnel motif — not just HOW MANY bursts, but how
-# LONG they run (symbols and wall-clock). The oracle re-derives match
-# positions with the SAME split/prefix-sum construction the operator uses
-# (both engines keep every empty segment, verified), so the rollup is
-# integer-exact end to end.
-# --------------------------------------------------------------------------
-
-_MEASURES_ORACLE = """
-    WITH s AS (
-      SELECT user_id,
-             string_agg(substr(event_type, 1, 1), '' ORDER BY ts, event_id)
-               AS seq,
-             list(epoch_us(ts) ORDER BY ts, event_id) AS tss
-      FROM events GROUP BY user_id
-    ),
-    m AS (
-      SELECT user_id, tss,
-             regexp_extract_all(seq, 'vc*p') AS ms,
-             string_split_regex(seq, 'vc*p') AS ss
-      FROM s WHERE len(regexp_extract_all(seq, 'vc*p')) > 0
-    ),
-    x AS (  -- start0 = 0-based match start: prefix segs 1..i + matches 1..i-1
-      SELECT user_id, tss, len(ms[i]) AS mlen,
-             CAST(coalesce(list_aggregate(list_transform(ss[1:i], z -> len(z)),
-                                          'sum'), 0)
-                + coalesce(list_aggregate(list_transform(ms[1:i-1], z -> len(z)),
-                                          'sum'), 0) AS BIGINT) AS start0
-      FROM m, UNNEST(generate_series(1, len(ms))) AS t(i)
-    )
-    SELECT count(DISTINCT user_id)::BIGINT AS n_matched_users,
-           count(*)::BIGINT AS total_matches,
-           CAST(sum(mlen) AS BIGINT) AS sum_len,
-           max(mlen)::BIGINT AS max_len,
-           CAST(sum(tss[start0 + mlen] - tss[start0 + 1]) AS BIGINT)
-             AS sum_span_us
-    FROM x
-"""
-
-
-def seq_motif_measures_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MEASURES rollup of the contiguous vc*p bursts: matched users,
-    match count, total/max symbol length, and total wall-clock span of
-    the bursts in integer microseconds (the unix_micros/epoch_us discipline — seconds-level unix_timestamp truncates where DuckDB's epoch cast rounds) — one keyed rollup (user_motif_measures'
-    single-shuffle array-fold plan) plus one global aggregate. Positions
-    come from split/prefix-sum array folds, never per-match regex
-    loops."""
-    from ..operators.sequence import user_motif_measures
-
-    m = user_motif_measures(
-        _t(spark, sf_dir, "events"), "vc*p", alphabet=_MOTIF_ALPHABET
-    )
-    return m.agg(
-        F.count_distinct("user_id").cast("bigint").alias("n_matched_users"),
-        F.count("*").cast("bigint").alias("total_matches"),
-        F.sum("match_len").cast("bigint").alias("sum_len"),
-        F.max("match_len").cast("bigint").alias("max_len"),
-        F.sum(F.unix_micros("t_end") - F.unix_micros("t_start"))
-        .cast("bigint")
-        .alias("sum_span_us"),
-    )

@@ -50,7 +50,6 @@ SLOW_TESTS = {
     "test_txn_checkpoint.py::test_auto_checkpoint_written_every_interval",  # 17.3s
     "test_stateful.py::test_state_carries_across_batches",  # 17.2s
     "test_bpe.py::test_bpe_loop_matches_pure_python_reference_on_random_corpora",  # 16.7s
-    "test_multimodal.py::test_resize_roundtrip",  # 16.3s
     "test_sql_surface.py::test_txntable_sql_view_pushdown_prunes_through_pure_sql",  # 15.1s
     "test_txn_protocol.py::test_protocol_refusal_is_not_swallowed_as_reaped_history",  # 15.0s
     "test_txn_checkpoint.py::test_vacuum_reaps_historical_files_via_checkpoint_refs",  # 14.1s

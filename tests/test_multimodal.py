@@ -27,12 +27,6 @@ def test_image_features(spark, media):
     assert 0 <= out[0].mean_px <= 255
 
 
-def test_resize_roundtrip(spark, media):
-    resized = M.resize_images(media, out_w=4, out_h=4)
-    feats = M.image_features(resized).collect()
-    assert all(r.width == 4 and r.height == 4 and r.channels == 3 for r in feats)
-
-
 def test_frame_sampling(spark):
     frames = np.arange(5 * 6 * 4, dtype=np.uint8).reshape(5, 6, 4)
     df = spark.createDataFrame(

@@ -249,32 +249,3 @@ def test_measures_agree_with_finditer_random(spark):
             for i, m in enumerate(_re.finditer(pat, s)):
                 ref[(u, i + 1)] = (m.start(), m.end() - m.start())
         assert got == ref, f"pattern {pat!r}"
-
-
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
-def test_motif_measures_query_oracle_parity(spark, sf):
-    """Driver-style parity for the PENDING measures query (r15
-    registration): Spark's array-fold position reconstruction must
-    hash-match the DuckDB split/prefix-sum re-derivation on the real
-    events table."""
-    import duckdb
-
-    from kinesis3_spark.queries.funnel import (
-        _MEASURES_ORACLE,
-        seq_motif_measures_q,
-    )
-
-    sf_dir = f"/root/testdata/{sf}"
-    s = seq_motif_measures_q(spark, sf_dir).toPandas()
-    con = duckdb.connect()
-    con.sql("SET TimeZone='UTC'")
-    con.sql(
-        f"CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/events.parquet')"
-    )
-    d = con.sql(_MEASURES_ORACLE).df()
-    assert len(s) == len(d) == 1
-    assert sorted(s.columns) == sorted(d.columns)
-    cols = sorted(s.columns)
-    assert s[cols].astype(str).values.tolist() == d[cols].astype(str).values.tolist()
-    assert int(s["total_matches"].iloc[0]) > 0
