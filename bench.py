@@ -121,7 +121,7 @@ HEADLINE = [
     # round 9: retrieve-then-rerank over the persisted index (recall lift
     # at near-ADC cost — includes the in-job exact-truth audit pass),
     # DSIR data selection, and the CDC-merged user-state read (the
-    # drain itself materializes once per process via _CDC_CACHE — the
+    # drain itself materializes once per corpus via tmpdirs.memo — the
     # timed row is the dimension-table read, like every cached stream row).
     # dedup_semdedup_cells stays OUT of the headline deliberately: its
     # registered form carries an O(N^2) exact-truth audit (56s at sf0.1)

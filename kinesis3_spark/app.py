@@ -36,6 +36,7 @@ from __future__ import annotations
 import json
 import threading
 import time
+from collections import deque
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,6 +55,11 @@ RECORD_SCHEMA = T.StructType(
         T.StructField("partition", T.StringType()),
     ]
 )
+
+
+# /stats summarizes the most recent batch timings only, so a long-running
+# collector's memory stays bounded.
+BATCH_TIMINGS_KEPT = 1024
 
 
 def _percentiles(xs: list[float]) -> dict[str, float]:
@@ -101,7 +107,7 @@ class Collector:
             "malformed": 0,
             "batches": 0,
             "archive_writes": 0,
-            "batch_seconds": [],
+            "batch_seconds": deque(maxlen=BATCH_TIMINGS_KEPT),
             "started_at": None,
         }
         self._server: ThreadingHTTPServer | None = None

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import tmpdirs
 from .relational import _t
 from . import query
 
@@ -241,20 +242,6 @@ PSI_SMOOTH = 0.5  # add-k on bucket counts: a source missing a top token
 _DQ_TOKS = "string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$', '', 'g'), '\\s+')"
 
 
-# Persisted bucket-counts table, one per (cache_key, ref, K) — the same
-# keyed-registry discipline as queries/dedup.py's _GRAM_INDEX (r12 advice
-# fix: the previous per-call .persist() accumulated cached partitions in a
-# long-lived session; repeated invocations now reuse ONE handle).
-# CONTRACT (ADVICE r12, shared with lmquality's _LM_MODELS/_QC_MODELS):
-# cache_key must uniquely identify the input RELATION for the life of the
-# session — callers pass the sf_dir path, and on a cache hit the `docs`
-# argument is deliberately ignored. Passing a different DataFrame under a
-# reused key, or regenerating the data under an sf_dir in-session, serves
-# the first caller's persisted counts; clear the registry (or use a fresh
-# key) when the underlying relation changes.
-_PSI_BUCKETS: dict[tuple[str, str, int], DataFrame] = {}
-
-
 def token_drift_psi(
     docs: DataFrame,
     ref_source: str = PSI_REF_SOURCE,
@@ -272,7 +259,13 @@ def token_drift_psi(
     aggregate crosses the wire, and everything downstream operates on the
     persisted |sources| x (K+1) bucket table — re-deriving ref counts,
     totals, and the bucket grid from it costs nothing and never rescans
-    the corpus."""
+    the corpus.
+
+    With `cache_key` (the path `docs` was read from) the bucket table is
+    memoized per (cache_key, ref_source, top_k), so repeated invocations
+    reuse ONE persisted handle instead of stacking a new one per call
+    (r12 advice fix); it is rebuilt when that path changes on disk, and
+    `docs` is not read on a hit."""
     from ..functions import text as T
 
     toks = docs.select("source", F.explode(T.tokenize("text")).alias("tok"))
@@ -285,17 +278,19 @@ def token_drift_psi(
         .select("tok", F.lit(1).alias("is_top"))
     )
     bucket = F.when(F.col("is_top") == 1, F.col("tok")).otherwise(F.lit("(other)"))
-    key = (cache_key, ref_source, top_k) if cache_key is not None else None
-    counts = _PSI_BUCKETS.get(key) if key is not None else None
-    if counts is None:
-        counts = (
+
+    def build(_scratch, *_params):
+        return (
             toks.join(F.broadcast(ref_top), "tok", "left")
             .groupBy("source", bucket.alias("bucket"))
             .agg(F.count("*").alias("c"))
             .persist()  # |sources| x (K+1) rows, bounded by construction
         )
-        if key is not None:
-            _PSI_BUCKETS[key] = counts
+
+    if cache_key is None:
+        counts = build(None)
+    else:
+        counts = tmpdirs.memo("psi_buckets", cache_key, build, ref_source, top_k)
     totals = counts.groupBy("source").agg(F.sum("c").alias("n_tokens"))
     buckets = counts.select("bucket").distinct()
     ref = (

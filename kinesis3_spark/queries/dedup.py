@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import tmpdirs
 from ..operators import dedup as D
 from .relational import _t
 from . import query
@@ -115,19 +116,17 @@ def dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 
-# Persisted gram-set index, one per sf_dir — the query-layer stand-in for
+# Persisted gram-set index, one per corpus — the query-layer stand-in for
 # the stored signature index a production deployment keeps beside the
 # corpus. Without it the shingle computation runs 3x per query (signature
 # build + both verify-join sides; ReusedExchange does not fire because the
 # pruned subplans differ). ~5k rows per SF here; bounded by the corpus.
-_GRAM_INDEX: dict[str, DataFrame] = {}
-
-
 def _grams_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    if sf_dir not in _GRAM_INDEX:
-        g = D._gram_sets(_t(spark, sf_dir, "documents"), "text", "doc_id", D.SHINGLE_N)
-        _GRAM_INDEX[sf_dir] = g.persist()
-    return _GRAM_INDEX[sf_dir]
+    def build(_scratch):
+        docs = _t(spark, sf_dir, "documents")
+        return D._gram_sets(docs, "text", "doc_id", D.SHINGLE_N).persist()
+
+    return tmpdirs.memo("gram_index", sf_dir, build)
 
 
 # Persisted signature index (|docs| x 64 longs — strictly smaller than the
@@ -135,15 +134,12 @@ def _grams_for(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ReusedExchange does not fire across the aliased copies, so an unpersisted
 # signature pipeline runs scan→shingle→minhash twice (operators/dedup.py
 # minhash_lsh_pairs docstring; measured 3.1 s vs 0.4 s at sf0.1).
-_SIG_INDEX: dict[str, DataFrame] = {}
-
-
 def _sigs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    if sf_dir not in _SIG_INDEX:
+    def build(_scratch):
         doc = _t(spark, sf_dir, "documents")
-        sig = D.minhash_signatures(doc, grams=_grams_for(spark, sf_dir))
-        _SIG_INDEX[sf_dir] = sig.persist()
-    return _SIG_INDEX[sf_dir]
+        return D.minhash_signatures(doc, grams=_grams_for(spark, sf_dir)).persist()
+
+    return tmpdirs.memo("sig_index", sf_dir, build)
 
 
 def _neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -374,7 +370,6 @@ def bucketed_fp_index(spark: SparkSession, sf_dir: str) -> str:
     daily anti join needs NO Exchange on the history side, ever. Returns
     the catalog table name."""
     import hashlib
-    from .. import tmpdirs
 
     from ..sinks.bucketed import write_bucketed
 

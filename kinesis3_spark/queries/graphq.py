@@ -39,25 +39,18 @@ def _part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _part_edges_weighted(spark, sf_dir).select("u", "v")
 
 
-_EDGE_CACHE: dict[str, str] = {}  # sf_dir -> parquet path
-
-
 def _part_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(u, v, w) co-purchase edges with u < v, w = number of co-orders —
     the strength the capped tier ranks neighbors by. The groupBy IS the
     distinct of the unweighted form (same rows, one aggregate).
 
-    Materialized ONCE per (process, sf_dir) to a tmpdirs-reaped parquet
-    table and read back by every graph query — the production shape: the
-    edge list is a STORED table derived from the fact table, not a
-    per-query recomputation (the _txn_timeseries_table lifecycle; isdir
-    revalidation so a reaped scratch dir rebuilds)."""
-    import os
+    Materialized ONCE per corpus (tmpdirs.memo) to a parquet table and
+    read back by every graph query — the production shape: the edge list
+    is a STORED table derived from the fact table, not a per-query
+    recomputation (the _txn_timeseries_table lifecycle)."""
+    from .. import tmpdirs
 
-    path = _EDGE_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        from .. import tmpdirs
-
+    def build(scratch):
         li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
         items = li.select(
             F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("pid")
@@ -72,29 +65,24 @@ def _part_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("a.pid").alias("u"), F.col("b.pid").alias("v"))
             .agg(F.count("*").alias("w"))
         )
-        path = tmpdirs.mkdtemp(prefix="k3s_graph_") + "/part_edges"
+        path = scratch + "/part_edges"
         edges.write.mode("overwrite").parquet(path)
-        _EDGE_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+        return path
 
-
-_ORIENTED_CACHE: dict[str, str] = {}  # sf_dir -> parquet path
+    return spark.read.parquet(tmpdirs.memo("graph_edges", sf_dir, build))
 
 
 def _oriented_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The degree-ordered orientation of the co-purchase edges — each
     edge as (a, b) with a the lower-(degree, id) endpoint — STORED once
-    per (process, sf_dir). The census references the oriented set through
+    per corpus. The census references the oriented set through
     three join aliases; Spark duplicates a non-materialized subtree per
     alias (measured: the deg join would run 3x), so at scale the oriented
     edge list is a stored derived table, exactly like the edge list
     itself."""
-    import os
+    from .. import tmpdirs
 
-    path = _ORIENTED_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        from .. import tmpdirs
-
+    def build(scratch):
         edges = _part_edges(spark, sf_dir)
         deg = (
             edges.select(F.col("u").alias("node"))
@@ -115,10 +103,11 @@ def _oriented_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
             )
         )
-        path = tmpdirs.mkdtemp(prefix="k3s_graph_") + "/part_edges_oriented"
+        path = scratch + "/part_edges_oriented"
         oriented.write.mode("overwrite").parquet(path)
-        _ORIENTED_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+        return path
+
+    return spark.read.parquet(tmpdirs.memo("graph_oriented", sf_dir, build))
 
 
 @query(

@@ -334,13 +334,12 @@ def llm_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SHARD_CACHE: dict[str, str] = {}
 _N_SHARDS = 32
 _MANIFEST_NAME = "_MANIFEST.json"
 
 
 def _sharded_export(spark: SparkSession, sf_dir: str) -> str:
-    """Write the deterministic 32-shard training export once per process
+    """Write the deterministic 32-shard training export once per input
     AND pin its file-level manifest: after the partitionBy write commits,
     the data files actually present are listed into `_MANIFEST.json`
     (relative paths — the underscore prefix makes Spark's directory scans
@@ -355,9 +354,8 @@ def _sharded_export(spark: SparkSession, sf_dir: str) -> str:
     from .. import tmpdirs
     from ..operators.dedup import portable_hash60
 
-    path = _SHARD_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        path = tmpdirs.mkdtemp(prefix="k3s_shards_") + "/corpus"
+    def build(scratch):
+        path = scratch + "/corpus"
         docs = _t(spark, sf_dir, "documents").withColumn(
             "shard",
             (portable_hash60(F.col("doc_id").cast("string")) % _N_SHARDS).cast("int"),
@@ -371,8 +369,9 @@ def _sharded_export(spark: SparkSession, sf_dir: str) -> str:
         )
         with open(os.path.join(path, _MANIFEST_NAME), "w") as fh:
             json.dump({"format": "parquet", "files": files}, fh, indent=1)
-        _SHARD_CACHE[sf_dir] = path
-    return path
+        return path
+
+    return tmpdirs.memo("shards", sf_dir, build)
 
 
 def _manifest_files(path: str) -> list[str]:

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import tmpdirs
 from ..functions import text as T
 from .relational import _t
 from . import query
@@ -122,41 +123,37 @@ def score_docs_with_lm(
     )
 
 
-# CONTRACT (ADVICE r12, shared with dataquality's _PSI_BUCKETS and
-# _QC_MODELS below): the sf_dir key must uniquely identify the on-disk
-# relation for the life of the session; regenerating data under the same
-# path in-session serves stale persisted counts — clear the registry then.
-# Persisted model tables, one per (sf_dir, tier) — the "model persists
-# once" production shape the module scale notes promise, realized for the
-# registered queries via the keyed-registry discipline (queries/dedup.py
-# _GRAM_INDEX): without it every invocation re-derives the tri/bi/unigram
-# counts from the train slice (4-5 extra scans; measured 4.34 -> 3.26 s
-# for the trigram gate at sf0.1). Tables are bounded by the trusted
-# slice's vocabulary. The 1-row totals/vocab aggregates stay lazy (they
-# read the persisted count tables).
-_LM_MODELS: dict[tuple, tuple] = {}
-
-
+# Persisted model tables, memoized per (corpus, tier) — the "model
+# persists once" production shape the module scale notes promise: without
+# them every invocation re-derives the tri/bi/unigram counts from the
+# train slice (4-5 extra scans; measured 4.34 -> 3.26 s for the trigram
+# gate at sf0.1). Tables are bounded by the trusted slice's vocabulary.
+# The 1-row totals/vocab aggregates stay lazy (they read the persisted
+# count tables).
 def bigram_model_for(spark: SparkSession, sf_dir: str):
-    key = (sf_dir, "bigram")
-    if key not in _LM_MODELS:
+    def build(_scratch):
         bg, ug, vocab = train_bigram_lm(_t(spark, sf_dir, "documents"))
-        _LM_MODELS[key] = (bg.persist(), ug.persist(), vocab)
-    return _LM_MODELS[key]
+        return bg.persist(), ug.persist(), vocab
+
+    return tmpdirs.memo("lm_bigram", sf_dir, build)
 
 
 def backoff_model_for(spark: SparkSession, sf_dir: str):
     """Builds the trigram tier ON TOP of the bigram registry's persisted
     bg/ug handles (review r12 #4 — a second independent persist of the
     same count tables would re-accumulate exactly the cache duplication
-    the registry exists to prevent); only the trigram counts are new."""
-    key = (sf_dir, "trigram")
-    if key not in _LM_MODELS:
-        bg, ug, _vocab = bigram_model_for(spark, sf_dir)
+    the registry exists to prevent); only the trigram counts are new, so
+    the trigram entry holds only (tg, totals) and releasing it never
+    unpersists the bigram entry's tables."""
+    bg, ug, _vocab = bigram_model_for(spark, sf_dir)
+
+    def build(_scratch):
         docs = _t(spark, sf_dir, "documents")
         tg, _bg2, _ug2, totals = train_backoff_lm(docs, bg_ug=(bg, ug))
-        _LM_MODELS[key] = (tg.persist(), bg, ug, totals)
-    return _LM_MODELS[key]
+        return tg.persist(), totals
+
+    tg, totals = tmpdirs.memo("lm_trigram", sf_dir, build)
+    return tg, bg, ug, totals
 
 
 def score_perplexity(docs: DataFrame, train_source: str = LM_TRAIN_SOURCE) -> DataFrame:
@@ -586,9 +583,6 @@ def llm_domain_tagging(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming perplexity admission: the CCNet gate as a live ingest job.
 # --------------------------------------------------------------------------
 
-_STREAM_PPL_CACHE: dict[str, str] = {}
-
-
 def write_admitted_batch(admitted: DataFrame, out: str, batch_id: int) -> None:
     """Idempotent per-batch sink (r12 advice fix): the batch's admitted
     rows land in their own deterministic batch_id partition via dynamic
@@ -608,39 +602,35 @@ def write_admitted_batch(admitted: DataFrame, out: str, batch_id: int) -> None:
 
 def _stream_ppl_materialize(spark: SparkSession, sf_dir: str) -> str:
     """Drain the document stream through the LM admission gate once per
-    (process, sf_dir); returns the admitted-docs parquet path."""
-    import os
-
-    from .. import tmpdirs
+    corpus; returns the admitted-docs parquet path."""
     from ..streaming import stream_documents
     from ..streaming.run import await_or_raise
 
-    path = _STREAM_PPL_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
-        return path
-    out = tmpdirs.mkdtemp(prefix="k3s_stream_ppl_") + "/admitted"
-    ck = tmpdirs.mkdtemp(prefix="k3s_stream_ppl_ck_")
-    # Train ONCE from the static trusted slice via the persisted model
-    # registry — each micro-batch re-joins the SAME cached tables (the
-    # production shape; r12).
-    bg_counts, ug_counts, vocab = bigram_model_for(spark, sf_dir)
+    def build(scratch):
+        out = scratch + "/admitted"
+        ck = scratch + "/ck"
+        # Train ONCE from the static trusted slice via the persisted model
+        # registry — each micro-batch re-joins the SAME cached tables (the
+        # production shape; r12).
+        bg_counts, ug_counts, vocab = bigram_model_for(spark, sf_dir)
 
-    def admit_batch(bdf, batch_id: int) -> None:
-        scored = score_docs_with_lm(
-            bdf.where(F.col("source") != LM_TRAIN_SOURCE), bg_counts, ug_counts, vocab
+        def admit_batch(bdf, batch_id: int) -> None:
+            scored = score_docs_with_lm(
+                bdf.where(F.col("source") != LM_TRAIN_SOURCE), bg_counts, ug_counts, vocab
+            )
+            write_admitted_batch(scored.where(F.col("nll") <= LM_NLL_KEEP), out, batch_id)
+
+        q = (
+            stream_documents(spark, sf_dir)
+            .writeStream.foreachBatch(admit_batch)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
         )
-        write_admitted_batch(scored.where(F.col("nll") <= LM_NLL_KEEP), out, batch_id)
+        await_or_raise(q)
+        return out
 
-    q = (
-        stream_documents(spark, sf_dir)
-        .writeStream.foreachBatch(admit_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_or_raise(q)
-    _STREAM_PPL_CACHE[sf_dir] = out
-    return out
+    return tmpdirs.memo("stream_ppl", sf_dir, build)
 
 
 @query(
@@ -743,20 +733,6 @@ def binned_auc(scored: DataFrame, label_col: str, score_col: str,
     )
 
 
-# Fitted-model registry. CONTRACT (shared by _LM_MODELS and dataquality's
-# _PSI_BUCKETS): the key is the sf_dir path, which is assumed to uniquely
-# identify the on-disk relation for the life of the session — regenerating
-# data under the same path in-session requires clearing the registry
-# (ADVICE r12: a reused key silently serves the first caller's fit).
-# Values are PLAIN PYTHON FLOATS (coefficients + intercept), never a
-# JVM-backed MLlib model object: the r12 full-suite flake ([STAGE_
-# MATERIALIZATION_MULTIPLE_FAILURES] / `Task not serializable`) came from
-# re-planning a cached LogisticRegressionModel.transform against a
-# long-lived session; a literal coefficient array cannot carry stale JVM
-# state into a later plan.
-_QC_MODELS: dict[str, tuple[list[float], float]] = {}
-
-
 def _qc_bucket(tok) -> Column:
     """Hashed-feature bucket for one token: pmod(murmur3(tok), N). The SAME
     expression feeds training (explode → count per bucket) and scoring
@@ -834,13 +810,19 @@ def score_quality_classifier(
 
 
 def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-once-score-many wrapper over the documents table: fit cached
-    per sf_dir as plain floats, scoring one corpus pass."""
-    fitted = _QC_MODELS.get(sf_dir)
-    if fitted is None:
-        fitted = fit_quality_classifier(_t(spark, sf_dir, "documents"))
-        _QC_MODELS[sf_dir] = fitted
-    coefs, intercept = fitted
+    """Train-once-score-many wrapper over the documents table, scoring one
+    corpus pass. The fit is memoized per corpus as PLAIN PYTHON FLOATS
+    (coefficients + intercept), never a JVM-backed MLlib model object: the
+    r12 full-suite flake ([STAGE_MATERIALIZATION_MULTIPLE_FAILURES] /
+    `Task not serializable`) came from re-planning a cached
+    LogisticRegressionModel.transform against a long-lived session; a
+    literal coefficient array cannot carry stale JVM state into a later
+    plan."""
+    coefs, intercept = tmpdirs.memo(
+        "qc_model",
+        sf_dir,
+        lambda _scratch: fit_quality_classifier(_t(spark, sf_dir, "documents")),
+    )
     return score_quality_classifier(_t(spark, sf_dir, "documents"), coefs, intercept)
 
 

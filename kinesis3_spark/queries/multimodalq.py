@@ -14,6 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import tmpdirs
 from ..operators import multimodal as M
 from .relational import _t
 from . import query
@@ -222,24 +223,18 @@ def audio_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ("dedup/similarity exist only for text+embeddings").
 # --------------------------------------------------------------------------
 
-# Persisted per-sf_dir hash table (the queries/dedup.py _GRAM_INDEX
-# keyed-registry discipline). The pair plan references the hash relation
+# Persisted hash table, memoized per corpus like queries/dedup.py's gram
+# index. The pair plan references the hash relation
 # SIX times (two banded legs, two id joins, two identical-hash legs) —
 # unpersisted, each reference re-runs the decode+hash Arrow pass
 # (measured 2.59 s → ~0.9 s at sf0.1). The table is 1 row × ~40 bytes per
-# image, the dedup working set by definition. CONTRACT: sf_dir uniquely
-# identifies the relation for the session (see dataquality._PSI_BUCKETS).
-_PHASH_CACHE: dict[str, DataFrame] = {}
-
-
+# image, the dedup working set by definition.
 def _phash_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    h = _PHASH_CACHE.get(sf_dir)
-    if h is None:
-        h = M.image_ahash(
-            _synthesize_images(_t(spark, sf_dir, "documents"))
-        ).persist()
-        _PHASH_CACHE[sf_dir] = h
-    return h
+    def build(_scratch):
+        docs = _t(spark, sf_dir, "documents")
+        return M.image_ahash(_synthesize_images(docs)).persist()
+
+    return tmpdirs.memo("phash", sf_dir, build)
 
 
 _AHASH_ORACLE = """
@@ -331,9 +326,6 @@ def image_phash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the REAL decode+fingerprint operator, banded Hamming join.
 # --------------------------------------------------------------------------
 
-_AFP_CACHE: dict[str, DataFrame] = {}
-
-
 def _synthesize_audio_from_text(docs: DataFrame) -> DataFrame:
     """documents → RAWA 'audio' whose samples ARE the text bytes (sample
     i = byte i as int16, 8 kHz): near-duplicate texts become
@@ -361,13 +353,12 @@ def _synthesize_audio_from_text(docs: DataFrame) -> DataFrame:
 def _afp_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted per-sf_dir fingerprint table (the _phash_for discipline:
     the pair plan references the relation six times)."""
-    h = _AFP_CACHE.get(sf_dir)
-    if h is None:
-        h = M.audio_fingerprint(
-            _synthesize_audio_from_text(_t(spark, sf_dir, "documents"))
-        ).persist()
-        _AFP_CACHE[sf_dir] = h
-    return h
+
+    def build(_scratch):
+        docs = _t(spark, sf_dir, "documents")
+        return M.audio_fingerprint(_synthesize_audio_from_text(docs)).persist()
+
+    return tmpdirs.memo("afp", sf_dir, build)
 
 
 # fingerprint derivation shared by the pair query: window energies from
@@ -586,63 +577,56 @@ def image_phash_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the admission ledger exactly.
 # --------------------------------------------------------------------------
 
-_STREAM_PHASH_CACHE: dict[str, str] = {}
-
-
 def _stream_phash_materialize(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    from .. import tmpdirs
     from ..streaming import stream_documents
     from ..streaming.run import await_or_raise
 
-    path = _STREAM_PHASH_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
-        return path
-    out = tmpdirs.mkdtemp(prefix="k3s_stream_ph_") + "/admitted"
-    ck = tmpdirs.mkdtemp(prefix="k3s_stream_ph_ck_")
-    docs = _t(spark, sf_dir, "documents")
-    hist = (
-        _phash_for(spark, sf_dir)
-        .join(
-            docs.where(F.col("source").isin("src0", "src1")).select(
-                F.col("doc_id").alias("media_id")
-            ),
-            "media_id",
-            "left_semi",
-        )
-        .select("bands")
-        .distinct()
-        .persist()
-    )
-    hist.count()  # materialize once; every micro-batch reuses it
-
-    def gate_batch(bdf, batch_id: int) -> None:
-        probe_docs = bdf.where(~F.col("source").isin("src0", "src1"))
-        ph = M.image_ahash(_synthesize_images(probe_docs))
-        matched = M.banded_hamming_matches(ph, hist, max_hamming=3, n_bands=4)
-        (
-            probe_docs.select(F.col("doc_id").alias("media_id"), "source")
-            .join(matched.withColumn("__hit", F.lit(1)), "media_id", "left")
-            .select(
+    def build(scratch):
+        out = scratch + "/admitted"
+        ck = scratch + "/ck"
+        docs = _t(spark, sf_dir, "documents")
+        hist = (
+            _phash_for(spark, sf_dir)
+            .join(
+                docs.where(F.col("source").isin("src0", "src1")).select(
+                    F.col("doc_id").alias("media_id")
+                ),
                 "media_id",
-                "source",
-                F.coalesce(F.lit(1) - F.col("__hit"), F.lit(1)).alias("admitted"),
+                "left_semi",
             )
-            .write.mode("append")
-            .parquet(out)
+            .select("bands")
+            .distinct()
+            .persist()
         )
+        hist.count()  # materialize once; every micro-batch reuses it
 
-    q = (
-        stream_documents(spark, sf_dir)
-        .writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_or_raise(q)
-    _STREAM_PHASH_CACHE[sf_dir] = out
-    return out
+        def gate_batch(bdf, batch_id: int) -> None:
+            probe_docs = bdf.where(~F.col("source").isin("src0", "src1"))
+            ph = M.image_ahash(_synthesize_images(probe_docs))
+            matched = M.banded_hamming_matches(ph, hist, max_hamming=3, n_bands=4)
+            (
+                probe_docs.select(F.col("doc_id").alias("media_id"), "source")
+                .join(matched.withColumn("__hit", F.lit(1)), "media_id", "left")
+                .select(
+                    "media_id",
+                    "source",
+                    F.coalesce(F.lit(1) - F.col("__hit"), F.lit(1)).alias("admitted"),
+                )
+                .write.mode("append")
+                .parquet(out)
+            )
+
+        q = (
+            stream_documents(spark, sf_dir)
+            .writeStream.foreachBatch(gate_batch)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_or_raise(q)
+        return out
+
+    return tmpdirs.memo("stream_ph", sf_dir, build)
 
 
 @query(
@@ -840,63 +824,56 @@ def video_neardup_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 8-band encoding; banded_hamming_matches is band-agnostic.
 # --------------------------------------------------------------------------
 
-_STREAM_AFP_CACHE: dict[str, str] = {}
-
-
 def _stream_afp_materialize(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    from .. import tmpdirs
     from ..streaming import stream_documents
     from ..streaming.run import await_or_raise
 
-    path = _STREAM_AFP_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
-        return path
-    out = tmpdirs.mkdtemp(prefix="k3s_stream_afp_") + "/admitted"
-    ck = tmpdirs.mkdtemp(prefix="k3s_stream_afp_ck_")
-    docs = _t(spark, sf_dir, "documents")
-    hist = (
-        _afp_for(spark, sf_dir)
-        .join(
-            docs.where(F.col("source").isin("src0", "src1")).select(
-                F.col("doc_id").alias("media_id")
-            ),
-            "media_id",
-            "left_semi",
-        )
-        .select("bands")
-        .distinct()
-        .persist()
-    )
-    hist.count()  # materialize once; every micro-batch reuses it
-
-    def gate_batch(bdf, batch_id: int) -> None:
-        probe_docs = bdf.where(~F.col("source").isin("src0", "src1"))
-        fp = M.audio_fingerprint(_synthesize_audio_from_text(probe_docs))
-        matched = M.banded_hamming_matches(fp, hist, max_hamming=7, n_bands=8)
-        (
-            probe_docs.select(F.col("doc_id").alias("media_id"), "source")
-            .join(matched.withColumn("__hit", F.lit(1)), "media_id", "left")
-            .select(
+    def build(scratch):
+        out = scratch + "/admitted"
+        ck = scratch + "/ck"
+        docs = _t(spark, sf_dir, "documents")
+        hist = (
+            _afp_for(spark, sf_dir)
+            .join(
+                docs.where(F.col("source").isin("src0", "src1")).select(
+                    F.col("doc_id").alias("media_id")
+                ),
                 "media_id",
-                "source",
-                F.coalesce(F.lit(1) - F.col("__hit"), F.lit(1)).alias("admitted"),
+                "left_semi",
             )
-            .write.mode("append")
-            .parquet(out)
+            .select("bands")
+            .distinct()
+            .persist()
         )
+        hist.count()  # materialize once; every micro-batch reuses it
 
-    q = (
-        stream_documents(spark, sf_dir)
-        .writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_or_raise(q)
-    _STREAM_AFP_CACHE[sf_dir] = out
-    return out
+        def gate_batch(bdf, batch_id: int) -> None:
+            probe_docs = bdf.where(~F.col("source").isin("src0", "src1"))
+            fp = M.audio_fingerprint(_synthesize_audio_from_text(probe_docs))
+            matched = M.banded_hamming_matches(fp, hist, max_hamming=7, n_bands=8)
+            (
+                probe_docs.select(F.col("doc_id").alias("media_id"), "source")
+                .join(matched.withColumn("__hit", F.lit(1)), "media_id", "left")
+                .select(
+                    "media_id",
+                    "source",
+                    F.coalesce(F.lit(1) - F.col("__hit"), F.lit(1)).alias("admitted"),
+                )
+                .write.mode("append")
+                .parquet(out)
+            )
+
+        q = (
+            stream_documents(spark, sf_dir)
+            .writeStream.foreachBatch(gate_batch)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_or_raise(q)
+        return out
+
+    return tmpdirs.memo("stream_afp", sf_dir, build)
 
 
 _AFP_HAM_PH = " + ".join(
@@ -1133,59 +1110,52 @@ def dedup_video_offset_align_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # invariant and the brute-force oracle re-derives it.
 # --------------------------------------------------------------------------
 
-_STREAM_VPH_CACHE: dict[str, str] = {}
-
-
 def _stream_vph_materialize(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    from .. import tmpdirs
     from ..streaming import stream_documents
     from ..streaming.run import await_or_raise
 
-    path = _STREAM_VPH_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
-        return path
-    out = tmpdirs.mkdtemp(prefix="k3s_stream_vph_") + "/admitted"
-    ck = tmpdirs.mkdtemp(prefix="k3s_stream_vph_ck_")
-    docs = _t(spark, sf_dir, "documents")
-    hist_docs = docs.where(F.col("source").isin("src0", "src1"))
-    hist = M.frame_ahash(
-        M.sample_frames(_synthesize_videos_from_text(hist_docs), every_n=2)
-    ).persist()
-    hist.count()  # materialize the history frame hashes once
+    def build(scratch):
+        out = scratch + "/admitted"
+        ck = scratch + "/ck"
+        docs = _t(spark, sf_dir, "documents")
+        hist_docs = docs.where(F.col("source").isin("src0", "src1"))
+        hist = M.frame_ahash(
+            M.sample_frames(_synthesize_videos_from_text(hist_docs), every_n=2)
+        ).persist()
+        hist.count()  # materialize the history frame hashes once
 
-    def gate_batch(bdf, batch_id: int) -> None:
-        probe_docs = bdf.where(~F.col("source").isin("src0", "src1"))
-        fh = M.frame_ahash(
-            M.sample_frames(_synthesize_videos_from_text(probe_docs), every_n=2)
-        )
-        matched = M.video_neardup_matches(
-            fh, hist, max_hamming=3, min_frac=(9, 10), frac_of="max",
-            min_aligned=2,
-        )
-        (
-            probe_docs.select(F.col("doc_id").alias("media_id"), "source")
-            .join(matched.withColumn("__hit", F.lit(1)), "media_id", "left")
-            .select(
-                "media_id",
-                "source",
-                F.coalesce(F.lit(1) - F.col("__hit"), F.lit(1)).alias("admitted"),
+        def gate_batch(bdf, batch_id: int) -> None:
+            probe_docs = bdf.where(~F.col("source").isin("src0", "src1"))
+            fh = M.frame_ahash(
+                M.sample_frames(_synthesize_videos_from_text(probe_docs), every_n=2)
             )
-            .write.mode("append")
-            .parquet(out)
-        )
+            matched = M.video_neardup_matches(
+                fh, hist, max_hamming=3, min_frac=(9, 10), frac_of="max",
+                min_aligned=2,
+            )
+            (
+                probe_docs.select(F.col("doc_id").alias("media_id"), "source")
+                .join(matched.withColumn("__hit", F.lit(1)), "media_id", "left")
+                .select(
+                    "media_id",
+                    "source",
+                    F.coalesce(F.lit(1) - F.col("__hit"), F.lit(1)).alias("admitted"),
+                )
+                .write.mode("append")
+                .parquet(out)
+            )
 
-    q = (
-        stream_documents(spark, sf_dir)
-        .writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_or_raise(q)
-    _STREAM_VPH_CACHE[sf_dir] = out
-    return out
+        q = (
+            stream_documents(spark, sf_dir)
+            .writeStream.foreachBatch(gate_batch)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_or_raise(q)
+        return out
+
+    return tmpdirs.memo("stream_vph", sf_dir, build)
 
 
 _STREAM_VPH_ORACLE = _VIDEO_FPH_CTES + """

@@ -170,22 +170,18 @@ def hll_mergeable_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # ORC source/sink round-trip (columnar-format surface beyond parquet).
 # --------------------------------------------------------------------------
-_ORC_CACHE: dict[str, str] = {}
-
-
 def _orc_lineitem(spark: SparkSession, sf_dir: str) -> str:
-    """lineitem rewritten as ORC once per sf_dir (native Spark ORC writer,
+    """lineitem rewritten as ORC once per input (native Spark ORC writer,
     zlib default). The registered query reads THIS copy, so a green oracle
     row proves the ORC write→read path is value-lossless, not just that it
     doesn't crash."""
-    import os
 
-    path = _ORC_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        path = tmpdirs.mkdtemp(prefix="k3s_orc_") + "/lineitem"
+    def build(scratch):
+        path = scratch + "/lineitem"
         load_table(spark, sf_dir, "lineitem").write.mode("overwrite").orc(path)
-        _ORC_CACHE[sf_dir] = path
-    return path
+        return path
+
+    return tmpdirs.memo("orc", sf_dir, build)
 
 
 @query(
@@ -358,7 +354,7 @@ def join_pruned_star_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     static-isin rewrite shipped because DPP measurably degrades to a
     no-op on this build, SCALE.md known trade-offs): the dim side's
     bounded key set pre-filters the o_orderpriority-partitioned fact
-    (written once by sink_parquet_partitioned_roundtrip's cache) so the
+    (the memoized layout sink_parquet_partitioned_roundtrip reads) so the
     scan lists only the 2 matching partition directories of 5
     (`tests/test_pruning.py` measures numPartitions 10→2 on the same
     path). The oracle is the unpruned equivalent — pruning must be
@@ -366,17 +362,7 @@ def join_pruned_star_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pruning import pruned_star_join
     from . import roundtrip as _rt
 
-    # Reuse the cached partitioned layout. Constructing the round-trip
-    # query materializes the write as a side effect of its cache check —
-    # no need to EXECUTE its aggregate (a .count() here would burn a full
-    # orders scan per cold call).
-    import os
-
-    path = _rt._PART_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        _rt.sink_parquet_partitioned_roundtrip(spark, sf_dir)
-        path = _rt._PART_CACHE[sf_dir]
-    fact = spark.read.parquet(path)
+    fact = spark.read.parquet(_rt._partitioned_orders(spark, sf_dir))
     dim = spark.createDataFrame(
         [("1-URGENT",), ("2-HIGH",)], "o_orderpriority string"
     )

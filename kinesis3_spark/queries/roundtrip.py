@@ -3,8 +3,8 @@ only pytest evidence (VERDICT r5 "What's missing" #2) get first-class
 oracle rows: JSONL scan, CSV scan, partitioned Parquet write, the
 streaming file sink + availableNow trigger, and the Spark 4 `statestore`
 reader. Pattern per `source_orc_roundtrip` (physical.py): rewrite a corpus
-table through the format under test ONCE per sf_dir (cached
-materialization, the same contract as the ORC/bucketed caches — the
+table through the format under test ONCE per input (a tmpdirs.memo
+materialization, like the ORC twin — the
 registered query then reads the rewrite), aggregate it, and let the
 oracle run the SAME aggregate on the original parquet. Equal hashes mean
 the write→read path preserved every value, not merely that it didn't
@@ -44,18 +44,12 @@ def _sig(col: str):
     return portable_hash60(F.col(col)) % 1_000_000_000
 
 
-# One materialized rewrite per (format, sf_dir) per process — the same
-# write-once contract as physical._ORC_CACHE / bucketed_pair. The driver
-# constructs each query fresh, so within one run the rewrite job fires
-# exactly once; the registered query's plan reads the rewrite lazily.
-_REWRITE_CACHE: dict[tuple[str, str, str], str] = {}
-
-
 def _rewrite(spark: SparkSession, sf_dir: str, table: str, fmt: str) -> str:
-    key = (fmt, sf_dir, table)
-    path = _REWRITE_CACHE.get(key)
-    if path is None or not os.path.isdir(path):
-        path = tmpdirs.mkdtemp(prefix=f"k3s_{fmt}_") + f"/{table}"
+    """`table` rewritten through `fmt` once per input; the registered
+    query's plan reads the rewrite lazily."""
+
+    def build(scratch, table, fmt):
+        path = f"{scratch}/{table}"
         df = load_table(spark, sf_dir, table)
         w = df.write.mode("overwrite")
         if fmt == "jsonl":
@@ -68,8 +62,9 @@ def _rewrite(spark: SparkSession, sf_dir: str, table: str, fmt: str) -> str:
             w.format("xml").option("rootTag", "rows").option("rowTag", "row").save(path)
         else:
             raise ValueError(fmt)
-        _REWRITE_CACHE[key] = path
-    return path
+        return path
+
+    return tmpdirs.memo("rewrite", sf_dir, build, table, fmt)
 
 
 def _avro_available() -> bool:
@@ -298,24 +293,21 @@ _CORRUPT_LINES = (
     '{"o_orderkey": "not-a-number", "o_orderstatus": "O"}',
 )
 _EMPTY_OBJECT_LINES = ("{}",)
-_CORRUPT_CACHE: dict[str, str] = {}
 
 
 def _corrupt_jsonl(spark: SparkSession, sf_dir: str) -> str:
     """orders rewritten as JSONL with a planted corrupt shard appended —
     its OWN directory (never the clean _rewrite cache: that dir is shared
     with source_jsonl_roundtrip, which must keep reading pristine data)."""
-    path = _CORRUPT_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        path = tmpdirs.mkdtemp(prefix="k3s_jsonl_corrupt_") + "/orders"
+
+    def build(scratch):
+        path = scratch + "/orders"
         load_table(spark, sf_dir, "orders").write.mode("overwrite").json(path)
         with open(os.path.join(path, "part-planted-corrupt.json"), "w") as f:
             f.write("\n".join(_CORRUPT_LINES + _EMPTY_OBJECT_LINES) + "\n")
-        _CORRUPT_CACHE[sf_dir] = path
-    return path
+        return path
 
-
-_CORRUPT_PARSED_CACHE: dict[str, str] = {}
+    return tmpdirs.memo("jsonl_corrupt", sf_dir, build)
 
 
 def _corrupt_parsed(spark: SparkSession, sf_dir: str) -> str:
@@ -325,9 +317,8 @@ def _corrupt_parsed(spark: SparkSession, sf_dir: str) -> str:
     downstream scans legal (Spark refuses them straight off raw JSON)."""
     from pyspark.sql.types import StringType, StructField, StructType
 
-    out = _CORRUPT_PARSED_CACHE.get(sf_dir)
-    if out is None or not os.path.isdir(out):
-        out = tmpdirs.mkdtemp(prefix="k3s_corrupt_parsed_") + "/orders"
+    def build(scratch):
+        out = scratch + "/orders"
         base = load_table(spark, sf_dir, "orders").schema
         with_corrupt = StructType(
             [*base.fields, StructField("_corrupt_record", StringType())]
@@ -339,8 +330,9 @@ def _corrupt_parsed(spark: SparkSession, sf_dir: str) -> str:
             .json(_corrupt_jsonl(spark, sf_dir))
         )
         parsed.write.mode("overwrite").parquet(out)
-        _CORRUPT_PARSED_CACHE[sf_dir] = out
-    return out
+        return out
+
+    return tmpdirs.memo("corrupt_parsed", sf_dir, build)
 
 
 @query(
@@ -413,9 +405,6 @@ def source_jsonl_corrupt_tolerance(spark: SparkSession, sf_dir: str) -> DataFram
     return perm.unionByName(dropm).orderBy("bucket")
 
 
-_BACKFILL_CACHE: dict[str, str] = {}
-
-
 def _backfill_dir(spark: SparkSession, sf_dir: str) -> str:
     """Day-partitioned events archive with ONE day surgically backfilled:
     the full archive is written partitioned by dt, then the earliest
@@ -426,17 +415,18 @@ def _backfill_dir(spark: SparkSession, sf_dir: str) -> str:
     tests/test_sinks.py::test_backfill_touches_only_target_partition).
     This is the reprocess-one-day maintenance op a 100 TB archive runs
     weekly: idempotent, partition-scoped, no full rewrite."""
-    path = _BACKFILL_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        path = tmpdirs.mkdtemp(prefix="k3s_backfill_") + "/events"
+
+    def build(scratch):
+        path = scratch + "/events"
         ev = load_table(spark, sf_dir, "events").withColumn(
             "dt", F.date_format("ts", "yyyy-MM-dd")
         )
         ev.write.mode("overwrite").partitionBy("dt").parquet(path)
         target = ev.agg(F.min("dt")).collect()[0][0]
         backfill_day(spark, sf_dir, path, target)
-        _BACKFILL_CACHE[sf_dir] = path
-    return path
+        return path
+
+    return tmpdirs.memo("backfill", sf_dir, build)
 
 
 def backfill_day(
@@ -506,18 +496,15 @@ def sink_partition_overwrite_backfill(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-_EVOL_CACHE: dict[str, str] = {}
-
-
 def _schema_evolution_dir(spark: SparkSession, sf_dir: str) -> str:
     """The events archive written in TWO epochs with different schemas —
     epoch 1 (even event_ids) predates the `user_id` column, epoch 2 (odd
     event_ids) carries it — the way a real 100 TB archive actually looks
     after a mid-life schema change. Epochs are partition directories, so
     a single mergeSchema read must union them with NULL backfill."""
-    path = _EVOL_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        path = tmpdirs.mkdtemp(prefix="k3s_evolve_") + "/events"
+
+    def build(scratch):
+        path = scratch + "/events"
         ev = load_table(spark, sf_dir, "events")
         ev.where(F.col("event_id") % 2 == 0).select(
             "event_id", "ts", "event_type", "value"
@@ -525,8 +512,9 @@ def _schema_evolution_dir(spark: SparkSession, sf_dir: str) -> str:
         ev.where(F.col("event_id") % 2 == 1).select(
             "event_id", "ts", "event_type", "value", "user_id"
         ).write.mode("overwrite").parquet(path + "/epoch=2")
-        _EVOL_CACHE[sf_dir] = path
-    return path
+        return path
+
+    return tmpdirs.memo("evolve", sf_dir, build)
 
 
 @query(
@@ -573,7 +561,18 @@ def source_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-_PART_CACHE: dict[str, str] = {}
+def _partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
+    """orders written through the partitioned Parquet sink, by
+    o_orderpriority."""
+
+    def build(scratch):
+        path = scratch + "/orders"
+        load_table(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
+            "o_orderpriority"
+        ).parquet(path)
+        return path
+
+    return tmpdirs.memo("psink", sf_dir, build)
 
 
 @query(
@@ -598,14 +597,7 @@ def sink_parquet_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> Data
     the wrong partition directory flips two groups). o_orderpriority
     values ('1-URGENT'…) read back as strings — no partition-value type
     inference hazard (parity memory: dt-like strings infer as DATE)."""
-    path = _PART_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        path = tmpdirs.mkdtemp(prefix="k3s_psink_") + "/orders"
-        load_table(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
-            "o_orderpriority"
-        ).parquet(path)
-        _PART_CACHE[sf_dir] = path
-    orders = spark.read.parquet(path)
+    orders = spark.read.parquet(_partitioned_orders(spark, sf_dir))
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     return (
         orders.groupBy("o_orderpriority")
@@ -617,9 +609,6 @@ def sink_parquet_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> Data
         )
         .orderBy("o_orderpriority")
     )
-
-
-_FILESINK_CACHE: dict[str, str] = {}
 
 
 def _stream_to_file_sink(spark: SparkSession, sf_dir: str) -> str:
@@ -634,42 +623,40 @@ def _stream_to_file_sink(spark: SparkSession, sf_dir: str) -> str:
     import glob
     import shutil
 
-    out = _FILESINK_CACHE.get(sf_dir)
-    if out is not None and os.path.isdir(out):
-        return out
-    base = tmpdirs.mkdtemp(prefix="k3s_fsink_")
-    src, out, ck = base + "/src", base + "/data", base + "/ck"
-    os.makedirs(src)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.floor(F.col("value") * 1e6).cast("long").alias("value_micro"),
-    )
-    for part in range(3):
-        tmp = f"{base}/tmp_{part}"
-        ev.where(F.col("event_id") % 3 == part).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        shutil.move(
-            glob.glob(f"{tmp}/part-*.parquet")[0], f"{src}/part{part}.parquet"
+    def build(base):
+        src, out, ck = base + "/src", base + "/data", base + "/ck"
+        os.makedirs(src)
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id",
+            "user_id",
+            "event_type",
+            F.floor(F.col("value") * 1e6).cast("long").alias("value_micro"),
         )
-    schema = spark.read.parquet(src).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        sdf.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_or_raise(q, 300)
-    _FILESINK_CACHE[sf_dir] = out
-    return out
+        for part in range(3):
+            tmp = f"{base}/tmp_{part}"
+            ev.where(F.col("event_id") % 3 == part).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(tmp)
+            shutil.move(
+                glob.glob(f"{tmp}/part-*.parquet")[0], f"{src}/part{part}.parquet"
+            )
+        schema = spark.read.parquet(src).schema
+        sdf = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        q = (
+            sdf.writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_or_raise(q, 300)
+        return out
+
+    return tmpdirs.memo("fsink", sf_dir, build)
 
 
 @query(
@@ -705,15 +692,8 @@ def stream_file_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SS_CACHE: dict[str, str] = {}
-
-
 def _drain_checkpoint(
-    spark: SparkSession,
-    sf_dir: str,
-    cache: dict[str, str],
-    prefix: str,
-    provider: str | None = None,
+    spark: SparkSession, sf_dir: str, provider: str | None = None
 ) -> str:
     """Run THE canonical per-type streaming aggregation (count + exact
     micro-sum per event_type) over events to completion (availableNow,
@@ -724,47 +704,46 @@ def _drain_checkpoint(
     fix r7): the default-provider and RocksDB queries differ ONLY in the
     `provider` conf set around the drain, which is what makes their
     'same aggregation, different state backend' parity claim enforceable
-    rather than aspirational. Checkpoints cache per (provider, sf_dir) —
-    provider format is a physical property of a checkpoint, never
-    mixable within one."""
-    ck = cache.get(sf_dir)
-    if ck is not None and os.path.isdir(ck):
-        return ck
-    ck = tmpdirs.mkdtemp(prefix=prefix)
-    agg = (
-        stream_events(spark, sf_dir)
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.floor(F.col("value") * 1e6).cast("long")).alias("value_micro_sum"),
+    rather than aspirational. Checkpoints are memoized per (sf_dir,
+    provider) — provider format is a physical property of a checkpoint,
+    never mixable within one."""
+
+    def build(ck, provider):
+        agg = (
+            stream_events(spark, sf_dir)
+            .groupBy("event_type")
+            .agg(
+                F.count("*").alias("n"),
+                F.sum(F.floor(F.col("value") * 1e6).cast("long")).alias("value_micro_sum"),
+            )
         )
-    )
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    old_prov = spark.conf.get(prov_key, None)
-    # Fewer state-store instances for the bounded drain (run_to_memory's
-    # measured fixed-cost lesson); the checkpoint keeps this partitioning.
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    if provider is not None:
-        spark.conf.set(prov_key, provider)
-    try:
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("complete")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        prov_key = "spark.sql.streaming.stateStore.providerClass"
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        old_prov = spark.conf.get(prov_key, None)
+        # Fewer state-store instances for the bounded drain (run_to_memory's
+        # measured fixed-cost lesson); the checkpoint keeps this partitioning.
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
         if provider is not None:
-            if old_prov is None:
-                spark.conf.unset(prov_key)
-            else:
-                spark.conf.set(prov_key, old_prov)
-    cache[sf_dir] = ck
-    return ck
+            spark.conf.set(prov_key, provider)
+        try:
+            q = (
+                agg.writeStream.format("noop")
+                .outputMode("complete")
+                .option("checkpointLocation", ck)
+                .trigger(availableNow=True)
+                .start()
+            )
+            await_or_raise(q, 300)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+            if provider is not None:
+                if old_prov is None:
+                    spark.conf.unset(prov_key)
+                else:
+                    spark.conf.set(prov_key, old_prov)
+        return ck
+
+    return tmpdirs.memo("drain_ck", sf_dir, build, provider)
 
 
 def _typed_totals_from_state(spark: SparkSession, ck: str) -> DataFrame:
@@ -786,7 +765,7 @@ def _typed_totals_from_state(spark: SparkSession, ck: str) -> DataFrame:
 
 
 def _statestore_checkpoint(spark: SparkSession, sf_dir: str) -> str:
-    return _drain_checkpoint(spark, sf_dir, _SS_CACHE, "k3s_ssck_")
+    return _drain_checkpoint(spark, sf_dir)
 
 
 @query(
@@ -815,7 +794,6 @@ def statestore_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
-_ROCKS_CACHE: dict[str, str] = {}
 
 
 def _rocksdb_checkpoint(spark: SparkSession, sf_dir: str) -> str:
@@ -824,9 +802,7 @@ def _rocksdb_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     RocksDB with SST-snapshot checkpointing, so executor heap stays
     bounded no matter how many keys the stream accumulates; the default
     HDFS-backed provider keeps every key on the JVM heap)."""
-    return _drain_checkpoint(
-        spark, sf_dir, _ROCKS_CACHE, "k3s_rocksck_", provider=ROCKSDB_PROVIDER
-    )
+    return _drain_checkpoint(spark, sf_dir, ROCKSDB_PROVIDER)
 
 
 @query(
@@ -856,9 +832,6 @@ def stream_rocksdb_state_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _typed_totals_from_state(spark, _rocksdb_checkpoint(spark, sf_dir))
 
 
-_Z_CACHE: dict[str, str] = {}
-
-
 @query(
     "sink_zorder_roundtrip",
     oracle="""
@@ -885,9 +858,8 @@ def sink_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~sqrt of the files on every 2-D selective query after."""
     from ..operators.zorder import write_zordered
 
-    path = _Z_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        path = tmpdirs.mkdtemp(prefix="k3s_zorder_") + "/events"
+    def build(scratch):
+        path = scratch + "/events"
         write_zordered(
             load_table(spark, sf_dir, "events").select(
                 "event_id", "user_id", "value"
@@ -897,7 +869,9 @@ def sink_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
             n_files=16,
         )
-        _Z_CACHE[sf_dir] = path
+        return path
+
+    path = tmpdirs.memo("zorder", sf_dir, build)
     ev = spark.read.parquet(path)
     in_box = (
         F.col("user_id").between(10, 40)
@@ -915,9 +889,6 @@ def sink_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("in_box")
     )
-
-
-_COMPACT_CACHE: dict[str, str] = {}
 
 
 @query(
@@ -943,9 +914,8 @@ def sink_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the file count (a no-op compactor would still pass the sums)."""
     from ..sinks.compact import compact_parquet
 
-    path = _COMPACT_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        path = tmpdirs.mkdtemp(prefix="k3s_compact_") + "/events"
+    def build(scratch):
+        path = scratch + "/events"
         (
             load_table(spark, sf_dir, "events")
             .select("event_id", "event_type", "value")
@@ -965,7 +935,9 @@ def sink_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             if f.endswith(".parquet") and not f.startswith((".", "_"))
         )
         assert n_after < n_before, (n_before, n_after)
-        _COMPACT_CACHE[sf_dir] = path
+        return path
+
+    path = tmpdirs.memo("compact", sf_dir, build)
     ev = spark.read.parquet(path)
     return (
         ev.groupBy("event_type")
@@ -980,11 +952,8 @@ def sink_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TXN_CACHE: dict[str, str] = {}
-
-
 def _txn_upsert_table(spark: SparkSession, sf_dir: str) -> str:
-    """Drive the manifest-transactional upsert once per (process, sf_dir):
+    """Drive the manifest-transactional upsert once per corpus:
     events land as a 3-file directory, a file stream over it with
     maxFilesPerTrigger=1 yields three sequential micro-batches, and each
     batch is one atomic manifest commit (sinks/txn.upsert_manifest_stream)
@@ -993,11 +962,10 @@ def _txn_upsert_table(spark: SparkSession, sf_dir: str) -> str:
     last-writer-wins by the (ts, event_id) struct: a total order, so the
     result is independent of how the round-robin file split distributed
     rows across batches."""
-    path = _TXN_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
+
+    def build(base):
         from ..sinks.txn import upsert_manifest_stream
 
-        base = tmpdirs.mkdtemp(prefix="k3s_txn_")
         landing, table = base + "/landing", base + "/users"
         ev = load_table(spark, sf_dir, "events")
         ev.repartition(3).write.mode("overwrite").parquet(landing)
@@ -1010,28 +978,26 @@ def _txn_upsert_table(spark: SparkSession, sf_dir: str) -> str:
         q = upsert_manifest_stream(
             sdf,
             table,
-            checkpoint=tmpdirs.mkdtemp(prefix="ck_txn_"),
+            checkpoint=base + "/ck",
             key="user_id",
             order_col="__ord",
             mode="replace",
         )
         await_or_raise(q)
-        _TXN_CACHE[sf_dir] = path = table
-    return path
+        return table
 
-
-_EVO_CACHE: dict[str, str] = {}
+    return tmpdirs.memo("txn", sf_dir, build)
 
 
 def _txn_evolution_table(spark: SparkSession, sf_dir: str) -> str:
     """Events upserted in two epochs — the second WITH a new value_cents
-    column (additive evolution) — materialized once per (process, sf_dir)
+    column (additive evolution) — materialized once per corpus
     like every other txn round-trip table."""
-    path = _EVO_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
+
+    def build(scratch):
         from ..sinks.txn import upsert_manifest_txn
 
-        base = tmpdirs.mkdtemp(prefix="k3s_txn_evo_") + "/events_evo"
+        base = scratch + "/events_evo"
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "event_type", "value"
         )
@@ -1042,8 +1008,9 @@ def _txn_evolution_table(spark: SparkSession, sf_dir: str) -> str:
         )
         upsert_manifest_txn(spark, b1, base, key="event_id", order_col="ts")
         upsert_manifest_txn(spark, b2, base, key="event_id", order_col="ts")
-        _EVO_CACHE[sf_dir] = path = base
-    return path
+        return base
+
+    return tmpdirs.memo("txn_evo", sf_dir, build)
 
 
 @query(
@@ -1144,20 +1111,17 @@ def txn_incremental_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TS_TABLE_CACHE: dict[str, str] = {}
-
-
 def _txn_timeseries_table(spark: SparkSession, sf_dir: str) -> str:
     """Append-mode manifest table built from six sequential 5-day ingest
     commits of `events` (sinks/txn.append_snapshot) with footer min/max
     stats recorded for ts/value AND a bloom filter on user_id — the
     append-log + zone-map + bloom-index layout a 100 TB event archive
     uses for time-range AND point-probe reads."""
-    path = _TS_TABLE_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
+
+    def build(scratch):
         from ..sinks.txn import append_snapshot
 
-        table = tmpdirs.mkdtemp(prefix="k3s_ts_txn_") + "/events_log"
+        table = scratch + "/events_log"
         ev = load_table(spark, sf_dir, "events")
         for d0 in range(1, 31, 5):
             batch = ev.where(
@@ -1171,8 +1135,9 @@ def _txn_timeseries_table(spark: SparkSession, sf_dir: str) -> str:
                 stats_cols=["ts", "value"],
                 bloom_cols=["user_id"],
             )
-        _TS_TABLE_CACHE[sf_dir] = path = table
-    return path
+        return table
+
+    return tmpdirs.memo("ts_txn", sf_dir, build)
 
 
 @query(
@@ -1274,26 +1239,24 @@ def txn_bloom_skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COLMAP_TABLE_CACHE: dict[str, str] = {}
-
-
 def _txn_colmap_table(spark: SparkSession, sf_dir: str) -> str:
     """Events ingested once, then metadata-only schema surgery: `value`
     RENAMED to amount_usd, `props` DROPPED — zero files rewritten
     (sinks/txn column mapping)."""
-    path = _COLMAP_TABLE_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
+
+    def build(scratch):
         from ..sinks.txn import append_snapshot, drop_column, rename_column
 
-        table = tmpdirs.mkdtemp(prefix="k3s_colmap_txn_") + "/events_renamed"
+        table = scratch + "/events_renamed"
         append_snapshot(
             load_table(spark, sf_dir, "events"), table, key="user_id",
             n_buckets=4, stats_cols=["ts"],
         )
         rename_column(table, "value", "amount_usd")
         drop_column(table, "props")
-        _COLMAP_TABLE_CACHE[sf_dir] = path = table
-    return path
+        return table
+
+    return tmpdirs.memo("colmap_txn", sf_dir, build)
 
 
 @query(
@@ -1389,19 +1352,16 @@ def upsert_manifest_txn_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GEN_TABLE_CACHE: dict[str, str] = {}
-
-
 def _txn_generated_table(spark: SparkSession, sf_dir: str) -> str:
     """Events appended in two commits into a table with two GENERATED
     ALWAYS AS columns — event_date (CAST(ts AS DATE)) and value_cents —
     that the batches never supply: the table computes them at commit
     (sinks/txn._apply_generated)."""
-    path = _GEN_TABLE_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
+
+    def build(scratch):
         from ..sinks.txn import append_snapshot
 
-        table = tmpdirs.mkdtemp(prefix="k3s_gen_txn_") + "/events_gen"
+        table = scratch + "/events_gen"
         ev = load_table(spark, sf_dir, "events")
         gen = {
             "event_date": "CAST(ts AS DATE)",
@@ -1414,8 +1374,9 @@ def _txn_generated_table(spark: SparkSession, sf_dir: str) -> str:
         append_snapshot(
             ev.where(F.dayofmonth("ts") >= 16), table, key="user_id",
         )
-        _GEN_TABLE_CACHE[sf_dir] = path = table
-    return path
+        return table
+
+    return tmpdirs.memo("gen_txn", sf_dir, build)
 
 
 @query(
@@ -1460,19 +1421,16 @@ def txn_generated_column_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MERGE_TABLE_CACHE: dict[str, str] = {}
-
-
 def _txn_merge_table(spark: SparkSession, sf_dir: str) -> str:
     """A partial customer dimension (custkey % 3 <> 0, integer-cent
     balances) merged once with the per-customer order rollup through the
     full clause matrix (sinks/txn.merge_into); the POST-merge table is
     what's cached, so re-running the query never re-applies the merge."""
-    path = _MERGE_TABLE_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
+
+    def build(scratch):
         from ..sinks.txn import append_snapshot, merge_into
 
-        table = tmpdirs.mkdtemp(prefix="k3s_merge_txn_") + "/cust_merged"
+        table = scratch + "/cust_merged"
         cust = load_table(spark, sf_dir, "customer")
         tgt = cust.where(F.col("c_custkey") % 3 != 0).select(
             "c_custkey",
@@ -1513,8 +1471,9 @@ def _txn_merge_table(spark: SparkSession, sf_dir: str) -> str:
                 {"condition": "acctbal_cents < 0", "delete": True},
             ],
         )
-        _MERGE_TABLE_CACHE[sf_dir] = path = table
-    return path
+        return table
+
+    return tmpdirs.memo("merge_txn", sf_dir, build)
 
 
 @query(
@@ -1587,19 +1546,16 @@ def txn_merge_clauses_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DV_CACHE: dict[str, str] = {}
-
-
 def _txn_dv_table(spark: SparkSession, sf_dir: str) -> str:
     """Events landed as two append commits, then two row-level deletes as
     METADATA-ONLY commits (sinks/txn.delete_where): every click, and every
     day-7 row — overlapping predicates, so the second sidecar records only
     the day-7 rows the first didn't already delete."""
-    path = _DV_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
+
+    def build(scratch):
         from ..sinks.txn import append_snapshot, delete_where
 
-        table = tmpdirs.mkdtemp(prefix="k3s_dv_txn_") + "/events_dv"
+        table = scratch + "/events_dv"
         ev = load_table(spark, sf_dir, "events")
         append_snapshot(
             ev.where(F.dayofmonth("ts") < 16), table, key="user_id",
@@ -1611,8 +1567,9 @@ def _txn_dv_table(spark: SparkSession, sf_dir: str) -> str:
         )
         delete_where(spark, table, "event_type = 'click'")
         delete_where(spark, table, "dayofmonth(ts) = 7")
-        _DV_CACHE[sf_dir] = path = table
-    return path
+        return table
+
+    return tmpdirs.memo("dv_txn", sf_dir, build)
 
 
 @query(
@@ -1663,9 +1620,6 @@ def txn_deletion_vector_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_XO_CACHE: dict[str, str] = {}
-
-
 def _txn_exactly_once_table(spark: SparkSession, sf_dir: str) -> str:
     """Append-mode ingest of events through foreachBatch in three
     micro-batches (sinks/txn.append_manifest_stream), then a simulated
@@ -1673,15 +1627,14 @@ def _txn_exactly_once_table(spark: SparkSession, sf_dir: str) -> str:
     re-invoked with the same (app_id, batch_id) and a non-empty payload.
     The manifest's app watermark must skip it — if the fence fails, the
     table double-counts and the registered query's parity breaks."""
-    path = _XO_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
+
+    def build(base):
         from ..sinks.txn import (
             append_manifest_stream,
             append_snapshot,
             read_manifest,
         )
 
-        base = tmpdirs.mkdtemp(prefix="k3s_xo_txn_")
         landing, table = base + "/landing", base + "/events_log"
         ev = load_table(spark, sf_dir, "events")
         ev.repartition(3).write.mode("overwrite").parquet(landing)
@@ -1706,8 +1659,9 @@ def _txn_exactly_once_table(spark: SparkSession, sf_dir: str) -> str:
             ev.limit(500), table, key="user_id",
             app_id="events-ingest", app_version=last_v,
         )
-        _XO_CACHE[sf_dir] = path = table
-    return path
+        return table
+
+    return tmpdirs.memo("xo_txn", sf_dir, build)
 
 
 @query(
@@ -1798,9 +1752,6 @@ def source_txntable_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CDC_CACHE: dict[str, str] = {}
-
-
 def _txn_cdc_merge_table(spark: SparkSession, sf_dir: str) -> str:
     """Streaming CDC apply into the txn table in ~3 micro-batches
     (sinks/txn.merge_manifest_stream): each batch collapses to its last
@@ -1810,15 +1761,14 @@ def _txn_cdc_merge_table(spark: SparkSession, sf_dir: str) -> str:
     time-ordered — order-independence is the property under test). A
     simulated checkpoint-recovery replay re-merges the final batch under
     its already-applied (app_id, batch_id): the fence must skip it."""
-    path = _CDC_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
+
+    def build(base):
         from ..sinks.txn import (
             merge_into,
             merge_manifest_stream,
             read_manifest,
         )
 
-        base = tmpdirs.mkdtemp(prefix="k3s_cdc_txn_")
         landing, table = base + "/landing", base + "/user_state"
         ev = load_table(spark, sf_dir, "events")
         ev.repartition(3).write.mode("overwrite").parquet(landing)
@@ -1854,8 +1804,9 @@ def _txn_cdc_merge_table(spark: SparkSession, sf_dir: str) -> str:
             app_id="user-state-cdc", app_version=last_v,
         )
         assert read_manifest(table)["epoch"] == before, "replay fence broke"
-        _CDC_CACHE[sf_dir] = path = table
-    return path
+        return table
+
+    return tmpdirs.memo("cdc_txn", sf_dir, build)
 
 
 @query(

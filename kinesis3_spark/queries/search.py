@@ -573,50 +573,44 @@ def llm_exact_substring_incremental(
     return _es_rollup(cleaned)
 
 
-# one materialization per sf_dir: the streaming drain writes its cleaned
-# batches once; re-runs read the parquet back (the _REWRITE_CACHE shape —
-# every availableNow drain goes through await_or_raise, never a partial)
-_STREAM_ES_CACHE: dict[str, str] = {}
-
-
+# one memoized materialization per corpus: the streaming drain writes its
+# cleaned batches once; re-runs read the parquet back (every availableNow
+# drain goes through await_or_raise, never a partial)
 def _stream_es_materialize(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
     from .. import tmpdirs
     from ..operators.dedup import decontaminate_spans
     from ..streaming import stream_documents
     from ..streaming.run import await_or_raise
 
-    path = _STREAM_ES_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
-        return path
-    out = tmpdirs.mkdtemp(prefix="k3s_stream_es_") + "/cleaned"
-    ck = tmpdirs.mkdtemp(prefix="k3s_stream_es_ck_")
-    hist = spark.table(bucketed_gram_index(spark, sf_dir))
+    def build(scratch):
+        out = scratch + "/cleaned"
+        ck = scratch + "/ck"
+        hist = spark.table(bucketed_gram_index(spark, sf_dir))
 
-    def cut_batch(bdf, batch_id: int) -> None:
-        cleaned = decontaminate_spans(
-            bdf.where(F.col("source") != "src0"), hist, k=_ES_K
-        )
-        (
-            cleaned.select(
-                "doc_id", "source", "clean_text", "n_spans",
-                "n_tokens_removed",
+        def cut_batch(bdf, batch_id: int) -> None:
+            cleaned = decontaminate_spans(
+                bdf.where(F.col("source") != "src0"), hist, k=_ES_K
             )
-            .write.mode("append")
-            .parquet(out)
-        )
+            (
+                cleaned.select(
+                    "doc_id", "source", "clean_text", "n_spans",
+                    "n_tokens_removed",
+                )
+                .write.mode("append")
+                .parquet(out)
+            )
 
-    q = (
-        stream_documents(spark, sf_dir)
-        .writeStream.foreachBatch(cut_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_or_raise(q)
-    _STREAM_ES_CACHE[sf_dir] = out
-    return out
+        q = (
+            stream_documents(spark, sf_dir)
+            .writeStream.foreachBatch(cut_batch)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_or_raise(q)
+        return out
+
+    return tmpdirs.memo("stream_es", sf_dir, build)
 
 
 @query(

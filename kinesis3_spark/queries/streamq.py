@@ -432,7 +432,6 @@ if _protobuf_available():
 # --------------------------------------------------------------------------
 # Watermark late-data drop as an ORACLE-CHECKABLE round-trip (§2b row 44).
 # --------------------------------------------------------------------------
-_WM_SINK_CACHE: dict[str, str] = {}
 
 
 def _watermark_two_phase_sink(spark: SparkSession, sf_dir: str) -> str:
@@ -456,58 +455,56 @@ def _watermark_two_phase_sink(spark: SparkSession, sf_dir: str) -> str:
     import shutil
     from .. import tmpdirs
 
-    out = _WM_SINK_CACHE.get(sf_dir)
-    if out is not None and os.path.isdir(out):
-        return out
-    base = tmpdirs.mkdtemp(prefix="k3s_wmrt_")
-    src, out, ck = base + "/src", base + "/out", base + "/ck"
-    os.makedirs(src)
-    ev = _t(spark, sf_dir, "events").select("event_id", "ts", "event_type")
+    def build(base):
+        src, out, ck = base + "/src", base + "/out", base + "/ck"
+        os.makedirs(src)
+        ev = _t(spark, sf_dir, "events").select("event_id", "ts", "event_type")
 
-    def land(df, name: str) -> None:
-        tmp = os.path.join(base, "tmp_" + name)
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.move(
-            glob.glob(os.path.join(tmp, "part-*.parquet"))[0],
-            os.path.join(src, name + ".parquet"),
-        )
-
-    land(ev.where(F.col("event_id") % 2 == 0), "day1")
-    schema = spark.read.parquet(src).schema
-
-    def drain() -> None:
-        sdf = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .withWatermark("ts", "30 minutes")
-            .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"))
-            .select(
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
-                "event_type",
-                "n",
+        def land(df, name: str) -> None:
+            tmp = os.path.join(base, "tmp_" + name)
+            df.coalesce(1).write.mode("overwrite").parquet(tmp)
+            shutil.move(
+                glob.glob(os.path.join(tmp, "part-*.parquet"))[0],
+                os.path.join(src, name + ".parquet"),
             )
-        )
-        q = (
-            sdf.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 300)
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        drain()
-        land(ev.where(F.col("event_id") % 2 == 1), "day2")
-        drain()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    _WM_SINK_CACHE[sf_dir] = out
-    return out
+        land(ev.where(F.col("event_id") % 2 == 0), "day1")
+        schema = spark.read.parquet(src).schema
+
+        def drain() -> None:
+            sdf = (
+                spark.readStream.schema(schema)
+                .parquet(src)
+                .withWatermark("ts", "30 minutes")
+                .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
+                .agg(F.count("*").alias("n"))
+                .select(
+                    F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
+                    "event_type",
+                    "n",
+                )
+            )
+            q = (
+                sdf.writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ck)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            await_or_raise(q, 300)
+
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        try:
+            drain()
+            land(ev.where(F.col("event_id") % 2 == 1), "day2")
+            drain()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+        return out
+
+    return tmpdirs.memo("wmrt", sf_dir, build)
 
 
 @query(
@@ -549,9 +546,6 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROLLUP_CACHE: dict[str, str] = {}
-
-
 def _continuous_rollup_table(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the continuous rollup (streaming/rollup.py — update-mode
     tumbling agg → foreachBatch last-writer-wins upsert, the PRODUCTION
@@ -568,36 +562,34 @@ def _continuous_rollup_table(spark: SparkSession, sf_dir: str) -> str:
 
     from ..streaming.rollup import continuous_rollup, rollup_events
 
-    target = _ROLLUP_CACHE.get(sf_dir)
-    if target is not None and os.path.isdir(target):
-        return target
-    base = tmpdirs.mkdtemp(prefix="k3s_rollup_")
-    src, target, ck = base + "/src", base + "/rollup", base + "/ck"
-    os.makedirs(src)
-    ev = _t(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
-    for part in range(3):
-        tmp = f"{base}/tmp_{part}"
-        ev.where(F.col("event_id") % 3 == part).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        shutil.move(
-            glob.glob(f"{tmp}/part-*.parquet")[0], f"{src}/part{part}.parquet"
+    def build(base):
+        src, target, ck = base + "/src", base + "/rollup", base + "/ck"
+        os.makedirs(src)
+        ev = _t(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
+        for part in range(3):
+            tmp = f"{base}/tmp_{part}"
+            ev.where(F.col("event_id") % 3 == part).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(tmp)
+            shutil.move(
+                glob.glob(f"{tmp}/part-*.parquet")[0], f"{src}/part{part}.parquet"
+            )
+        schema = spark.read.parquet(src).schema
+        sdf = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
         )
-    schema = spark.read.parquet(src).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = continuous_rollup(rollup_events(sdf), target, ck)
-        await_or_raise(q, 300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    _ROLLUP_CACHE[sf_dir] = target
-    return target
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        try:
+            q = continuous_rollup(rollup_events(sdf), target, ck)
+            await_or_raise(q, 300)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+        return target
+
+    return tmpdirs.memo("rollup", sf_dir, build)
 
 
 @query(

@@ -58,6 +58,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import tmpdirs
 from ..functions import text as T
 from . import query
 from .llmtext import _TOKS, _bpe_train
@@ -69,12 +70,6 @@ B = 1 << 56       # piece cost = B - count; see integer bounds above
 HUGE = 1 << 61    # infeasible-edge sentinel (> MAXW * B)
 SEED_MULTI = 300  # multi-char seed inventory size
 EM_KEEP = (180, 108)  # per-round prune targets (0.6 shrink schedule)
-
-# trained model registry: sf_dir -> {piece: final count} — plain Python
-# ints only (never JVM-backed objects; parity-float-traps r12 lesson).
-# CONTRACT: sf_dir uniquely identifies the corpus for the session.
-_UNIGRAM_CACHE: dict[str, dict[str, int]] = {}
-
 
 def _word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w, f): the distinct-word frequency table under the shared BPE
@@ -174,11 +169,14 @@ def _prune(
 
 
 def unigram_model_for(spark: SparkSession, sf_dir: str) -> dict[str, int]:
-    """Train (or fetch the per-corpus cached) unigram piece inventory:
-    seed -> EM_KEEP rounds of (lattice usage count, prune)."""
-    cached = _UNIGRAM_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
+    """The unigram piece inventory {piece: final count}, memoized per
+    corpus — plain Python ints only (never JVM-backed objects;
+    parity-float-traps r12 lesson)."""
+    return tmpdirs.memo("unigram", sf_dir, lambda _scratch: _train_unigram(spark, sf_dir))
+
+
+def _train_unigram(spark: SparkSession, sf_dir: str) -> dict[str, int]:
+    """seed -> EM_KEEP rounds of (lattice usage count, prune)."""
     wf = _word_freq(spark, sf_dir).cache()
     seed = (
         wf.select(F.explode(F.expr(_SUBS_EXPR)).alias("piece"), "f")
@@ -202,7 +200,6 @@ def unigram_model_for(spark: SparkSession, sf_dir: str) -> dict[str, int]:
         use_rows = _usage_pass(wf, counts).collect()  # bounded: <= |pieces|
         use = {r["piece"]: int(r["cnt"]) for r in use_rows}
         counts = _prune(counts, use, keep)
-    _UNIGRAM_CACHE[sf_dir] = counts
     return counts
 
 

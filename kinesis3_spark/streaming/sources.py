@@ -16,36 +16,28 @@ from .. import tmpdirs
 
 from pyspark.sql import DataFrame, SparkSession
 
-_STREAM_DIRS: dict[str, str] = {}
-
-# Schema-peek cache (OPTIMIZATION_r15, guide §1.2/§6): every stream_*()
-# call was running a batch `spark.read.parquet(path).schema` footer read
-# (~0.09 s of driver time per drain, twice for two-source attribution
-# drains). The corpus files are immutable inputs, so the schema is a pure
-# function of the path — cache it per path for the process lifetime.
-_SCHEMA_CACHE: dict[str, object] = {}
-
 
 def _parquet_schema(spark: SparkSession, path: str):
-    s = _SCHEMA_CACHE.get(path)
-    if s is None:
-        s = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[path] = s
-    return s
+    """Schema peek, memoized per file (OPTIMIZATION_r15): every stream_*()
+    call was running a batch footer read (~0.09 s per drain, twice for
+    two-source attribution drains). A
+    rewritten file is peeked again."""
+    return tmpdirs.memo(
+        "parquet_schema", path, lambda _scratch: spark.read.parquet(path).schema
+    )
 
 
 def _as_stream_dir(file_path: str) -> str:
     """File streaming sources monitor a DIRECTORY; the corpus tables are
     single parquet files. Expose the file through a symlink in a temp dir
-    (read-only view — the corpus itself is never touched)."""
-    d = _STREAM_DIRS.get(file_path)
-    # isdir revalidation like every other materialization cache: a reaped
-    # scratch dir must rebuild, not poison later reads (review fix r7)
-    if d is None or not os.path.isdir(d):
-        d = tmpdirs.mkdtemp(prefix="stream_src_")
+    (read-only view — the corpus itself is never touched); a rewritten
+    file gets a fresh directory."""
+
+    def build(d):
         os.symlink(file_path, os.path.join(d, os.path.basename(file_path)))
-        _STREAM_DIRS[file_path] = d
-    return d
+        return d
+
+    return tmpdirs.memo("stream_src", file_path, build)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -321,3 +321,27 @@ def test_stats_surfaces_stream_state_metrics(spark, tmp_path):
             assert json.load(resp)["streams"] == []
     finally:
         c.stop()
+
+
+def test_batch_timings_stay_bounded(tmp_path):
+    """A long-running collector keeps only the newest BATCH_TIMINGS_KEPT
+    batch timings; /stats still summarizes them."""
+    from kinesis3_spark.app import BATCH_TIMINGS_KEPT
+
+    c = Collector(
+        None,
+        str(tmp_path / "landing"),
+        store_path=str(tmp_path / "store"),
+        archive_path=str(tmp_path / "archive"),
+        checkpoint=str(tmp_path / "ck"),
+    )
+    timings = c._stats["batch_seconds"]
+    for i in range(10_000):
+        timings.append(1.0 + i)
+    assert len(timings) == timings.maxlen == BATCH_TIMINGS_KEPT
+    got = c.stats()["batch-timing-s"]
+    assert set(got) >= {"min", "p50", "p95", "max"}
+    # only the newest timings survive
+    assert got["min"] == 1.0 + 10_000 - BATCH_TIMINGS_KEPT
+    assert got["max"] == 10_000.0
+    assert got["min"] <= got["p50"] <= got["p95"] <= got["max"]

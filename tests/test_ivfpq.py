@@ -253,9 +253,7 @@ def test_index_meta_sidecar_enables_fresh_process_probe(
 
     # "fresh process": drop every in-memory trace of training and the
     # query-layer cache, then reconstruct everything from the path
-    from kinesis3_spark.queries.similarity import _IVFPQ_PERSISTED
-
-    _IVFPQ_PERSISTED.clear()
+    tmpdirs.clear("ivfpq_index")
     del C, books
     meta = S.read_ivfpq_index_meta(path)
     assert meta is not None

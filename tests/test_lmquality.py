@@ -236,19 +236,41 @@ def test_admitted_batch_write_is_idempotent(spark, tmp_path):
     assert rows == {(1, 0), (2, 0), (3, 1)}
 
 
-def test_psi_bucket_cache_reused_across_invocations(spark, sf_dir):
+def _memoized(kind, source, *params):
+    """The registry's value for this key, asserting it is already built."""
+    from kinesis3_spark import tmpdirs
+
+    def unexpected_build(*_args):
+        raise AssertionError(f"{kind} was not memoized for {source}")
+
+    return tmpdirs.memo(kind, source, unexpected_build, *params)
+
+
+def test_psi_bucket_cache_reused_across_invocations(spark, sf_dir, monkeypatch):
     """Repeated dq_token_drift_psi invocations must share ONE persisted
     bucket table per sf_dir instead of stacking a new cached DataFrame per
     call (r12 advice fix — long-lived-session cache accumulation)."""
+    from kinesis3_spark import tmpdirs
     from kinesis3_spark.queries import QUERIES
     from kinesis3_spark.queries import dataquality as DQ
 
     QUERIES["dq_token_drift_psi"](spark, sf_dir).collect()
-    n_keys = len(DQ._PSI_BUCKETS)
-    handle = DQ._PSI_BUCKETS[(sf_dir, DQ.PSI_REF_SOURCE, DQ.PSI_TOP_K)]
+    key = ("psi_buckets", sf_dir, DQ.PSI_REF_SOURCE, DQ.PSI_TOP_K)
+    handle = _memoized(*key)
+    built = []
+    real_memo = tmpdirs.memo
+
+    def spy(kind, source, build, *params):
+        def counted(*args):
+            built.append((kind, source, *params))
+            return build(*args)
+
+        return real_memo(kind, source, counted, *params)
+
+    monkeypatch.setattr(tmpdirs, "memo", spy)
     QUERIES["dq_token_drift_psi"](spark, sf_dir).collect()
-    assert len(DQ._PSI_BUCKETS) == n_keys
-    assert DQ._PSI_BUCKETS[(sf_dir, DQ.PSI_REF_SOURCE, DQ.PSI_TOP_K)] is handle
+    assert built == []  # no new key, no rebuild: nothing new was persisted
+    assert _memoized(*key) is handle
 
 
 # --------------------------------------------------------------------------
@@ -351,11 +373,12 @@ def test_quality_classifier_cache_holds_plain_floats_not_model(spark, sf_dir):
     cache must hold (list[float], float) — never a JVM-backed MLlib model
     — and the scoring plan must contain no MLlib UDF node, so a cached fit
     can never carry stale JVM state into a later plan's serialization."""
-    from kinesis3_spark.queries.lmquality import _QC_MODELS, quality_classifier_scores
+    from kinesis3_spark import tmpdirs
+    from kinesis3_spark.queries.lmquality import quality_classifier_scores
 
-    _QC_MODELS.pop(sf_dir, None)
+    tmpdirs.clear("qc_model")
     scored = quality_classifier_scores(spark, sf_dir)
-    coefs, intercept = _QC_MODELS[sf_dir]
+    coefs, intercept = _memoized("qc_model", sf_dir)
     assert isinstance(coefs, list) and all(isinstance(c, float) for c in coefs)
     assert isinstance(intercept, float)
     plan = scored._jdf.queryExecution().executedPlan().toString()
