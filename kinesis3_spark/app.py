@@ -14,9 +14,10 @@ This module is the same loop on Structured Streaming:
                  `{sequence_number, data, partition}` (SURVEY.md §1.1;
                  swap in the Kinesis/Kafka connector format in production —
                  everything downstream is the same DataFrame plan).
-  * per batch  — `foreachBatch`: ONE read of the micro-batch feeds both
-                 sinks; the events projection is the declarative pipeline
-                 (pipeline.ingest — from_json×2 + cookie map + UTM).
+  * per batch  — `foreachBatch`: ONE materialization of the parsed
+                 micro-batch feeds every sink; the events projection is
+                 the declarative pipeline (pipeline.ingest — from_json×2
+                 + cookie map + UTM).
   * store      — keyed Parquet upsert (sinks.upsert_parquet), first- or
                  last-writer-wins per --mode, matching db.clj's dedup.
   * archive    — raw records appended as Parquet partitioned by dt derived
@@ -26,10 +27,14 @@ This module is the same loop on Structured Streaming:
                  over stdlib HTTP (the `/stats` endpoint) and/or written to
                  a file after each batch.
 
-Scale notes: the batch work is two writes off one batch DataFrame — the
-projection stays in whole-stage codegen; the upsert's rewrite is bounded by
-the partitions the batch touches; the archive is append-only. The driver
-holds only counters (no rows)."""
+Scale notes: a batch with malformed records costs 5 Spark jobs — the
+parse materialization (1, which also counts rows and malformed rows
+through an Observation), the quarantine append (1), the store merge write
+(2: AQE runs the key shuffle's map stage as its own job) and the archive
+append (1); a clean batch skips the quarantine job. The projection stays
+in whole-stage codegen. The collector passes no `partition_cols`, so each
+upsert reads and rewrites the whole store, O(table) per batch; the
+archive is append-only. The driver holds only counters (no rows)."""
 
 from __future__ import annotations
 
@@ -39,7 +44,7 @@ import time
 from collections import deque
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -118,11 +123,6 @@ class Collector:
 
     def _process_batch(self, batch: DataFrame, batch_id: int) -> None:
         t0 = time.perf_counter()
-        # one materialization feeds both sinks and the count
-        batch = batch.localCheckpoint(eager=True)
-        n = batch.count()
-        if n == 0:
-            return
         # dead-letter split: a record whose outer envelope or inner body
         # fails the JSON parse (from_json → NULL), or that has no key,
         # must not poison the store — it's quarantined with a reason (the
@@ -132,34 +132,49 @@ class Collector:
         env_bad = F.col("_rec._corrupt").isNotNull()
         body_bad = F.col("_rec.body").isNull() | F.col("_req._corrupt").isNotNull()
         ok = ~env_bad & ~body_bad & F.col("sequence_number").isNotNull()
-        bad = parsed.where(~ok).select(
-            "sequence_number",
-            "data",
-            "partition",
-            F.when(env_bad, "envelope_parse_failed")
-            .when(body_bad, "body_parse_failed")
-            .otherwise("missing_key")
-            .alias("reason"),
+        # one materialization of the parse feeds the quarantine, the store
+        # and the archive; the observation counts rows while it is built,
+        # so no sink re-reads the source and no count() runs its own job
+        observed = Observation()
+        parsed = (
+            parsed.withColumn("__ok", ok)
+            .observe(
+                observed,
+                F.count(F.lit(1)).alias("n"),
+                F.count_if(~F.col("__ok")).alias("n_bad"),
+            )
+            .localCheckpoint(eager=True)
         )
-        n_bad = bad.count()
+        counts = observed.get
+        n, n_bad = counts["n"], counts["n_bad"]
+        if n == 0:
+            return
         if n_bad and self.quarantine_path:
-            bad.write.mode("append").parquet(self.quarantine_path)
+            parsed.where(~F.col("__ok")).select(
+                "sequence_number",
+                "data",
+                "partition",
+                F.when(env_bad, "envelope_parse_failed")
+                .when(body_bad, "body_parse_failed")
+                .otherwise("missing_key")
+                .alias("reason"),
+            ).write.mode("append").parquet(self.quarantine_path)
         events = project_events(
-            parsed.where(ok), sid_col="sequence_number", raw_col="data"
+            parsed.where(F.col("__ok")), sid_col="sequence_number", raw_col="data"
         )
         upsert_parquet(
             self.spark, events, self.store_path,
             key="id", order_col="ts", mode=self.mode,
         )
         # raw-record archive, date-partitioned by the record's receive epoch
-        raw = batch.withColumn(
-            "dt",
+        raw = parsed.select(
+            *batch.columns,
             F.date_format(
                 F.timestamp_millis(
                     F.get_json_object("data", "$.epoch").cast("long")
                 ),
                 "yyyy-MM-dd",
-            ),
+            ).alias("dt"),
         )
         write_partitioned(raw, self.archive_path, ("dt",), mode="append")
         dt = time.perf_counter() - t0

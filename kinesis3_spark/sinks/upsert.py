@@ -20,14 +20,40 @@ Scale notes (100 TB):
     partitions are never read. That bounds each batch's write amplification
     by the batch's partition spread, not the table size.
   * dynamic partitionOverwriteMode keeps the swap atomic per partition.
+    That path materializes the merge (localCheckpoint) first, because it
+    overwrites the directories it reads.
+  * Without `partition_cols` the whole table is rewritten each call, as a
+    staged swap: the merge is written to `<path>.__next`, then `path` is
+    renamed to `<path>.__prev`, `.__next` to `path`, and `.__prev` is
+    removed. At every instant `path` or `.__prev` holds a complete
+    committed table; the next call restores `.__prev` if `path` is gone,
+    drops it if both exist, and overwrites a stale `.__next`.
+  * The existing table is read with the batch's schema instead of an
+    inferred one, which saves a footer-reading job per call. That assumes
+    the table schema equals the batch schema, which holds because this
+    function writes the table, from batches of one schema.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+
+_NEXT, _PREV = ".__next", ".__prev"
+
+
+def _recover_swap(path: str) -> None:
+    """Finish or undo a staged swap a crash interrupted (see the module
+    notes). A stale `.__next` needs nothing: the next write overwrites it."""
+    if os.path.exists(path + _PREV):
+        if os.path.exists(path):
+            shutil.rmtree(path + _PREV)
+        else:
+            os.rename(path + _PREV, path)
 
 
 def _dedup_last(df: DataFrame, key: str, order_col: str, prefer: str) -> DataFrame:
@@ -68,20 +94,23 @@ def upsert_parquet(
                      REPLACE.
     """
     assert mode in ("ignore", "replace")
+    _recover_swap(path)
     order = order_col or key
+    prefer = "new" if mode == "replace" else "old"
     new = batch.withColumn("__is_new", F.lit(1))
     exists = os.path.exists(path) and any(
         not n.startswith(("_", ".")) for n in os.listdir(path)
     )
     if not exists:
-        merged = _dedup_last(new, key, order, prefer="new" if mode == "replace" else "old")
-        writer = merged.write.mode("overwrite")
+        writer = _dedup_last(new, key, order, prefer).write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(path)
         return
 
-    current = spark.read.parquet(path).withColumn("__is_new", F.lit(0))
+    current = (
+        spark.read.schema(batch.schema).parquet(path).withColumn("__is_new", F.lit(0))
+    )
     if partition_cols:
         # prune the rewrite to partitions the batch actually touches
         touched = [
@@ -95,26 +124,24 @@ def upsert_parquet(
             cond = cond | row_match
         current = current.where(cond)
 
-    merged = _dedup_last(
-        current.unionByName(new),
-        key,
-        order,
-        prefer="new" if mode == "replace" else "old",
-    )
-    # Materialize before overwriting the directory being read (Parquet has
+    merged = _dedup_last(current.unionByName(new), key, order, prefer)
+    if not partition_cols:
+        # staged swap (module notes): the merge never overwrites what it reads
+        merged.write.mode("overwrite").parquet(path + _NEXT)
+        os.rename(path, path + _PREV)
+        os.rename(path + _NEXT, path)
+        shutil.rmtree(path + _PREV)
+        return
+    # Materialize before overwriting the directories being read (Parquet has
     # no snapshot isolation; localCheckpoint cuts the lineage to the files).
     merged = merged.localCheckpoint(eager=True)
-    writer = merged.write
-    if partition_cols:
-        # scoped conf change, restored after the write — a lingering
-        # "dynamic" would silently change every later caller's INSERT
-        # OVERWRITE semantics in this session
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        old_mode = spark.conf.get(mode_key)
-        spark.conf.set(mode_key, "dynamic")
-        try:
-            writer.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-        finally:
-            spark.conf.set(mode_key, old_mode)
-    else:
-        writer.mode("overwrite").parquet(path)
+    # scoped conf change, restored after the write — a lingering "dynamic"
+    # would silently change every later caller's INSERT OVERWRITE semantics
+    # in this session
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    old_mode = spark.conf.get(mode_key)
+    spark.conf.set(mode_key, "dynamic")
+    try:
+        merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+    finally:
+        spark.conf.set(mode_key, old_mode)

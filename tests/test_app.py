@@ -345,3 +345,84 @@ def test_batch_timings_stay_bounded(tmp_path):
     assert got["min"] == 1.0 + 10_000 - BATCH_TIMINGS_KEPT
     assert got["max"] == 10_000.0
     assert got["min"] <= got["p50"] <= got["p95"] <= got["max"]
+
+
+def _record_line(seq: int, bad_body: bool = False) -> str:
+    """One Kinesis-shaped JSONL record with key `seq`; `bad_body` truncates
+    the inner JSON so the record is quarantined as body_parse_failed."""
+    body = json.dumps(
+        {
+            "id": f"r{seq}",
+            "t": 1_700_000_000_000 + seq * 1000,
+            "path": "/evt",
+            "url": "https://ex.com/evt",
+            "args": {"utm_source": "src"},
+            "user": {"uid": f"u{seq}"},
+            "headers": {"User-Agent": "UA/1.0", "Cookie": f"uid=u{seq}"},
+        }
+    )
+    if bad_body:
+        body = body[: len(body) // 2]
+    data = json.dumps({"m": "evt", "epoch": 1_700_000_000_000, "body": body})
+    return json.dumps({"sequence_number": f"{seq:012d}", "data": data, "partition": "s0"})
+
+
+def _land_lines(landing, name: str, lines: list[str]) -> None:
+    tmp = landing.parent / f".{name}"
+    tmp.write_text("".join(ln + "\n" for ln in lines))
+    os.rename(tmp, landing / name)
+
+
+def _collector(spark, tmp_path, landing) -> Collector:
+    return Collector(
+        spark,
+        str(landing),
+        store_path=str(tmp_path / "store"),
+        archive_path=str(tmp_path / "archive"),
+        checkpoint=str(tmp_path / "ck"),
+        quarantine_path=str(tmp_path / "dead"),
+    )
+
+
+def test_batch_into_existing_store_runs_five_jobs(spark, tmp_path):
+    """A file with one malformed record, drained into an existing store,
+    costs 5 Spark jobs: the observed parse materialization, the quarantine
+    append, the store merge (map stage + write) and the archive append."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    c = _collector(spark, tmp_path, landing)
+    _land_lines(landing, "a.json", [_record_line(i) for i in range(50)])
+    c.run(timeout_s=300)
+    _land_lines(
+        landing, "b.json",
+        [_record_line(i) for i in range(50, 100)] + [_record_line(100, bad_body=True)],
+    )
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.dagScheduler().nextJobId()
+    stats = c.run(timeout_s=300)
+    jobs = sc.dagScheduler().nextJobId() - before
+    c.stop()
+    assert jobs == 5
+    assert stats["message-ingested"]["count"] == 101
+    assert stats["malformed"]["count"] == 1
+    assert spark.read.parquet(c.store_path).count() == 100
+    assert spark.read.parquet(c.quarantine_path).count() == 1
+    assert spark.read.parquet(c.archive_path).count() == 101
+
+
+def test_empty_file_batch_is_skipped(spark, tmp_path):
+    """A 0-line landed file makes an empty micro-batch: no batch is counted
+    and nothing is written; the next file lands normally."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    c = _collector(spark, tmp_path, landing)
+    _land_lines(landing, "empty.json", [])
+    c.run(timeout_s=300)
+    assert not os.path.exists(c.store_path)
+    _land_lines(landing, "a.json", [_record_line(i) for i in range(20)])
+    stats = c.run(timeout_s=300)
+    c.stop()
+    assert stats["batches"] == 1
+    assert stats["message-ingested"]["count"] == 20
+    keys = sorted(r.id for r in spark.read.parquet(c.store_path).collect())
+    assert keys == [f"{i:012d}" for i in range(20)]

@@ -1,6 +1,8 @@
 """Sink tests: partitioned archive layout + upsert replay equivalence with
 DuckDB INSERT OR REPLACE (last-wins) / INSERT OR IGNORE (first-wins,
-the reference db.clj:100-134 behavior)."""
+the reference db.clj:100-134 behavior), recovery of an interrupted store
+swap and the upsert's Spark job budget. Most are slow-marked; the last
+two are in the default profile."""
 
 from __future__ import annotations
 
@@ -8,9 +10,6 @@ import os
 
 import duckdb
 import pytest
-
-pytestmark = pytest.mark.slow  # excluded by the -m 'not slow' quick path
-
 from pyspark.sql import functions as F
 
 from kinesis3_spark.sinks import archive_events, upsert_parquet, write_partitioned
@@ -54,6 +53,7 @@ def _duck_expected(mode):
     return {r[0]: r[1] for r in con.sql("SELECT id, val FROM t").fetchall()}
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("mode", ["replace", "ignore"])
 @pytest.mark.parametrize("parts", [(), ("dt",)])
 def test_upsert_replay_matches_duckdb(spark, tmp_path, mode, parts):
@@ -67,6 +67,7 @@ def test_upsert_replay_matches_duckdb(spark, tmp_path, mode, parts):
     assert got == _duck_expected(mode)
 
 
+@pytest.mark.slow
 def test_upsert_duplicate_ids_within_batch(spark, tmp_path):
     path = str(tmp_path / "dups")
     rows = [
@@ -78,6 +79,45 @@ def test_upsert_duplicate_ids_within_batch(spark, tmp_path):
     assert len(out) == 1 and out[0].val == 2.0  # latest ts wins
 
 
+@pytest.mark.parametrize("mode", ["replace", "ignore"])
+@pytest.mark.parametrize("crash", ["partial_next", "store_moved_away", "both_present"])
+def test_upsert_recovers_from_interrupted_swap(spark, tmp_path, mode, crash):
+    """The unpartitioned upsert swaps a fully written `.__next` in for the
+    table; a crash at any point of that swap must leave a table the next
+    upsert merges into as if nothing had happened."""
+    path = str(tmp_path / "t")
+    upsert_parquet(spark, _events(spark, B1), path, key="id", order_col="ts", mode=mode)
+    if crash == "partial_next":  # mid-write of the next table: a torn part file
+        os.makedirs(path + ".__next")
+        with open(os.path.join(path + ".__next", "part-00000-torn.snappy.parquet"), "wb") as f:
+            f.write(b"PAR1 torn")
+    elif crash == "store_moved_away":  # between the two renames
+        os.rename(path, path + ".__prev")
+    else:  # before the old table is removed; a different one, so reading it would show
+        stale = [("z", "2024-01-01 00:00:00", 99.0, "2024-01-01")]
+        upsert_parquet(spark, _events(spark, stale), path + ".__prev", key="id", order_col="ts")
+    upsert_parquet(spark, _events(spark, B2), path, key="id", order_col="ts", mode=mode)
+    got = {r.id: r.val for r in spark.read.parquet(path).collect()}
+    assert got == _duck_expected(mode)
+    assert sorted(os.listdir(tmp_path)) == ["t"]  # no staging directory left
+
+
+def test_upsert_into_existing_store_runs_two_jobs(spark, tmp_path):
+    """An unpartitioned merge into an existing table is one write of the
+    merge plan: AQE's map-stage job for the key shuffle plus the write job.
+    No schema-inference read of the table, no materialization before it."""
+    path = str(tmp_path / "t")
+    upsert_parquet(spark, _events(spark, B1), path, key="id", order_col="ts")
+    batch = _events(spark, B2)
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.dagScheduler().nextJobId()
+    upsert_parquet(spark, batch, path, key="id", order_col="ts")
+    assert sc.dagScheduler().nextJobId() - before == 2
+    got = {r.id: r.val for r in spark.read.parquet(path).collect()}
+    assert got == _duck_expected("replace")
+
+
+@pytest.mark.slow
 def test_partitioned_archive_layout(spark, tmp_path):
     path = str(tmp_path / "arch")
     df = _events(spark, B1).drop("dt")
@@ -92,6 +132,7 @@ def test_partitioned_archive_layout(spark, tmp_path):
     assert "PartitionFilters: [isnotnull(dt" in plan or "dt#" in plan
 
 
+@pytest.mark.slow
 def test_write_partitioned_append(spark, tmp_path):
     path = str(tmp_path / "app")
     write_partitioned(_events(spark, B1), path)
@@ -99,6 +140,7 @@ def test_write_partitioned_append(spark, tmp_path):
     assert spark.read.parquet(path).count() == 6
 
 
+@pytest.mark.slow
 def test_backfill_touches_only_target_partition(spark, tmp_path):
     """partitionOverwriteMode=dynamic must replace exactly the partitions
     present in the incoming frame: re-running the target-day rewrite
@@ -168,6 +210,7 @@ def _txn_rows(spark, path):
     return {r["id"]: r["val"] for r in snap.collect()} if snap is not None else {}
 
 
+@pytest.mark.slow
 def test_txn_upsert_multi_commit_matches_replay_semantics(spark, tmp_path):
     """Three sequential transactional merges == the in-place upsert's
     event-time LWW truth, and each merge bumps the manifest epoch."""
@@ -182,6 +225,7 @@ def test_txn_upsert_multi_commit_matches_replay_semantics(spark, tmp_path):
     assert _txn_rows(spark, path) == _duck_expected("replace")
 
 
+@pytest.mark.slow
 def test_txn_commit_carries_untouched_bucket_files_by_reference(spark, tmp_path):
     """A batch touching a strict subset of buckets must NOT rewrite the
     others: their file entries appear in the new manifest with the SAME
@@ -211,6 +255,7 @@ def test_txn_commit_carries_untouched_bucket_files_by_reference(spark, tmp_path)
     assert _txn_rows(spark, path)["b"] == 2.0  # older replay lost LWW
 
 
+@pytest.mark.slow
 def test_txn_reader_immune_to_stray_and_torn_commit(spark, tmp_path, monkeypatch):
     """Mid-commit state must be invisible: (a) stray parquet + stale tmp
     manifests in the table dir don't change a manifest read; (b) a crash
@@ -262,6 +307,7 @@ def test_txn_reader_immune_to_stray_and_torn_commit(spark, tmp_path, monkeypatch
     assert _txn_rows(spark, path) == before
 
 
+@pytest.mark.slow
 def test_txn_time_travel_reads_exact_historical_snapshots(spark, tmp_path):
     """Every commit retains an immutable versioned manifest: reading
     epoch=1 after two more commits must reproduce exactly the post-batch-1
@@ -288,6 +334,7 @@ def test_txn_time_travel_reads_exact_historical_snapshots(spark, tmp_path):
     assert rows(epoch=3) == rows() == {**_duck_expected("replace"), "a": 99.0}
 
 
+@pytest.mark.slow
 def test_txn_compact_preserves_data_and_folds_files(spark, tmp_path):
     """Compaction is a data-identical commit that reduces live file count
     (one shuffle task per bucket) and bumps the epoch; the pre-compaction
@@ -313,6 +360,7 @@ def test_txn_compact_preserves_data_and_folds_files(spark, tmp_path):
     )
 
 
+@pytest.mark.slow
 def test_txn_vacuum_reaps_outside_retention_only(spark, tmp_path):
     """vacuum(keep_epochs=1): files referenced only by pre-current epochs
     are deleted, the current snapshot is bit-identical, and time travel
@@ -343,6 +391,7 @@ def test_txn_vacuum_reaps_outside_retention_only(spark, tmp_path):
         read_snapshot(spark, path, epoch=1)
 
 
+@pytest.mark.slow
 def test_txn_uncommitted_version_residue_is_not_readable(spark, tmp_path, monkeypatch):
     """A crash BETWEEN the versioned-manifest claim and the atomic swap
     leaves a v<epoch+1> residue file; time travel must refuse it (the
@@ -397,6 +446,7 @@ def test_txn_uncommitted_version_residue_is_not_readable(spark, tmp_path, monkey
     )
 
 
+@pytest.mark.slow
 def test_txn_upsert_null_key_is_one_deterministic_group(spark, tmp_path):
     """NULL merge keys are a single legal key: they hash to a fixed bucket
     (no crash, no unparseable partition dir), the window merge keeps one
@@ -421,6 +471,7 @@ def test_txn_upsert_null_key_is_one_deterministic_group(spark, tmp_path):
     assert _txn_rows(spark, path) == {None: 9.0, "a": 3.0}
 
 
+@pytest.mark.slow
 def test_txn_table_changes_classifies_epoch_diff(spark, tmp_path):
     """CDF between retained epochs: B2 over B1 yields d=insert,
     c=update_postimage (newer ts wins), b=NO change (the replay lost LWW,
@@ -457,6 +508,7 @@ def test_txn_table_changes_classifies_epoch_diff(spark, tmp_path):
     assert ch3 == {"a": "delete"}
 
 
+@pytest.mark.slow
 def test_txn_append_records_stats_and_skips_files(spark, tmp_path):
     """Append-mode commits record footer min/max for stats_cols in the
     manifest, and a range read prunes every file whose stats prove the
@@ -514,6 +566,7 @@ def test_txn_append_records_stats_and_skips_files(spark, tmp_path):
     assert new and all("stats" in e for e in new)
 
 
+@pytest.mark.slow
 def test_txn_skipping_is_conservative_where_stats_cannot_decide():
     """The pure pruning predicate: missing column / absent stats / type
     mismatch keep the file; an all-null column drops it for comparison
@@ -538,6 +591,7 @@ def test_txn_skipping_is_conservative_where_stats_cannot_decide():
     assert not _file_may_match(allnull, "val", "==", 0.0)
 
 
+@pytest.mark.slow
 def test_txn_compaction_recomputes_stats_for_folded_files(spark, tmp_path):
     """compact_table rewrites every bucket; the folded files must carry
     freshly harvested stats spanning the union of their inputs."""
@@ -566,6 +620,7 @@ def test_txn_compaction_recomputes_stats_for_folded_files(spark, tmp_path):
     assert (mn, mx) == (0.0, 103.0)
 
 
+@pytest.mark.slow
 def test_txn_cdf_preimage_rows(spark, tmp_path):
     """include_preimage=True emits BOTH images for an update (FROM values
     under update_preimage, TO values under update_postimage) and leaves
@@ -592,6 +647,7 @@ def test_txn_cdf_preimage_rows(spark, tmp_path):
     assert "update_preimage" not in default
 
 
+@pytest.mark.slow
 def test_txn_incremental_mv_matches_full_recompute(spark, tmp_path):
     """Fold two CDF deltas (with an update, an insert, and a
     group-emptying delete) into a count+sum MV and compare against the
@@ -638,6 +694,7 @@ def test_txn_incremental_mv_matches_full_recompute(spark, tmp_path):
     assert got == [("g1", 3, 14.0)]  # g2 dropped; NULL b counted, sums 0
 
 
+@pytest.mark.slow
 def test_txn_schema_evolution_widens_and_backfills(spark, tmp_path):
     """A batch with a new column widens the MANIFEST schema; files from
     before the widening read back NULL for it, time travel to the
@@ -678,6 +735,7 @@ def test_txn_schema_evolution_widens_and_backfills(spark, tmp_path):
         upsert_manifest_txn(spark, bad, path, key="id", order_col="ts")
 
 
+@pytest.mark.slow
 def test_txn_batch_missing_column_null_fills_updated_rows(spark, tmp_path):
     """A batch MISSING a table column upserts NULL for it on the rows it
     replaces (documented additive-evolution semantics) and leaves other
@@ -697,6 +755,7 @@ def test_txn_batch_missing_column_null_fills_updated_rows(spark, tmp_path):
     assert snap["c"] is None and snap["a"] == 2.0
 
 
+@pytest.mark.slow
 def test_txn_clustered_compaction_tightens_zone_maps(spark, tmp_path):
     """Ingest-ordered commits give every file the FULL value range (no
     range probe prunes); compacting clustered by the probe column splits
@@ -756,6 +815,7 @@ def test_txn_clustered_compaction_tightens_zone_maps(spark, tmp_path):
     assert got == [f"k{v}" for v in range(100, 120)]
 
 
+@pytest.mark.slow
 def test_txn_zorder_compaction_prunes_2d_box(spark, tmp_path):
     """Z-ordered compaction gives each file a tight box in BOTH
     dimensions: a 2-D box probe (val band AND score band) prunes files
@@ -801,6 +861,7 @@ def test_txn_zorder_compaction_prunes_2d_box(spark, tmp_path):
     assert pruned == full > 0
 
 
+@pytest.mark.slow
 def test_txn_bin_packing_rewrites_only_small_files(spark, tmp_path):
     """OPTIMIZE bin-packing (r9): compact_table(small_file_bytes=...)
     folds only sub-threshold files; right-sized files are CARRIED by
@@ -852,6 +913,7 @@ def test_txn_bin_packing_rewrites_only_small_files(spark, tmp_path):
     assert txn.read_manifest(path)["epoch"] == ep
 
 
+@pytest.mark.slow
 def test_merge_manifest_stream_cdc_with_deletes(spark, tmp_path):
     """merge_manifest_stream with the full CDC clause surface, batches
     strictly ordered (drain, land more, drain): bootstrap-append on the
@@ -923,6 +985,7 @@ def test_merge_manifest_stream_cdc_with_deletes(spark, tmp_path):
     assert txn.read_snapshot(spark, table).where("id = 9").count() == 0
 
 
+@pytest.mark.slow
 def test_count_rows_is_metadata_exact_across_dml_lifecycle(spark, tmp_path):
     """count_rows (metadata-only COUNT(*), Delta's numRecords - DV
     cardinality): exact vs a real scan after every DML verb — append,
@@ -993,6 +1056,7 @@ def test_count_rows_is_metadata_exact_across_dml_lifecycle(spark, tmp_path):
     assert txn.count_rows(path) is None
 
 
+@pytest.mark.slow
 def test_count_rows_poisoned_dv_entry_stays_honest_none(spark, tmp_path):
     """Mixed-version safety (review r10-4th #1): an entry carrying dv
     sidecars WITHOUT dv_rows (deletes from before cardinality tracking)
