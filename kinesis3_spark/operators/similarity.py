@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity
+from ..sources import read_parquet
 
 LSH_SEED = 42
 LSH_TABLES = 4
@@ -866,7 +867,7 @@ def read_ivfpq_index(spark, path: str) -> DataFrame:
     consumers layout-agnostic. Filters on `cell` prune at the partition
     level — asserted in tests/test_ivfpq.py. Parquet discovery ignores
     the underscore-prefixed `_INDEX_META.json` sidecar by convention."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     return df.select("id", F.col("cell").cast("int").alias("cell"), "codes")
 
 

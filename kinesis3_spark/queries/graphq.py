@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import read_parquet
 from .relational import _t
 from . import query
 
@@ -69,7 +70,7 @@ def _part_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.write.mode("overwrite").parquet(path)
         return path
 
-    return spark.read.parquet(tmpdirs.memo("graph_edges", sf_dir, build))
+    return read_parquet(spark, tmpdirs.memo("graph_edges", sf_dir, build))
 
 
 def _oriented_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -107,7 +108,7 @@ def _oriented_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         oriented.write.mode("overwrite").parquet(path)
         return path
 
-    return spark.read.parquet(tmpdirs.memo("graph_oriented", sf_dir, build))
+    return read_parquet(spark, tmpdirs.memo("graph_oriented", sf_dir, build))
 
 
 @query(

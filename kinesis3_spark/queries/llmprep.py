@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.packing import bin_stats, pack_sequences
+from ..sources import read_parquet
 from .relational import _t
 from . import query
 
@@ -411,7 +412,7 @@ def export_sharded_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     argument)."""
     from ..operators.dedup import portable_hash60
 
-    written = spark.read.parquet(_sharded_export(spark, sf_dir))
+    written = read_parquet(spark, _sharded_export(spark, sf_dir))
     sig = portable_hash60(F.col("doc_id").cast("string")) % 1_000_000_000
     return (
         written.groupBy(F.col("shard").cast("bigint").alias("shard"))

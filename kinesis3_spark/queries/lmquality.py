@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from .. import tmpdirs
 from ..functions import text as T
+from ..sources import read_parquet
 from .relational import _t
 from . import query
 
@@ -666,7 +667,7 @@ def stream_perplexity_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     the model under AQE exactly as in llm_perplexity_filter."""
     from ..operators.dedup import portable_hash60
 
-    admitted = spark.read.parquet(_stream_ppl_materialize(spark, sf_dir))
+    admitted = read_parquet(spark, _stream_ppl_materialize(spark, sf_dir))
     return (
         admitted.groupBy("source")
         .agg(

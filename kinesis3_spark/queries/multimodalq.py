@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from .. import tmpdirs
 from ..operators import multimodal as M
+from ..sources import read_parquet
 from .relational import _t
 from . import query
 
@@ -677,7 +678,7 @@ def stream_image_phash_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     one Arrow decode+hash pass over the batch plus bucket-bounded joins
     — the job runs forever at constant state (NO streaming aggregation;
     the checkpointed file source gives exactly-once per shard)."""
-    out = spark.read.parquet(_stream_phash_materialize(spark, sf_dir))
+    out = read_parquet(spark, _stream_phash_materialize(spark, sf_dir))
     return (
         out.groupBy("source")
         .agg(
@@ -920,7 +921,7 @@ def stream_audio_fingerprint_admission(
     Arrow decode+fingerprint pass plus bucket-bounded (band, 8-bit
     value) joins against the once-materialized distinct-fingerprint
     history."""
-    out = spark.read.parquet(_stream_afp_materialize(spark, sf_dir))
+    out = read_parquet(spark, _stream_afp_materialize(spark, sf_dir))
     return (
         out.groupBy("source")
         .agg(
@@ -1204,7 +1205,7 @@ def stream_video_phash_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     once-materialized history frame hashes (identical frames by
     equi-join, near frames only inside (frame_idx, band, value)
     buckets); strict 90%-of-larger threshold."""
-    out = spark.read.parquet(_stream_vph_materialize(spark, sf_dir))
+    out = read_parquet(spark, _stream_vph_materialize(spark, sf_dir))
     return (
         out.groupBy("source")
         .agg(

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sinks.bucketed import write_bucketed
-from ..sources import load_table
+from ..sources import load_table, read_parquet
 from .relational import _t
 from . import query
 
@@ -362,7 +362,7 @@ def join_pruned_star_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pruning import pruned_star_join
     from . import roundtrip as _rt
 
-    fact = spark.read.parquet(_rt._partitioned_orders(spark, sf_dir))
+    fact = read_parquet(spark, _rt._partitioned_orders(spark, sf_dir))
     dim = spark.createDataFrame(
         [("1-URGENT",), ("2-HIGH",)], "o_orderpriority string"
     )

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import portable_hash60
-from ..sources import load_table
+from ..sources import load_table, read_parquet
 from ..streaming.run import await_or_raise
 from ..streaming.sources import stream_events
 from . import query
@@ -381,7 +381,7 @@ def source_jsonl_corrupt_tolerance(spark: SparkSession, sf_dir: str) -> DataFram
     key_sig = portable_hash60(F.col("o_orderkey").cast("string")) % 1_000_000_000
 
     perm = (
-        spark.read.parquet(_corrupt_parsed(spark, sf_dir))
+        read_parquet(spark, _corrupt_parsed(spark, sf_dir))
         .groupBy(
             F.when(F.col("_corrupt_record").isNull(), "good")
             .otherwise("corrupt")
@@ -481,7 +481,7 @@ def sink_partition_overwrite_backfill(spark: SparkSession, sf_dir: str) -> DataF
     Scale: the rewrite job touches one partition's files; the read-back
     aggregate is a map-side-combined per-day rollup with partition
     pruning available on dt."""
-    read = spark.read.parquet(_backfill_dir(spark, sf_dir))
+    read = read_parquet(spark, _backfill_dir(spark, sf_dir))
     # partition values read back type-INFERRED (dt strings -> DATE, the
     # parity-memory hazard): format back to the ISO string on the way out
     return (
@@ -597,7 +597,7 @@ def sink_parquet_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> Data
     the wrong partition directory flips two groups). o_orderpriority
     values ('1-URGENT'…) read back as strings — no partition-value type
     inference hazard (parity memory: dt-like strings infer as DATE)."""
-    orders = spark.read.parquet(_partitioned_orders(spark, sf_dir))
+    orders = read_parquet(spark, _partitioned_orders(spark, sf_dir))
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     return (
         orders.groupBy("o_orderpriority")
@@ -679,7 +679,7 @@ def stream_file_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop or replay shifts it), value micros pin payload fidelity. This is
     the sink `streaming/run.archive_stream` wires in production — the
     memory-sink oracle harness never touches it."""
-    sunk = spark.read.parquet(_stream_to_file_sink(spark, sf_dir))
+    sunk = read_parquet(spark, _stream_to_file_sink(spark, sf_dir))
     return (
         sunk.groupBy("event_type")
         .agg(
@@ -872,7 +872,7 @@ def sink_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         return path
 
     path = tmpdirs.memo("zorder", sf_dir, build)
-    ev = spark.read.parquet(path)
+    ev = read_parquet(spark, path)
     in_box = (
         F.col("user_id").between(10, 40)
         & (F.col("value") >= 10)
@@ -938,7 +938,7 @@ def sink_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         return path
 
     path = tmpdirs.memo("compact", sf_dir, build)
-    ev = spark.read.parquet(path)
+    ev = read_parquet(spark, path)
     return (
         ev.groupBy("event_type")
         .agg(

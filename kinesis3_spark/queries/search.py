@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import ngram_hashes, tokenize
+from ..sources import read_parquet
 from .decontam import _DUCK_TOKS
 from .relational import _t
 from . import ORACLE, query
@@ -638,7 +639,7 @@ def stream_exact_substring_ingest(
     stateless given the index), so the job runs forever at constant
     memory. The checkpointed file source gives exactly-once per
     shard."""
-    out = spark.read.parquet(_stream_es_materialize(spark, sf_dir))
+    out = read_parquet(spark, _stream_es_materialize(spark, sf_dir))
     return _es_rollup(out)
 
 

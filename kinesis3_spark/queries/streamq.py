@@ -25,6 +25,7 @@ from ..streaming import (
     stream_stream_attribution,
     tumbling_counts,
 )
+from ..sources import read_parquet
 from .relational import _t
 from . import query
 
@@ -613,7 +614,7 @@ def stream_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_tumbling_counts on the same windows."""
     target = _continuous_rollup_table(spark, sf_dir)
     return (
-        spark.read.parquet(target)
+        read_parquet(spark, target)
         .select("win_start", "event_type", F.col("n").cast("bigint").alias("n"))
         .orderBy("win_start", "event_type")
     )

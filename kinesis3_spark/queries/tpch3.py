@@ -203,7 +203,8 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     - NOT EXISTS (another late supplier on the order) ⇔ the order has
       exactly ONE distinct late supplier ⇒ aggregate the DISTINCT
       (orderkey, suppkey) late relation per order; `count = 1` keeps the
-      order and `min(suppkey)` IS that supplier.
+      order and `min(suppkey)` IS that supplier. Both ignore a NULL
+      suppkey, as the oracle's `l3.l_suppkey <> l1.l_suppkey` does.
     - EXISTS (another supplier on the order) ⇔ the order has ≥ 2 distinct
       suppliers overall ⇒ `min(l_suppkey) < max(l_suppkey)` per order
       (the late supplier is on the order by construction, so a second
@@ -228,7 +229,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = (
         late.groupBy("l_orderkey")
-        .agg(F.count(F.lit(1)).alias("n_late"), F.min("l_suppkey").alias("l_suppkey"))
+        .agg(F.count("l_suppkey").alias("n_late"), F.min("l_suppkey").alias("l_suppkey"))
         .where(F.col("n_late") == 1)
     )
     multi = (

@@ -4,6 +4,7 @@ from .batch import (
     load_tables,
     read_csv,
     read_jsonl,
+    read_parquet,
     register_temp_views,
 )
 
@@ -13,5 +14,6 @@ __all__ = [
     "load_tables",
     "read_csv",
     "read_jsonl",
+    "read_parquet",
     "register_temp_views",
 ]

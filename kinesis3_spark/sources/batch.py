@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import tmpdirs
+
 TABLES = (
     "region",
     "nation",
@@ -54,8 +56,33 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+def parquet_schema(spark: SparkSession, path: str):
+    """The schema Spark infers for the parquet file or directory at
+    ``path``, memoized per file identity (``tmpdirs.memo``): the inference
+    is a one-task Spark job on every call, and a rewritten file is peeked
+    again."""
+    return tmpdirs.memo(
+        "parquet_schema", path, lambda _scratch: spark.read.parquet(path).schema
+    )
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job after
+    the first call: the read of every input that does not change once
+    written — corpus tables and memoized build outputs. The memoized
+    schema is the one inferred under the parquet confs ``session.tune()``
+    sets (``nanosAsLong`` reads TIMESTAMP(NANOS) as bigint); a session
+    without them must not share these entries.
+
+    Reads stay bare where the schema is not fixed: ``sinks/txn.py``
+    (snapshots and delete-vector sidecars change), ``sinks/compact.py``
+    (rewrites the path it reads) and every ``mergeSchema`` read, whose
+    schema is per-file by design."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_event_ts(df)
     elif name == "embeddings":

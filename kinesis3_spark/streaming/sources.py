@@ -13,18 +13,9 @@ from __future__ import annotations
 import os
 
 from .. import tmpdirs
+from ..sources.batch import normalize_event_ts, parquet_schema
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def _parquet_schema(spark: SparkSession, path: str):
-    """Schema peek, memoized per file (OPTIMIZATION_r15): every stream_*()
-    call was running a batch footer read (~0.09 s per drain, twice for
-    two-source attribution drains). A
-    rewritten file is peeked again."""
-    return tmpdirs.memo(
-        "parquet_schema", path, lambda _scratch: spark.read.parquet(path).schema
-    )
 
 
 def _as_stream_dir(file_path: str) -> str:
@@ -41,14 +32,13 @@ def _as_stream_dir(file_path: str) -> str:
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus `events` table as a stream (schema inferred from a batch
-    peek — streaming file sources need an explicit schema). Applies the same
-    nanos→µs ts normalization as sources/batch.load_table."""
+    """The corpus `events` table as a stream (schema from the memoized
+    batch peek that `load_table` shares — streaming file sources need an
+    explicit schema). Applies the same nanos→µs ts normalization as
+    sources/batch.load_table."""
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _parquet_schema(spark, path)
+    schema = parquet_schema(spark, path)
     df = spark.readStream.schema(schema).parquet(_as_stream_dir(path))
-    from ..sources.batch import normalize_event_ts
-
     return normalize_event_ts(df)
 
 
@@ -106,5 +96,5 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the corpus-prep pipeline (new crawl shards landing in a directory,
     each file an exactly-once unit)."""
     path = os.path.join(sf_dir, "documents.parquet")
-    schema = _parquet_schema(spark, path)
+    schema = parquet_schema(spark, path)
     return spark.readStream.schema(schema).parquet(_as_stream_dir(path))

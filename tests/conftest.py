@@ -54,6 +54,18 @@ def duck():
     con.close()
 
 
+def copy_corpus(src: str, dest) -> str:
+    """Plain copies of the corpus files under ``dest`` (the corpus may be
+    read-only), for tests that rewrite a table in place."""
+    import shutil
+
+    dest = str(dest)
+    os.makedirs(dest, exist_ok=True)
+    for f in os.listdir(src):
+        shutil.copyfile(os.path.join(src, f), os.path.join(dest, f))
+    return dest
+
+
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     """Canonicalize for order-insensitive comparison: columns sorted by
     name, rows sorted by all columns (stringified so mixed NULLs sort)."""

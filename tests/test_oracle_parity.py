@@ -15,7 +15,7 @@ import pytest
 
 from kinesis3_spark.queries import ORACLE, QUERIES
 
-from .conftest import assert_parity
+from .conftest import assert_parity, copy_corpus
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
@@ -28,3 +28,56 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
         rows = df.count()
         assert rows >= 0
         assert len(df.schema.fields) > 0
+
+
+def test_q21_ignores_a_null_late_supplier(spark, sf_dir, tmp_path):
+    """A late lineitem with a NULL l_suppkey is no second late supplier:
+    the oracle's `l3.l_suppkey <> l1.l_suppkey` never holds for it, so an
+    order whose late suppliers are {s, NULL} still counts for s. Plant
+    such a row on an order q21 counts and compare with DuckDB on the same
+    files."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf = copy_corpus(sf_dir, tmp_path / "sf")
+    con = duckdb.connect()
+    for t in ("lineitem", "orders", "supplier", "nation", "region"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+    # one counted (order, supplier): its only late supplier, in EUROPE
+    okey, skey = con.sql(
+        """
+        SELECT l_orderkey, min(l_suppkey)
+        FROM lineitem JOIN orders ON o_orderkey = l_orderkey
+        WHERE o_orderstatus = 'F' AND datediff('day', o_orderdate, l_shipdate) > 90
+        GROUP BY l_orderkey
+        HAVING count(DISTINCT l_suppkey) = 1
+           AND min(l_suppkey) IN (
+             SELECT s_suppkey FROM supplier
+             JOIN nation ON n_nationkey = s_nationkey
+             JOIN region ON r_regionkey = n_regionkey
+             WHERE r_name = 'EUROPE')
+           AND (SELECT count(DISTINCT l2.l_suppkey) FROM lineitem l2
+                WHERE l2.l_orderkey = lineitem.l_orderkey) > 1
+        ORDER BY l_orderkey LIMIT 1
+        """
+    ).fetchone()
+    li = pq.read_table(f"{sf}/lineitem.parquet")
+    late = con.sql(
+        f"""
+        SELECT l.* FROM lineitem l JOIN orders ON o_orderkey = l_orderkey
+        WHERE l_orderkey = {okey} AND l_suppkey = {skey}
+          AND datediff('day', o_orderdate, l_shipdate) > 90
+        LIMIT 1
+        """
+    ).fetch_arrow_table()
+    planted = late.set_column(
+        late.schema.get_field_index("l_suppkey"),
+        "l_suppkey",
+        pa.nulls(1, pa.int64()),
+    )
+    pq.write_table(pa.concat_tables([li, planted.cast(li.schema)]), f"{sf}/lineitem.parquet")
+
+    assert_parity(
+        QUERIES["q21_waiting_suppliers"](spark, sf), con, ORACLE["q21_waiting_suppliers"]
+    )

@@ -1,13 +1,20 @@
 """Source-format tests (SURVEY.md §2b rows 2-3): JSON-lines and CSV scans
-round-trip against DuckDB's readers on the same files."""
+round-trip against DuckDB's readers on the same files. Parquet inputs that
+do not change are read with a memoized schema: the job budget, the
+file-identity contract and a guard against bare reads are pinned here."""
 
 from __future__ import annotations
+
+import ast
+import pathlib
 
 import duckdb
 
 from pyspark.sql import functions as F
 
 from kinesis3_spark.sources import read_csv, read_jsonl
+
+from .conftest import copy_corpus
 
 
 ROWS = [
@@ -235,3 +242,98 @@ def test_xml_roundtrip_escapes_entities(spark, tmp_path):
         .load(p)
     )
     assert {tuple(r) for r in back.collect()} == set(rows)
+
+
+# Jobs of a warm q3 build plus noop write at the fixture SF (sf0.001):
+# the query's own 4, and no schema-inference job for its 3 tables.
+Q3_WARM_JOBS = 4
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs `fn()` starts, from the DAG scheduler's job-id counter."""
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.dagScheduler().nextJobId()
+    fn()
+    return sc.dagScheduler().nextJobId() - before
+
+
+def test_second_load_table_starts_no_job(spark, sf_dir):
+    """The corpus schema is peeked once per file: a repeated load is
+    planned from the memoized schema, with no footer-inference job."""
+    from kinesis3_spark.sources import load_table
+
+    load_table(spark, sf_dir, "lineitem")
+    assert _jobs_started(spark, lambda: load_table(spark, sf_dir, "lineitem")) == 0
+
+
+def test_warm_q3_job_budget(spark, sf_dir):
+    """A warm q3 build plus a noop write runs only the query's own jobs
+    at the fixture SF: one fewer per loaded table (customer, orders,
+    lineitem) than when every load inferred its schema."""
+    from kinesis3_spark.queries import QUERIES
+
+    def run():
+        QUERIES["q3_shipping_priority"](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+
+    run()
+    assert _jobs_started(spark, run) == Q3_WARM_JOBS
+
+
+def test_load_table_sees_a_rewritten_schema(spark, sf_dir, tmp_path):
+    """The memoized schema is keyed by file identity: a table rewritten in
+    place with one more column is read with that column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kinesis3_spark.sources import load_table
+
+    sf = copy_corpus(sf_dir, tmp_path / "sf")
+    assert "p_note" not in load_table(spark, sf, "part").columns
+    part = pq.read_table(f"{sf}/part.parquet")
+    notes = [f"note-{k}" for k in part["p_partkey"].to_pylist()]
+    pq.write_table(part.append_column("p_note", pa.array(notes)), f"{sf}/part.parquet")
+    got = load_table(spark, sf, "part").select("p_partkey", "p_note").collect()
+    assert sorted((r.p_partkey, r.p_note) for r in got) == sorted(
+        zip(part["p_partkey"].to_pylist(), notes)
+    )
+
+
+def _bare_parquet_reads(tree):
+    """`<x>.read.parquet(...)` calls outside a nested function: a
+    top-level function body, or module level."""
+
+    def walk(node, depth):
+        for ch in ast.iter_child_nodes(node):
+            if isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                yield from walk(ch, depth + 1)
+                continue
+            f = getattr(ch, "func", None)
+            if (
+                depth < 2
+                and isinstance(f, ast.Attribute)
+                and f.attr == "parquet"
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "read"
+            ):
+                yield ch.lineno
+            yield from walk(ch, depth)
+
+    return walk(tree, 0)
+
+
+def test_unchanging_inputs_read_through_read_parquet():
+    """Every per-call read in queries/ and operators/ goes through
+    sources.read_parquet: a bare `spark.read.parquet(path)` starts a
+    schema-inference job on each call. Reads inside a nested function (a
+    memoized build or drain closure) run once per corpus and may stay
+    bare."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "kinesis3_spark"
+    found = [
+        f"{p.relative_to(pkg).as_posix()}:{line}"
+        for sub in ("queries", "operators")
+        for p in sorted((pkg / sub).glob("*.py"))
+        for line in _bare_parquet_reads(ast.parse(p.read_text()))
+    ]
+    assert found == []

@@ -16,6 +16,8 @@ import sys
 
 from kinesis3_spark import tmpdirs
 
+from .conftest import copy_corpus
+
 PKG = pathlib.Path(__file__).resolve().parents[1] / "kinesis3_spark"
 
 
@@ -128,10 +130,7 @@ def test_rewritten_inputs_rebuild(spark, sf_dir, tmp_path):
     from kinesis3_spark.streaming import stream_events
     from kinesis3_spark.streaming.run import run_to_memory
 
-    sf = str(tmp_path / "sf")
-    os.mkdir(sf)
-    for f in os.listdir(sf_dir):  # plain copies: the corpus may be read-only
-        shutil.copyfile(os.path.join(sf_dir, f), os.path.join(sf, f))
+    sf = copy_corpus(sf_dir, tmp_path / "sf")
     orc_q = QUERIES["source_orc_roundtrip"]
 
     def orc_rows():

@@ -16,7 +16,7 @@ from kinesis3_spark import tmpdirs
 import os
 
 _NEW_RUN = R.run_to_memory
-_ORIG_SCHEMA = S._parquet_schema
+_ORIG_SCHEMA = S.parquet_schema
 
 
 def _old_run_to_memory(sdf, output_mode="append", timeout_s=300,
@@ -63,12 +63,12 @@ def _uncached_schema(spark, path):
 
 def old(spark, sf_dir):
     Q.run_to_memory = _old_run_to_memory
-    S._parquet_schema = _uncached_schema
+    S.parquet_schema = _uncached_schema
     try:
         return _drains(spark, sf_dir)
     finally:
         Q.run_to_memory = _NEW_RUN
-        S._parquet_schema = _ORIG_SCHEMA
+        S.parquet_schema = _ORIG_SCHEMA
 
 
 def new(spark, sf_dir):
