@@ -32,9 +32,9 @@ parse materialization (1, which also counts rows and malformed rows
 through an Observation), the quarantine append (1), the store merge write
 (2: AQE runs the key shuffle's map stage as its own job) and the archive
 append (1); a clean batch skips the quarantine job. The projection stays
-in whole-stage codegen. The collector passes no `partition_cols`, so each
-upsert reads and rewrites the whole store, O(table) per batch; the
-archive is append-only. The driver holds only counters (no rows)."""
+in whole-stage codegen. Each upsert reads and rewrites the whole store
+through a staged swap, O(table) per batch; the archive is append-only.
+The driver holds only counters (no rows)."""
 
 from __future__ import annotations
 
@@ -176,7 +176,7 @@ class Collector:
                 "yyyy-MM-dd",
             ).alias("dt"),
         )
-        write_partitioned(raw, self.archive_path, ("dt",), mode="append")
+        write_partitioned(raw, self.archive_path)
         dt = time.perf_counter() - t0
         with self._lock:
             self._stats["messages_ingested"] += n
@@ -344,5 +344,6 @@ class Collector:
         if self.query is not None and self.query.isActive:
             self.query.stop()
         if self._server is not None:
-            self._server.shutdown()
+            self._server.shutdown()  # ends serve_forever only
+            self._server.server_close()  # releases the listening port
             self._server = None

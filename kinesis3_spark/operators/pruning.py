@@ -5,10 +5,10 @@ Dynamic partition pruning is the optimizer feature that should turn
 partitions. On this build it measurably degrades to a no-op
 (SCALE.md "Known trade-offs": `dynamicpruningexpression(true)`, every
 file read), so the engine ships the explicit form: evaluate the dim
-side's bounded partition-key set first (driver-side metadata, the same
-bounded-collect contract as `sinks/upsert.py`'s partition-pruned
-rewrite), then apply it as a STATIC `isin` filter — which the verified
-`PartitionFilters` pushdown path prunes at file-listing time.
+side's bounded partition-key set first (driver-side metadata: a bounded
+collect of partition values, never rows), then apply it as a STATIC
+`isin` filter — which the verified `PartitionFilters` pushdown path
+prunes at file-listing time.
 
 At 100 TB the collected key set is partition VALUES (dates, tenants —
 thousands at most), never data; a dim whose key set is unbounded is not

@@ -23,10 +23,6 @@ from .relational import _t
 from . import query
 
 
-def _cname(s: str):
-    return F.lit(s).alias("constraint")
-
-
 @query(
     "dq_constraint_suite",
     oracle="""

@@ -37,8 +37,6 @@ from pyspark.sql.window import Window
 from .relational import _t
 from . import query
 
-_TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-
 
 def _stage_candidates(ev: DataFrame):
     """The funnel's running-min window cascade, shared by the standalone

@@ -676,9 +676,8 @@ def stream_file_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger, durable checkpoint) → batch read-back → aggregate vs the
     original events table. Green means the production sink path delivered
     every record exactly once: id_sum is an identity over event_ids (any
-    drop or replay shifts it), value micros pin payload fidelity. This is
-    the sink `streaming/run.archive_stream` wires in production — the
-    memory-sink oracle harness never touches it."""
+    drop or replay shifts it), value micros pin payload fidelity. The
+    memory-sink oracle harness never touches this path."""
     sunk = read_parquet(spark, _stream_to_file_sink(spark, sf_dir))
     return (
         sunk.groupBy("event_type")

@@ -16,7 +16,7 @@ per bucket instead of one-per-task-per-bucket — the small-files guard.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -38,8 +38,3 @@ def write_bucketed(
         .saveAsTable(name)
     )
 
-
-def read_bucketed(spark: SparkSession, name: str) -> DataFrame:
-    """Read a bucketed table back; bucket metadata only survives the
-    catalog route (``spark.table``), not a raw path read."""
-    return spark.table(name)

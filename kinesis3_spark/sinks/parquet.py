@@ -12,31 +12,11 @@ and statistics-bearing instead of gzip JSON lines.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: tuple[str, ...] = ("dt",),
-    mode: str = "append",
-) -> None:
-    """Partitioned Parquet write. `append` is the archive default — each
-    micro-batch adds files under its date directories; no global rewrite."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def archive_events(
-    df: DataFrame, path: str, ts_col: str = "ts", mode: str = "append"
-) -> None:
-    """Archive with the reference's date layout derived from event time.
-
-    At 100 TB the partition column must be low-cardinality and derived
-    BEFORE the write (one `dt` value per day keeps directory counts sane;
-    partitioning by a high-cardinality key would explode the metadata)."""
-    write_partitioned(
-        df.withColumn("dt", F.date_format(F.col(ts_col), "yyyy-MM-dd")),
-        path,
-        ("dt",),
-        mode,
-    )
+def write_partitioned(df: DataFrame, path: str) -> None:
+    """Append `df` under its `dt=` directories: each micro-batch adds files
+    to the days it touches; no global rewrite. At 100 TB the partition
+    column must be low-cardinality and derived before the write (one `dt`
+    value per day keeps directory counts sane)."""
+    df.write.mode("append").partitionBy("dt").parquet(path)

@@ -9,8 +9,8 @@ the poor-man's transaction log an immutable-file layout affords):
   * Data files are IMMUTABLE: every commit writes into a fresh
     ``snap-<epoch>/`` directory and never touches a file a reader might
     hold open. There is no read-then-overwrite window, so the merge needs
-    no localCheckpoint lineage cut (contrast upsert_parquet, which
-    rewrites in place).
+    no staging directory (contrast upsert_parquet, which rewrites the
+    whole table and swaps it in).
   * The table's visible state is exactly the file list in
     ``_MANIFEST.json``. Commit = write files → fsync → ``os.replace`` the
     manifest (atomic on POSIX). A reader that goes through the manifest
@@ -18,11 +18,11 @@ the poor-man's transaction log an immutable-file layout affords):
     torn mix; a crash mid-commit leaves unreferenced garbage files and a
     fully intact previous snapshot.
   * Write amplification is bounded by HASH-BUCKET pruning, the same idea
-    as upsert_parquet's partition pruning but keyed: the table is laid
-    out in ``n_buckets`` portable-hash buckets of the merge key, a batch
-    touches only the buckets its keys hash into, and a commit rewrites
-    those buckets while CARRYING FORWARD the untouched buckets' file
-    references unchanged in the new manifest. At 100 TB a micro-batch
+    as partition pruning but keyed: the table is laid out in
+    ``n_buckets`` portable-hash buckets of the merge key, a batch touches
+    only the buckets its keys hash into, and a commit rewrites those
+    buckets while CARRYING FORWARD the untouched buckets' file references
+    unchanged in the new manifest. At 100 TB a micro-batch
     merge costs O(touched buckets), not O(table) — the Delta MERGE
     file-rewrite shape, expressed with a JSON manifest.
 
@@ -3099,9 +3099,9 @@ def upsert_manifest_stream(
     stats_cols: list[str] | None = None,
     app_id: str | None = None,
 ):
-    """The foreachBatch wiring (run.upsert_stream's transactional twin):
-    every micro-batch is one atomic manifest commit, so a reader polling
-    the table between batches always sees a consistent merge prefix.
+    """The foreachBatch wiring of upsert_manifest_txn: every micro-batch
+    is one atomic manifest commit, so a reader polling the table between
+    batches always sees a consistent merge prefix.
     With ``app_id`` set, the batch_id rides into the manifest's app
     watermark so a checkpoint-recovery REPLAY of a committed batch is
     skipped (exactly-once; without it a replayed upsert is still

@@ -10,24 +10,19 @@ and duplicate ids are tolerated silently. `mode="ignore"` reproduces that;
 
 Spark-first shape: Parquet has no transactional MERGE, so the upsert is a
 read-union-window-rewrite expressed declaratively (this is exactly what a
-`foreachBatch` MERGE does under Delta/Iceberg; swap `_rewrite` for
+`foreachBatch` MERGE does under Delta/Iceberg; swap the rewrite for
 `deltaTable.merge` when an ACID table format is available). The window is
 one hash-shuffle on the key — no driver-side collects, no row loops.
 
 Scale notes (100 TB):
-  * The rewrite is PARTITION-PRUNED when `partition_cols` is given: only
-    partitions containing incoming keys are unioned + rewritten; untouched
-    partitions are never read. That bounds each batch's write amplification
-    by the batch's partition spread, not the table size.
-  * dynamic partitionOverwriteMode keeps the swap atomic per partition.
-    That path materializes the merge (localCheckpoint) first, because it
-    overwrites the directories it reads.
-  * Without `partition_cols` the whole table is rewritten each call, as a
-    staged swap: the merge is written to `<path>.__next`, then `path` is
-    renamed to `<path>.__prev`, `.__next` to `path`, and `.__prev` is
-    removed. At every instant `path` or `.__prev` holds a complete
-    committed table; the next call restores `.__prev` if `path` is gone,
-    drops it if both exist, and overwrites a stale `.__next`.
+  * Every call rewrites the whole table, as a staged swap: the merge is
+    written to `<path>.__next`, then `path` is renamed to `<path>.__prev`,
+    `.__next` to `path`, and `.__prev` is removed. At every instant `path`
+    or `.__prev` holds a complete committed table; the next call restores
+    `.__prev` if `path` is gone, drops it if both exist, and overwrites a
+    stale `.__next`. The merge never overwrites what it reads, so nothing
+    is materialized first. Writes O(batch) instead of O(table) need a
+    merge-on-read layout (sinks/txn.py), not a pruned rewrite here.
   * The existing table is read with the batch's schema instead of an
     inferred one, which saves a footer-reading job per call. That assumes
     the table schema equals the batch schema, which holds because this
@@ -76,10 +71,9 @@ def upsert_parquet(
     spark: SparkSession,
     batch: DataFrame,
     path: str,
-    key: str = "id",
-    order_col: str | None = None,
+    key: str,
+    order_col: str,
     mode: str = "replace",
-    partition_cols: tuple[str, ...] = (),
 ) -> None:
     """Merge `batch` into the Parquet table at `path` by `key`.
 
@@ -95,53 +89,20 @@ def upsert_parquet(
     """
     assert mode in ("ignore", "replace")
     _recover_swap(path)
-    order = order_col or key
     prefer = "new" if mode == "replace" else "old"
     new = batch.withColumn("__is_new", F.lit(1))
     exists = os.path.exists(path) and any(
         not n.startswith(("_", ".")) for n in os.listdir(path)
     )
     if not exists:
-        writer = _dedup_last(new, key, order, prefer).write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(path)
+        _dedup_last(new, key, order_col, prefer).write.mode("overwrite").parquet(path)
         return
 
     current = (
         spark.read.schema(batch.schema).parquet(path).withColumn("__is_new", F.lit(0))
     )
-    if partition_cols:
-        # prune the rewrite to partitions the batch actually touches
-        touched = [
-            tuple(r) for r in batch.select(*partition_cols).distinct().collect()
-        ]
-        cond = F.lit(False)
-        for vals in touched:
-            row_match = F.lit(True)
-            for c, v in zip(partition_cols, vals):
-                row_match = row_match & (F.col(c) == F.lit(v))
-            cond = cond | row_match
-        current = current.where(cond)
-
-    merged = _dedup_last(current.unionByName(new), key, order, prefer)
-    if not partition_cols:
-        # staged swap (module notes): the merge never overwrites what it reads
-        merged.write.mode("overwrite").parquet(path + _NEXT)
-        os.rename(path, path + _PREV)
-        os.rename(path + _NEXT, path)
-        shutil.rmtree(path + _PREV)
-        return
-    # Materialize before overwriting the directories being read (Parquet has
-    # no snapshot isolation; localCheckpoint cuts the lineage to the files).
-    merged = merged.localCheckpoint(eager=True)
-    # scoped conf change, restored after the write — a lingering "dynamic"
-    # would silently change every later caller's INSERT OVERWRITE semantics
-    # in this session
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    old_mode = spark.conf.get(mode_key)
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set(mode_key, old_mode)
+    merged = _dedup_last(current.unionByName(new), key, order_col, prefer)
+    merged.write.mode("overwrite").parquet(path + _NEXT)
+    os.rename(path, path + _PREV)
+    os.rename(path + _NEXT, path)
+    shutil.rmtree(path + _PREV)

@@ -27,10 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor (TPC-H
-# fixes region=5 / nation=25 rows): always safe on the build side.
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
 
 def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize the events timestamp column to session-zone TimestampType,

@@ -1,8 +1,9 @@
 """Structured Streaming surface: sources, windowed aggregations, dedup,
-archive/upsert sinks, and ingest metrics (reference src/kinesis3/core.clj —
-the Kinesis consumer loop, S3 archive sink, and /stats metrics)."""
+the continuous-rollup upsert sink and the oracle drain harness (reference
+src/kinesis3/core.clj — the Kinesis consumer loop and /stats metrics; the
+collector's store and archive sinks live in app.py)."""
 
-from .sources import stream_documents, stream_events, stream_jsonl  # noqa: F401
+from .sources import stream_documents, stream_events  # noqa: F401
 from .windows import (  # noqa: F401
     session_counts,
     sliding_value_stats,
@@ -10,6 +11,6 @@ from .windows import (  # noqa: F401
     tumbling_counts,
 )
 from .dedup import dedup_stream  # noqa: F401
-from .run import await_or_raise, run_to_memory, archive_stream, upsert_stream  # noqa: F401
+from .run import await_or_raise, run_to_memory  # noqa: F401
 from .stateful import running_user_totals  # noqa: F401
 from .rollup import continuous_rollup, rollup_events  # noqa: F401

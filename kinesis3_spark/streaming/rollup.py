@@ -13,11 +13,13 @@ latest emission per key IS the correct rollup — so last-writer-wins upsert
 by (window, dim) converges to the batch answer regardless of how arrivals
 are split across batches.
 
-Scale notes: per batch, the upsert rewrite touches only the (typically
-recent) windows the batch updated — partition the rollup table by window
-date and the rewrite partition-prunes (see sinks/upsert.py). Watermarking
-the source bounds aggregation state; without it, state grows with the
-number of open windows, not with rows.
+Scale notes: per batch, the update-mode emission carries only the
+(typically recent) windows the batch changed, but the upsert rewrites the
+whole rollup table through its staged swap (see sinks/upsert.py), so the
+write is O(rollup rows) per batch; the rollup is orders of magnitude
+smaller than the events it summarizes. Watermarking the source bounds
+aggregation state; without it, state grows with the number of open
+windows, not with rows.
 """
 
 from __future__ import annotations

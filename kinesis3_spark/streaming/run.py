@@ -1,8 +1,9 @@
-"""Streaming execution helpers: drive a stream to completion with the
-availableNow trigger (process-everything-then-stop — the testable form of
-the reference's batch-size/interval flush loop, core.clj:113-120
-`time-to-save?`), archive to partitioned Parquet, or upsert per micro-batch
-via foreachBatch."""
+"""Streaming execution helpers for the registered streaming queries: drive
+a stream to completion with the availableNow trigger
+(process-everything-then-stop — the testable form of the reference's
+batch-size/interval flush loop, core.clj:113-120 `time-to-save?`) and fail
+hard when a drain does not finish. The collector's own sinks live in app.py (`Collector`) and
+streaming/rollup.py (`continuous_rollup`)."""
 
 from __future__ import annotations
 
@@ -10,9 +11,7 @@ import itertools
 import os
 from .. import tmpdirs
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..sinks import upsert_parquet
+from pyspark.sql import DataFrame
 
 _MEM_IDS = itertools.count()
 
@@ -47,9 +46,10 @@ def run_to_memory(
 
     This accumulates the whole result on the driver, which is fine for the
     bounded oracle queries (queries/streamq.py) and nothing else. The
-    production sinks are continuous_rollup (incremental foreachBatch
-    upsert, bounded state), upsert_stream, and archive_stream — app.py
-    wires those, never this (guarded by tests/test_plan_guards.py)."""
+    production sinks are the collector's foreachBatch store upsert and
+    archive append (app.py) and continuous_rollup (incremental foreachBatch
+    upsert, bounded state) — never this (guarded by
+    tests/test_plan_guards.py)."""
     name = f"stream_result_{next(_MEM_IDS)}"
     spark = sdf.sparkSession
     # Harness checkpoints are throwaway: land them on tmpfs when available
@@ -60,8 +60,8 @@ def run_to_memory(
     # partition at query start; for an availableNow drain of a bounded
     # harness input that setup dominates wall clock (32 -> 4 partitions
     # measured ~2.2-3.0s -> ~1.3s per query at sf0.1). Scoped to this harness run and
-    # restored after the drain — production streams (continuous_rollup,
-    # upsert_stream) keep the session setting.
+    # restored after the drain — production streams (the collector,
+    # continuous_rollup) keep the session setting.
     # `final_no_data_batch=False` skips the trailing zero-row micro-batch
     # (spark.sql.streaming.noDataMicroBatches.enabled, scoped + restored).
     # That batch exists to advance the watermark so WATERMARK-GATED output
@@ -102,51 +102,3 @@ def run_to_memory(
     # come through here.
     return spark.table(name).coalesce(1)
 
-
-def archive_stream(
-    sdf: DataFrame,
-    path: str,
-    checkpoint: str,
-    partition_cols: tuple[str, ...] = ("dt",),
-    trigger: dict | None = None,
-):
-    """Partitioned-Parquet streaming archive (reference core.clj:41-58 S3
-    date-layout sink). `trigger` defaults to availableNow for tests; pass
-    {"processingTime": "30 seconds"} for the reference's interval flush."""
-    return (
-        sdf.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy(*partition_cols)
-        .outputMode("append")
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
-
-
-def upsert_stream(
-    sdf: DataFrame,
-    path: str,
-    checkpoint: str,
-    key: str = "id",
-    order_col: str | None = None,
-    mode: str = "replace",
-    trigger: dict | None = None,
-):
-    """Stateful per-batch upsert (SURVEY.md §2b row 46; reference
-    db.clj:113-134 flush-events!): every micro-batch merges into the keyed
-    Parquet target. Exactly the foreachBatch-MERGE shape — swap the body
-    for Delta/Iceberg MERGE when an ACID format is available."""
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_parquet(
-            batch_df.sparkSession, batch_df, path, key=key, order_col=order_col, mode=mode
-        )
-
-    return (
-        sdf.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )

@@ -42,12 +42,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_event_ts(df)
 
 
-def stream_jsonl(spark: SparkSession, path: str, schema) -> DataFrame:
-    """JSON-lines landing directory → stream (the raw collector records
-    shape; feed through pipeline.ingest for the events projection)."""
-    return spark.readStream.schema(schema).json(path)
-
-
 def kinesis_stream(
     spark: SparkSession,
     stream_name: str,

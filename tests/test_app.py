@@ -15,6 +15,7 @@ pytestmark = pytest.mark.slow  # excluded by the -m 'not slow' quick path
 
 import json
 import os
+import socket
 import urllib.error
 import urllib.request
 
@@ -347,23 +348,51 @@ def test_batch_timings_stay_bounded(tmp_path):
     assert got["min"] <= got["p50"] <= got["p95"] <= got["max"]
 
 
-def _record_line(seq: int, bad_body: bool = False) -> str:
-    """One Kinesis-shaped JSONL record with key `seq`; `bad_body` truncates
-    the inner JSON so the record is quarantined as body_parse_failed."""
+def test_stop_releases_stats_port(tmp_path):
+    """stop() closes the /stats listening socket, not just its serve loop:
+    a connection to the port is refused afterwards."""
+    c = Collector(
+        None,
+        str(tmp_path / "landing"),
+        store_path=str(tmp_path / "store"),
+        archive_path=str(tmp_path / "archive"),
+        checkpoint=str(tmp_path / "ck"),
+    )
+    port = c.serve_stats(0)
+    socket.create_connection(("127.0.0.1", port), timeout=5).close()
+    # the serve thread may still hold the server when stop() returns, so
+    # the port must not depend on the server object being collected
+    server = c._server
+    c.stop()
+    with pytest.raises(ConnectionRefusedError):
+        socket.create_connection(("127.0.0.1", port), timeout=5)
+    assert server.socket.fileno() == -1
+
+
+def _record_line(
+    seq: int,
+    bad_body: bool = False,
+    epoch: int = 1_700_000_000_000,
+    t_shift: int = 0,
+    source: str = "src",
+) -> str:
+    """One Kinesis-shaped JSONL record with key `seq`, received at `epoch`
+    (ms); `bad_body` truncates the inner JSON so the record is quarantined
+    as body_parse_failed."""
     body = json.dumps(
         {
             "id": f"r{seq}",
-            "t": 1_700_000_000_000 + seq * 1000,
+            "t": 1_700_000_000_000 + seq * 1000 + t_shift,
             "path": "/evt",
             "url": "https://ex.com/evt",
-            "args": {"utm_source": "src"},
+            "args": {"utm_source": source},
             "user": {"uid": f"u{seq}"},
             "headers": {"User-Agent": "UA/1.0", "Cookie": f"uid=u{seq}"},
         }
     )
     if bad_body:
         body = body[: len(body) // 2]
-    data = json.dumps({"m": "evt", "epoch": 1_700_000_000_000, "body": body})
+    data = json.dumps({"m": "evt", "epoch": epoch, "body": body})
     return json.dumps({"sequence_number": f"{seq:012d}", "data": data, "partition": "s0"})
 
 
@@ -387,15 +416,21 @@ def _collector(spark, tmp_path, landing) -> Collector:
 def test_batch_into_existing_store_runs_five_jobs(spark, tmp_path):
     """A file with one malformed record, drained into an existing store,
     costs 5 Spark jobs: the observed parse materialization, the quarantine
-    append, the store merge (map stage + write) and the archive append."""
+    append, the store merge (map stage + write) and the archive append.
+    The file is received a day later and re-sends a stored key with a newer
+    event time: the store keeps the newer row, the archive gets one `dt=`
+    directory per receive day."""
     landing = tmp_path / "landing"
     landing.mkdir()
     c = _collector(spark, tmp_path, landing)
     _land_lines(landing, "a.json", [_record_line(i) for i in range(50)])
     c.run(timeout_s=300)
+    day2 = 1_700_000_000_000 + 86_400_000
     _land_lines(
         landing, "b.json",
-        [_record_line(i) for i in range(50, 100)] + [_record_line(100, bad_body=True)],
+        [_record_line(i, epoch=day2) for i in range(50, 100)]
+        + [_record_line(10, epoch=day2, t_shift=60_000, source="resent")]
+        + [_record_line(100, bad_body=True)],
     )
     sc = spark.sparkContext._jsc.sc()
     before = sc.dagScheduler().nextJobId()
@@ -403,11 +438,18 @@ def test_batch_into_existing_store_runs_five_jobs(spark, tmp_path):
     jobs = sc.dagScheduler().nextJobId() - before
     c.stop()
     assert jobs == 5
-    assert stats["message-ingested"]["count"] == 101
+    assert stats["message-ingested"]["count"] == 102
     assert stats["malformed"]["count"] == 1
-    assert spark.read.parquet(c.store_path).count() == 100
+    store = spark.read.parquet(c.store_path)
+    assert store.count() == 100
+    resent = store.where(F.col("id") == "000000000010").collect()
+    assert [r.utm_source for r in resent] == ["resent"]
     assert spark.read.parquet(c.quarantine_path).count() == 1
-    assert spark.read.parquet(c.archive_path).count() == 101
+    assert spark.read.parquet(c.archive_path).count() == 102
+    assert sorted(d for d in os.listdir(c.archive_path) if d.startswith("dt=")) == [
+        "dt=2023-11-14",
+        "dt=2023-11-15",
+    ]
 
 
 def test_empty_file_batch_is_skipped(spark, tmp_path):

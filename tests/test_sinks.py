@@ -1,4 +1,4 @@
-"""Sink tests: partitioned archive layout + upsert replay equivalence with
+"""Sink tests: dt-partitioned archive layout + upsert replay equivalence with
 DuckDB INSERT OR REPLACE (last-wins) / INSERT OR IGNORE (first-wins,
 the reference db.clj:100-134 behavior), recovery of an interrupted store
 swap and the upsert's Spark job budget. Most are slow-marked; the last
@@ -12,7 +12,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from kinesis3_spark.sinks import archive_events, upsert_parquet, write_partitioned
+from kinesis3_spark.sinks import upsert_parquet, write_partitioned
 
 
 def _events(spark, rows):
@@ -55,14 +55,10 @@ def _duck_expected(mode):
 
 @pytest.mark.slow
 @pytest.mark.parametrize("mode", ["replace", "ignore"])
-@pytest.mark.parametrize("parts", [(), ("dt",)])
-def test_upsert_replay_matches_duckdb(spark, tmp_path, mode, parts):
-    path = str(tmp_path / f"t_{mode}_{len(parts)}")
+def test_upsert_replay_matches_duckdb(spark, tmp_path, mode):
+    path = str(tmp_path / f"t_{mode}")
     for rows in (B1, B2):
-        upsert_parquet(
-            spark, _events(spark, rows), path, key="id", order_col="ts",
-            mode=mode, partition_cols=parts,
-        )
+        upsert_parquet(spark, _events(spark, rows), path, key="id", order_col="ts", mode=mode)
     got = {r.id: r.val for r in spark.read.parquet(path).collect()}
     assert got == _duck_expected(mode)
 
@@ -82,9 +78,9 @@ def test_upsert_duplicate_ids_within_batch(spark, tmp_path):
 @pytest.mark.parametrize("mode", ["replace", "ignore"])
 @pytest.mark.parametrize("crash", ["partial_next", "store_moved_away", "both_present"])
 def test_upsert_recovers_from_interrupted_swap(spark, tmp_path, mode, crash):
-    """The unpartitioned upsert swaps a fully written `.__next` in for the
-    table; a crash at any point of that swap must leave a table the next
-    upsert merges into as if nothing had happened."""
+    """The upsert swaps a fully written `.__next` in for the table; a crash
+    at any point of that swap must leave a table the next upsert merges
+    into as if nothing had happened."""
     path = str(tmp_path / "t")
     upsert_parquet(spark, _events(spark, B1), path, key="id", order_col="ts", mode=mode)
     if crash == "partial_next":  # mid-write of the next table: a torn part file
@@ -103,9 +99,9 @@ def test_upsert_recovers_from_interrupted_swap(spark, tmp_path, mode, crash):
 
 
 def test_upsert_into_existing_store_runs_two_jobs(spark, tmp_path):
-    """An unpartitioned merge into an existing table is one write of the
-    merge plan: AQE's map-stage job for the key shuffle plus the write job.
-    No schema-inference read of the table, no materialization before it."""
+    """A merge into an existing table is one write of the merge plan: AQE's
+    map-stage job for the key shuffle plus the write job. No
+    schema-inference read of the table, no materialization before it."""
     path = str(tmp_path / "t")
     upsert_parquet(spark, _events(spark, B1), path, key="id", order_col="ts")
     batch = _events(spark, B2)
@@ -118,26 +114,19 @@ def test_upsert_into_existing_store_runs_two_jobs(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_partitioned_archive_layout(spark, tmp_path):
-    path = str(tmp_path / "arch")
-    df = _events(spark, B1).drop("dt")
-    archive_events(df, path, ts_col="ts")
-    assert sorted(
-        d for d in os.listdir(path) if d.startswith("dt=")
-    ) == ["dt=2024-01-01", "dt=2024-01-02"]
-    # read back with partition pruning: only one directory's files
-    back = spark.read.parquet(path).where(F.col("dt") == "2024-01-01")
-    assert {r.id for r in back.collect()} == {"a", "b"}
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(dt" in plan or "dt#" in plan
-
-
-@pytest.mark.slow
 def test_write_partitioned_append(spark, tmp_path):
     path = str(tmp_path / "app")
     write_partitioned(_events(spark, B1), path)
     write_partitioned(_events(spark, B2), path)
     assert spark.read.parquet(path).count() == 6
+    assert sorted(d for d in os.listdir(path) if d.startswith("dt=")) == [
+        "dt=2024-01-01", "dt=2024-01-02", "dt=2024-01-03"
+    ]
+    # read back with partition pruning: only one directory's files
+    back = spark.read.parquet(path).where(F.col("dt") == "2024-01-01")
+    assert sorted(r.id for r in back.collect()) == ["a", "b", "b"]
+    plan = back._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [isnotnull(dt" in plan or "dt#" in plan
 
 
 @pytest.mark.slow

@@ -1,6 +1,6 @@
-"""Streaming integration tests: landing-dir ingest through the pipeline,
-partitioned streaming archive, and per-batch upsert — the reference's
-collector loop (core.clj) end-to-end in Structured Streaming form."""
+"""Streaming integration tests: the continuous rollup's per-batch keyed
+upsert against the batch answer. The collector's own store and archive
+sinks are covered end to end in test_app.py."""
 
 from __future__ import annotations
 
@@ -9,70 +9,9 @@ import pytest
 pytestmark = pytest.mark.slow  # excluded by the -m 'not slow' quick path
 
 import json
-import os
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from kinesis3_spark.pipeline import ingest
-from kinesis3_spark.streaming import archive_stream, stream_jsonl, upsert_stream
-
-RAW_ONLY = T.StructType([T.StructField("raw", T.StringType())])
-
-
-def _write_landing(tmp_path, name, records):
-    d = tmp_path / name
-    d.mkdir()
-    with open(d / "batch0.jsonl", "w") as f:
-        for r in records:
-            f.write(json.dumps({"raw": r}) + "\n")
-    return str(d)
-
-
-def _raw(i, t_ms, val="x"):
-    body = json.dumps(
-        {"id": f"e{i}", "t": t_ms, "path": f"/p/{val}", "args": {"utm_source": val}}
-    )
-    return json.dumps({"m": "evt", "epoch": t_ms + 5, "body": body})
-
-
-def test_stream_ingest_archive_roundtrip(spark, tmp_path):
-    day1 = 1704103200000  # 2024-01-01T10:00:00Z
-    day2 = day1 + 86400_000
-    landing = _write_landing(
-        tmp_path, "landing", [_raw(1, day1), _raw(2, day1 + 1000), _raw(3, day2)]
-    )
-    out = str(tmp_path / "archive")
-    sdf = ingest(stream_jsonl(spark, landing, RAW_ONLY))
-    sdf = sdf.withColumn("dt", F.substring("ts", 1, 10))
-    q = archive_stream(sdf, out, checkpoint=str(tmp_path / "ck"))
-    q.awaitTermination(120)
-    assert sorted(d for d in os.listdir(out) if d.startswith("dt=")) == [
-        "dt=2024-01-01",
-        "dt=2024-01-02",
-    ]
-    back = spark.read.parquet(out)
-    assert back.count() == 3
-    assert {r.utm_source for r in back.select("utm_source").collect()} == {"x"}
-
-
-def test_stream_upsert_foreachbatch(spark, tmp_path):
-    t0 = 1704103200000
-    # same id delivered twice: the newer event time must win (LWW)
-    landing = _write_landing(
-        tmp_path, "landing2",
-        [_raw(1, t0, "old"), _raw(1, t0 + 60_000, "new"), _raw(2, t0, "b")],
-    )
-    target = str(tmp_path / "tbl")
-    sdf = ingest(stream_jsonl(spark, landing, RAW_ONLY)).select(
-        "id", "ts", "path", "utm_source"
-    )
-    q = upsert_stream(
-        sdf, target, checkpoint=str(tmp_path / "ck2"), key="id", order_col="ts"
-    )
-    q.awaitTermination(120)
-    got = {r.id: r.utm_source for r in spark.read.parquet(target).collect()}
-    assert got == {"e1": "new", "e2": "b"}
 
 
 def test_continuous_rollup_matches_batch(spark, tmp_path):
