@@ -48,15 +48,6 @@ def portable_hash60(col) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
-def portable_hash60_py(s: str) -> int:
-    """Driver-side twin of portable_hash60 for bounded metadata (e.g.
-    recomputing a key's txn bucket in tests) — must track the Column
-    form exactly."""
-    import hashlib
-
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-
-
 # --------------------------------------------------------------------------
 # Exact dedup
 # --------------------------------------------------------------------------

@@ -1724,17 +1724,13 @@ def source_txntable_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     a Spark 4 Python Data Source (sources/txn_datasource.py) over the
     manifest layout, sharing the DV-table build with
     `txn_deletion_vector_read` so THIS row certifies the alternate scan
-    engine on the same truth: planning diffs manifests on the driver,
+    engine on the same truth: planning reads the manifest on the driver,
     each file is one InputPartition read executor-side with pyarrow and
     yielded as Arrow record batches (vectorized, never through the
     driver), deletion-vector positions dropped per partition, evolved
     columns NULL-backfilled before the schema cast. Parity vs the same
     NOT(predicate) oracle as the read_snapshot row means the two scan
-    paths agree row-for-row. The STREAMING half (incremental manifest-
-    epoch offsets, Delta's append-only contract with ignoreChanges /
-    ignoreDeletes) is pinned in tests/test_txn_datasource.py — a
-    checkpointed drain is stateful across calls, so it stays pytest-side
-    like the other streaming-infra rows."""
+    paths agree row-for-row."""
     from ..sources.txn_datasource import TxnTableDataSource
 
     spark.dataSource.register(TxnTableDataSource)

@@ -101,6 +101,12 @@ def tune(spark: SparkSession) -> SparkSession:
         try:
             spark.conf.set(k, v)
         except Exception:
-            pass  # static conf on this build — builder path already set it
+            # static conf on this build — the builder path already set it
+            # on sessions we create; on a foreign session it stays unset
+            import logging
+
+            logging.getLogger(__name__).warning(
+                "could not set %s on this session", k, exc_info=True
+            )
     spark._kinesis3_tuned = True
     return spark

@@ -43,20 +43,15 @@ safety needs no locking because every attempt writes into its own
 uuid-suffixed ``snap-<epoch>-<nonce>/`` directory — a losing attempt's
 files are unreferenced garbage for vacuum, never a torn table. The
 vacuum/writer interaction is MACHINE-CHECKED (round 10; staging gap
-closed round 11): every commit — including the DataSource batch
-writer's, whose lease now spans staging through publish rather than
-only the manifest claim — heartbeats a lease file under ``_leases/``
-for its duration, and vacuum refuses to run destructively while an
-unexpired lease exists (``force=True`` overrides; crashed writers'
-leases expire after _LEASE_TTL_SECONDS) — reaping a versioned manifest
-re-opens its epoch number to exclusive create, so the old rule "don't
-vacuum concurrently with stalled writers" is now enforced, not just
-documented; the commit additionally re-checks the current pointer
-after claiming to shrink the window a forced vacuum would leave. The
-one deliberate exception: a STREAMING txntable writer holds no
-stream-lifetime lease (that would wedge vacuum, not delay it) — its
-micro-batch staging rides the orphan grace, kept fresh by task-side
-and pre-publish touches.
+closed round 11): every commit heartbeats a lease file under
+``_leases/`` for its duration, and vacuum refuses to run
+destructively while an unexpired lease exists (``force=True``
+overrides; crashed writers' leases expire after _LEASE_TTL_SECONDS) —
+reaping a versioned manifest re-opens its epoch number to exclusive
+create, so the old rule "don't vacuum concurrently with stalled
+writers" is now enforced, not just documented; the commit
+additionally re-checks the current pointer after claiming to shrink
+the window a forced vacuum would leave.
 
 LOCAL-FILESYSTEM ASSUMPTION: every safety argument above rests on
 POSIX-local primitives — O_CREAT|O_EXCL exclusive create, atomic
@@ -983,15 +978,6 @@ def commit_snapshot(
     # generated column added later would disagree with existing rows);
     # computed when absent, validated when supplied, logical namespace
     gcols = _generated(man) if man is not None else dict(generated_cols or {})
-    if man is None and gcols:
-        # FIRST registration of generated columns: refuse expressions the
-        # two enforcement engines (Spark sinks path, DuckDB DS write task)
-        # would evaluate differently — once committed, a divergent
-        # expression silently forks the table's contents by write path
-        # (ADVICE r12 medium; see probe_expression_portability).
-        probe_expression_portability(
-            merged.sparkSession, merged.schema, gcols, "generated column"
-        )
     merged = _apply_generated(merged, gcols)
     gcons = _gen_constraints(man)
     if gcons:
@@ -1066,10 +1052,10 @@ def _finish_commit(
                 {
                     "path": rel,
                     "bucket": int(part_dir.split("=", 1)[1]),
-                    # file size: drives bin-packing compaction and the
-                    # stream's maxBytesPerTrigger admission — harvested
-                    # from the walk this loop already does (entries from
-                    # pre-r9 manifests lack it; consumers tolerate)
+                    # file size: drives bin-packing compaction —
+                    # harvested from the walk this loop already does
+                    # (entries from pre-r9 manifests lack it;
+                    # consumers tolerate)
                     "bytes": os.path.getsize(os.path.join(root, f)),
                     # row count from the same footer open (Delta's
                     # stats.numRecords — what makes COUNT(*) a manifest
@@ -1201,7 +1187,13 @@ def _publish_manifest(
             try:
                 write_checkpoint(path)
             except Exception:
-                pass
+                import logging
+
+                logging.getLogger(__name__).warning(
+                    "checkpoint of %s at epoch %d failed; the commit "
+                    "stands and walks stay on the older checkpoint",
+                    path, epoch, exc_info=True,
+                )
     finally:
         _release_lease(_lease)
 
@@ -2408,7 +2400,7 @@ def table_history(path: str) -> list[dict]:
     ``{"epoch", "operation", "params", "ts", "n_files"}``. Every epoch
     publisher stamps its commit with an operation record (APPEND /
     UPSERT / MERGE / DELETE / OPTIMIZE / RESTORE / RENAME COLUMN /
-    DROP COLUMN / ADD CONSTRAINT / CLONE / WRITE), so the table explains
+    DROP COLUMN / ADD CONSTRAINT / CLONE), so the table explains
     its own lineage without external logging — Delta's DESCRIBE HISTORY
     on the manifest log. Pure driver metadata; with a consolidated
     checkpoint present (write_checkpoint — published every
@@ -2468,168 +2460,6 @@ def epoch_as_of(path: str, timestamp: str) -> int:
     )
 
 
-def _probe_rows_for(schema) -> list[dict]:
-    """Representative probe rows per column type — the values chosen to
-    EXPOSE the known Spark↔DuckDB scalar divergences (half-way doubles for
-    round-vs-truncate CASTs, non-numeric strings for NULL-vs-error CASTs,
-    zeros for division, leap-day temporals, NULLs everywhere)."""
-    import datetime as dt
-    from decimal import Decimal
-
-    from pyspark.sql import types as st
-
-    def vals(f):
-        t = f.dataType
-        if isinstance(t, (st.ByteType, st.ShortType, st.IntegerType, st.LongType)):
-            return [None, 0, 1, -7, 100, 3]
-        if isinstance(t, (st.FloatType, st.DoubleType)):
-            return [None, 0.0, 0.5, 1.5, -2.5, 2.5, 0.1]
-        if isinstance(t, st.DecimalType):
-            q = Decimal(1).scaleb(-t.scale)
-            return [None, Decimal(0).quantize(q), Decimal(1).quantize(q)]
-        if isinstance(t, st.StringType):
-            return [None, "", "x", "123", "1.5", "2021-02-30"]
-        if isinstance(t, st.BooleanType):
-            return [None, True, False]
-        if isinstance(t, st.TimestampType):
-            return [
-                None,
-                dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc),
-                dt.datetime(2024, 2, 29, 23, 59, 59, tzinfo=dt.timezone.utc),
-            ]
-        if isinstance(t, st.DateType):
-            return [None, dt.date(1970, 1, 1), dt.date(2024, 2, 29)]
-        return [None]  # containers/binary: NULL-only (portable subset)
-
-    per_col = {f.name: vals(f) for f in schema.fields}
-    n = max((len(v) for v in per_col.values()), default=1) * 2
-    return [
-        {c: v[(i + j) % len(v)] for j, (c, v) in enumerate(per_col.items())}
-        for i in range(n)
-    ]
-
-
-def _probe_norm(v):
-    """Normalize one scalar for cross-engine comparison (tz-aware → naive
-    UTC; NaN sentinel so NaN==NaN)."""
-    import datetime as dt
-    import math
-
-    if isinstance(v, float) and math.isnan(v):
-        return "__nan__"
-    if isinstance(v, dt.datetime) and v.tzinfo is not None:
-        return v.astimezone(dt.timezone.utc).replace(tzinfo=None)
-    return v
-
-
-def probe_expression_portability(
-    spark: SparkSession, schema, exprs: dict[str, str], what: str
-) -> None:
-    """Differential-probe SQL expressions against BOTH enforcement engines
-    before they are committed to a manifest (ADVICE r12 medium): the sinks
-    path evaluates generated columns / CHECK constraints with Spark SQL,
-    the Python-DataSource write task evaluates them with DuckDB over the
-    staged Arrow batch, and the DS writer's empty-batch dry-compile only
-    refuses what DuckDB cannot COMPILE — not expressions that compile in
-    both engines with DIFFERENT semantics (CAST(double AS INT) rounds in
-    DuckDB, truncates in non-ANSI Spark; CAST('x' AS INT) is NULL in Spark,
-    an error in DuckDB). A table committed with such an expression would
-    silently accumulate rows whose generated values differ by write path.
-
-    Policy, evaluated over _probe_rows_for's divergence-exposing values:
-      * DuckDB cannot COMPILE the expression (empty batch) → registration
-        is ALLOWED: the table is declared Spark-only and the DS writer
-        already refuses it loudly at plan time (no silent path exists).
-      * DuckDB compiles; then any probe divergence — differing values,
-        or one engine erroring on values the other accepts — REFUSES the
-        registration with the first offending expression named.
-    The probe rows cover each scalar type's known divergence triggers, not
-    the full value domain — a deliberately portable expression that
-    diverges only on values outside the probe set is out of scope and
-    documented as such."""
-    if not exprs:
-        return
-    import duckdb
-
-    from pyspark.sql.types import StructField, StructType
-
-    # probe over an all-NULLABLE copy: NULL is one of the divergence
-    # probes, and a committed non-nullable field (e.g. the key) would
-    # refuse the probe frame itself, not the expression
-    nullable = StructType(
-        [StructField(f.name, f.dataType, True) for f in schema.fields]
-    )
-    # carry an explicit row id through BOTH evaluations: the comparison
-    # zips per-row values, and neither collect() nor a parallelized DuckDB
-    # Arrow scan guarantees the probe frame's insertion order (ADVICE r13)
-    from pyspark.sql.types import LongType
-
-    rid_schema = StructType(
-        list(nullable.fields) + [StructField("__probe_rid", LongType(), False)]
-    )
-    rid_rows = [
-        {**r, "__probe_rid": i}
-        for i, r in enumerate(_probe_rows_for(nullable))
-    ]
-    sdf = spark.createDataFrame(rid_rows, rid_schema)
-    tbl = sdf.toArrow()  # the exact Arrow shape the DS write task stages
-    con = duckdb.connect()
-    try:
-        con.sql("SET TimeZone='UTC'")  # the task-side evaluator's pin
-        con.register("probe0", tbl.schema.empty_table())
-        con.register("probe", tbl)
-        for name, x in sorted(exprs.items()):
-            try:
-                con.sql(f"SELECT ({x}) AS v FROM probe0").fetchall()
-            except Exception:
-                continue  # Spark-only expression: DS dry-compile refuses it
-            s_err = d_err = None
-            try:
-                s_rows = sdf.selectExpr(
-                    f"({x}) AS v", "__probe_rid"
-                ).collect()
-                s_vals = [
-                    _probe_norm(r.v)
-                    for r in sorted(s_rows, key=lambda r: r["__probe_rid"])
-                ]
-            except Exception as exc:
-                s_err = exc
-            try:
-                d_vals = [
-                    _probe_norm(r[0])
-                    for r in con.sql(
-                        f"SELECT ({x}) AS v FROM probe ORDER BY __probe_rid"
-                    ).fetchall()
-                ]
-            except Exception as exc:
-                d_err = exc
-            if s_err is not None and d_err is not None:
-                continue  # neither engine evaluates it: loud on every path
-            if (s_err is None) != (d_err is None):
-                eng = "DuckDB (task-side)" if d_err else "Spark (sinks-side)"
-                raise ValueError(
-                    f"non-portable {what} {name!r} ({x!r}): {eng} errors on "
-                    f"values the other engine accepts "
-                    f"({(d_err or s_err)!s:.120}); rewrite with portable "
-                    "scalars (try_cast/floor/round/CASE) or enforce via the "
-                    "sinks path only"
-                )
-            diffs = [
-                (a, b) for a, b in zip(s_vals, d_vals) if a != b
-            ]
-            if diffs:
-                raise ValueError(
-                    f"non-portable {what} {name!r} ({x!r}): Spark and the "
-                    f"task-side DuckDB evaluator disagree on probe values "
-                    f"(first diff: spark={diffs[0][0]!r} vs "
-                    f"duckdb={diffs[0][1]!r}); rewrite with portable scalars "
-                    "(explicit floor/round before integer casts, try_cast "
-                    "for lossy string casts)"
-                )
-    finally:
-        con.close()
-
-
 def add_constraint(path: str, name: str, condition: str) -> int:
     """Attach a named CHECK constraint (Delta column invariants /
     ``ALTER TABLE ADD CONSTRAINT``): a SQL boolean expression every
@@ -2638,21 +2468,8 @@ def add_constraint(path: str, name: str, condition: str) -> int:
     commit before anything publishes. Enforcement is on the batch being
     written (one distributed filter per commit), never a retro-scan of
     the table; existing rows are not revalidated, same as Delta's ADD
-    CONSTRAINT default on history. Metadata-only commit under OCC.
-
-    Before committing, the condition is differential-probed across the
-    two enforcement engines (Spark sinks path vs the DS write task's
-    DuckDB evaluator) and refused if they disagree on representative
-    values — see probe_expression_portability (ADVICE r12 medium). Probe
-    needs a live session; a driver without one (not a supported usage)
-    degrades to the prior compile-only behavior."""
-    man0 = read_manifest(path)
-    assert man0 is not None, f"no committed table at {path}"
-    spark = SparkSession.getActiveSession()
-    if spark is not None:
-        probe_expression_portability(
-            spark, _logical_struct(man0), {name: condition}, "constraint"
-        )
+    CONSTRAINT default on history. Metadata-only commit under OCC; Spark
+    SQL (_enforce_constraints) is the one evaluator."""
     last: CommitConflict | None = None
     for _attempt in range(5):
         man = read_manifest(path)

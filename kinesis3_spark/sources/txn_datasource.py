@@ -1,31 +1,22 @@
-"""The manifest txn table as a Spark 4 Python Data Source.
+"""The manifest txn table as a Spark 4 Python Data Source (batch read).
 
-``spark.read.format("txntable")`` and ``spark.readStream.format
-("txntable")`` over a `sinks/txn.py` table, after
-``spark.dataSource.register(TxnTableDataSource)``. This closes the
-medallion loop: `append_manifest_stream` writes bronze epochs
-exactly-once, and this source lets the NEXT hop (silver) read those
-epochs INCREMENTALLY as a stream — Delta's streaming-source semantic
-(each micro-batch = the files new manifest epochs added), re-expressed
-through pyspark.sql.datasource (public API, Spark 4).
+``spark.read.format("txntable").load(path)`` over a `sinks/txn.py`
+table, after ``spark.dataSource.register(TxnTableDataSource)``; SQL
+reaches it through ``CREATE TEMPORARY VIEW ... USING txntable``. The
+options are ``path``, ``epoch`` (time travel to a retained version) and
+``pushdown`` (Catalyst file skipping, see _TxnBatchReaderPushdown).
+Writes go through `sinks/txn.py` (``commit_snapshot`` and the
+``*_manifest_stream`` foreachBatch sinks), never through this source.
 
-Scale shape: the driver touches only MANIFESTS (offsets are epoch
-numbers; planning diffs two file lists); each InputPartition is one
-data file, read executor-side with pyarrow and yielded as Arrow record
-batches (the vectorized path — never row-at-a-time tuples, never
+Scale shape: the driver touches only the MANIFEST; each InputPartition
+is one data file, read executor-side with pyarrow and yielded as Arrow
+record batches (the vectorized path — never row-at-a-time tuples, never
 through the driver). Deletion-vector positions are dropped
 executor-side per partition; schema-evolved files NULL-backfill to the
 manifest schema before the cast, same contract as read_snapshot.
 
-Streaming reads are APPEND-ONLY by default, exactly like Delta: a file
-that disappears between epochs (upsert/compaction rewrote it) raises
-unless ``ignoreChanges=true``, and a deletion vector added to an
-already-streamed file raises unless ``ignoreDeletes=true`` — changed
-history cannot be replayed as an append stream, and silently emitting
-rewritten files would double-count merged rows.
-
 Reference: the collector's archive re-read path (src/kinesis3/
-core.clj:153) generalized to an incremental table-history read.
+core.clj:153) generalized to a snapshot read of the txn table.
 """
 
 from __future__ import annotations
@@ -34,22 +25,14 @@ import json
 import os
 from typing import Iterator, Sequence
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
-from ..sinks.txn import ProtocolUnsupported, read_manifest
+from ..sinks.txn import read_manifest
 
 
 def _norm_path(options: dict) -> str:
-    """The table root from reader/writer options. SQL DDL (``CREATE
+    """The table root from the reader options. SQL DDL (``CREATE
     TABLE ... USING txntable OPTIONS (path ...)``) normalizes the path
     to a ``file:`` URI while ``load(path)`` passes it verbatim — accept
     both (local filesystem only, like the rest of the manifest code)."""
@@ -62,10 +45,7 @@ def _norm_path(options: dict) -> str:
 
 
 class _FileSlice(InputPartition):
-    """One data file (+ its dv sidecar refs) shipped to an executor.
-    ``kind`` drives change-feed reads: "scan" yields live rows, "insert"
-    the same plus a _change_type column, "delete" the rows at the
-    positions the dv refs name (a newly-deleted slice)."""
+    """One data file (+ its dv sidecar refs) shipped to an executor."""
 
     def __init__(
         self,
@@ -73,14 +53,12 @@ class _FileSlice(InputPartition):
         rel: str,
         dv: list[str],
         schema_json: str,
-        kind: str = "scan",
         l2p: dict[str, str] | None = None,
     ):
         self.root = root
         self.rel = rel
         self.dv = dv
         self.schema_json = schema_json
-        self.kind = kind
         # column mapping: files store PHYSICAL names; the target schema
         # (and every consumer) speaks logical
         self.l2p = l2p or {}
@@ -118,25 +96,14 @@ def _read_slice(part: _FileSlice | None):
     positions = (
         np.concatenate(dead) if dead else np.empty(0, dtype=np.int64)
     )
-    if part.kind == "delete":
-        # change feed: the rows these NEW dv refs just deleted
-        tbl = tbl.take(pa.array(np.sort(positions), type=pa.int64()))
-    elif positions.size:
+    if positions.size:
         # vectorized survivor selection — no per-row Python loop
         alive = np.ones(tbl.num_rows, dtype=bool)
         alive[positions[positions < tbl.num_rows]] = False
         tbl = tbl.filter(pa.array(alive))
     cols = []
     for field in target:
-        if field.name == "_change_type":
-            cols.append(
-                pa.array(
-                    ["insert" if part.kind == "insert" else "delete"]
-                    * tbl.num_rows,
-                    type=field.type,
-                )
-            )
-        elif part.l2p.get(field.name, field.name) in tbl.column_names:
+        if part.l2p.get(field.name, field.name) in tbl.column_names:
             cols.append(tbl[part.l2p.get(field.name, field.name)])
         else:
             cols.append(pa.nulls(tbl.num_rows, type=field.type))
@@ -162,15 +129,6 @@ class _TxnBatchReader(DataSourceReader):
     ):
         self.path = _norm_path(options)
         self.schema_json = schema_json
-        if str(options.get("readchangefeed", "false")).lower() == "true":
-            # the change feed is a STREAMING read (epoch-diff offsets);
-            # a batch scan has no epoch range to diff, and silently
-            # labeling live rows with a change type would be wrong data
-            raise ValueError(
-                "txntable: readChangeFeed requires readStream (a batch "
-                "read has no epoch range to diff); use "
-                "spark.readStream.format('txntable')"
-            )
         if man is None:
             # standalone construction (tests): one read, self-consistent
             ep = options.get("epoch")
@@ -271,876 +229,10 @@ class _TxnBatchReaderPushdown(_TxnBatchReader):
         return self._push_filters(filters)
 
 
-class _TxnStreamReader(DataSourceStreamReader):
-    """Offsets are manifest epochs; a micro-batch is the files the
-    epochs in (start, end] ADDED. Planning is manifest-diff only.
-
-    COLUMN MAPPING: the stream presents the logical view PINNED at
-    reader construction (the same manifest read that produced
-    ``schema_json``), and because renames/drops are metadata-only —
-    physical column names in data files never change — that one pinned
-    logical→physical mapping translates EVERY batch, no matter how the
-    mapping evolves inside the streamed range: a column renamed
-    mid-stream keeps flowing under its pinned name (same physical), a
-    column dropped mid-stream NULL-backfills on files written after the
-    drop (the physical column stops being written), and columns added
-    mid-stream are ignored until a restart. On restart the reader
-    re-pins to the CURRENT logical view and replayed ranges translate
-    consistently through the same stable physical identities — the
-    refusal this replaces (raise on any mid-range mapping change) made
-    every rename a stream-killer for no data-integrity reason."""
-
-    def __init__(
-        self, options: dict, schema_json: str, man: dict | None = None
-    ):
-        self.path = _norm_path(options)
-        self.schema_json = schema_json
-        if man is None:  # standalone construction (tests)
-            man = read_manifest(self.path)
-        self.l2p = dict((man or {}).get("column_mapping") or {})
-        self.ignore_changes = (
-            str(options.get("ignorechanges", "false")).lower() == "true"
-        )
-        self.ignore_deletes = (
-            str(options.get("ignoredeletes", "false")).lower() == "true"
-        ) or self.ignore_changes
-        self.cdf = (
-            str(options.get("readchangefeed", "false")).lower() == "true"
-        )
-        start = options.get("startingepoch")
-        self._initial = {"epoch": int(start) if start is not None else 0}
-        mft = options.get("maxfilespertrigger")
-        # Delta's streaming rate limit: cap how many CHANGED FILE SLICES
-        # one micro-batch admits (new files + dv-grew entries + removed
-        # entries — a catch-up dominated by deletes is as scan-heavy as
-        # one dominated by appends; ADVICE r9), so a stream catching up
-        # over a large table history plans bounded batches instead of
-        # one giant one. The Python DS API has no admission-control hook
-        # (latestOffset takes no start offset), so the reader tracks its
-        # own position: fresh streams are limited from the first batch
-        # (initialOffset pins the cursor); a CHECKPOINT RESTART recovers
-        # the cursor from the engine's replay of the checkpointed range
-        # — measured on 4.1.2 (tools/probe_ds_restart.py, output
-        # recorded in that file, r10):
-        # restart calls partitions(start, end) with the checkpointed
-        # offsets BEFORE the first latestOffset, and commit(end) follows
-        # — both recover the cursor, so the first post-restart batch is
-        # bounded too (pinned in tests/test_txn_datasource.py). Only a
-        # latestOffset arriving before ANY partitions/commit call (not
-        # observed on 4.1.2) would fall back to unbounded — a
-        # degradation, never a correctness change (the limit only
-        # splits batches).
-        self.max_files = int(mft) if mft is not None else None
-        mbt = options.get("maxbytespertrigger")
-        # byte budget over the manifest's commit-time size harvest;
-        # entries from pre-size manifests count 0 (admit) — a declared
-        # degradation, never a correctness change
-        self.max_bytes = int(mbt) if mbt is not None else None
-        # opt-in strict mode (ADVICE r9): restore the upstream Delta
-        # rule — fail the stream when the column mapping changes inside
-        # the streamed range, for consumers that schema-sync downstream
-        # sinks and need renames to be loud. Default stays the pinned-
-        # mapping lift (renames absorbed, restart re-pins).
-        self.fail_on_mapping_change = (
-            str(options.get("failonmappingchange", "false")).lower()
-            == "true"
-        )
-        self._cursor: int | None = None
-
-    def initialOffset(self) -> dict:
-        self._cursor = self._initial["epoch"]
-        return dict(self._initial)
-
-    def latestOffset(self) -> dict:
-        man = read_manifest(self.path)
-        latest = man["epoch"] if man else 0
-        if self.max_files is None and self.max_bytes is None:
-            return {"epoch": latest}
-        if self._cursor is None:
-            # measured 4.1.2 call order: a FRESH stream's first engine
-            # call is latestOffset (initialOffset follows it), while a
-            # checkpoint RESTART replays the checkpointed range through
-            # partitions()/commit() before reaching here — so a None
-            # cursor means fresh, and admission starts from the
-            # configured start epoch. (r9 pinned the cursor only in
-            # initialOffset, which the engine calls too late: the first
-            # batch planned unbounded in-engine.)
-            self._cursor = self._initial["epoch"]
-        return {"epoch": self._capped_end(self._cursor, latest)}
-
-    def _capped_end(self, cursor: int, latest: int) -> int:
-        """The furthest epoch in (cursor, latest] whose cumulative
-        changed-slice count / new-byte total stays within the budgets —
-        always admitting at least one epoch so the stream can never
-        stall. A slice is a NEW file, a file whose deletion vectors
-        GREW, or a REMOVED file (each becomes one unit of planning/scan
-        work downstream — counting only fresh files let delete- or
-        compaction-dominated catch-ups plan unbounded batches; ADVICE
-        r9). Walks manifest diffs (driver metadata only); epochs
-        outside vacuum retention fall back to unbounded (their diff is
-        unknowable, and a capped replay over reaped history would raise
-        anyway)."""
-        if latest <= cursor:
-            return latest
-        try:
-            # the walk resumes from a per-instance cache of the last
-            # returned epoch's {path: n_dv_refs} map: a catch-up over n
-            # epochs costs O(n) manifest reads across ALL triggers, not
-            # O(n) per trigger / O(n^2) total (review r9 #5)
-            cached = getattr(self, "_fs_cache", None)
-            if cached is not None and cached[0] == cursor:
-                prev = cached[1]
-            elif cursor == 0:
-                prev = {}
-            else:
-                prev = {
-                    e["path"]: len(e.get("dv", []))
-                    for e in read_manifest(self.path, cursor)["files"]
-                }
-            n_slices = n_bytes = 0
-            end = cursor
-            for ep in range(cursor + 1, latest + 1):
-                ents = read_manifest(self.path, ep)["files"]
-                fresh = [e for e in ents if e["path"] not in prev]
-                cur = {e["path"]: len(e.get("dv", [])) for e in ents}
-                dv_grew = sum(
-                    1 for p, n in cur.items()
-                    if p in prev and n > prev[p]
-                )
-                removed = sum(1 for p in prev if p not in cur)
-                n_slices += len(fresh) + dv_grew + removed
-                n_bytes += sum(e.get("bytes") or 0 for e in fresh)
-                over = (
-                    self.max_files is not None
-                    and n_slices > self.max_files
-                ) or (
-                    self.max_bytes is not None and n_bytes > self.max_bytes
-                )
-                if over and end > cursor:
-                    break
-                end, prev = ep, cur
-            self._fs_cache = (end, prev)
-            return end
-        except ProtocolUnsupported:
-            raise  # future-writer epoch in range: fail loudly, never skip
-        except ValueError:
-            return latest  # history outside retention: no diff to count
-
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        man_a = (
-            read_manifest(self.path, start["epoch"])
-            if start["epoch"]
-            else None
-        )
-        man_b = (
-            read_manifest(self.path, end["epoch"]) if end["epoch"] else None
-        )
-        # translation uses the PINNED mapping from reader construction —
-        # see the class docstring: physical names are immutable, so the
-        # pinned logical→physical pairs stay valid across any rename or
-        # drop committed inside the streamed range
-        l2p = self.l2p
-        # position for the rate limit: the engine's own start/end are
-        # authoritative (checkpoint restarts hand us a start the cursor
-        # never saw — measured on 4.1.2, restart replays the
-        # checkpointed range here BEFORE the first latestOffset, so
-        # this recovery is what bounds the post-restart batch)
-        self._cursor = max(self._cursor or 0, start["epoch"], end["epoch"])
-        if end["epoch"] < start["epoch"]:
-            # inverted range: only reachable if a rate-limited
-            # latestOffset ever under-shot a checkpointed start — which
-            # requires an engine that calls latestOffset on restart
-            # BEFORE any partitions()/commit() replay (not the measured
-            # 4.1.2 order, pinned in tests/test_txn_datasource.py). An
-            # inverted range ADDS nothing; empty batch, and the cursor
-            # bump above resynchronizes the next offset. RESIDUAL on
-            # such a hypothetical engine: the offset log records the
-            # under-shot end, so the following batch re-plans from it
-            # and epochs delivered before the restart are re-emitted
-            # once (at-least-once for that batch, self-healing after) —
-            # acceptable for the merge/upsert consumers this source
-            # feeds, and loud failure here would wedge the stream on
-            # replay instead (the offset is already checkpointed).
-            return []
-        if self.fail_on_mapping_change and man_b is not None:
-            # EVERY epoch in the range is checked, not just the end —
-            # an A->B->A rename round-trip inside one catch-up batch
-            # must still fail (Delta fails on the change commit itself;
-            # review r10 #5). The comparison BASELINE is the mapping at
-            # the range's START epoch, not the mapping pinned at reader
-            # init (ADVICE r10: the init mapping is the LATEST manifest's,
-            # so a rename committed while the stream was offline — outside
-            # the replayed range — false-failed the restart with an error
-            # claiming the change happened inside the range). Reaped
-            # history falls back to the first readable epoch's mapping:
-            # mappings of epochs outside vacuum retention are unknowable.
-            baseline: dict | None = None
-            if start["epoch"]:
-                baseline = dict(
-                    (man_a or {}).get("column_mapping") or {}
-                ) if man_a is not None else None
-            for ep in range(start["epoch"] + 1, end["epoch"] + 1):
-                try:
-                    m = read_manifest(self.path, ep)
-                except ProtocolUnsupported:
-                    # review r11 #2: a protocol-refused epoch is NOT
-                    # reaped history — swallowing it would absorb a
-                    # rename committed by a newer writer
-                    raise
-                except ValueError:
-                    continue  # reaped history: no mapping to compare
-                live = dict((m or {}).get("column_mapping") or {})
-                if baseline is None:
-                    baseline = live
-                    continue
-                if live != baseline:
-                    raise ValueError(
-                        f"txntable stream over {self.path}: column "
-                        f"mapping changed inside the streamed range "
-                        f"(epoch {start['epoch']} baseline "
-                        f"{sorted(baseline.items())} vs epoch "
-                        f"{ep} {sorted(live.items())}) and "
-                        "failOnMappingChange=true — restart the stream "
-                        "from a fresh checkpoint to re-pin the mapping "
-                        "(upstream Delta's rename rule)"
-                    )
-        a = {e["path"]: e for e in man_a["files"]} if man_a else {}
-        b = {e["path"]: e for e in man_b["files"]} if man_b else {}
-        removed = sorted(set(a) - set(b))
-        if removed and not self.ignore_changes:
-            raise ValueError(
-                f"txntable stream over {self.path}: epoch "
-                f"{start['epoch']}→{end['epoch']} REWROTE files (e.g. "
-                f"{removed[0]}) — an upsert/compaction history is not an "
-                "append stream; set ignoreChanges=true to emit only newly "
-                "added files (downstream must tolerate re-merged rows)"
-            )
-        dv_grew = {
-            rel: [
-                r
-                for r in b[rel].get("dv", [])
-                if r not in set(a[rel].get("dv", []))
-            ]
-            for rel in set(a) & set(b)
-            if len(b[rel].get("dv", [])) > len(a[rel].get("dv", []))
-        }
-        if dv_grew and not (self.cdf or self.ignore_deletes):
-            raise ValueError(
-                f"txntable stream over {self.path}: deletion vectors were "
-                f"added to already-streamed files (e.g. "
-                f"{sorted(dv_grew)[0]}) — deletes cannot be replayed as "
-                "appends; set ignoreDeletes=true to skip them, or "
-                "readChangeFeed=true to consume them as delete rows"
-            )
-        # New files stream with the dv refs they ALREADY CARRY applied
-        # (initial-snapshot semantics): a file first seen with deletion
-        # vectors — a fresh stream from epoch 0 over a table with
-        # delete_where history, or a catch-up range spanning the add AND
-        # the delete — was deleted-from at or before the end offset, so
-        # emitting those positions would replay dead rows as live/insert
-        # rows (ADVICE r8). Positions deleted AFTER this window land in
-        # later offsets' dv_grew diffs as before.
-        out: list[InputPartition] = [
-            _FileSlice(
-                self.path, rel, b[rel].get("dv", []), self.schema_json,
-                kind="insert" if self.cdf else "scan", l2p=l2p,
-            )
-            for rel in sorted(set(b) - set(a))
-        ]
-        if self.cdf:
-            # change feed: each file's NEWLY-added sidecars name exactly
-            # the rows this window deleted (delete_where computes on the
-            # dv-applied snapshot, so new sidecars never repeat an
-            # already-deleted position) — emitted as delete rows,
-            # join-free per partition.
-            out.extend(
-                _FileSlice(self.path, rel, refs, self.schema_json,
-                           kind="delete", l2p=l2p)
-                for rel, refs in sorted(dv_grew.items())
-            )
-        return out
-
-    def read(self, partition: _FileSlice) -> Iterator:
-        return _read_slice(partition)
-
-    def commit(self, end: dict) -> None:
-        # second cursor-recovery path for the rate limit: on restart
-        # the engine acks the checkpointed batch here; harmless when
-        # partitions() already advanced past it.
-        self._cursor = max(self._cursor or 0, end["epoch"])
-
-    def stop(self) -> None:
-        pass
-
-
-def _qq(name: str) -> str:
-    """Double-quote an identifier for the task-side SQL evaluator."""
-    return '"' + name.replace('"', '""') + '"'
-
-
-def _enforce_arrow(tbl, generated_cols: dict, constraints: dict):
-    """Generated-column compute/validate + CHECK enforcement over one
-    staged Arrow batch — the task-side twin of sinks/txn's
-    _apply_generated + _enforce_constraints, evaluated with DuckDB
-    (vectorized C++ over the batch, zero-copy from Arrow):
-
-      * a generated column the batch OMITS is computed;
-      * one it SUPPLIES is validated null-safely against the expression
-        (IS DISTINCT FROM — any mismatch fails the task, so commit()
-        never publishes);
-      * constraints bind AFTER compute (they may reference generated
-        columns) with SQL CHECK semantics — NULL passes.
-
-    Returns the (possibly extended) Arrow table with computed columns
-    appended in sorted-name order. Raises ValueError with the sinks
-    paths' exact message shapes on violations; any evaluator error
-    propagates for the plan-time dry-compile to turn into a refusal."""
-    import duckdb
-
-    con = duckdb.connect()
-    try:
-        # Pin the evaluator's zone to UTC (review r12 #1, repro'd): the
-        # Arrow schema maps Spark timestamps to timestamp(us, tz=UTC),
-        # which DuckDB treats as TIMESTAMPTZ and LOCALIZES with its
-        # TimeZone setting — defaulting to the HOST zone, where
-        # CAST(ts AS DATE) would disagree with the Spark sinks path
-        # (session.py pins spark.sql.session.timeZone=UTC) on any
-        # non-UTC machine.
-        con.sql("SET TimeZone='UTC'")
-        con.register("batch", tbl)
-        incoming = list(tbl.column_names)
-        missing = [n for n in sorted(generated_cols) if n not in incoming]
-        sel = ", ".join(
-            [f"batch.{_qq(c)}" for c in incoming]
-            + [f"({generated_cols[n]}) AS {_qq(n)}" for n in missing]
-        )
-        con.sql(f"CREATE TEMP VIEW ext AS SELECT {sel} FROM batch")
-        checks, labels = [], []
-        for name, x in sorted(generated_cols.items()):
-            if name in incoming:
-                checks.append(
-                    f"count(*) FILTER (WHERE {_qq(name)} IS DISTINCT "
-                    f"FROM ({x}))"
-                )
-                labels.append(("gen", name))
-        for name, cond in sorted(constraints.items()):
-            checks.append(
-                f"count(*) FILTER (WHERE NOT coalesce(({cond}), TRUE))"
-            )
-            labels.append(("chk", name))
-        if checks:
-            row = con.sql("SELECT " + ", ".join(checks) + " FROM ext").fetchone()
-            gen_bad = {
-                n: c for (k, n), c in zip(labels, row) if k == "gen" and c
-            }
-            chk_bad = {
-                n: c for (k, n), c in zip(labels, row) if k == "chk" and c
-            }
-            if gen_bad:
-                detail = ", ".join(
-                    f"{k} (GENERATED AS {generated_cols[k]!r}: {v} rows)"
-                    for k, v in sorted(gen_bad.items())
-                )
-                raise ValueError(f"generated-column violation: {detail}")
-            if chk_bad:
-                detail = ", ".join(
-                    f"{k} ({constraints[k]!r}: {v} rows)"
-                    for k, v in sorted(chk_bad.items())
-                )
-                raise ValueError(f"CHECK constraint violation: {detail}")
-        return con.sql("SELECT * FROM ext").arrow() if missing else tbl
-    finally:
-        con.close()
-
-
-class _StagedFiles(WriterCommitMessage):
-    """Per-task result: [(rel_path, bucket, n_rows)] staged parquet."""
-
-    def __init__(self, files: list[tuple[str, int, int]]):
-        self.files = files
-
-
-class _TxnWriter(DataSourceWriter):
-    """``df.write.format("txntable")`` as a genuine TWO-PHASE COMMIT
-    through Spark's writer protocol: every task stages its rows as
-    per-bucket parquet files into a nonce-unique snap dir (phase 1,
-    executor-side, restart-safe — an aborted or speculated task's files
-    are unreferenced garbage) and returns their names in its
-    WriterCommitMessage; the driver's commit() publishes ONE manifest
-    epoch referencing exactly the reported files (phase 2, the same OCC
-    epoch claim as every other commit). A job that dies before commit()
-    leaves the table untouched; abort() additionally reaps the staging
-    dir. mode("append") carries the current file list; mode("overwrite")
-    replaces it (a full-table MVCC replace — time travel still reaches
-    the pre-overwrite epochs).
-
-    Bucket assignment runs per row with portable_hash60_py — the exact
-    Python twin of the read side's _bucket_expr — so bucket-pruned reads
-    and upsert touched-bucket merges see writer-produced files
-    correctly. Keys must render to the same string Spark's CAST produces
-    (strings/integers; the table contract everywhere else too).
-
-    VACUUM CONTRACT (ADVICE r10 medium): the whole write job — staging
-    through publish — runs under a heartbeat writer lease, exactly like
-    commit_snapshot. __init__ (Spark's planning worker) acquires it and
-    leaves the heartbeat thread running there; commit()/abort() execute
-    in a DIFFERENT worker on an unpickled copy, so they stop the beat by
-    REMOVING the lease file (_acquire_lease's beat loop exits on the
-    resulting utime OSError). A job that crashes without either call
-    takes the planner worker (a child of the driver) with it and the
-    lease ages out — vacuum is delayed at most the TTL, never wedged.
-    Belt-and-braces for lease-less gaps (force-vacuum, planner-worker
-    death): write() tasks re-touch their staged files while staging so
-    the orphan grace clock runs from last touch, and _publish re-touches
-    every reported file before the manifest claim."""
-
-    # stream subclass overrides: a continuous stream staging batches for
-    # its whole lifetime must NOT hold a permanent lease (vacuum would
-    # be wedged forever, not delayed); micro-batch staging is covered by
-    # the orphan grace + the task/commit touch discipline.
-    _job_lease = True
-
-    def __init__(self, options: dict, schema: StructType, overwrite: bool):
-        import uuid
-
-        self.path = _norm_path(options)
-        self.key = options.get("key", "id")
-        self.overwrite = overwrite
-        self.schema_json = json.dumps(json.loads(schema.json()))
-        man = read_manifest(self.path)
-        if man is not None and (
-            man.get("constraints") or man.get("generated_cols")
-        ) and (man.get("column_mapping") or man.get("dropped_cols")):
-            # expressions are authored against LOGICAL names while this
-            # writer stages PHYSICAL names on mapped tables — evaluating
-            # them against the translated schema would bind the wrong
-            # columns. The residual truly-unsupported combo (the r12
-            # lift covers everything else).
-            raise ValueError(
-                f"txntable writer cannot evaluate CHECK constraints / "
-                f"generated columns on the COLUMN-MAPPED table "
-                f"{self.path} (expressions bind logical names, staged "
-                "files store physical names); write through "
-                "append_snapshot/upsert_manifest_txn instead"
-            )
-        if man is not None and (
-            man.get("column_mapping") or man.get("dropped_cols")
-        ):
-            # COLUMN-MAPPED TABLES (refusal lifted r11): callers speak
-            # logical names; staged files must store PHYSICAL names
-            # (the read side presents logical via the manifest mapping)
-            # — the same logical->physical discipline as commit_snapshot
-            # (sinks/txn.py:807-824), including both its guards.
-            cmap = dict(man.get("column_mapping") or {})
-            dropped = set(man.get("dropped_cols") or [])
-            incoming = [f.name for f in schema.fields]
-            hijack = (set(incoming) - set(cmap)) & set(cmap.values())
-            if hijack:
-                raise ValueError(
-                    f"column name(s) {sorted(hijack)} are the PHYSICAL "
-                    "storage of renamed columns; a new logical column "
-                    "under a renamed-away name would silently alias onto "
-                    "the renamed column's data (pick another name, or "
-                    "rename the column back first)"
-                )
-            reused = {cmap.get(c, c) for c in incoming} & dropped
-            if reused:
-                raise ValueError(
-                    f"column name(s) {sorted(reused)} were DROPPED from "
-                    "this table; re-adding a dropped physical name would "
-                    "resurrect old files' data under it (needs a full "
-                    "rewrite/vacuum of history first)"
-                )
-            from pyspark.sql.types import StructField
-
-            schema = StructType(
-                [
-                    StructField(
-                        cmap.get(f.name, f.name), f.dataType, f.nullable
-                    )
-                    for f in schema.fields
-                ]
-            )
-            self.schema_json = json.dumps(json.loads(schema.json()))
-            self.key = cmap.get(self.key, self.key)
-        # GENERATED COLUMNS + CHECK CONSTRAINTS (refusal lifted r12): the
-        # Delta-faithful place to enforce both is the WRITE TASK — Delta
-        # computes generated columns in the write plan and checks
-        # invariants per task — and this writer's write() IS that task.
-        # There is no SparkSession anywhere in the DS worker processes
-        # (measured on 4.1.2: getActiveSession() is None in both the
-        # planner worker and the commit worker), so expressions are
-        # evaluated task-side over the staged Arrow batch with DuckDB —
-        # vectorized, distributed with the tasks, zero extra I/O. The
-        # expression dialect is the portable-ANSI subset this repo's
-        # oracle layer already relies on (arithmetic, CAST, CASE,
-        # comparisons, floor/round/date funcs); an expression DuckDB
-        # cannot evaluate is refused HERE at plan time with the sinks
-        # fallback — never silently skipped (tests/test_txn_generated.py
-        # pins compute/validate/violation/refusal; semantics mirror
-        # sinks/txn._apply_generated + _enforce_constraints: supplied
-        # generated values must equal the expression null-safely,
-        # constraints bind AFTER compute, NULL passes a CHECK).
-        self.constraints = dict((man.get("constraints") or {}) if man else {})
-        self.generated_cols = dict(
-            (man.get("generated_cols") or {}) if man else {}
-        )
-        incoming_names = [f.name for f in schema.fields]
-        self._gen_missing = [
-            n for n in sorted(self.generated_cols) if n not in incoming_names
-        ]
-        if self._gen_missing:
-            if self.key in self._gen_missing:
-                raise ValueError(
-                    f"txntable writer cannot bucket by generated column "
-                    f"{self.key!r} unless the batch supplies it; write "
-                    "through append_snapshot/upsert_manifest_txn instead"
-                )
-            # staged files carry the computed columns too: their types
-            # come from the manifest's physical schema (the columns were
-            # typed when first committed)
-            from pyspark.sql.types import StructField
-            from pyspark.sql.types import StructType as _ST
-
-            phys = {
-                f["name"]: f for f in (man.get("schema") or {}).get("fields", [])
-            }
-            absent = [n for n in self._gen_missing if n not in phys]
-            if absent:
-                raise ValueError(
-                    f"generated column(s) {absent} have no committed type "
-                    f"in {self.path}'s schema; write through "
-                    "append_snapshot first"
-                )
-            schema = _ST(
-                list(schema.fields)
-                + [
-                    StructField.fromJson(phys[n]) for n in self._gen_missing
-                ]
-            )
-            self.schema_json = json.dumps(json.loads(schema.json()))
-        if self.generated_cols or self.constraints:
-            # plan-time dry-compile on an EMPTY batch: an unsupported
-            # expression refuses the job BEFORE any task stages a byte
-            import pyarrow as pa
-
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            probe = to_arrow_schema(
-                StructType.fromJson(json.loads(self.schema_json))
-            ).empty_table()
-            probe = probe.select(incoming_names)
-            try:
-                _enforce_arrow(
-                    probe, self.generated_cols, self.constraints
-                )
-            except ValueError:
-                raise  # violation shape cannot happen on 0 rows
-            except Exception as exc:
-                raise ValueError(
-                    f"txntable writer cannot evaluate expression(s) of "
-                    f"{self.path} with the portable task-side evaluator "
-                    f"({exc}); write through append_snapshot/"
-                    "upsert_manifest_txn instead"
-                ) from exc
-        if man is not None:
-            self.n_buckets = man["n_buckets"]
-            self.stats_cols = man.get("stats_cols") or []
-        else:
-            self.n_buckets = int(options.get("n_buckets", 8))
-            sc = options.get("stats_cols", "")
-            self.stats_cols = [c for c in sc.split(",") if c]
-        # numeric second token keeps vacuum's epoch parse happy; nonce
-        # isolates concurrent jobs' staging
-        self.snap = f"snap-000000-{uuid.uuid4().hex[:8]}"
-        # ACQUIRE LAST — after every refusal above, so a rejected writer
-        # never leaks a lease waiting for TTL expiry. Plain str path on
-        # self (the handle's thread must not ride the executor pickle);
-        # None when the table dir doesn't exist yet (nothing to vacuum).
-        self._lease_path = None
-        if self._job_lease:
-            from ..sinks.txn import _acquire_lease
-
-            lease = _acquire_lease(self.path)
-            self._lease_path = str(lease) if lease is not None else None
-
-    def _drop_job_lease(self) -> None:
-        """Stop the planning worker's heartbeat (it exits on the utime
-        OSError) and release the lease — safe to call from any process,
-        any number of times, including on __new__-built test stubs."""
-        p = getattr(self, "_lease_path", None)
-        if p:
-            try:
-                os.remove(p)
-            except OSError:
-                pass
-            self._lease_path = None
-
-    def write(self, iterator) -> _StagedFiles:
-        import threading
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from ..operators.dedup import portable_hash60_py
-        from ..sinks.txn import _ORPHAN_GRACE_SECONDS
-
-        target = to_arrow_schema(
-            StructType.fromJson(json.loads(self.schema_json))
-        )
-        # incoming rows carry the batch's columns only; generated columns
-        # the batch omits are appended AT THE END of the target schema
-        # (init order) and computed below, after bucketing — the key is
-        # always an incoming column (init refuses a missing generated key)
-        gen_missing = list(getattr(self, "_gen_missing", []) or [])
-        incoming = pa.schema([f for f in target if f.name not in gen_missing])
-        names = [f.name for f in incoming]
-        ki = names.index(self.key)
-        per_bucket: dict[int, list[tuple]] = {}
-        for row in iterator:
-            t = tuple(row)
-            k = t[ki]
-            ks = "\x00__null_key__" if k is None else str(k)
-            b = portable_hash60_py(ks) % self.n_buckets
-            per_bucket.setdefault(b, []).append(t)
-        out: list[tuple[str, int, int]] = []
-        # task-side freshness beat: re-touch already-staged files while
-        # the task is still writing, so the vacuum orphan-grace clock
-        # runs from the task's LAST activity, not first file creation —
-        # a single task staging many buckets for longer than the grace
-        # would otherwise expose its earliest files (ADVICE r10 medium;
-        # thread dies with the task, stopped in the finally either way)
-        staged: list[str] = []
-        stop = threading.Event()
-
-        def _beat() -> None:
-            while not stop.wait(_ORPHAN_GRACE_SECONDS / 3.0):
-                for f in list(staged):
-                    try:
-                        os.utime(f)
-                    except OSError:
-                        pass  # aborted/force-vacuumed concurrently
-
-        beater = threading.Thread(
-            target=_beat, name="k3s-staging-beat", daemon=True
-        )
-        beater.start()
-        try:
-            for b, rows in per_bucket.items():
-                rel = os.path.join(
-                    self.snap,
-                    f"__bucket={b}",
-                    f"part-{uuid.uuid4().hex}.parquet",
-                )
-                full = os.path.join(self.path, rel)
-                os.makedirs(os.path.dirname(full), exist_ok=True)
-                cols = list(zip(*rows))
-                tbl = pa.table(
-                    [pa.array(list(c), type=f.type)
-                     for c, f in zip(cols, incoming)],
-                    schema=incoming,
-                )
-                if self.generated_cols or self.constraints:
-                    # task-side enforcement (Delta's write-plan point):
-                    # compute/validate generated columns, check
-                    # constraints; a violation fails the task before a
-                    # byte commits. Computed columns land in target
-                    # (manifest) types via the cast.
-                    tbl = _enforce_arrow(
-                        tbl, self.generated_cols, self.constraints
-                    ).select([f.name for f in target]).cast(target)
-                pq.write_table(tbl, full)
-                staged.append(full)
-                out.append((rel, b, len(rows)))
-        finally:
-            stop.set()
-        return _StagedFiles(out)
-
-    def commit(self, messages) -> None:
-        try:
-            self._publish(messages)
-        finally:
-            # released on failure too: the staged garbage then ages out
-            # under the normal orphan-grace rule instead of a live lease
-            # wedging vacuum until TTL expiry
-            self._drop_job_lease()
-
-    def _publish(self, messages, app_id=None, app_version=None) -> None:
-        from ..sinks.txn import (
-            CommitConflict,
-            _evolved_schema,
-            _harvest_bloom,
-            _harvest_file_stats,
-            _publish_manifest,
-        )
-
-        def _entry(rel: str, b: int, n: int) -> dict:
-            full = os.path.join(self.path, rel)
-            # pre-publish freshness touch: the reported files enter the
-            # manifest claim with mtime=now, so a vacuum walk overlapping
-            # the publish can never age them past the orphan grace even
-            # in the lease-less gaps (stream writers, force-vacuum)
-            try:
-                os.utime(full)
-            except OSError:
-                pass
-            return {
-                "path": rel,
-                "bucket": b,
-                # size harvest mirrors commit_snapshot's (bin-packing /
-                # maxBytesPerTrigger metadata); staged files are local
-                # to the table root at commit time
-                "bytes": os.path.getsize(full),
-                # row harvest (metadata-only COUNT — sinks/txn.count_rows):
-                # the task already counted what it staged
-                "rows": n,
-            }
-
-        new_entries = [
-            _entry(rel, b, n)
-            for m in messages
-            if m is not None
-            for (rel, b, n) in m.files
-        ]
-        if self.stats_cols:
-            fstats = _harvest_file_stats(
-                self.path, [e["path"] for e in new_entries], self.stats_cols
-            )
-            for e in new_entries:
-                if e["path"] in fstats:
-                    e["stats"] = fstats[e["path"]]
-        written = StructType.fromJson(json.loads(self.schema_json))
-        last = None
-        for _attempt in range(5):
-            man = read_manifest(self.path)
-            apps = dict((man.get("apps") or {}) if man else {})
-            if app_id is not None:
-                if apps.get(app_id, -1) >= app_version:
-                    return  # replay lost a race to itself: already in
-                apps[app_id] = app_version
-            # table config the writer must CARRY, never silently reset —
-            # dropping bloom_cols (or mapping metadata) from the next
-            # manifest would strip the table's declared layout forever
-            bloom_cols = list((man.get("bloom_cols") or []) if man else [])
-            if bloom_cols and new_entries and "bloom" not in new_entries[0]:
-                fbloom = _harvest_bloom(
-                    self.path, [e["path"] for e in new_entries], bloom_cols
-                )
-                for e in new_entries:
-                    if e["path"] in fbloom:
-                        e["bloom"] = fbloom[e["path"]]
-            carry = (
-                [] if self.overwrite else (list(man["files"]) if man else [])
-            )
-            epoch = (man["epoch"] if man else 0) + 1
-            files = sorted(
-                carry + new_entries, key=lambda e: (e["bucket"], e["path"])
-            )
-            payload = json.dumps(
-                {
-                    "epoch": epoch,
-                    "n_buckets": self.n_buckets,
-                    "stats_cols": self.stats_cols,
-                    "bloom_cols": bloom_cols,
-                    "schema": _evolved_schema(man, written),
-                    "apps": apps,
-                    "constraints": dict(
-                        (man.get("constraints") or {}) if man else {}
-                    ),
-                    "column_mapping": dict(
-                        (man.get("column_mapping") or {}) if man else {}
-                    ),
-                    "dropped_cols": list(
-                        (man.get("dropped_cols") or []) if man else []
-                    ),
-                    "generated_cols": dict(
-                        (man.get("generated_cols") or {}) if man else {}
-                    ),
-                    "files": files,
-                },
-                indent=1,
-            )
-            try:
-                _publish_manifest(
-                    self.path, epoch, payload,
-                    op={"name": "WRITE",
-                        "mode": "overwrite" if self.overwrite else "append"},
-                )
-                return
-            except CommitConflict as exc:
-                last = exc  # append never conflicts on data: re-carry
-        raise last
-
-    def abort(self, messages) -> None:
-        import shutil
-
-        try:
-            shutil.rmtree(
-                os.path.join(self.path, self.snap), ignore_errors=True
-            )
-        finally:
-            self._drop_job_lease()
-
-
-class _TxnStreamWriter(_TxnWriter, DataSourceStreamWriter):
-    """``df.writeStream.format("txntable")``: each micro-batch is one OCC
-    manifest epoch, fenced EXACTLY-ONCE by the manifest's per-app
-    watermark keyed on the runtime's batchId (the same txnAppId/
-    txnVersion protocol as append_manifest_stream, now through Spark's
-    native stream-writer path — no foreachBatch wiring). A replayed
-    batch re-stages files (garbage for vacuum) but the fenced commit
-    publishes nothing, so the table never double-counts. outputMode
-    append carries the current file list; complete replaces it per
-    batch (an MVCC truncate-and-load for aggregate sinks).
-
-    No job lease (`_job_lease = False`): the staging instance lives for
-    the STREAM'S lifetime, and a lease spanning it would wedge vacuum
-    forever instead of delaying it by the TTL. Micro-batch staging is
-    protected by the task-side freshness beat + the pre-publish touch
-    (staged-to-committed gaps are micro-batch-scale), and the publish
-    itself holds _publish_manifest's own lease."""
-
-    _job_lease = False
-
-    def __init__(self, options: dict, schema: StructType, overwrite: bool):
-        super().__init__(options, schema, overwrite)
-        self.app_id = options.get("app_id", "txntable-stream")
-
-    def commit(self, messages, batchId: int) -> None:  # noqa: N803
-        man = read_manifest(self.path)
-        if (
-            man is not None
-            and (man.get("apps") or {}).get(self.app_id, -1) >= batchId
-        ):
-            return  # replayed micro-batch: already committed
-        self._publish(messages, app_id=self.app_id, app_version=batchId)
-
-    def abort(self, messages, batchId: int) -> None:  # noqa: N803
-        # The staging dir is SHARED across the run's micro-batches (the
-        # writer is pickled once at stream start, before any batchId
-        # exists), so earlier batches' COMMITTED files live under it —
-        # rmtree here would corrupt every epoch they published (ADVICE
-        # r8, high). Remove only the files THIS batch's tasks reported;
-        # files of tasks that died before reporting (messages carry
-        # None) are unreferenced garbage vacuum reaps.
-        for m in messages:
-            if m is None:
-                continue
-            for rel, _b, _n in m.files:
-                try:
-                    os.remove(os.path.join(self.path, rel))
-                except OSError:
-                    pass
-
-
 class TxnTableDataSource(DataSource):
     """``spark.dataSource.register(TxnTableDataSource)`` →
-    ``spark.read.format("txntable").load(path)`` /
-    ``spark.readStream.format("txntable").load(path)`` /
-    ``df.write.format("txntable").mode("append"|"overwrite").save(path)``."""
+    ``spark.read.format("txntable").load(path)``: a batch scan of the
+    committed snapshot (or of ``option("epoch", n)``)."""
 
     @classmethod
     def name(cls) -> str:
@@ -1179,12 +271,6 @@ class TxnTableDataSource(DataSource):
             schema = json.loads(_logical_struct(man).json())
         else:
             schema = man["schema"]
-        if str(self.options.get("readchangefeed", "false")).lower() == "true":
-            schema = dict(schema)
-            schema["fields"] = list(schema["fields"]) + [
-                {"name": "_change_type", "type": "string",
-                 "nullable": False, "metadata": {}}
-            ]
         return json.dumps(schema)
 
     def schema(self) -> StructType:
@@ -1199,19 +285,3 @@ class TxnTableDataSource(DataSource):
                 opts, self._schema_json(), man=self._manifest()
             )
         return _TxnBatchReader(opts, self._schema_json(), man=self._manifest())
-
-    def streamReader(self, schema: StructType) -> DataSourceStreamReader:
-        # schema and pinned column mapping from the SAME manifest read
-        return _TxnStreamReader(
-            dict(self.options), self._schema_json(), man=self._manifest()
-        )
-
-    def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
-        os.makedirs(_norm_path(self.options), exist_ok=True)
-        return _TxnWriter(dict(self.options), schema, overwrite)
-
-    def streamWriter(
-        self, schema: StructType, overwrite: bool
-    ) -> DataSourceStreamWriter:
-        os.makedirs(_norm_path(self.options), exist_ok=True)
-        return _TxnStreamWriter(dict(self.options), schema, overwrite)

@@ -19,10 +19,8 @@ changed/unchecked queries) and the builder's full driver-replica sweep.
 SLOW_TESTS = {
     "test_oracle_parity.py::test_query_matches_oracle[dedup_winnowing_fingerprints]",  # 171.0s
     "test_similarity.py::test_semdedup_cell_count_derives_from_corpus_size",  # 83.6s
-    "test_txn_datasource.py::test_stream_rate_limit_restart_batch_is_bounded",  # 65.8s
     "test_properties.py::test_exact_substring_span_invariants",  # 48.4s
     "test_statestore.py::test_rocksdb_drains_match_default_provider",  # 47.3s
-    "test_txn_datasource.py::test_stream_rate_limit_caps_files_per_trigger",  # 40.1s
     "test_sinks.py::test_txn_bin_packing_rewrites_only_small_files",  # 39.7s
     "test_oracle_parity.py::test_query_matches_oracle[llm_split_contamination_audit]",  # 33.4s
     "test_similarity.py::test_semdedup_finds_planted_dups_within_cells",  # 32.8s
@@ -63,12 +61,7 @@ SLOW_TESTS = {
     "test_txn_checkpoint.py::test_vacuum_prunes_refs_for_deleted_paths",  # 12.1s
     "test_colmap_property.py::test_random_alter_chains_match_name_model",  # 11.9s
     "test_oracle_parity.py::test_query_matches_oracle[graph_knn_edges_recall_band]",  # 11.3s
-    "test_txn_datasource.py::test_medallion_bronze_silver_end_to_end",  # 11.2s
-    "test_txn_datasource.py::test_fail_on_mapping_change_ignores_rename_outside_range",  # 10.8s
     "test_txn_protocol.py::test_writer_refuses_unknown_manifest_keys",  # 10.6s
-    "test_txn_datasource.py::test_stream_fail_on_mapping_change_is_strict",  # 10.4s
-    "test_txn_datasource.py::test_writer_zone_maps_prune_reads",  # 10.3s
-    "test_txn_datasource.py::test_stream_rate_limit_counts_dv_and_removed_slices",  # 10.2s
     "test_similarity.py::test_ivf_recall_on_planted_pairs",  # 10.2s
     "test_properties.py::test_parse_cookies_matches_python",  # 10.1s
     "test_dedup_scale.py::test_lsh_bucket_cap_drops_flood_keeps_neardups",  # 9.5s
@@ -77,6 +70,5 @@ SLOW_TESTS = {
     "test_properties.py::test_tokenize_matches_python_split",  # 9.3s
     "test_properties.py::test_url_codec_roundtrip",  # 9.3s
     "test_txn_concurrency.py::test_random_crash_points_converge_via_repair",  # 9.2s
-    "test_txn_datasource.py::test_stream_change_feed_emits_inserts_and_deletes",  # 8.8s
     "test_sinks.py::test_txn_uncommitted_version_residue_is_not_readable",  # 8.8s
 }

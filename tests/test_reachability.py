@@ -87,6 +87,7 @@ KNOWN_UNREACHABLE = {
     "sinks.jdbc.jdbc_upsert_batch_writer": _JDBC,
     "sinks.jdbc.partition_upsert_writer": _JDBC,
     "sinks.jdbc.postgres_connection_factory": _JDBC,
+    "sinks.txn._ORPHAN_GRACE_SECONDS": "constant only the exempt vacuum_table reads",
     "sinks.txn._live_leases": _TXN,
     "sinks.txn._prune_checkpoint_refs": _TXN,
     "sinks.txn._trim_checkpoint": _TXN,

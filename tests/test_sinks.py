@@ -221,7 +221,11 @@ def test_txn_commit_carries_untouched_bucket_files_by_reference(spark, tmp_path)
     snap-<old-epoch> paths (carried by reference), and only the touched
     buckets get snap-<new-epoch> files — the bounded-write-amplification
     contract."""
-    from kinesis3_spark.sinks.txn import read_manifest, upsert_manifest_txn
+    from kinesis3_spark.sinks.txn import (
+        _bucket_expr,
+        read_manifest,
+        upsert_manifest_txn,
+    )
 
     path = str(tmp_path / "t")
     upsert_manifest_txn(spark, _events(spark, B1), path, key="id", order_col="ts")
@@ -231,9 +235,9 @@ def test_txn_commit_carries_untouched_bucket_files_by_reference(spark, tmp_path)
         spark, _events(spark, [B2[0]]), path, key="id", order_col="ts"
     )
     m2 = read_manifest(path)
-    from kinesis3_spark.operators.dedup import portable_hash60_py
-
-    touched = portable_hash60_py("b") % m1["n_buckets"]
+    touched = spark.createDataFrame([("b",)], "id string").select(
+        _bucket_expr("id", m1["n_buckets"])
+    ).first()[0]
     carried = [e for e in m2["files"] if e["bucket"] != touched]
     assert carried and all(e in m1["files"] for e in carried)
     assert all(
@@ -977,8 +981,8 @@ def test_merge_manifest_stream_cdc_with_deletes(spark, tmp_path):
 @pytest.mark.slow
 def test_count_rows_is_metadata_exact_across_dml_lifecycle(spark, tmp_path):
     """count_rows (metadata-only COUNT(*), Delta's numRecords - DV
-    cardinality): exact vs a real scan after every DML verb — append,
-    DS write, upsert rewrite, two accumulating deletes, MERGE, UPDATE,
+    cardinality): exact vs a real scan after every DML verb — two
+    appends, upsert rewrite, two accumulating deletes, MERGE, UPDATE,
     compaction, and at time-traveled epochs — and an honest None when
     any entry predates the row harvest."""
     import json as _json
@@ -1000,13 +1004,10 @@ def test_count_rows_is_metadata_exact_across_dml_lifecycle(spark, tmp_path):
         path, key="id", n_buckets=4,
     )
     assert check() == 40
-    from kinesis3_spark.sources.txn_datasource import TxnTableDataSource
-
-    spark.dataSource.register(TxnTableDataSource)
-    (
+    txn.append_snapshot(
         spark.createDataFrame([(100 + i, i, "d") for i in range(7)],
-                              "id bigint, v bigint, seg string")
-        .write.format("txntable").option("key", "id").mode("append").save(path)
+                              "id bigint, v bigint, seg string"),
+        path, key="id",
     )
     assert check() == 47
     txn.upsert_manifest_txn(

@@ -48,6 +48,7 @@ def test_txntable_sql_view_pushdown_prunes_through_pure_sql(spark, tmp_path):
 
     import pytest
 
+    from kinesis3_spark.sinks.txn import append_snapshot
     from kinesis3_spark.sources.txn_datasource import TxnTableDataSource
 
     spark.dataSource.register(TxnTableDataSource)
@@ -58,9 +59,8 @@ def test_txntable_sql_view_pushdown_prunes_through_pure_sql(spark, tmp_path):
     hi = spark.createDataFrame(
         [(f"b{i}", 1000 + i) for i in range(20)], "id string, val int"
     )
-    (lo.coalesce(1).write.format("txntable").option("key", "id")
-       .option("stats_cols", "val").mode("append").save(path))
-    (hi.coalesce(1).write.format("txntable").mode("append").save(path))
+    append_snapshot(lo.coalesce(1), path, key="id", stats_cols=["val"])
+    append_snapshot(hi.coalesce(1), path, key="id")
 
     spark.sql(
         f"CREATE OR REPLACE TEMPORARY VIEW t_push "
@@ -76,7 +76,7 @@ def test_txntable_sql_view_pushdown_prunes_through_pure_sql(spark, tmp_path):
         spark.sql(sql.format(v="t_plain")).collect()
 
     # corrupt every hi-range file (the ones the predicate's zone map
-    # excludes; the bucketed writer splits each commit into ~8 files)
+    # excludes; the bucketed commit splits each batch into up to 8 files)
     hi_files = [
         p for p in glob.glob(f"{path}/**/*.parquet", recursive=True)
         if os.path.getsize(p) > 0 and _file_min_val(p) >= 1000

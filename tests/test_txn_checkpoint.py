@@ -188,3 +188,24 @@ def test_checkpoint_published_under_writer_lease(spark, tmp_path, monkeypatch):
     for i in range(10):
         _append(spark, path, i)
     assert seen and all(n >= 1 for n in seen)
+
+
+def test_failed_checkpoint_is_logged_and_commit_stands(tmp_path, monkeypatch, caplog):
+    """The interval checkpoint is best-effort: a failure must not fail
+    the commit, and it is logged rather than swallowed."""
+    import json
+    import logging
+
+    def broken(path):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(T, "_CHECKPOINT_INTERVAL", 1)
+    monkeypatch.setattr(T, "write_checkpoint", broken)
+    path = str(tmp_path / "t")
+    os.makedirs(path)
+    with caplog.at_level(logging.WARNING, logger=T.__name__):
+        T._publish_manifest(path, 1, json.dumps({"epoch": 1, "files": []}))
+    assert T.read_manifest(path)["epoch"] == 1
+    [rec] = [r for r in caplog.records if r.name == T.__name__]
+    assert rec.levelno == logging.WARNING and "checkpoint" in rec.getMessage()
+    assert rec.exc_info and "disk full" in str(rec.exc_info[1])

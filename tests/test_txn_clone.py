@@ -53,6 +53,10 @@ def test_clone_is_zero_copy_and_reads_equal(spark, src, tmp_path):
     man = T.read_manifest(dst)
     assert man["apps"] == {}
     assert man.get("stats_cols") == ["val"]
+    # the clone's first history record names its source
+    h = T.table_history(dst)
+    assert h[0]["operation"] == "CLONE"
+    assert h[0]["params"]["source"] == src
 
 
 def test_clone_evolves_independently_of_source(spark, src, tmp_path):

@@ -211,117 +211,6 @@ def test_cdf_across_drop_epoch_is_empty(spark, table):
     assert T.table_changes(spark, table, ep0, ep1, key="id").count() == 0
 
 
-def test_ds_writer_translates_and_stream_handles_mapped_tables(spark, table):
-    T.rename_column(table, "val", "amount")
-    from kinesis3_spark.sources.txn_datasource import (
-        TxnTableDataSource,
-        _TxnStreamReader,
-        _TxnWriter,
-    )
-    from pyspark.sql.types import StructType
-
-    # r11 lift of the r8 refusal: the DS writer speaks LOGICAL names and
-    # stages PHYSICAL files (commit_snapshot's discipline), so a write
-    # through Spark's writer path round-trips on a renamed table
-    spark.dataSource.register(TxnTableDataSource)
-    (
-        spark.createDataFrame([(100, 999, 1)], "id long, amount long, grp long")
-        .coalesce(1)
-        .write.format("txntable")
-        .mode("append")
-        .option("key", "id")
-        .save(table)
-    )
-    got = T.read_snapshot(spark, table)
-    assert set(got.columns) == {"id", "amount", "grp"}
-    assert got.where(F.col("id") == 100).first()["amount"] == 999
-    # files on disk store the PHYSICAL name (val), never the logical
-    man = T.read_manifest(table)
-    newest = [e["path"] for e in man["files"] if "snap-000000-" in e["path"]]
-    assert newest
-    import pyarrow.parquet as pq
-
-    cols = pq.read_schema(os.path.join(table, newest[0])).names
-    assert "val" in cols and "amount" not in cols
-    # commit_snapshot's guards carry over: physical-name hijack and
-    # dropped-name reuse refuse loudly
-    with pytest.raises(ValueError, match="PHYSICAL storage"):
-        _TxnWriter(
-            {"path": table},
-            StructType.fromDDL("id long, val long"),
-            overwrite=False,
-        )
-    T.drop_column(table, "grp")
-    with pytest.raises(ValueError, match="DROPPED"):
-        _TxnWriter(
-            {"path": table},
-            StructType.fromDDL("id long, amount long, grp long"),
-            overwrite=False,
-        )
-    # a mapping CONSTANT across the streamed range (renamed before the
-    # stream started) — per-batch translation applies
-    sr = _TxnStreamReader({"path": table}, "{}")
-    parts = sr.partitions({"epoch": 0}, sr.latestOffset())
-    assert parts and all(p.l2p == {"amount": "val"} for p in parts)
-    # a rename INSIDE the streamed range is ABSORBED by the pinned
-    # mapping (physical names never change): the reader keeps presenting
-    # the view pinned at its construction, r9 lift of the r8 refusal
-    pre = T.read_manifest(table)["epoch"]
-    T.rename_column(table, "amount", "price")
-    parts2 = sr.partitions({"epoch": pre}, sr.latestOffset())
-    assert all(p.l2p == {"amount": "val"} for p in parts2)
-    # a reader constructed AFTER the second rename pins the new view
-    sr2 = _TxnStreamReader({"path": table}, "{}")
-    parts3 = sr2.partitions({"epoch": 0}, sr2.latestOffset())
-    assert parts3 and all(p.l2p == {"price": "val"} for p in parts3)
-
-
-def test_stream_drains_across_midrange_rename(spark, table, tmp_path):
-    """End-to-end parity drain replacing the r8 refusal: a rename
-    committed BETWEEN micro-batches does not kill the stream — batches
-    before and after it present the SAME pinned logical schema, and the
-    drained rows equal the snapshot read under that schema."""
-    spark.dataSource.register(
-        __import__(
-            "kinesis3_spark.sources.txn_datasource",
-            fromlist=["TxnTableDataSource"],
-        ).TxnTableDataSource
-    )
-    got: list[tuple] = []
-
-    def drain(ck):
-        q = (
-            spark.readStream.format("txntable").load(table)
-            .writeStream.foreachBatch(
-                lambda df, bid: got.extend(map(tuple, df.collect()))
-            )
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert q.exception() is None, q.exception()
-
-    ck = str(tmp_path / "ck")
-    drain(ck)  # baseline: the seeded epochs
-    n0 = len(got)
-    assert n0 == 30
-    T.rename_column(table, "val", "amount")  # rename INSIDE the stream
-    T.append_snapshot(
-        spark.createDataFrame([(90, 999, 7)],
-                              "id bigint, amount bigint, grp bigint"),
-        table, key="id",
-    )
-    # same checkpoint, new run: the restarted reader re-pins to the
-    # CURRENT logical view and replays/continues through the stable
-    # physical names — before the lift this restart raised
-    # "mapping changed" forever (the checkpointed range always spans
-    # the rename), permanently killing the stream
-    drain(ck)
-    assert len(got) == n0 + 1
-    assert (90, 999, 7) in {t[:3] for t in got}
-
-
 def test_drop_constraint_unblocks_rename(spark, table):
     T.add_constraint(table, "val_nonneg", "val >= 0")
     with pytest.raises(ValueError, match="constraint"):
@@ -372,33 +261,3 @@ def test_datasource_pushdown_translates_logical_predicates(spark, tmp_path):
     assert len(r.partitions()) == 1  # the lo commit pruned via 'val' stats
 
 
-def test_stream_writer_translates_on_mapped_table(spark, table, tmp_path):
-    """The STREAM writer shares _TxnWriter's logical->physical
-    translation (r11 colmap lift): micro-batches written through
-    writeStream.format('txntable') on a renamed table land under
-    physical names and read back logical."""
-    from kinesis3_spark.sources.txn_datasource import TxnTableDataSource
-
-    T.rename_column(table, "val", "amount")
-    spark.dataSource.register(TxnTableDataSource)
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
-        [(500, 1000, 2)], "id long, amount long, grp long"
-    ).coalesce(1).write.mode("overwrite").parquet(src)
-    q = (
-        spark.readStream.schema("id long, amount long, grp long")
-        .parquet(src)
-        .writeStream.format("txntable")
-        .option("path", table)
-        .option("key", "id")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert q.exception() is None
-    got = T.read_snapshot(spark, table)
-    assert set(got.columns) == {"id", "amount", "grp"}
-    assert got.where(F.col("id") == 500).first()["amount"] == 1000
-    phys = {f["name"] for f in T.read_manifest(table)["schema"]["fields"]}
-    assert phys == {"id", "val", "grp"}

@@ -1,8 +1,7 @@
 """txn table as a Spark 4 Python Data Source (sources/txn_datasource.py):
 batch reads must equal read_snapshot (deletion vectors applied, evolved
-schema NULL-backfilled); streaming reads are incremental over manifest
-epochs with Delta's append-only contract (rewrites raise without
-ignoreChanges, new deletion vectors raise without ignoreDeletes)."""
+schema NULL-backfilled), pushdown prunes files without changing answers,
+and the ``epoch`` option time-travels schema and rows together."""
 
 from __future__ import annotations
 
@@ -10,11 +9,8 @@ import pytest
 
 pytestmark = pytest.mark.slow  # excluded by the -m 'not slow' quick path
 
-from pyspark.sql import functions as F
-
 from kinesis3_spark.sinks.txn import (
     append_snapshot,
-    compact_table,
     delete_where,
     read_snapshot,
     upsert_manifest_txn,
@@ -30,26 +26,6 @@ def _mk(spark, rows, schema="id string, grp string, val bigint"):
 def registered(spark):
     spark.dataSource.register(TxnTableDataSource)
     return spark
-
-
-def _drain(spark, path, ck, **opts):
-    got: list[tuple] = []
-    reader = spark.readStream.format("txntable")
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    q = (
-        reader.load(path)
-        .writeStream.foreachBatch(
-            lambda df, bid: got.extend(map(tuple, df.collect()))
-        )
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    if q.exception() is not None:
-        raise q.exception()
-    return sorted(got)
 
 
 def test_batch_read_equals_read_snapshot(registered, tmp_path):
@@ -68,167 +44,6 @@ def test_batch_read_equals_read_snapshot(registered, tmp_path):
     assert got == want and len(got) == 16
     # evolved column NULL-backfilled on pre-evolution rows
     assert {t[3] for t in got} == {None, 7}
-
-
-def test_stream_is_incremental_across_restarts(registered, tmp_path):
-    spark, path, ck = registered, str(tmp_path / "t"), str(tmp_path / "ck")
-    append_snapshot(_mk(spark, [("a", "g", 1)]), path, key="id")
-    append_snapshot(_mk(spark, [("b", "g", 2)]), path, key="id")
-    first = _drain(spark, path, ck)
-    assert [t[:3] for t in first] == [("a", "g", 1), ("b", "g", 2)]
-    append_snapshot(_mk(spark, [("c", "g", 3)]), path, key="id")
-    second = _drain(spark, path, ck)  # same checkpoint: only the delta
-    assert [t[:3] for t in second] == [("c", "g", 3)]
-    assert _drain(spark, path, ck) == []  # nothing new
-
-
-def test_stream_rejects_rewrites_unless_ignore_changes(registered, tmp_path):
-    spark, path, ck = registered, str(tmp_path / "t"), str(tmp_path / "ck")
-    append_snapshot(_mk(spark, [("a", "g", 1)]), path, key="id", n_buckets=1)
-    _drain(spark, path, ck)
-    compact_table(spark, path, key="id")  # rewrites the only file
-    with pytest.raises(Exception, match="REWROTE|ignoreChanges"):
-        _drain(spark, path, ck)
-    got = _drain(spark, path, str(tmp_path / "ck2"), ignoreChanges="true")
-    assert [t[:3] for t in got] == [("a", "g", 1)]
-
-
-def test_stream_rejects_new_deletes_unless_ignore_deletes(registered, tmp_path):
-    spark, path, ck = registered, str(tmp_path / "t"), str(tmp_path / "ck")
-    append_snapshot(_mk(spark, [("a", "g", 1), ("b", "g", 2)]),
-                    path, key="id", n_buckets=1)
-    _drain(spark, path, ck)
-    delete_where(spark, path, "id = 'a'")  # dv on an already-streamed file
-    with pytest.raises(Exception, match="deletion vectors|ignoreDeletes"):
-        _drain(spark, path, ck)
-    assert _drain(spark, path, ck, ignoreDeletes="true") == []
-
-
-def test_writer_two_phase_commit_roundtrip(registered, tmp_path):
-    """df.write.format("txntable"): tasks stage per-bucket files, the
-    driver's commit publishes one manifest epoch. Bucket assignment must
-    be hash-identical to the read side's _bucket_expr — proven by an
-    upsert MERGING a writer-produced key (a bucket mismatch would leave
-    both versions alive in different buckets)."""
-    spark, path = registered, str(tmp_path / "t")
-    df = _mk(spark, [(f"k{i:03d}", "a", i) for i in range(50)])
-    (df.write.format("txntable").option("key", "id")
-       .option("n_buckets", "4").option("stats_cols", "val")
-       .mode("append").save(path))
-    from kinesis3_spark.sinks.txn import read_manifest
-
-    man = read_manifest(path)
-    assert man["epoch"] == 1 and man["stats_cols"] == ["val"]
-    assert sorted({e["bucket"] for e in man["files"]}) == [0, 1, 2, 3]
-    assert any("stats" in e for e in man["files"])  # writer files zone-map
-    got = sorted(map(tuple, read_snapshot(spark, path).collect()))
-    assert got == sorted(map(tuple, df.collect()))
-    # bucket-hash parity: merge replaces the single key everywhere
-    upsert_manifest_txn(spark, _mk(spark, [("k007", "UP", 9999)]),
-                        path, key="id", order_col="val")
-    rows = read_snapshot(spark, path)
-    assert rows.count() == 50
-    assert [tuple(r) for r in rows.where("id='k007'").collect()] == [
-        ("k007", "UP", 9999)
-    ]
-
-
-def test_writer_overwrite_is_mvcc_replace(registered, tmp_path):
-    spark, path = registered, str(tmp_path / "t")
-    _mk(spark, [("a", "g", 1), ("b", "g", 2)]).write.format(
-        "txntable").option("key", "id").mode("append").save(path)
-    _mk(spark, [("z", "h", 9)]).write.format(
-        "txntable").mode("overwrite").save(path)
-    assert [t[:3] for t in sorted(
-        map(tuple, read_snapshot(spark, path).collect())
-    )] == [("z", "h", 9)]
-    # history intact: the pre-overwrite epoch still reads
-    old = read_snapshot(spark, path, epoch=1)
-    assert old.count() == 2
-
-
-def test_writer_zone_maps_prune_reads(registered, tmp_path):
-    spark, path = registered, str(tmp_path / "t")
-    (_mk(spark, [(f"a{i}", "lo", i) for i in range(20)])
-     .coalesce(1).write.format("txntable").option("key", "id")
-     .option("stats_cols", "val").mode("append").save(path))
-    (_mk(spark, [(f"b{i}", "hi", 1000 + i) for i in range(20)])
-     .coalesce(1).write.format("txntable").mode("append").save(path))
-    sel = read_snapshot(spark, path, where=[("val", ">=", 1000)])
-    assert sel.count() == 20
-    from kinesis3_spark.sinks.txn import read_manifest
-
-    man = read_manifest(path)
-    keep = [e for e in man["files"]
-            if e.get("stats", {}).get("val", {}).get("max", -1) >= 1000]
-    assert 0 < len(keep) < len(man["files"])  # writer stats really prune
-
-
-def test_stream_writer_micro_batches_are_fenced_epochs(registered, tmp_path):
-    """df.writeStream.format("txntable"): each micro-batch is one OCC
-    manifest epoch; a replayed (app_id, batchId) commit publishes
-    nothing — exactly-once through Spark's native stream-writer path."""
-    from kinesis3_spark.sinks.txn import read_manifest
-    from kinesis3_spark.sources.txn_datasource import _TxnStreamWriter
-
-    spark = registered
-    landing = str(tmp_path / "landing")
-    path, ck = str(tmp_path / "t"), str(tmp_path / "ck")
-    src = _mk(spark, [(f"k{i:03d}", "g", i) for i in range(30)])
-    src.repartition(3).write.parquet(landing)
-    sdf = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-    )
-    q = (
-        sdf.writeStream.format("txntable")
-        .option("path", path).option("key", "id")
-        .option("app_id", "ds-stream")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    assert q.exception() is None
-    man = read_manifest(path)
-    assert man["epoch"] == 3 and man["apps"] == {"ds-stream": 2}
-    assert read_snapshot(spark, path).count() == 30
-    # replay of the last micro-batch: same app + batchId → no new epoch
-    w = _TxnStreamWriter(
-        {"path": path, "key": "id", "app_id": "ds-stream"}, src.schema, False
-    )
-    w.commit([], man["apps"]["ds-stream"])
-    assert read_manifest(path)["epoch"] == 3
-    assert read_snapshot(spark, path).count() == 30
-
-
-def test_writer_abort_leaves_table_untouched(registered, tmp_path):
-    """Phase-1 failure: a task that dies mid-job must abort the whole
-    write — the manifest never advances, a prior snapshot stays intact,
-    and the staging dir is reaped (no stray parquet for readers to see;
-    read_snapshot would ignore it anyway, but vacuum hygiene matters)."""
-    import os
-
-    from kinesis3_spark.sinks.txn import read_manifest
-
-    spark, path = registered, str(tmp_path / "t")
-    _mk(spark, [("a", "g", 1)]).write.format("txntable").option(
-        "key", "id").mode("append").save(path)
-    man1 = read_manifest(path)
-
-    poisoned = _mk(spark, [("b", "g", 2)]).withColumn(
-        "val",
-        __import__("pyspark").sql.functions.expr(
-            "CASE WHEN val = 2 THEN raise_error('boom') ELSE val END"
-        ).cast("bigint"),
-    )
-    with pytest.raises(Exception, match="boom"):
-        poisoned.write.format("txntable").mode("append").save(path)
-    man2 = read_manifest(path)
-    assert man2 == man1  # no epoch, no files, no schema change
-    assert read_snapshot(spark, path).count() == 1
-    tops = {d for d in os.listdir(path) if d.startswith("snap-")}
-    referenced = {e["path"].split(os.sep, 1)[0] for e in man2["files"]}
-    assert tops == referenced  # staging reaped by abort
 
 
 def test_pushdown_prunes_files_and_stays_exact(registered, tmp_path):
@@ -250,11 +65,10 @@ def test_pushdown_prunes_files_and_stays_exact(registered, tmp_path):
     )
 
     spark, path = registered, str(tmp_path / "t")
-    (_mk(spark, [(f"a{i}", "lo", i) for i in range(20)])
-     .coalesce(1).write.format("txntable").option("key", "id")
-     .option("stats_cols", "val,grp").mode("append").save(path))
-    (_mk(spark, [(f"b{i}", "hi", 1000 + i) for i in range(20)])
-     .coalesce(1).write.format("txntable").mode("append").save(path))
+    append_snapshot(_mk(spark, [(f"a{i}", "lo", i) for i in range(20)])
+                    .coalesce(1), path, key="id", stats_cols=["val", "grp"])
+    append_snapshot(_mk(spark, [(f"b{i}", "hi", 1000 + i) for i in range(20)])
+                    .coalesce(1), path, key="id")
 
     man_schema = spark.read.format("txntable").load(path).schema.json()
     base = _TxnBatchReader({"path": path}, man_schema)
@@ -288,237 +102,15 @@ def test_pushdown_prunes_files_and_stays_exact(registered, tmp_path):
 
 def test_epoch_option_time_travels_batch_reads(registered, tmp_path):
     spark, path = registered, str(tmp_path / "t")
-    _mk(spark, [("a", "g", 1)]).write.format("txntable").option(
-        "key", "id").mode("append").save(path)
-    _mk(spark, [("b", "g", 2, 9)],
-        "id string, grp string, val bigint, extra bigint").write.format(
-        "txntable").mode("append").save(path)
+    append_snapshot(_mk(spark, [("a", "g", 1)]), path, key="id")
+    append_snapshot(_mk(spark, [("b", "g", 2, 9)],
+                        "id string, grp string, val bigint, extra bigint"),
+                    path, key="id")
     cur = spark.read.format("txntable").load(path)
     assert cur.count() == 2 and "extra" in cur.columns
     old = spark.read.format("txntable").option("epoch", "1").load(path)
     # pre-evolution epoch: old schema, old rows only
     assert old.count() == 1 and "extra" not in old.columns
-
-
-def test_stream_change_feed_emits_inserts_and_deletes(registered, tmp_path):
-    """readChangeFeed=true turns the epoch stream into a CDF: new files
-    arrive as _change_type='insert' rows, newly-added deletion-vector
-    positions as 'delete' rows CARRYING THE PREIMAGE VALUES (read from
-    the base file at those positions, join-free per partition). The
-    incremental contract still holds across checkpointed drains."""
-    spark, path, ck = registered, str(tmp_path / "t"), str(tmp_path / "ck")
-
-    def drain():
-        got: list[tuple] = []
-        q = (
-            spark.readStream.format("txntable")
-            .option("readChangeFeed", "true").load(path)
-            .writeStream.foreachBatch(
-                lambda df, bid: got.extend(map(tuple, df.collect()))
-            )
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        assert q.exception() is None
-        return sorted(got)
-
-    append_snapshot(_mk(spark, [("a", "g", 1), ("b", "g", 2)]),
-                    path, key="id", n_buckets=1)
-    assert drain() == [("a", "g", 1, "insert"), ("b", "g", 2, "insert")]
-    delete_where(spark, path, "id = 'a'")
-    append_snapshot(_mk(spark, [("c", "g", 3)]), path, key="id")
-    assert drain() == [("a", "g", 1, "delete"), ("c", "g", 3, "insert")]
-    assert drain() == []
-    # re-delete of an already-deleted row adds no dv → no spurious rows
-    delete_where(spark, path, "id = 'a'")
-    assert drain() == []
-
-
-def test_medallion_bronze_silver_end_to_end(registered, tmp_path):
-    """The composed lakehouse loop, every hop through the txn table:
-    BRONZE ingests a file stream exactly-once (append_manifest_stream);
-    SILVER readStreams bronze's epochs incrementally, transforms, and
-    writeStreams into its own table (each micro-batch a fenced epoch).
-    After more bronze arrives, re-draining the SAME checkpoints moves
-    only the delta — and silver must equal the batch transform of
-    bronze at every step."""
-    from kinesis3_spark.sinks.txn import append_manifest_stream
-    from kinesis3_spark.streaming.run import await_or_raise
-
-    spark = registered
-    landing = str(tmp_path / "landing")
-    bronze, silver = str(tmp_path / "bronze"), str(tmp_path / "silver")
-    ck_b, ck_s = str(tmp_path / "ck_b"), str(tmp_path / "ck_s")
-
-    def ingest(rows, n_files):
-        src = _mk(spark, rows)
-        src.repartition(n_files).write.mode("append").parquet(landing)
-        sdf = (
-            spark.readStream.schema(src.schema)
-            .option("maxFilesPerTrigger", 1).parquet(landing)
-        )
-        await_or_raise(append_manifest_stream(
-            sdf, bronze, checkpoint=ck_b, app_id="bronze", key="id",
-        ))
-
-    def refine():
-        sdf = spark.readStream.format("txntable").load(bronze)
-        q = (
-            sdf.where("val % 2 = 0")
-            .withColumn("val", F.col("val") * 10)
-            .writeStream.format("txntable")
-            .option("path", silver).option("key", "id")
-            .option("app_id", "silver")
-            .option("checkpointLocation", ck_s)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        assert q.exception() is None
-
-    def silver_truth():
-        t = spark.read.format("txntable").load(bronze)
-        return sorted(
-            map(tuple, t.where("val % 2 = 0")
-                .withColumn("val", F.col("val") * 10).collect())
-        )
-
-    ingest([(f"k{i:02d}", "g", i) for i in range(20)], 2)
-    refine()
-    got = sorted(map(tuple,
-                     spark.read.format("txntable").load(silver).collect()))
-    assert got == silver_truth() and len(got) == 10
-    # second wave: only the delta flows through both hops
-    ingest([(f"m{i:02d}", "h", 100 + i) for i in range(6)], 1)
-    refine()
-    got = sorted(map(tuple,
-                     spark.read.format("txntable").load(silver).collect()))
-    assert got == silver_truth() and len(got) == 13
-    # idle drains move nothing: both app watermarks hold their epochs
-    from kinesis3_spark.sinks.txn import read_manifest
-
-    before = (read_manifest(bronze)["epoch"], read_manifest(silver)["epoch"])
-    refine()
-    after = (read_manifest(bronze)["epoch"], read_manifest(silver)["epoch"])
-    assert after == before
-
-
-def test_ds_writer_carries_bloom_and_mapping_metadata(registered, tmp_path):
-    """A DataSource append to a bloom-indexed table must CARRY the
-    table's declared layout (bloom_cols) into the next manifest and
-    build sidecars for its own files — silently resetting table config
-    on write is metadata erasure."""
-    from pyspark.sql import functions as F
-
-    from kinesis3_spark.sinks import txn as T
-
-    spark, path = registered, str(tmp_path / "t")
-    base = spark.range(0, 20).coalesce(1).select(
-        F.col("id"), (F.col("id") * 2).alias("val")
-    )
-    T.append_snapshot(base, path, key="id", n_buckets=2, bloom_cols=["id"])
-    (
-        spark.range(100, 110)
-        .select(F.col("id"), (F.col("id") * 2).alias("val"))
-        .write.format("txntable")
-        .option("key", "id")
-        .mode("append")
-        .save(path)
-    )
-    man = T.read_manifest(path)
-    assert man.get("bloom_cols") == ["id"]
-    assert man.get("column_mapping") == {} and man.get("dropped_cols") == []
-    # every file (pre-existing AND writer-staged) carries an id sidecar
-    assert all((e.get("bloom") or {}).get("id") for e in man["files"])
-    # and the bloom prune still finds writer-written rows
-    got = T.read_snapshot(spark, path, where=[("id", "==", 105)])
-    assert got.where(F.col("id") == 105).count() == 1
-
-
-def test_stream_over_pre_renamed_table_presents_logical_names(
-    registered, tmp_path
-):
-    """A table renamed BEFORE the stream starts streams under its
-    logical names (mapping constant across the range → per-batch Arrow
-    translation); the schema the stream reports is the logical one."""
-    from kinesis3_spark.sinks.txn import rename_column
-
-    spark, path, ck = registered, str(tmp_path / "t"), str(tmp_path / "ck")
-    append_snapshot(_mk(spark, [("a", "g", 1), ("b", "h", 2)]),
-                    path, key="id", n_buckets=1)
-    rename_column(path, "grp", "segment")
-    sdf = spark.readStream.format("txntable").load(path)
-    assert "segment" in sdf.columns and "grp" not in sdf.columns
-    q = (sdf.writeStream.format("memory").queryName("colmap_stream")
-         .option("checkpointLocation", ck)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = sorted(
-        (r["id"], r["segment"], r["val"])
-        for r in spark.sql("SELECT * FROM colmap_stream").collect()
-    )
-    assert got == [("a", "g", 1), ("b", "h", 2)]
-
-
-def test_batch_read_refuses_change_feed_option(registered, tmp_path):
-    """readChangeFeed is a streaming contract (epoch-diff offsets); a
-    batch scan would silently label every live row a delete."""
-    spark, path = registered, str(tmp_path / "t")
-    append_snapshot(_mk(spark, [("a", "g", 1)]), path, key="id")
-    with pytest.raises(Exception, match="readChangeFeed requires readStream"):
-        (spark.read.format("txntable")
-         .option("readChangeFeed", "true").load(path).collect())
-
-
-def test_fresh_stream_applies_existing_deletion_vectors(registered, tmp_path):
-    """A file FIRST SEEN already carrying dv refs (fresh stream from
-    epoch 0 over a table with delete_where history) streams with those
-    refs APPLIED — initial-snapshot semantics. Emitting the dead rows as
-    live inserts (the pre-fix behavior: new files always got dv=[])
-    silently resurrected deleted data downstream (ADVICE r8)."""
-    spark, path, ck = registered, str(tmp_path / "t"), str(tmp_path / "ck")
-    append_snapshot(_mk(spark, [("a", "g", 1), ("b", "g", 2), ("c", "g", 3)]),
-                    path, key="id", n_buckets=1)
-    delete_where(spark, path, "id = 'b'")
-    got = _drain(spark, path, ck)
-    assert [t[:3] for t in got] == [("a", "g", 1), ("c", "g", 3)]
-    # change-feed variant: the initial snapshot's inserts are net-live
-    got_cdf = _drain(spark, path, str(tmp_path / "ck2"),
-                     readChangeFeed="true")
-    assert sorted(t[:4] for t in got_cdf) == [
-        ("a", "g", 1, "insert"), ("c", "g", 3, "insert")
-    ]
-
-
-def test_stream_abort_reaps_only_its_own_batch(registered, tmp_path):
-    """The stream writer's staging dir is SHARED across micro-batches
-    (the writer pickles once at stream start); abort of batch N must
-    remove only batch N's reported files — an rmtree of the shared dir
-    deleted files earlier batches had already committed into manifest
-    epochs, corrupting the whole table (ADVICE r8, high)."""
-    import os
-
-    from kinesis3_spark.sinks.txn import read_manifest
-    from kinesis3_spark.sources.txn_datasource import _TxnStreamWriter
-
-    spark, path = registered, str(tmp_path / "t")
-    schema = _mk(spark, [("a", "g", 1)]).schema
-    w = _TxnStreamWriter({"path": path, "key": "id"}, schema, False)
-    msg0 = w.write(iter([("a", "g", 1), ("b", "g", 2)]))
-    w.commit([msg0], batchId=0)
-    assert read_manifest(path)["epoch"] == 1
-    committed = [rel for rel, _b, _n in msg0.files]
-    # batch 1 stages into the SAME dir, then fails
-    msg1 = w.write(iter([("c", "g", 3)]))
-    staged1 = [rel for rel, _b, _n in msg1.files]
-    w.abort([msg1, None], batchId=1)  # None = a task that died unreported
-    for rel in committed:
-        assert os.path.exists(os.path.join(path, rel)), rel
-    for rel in staged1:
-        assert not os.path.exists(os.path.join(path, rel)), rel
-    # the committed epoch still reads intact
-    got = sorted(map(tuple, spark.read.format("txntable").load(path).collect()))
-    assert got == [("a", "g", 1), ("b", "g", 2)]
 
 
 def test_vacuum_reaps_orphan_bloom_sidecars(registered, tmp_path):
@@ -580,345 +172,3 @@ def test_datasource_reads_manifest_exactly_once(registered, tmp_path):
     )
 
 
-def test_stream_rate_limit_caps_files_per_trigger(registered, tmp_path):
-    """maxFilesPerTrigger (Delta's streaming rate limit): latestOffset
-    advances by at most the epochs whose cumulative new-file count fits
-    the budget — a catch-up over table history plans bounded batches,
-    never one giant one — while always admitting at least one epoch
-    (progress) and never changing WHAT is streamed, only the batching."""
-    from kinesis3_spark.sources.txn_datasource import _TxnStreamReader
-
-    from kinesis3_spark.sinks.txn import read_manifest
-
-    spark, path = registered, str(tmp_path / "t")
-    for i in range(4):
-        append_snapshot(
-            _mk(spark, [(f"a{i}", "g", i), (f"b{i}", "g", i)]).coalesce(1),
-            path, key="id", n_buckets=2,
-        )
-    # per-epoch new-file counts straight from the manifests (bucket
-    # hashing makes them data-dependent: 1 or 2 files per append)
-    fsets = {
-        e: {x["path"] for x in read_manifest(path, e)["files"]}
-        for e in range(1, 5)
-    }
-    fsets[0] = set()
-    new = {e: len(fsets[e] - fsets[e - 1]) for e in range(1, 5)}
-
-    def expected_end(cursor, budget):
-        total, end = 0, cursor
-        for e in range(cursor + 1, 5):
-            total += new[e]
-            if total > budget and end > cursor:
-                break
-            end = e
-        return end
-
-    budget = new[1] + new[2]  # exactly two epochs' worth
-    sr = _TxnStreamReader(
-        {"path": path, "maxfilespertrigger": str(budget)}, "{}"
-    )
-    assert sr.initialOffset() == {"epoch": 0}
-    o1 = sr.latestOffset()
-    assert o1 == {"epoch": expected_end(0, budget)} and o1["epoch"] < 4
-    sr.partitions({"epoch": 0}, o1)
-    o2 = sr.latestOffset()
-    assert o2 == {"epoch": expected_end(o1["epoch"], budget)}
-    # a single epoch larger than the budget still admits (progress)
-    sr_small = _TxnStreamReader(
-        {"path": path, "maxfilespertrigger": "1"}, "{}"
-    )
-    sr_small.initialOffset()
-    assert sr_small.latestOffset() == {"epoch": 1}
-    # engine call order (measured on 4.1.2): a FRESH stream's first
-    # call is latestOffset — so a cursor-less first call must already
-    # cap from the configured start, not return unbounded (the r10 fix;
-    # r9 pinned the cursor in initialOffset, which the engine calls
-    # too late). A checkpoint restart replays the checkpointed range
-    # through partitions()/commit() first, recovering the position.
-    sr_r = _TxnStreamReader(
-        {"path": path, "maxfilespertrigger": "1"}, "{}"
-    )
-    assert sr_r.latestOffset() == {"epoch": 1}  # capped from epoch 0
-    sr_r.partitions({"epoch": 2}, {"epoch": 3})
-    append_snapshot(
-        _mk(spark, [("z1", "g", 9), ("z2", "g", 9)]).coalesce(1),
-        path, key="id",
-    )
-    append_snapshot(
-        _mk(spark, [("z3", "g", 9), ("z4", "g", 9)]).coalesce(1),
-        path, key="id",
-    )
-    assert sr_r.latestOffset() == {"epoch": 4}  # limited again after pin
-    # byte budget (manifest size harvest): a tiny budget admits exactly
-    # one epoch per batch — progress without ever fitting the budget
-    sr_b = _TxnStreamReader(
-        {"path": path, "maxbytespertrigger": "1"}, "{}"
-    )
-    sr_b.initialOffset()
-    assert sr_b.latestOffset() == {"epoch": 1}
-    sr_b.partitions({"epoch": 0}, {"epoch": 1})
-    assert sr_b.latestOffset() == {"epoch": 2}
-    # end-to-end: rate-limited availableNow drains deliver everything
-    # across REPEATED starts (the Python DS availableNow fallback
-    # samples latestOffset once per start, so each start advances one
-    # capped step — a long-running stream in discrete steps), and the
-    # union is exactly the table: the limit only splits batches, never
-    # drops or reorders data
-    ck = str(tmp_path / "ck")
-    got: list[tuple] = []
-    for _ in range(12):
-        step = _drain(spark, path, ck, maxFilesPerTrigger="2")
-        got.extend(step)
-        if not step and len(got) >= 12:
-            break
-    assert len(got) == 12 and len(set(got)) == 12
-
-
-def test_stream_rate_limit_restart_batch_is_bounded(registered, tmp_path):
-    """VERDICT r9 'Next round' #4: the FIRST batch after a checkpoint
-    restart must respect maxFilesPerTrigger. The engine replays the
-    checkpointed range via partitions()/commit() before the first
-    latestOffset (measured on 4.1.2), so the reader recovers its
-    admission cursor from either path — pinned here at the unit level
-    for both, then end-to-end across two availableNow drains."""
-    from kinesis3_spark.sources.txn_datasource import _TxnStreamReader
-
-    spark, path = registered, str(tmp_path / "t")
-    for i in range(5):
-        append_snapshot(
-            _mk(spark, [(f"a{i}", "g", i)]).coalesce(1), path,
-            key="id", n_buckets=1,
-        )
-    # commit() alone recovers the cursor (restart where the last batch
-    # was committed: engine acks it before asking for a new offset)
-    sr = _TxnStreamReader({"path": path, "maxfilespertrigger": "1"}, "{}")
-    sr.commit({"epoch": 2})
-    assert sr.latestOffset() == {"epoch": 3}  # bounded, not 5
-    # partitions() alone recovers it too (uncommitted-batch replay)
-    sr2 = _TxnStreamReader({"path": path, "maxfilespertrigger": "1"}, "{}")
-    sr2.partitions({"epoch": 1}, {"epoch": 2})
-    assert sr2.latestOffset() == {"epoch": 3}
-    # end-to-end: drain epochs 1-2, append more, restart on the same
-    # checkpoint — every post-restart micro-batch admits <=1 epoch's
-    # files and the union of batches is still exactly the delta
-    ck = str(tmp_path / "ck")
-    batches: list[int] = []
-
-    def drain():
-        batches.clear()
-        q = (
-            spark.readStream.format("txntable")
-            .option("maxFilesPerTrigger", "1")
-            .load(path)
-            .writeStream.foreachBatch(
-                lambda df, bid: batches.append(df.count())
-            )
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        if q.exception() is not None:
-            raise q.exception()
-        return list(batches)
-
-    # each start() advances one capped batch (the availableNow
-    # fallback samples latestOffset once per start); every batch —
-    # including the FIRST of every restarted run — must respect the
-    # 1-file budget, and the drains together deliver the whole table
-    all_batches: list[int] = []
-    delivered = 0
-    for _ in range(10):
-        step = drain()
-        all_batches.extend(step)
-        delivered += sum(step)
-        if delivered >= 5:
-            break
-    assert delivered == 5
-    for i in range(5, 8):
-        append_snapshot(
-            _mk(spark, [(f"a{i}", "g", i)]).coalesce(1), path,
-            key="id", n_buckets=1,
-        )
-    post = 0
-    for _ in range(8):
-        step = drain()
-        all_batches.extend(step)
-        post += sum(step)
-        if post >= 3:
-            break
-    assert post == 3
-    assert all(b <= 1 for b in all_batches), (
-        f"a batch exceeded the rate limit: {all_batches}"
-    )
-
-
-def test_stream_rate_limit_counts_dv_and_removed_slices(registered, tmp_path):
-    """ADVICE r9: epochs whose only change is deletion-vector growth or
-    file removal must count toward the file budget — a delete-dominated
-    catch-up is as scan-heavy as an append-dominated one."""
-    from kinesis3_spark.sources.txn_datasource import _TxnStreamReader
-
-    spark, path = registered, str(tmp_path / "t")
-    append_snapshot(
-        _mk(spark, [("a", "g", 1), ("b", "g", 2)]).coalesce(1), path,
-        key="id", n_buckets=1,
-    )                                     # epoch 1: 1 fresh file
-    delete_where(spark, path, "id = 'a'") # epoch 2: dv growth only
-    append_snapshot(
-        _mk(spark, [("c", "g", 3)]).coalesce(1), path,
-        key="id", n_buckets=1,
-    )                                     # epoch 3: 1 fresh file
-    sr = _TxnStreamReader(
-        {"path": path, "maxfilespertrigger": "1",
-         "ignoredeletes": "true"}, "{}"
-    )
-    sr.commit({"epoch": 1})
-    # budget 1: epoch 2's dv-grew slice fills it, epoch 3 must wait —
-    # the pre-fix walk counted epoch 2 as zero and admitted both
-    assert sr.latestOffset() == {"epoch": 2}
-    sr.partitions({"epoch": 1}, {"epoch": 2})
-    assert sr.latestOffset() == {"epoch": 3}
-
-
-def test_stream_fail_on_mapping_change_is_strict(registered, tmp_path):
-    """ADVICE r9 opt-in: failOnMappingChange=true restores the upstream
-    Delta rule — a column-mapping change committed inside the streamed
-    range fails the stream loudly instead of being absorbed by the
-    pinned mapping. Default behavior (absorb) is unchanged."""
-    from kinesis3_spark.sinks.txn import rename_column
-    from kinesis3_spark.sources.txn_datasource import _TxnStreamReader
-
-    spark, path = registered, str(tmp_path / "t")
-    append_snapshot(
-        _mk(spark, [("a", "g", 1)]).coalesce(1), path,
-        key="id", n_buckets=1,
-    )
-    # reader pinned BEFORE the rename; rename lands mid-stream
-    strict = _TxnStreamReader(
-        {"path": path, "failonmappingchange": "true"}, "{}"
-    )
-    lax = _TxnStreamReader({"path": path}, "{}")
-    rename_column(path, "val", "amount")
-    append_snapshot(
-        spark.createDataFrame([("b", "g", 2)],
-                              "id string, grp string, amount bigint")
-        .coalesce(1),
-        path, key="id", n_buckets=1,
-    )
-    with pytest.raises(ValueError, match="failOnMappingChange"):
-        strict.partitions({"epoch": 0}, {"epoch": 3})
-    assert len(lax.partitions({"epoch": 0}, {"epoch": 3})) > 0
-
-
-def test_fail_on_mapping_change_catches_rename_roundtrip(registered, tmp_path):
-    """Review r10 #5: an A->B->A rename ROUND-TRIP inside one catch-up
-    range must still fail strict mode — every epoch's mapping is
-    compared, not just the end's (Delta fails on the change commit)."""
-    from kinesis3_spark.sinks.txn import rename_column
-    from kinesis3_spark.sources.txn_datasource import _TxnStreamReader
-
-    spark, path = registered, str(tmp_path / "t")
-    append_snapshot(
-        _mk(spark, [("a", "g", 1)]).coalesce(1), path,
-        key="id", n_buckets=1,
-    )
-    strict = _TxnStreamReader(
-        {"path": path, "failonmappingchange": "true"}, "{}"
-    )
-    rename_column(path, "val", "amount")   # epoch 2: A -> B
-    rename_column(path, "amount", "val")   # epoch 3: B -> A (round-trip)
-    # end-epoch mapping equals the pinned one, but epoch 2's does not
-    with pytest.raises(ValueError, match="epoch 2"):
-        strict.partitions({"epoch": 1}, {"epoch": 3})
-
-
-def test_batch_writer_job_lease_spans_staging(registered, tmp_path,
-                                              monkeypatch):
-    """ADVICE r10 (medium): the batch DS writer's lease spans the WHOLE
-    job — acquired at writer construction (before any task stages a
-    file), released by commit()/abort() even when those run on an
-    UNPICKLED copy in a different worker (the release removes the lease
-    file; the init-side heartbeat exits on the utime OSError). While the
-    lease lives, a destructive vacuum refuses — staged files can never
-    be reaped mid-write. Stream writers hold NO stream-lifetime lease."""
-    import pickle
-    import time
-
-    from pyspark.sql.types import StructType
-
-    from kinesis3_spark.sinks import txn as T
-    from kinesis3_spark.sources.txn_datasource import (
-        _StagedFiles,
-        _TxnStreamWriter,
-        _TxnWriter,
-    )
-
-    spark, path = registered, str(tmp_path / "t")
-    append_snapshot(_mk(spark, [("a", "g", 1)]).coalesce(1),
-                    path, key="id", n_buckets=1)
-    schema = StructType.fromDDL("id string, grp string, val bigint")
-    # short TTL so heartbeat/expiry assertions run in seconds (the beat
-    # closure and _live_leases both read the module global dynamically)
-    monkeypatch.setattr(T, "_LEASE_TTL_SECONDS", 2.0)
-
-    w = _TxnWriter({"path": path}, schema, overwrite=False)
-    assert T._live_leases(path), "no lease at writer construction"
-    with pytest.raises(RuntimeError, match="live writer lease"):
-        T.vacuum_table(path, keep_epochs=1)
-
-    # cross-process release: commit on a PICKLED COPY (plain-str lease
-    # path must survive the executor pickle) removes the file...
-    w2 = pickle.loads(pickle.dumps(w))
-    w2.commit([_StagedFiles([])])
-    assert T._live_leases(path) == []
-    # ...and the ORIGINAL writer's heartbeat cannot resurrect it (the
-    # beat re-touches via utime, never re-creates; give it one period)
-    time.sleep(T._LEASE_TTL_SECONDS / 3.0 + 0.5)
-    assert T._live_leases(path) == []
-    T.vacuum_table(path, keep_epochs=1)  # no raise: writer quiesced
-
-    # abort releases too
-    w3 = _TxnWriter({"path": path}, schema, overwrite=False)
-    assert T._live_leases(path)
-    w3.abort([])
-    assert T._live_leases(path) == []
-
-    # stream writers must NOT wedge vacuum for the stream's lifetime
-    sw = _TxnStreamWriter({"path": path}, schema, overwrite=False)
-    assert T._live_leases(path) == []
-    assert getattr(sw, "_lease_path", None) is None
-
-
-def test_fail_on_mapping_change_ignores_rename_outside_range(
-    registered, tmp_path
-):
-    """ADVICE r10: the strict check's baseline is the mapping at the
-    RANGE'S START EPOCH, never the mapping pinned at reader init (the
-    latest manifest's). A rename committed while the stream was offline
-    — entirely after the checkpointed range a restart replays — must not
-    fail that replay; the failure belongs to the batch whose range
-    CONTAINS the rename commit."""
-    from kinesis3_spark.sinks.txn import rename_column
-    from kinesis3_spark.sources.txn_datasource import _TxnStreamReader
-
-    spark, path = registered, str(tmp_path / "t")
-    append_snapshot(
-        _mk(spark, [("a", "g", 1)]).coalesce(1), path,
-        key="id", n_buckets=1,
-    )
-    append_snapshot(
-        _mk(spark, [("b", "g", 2)]).coalesce(1), path,
-        key="id", n_buckets=1,
-    )
-    rename_column(path, "val", "amount")   # epoch 3, while "offline"
-    # restart AFTER the rename: init pins the post-rename mapping; the
-    # engine first replays the checkpointed pre-rename range (1, 2]
-    strict = _TxnStreamReader(
-        {"path": path, "failonmappingchange": "true"}, "{}"
-    )
-    assert len(strict.partitions({"epoch": 1}, {"epoch": 2})) > 0
-    # ...and the batch that CONTAINS the rename commit still fails
-    with pytest.raises(ValueError, match="epoch 3"):
-        strict.partitions({"epoch": 2}, {"epoch": 3})

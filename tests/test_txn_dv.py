@@ -333,17 +333,11 @@ def test_check_constraints_gate_commits(spark, tmp_path):
     append_snapshot(ok, path, key="id")
     assert read_snapshot(spark, path).count() == 42
     assert read_manifest(path)["constraints"] == {"val_nonneg": "val >= 0"}
-    # the DS writer enforces too (refusal lifted r12: task-side
-    # evaluation — a violating batch fails before commit publishes, a
-    # valid one lands)
-    from kinesis3_spark.sources.txn_datasource import TxnTableDataSource
-
-    spark.dataSource.register(TxnTableDataSource)
+    # a later violating batch still fails before anything publishes, and
+    # a valid one lands
     ep = read_manifest(path)["epoch"]
     with pytest.raises(Exception, match="val_nonneg"):
-        _mk(spark, [("w", "g", -1)]).write.format("txntable").mode(
-            "append").save(path)
+        append_snapshot(_mk(spark, [("w", "g", -1)]), path, key="id")
     assert read_manifest(path)["epoch"] == ep  # nothing published
-    _mk(spark, [("w", "g", 1)]).write.format("txntable").mode(
-        "append").save(path)
+    append_snapshot(_mk(spark, [("w", "g", 1)]), path, key="id")
     assert read_snapshot(spark, path).where("id = 'w'").count() == 1

@@ -1,9 +1,7 @@
 """GENERATED ALWAYS AS columns on the manifest txn table
 (sinks/txn._apply_generated): computed when a batch omits them,
 validated row-for-row when supplied, fixed at table creation, recomputed
-by MERGE (never clause-assigned), guarded against rename/drop, and since
-r12 enforced task-side by the DataSource writer too (portable evaluator;
-residual refusals only where evaluation genuinely cannot work)."""
+by MERGE (never clause-assigned), and guarded against rename/drop."""
 
 from __future__ import annotations
 
@@ -80,91 +78,6 @@ def test_rename_and_drop_guards(spark, table):
         T.drop_column(table, "val")
 
 
-# ---- DataSource writer (refusal lifted r12: task-side enforcement) ----
-
-
-def _register(spark):
-    from kinesis3_spark.sources.txn_datasource import TxnTableDataSource
-
-    spark.dataSource.register(TxnTableDataSource)
-
-
-def test_ds_writer_computes_generated_on_append(spark, table):
-    """df.write.format('txntable') on a generated-column table: the write
-    task computes the omitted column (Delta's write-plan point) and the
-    committed files read back with it populated."""
-    _register(spark)
-    (
-        spark.createDataFrame([(7, 40), (8, 50)], "id bigint, val bigint")
-        .write.format("txntable")
-        .option("key", "id")
-        .mode("append")
-        .save(table)
-    )
-    got = {r["id"]: r["doubled"] for r in T.read_snapshot(spark, table).collect()}
-    assert got[7] == 80 and got[8] == 100 and got[1] == 20
-
-
-def test_ds_writer_validates_supplied_generated_and_publishes_nothing(spark, table):
-    _register(spark)
-    ok = spark.createDataFrame([(7, 5, 10)], "id bigint, val bigint, doubled bigint")
-    ok.write.format("txntable").option("key", "id").mode("append").save(table)
-    ep = T.read_manifest(table)["epoch"]
-    bad = spark.createDataFrame([(8, 5, 11)], "id bigint, val bigint, doubled bigint")
-    with pytest.raises(Exception, match="generated-column violation"):
-        bad.write.format("txntable").option("key", "id").mode("append").save(table)
-    assert T.read_manifest(table)["epoch"] == ep  # nothing published
-
-
-def test_ds_writer_enforces_check_constraints_post_compute(spark, table):
-    """Constraints bind AFTER generated-column compute in the write task
-    (they may reference the generated column); NULL passes (SQL CHECK)."""
-    _register(spark)
-    T.add_constraint(table, "doubled_cap", "doubled <= 200")
-    ok = spark.createDataFrame(
-        [(7, 50), (8, None)], "id bigint, val bigint"
-    )  # doubled=100 passes; NULL*2=NULL passes CHECK
-    ok.write.format("txntable").option("key", "id").mode("append").save(table)
-    ep = T.read_manifest(table)["epoch"]
-    bad = spark.createDataFrame([(9, 500)], "id bigint, val bigint")
-    with pytest.raises(Exception, match="doubled_cap"):
-        bad.write.format("txntable").option("key", "id").mode("append").save(table)
-    assert T.read_manifest(table)["epoch"] == ep
-
-
-def test_ds_writer_residual_refusals(spark, table, tmp_path):
-    """The refusal survives only where task-side evaluation genuinely
-    cannot work: an expression referencing columns the batch lacks
-    entirely, and constraint/generated tables under column mapping."""
-    from kinesis3_spark.sources.txn_datasource import _TxnWriter
-    from pyspark.sql.types import StructType
-
-    with pytest.raises(ValueError, match="portable task-side evaluator"):
-        _TxnWriter({"path": table}, StructType([]), overwrite=False)
-    # mapped + generated combo: logical-name expressions over
-    # physical-name staged files
-    path = str(tmp_path / "m")
-    T.append_snapshot(
-        spark.createDataFrame([(1, 2)], "id bigint, v bigint"),
-        path, key="id", n_buckets=1,
-    )
-    T.rename_column(path, "v", "w")
-    T.add_constraint(path, "pos", "w > 0")
-    with pytest.raises(ValueError, match="COLUMN-MAPPED"):
-        _TxnWriter(
-            {"path": path},
-            StructType.fromJson(
-                {"type": "struct", "fields": [
-                    {"name": "id", "type": "long", "nullable": True,
-                     "metadata": {}},
-                    {"name": "w", "type": "long", "nullable": True,
-                     "metadata": {}},
-                ]}
-            ),
-            overwrite=False,
-        )
-
-
 def test_generated_zone_maps_prune_derived_predicates(spark, tmp_path):
     # event-style table: ingest ordered by a raw timestamp, stats on the
     # GENERATED date — a derived-predicate probe opens only the commits
@@ -221,90 +134,9 @@ def test_batch_missing_generated_inputs_raises_contract_error(spark, table):
     assert row["val"] is None and row["doubled"] is None
 
 
-def test_ds_writer_generated_matches_sinks_path_on_portable_exprs(spark, tmp_path):
-    """Dialect cross-check for the r12 task-side evaluator: the SAME
-    portable expressions (CAST-to-DATE, floor arithmetic, CASE) computed
-    by the sinks path (Spark F.expr) and the DS write task (DuckDB over
-    Arrow) must produce identical stored values — re-verified against a
-    fresh Spark recompute over every row of both writers' commits."""
-    import datetime as dt
-
-    path = str(tmp_path / "x")
-    gen = {
-        "day": "CAST(ts AS DATE)",
-        "cents": "CAST(floor(value * 100 + 0.5) AS BIGINT)",
-        "band": "CASE WHEN value >= 5.0 THEN 'hi' ELSE 'lo' END",
-    }
-    rows1 = [
-        (1, dt.datetime(2024, 3, 1, 23, 59, 59, 999999), 4.995),
-        (2, dt.datetime(2024, 3, 2, 0, 0, 0, 1), 5.0),
-    ]
-    schema = "id bigint, ts timestamp, value double"
-    T.append_snapshot(
-        spark.createDataFrame(rows1, schema), path, key="id", n_buckets=2,
-        generated_cols=gen,
-    )
-    _register(spark)
-    rows2 = [
-        (3, dt.datetime(2024, 3, 3, 12, 30, 0, 500000), 0.005),
-        (4, dt.datetime(2024, 3, 4, 1, 2, 3, 0), 123.455),
-    ]
-    (
-        spark.createDataFrame(rows2, schema)
-        .write.format("txntable").option("key", "id").mode("append").save(path)
-    )
-    got = T.read_snapshot(spark, path)
-    diff = got.where(
-        ~F.col("day").eqNullSafe(F.expr(gen["day"]))
-        | ~F.col("cents").eqNullSafe(F.expr(gen["cents"]))
-        | ~F.col("band").eqNullSafe(F.expr(gen["band"]))
-    )
-    assert got.count() == 4 and diff.count() == 0
-
-
-# --------------------------------------------------------------------------
-# Cross-engine expression portability probe (round 13, ADVICE r12 medium)
-# --------------------------------------------------------------------------
-
-
-def test_registration_refuses_round_vs_truncate_cast(spark, tmp_path):
-    """CAST(double AS INT) compiles in BOTH engines but rounds in DuckDB
-    and truncates in non-ANSI Spark — the silent-fork case the probe
-    exists for. Registration must refuse it, both as a generated column
-    and as a constraint."""
-    path = str(tmp_path / "t")
-    batch = spark.createDataFrame([(1, 2.5)], "id bigint, v double")
-    with pytest.raises(ValueError, match="non-portable generated column"):
-        T.append_snapshot(
-            batch, path, key="id", generated_cols={"vi": "CAST(v AS INT)"}
-        )
-    T.append_snapshot(batch, path, key="id")
-    # the constraint's TRUTH VALUE must diverge for the probe to see it
-    # (v=1.5: Spark truncates to 1 → TRUE, DuckDB rounds to 2 → FALSE);
-    # a constraint whose boolean result happens to agree on the probe
-    # values (e.g. CAST(v AS INT) >= 0) is observationally portable AS A
-    # CHECK and is deliberately not refused.
-    with pytest.raises(ValueError, match="non-portable constraint"):
-        T.add_constraint(path, "c1", "CAST(v AS INT) = 1")
-
-
-def test_registration_refuses_null_vs_error_string_cast(spark, tmp_path):
-    """CAST(string AS INT) is NULL for non-numeric strings in non-ANSI
-    Spark but an ERROR in DuckDB: one engine fails mid-write where the
-    other silently proceeds — refuse at registration."""
-    path = str(tmp_path / "t")
-    batch = spark.createDataFrame([(1, "123")], "id bigint, s string")
-    T.append_snapshot(batch, path, key="id")
-    with pytest.raises(ValueError, match="non-portable constraint"):
-        T.add_constraint(path, "c1", "CAST(s AS INT) IS NULL OR CAST(s AS INT) >= 0")
-    # the portable spelling of the same intent is accepted
-    T.add_constraint(path, "c2", "try_cast(s AS INT) IS NULL OR try_cast(s AS INT) >= 0")
-
-
 def test_registration_allows_spark_only_expressions(spark, tmp_path):
-    """An expression DuckDB cannot even COMPILE stays registrable: the
-    table is Spark-only by declaration and the DS writer's dry-compile
-    already refuses it loudly at plan time — no silent path exists."""
+    """Any Spark SQL expression registers: Spark is the one evaluator,
+    so a function only Spark knows (format_string) computes as usual."""
     path = str(tmp_path / "t")
     batch = spark.createDataFrame([(1, 5)], "id bigint, v bigint")
     T.append_snapshot(
@@ -316,8 +148,8 @@ def test_registration_allows_spark_only_expressions(spark, tmp_path):
 
 
 def test_portable_expressions_still_register_and_roundtrip(spark, tmp_path):
-    """The portable dialect the r12 lift targeted keeps working end to
-    end: arithmetic, CASE, floor-before-cast."""
+    """Arithmetic, CASE and floor-before-cast expressions register and
+    compute end to end."""
     path = str(tmp_path / "t")
     batch = spark.createDataFrame([(1, 2.5), (2, -2.5)], "id bigint, v double")
     T.append_snapshot(

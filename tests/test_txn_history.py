@@ -79,25 +79,6 @@ def test_history_truncates_at_vacuum_retention(spark, table):
     assert all(r["operation"] == "APPEND" for r in h)
 
 
-def test_clone_and_ds_write_are_recorded(spark, table, tmp_path):
-    dst = str(tmp_path / "c")
-    T.clone_table(table, dst)
-    h = T.table_history(dst)
-    assert h[0]["operation"] == "CLONE"
-    assert h[0]["params"]["source"] == table
-    from kinesis3_spark.sources.txn_datasource import TxnTableDataSource
-
-    spark.dataSource.register(TxnTableDataSource)
-    (
-        spark.createDataFrame([(9, 9, "x")], "id bigint, val bigint, seg string")
-        .write.format("txntable").option("key", "id")
-        .mode("append").save(dst)
-    )
-    h = T.table_history(dst)
-    assert h[0]["operation"] == "WRITE"
-    assert h[0]["params"]["mode"] == "append"
-
-
 def test_vacuum_dry_run_reports_without_deleting(spark, table):
     for i in range(3):
         T.append_snapshot(
