@@ -39,6 +39,7 @@ The driver holds only counters (no rows)."""
 from __future__ import annotations
 
 import json
+import math
 import threading
 import time
 from collections import deque
@@ -71,7 +72,9 @@ def _percentiles(xs: list[float]) -> dict[str, float]:
     if not xs:
         return {}
     s = sorted(xs)
-    pick = lambda q: s[min(len(s) - 1, int(q * len(s)))]
+    # Nearest rank, as perfbench.spans.percentile: the smallest sample with
+    # at least q of the samples at or below it.
+    pick = lambda q: s[max(0, math.ceil(q * len(s)) - 1)]
     return {
         "min": round(s[0], 3),
         "p50": round(pick(0.50), 3),

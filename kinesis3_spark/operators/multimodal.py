@@ -261,8 +261,8 @@ def image_ahash(
 
 
 def _ahash_bands_of(payload: bytes) -> list[int]:
-    """The aHash kernel of image_ahash as a pure function (shared with
-    frame_ahash): RAWI/codec payload → 4 × 16-bit band values."""
+    """The aHash kernel of image_ahash as a pure function: RAWI/codec
+    payload → 4 × 16-bit band values."""
     a = _decode_image(payload).astype(np.int64).sum(axis=2)
     h, w = a.shape
     rb = (np.arange(9) * h) // 8
@@ -561,410 +561,3 @@ def banded_hamming_matches(
     )
     near = probe.join(near_hashes, "bands", "left_semi").select("media_id")
     return exact.unionByName(near).distinct()
-
-
-def frame_ahash(
-    frames: DataFrame,
-    id_col: str = "media_id",
-    idx_col: str = "frame_idx",
-    data_col: str = "data",
-) -> DataFrame:
-    """(media_id, frame_idx, bands): the image aHash applied per sampled
-    frame — sample_frames output feeds straight in. One Arrow pass; the
-    frame payload never leaves the executor."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, bands_out = [], [], []
-            for mid, idx, b in zip(pdf[id_col], pdf[idx_col], pdf[data_col]):
-                ids.append(mid)
-                idxs.append(idx)
-                bands_out.append(_ahash_bands_of(bytes(b)))
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "bands": bands_out}
-            )
-
-    return frames.select(id_col, idx_col, data_col).mapInPandas(
-        run, schema="media_id long, frame_idx int, bands array<int>"
-    )
-
-
-def video_neardup_pairs(
-    frame_hashes: DataFrame,
-    max_hamming: int = 3,
-    min_frac: tuple[int, int] = (1, 2),
-    frac_of: str = "min",
-    min_aligned: int = 1,
-) -> DataFrame:
-    """Video near-dup pairs from per-frame aHashes: two videos pair when
-    the SAME-INDEX frame matches (Hamming ≤ max_hamming) for at least
-    min_frac = (num, den) of the smaller video's sampled frames —
-    n_match · den ≥ min(n_a, n_b) · num, integer cross-multiplied so the
-    threshold is SQL-re-derivable. Aligning on frame_idx is the
-    re-encode/re-upload dedup shape (same cut, same sampling grid);
-    detecting time-shifted clips is the harder shingle-alignment problem
-    and out of scope for this tier.
-
-    Plan (the banded_hamming_pairs discipline, keyed by frame index so
-    candidates never cross frames): identical frame hashes pair by a
-    plain (frame_idx, bands) equi-join; distinct hashes meet only inside
-    a (frame_idx, band, value) bucket, exact Hamming on DISTINCT
-    (frame_idx, hash-pair) rows, ids joined back. Frame matches union
-    DISTINCT (a video pair whose frame matches via both legs counts that
-    frame once), roll up per video pair, and the per-video frame counts
-    join in for the threshold. Never all-pairs across videos or frames;
-    per-bucket candidate volume is the LSH knob (raise bands for larger
-    radii)."""
-    if max_hamming >= 4:
-        raise ValueError(
-            "4-band aHash encoding is lossless only for Hamming radius <= 3"
-        )
-    if frac_of not in ("min", "max"):
-        raise ValueError("frac_of must be 'min' or 'max'")
-    # frac_of='min' is the containment form (a short clip fully inside a
-    # longer one passes); 'max' is the strict re-encode form — BOTH sides
-    # must match nearly everywhere, which is the right gate when short
-    # clips would otherwise pair promiscuously (a 1-frame video passes
-    # the 'min' half-threshold with a single frame hit). min_aligned
-    # floors the absolute evidence either way.
-    num, den = min_frac
-    fh = frame_hashes.select("media_id", "frame_idx", "bands")
-    fdist = fh.select("frame_idx", "bands").distinct()
-    keyed = fdist.select(
-        "frame_idx", "bands", F.posexplode("bands").alias("band", "bv")
-    )
-    x, y = keyed.alias("x"), keyed.alias("y")
-    ham = F.aggregate(
-        F.zip_with(
-            F.col("ba"), F.col("bb"), lambda a, b: F.bit_count(a.bitwiseXOR(b))
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ).cast("int")
-    near = (
-        x.join(
-            y,
-            (F.col("x.frame_idx") == F.col("y.frame_idx"))
-            & (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bv") == F.col("y.bv"))
-            & (F.col("x.bands") < F.col("y.bands")),
-        )
-        .select(
-            F.col("x.frame_idx").alias("fi"),
-            F.col("x.bands").alias("ba"),
-            F.col("y.bands").alias("bb"),
-        )
-        .distinct()
-        .withColumn("__h", ham)
-        .where(F.col("__h") <= max_hamming)
-    )
-    fa = fh.select(
-        F.col("frame_idx").alias("fi"),
-        F.col("bands").alias("ba"),
-        F.col("media_id").alias("ia"),
-    )
-    fb = fh.select(
-        F.col("frame_idx").alias("fi"),
-        F.col("bands").alias("bb"),
-        F.col("media_id").alias("ib"),
-    )
-    near_frames = (
-        near.join(fa, ["fi", "ba"])
-        .join(fb, ["fi", "bb"])
-        .where(F.col("ia") != F.col("ib"))
-        .select("fi", "ia", "ib")
-    )
-    same_frames = (
-        fh.alias("p")
-        .join(
-            fh.alias("q"),
-            (F.col("p.frame_idx") == F.col("q.frame_idx"))
-            & (F.col("p.bands") == F.col("q.bands"))
-            & (F.col("p.media_id") != F.col("q.media_id")),
-        )
-        .select(
-            F.col("p.frame_idx").alias("fi"),
-            F.col("p.media_id").alias("ia"),
-            F.col("q.media_id").alias("ib"),
-        )
-    )
-    matched = (
-        near_frames.unionByName(same_frames)
-        .select(
-            "fi",
-            F.least("ia", "ib").alias("media_id_a"),
-            F.greatest("ia", "ib").alias("media_id_b"),
-        )
-        .distinct()
-    )
-    counts = fh.groupBy("media_id").agg(F.count("*").cast("long").alias("nf"))
-    pairs = matched.groupBy("media_id_a", "media_id_b").agg(
-        F.count("*").cast("long").alias("n_match")
-    )
-    ca = counts.select(
-        F.col("media_id").alias("media_id_a"), F.col("nf").alias("n_a")
-    )
-    cb = counts.select(
-        F.col("media_id").alias("media_id_b"), F.col("nf").alias("n_b")
-    )
-    ref = F.least("n_a", "n_b") if frac_of == "min" else F.greatest("n_a", "n_b")
-    return (
-        pairs.join(ca, "media_id_a")
-        .join(cb, "media_id_b")
-        .where(
-            (F.col("n_match") * den >= ref * num)
-            & (F.col("n_match") >= min_aligned)
-        )
-        .select("media_id_a", "media_id_b", "n_match", "n_a", "n_b")
-    )
-
-
-def audio_subfingerprints(
-    df: DataFrame,
-    frame: int = 256,
-    bits: int = 16,
-    id_col: str = "media_id",
-    data_col: str = "data",
-) -> DataFrame:
-    """(media_id, k, sv): the TIME-LOCAL tier of the audio fingerprint —
-    fixed `frame`-sample windows (absolute, not clip-relative, so the
-    same content produces the same values wherever it sits in the clip),
-    energy-delta sign bits, and at each window position k the `bits`
-    consecutive bits packed into sub-fingerprint sv. A clip shifted by
-    EXACTLY m frames reproduces the other clip's sub-fingerprints at
-    k+m — what audio_offset_match_pairs exploits; the whole-clip
-    audio_fingerprint above cannot see shifted content because its
-    window grid stretches with clip length.
-
-    Integer-exact (int64 energy sums, pure comparisons); one Arrow pass;
-    output ≤ n_samples/frame rows × ~20 bytes per clip. `bits` is the
-    selectivity knob: the downstream join buckets on sv, so per-bucket
-    candidate volume scales with corpus_subfingerprints / 2^bits —
-    raise it (and/or add a coarse energy quantile to the key) for
-    billion-clip corpora, exactly the LSH band/row trade."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ks, svs = [], [], []
-            for mid, b in zip(pdf[id_col], pdf[data_col]):
-                samples, _rate = _decode_audio(bytes(b))
-                n = len(samples) // frame
-                if n < 2:
-                    continue
-                s = samples[: n * frame].astype(np.int64)
-                e = (s * s).reshape(n, frame).sum(axis=1)
-                dbits = (e[1:] > e[:-1]).astype(np.int64)  # n-1 bits
-                for k in range(len(dbits) - bits + 1):
-                    sv = 0
-                    for j in range(bits):
-                        sv |= int(dbits[k + j]) << j
-                    ids.append(mid)
-                    ks.append(k)
-                    svs.append(sv)
-            yield pd.DataFrame({"media_id": ids, "k": ks, "sv": svs})
-
-    return df.select(id_col, data_col).mapInPandas(
-        run, schema="media_id long, k int, sv long"
-    )
-
-
-def audio_offset_match_pairs(
-    sub: DataFrame, min_matches: int = 4
-) -> DataFrame:
-    """Offset-invariant audio near-dup pairs from sub-fingerprint
-    sequences — the Shazam/chromaprint alignment shape: two clips match
-    when ≥ `min_matches` sub-fingerprints agree AT A CONSISTENT TIME
-    OFFSET (join on sub-fingerprint value, histogram the per-pair k
-    deltas, keep the best-supported delta). Catches trims, padding, and
-    concatenation — the duplicate classes the frame-aligned and
-    whole-clip tiers both miss.
-
-    Plan: one equi-join on sv (bucket-bounded by the sub-fingerprint
-    key space — the audio_subfingerprints `bits` knob), a map-side-
-    combinable (a, b, delta) count rollup, and an argmax window over
-    each pair's bounded delta histogram. Never all-pairs; never a
-    global sort."""
-    from pyspark.sql.window import Window
-
-    a = sub.select(
-        F.col("media_id").alias("ia"), F.col("k").alias("ka"), "sv"
-    )
-    b = sub.select(
-        F.col("media_id").alias("ib"), F.col("k").alias("kb"), "sv"
-    )
-    hits = (
-        a.join(b, "sv")
-        .where(F.col("ia") < F.col("ib"))
-        .groupBy(
-            "ia", "ib", (F.col("ka") - F.col("kb")).alias("delta")
-        )
-        .agg(F.count("*").cast("long").alias("n_aligned"))
-    )
-    # scale-ok: partitioned by (ia, ib); each pair's delta histogram is
-    # bounded by the two clips' sub-fingerprint counts
-    w = Window.partitionBy("ia", "ib").orderBy(
-        F.col("n_aligned").desc(), F.col("delta")
-    )
-    return (
-        hits.withColumn("__r", F.row_number().over(w))
-        .where((F.col("__r") == 1) & (F.col("n_aligned") >= min_matches))
-        .select(
-            F.col("ia").alias("media_id_a"),
-            F.col("ib").alias("media_id_b"),
-            "delta",
-            "n_aligned",
-        )
-    )
-
-
-def video_offset_match_pairs(
-    frame_hashes: DataFrame,
-    min_matches: int = 3,
-    max_hash_docs: int | None = None,
-) -> DataFrame:
-    """Offset-invariant video near-dup pairs — the delta-histogram shape
-    of audio_offset_match_pairs on the frame-hash table: two videos
-    match when ≥ `min_matches` frames carry IDENTICAL aHashes at a
-    consistent frame-index offset (trims, prepended intros, clips
-    embedded in longer reels — the classes the frame-ALIGNED
-    video_neardup_pairs misses because it requires equal indices).
-
-    Join buckets on the exact 64-bit hash (the dominant same-cut
-    re-upload case); a tolerance tier would swap the key for the
-    (band, value) buckets of banded_hamming_pairs and verify — the same
-    upgrade path, deliberately not paid here. One equi-join, one
-    map-side-combinable (pair, delta) rollup, one argmax window over
-    each pair's bounded delta histogram."""
-    if max_hash_docs is not None:
-        # stop-hash exclusion: frame hashes shared by more than
-        # `max_hash_docs` distinct videos (uniform/padding frames — the
-        # corpus-wide heavy hitters) are dropped from BOTH join sides;
-        # without it those buckets go corpus-quadratic, the same
-        # heavy-gram pruning ExactSubstr and the postings tier apply.
-        rare = (
-            frame_hashes.groupBy("bands")
-            .agg(F.count_distinct("media_id").alias("__nd"))
-            .where(F.col("__nd") <= max_hash_docs)
-            .select("bands")
-        )
-        frame_hashes = frame_hashes.join(rare, "bands", "left_semi")
-    a = frame_hashes.select(
-        F.col("media_id").alias("ia"), F.col("frame_idx").alias("ka"), "bands"
-    )
-    b = frame_hashes.select(
-        F.col("media_id").alias("ib"), F.col("frame_idx").alias("kb"), "bands"
-    )
-    hits = (
-        a.join(b, "bands")
-        .where(F.col("ia") < F.col("ib"))
-        .groupBy("ia", "ib", (F.col("ka") - F.col("kb")).alias("delta"))
-        .agg(F.count("*").cast("long").alias("n_aligned"))
-    )
-    from pyspark.sql.window import Window
-
-    # scale-ok: partitioned by (ia, ib); each pair's delta histogram is
-    # bounded by the two videos' sampled frame counts
-    w = Window.partitionBy("ia", "ib").orderBy(
-        F.col("n_aligned").desc(), F.col("delta")
-    )
-    return (
-        hits.withColumn("__r", F.row_number().over(w))
-        .where((F.col("__r") == 1) & (F.col("n_aligned") >= min_matches))
-        .select(
-            F.col("ia").alias("media_id_a"),
-            F.col("ib").alias("media_id_b"),
-            "delta",
-            "n_aligned",
-        )
-    )
-
-
-def video_neardup_matches(
-    probe: DataFrame,
-    history: DataFrame,
-    max_hamming: int = 3,
-    min_frac: tuple[int, int] = (1, 2),
-    frac_of: str = "min",
-    min_aligned: int = 1,
-) -> DataFrame:
-    """Distinct probe `media_id`s whose video is a frame-aligned near-dup
-    of AT LEAST ONE history video — the cross-relation form of
-    video_neardup_pairs (the admission-gate primitive, like
-    banded_hamming_matches for single images): a probe matches a history
-    video when their same-index frames agree within `max_hamming` for
-    ≥ min_frac of the smaller side's frame count.
-
-    Same bucketed discipline: identical frame hashes meet by a
-    (frame_idx, bands) equi-join, distinct ones only inside a
-    (frame_idx, band, value) bucket with exact Hamming on DISTINCT hash
-    pairs; per-(probe, history-video) aligned-frame counts roll up
-    map-side and the integer cross-multiplied threshold decides. History
-    frame hashes are values + ids (ids needed for the per-video frame
-    counts) — still ~50 bytes/frame, materialized once."""
-    if max_hamming >= 4:
-        raise ValueError(
-            "4-band aHash encoding is lossless only for Hamming radius <= 3"
-        )
-    if frac_of not in ("min", "max"):
-        raise ValueError("frac_of must be 'min' or 'max'")
-    num, den = min_frac
-    p = probe.select("media_id", "frame_idx", "bands")
-    h = history.select("media_id", "frame_idx", "bands")
-    ham = F.aggregate(
-        F.zip_with(
-            F.col("pb"), F.col("hb"), lambda a, b: F.bit_count(a.bitwiseXOR(b))
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ).cast("int")
-    pk = p.select("frame_idx", "bands").distinct().select(
-        "frame_idx", F.col("bands").alias("pb"),
-        F.posexplode("bands").alias("band", "bv"),
-    )
-    hk = h.select("frame_idx", "bands").distinct().select(
-        "frame_idx", F.col("bands").alias("hb"),
-        F.posexplode("bands").alias("band", "bv"),
-    )
-    near = (
-        pk.join(
-            hk.withColumnRenamed("frame_idx", "fi2"),
-            (F.col("frame_idx") == F.col("fi2"))
-            & (pk["band"] == hk["band"])
-            & (pk["bv"] == hk["bv"])
-            & (F.col("pb") != F.col("hb")),
-        )
-        .select("frame_idx", "pb", "hb")
-        .distinct()
-        .where(ham <= max_hamming)
-    )
-    pa = p.select(
-        "frame_idx", F.col("bands").alias("pb"), F.col("media_id").alias("ip")
-    )
-    hb_ = h.select(
-        "frame_idx", F.col("bands").alias("hb"), F.col("media_id").alias("ih")
-    )
-    near_frames = near.join(pa, ["frame_idx", "pb"]).join(
-        hb_, ["frame_idx", "hb"]
-    ).select("frame_idx", "ip", "ih")
-    same_frames = (
-        pa.withColumnRenamed("pb", "bands")
-        .join(hb_.withColumnRenamed("hb", "bands"), ["frame_idx", "bands"])
-        .select("frame_idx", "ip", "ih")
-    )
-    matched = near_frames.unionByName(same_frames).distinct()
-    np_ = p.groupBy("media_id").agg(F.count("*").cast("long").alias("n_p"))
-    nh = h.groupBy("media_id").agg(F.count("*").cast("long").alias("n_h"))
-    counts = matched.groupBy("ip", "ih").agg(
-        F.count("*").cast("long").alias("n_match")
-    )
-    ref = F.least("n_p", "n_h") if frac_of == "min" else F.greatest("n_p", "n_h")
-    return (
-        counts.join(np_.withColumnRenamed("media_id", "ip"), "ip")
-        .join(nh.withColumnRenamed("media_id", "ih"), "ih")
-        .where(
-            (F.col("n_match") * den >= ref * num)
-            & (F.col("n_match") >= min_aligned)
-        )
-        .select(F.col("ip").alias("media_id"))
-        .distinct()
-    )

@@ -25,8 +25,6 @@ this implements the SURVEY.md LLM-pipeline mandate.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame

@@ -690,530 +690,3 @@ def stream_image_phash_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-# --------------------------------------------------------------------------
-# Video near-dup dedup (round 14 pre-build — REGISTRATION PENDING r15).
-# NOT decorated with @query yet: the round-14 official window is sized to
-# drain the r8 freshness tail (VERDICT r13 agenda #1 capped new
-# registrations at 8, all used); the query, its oracle, and a full parity
-# pytest (tests/test_multimodal.py) are finished so r15 registers it by
-# adding the decorator. Architecture mirrors the image/audio legs: videos
-# synthesized deterministically from text (consecutive 16-byte slices as
-# 4x4 gray frames, so near-dup texts become near-dup frame sequences and
-# the oracle re-derives every frame hash arithmetically), REAL
-# sample_frames -> frame_ahash -> video_neardup_pairs operators. The threshold is the STRICT re-encode
-# form — >=90% of the LARGER video's sampled frames matching, floor 2 —
-# because the containment (half-of-smaller) form lets 1-frame clips pair
-# promiscuously at this tiny synthetic geometry (3929 pairs at sf0.001 vs
-# 28 strict).
-# --------------------------------------------------------------------------
-
-def _synthesize_videos_from_text(docs: DataFrame) -> DataFrame:
-    """documents → RAWV videos whose frame i is text bytes [16i, 16i+16)
-    as a 4×4 gray frame (zero-padded; ≥1 frame). The time-axis analogue
-    of _synthesize_audio_from_text: planted near-dup texts give the pair
-    join a real twin population (the constant-frame synthesizer above
-    stays for the features/sampling queries, where exact means matter)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                px = np.frombuffer(text.encode(), np.uint8)
-                n = max(1, (len(px) + 15) // 16)
-                buf = np.zeros(n * 16, np.uint8)
-                buf[: len(px)] = px
-                ids.append(did)
-                payloads.append(M.encode_rawv(buf.reshape(n, 4, 4)))
-            yield pd.DataFrame({"media_id": ids, "data": payloads})
-
-    return docs.select("doc_id", "text").mapInPandas(
-        gen, schema="media_id long, data binary"
-    )
-
-
-# Frame-hash derivation for the oracle: a 4×4 frame's 8×8 floor-boundary
-# grid has one real pixel per odd (rg, cg) group (rb = k*4//8 collapses
-# even groups to empty), so bit(r, c) = 1 iff 16·v > frame_sum, and band
-# r packs bits at positions 2c+9 — the closed form of the image kernel at
-# this geometry, re-derived independently below.
-# Shared CTE prefix: WITH vid ... fph (per-doc sampled-frame hashes) —
-# consumed by the pair oracle below and the admission oracle further down.
-_VIDEO_FPH_CTES = """
-    WITH vid AS (
-      SELECT doc_id, text, octet_length(encode(text)) AS L,
-             greatest(1, (octet_length(encode(text)) + 15) // 16) AS nf
-      FROM documents
-    ),
-    fidx AS (  -- the every_n=2 sampling grid: frames 0, 2, 4, ...
-      SELECT v.doc_id, v.text, v.L, g.fi
-      FROM vid v, UNNEST(generate_series(0, v.nf - 1, 2)) AS g(fi)
-    ),
-    px AS (    -- 16 pixels per sampled frame, zero-padded past L
-      SELECT f.doc_id, f.fi, p.i AS pi,
-             CASE WHEN 16 * f.fi + p.i + 1 <= f.L
-                  THEN ord(substr(f.text, 16 * f.fi + p.i + 1, 1))
-                  ELSE 0 END AS v
-      FROM fidx f, UNNEST(generate_series(0, 15)) AS p(i)
-    ),
-    ft AS (SELECT doc_id, fi, sum(v) AS ts FROM px GROUP BY 1, 2),
-    bits AS (  -- single-pixel cells: mean test is 16·v > frame total
-      SELECT p.doc_id, p.fi, p.pi // 4 AS r, p.pi % 4 AS c,
-             CASE WHEN p.v * 16 > t.ts THEN 1 ELSE 0 END AS bit
-      FROM px p JOIN ft t ON t.doc_id = p.doc_id AND t.fi = p.fi
-    ),
-    fbands AS (
-      SELECT doc_id, fi, r AS band,
-             sum(bit << (2 * c + 9))::BIGINT AS bv
-      FROM bits GROUP BY 1, 2, 3
-    ),
-    fph AS (
-      SELECT doc_id, fi, list(bv ORDER BY band) AS bands
-      FROM fbands GROUP BY 1, 2
-    )
-"""
-
-_VIDEO_PAIRS_ORACLE = _VIDEO_FPH_CTES + """
-    ,
-    fmatch AS (  -- same-index frames within Hamming 3 (brute force)
-      SELECT a.doc_id AS ia, b.doc_id AS ib, a.fi
-      FROM fph a JOIN fph b ON a.fi = b.fi AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.bands[1], b.bands[1]))
-          + bit_count(xor(a.bands[2], b.bands[2]))
-          + bit_count(xor(a.bands[3], b.bands[3]))
-          + bit_count(xor(a.bands[4], b.bands[4])) <= 3
-    ),
-    nmatch AS (SELECT ia, ib, count(*) AS n_match FROM fmatch GROUP BY 1, 2),
-    nfr AS (SELECT doc_id, count(*) AS nfr FROM fph GROUP BY 1)
-    SELECT n.ia AS media_id_a, n.ib AS media_id_b,
-           n.n_match::BIGINT AS n_match,
-           ca.nfr::BIGINT AS n_a, cb.nfr::BIGINT AS n_b
-    FROM nmatch n
-    JOIN nfr ca ON ca.doc_id = n.ia
-    JOIN nfr cb ON cb.doc_id = n.ib
-    WHERE n.n_match * 10 >= 9 * greatest(ca.nfr, cb.nfr)
-      AND n.n_match >= 2
-    ORDER BY 1, 2
-"""
-
-
-def video_neardup_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video near-duplicate pairs: synthesize RAWV containers, run the
-    REAL sample_frames (every_n=2) → frame_ahash (one Arrow pass per
-    stage) → video_neardup_pairs — same-index frames matched at Hamming
-    ≤3 inside (frame_idx, band, value) buckets only, videos paired when
-    ≥90% of the LARGER video's sampled frames match with ≥2 aligned
-    frames (integer cross-multiplied; the strict re-encode form). The brute-force oracle re-derives every frame
-    hash arithmetically from the text-slice geometry. At 100 TB: frame
-    hashes are ~50 bytes/frame, payloads never leave the executors, and
-    candidate volume is per-(frame_idx, band, value) bucket — never
-    corpus-quadratic."""
-    vids = _synthesize_videos_from_text(_t(spark, sf_dir, "documents"))
-    fh = M.frame_ahash(M.sample_frames(vids, every_n=2))
-    return M.video_neardup_pairs(
-        fh, max_hamming=3, min_frac=(9, 10), frac_of="max", min_aligned=2
-    ).orderBy("media_id_a", "media_id_b")
-
-
-# --------------------------------------------------------------------------
-# Streaming audio admission (round 14 pre-build — REGISTRATION PENDING
-# r15, same window-cap reason as the video tier above): the audio
-# fingerprint gate as an ingest job — clips stream in, each admitted iff
-# its energy-delta fingerprint is not within Hamming 7 of the static
-# src0+src1 history. The image gate's architecture verbatim with the
-# 8-band encoding; banded_hamming_matches is band-agnostic.
-# --------------------------------------------------------------------------
-
-def _stream_afp_materialize(spark: SparkSession, sf_dir: str) -> str:
-    from ..streaming import stream_documents
-    from ..streaming.run import await_or_raise
-
-    def build(scratch):
-        out = scratch + "/admitted"
-        ck = scratch + "/ck"
-        docs = _t(spark, sf_dir, "documents")
-        hist = (
-            _afp_for(spark, sf_dir)
-            .join(
-                docs.where(F.col("source").isin("src0", "src1")).select(
-                    F.col("doc_id").alias("media_id")
-                ),
-                "media_id",
-                "left_semi",
-            )
-            .select("bands")
-            .distinct()
-            .persist()
-        )
-        hist.count()  # materialize once; every micro-batch reuses it
-
-        def gate_batch(bdf, batch_id: int) -> None:
-            probe_docs = bdf.where(~F.col("source").isin("src0", "src1"))
-            fp = M.audio_fingerprint(_synthesize_audio_from_text(probe_docs))
-            matched = M.banded_hamming_matches(fp, hist, max_hamming=7, n_bands=8)
-            (
-                probe_docs.select(F.col("doc_id").alias("media_id"), "source")
-                .join(matched.withColumn("__hit", F.lit(1)), "media_id", "left")
-                .select(
-                    "media_id",
-                    "source",
-                    F.coalesce(F.lit(1) - F.col("__hit"), F.lit(1)).alias("admitted"),
-                )
-                .write.mode("append")
-                .parquet(out)
-            )
-
-        q = (
-            stream_documents(spark, sf_dir)
-            .writeStream.foreachBatch(gate_batch)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q)
-        return out
-
-    return tmpdirs.memo("stream_afp", sf_dir, build)
-
-
-_AFP_HAM_PH = " + ".join(
-    f"bit_count(xor(pr.bands[{i}], h.bands[{i}]))" for i in range(1, 9)
-)
-
-_STREAM_AFP_ORACLE = (
-    _AFP_ORACLE
-    + f"""
-    ,
-    hist AS (
-      SELECT DISTINCT p.bands FROM afp p
-      JOIN documents d ON d.doc_id = p.doc_id
-      WHERE d.source IN ('src0', 'src1')
-    ),
-    probe AS (
-      SELECT p.doc_id, d.source, p.bands FROM afp p
-      JOIN documents d ON d.doc_id = p.doc_id
-      WHERE d.source NOT IN ('src0', 'src1')
-    ),
-    rej AS (
-      SELECT DISTINCT pr.doc_id FROM probe pr, hist h
-      WHERE {_AFP_HAM_PH} <= 7
-    )
-    SELECT pr.source,
-           count(*)::BIGINT AS n_seen,
-           sum(CASE WHEN r.doc_id IS NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_admitted,
-           CAST(sum(CASE WHEN r.doc_id IS NULL THEN pr.doc_id ELSE 0 END)
-                AS BIGINT) AS admitted_digest
-    FROM probe pr LEFT JOIN rej r ON r.doc_id = pr.doc_id
-    GROUP BY pr.source ORDER BY pr.source
-    """
-)
-
-
-def stream_audio_fingerprint_admission(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Per-source admission ledger of the streaming audio gate — the
-    image gate's contract on the audio tier (decisions depend ONLY on
-    the static src0+src1 history, so the ledger is batch-split-invariant
-    and the brute-force oracle re-derives it). Per-batch cost is one
-    Arrow decode+fingerprint pass plus bucket-bounded (band, 8-bit
-    value) joins against the once-materialized distinct-fingerprint
-    history."""
-    out = read_parquet(spark, _stream_afp_materialize(spark, sf_dir))
-    return (
-        out.groupBy("source")
-        .agg(
-            F.count("*").cast("bigint").alias("n_seen"),
-            F.sum("admitted").cast("bigint").alias("n_admitted"),
-            F.sum(F.col("media_id") * F.col("admitted"))
-            .cast("bigint")
-            .alias("admitted_digest"),
-        )
-        .orderBy("source")
-    )
-
-
-# --------------------------------------------------------------------------
-# Offset-invariant audio alignment (round 14 pre-build — REGISTRATION
-# PENDING r15): the Shazam/chromaprint tier — clips pair when enough
-# TIME-LOCAL sub-fingerprints agree at one consistent frame offset,
-# catching trims/padding/concatenation the whole-clip fingerprint misses.
-# Frame 16 samples / 16-bit packing / min 6 alignments: tuned on the
-# corpus (best-alignment histogram is bimodal — a >=6 cluster of true
-# aligned content over a 1-3 collision tail).
-# --------------------------------------------------------------------------
-
-_OFFSET_FRAME = 16
-_OFFSET_MIN = 6
-
-_AUDIO_OFFSET_ORACLE = f"""
-    WITH aud AS (
-      SELECT doc_id, text, octet_length(encode(text)) // {_OFFSET_FRAME} AS nw
-      FROM documents
-      WHERE octet_length(encode(text)) // {_OFFSET_FRAME} >= 2
-    ),
-    px AS (  -- sample j = byte j; fixed {_OFFSET_FRAME}-sample frames,
-             -- tail beyond the last full frame dropped (samples[:n*frame])
-      SELECT doc_id, (i - 1) // {_OFFSET_FRAME} AS w,
-             ord(substr(text, i, 1)) AS v
-      FROM aud, UNNEST(generate_series(1, nw * {_OFFSET_FRAME})) AS t(i)
-    ),
-    we AS (SELECT doc_id, w, sum(v * v) AS e FROM px GROUP BY 1, 2),
-    bits AS (
-      SELECT a.doc_id, a.w AS k, CASE WHEN b.e > a.e THEN 1 ELSE 0 END AS bit
-      FROM we a JOIN we b ON b.doc_id = a.doc_id AND b.w = a.w + 1
-    ),
-    mk AS (SELECT doc_id, max(k) AS mk FROM bits GROUP BY 1),
-    sub AS (  -- 16 consecutive delta bits packed at each position
-      SELECT g.doc_id, g.k, CAST(sum(b.bit << (b.k - g.k)) AS BIGINT) AS sv
-      FROM bits g
-      JOIN mk m ON m.doc_id = g.doc_id
-      JOIN bits b ON b.doc_id = g.doc_id AND b.k >= g.k AND b.k <= g.k + 15
-      WHERE g.k <= m.mk - 15
-      GROUP BY 1, 2
-    ),
-    hits AS (
-      SELECT a.doc_id AS ia, b.doc_id AS ib, a.k - b.k AS delta,
-             count(*) AS n
-      FROM sub a JOIN sub b ON a.sv = b.sv AND a.doc_id < b.doc_id
-      GROUP BY 1, 2, 3
-    ),
-    best AS (
-      SELECT ia, ib, delta, n,
-             row_number() OVER (PARTITION BY ia, ib
-                                ORDER BY n DESC, delta) AS r
-      FROM hits
-    )
-    SELECT ia AS media_id_a, ib AS media_id_b, delta::BIGINT AS delta,
-           n::BIGINT AS n_aligned
-    FROM best WHERE r = 1 AND n >= {_OFFSET_MIN}
-    ORDER BY 1, 2
-"""
-
-
-def dedup_audio_offset_align_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Offset-invariant audio near-dup pairs over the corpus: synthesize
-    RAWA clips (samples = text bytes), run the REAL audio_subfingerprints
-    (fixed absolute frames → energy-delta sign bits → 16-bit
-    sub-fingerprints, one Arrow pass) and audio_offset_match_pairs (one
-    sv-bucketed equi-join, map-side-combined (pair, delta) histogram,
-    per-pair bounded argmax window). The brute-force oracle re-derives
-    every sub-fingerprint arithmetically. At 100 TB the `bits` knob
-    (wider packing or an added coarse-energy key) keeps per-bucket
-    candidate volume bounded — the LSH trade, documented on the
-    operator."""
-    sub = M.audio_subfingerprints(
-        _synthesize_audio_from_text(_t(spark, sf_dir, "documents")),
-        frame=_OFFSET_FRAME,
-        bits=16,
-    )
-    return M.audio_offset_match_pairs(sub, min_matches=_OFFSET_MIN).orderBy(
-        "media_id_a", "media_id_b"
-    )
-
-
-# --------------------------------------------------------------------------
-# Offset-invariant video alignment (round 14 pre-build — REGISTRATION
-# PENDING r15): the video sibling of the audio alignment tier — videos
-# pair when >= 4 frames carry identical aHashes at one consistent frame
-# offset, with corpus-wide STOP-HASHES (frame hashes in > 16 distinct
-# videos: uniform/padding frames) excluded from both join sides, the
-# heavy-gram pruning discipline. Thresholds tuned on the corpus (with the
-# filter, the best-alignment histogram separates a >=4 cluster from a
-# <=3 tail; without it a handful of stop-hashes appear in 130+ of 500
-# docs and the join goes corpus-quadratic).
-# --------------------------------------------------------------------------
-
-_VOFF_MIN = 4
-_VOFF_MAXDOCS = 16
-
-_VIDEO_OFFSET_ORACLE = f"""
-    WITH vid AS (
-      SELECT doc_id, text, octet_length(encode(text)) AS L,
-             greatest(1, (octet_length(encode(text)) + 15) // 16) AS nf
-      FROM documents
-    ),
-    fidx AS (  -- every frame (alignment uses the full sequence)
-      SELECT v.doc_id, v.text, v.L, g.fi
-      FROM vid v, UNNEST(generate_series(0, v.nf - 1)) AS g(fi)
-    ),
-    px AS (
-      SELECT f.doc_id, f.fi, p.i AS pi,
-             CASE WHEN 16 * f.fi + p.i + 1 <= f.L
-                  THEN ord(substr(f.text, 16 * f.fi + p.i + 1, 1))
-                  ELSE 0 END AS v
-      FROM fidx f, UNNEST(generate_series(0, 15)) AS p(i)
-    ),
-    ft AS (SELECT doc_id, fi, sum(v) AS ts FROM px GROUP BY 1, 2),
-    bits AS (
-      SELECT p.doc_id, p.fi, p.pi // 4 AS r, p.pi % 4 AS c,
-             CASE WHEN p.v * 16 > t.ts THEN 1 ELSE 0 END AS bit
-      FROM px p JOIN ft t ON t.doc_id = p.doc_id AND t.fi = p.fi
-    ),
-    fbands AS (
-      SELECT doc_id, fi, r AS band, sum(bit << (2 * c + 9))::BIGINT AS bv
-      FROM bits GROUP BY 1, 2, 3
-    ),
-    fph0 AS (
-      SELECT doc_id, fi, list(bv ORDER BY band) AS bands
-      FROM fbands GROUP BY 1, 2
-    ),
-    rare AS (
-      SELECT bands FROM (
-        SELECT bands, count(DISTINCT doc_id) AS nd FROM fph0 GROUP BY 1
-      ) WHERE nd <= {_VOFF_MAXDOCS}
-    ),
-    fph AS (SELECT f.* FROM fph0 f JOIN rare USING (bands)),
-    hits AS (
-      SELECT a.doc_id AS ia, b.doc_id AS ib, a.fi - b.fi AS delta,
-             count(*) AS n
-      FROM fph a JOIN fph b ON a.bands = b.bands AND a.doc_id < b.doc_id
-      GROUP BY 1, 2, 3
-    ),
-    best AS (
-      SELECT ia, ib, delta, n,
-             row_number() OVER (PARTITION BY ia, ib
-                                ORDER BY n DESC, delta) AS r
-      FROM hits
-    )
-    SELECT ia AS media_id_a, ib AS media_id_b, delta::BIGINT AS delta,
-           n::BIGINT AS n_aligned
-    FROM best WHERE r = 1 AND n >= {_VOFF_MIN}
-    ORDER BY 1, 2
-"""
-
-
-def dedup_video_offset_align_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Offset-invariant video near-dup pairs over the corpus: text-slice
-    RAWV videos → sample_frames(every_n=1) → frame_ahash →
-    video_offset_match_pairs with stop-hash exclusion (frame hashes in
-    > 16 distinct videos dropped from both join sides — without the
-    filter, uniform/padding frames alone put a handful of hash values in
-    a quarter of the corpus and the bucket join goes corpus-quadratic;
-    with it, candidate volume is per-rare-hash bounded). The brute-force
-    oracle re-derives every frame hash and the same frequency filter."""
-    vids = _synthesize_videos_from_text(_t(spark, sf_dir, "documents"))
-    fh = M.frame_ahash(M.sample_frames(vids, every_n=1))
-    return M.video_offset_match_pairs(
-        fh, min_matches=_VOFF_MIN, max_hash_docs=_VOFF_MAXDOCS
-    ).orderBy("media_id_a", "media_id_b")
-
-
-# --------------------------------------------------------------------------
-# Streaming video admission (round 14 pre-build — REGISTRATION PENDING
-# r15): completes the admission-gate modality matrix (image official r14,
-# audio pending, video here). A probe video is rejected iff it is a
-# strict frame-aligned near-dup (>=90% of the larger side's sampled
-# frames, floor 2, radius 3) of ANY history (src0+src1) video — decisions
-# depend only on the static history, so the ledger is batch-split-
-# invariant and the brute-force oracle re-derives it.
-# --------------------------------------------------------------------------
-
-def _stream_vph_materialize(spark: SparkSession, sf_dir: str) -> str:
-    from ..streaming import stream_documents
-    from ..streaming.run import await_or_raise
-
-    def build(scratch):
-        out = scratch + "/admitted"
-        ck = scratch + "/ck"
-        docs = _t(spark, sf_dir, "documents")
-        hist_docs = docs.where(F.col("source").isin("src0", "src1"))
-        hist = M.frame_ahash(
-            M.sample_frames(_synthesize_videos_from_text(hist_docs), every_n=2)
-        ).persist()
-        hist.count()  # materialize the history frame hashes once
-
-        def gate_batch(bdf, batch_id: int) -> None:
-            probe_docs = bdf.where(~F.col("source").isin("src0", "src1"))
-            fh = M.frame_ahash(
-                M.sample_frames(_synthesize_videos_from_text(probe_docs), every_n=2)
-            )
-            matched = M.video_neardup_matches(
-                fh, hist, max_hamming=3, min_frac=(9, 10), frac_of="max",
-                min_aligned=2,
-            )
-            (
-                probe_docs.select(F.col("doc_id").alias("media_id"), "source")
-                .join(matched.withColumn("__hit", F.lit(1)), "media_id", "left")
-                .select(
-                    "media_id",
-                    "source",
-                    F.coalesce(F.lit(1) - F.col("__hit"), F.lit(1)).alias("admitted"),
-                )
-                .write.mode("append")
-                .parquet(out)
-            )
-
-        q = (
-            stream_documents(spark, sf_dir)
-            .writeStream.foreachBatch(gate_batch)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q)
-        return out
-
-    return tmpdirs.memo("stream_vph", sf_dir, build)
-
-
-_STREAM_VPH_ORACLE = _VIDEO_FPH_CTES + """
-    ,
-    hsrc AS (
-      SELECT doc_id FROM documents WHERE source IN ('src0', 'src1')
-    ),
-    psrc AS (
-      SELECT doc_id, source FROM documents
-      WHERE source NOT IN ('src0', 'src1')
-    ),
-    fmatch AS (  -- probe frame vs history frame, same index, Hamming <= 3
-      SELECT p.doc_id AS ip, h.doc_id AS ih, p.fi
-      FROM fph p JOIN psrc ps ON ps.doc_id = p.doc_id
-      JOIN fph h ON h.fi = p.fi
-      JOIN hsrc hs ON hs.doc_id = h.doc_id
-      WHERE bit_count(xor(p.bands[1], h.bands[1]))
-          + bit_count(xor(p.bands[2], h.bands[2]))
-          + bit_count(xor(p.bands[3], h.bands[3]))
-          + bit_count(xor(p.bands[4], h.bands[4])) <= 3
-    ),
-    nmatch AS (SELECT ip, ih, count(*) AS n FROM fmatch GROUP BY 1, 2),
-    nfr AS (SELECT doc_id, count(*) AS nfr FROM fph GROUP BY 1),
-    rej AS (
-      SELECT DISTINCT m.ip AS doc_id
-      FROM nmatch m
-      JOIN nfr a ON a.doc_id = m.ip
-      JOIN nfr b ON b.doc_id = m.ih
-      WHERE m.n * 10 >= 9 * greatest(a.nfr, b.nfr) AND m.n >= 2
-    )
-    SELECT pr.source,
-           count(*)::BIGINT AS n_seen,
-           sum(CASE WHEN r.doc_id IS NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_admitted,
-           CAST(sum(CASE WHEN r.doc_id IS NULL THEN pr.doc_id ELSE 0 END)
-                AS BIGINT) AS admitted_digest
-    FROM psrc pr LEFT JOIN rej r ON r.doc_id = pr.doc_id
-    GROUP BY pr.source ORDER BY pr.source
-"""
-
-
-def stream_video_phash_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source admission ledger of the streaming video gate — the
-    image/audio gates' contract on the video tier: per batch one Arrow
-    synthesize+sample+hash chain, then video_neardup_matches against the
-    once-materialized history frame hashes (identical frames by
-    equi-join, near frames only inside (frame_idx, band, value)
-    buckets); strict 90%-of-larger threshold."""
-    out = read_parquet(spark, _stream_vph_materialize(spark, sf_dir))
-    return (
-        out.groupBy("source")
-        .agg(
-            F.count("*").cast("bigint").alias("n_seen"),
-            F.sum("admitted").cast("bigint").alias("n_admitted"),
-            F.sum(F.col("media_id") * F.col("admitted"))
-            .cast("bigint")
-            .alias("admitted_digest"),
-        )
-        .orderBy("source")
-    )

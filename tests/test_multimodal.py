@@ -1,6 +1,6 @@
 """Multimodal operator tests: RAW container round-trips through the real
-numpy stages (features, resize, frame sampling, audio), and the codec stub
-boundary raises cleanly for real container formats."""
+numpy stages (features, frame sampling, audio, perceptual hashes), and the
+codec stub boundary raises cleanly for real container formats."""
 
 from __future__ import annotations
 
@@ -293,384 +293,3 @@ def test_banded_hamming_matches_both_legs_and_admit(spark):
 def test_banded_hamming_matches_radius_guard():
     with pytest.raises(ValueError):
         M.banded_hamming_matches(None, None, max_hamming=4, n_bands=4)
-
-
-def _frame_hash_df(spark, rows):
-    # rows: (media_id, frame_idx, [b0..b3])
-    return spark.createDataFrame(
-        rows, "media_id long, frame_idx int, bands array<int>"
-    )
-
-
-def test_video_neardup_planted_pair_and_threshold(spark):
-    """Videos 1/2: 4 frames each — 2 identical, 1 within radius 3, 1 far
-    -> 3/4 matching frames, passes the half threshold. Video 3 matches
-    video 1 on only 1 of 4 frames -> below threshold. Video 4 shares NO
-    frame index content."""
-    rows = [
-        (1, 0, [7, 0, 0, 0]), (1, 2, [0, 9, 0, 0]),
-        (1, 4, [1, 2, 3, 4]), (1, 6, [255, 255, 0, 0]),
-        (2, 0, [7, 0, 0, 0]), (2, 2, [0, 9, 0, 0]),      # identical legs
-        (2, 4, [1, 2, 3, 5]), (2, 6, [0, 0, 255, 255]),  # ham 1; far
-        (3, 0, [7, 0, 0, 0]), (3, 2, [21845, 21845, 21845, 21845]),
-        (3, 4, [43690, 43690, 43690, 43690]), (3, 6, [4369, 4369, 4369, 4369]),
-        (4, 0, [64, 64, 64, 64]), (4, 2, [32, 32, 32, 32]),
-    ]
-    out = {
-        (r["media_id_a"], r["media_id_b"]): (r["n_match"], r["n_a"], r["n_b"])
-        for r in M.video_neardup_pairs(
-            _frame_hash_df(spark, rows), max_hamming=3
-        ).collect()
-    }
-    assert out == {(1, 2): (3, 4, 4)}
-
-
-def test_video_neardup_same_index_alignment(spark):
-    """A matching hash at a DIFFERENT frame index must not count — the
-    operator dedups same-cut re-encodes, not shifted clips."""
-    rows = [
-        (1, 0, [7, 0, 0, 0]), (1, 2, [0, 9, 0, 0]),
-        (2, 2, [7, 0, 0, 0]), (2, 4, [0, 9, 0, 0]),  # shifted by one slot
-    ]
-    assert (
-        M.video_neardup_pairs(_frame_hash_df(spark, rows), max_hamming=3).count()
-        == 0
-    )
-
-
-def test_video_neardup_min_frac_smaller_video(spark):
-    """Threshold is against the SMALLER video's frame count: a 2-frame
-    clip fully contained in a 6-frame video's sampled grid pairs."""
-    rows = [(1, i, [i, 0, 0, 0]) for i in (0, 2, 4, 6, 8, 10)] + [
-        (2, 0, [0, 0, 0, 0]), (2, 2, [2, 0, 0, 0]),
-    ]
-    out = M.video_neardup_pairs(
-        _frame_hash_df(spark, rows), max_hamming=3
-    ).collect()
-    assert len(out) == 1 and out[0]["n_match"] == 2
-
-
-def test_video_neardup_radius_guard():
-    with pytest.raises(ValueError):
-        M.video_neardup_pairs(None, max_hamming=4)
-
-
-def test_frame_ahash_matches_image_ahash_per_frame(spark):
-    """frame_ahash over sampled RAWV frames == image_ahash over the same
-    frames re-encoded standalone (the shared kernel), end-to-end through
-    real decode; a re-encoded twin with one perturbed frame pairs."""
-    rng = np.random.RandomState(3)
-    f0 = rng.randint(0, 256, size=(3, 16, 16)).astype(np.uint8)
-    twin = f0.copy()
-    twin[1] = rng.randint(0, 256, size=(16, 16)).astype(np.uint8)  # 1 of 3
-    vids = spark.createDataFrame(
-        [(1, M.encode_rawv(f0)), (2, M.encode_rawv(twin))],
-        "media_id long, data binary",
-    )
-    fh = M.frame_ahash(M.sample_frames(vids, every_n=1))
-    # kernel equivalence on one frame
-    one = spark.createDataFrame(
-        [(99, M.encode_rawi(f0[2][:, :, None]))], "media_id long, data binary"
-    )
-    [img_row] = M.image_ahash(one).collect()
-    [frame_row] = fh.where("media_id = 1 AND frame_idx = 2").collect()
-    assert list(img_row.bands) == list(frame_row.bands)
-    # twin pairs: 2 of 3 frames identical -> passes the half threshold
-    out = M.video_neardup_pairs(fh, max_hamming=3).collect()
-    assert len(out) == 1
-    assert (out[0]["media_id_a"], out[0]["media_id_b"]) == (1, 2)
-    assert out[0]["n_match"] >= 2
-
-
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
-def test_video_neardup_query_oracle_parity(spark, sf):
-    """Full driver-style parity for the PENDING video dedup query
-    (registration deferred to r15 by the round-14 window cap): the Spark
-    operator chain must hash-match the brute-force DuckDB re-derivation
-    at both small SFs."""
-    import duckdb
-
-    from kinesis3_spark.queries.multimodalq import (
-        _VIDEO_PAIRS_ORACLE,
-        video_neardup_dedup_q,
-    )
-
-    sf_dir = f"/root/testdata/{sf}"
-    s = video_neardup_dedup_q(spark, sf_dir).toPandas()
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    d = con.sql(_VIDEO_PAIRS_ORACLE).df()
-    assert len(s) == len(d)
-    assert sorted(s.columns) == sorted(d.columns)
-    cols = sorted(s.columns)
-    sa = sorted(map(tuple, s[cols].astype(str).values.tolist()))
-    da = sorted(map(tuple, d[cols].astype(str).values.tolist()))
-    assert sa == da
-    assert len(s) > 0  # the planted near-dup corpus must produce pairs
-
-
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
-def test_stream_audio_admission_oracle_parity(spark, sf):
-    """Driver-style parity for the PENDING streaming audio admission
-    query (r15 registration): the foreachBatch gate's ledger must
-    hash-match the brute-force DuckDB re-derivation. The sf0.01 corpus
-    plants fingerprint twins across the history boundary, so the reject
-    path is exercised there (asserted); sf0.001 happens to admit all."""
-    import duckdb
-
-    from kinesis3_spark.queries.multimodalq import (
-        _STREAM_AFP_ORACLE,
-        stream_audio_fingerprint_admission,
-    )
-
-    sf_dir = f"/root/testdata/{sf}"
-    s = stream_audio_fingerprint_admission(spark, sf_dir).toPandas()
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    d = con.sql(_STREAM_AFP_ORACLE).df()
-    assert len(s) == len(d)
-    assert sorted(s.columns) == sorted(d.columns)
-    cols = sorted(s.columns)
-    assert sorted(map(tuple, s[cols].astype(str).values.tolist())) == sorted(
-        map(tuple, d[cols].astype(str).values.tolist())
-    )
-    if sf == "sf0.01":
-        assert int(s["n_admitted"].sum()) < int(s["n_seen"].sum())
-
-
-def test_audio_offset_match_planted_shift(spark):
-    """A clip and a copy shifted by an exact number of frames must pair
-    at exactly that delta; an unrelated clip must not pair. Frame 32 so
-    short test clips still carry enough sub-fingerprints."""
-    rng = np.random.RandomState(13)
-    base = rng.randint(-2000, 2000, size=32 * 40).astype(np.int16)
-    shift = 5  # frames
-    shifted = np.concatenate(
-        [rng.randint(-2000, 2000, size=32 * shift).astype(np.int16), base]
-    )
-    other = rng.randint(-2000, 2000, size=32 * 40).astype(np.int16)
-    df = _aud_df(spark, [base, shifted, other])
-    sub = M.audio_subfingerprints(df, frame=32, bits=16)
-    out = M.audio_offset_match_pairs(sub, min_matches=8).collect()
-    got = {(r.media_id_a, r.media_id_b): (r.delta, r.n_aligned) for r in out}
-    assert (0, 1) in got
-    d, n = got[(0, 1)]
-    assert d == -shift and n >= 8  # base's k aligns to shifted's k+5
-    assert all(2 not in pair for pair in got)
-
-
-def test_audio_offset_match_trim_and_concat(spark):
-    """The duplicate classes the aligned tiers miss: a TRIMMED copy
-    (prefix removed) and a CONCATENATION (clip embedded in a longer
-    stream) both pair with the original at the embedding offset."""
-    rng = np.random.RandomState(29)
-    base = rng.randint(-2000, 2000, size=32 * 60).astype(np.int16)
-    trimmed = base[32 * 10 :]
-    embedded = np.concatenate(
-        [
-            rng.randint(-2000, 2000, size=32 * 7).astype(np.int16),
-            base,
-            rng.randint(-2000, 2000, size=32 * 9).astype(np.int16),
-        ]
-    )
-    df = _aud_df(spark, [base, trimmed, embedded])
-    sub = M.audio_subfingerprints(df, frame=32, bits=16)
-    got = {
-        (r.media_id_a, r.media_id_b): r.delta
-        for r in M.audio_offset_match_pairs(sub, min_matches=8).collect()
-    }
-    assert got.get((0, 1)) == 10   # base k=10 aligns with trimmed k=0
-    assert got.get((0, 2)) == -7   # base k=0 aligns with embedded k=7
-
-
-def test_audio_subfingerprints_shift_reproduces_values(spark):
-    """The absolute-frame contract: an m-frame shift reproduces the
-    base clip's sub-fingerprint VALUES at k+m (interior positions,
-    where the 16-bit packing window sits fully inside shared content)."""
-    rng = np.random.RandomState(31)
-    base = rng.randint(-2000, 2000, size=32 * 30).astype(np.int16)
-    m = 3
-    shifted = np.concatenate(
-        [rng.randint(-2000, 2000, size=32 * m).astype(np.int16), base]
-    )
-    sub = {
-        (r.media_id, r.k): r.sv
-        for r in M.audio_subfingerprints(
-            _aud_df(spark, [base, shifted]), frame=32, bits=16
-        ).collect()
-    }
-    agree = sum(
-        1
-        for (mid, k), sv in sub.items()
-        if mid == 0 and sub.get((1, k + m)) == sv
-    )
-    n_base = sum(1 for (mid, _k) in sub if mid == 0)
-    # every interior base position must reproduce (boundary windows can
-    # differ where the delta chain crosses the splice)
-    assert agree >= n_base - 2 and n_base > 10
-
-
-def test_video_offset_match_trim_and_embed(spark):
-    """A trimmed cut and an embedded copy pair with the original at the
-    recoverable frame offset; the frame-ALIGNED pair join misses both.
-    Distinct random frames make hash collisions across unrelated
-    positions implausible."""
-    rng = np.random.RandomState(37)
-    base = rng.randint(0, 256, size=(12, 16, 16)).astype(np.uint8)
-    trimmed = base[4:]  # first 4 frames cut
-    embedded = np.concatenate(
-        [rng.randint(0, 256, size=(3, 16, 16)).astype(np.uint8), base]
-    )
-    other = rng.randint(0, 256, size=(12, 16, 16)).astype(np.uint8)
-    vids = spark.createDataFrame(
-        [
-            (1, M.encode_rawv(base)),
-            (2, M.encode_rawv(trimmed)),
-            (3, M.encode_rawv(embedded)),
-            (4, M.encode_rawv(other)),
-        ],
-        "media_id long, data binary",
-    )
-    fh = M.frame_ahash(M.sample_frames(vids, every_n=1))
-    got = {
-        (r.media_id_a, r.media_id_b): (r.delta, r.n_aligned)
-        for r in M.video_offset_match_pairs(fh, min_matches=3).collect()
-    }
-    assert got[(1, 2)][0] == 4    # base frame k matches trimmed frame k-4
-    assert got[(1, 3)][0] == -3   # base frame k matches embedded frame k+3
-    assert all(4 not in pair for pair in got)
-    # the frame-aligned tier misses the trim (no same-index identical run
-    # of >= half the frames)
-    aligned = {
-        (r.media_id_a, r.media_id_b)
-        for r in M.video_neardup_pairs(fh, max_hamming=3).collect()
-    }
-    assert (1, 2) not in aligned
-
-
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
-def test_audio_offset_align_query_oracle_parity(spark, sf):
-    """Driver-style parity for the PENDING offset-alignment query (r15
-    registration): the sv-bucketed Spark plan must hash-match the
-    brute-force DuckDB sub-fingerprint re-derivation, with a non-empty
-    pair set (the corpus' planted near-dup texts align)."""
-    import duckdb
-
-    from kinesis3_spark.queries.multimodalq import (
-        _AUDIO_OFFSET_ORACLE,
-        dedup_audio_offset_align_q,
-    )
-
-    sf_dir = f"/root/testdata/{sf}"
-    s = dedup_audio_offset_align_q(spark, sf_dir).toPandas()
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    d = con.sql(_AUDIO_OFFSET_ORACLE).df()
-    assert len(s) == len(d)
-    assert sorted(s.columns) == sorted(d.columns)
-    cols = sorted(s.columns)
-    assert sorted(map(tuple, s[cols].astype(str).values.tolist())) == sorted(
-        map(tuple, d[cols].astype(str).values.tolist())
-    )
-    assert len(s) > 0
-
-
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
-def test_video_offset_align_query_oracle_parity(spark, sf):
-    """Driver-style parity for the PENDING video offset-alignment query
-    (r15 registration), including the stop-hash frequency filter on both
-    engines."""
-    import duckdb
-
-    from kinesis3_spark.queries.multimodalq import (
-        _VIDEO_OFFSET_ORACLE,
-        dedup_video_offset_align_q,
-    )
-
-    sf_dir = f"/root/testdata/{sf}"
-    s = dedup_video_offset_align_q(spark, sf_dir).toPandas()
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    d = con.sql(_VIDEO_OFFSET_ORACLE).df()
-    assert len(s) == len(d)
-    assert sorted(s.columns) == sorted(d.columns)
-    cols = sorted(s.columns)
-    assert sorted(map(tuple, s[cols].astype(str).values.tolist())) == sorted(
-        map(tuple, d[cols].astype(str).values.tolist())
-    )
-    assert len(s) > 0
-
-
-def test_video_neardup_matches_cross_relation(spark):
-    """Admission primitive: probe 1 identical to a history video, probe 2
-    near (1 of its 2 frames within radius on the matching index, the
-    other identical), probe 3 matches only 1 of 4 frames (below half),
-    probe 4 unrelated."""
-    hist = _frame_hash_df(
-        spark,
-        [
-            (100, 0, [7, 0, 0, 0]), (100, 2, [0, 9, 0, 0]),
-            (101, 0, [255, 255, 0, 0]), (101, 2, [0, 0, 255, 255]),
-            (101, 4, [1, 1, 1, 1]), (101, 6, [2, 2, 2, 2]),
-        ],
-    )
-    probe = _frame_hash_df(
-        spark,
-        [
-            (1, 0, [7, 0, 0, 0]), (1, 2, [0, 9, 0, 0]),          # identical
-            (2, 0, [7, 1, 0, 0]), (2, 2, [0, 9, 0, 0]),          # ham 1 + exact
-            (3, 0, [255, 255, 0, 0]), (3, 2, [21845, 21845, 21845, 21845]),
-            (3, 4, [43690, 43690, 43690, 43690]), (3, 6, [4369, 4369, 4369, 4369]),
-            (4, 0, [64, 64, 64, 64]),
-        ],
-    )
-    got = sorted(
-        r["media_id"]
-        for r in M.video_neardup_matches(probe, hist).collect()
-    )
-    assert got == [1, 2]
-
-
-def test_video_neardup_matches_radius_guard():
-    with pytest.raises(ValueError):
-        M.video_neardup_matches(None, None, max_hamming=4)
-
-
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
-def test_stream_video_admission_oracle_parity(spark, sf):
-    """Driver-style parity for the PENDING streaming video admission
-    query (r15 registration) — completes the gate matrix (image, audio,
-    video)."""
-    import duckdb
-
-    from kinesis3_spark.queries.multimodalq import (
-        _STREAM_VPH_ORACLE,
-        stream_video_phash_admission,
-    )
-
-    sf_dir = f"/root/testdata/{sf}"
-    s = stream_video_phash_admission(spark, sf_dir).toPandas()
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    d = con.sql(_STREAM_VPH_ORACLE).df()
-    assert len(s) == len(d)
-    assert sorted(s.columns) == sorted(d.columns)
-    cols = sorted(s.columns)
-    assert sorted(map(tuple, s[cols].astype(str).values.tolist())) == sorted(
-        map(tuple, d[cols].astype(str).values.tolist())
-    )

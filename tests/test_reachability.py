@@ -5,12 +5,18 @@ Roots: every statement of `bench.py`, `__spark_entry__.py`,
 `perfbench/*.py`, `kinesis3_spark/__main__.py` and `kinesis3_spark/app.py`;
 every `@query`-decorated function; and every module-level statement of the
 package that is not an import, a def, a class or a plain name assignment
-(module dunders such as `__all__` are neither roots nor checked). A root or a reached definition references an identifier through
-a `Name`, an `Attribute`, an identifier-shaped string constant (`getattr`,
-registry keys) or an `import x as y` alias (read back as `x`). The closure
-runs over the package's top-level defs, classes and module constants, by
-name alone, so it over-approximates liveness: whatever it leaves out has no
-caller outside the tests.
+(module dunders such as `__all__` are neither roots nor checked). A root or
+a reached definition references an identifier through a `Name`, an
+`Attribute`, an identifier-shaped string constant (`getattr`, registry
+keys) or an `import x as y` alias (read back as `x`). The closure runs over
+the package's top-level defs, classes and module constants, by name alone,
+so it over-approximates liveness: whatever it leaves out has no caller
+outside the tests.
+
+A reached class does not keep all its methods alive: every non-dunder
+method of a package class that a root defines or the closure reaches must
+be referenced by name from a root or a reached definition too. Methods a
+framework calls by name (Spark Data Source callbacks) are exempt.
 
 The exemption list only shrinks: an exempt name that is reached again, or
 is gone, fails the test as well, so the entry must be deleted with it."""
@@ -34,49 +40,25 @@ _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 
 _JDBC = "Postgres sink (reference db.clj), config-gated and not wired into the CLI"
 _TXN = "table operation of sinks/txn.py that only tests call"
-_PREBUILD = "multimodal pre-build, registration pending"
-_PREBUILD_PART = "oracle, constant or helper of a pending multimodal pre-build"
-_PREBUILD_OP = "operator only a pending multimodal pre-build calls"
 _SCALAR = "scalar column helper only tests call"
 _BATCH = "batch source helper only tests call"
+_DS_CALLBACK = "Spark Data Source callback, called by Spark by name"
 
 # Known debt: qualified name -> reason. Delete an entry together with its code.
 KNOWN_UNREACHABLE = {
+    "app.Collector.watch": (
+        "embedding API for side-stream state metrics, which the CLI never calls"
+    ),
     "functions.scalar.epoch_ms_to_day": _SCALAR,
     "functions.scalar.epoch_ms_to_hour_start_s": _SCALAR,
     "functions.scalar.extract_json": _SCALAR,
     "functions.scalar.separate_number_data": _SCALAR,
     "functions.scalar.url_decode_col": _SCALAR,
     "functions.scalar.url_encode_col": _SCALAR,
-    "operators.multimodal.audio_offset_match_pairs": _PREBUILD_OP,
-    "operators.multimodal.audio_subfingerprints": _PREBUILD_OP,
-    "operators.multimodal.frame_ahash": _PREBUILD_OP,
-    "operators.multimodal.video_neardup_matches": _PREBUILD_OP,
-    "operators.multimodal.video_neardup_pairs": _PREBUILD_OP,
-    "operators.multimodal.video_offset_match_pairs": _PREBUILD_OP,
     "operators.sequence.user_motif_measures": "sequence operator only tests call",
     "queries.decontam.BROADCAST_GRAM_LIMIT": "constant only a test reads",
     "queries.lmquality.score_perplexity": "perplexity scorer only tests call",
     "queries.lmquality.score_perplexity_trigram": "perplexity scorer only tests call",
-    "queries.multimodalq._AFP_HAM_PH": _PREBUILD_PART,
-    "queries.multimodalq._AUDIO_OFFSET_ORACLE": _PREBUILD_PART,
-    "queries.multimodalq._OFFSET_FRAME": _PREBUILD_PART,
-    "queries.multimodalq._OFFSET_MIN": _PREBUILD_PART,
-    "queries.multimodalq._STREAM_AFP_ORACLE": _PREBUILD_PART,
-    "queries.multimodalq._STREAM_VPH_ORACLE": _PREBUILD_PART,
-    "queries.multimodalq._VIDEO_FPH_CTES": _PREBUILD_PART,
-    "queries.multimodalq._VIDEO_OFFSET_ORACLE": _PREBUILD_PART,
-    "queries.multimodalq._VIDEO_PAIRS_ORACLE": _PREBUILD_PART,
-    "queries.multimodalq._VOFF_MAXDOCS": _PREBUILD_PART,
-    "queries.multimodalq._VOFF_MIN": _PREBUILD_PART,
-    "queries.multimodalq._stream_afp_materialize": _PREBUILD_PART,
-    "queries.multimodalq._stream_vph_materialize": _PREBUILD_PART,
-    "queries.multimodalq._synthesize_videos_from_text": _PREBUILD_PART,
-    "queries.multimodalq.dedup_audio_offset_align_q": _PREBUILD,
-    "queries.multimodalq.dedup_video_offset_align_q": _PREBUILD,
-    "queries.multimodalq.stream_audio_fingerprint_admission": _PREBUILD,
-    "queries.multimodalq.stream_video_phash_admission": _PREBUILD,
-    "queries.multimodalq.video_neardup_dedup_q": _PREBUILD,
     "sinks.jdbc._DEFAULT_CHUNK": _JDBC,
     "sinks.jdbc._delete_statements": _JDBC,
     "sinks.jdbc._insert_statements": _JDBC,
@@ -104,12 +86,14 @@ KNOWN_UNREACHABLE = {
     "sources.batch.read_csv": _BATCH,
     "sources.batch.read_jsonl": _BATCH,
     "sources.batch.register_temp_views": _BATCH,
+    "sources.txn_datasource._TxnBatchReader.partitions": _DS_CALLBACK,
+    "sources.txn_datasource._TxnBatchReaderPushdown.pushFilters": _DS_CALLBACK,
     "streaming.sources.kinesis_stream": "Kinesis connector source, not wired into the CLI",
 }
 
 
-def _module_name(path: pathlib.Path) -> str:
-    rel = path.relative_to(PKG).with_suffix("")
+def _module_name(path: pathlib.Path, pkg: pathlib.Path) -> str:
+    rel = path.relative_to(pkg).with_suffix("")
     parts = [p for p in rel.parts if p != "__init__"]
     return ".".join(parts) or "__init__"
 
@@ -169,19 +153,40 @@ def _assigned_names(st: ast.stmt) -> list[str] | None:
     return names
 
 
-def _sweep() -> tuple[set[str], set[str]]:
-    """(every qualified top-level name of the package, the unreachable ones)."""
+def _methods(cls: ast.ClassDef) -> list[str]:
+    """Names of the non-dunder methods a class body defines."""
+    return [
+        st.name
+        for st in cls.body
+        if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and not (st.name.startswith("__") and st.name.endswith("__"))
+    ]
+
+
+def _sweep(
+    pkg: pathlib.Path = PKG, root_files: list[pathlib.Path] = ROOT_FILES
+) -> tuple[set[str], set[str]]:
+    """(every qualified top-level name of the package and method of a
+    reached package class, the unreachable ones)."""
     reached: set[str] = set()
-    for p in ROOT_FILES:
+    classes = []  # (qualified class name, its swept method names)
+    for p in root_files:
         tree = ast.parse(p.read_text())
         reached |= _refs([tree], _aliases(tree))
+        if p.is_relative_to(pkg):
+            mod = _module_name(p, pkg)
+            classes += [
+                (f"{mod}.{st.name}", _methods(st))
+                for st in tree.body
+                if isinstance(st, ast.ClassDef)
+            ]
     defs = []  # (qualified name, bare name, nodes it references from, aliases)
-    for p in sorted(PKG.rglob("*.py")):
-        if p in ROOT_FILES:
+    for p in sorted(pkg.rglob("*.py")):
+        if p in root_files:
             continue
         tree = ast.parse(p.read_text())
         aliases = _aliases(tree)
-        mod = _module_name(p)
+        mod = _module_name(p, pkg)
         for st in tree.body:
             if isinstance(st, (ast.Import, ast.ImportFrom)):
                 continue
@@ -205,7 +210,15 @@ def _sweep() -> tuple[set[str], set[str]]:
         pending = [d for d in pending if d[1] not in reached]
         for _, _, body, aliases in hit:
             reached |= _refs(body, aliases)
-    return {d[0] for d in defs}, {d[0] for d in pending}
+    classes += [
+        (q, _methods(body[0]))
+        for q, n, body, _ in defs
+        if n in reached and isinstance(body[0], ast.ClassDef)
+    ]
+    methods = {f"{q}.{m}": m for q, ms in classes for m in ms}
+    return {d[0] for d in defs} | set(methods), {d[0] for d in pending} | {
+        q for q, m in methods.items() if m not in reached
+    }
 
 
 def test_package_is_reachable_from_registered_surface():
@@ -218,3 +231,32 @@ def test_package_is_reachable_from_registered_surface():
     gone = sorted(n for n in KNOWN_UNREACHABLE if n not in names)
     assert not stale, f"reachable now; drop from KNOWN_UNREACHABLE: {stale}"
     assert not gone, f"deleted; drop from KNOWN_UNREACHABLE: {gone}"
+
+
+def test_sweep_flags_an_uncalled_method_of_a_reached_class(tmp_path):
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text(
+        "class Used:\n"
+        "    def __init__(self):\n"
+        "        self.n = self.called()\n"
+        "    def called(self):\n"
+        "        return 1\n"
+        "    def planted(self):\n"
+        "        return self.called()\n"
+        "class Unused:\n"
+        "    def method(self):\n"
+        "        return 0\n"
+    )
+    (pkg / "app.py").write_text(
+        "from .mod import Used\n"
+        "class Root:\n"
+        "    def run(self):\n"
+        "        return Used().n\n"
+        "    def planted_too(self):\n"
+        "        return 0\n"
+        "Root().run()\n"
+    )
+    names, unreachable = _sweep(pkg, [pkg / "app.py"])
+    assert "mod.Unused.method" not in names
+    assert unreachable == {"mod.Unused", "mod.Used.planted", "app.Root.planted_too"}
