@@ -18,10 +18,13 @@ one window pass partitioned by doc_id.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import tmpdirs
 from ..functions.text import ngram_hashes, ngrams, tokenize
 from .relational import _t
 from . import query
@@ -31,6 +34,33 @@ from . import query
 _DUCK_TOKS = (
     "string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$', '', 'g'), '\\s+')"
 )
+
+
+def doc_stats_of(d: DataFrame) -> tuple[int, float]:
+    """(n_docs, avgdl) of a documents frame: ``count(*)`` and the mean
+    token count ``avg(size(tokenize(text)))``, from one aggregate-only
+    pass (2 Spark jobs under AQE: the partial-aggregate stage and the
+    collect). A collected Python float IS the IEEE double ``F.avg``
+    produced, so a score that inlines it as a literal is bit-identical to
+    one that cross-joins the aggregate. ADVICE r14: on an empty table
+    ``avg()`` is NULL — fall back to avgdl=0.0 so callers stay total
+    (tf=0 everywhere then, so the avgdl term is never reached)."""
+    n_docs, avgdl = d.agg(
+        F.count("*").alias("n_docs"), F.avg(F.size(tokenize(F.col("text")))).alias("avgdl")
+    ).collect()[0]
+    return int(n_docs), float(avgdl) if avgdl is not None else 0.0
+
+
+def doc_stats(spark: SparkSession, sf_dir: str) -> tuple[int, float]:
+    """``doc_stats_of`` the corpus's ``documents`` table, memoized per
+    identity of ``documents.parquet``: TF-IDF and every BM25 query read
+    these two scalars, so a warm build starts no job for them and a
+    rewritten documents file is aggregated again."""
+    return tmpdirs.memo(
+        "doc_stats",
+        os.path.join(sf_dir, "documents.parquet"),
+        lambda _scratch: doc_stats_of(_t(spark, sf_dir, "documents")),
+    )
 
 
 # Max benchmark gram-hash occurrences (pre-distinct upper bound) that still
@@ -164,7 +194,7 @@ def llm_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repetition query the df/rank windows still need their exchanges,
     # so nothing downstream is saved. Reverted; variant kept in
     # tools/ab_variants/tfidf_terms.py.
-    n_docs = d.count()  # scalar: one job over footer-only count at rest
+    n_docs, _ = doc_stats(spark, sf_dir)  # memoized per documents file
     w = Window.partitionBy("doc_id").orderBy(
         F.col("tf").desc(), F.col("df").asc(), F.col("term").asc()
     )

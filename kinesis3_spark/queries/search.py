@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import ngram_hashes, tokenize
 from ..sources import read_parquet
-from .decontam import _DUCK_TOKS
+from .decontam import _DUCK_TOKS, doc_stats
 from .relational import _t
 from . import ORACLE, query
 
@@ -36,9 +36,8 @@ _B = 0.75
 _QUERY_TERMS = ("window", "hash", "merge")
 
 
-def bm25_scores(d: DataFrame, terms, k1: float = _K1,
-                b: float = _B,
-                stats: tuple[int, float] | None = None,
+def bm25_scores(d: DataFrame, terms, stats: tuple[int, float],
+                k1: float = _K1, b: float = _B,
                 toks_df: DataFrame | None = None) -> DataFrame:
     """BM25 score of every document against a bag-of-words query.
     ``terms`` is a static tuple (isin filter in the scan stage) or a
@@ -56,13 +55,14 @@ def bm25_scores(d: DataFrame, terms, k1: float = _K1,
     set). Term df is a WINDOW count over the tf relation — a df-side
     groupBy+join would duplicate the whole scan→tokenize→tf subtree
     (column pruning defeats ReusedExchange; the round-4 TF-IDF lesson),
-    measured as a third corpus scan in the plan audit. avgdl/N are a
-    1-row aggregate-only pass broadcast into the score via a cross join —
-    OR, when the caller already paid that pass, passed in as `stats`
-    = (n_docs, avgdl) and inlined as literals (a collected Python float
+    measured as a third corpus scan in the plan audit. ``stats`` =
+    (n_docs, avgdl) of the corpus is inlined as literals: the registered
+    queries pass ``decontam.doc_stats`` (memoized per documents file, so
+    a warm build starts no job for it), a frame that is not a corpus
+    table passes ``decontam.doc_stats_of(d)``. A collected Python float
     IS the IEEE double F.avg produced, so the score doubles are
-    bit-identical; OPTIMIZATION_r14 — the PRF query calls this twice and
-    was paying the corpus-width stats subtree per call).
+    bit-identical to cross-joining the 1-row aggregate, which would cost
+    2 jobs per call under AQE.
 
     ``toks_df`` (OPTIMIZATION_r15, guide §2.3/§6): a caller that scores
     several passes over the same corpus can pass the (doc_id, toks)
@@ -74,14 +74,10 @@ def bm25_scores(d: DataFrame, terms, k1: float = _K1,
 
     if toks_df is None:
         # Deliberately NOT persisted here (OPTIMIZATION_r15, measured):
-        # with stats=None the stats aggregate and the tf pass both
-        # tokenize, but the stats pass only consumes size(toks) — column
-        # pruning keeps its scan narrow, and an interleaved A/B of a
-        # persisted shared relation measured a wash at sf0.1 (min 0.425
-        # vs 0.405 s) while materializing a tokenized corpus LARGER than
-        # the raw text (bad trade at scale, guide §5). The PRF caller
-        # persists its own toks_df because it has 3+ consumers plus
-        # collect-time jobs — that is the break-even.
+        # the tf pass is its only consumer, and materializing a tokenized
+        # corpus LARGER than the raw text is a bad trade at scale (guide
+        # §5). The PRF caller persists its own toks_df because it has 3+
+        # consumers plus collect-time jobs — that is the break-even.
         toks_df = d.select("doc_id", tokenize(F.col("text")).alias("toks"))
     base = toks_df.select(
         "doc_id",
@@ -98,15 +94,7 @@ def bm25_scores(d: DataFrame, terms, k1: float = _K1,
     # Document frequency per query term: distinct-doc row-count over tf
     # (one row per (doc, term)) via window — no join, no second subtree.
     tf = tf.withColumn("df", F.count("*").over(Window.partitionBy("term")))
-    if stats is None:
-        stats_df = toks_df.agg(
-            F.count("*").alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
-        )
-        scored_src = tf.crossJoin(F.broadcast(stats_df))
-        n_docs_col, avgdl_col = F.col("n_docs"), F.col("avgdl")
-    else:
-        scored_src = tf
-        n_docs_col, avgdl_col = F.lit(int(stats[0])), F.lit(float(stats[1]))
+    n_docs_col, avgdl_col = F.lit(int(stats[0])), F.lit(float(stats[1]))
     idf = F.log(
         1.0
         + (n_docs_col - F.col("df") + 0.5) / (F.col("df") + 0.5)
@@ -116,7 +104,7 @@ def bm25_scores(d: DataFrame, terms, k1: float = _K1,
         / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl_col))
     )
     return (
-        scored_src
+        tf
         .groupBy("doc_id")
         .agg(
             F.round(F.sum(contrib), 4).alias("bm25"),
@@ -160,7 +148,9 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderBy+limit (TakeOrderedAndProject — map-side partial top-k, never a
     single-partition window). Ranking key is the 4-dp-rounded score with
     doc_id tie-break, computed in IEEE double on both engines."""
-    scores = bm25_scores(_t(spark, sf_dir, "documents"), _QUERY_TERMS)
+    scores = bm25_scores(
+        _t(spark, sf_dir, "documents"), _QUERY_TERMS, doc_stats(spark, sf_dir)
+    )
     return (
         scores.select("doc_id", "bm25", "n_terms_hit", "tf_total")
         .orderBy(F.col("bm25").desc(), "doc_id")
@@ -692,7 +682,9 @@ def _rrf_sparse_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cut."""
     from pyspark.sql.window import Window
 
-    scores = bm25_scores(_t(spark, sf_dir, "documents"), _QUERY_TERMS)
+    scores = bm25_scores(
+        _t(spark, sf_dir, "documents"), _QUERY_TERMS, doc_stats(spark, sf_dir)
+    )
     top = scores.orderBy(F.col("bm25").desc(), "doc_id").limit(_RRF_N)
     # scale-ok: input is the post-TakeOrderedAndProject top-N rows only
     w = Window.orderBy(F.col("bm25").desc(), "doc_id")
@@ -1002,42 +994,34 @@ def search_bm25_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery.
 
     Scale / OPTIMIZATION_r14 (guide §2.3/§2.4 — this query was 5 corpus
-    tokenize passes, now 3): (n_docs, avgdl) is computed ONCE and
-    collected (2 scalars), then inlined into BOTH scoring passes as
-    literals instead of re-running the corpus-width stats subtree per
-    bm25_scores call; the feedback mine joins the broadcast 10-doc list
-    against `documents` BEFORE tokenizing, so it explodes 10 documents'
-    tokens, not the corpus's; and the bounded expansion set (≤8 terms,
-    deterministic) is collected and fed to pass 2 as a static isin —
-    the term filter lands in pass 2's scan stage with no join at all.
-    The two driver collects are O(1)-bounded decisions of the algorithm
-    itself (10 doc ids never leave the plan; 5 terms + 2 scalars do),
-    exactly the worked-example discipline of deciding on small rows.
+    tokenize passes, now 3): (n_docs, avgdl) is `decontam.doc_stats`,
+    computed once per documents file and memoized, then inlined into
+    BOTH scoring passes as literals instead of re-running the
+    corpus-width stats subtree per bm25_scores call; the feedback mine
+    joins the broadcast 10-doc list against `documents` BEFORE
+    tokenizing, so it explodes 10 documents' tokens, not the corpus's;
+    and the bounded expansion set (≤8 terms, deterministic) is collected
+    and fed to pass 2 as a static isin — the term filter lands in pass
+    2's scan stage with no join at all.
+    The driver collect of the expansion set is an O(1)-bounded decision
+    of the algorithm itself (10 doc ids never leave the plan; 5 terms
+    do), exactly the worked-example discipline of deciding on small rows.
 
-    OPTIMIZATION_r15 (guide §2.3/§6): the 3 remaining tokenize passes
-    are now 1 — the (doc_id, toks) relation is tokenized once, persisted,
-    and read by the stats collect, both scoring passes, and the feedback
-    mine (see the inline comment)."""
+    OPTIMIZATION_r15 (guide §2.3/§6): the tokenize passes of the two
+    scoring passes and the feedback mine are now 1 — the (doc_id, toks)
+    relation is tokenized once, persisted, and read by both scoring
+    passes and the feedback mine (see the inline comment)."""
     d = _t(spark, sf_dir, "documents")
-    # OPTIMIZATION_r15 (guide §2.3/§6): the three remaining corpus passes
-    # (stats, pass-1 scoring, pass-2 scoring) each re-ran the regexp
-    # tokenize over the full text column. Tokenize ONCE into a persisted
-    # (doc_id, toks) relation — the stats collect below materializes the
-    # cache, and both scoring passes plus the 10-doc feedback mine read
-    # it. Downstream expressions are untouched, so every score is
+    # OPTIMIZATION_r15 (guide §2.3/§6): the corpus passes (pass-1
+    # scoring, pass-2 scoring) each re-ran the regexp tokenize over the
+    # full text column. Tokenize ONCE into a persisted (doc_id, toks)
+    # relation — the expansion-set collect below (pass-1 scoring plus the
+    # 10-doc feedback mine) materializes the cache, and pass 2 reads it.
+    # Downstream expressions are untouched, so every score is
     # bit-identical (same IEEE doubles). At 100 TB this persisted relation
     # is the materialized tokenization table every IR stack keeps anyway.
     toks_df = d.select("doc_id", tokenize(F.col("text")).alias("toks")).persist()
-    n_docs, avgdl = (
-        toks_df.select(F.size("toks").alias("dl"))
-        .agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
-        .collect()[0]
-    )
-    # ADVICE r14: on an empty documents table avg() is NULL — fall back to
-    # avgdl=0.0 so construction stays total (tf=0 everywhere then, so the
-    # avgdl term is never reached and the result is the same empty set the
-    # fully-lazy plan produced).
-    st = (int(n_docs), float(avgdl) if avgdl is not None else 0.0)
+    st = doc_stats(spark, sf_dir)
     top = (
         bm25_scores(d, _QUERY_TERMS, stats=st, toks_df=toks_df)
         .orderBy(F.col("bm25").desc(), "doc_id")

@@ -20,12 +20,11 @@ Scale notes (100 TB):
   * Q20: same pruned-agg shape; the correlated "half the part's average"
     threshold decorrelates to a window avg over the collapsed link, never
     a second lineitem scan.
-  * Q21: the late-line relation joins lineitem⋈orders on orderkey, and
-    the EXISTS/NOT-EXISTS become a left-semi and a left-anti join ALSO
-    keyed on orderkey — all three shuffles share one hash-partitioning,
-    so Spark reuses the exchange instead of re-shuffling per subquery.
-    The suppkey inequality is a post-join residual on an equi-join,
-    never a nested-loop.
+  * Q21: the late-line relation, the EXISTS and the NOT EXISTS are all
+    per-order facts, so they fold into ONE aggregate over lineitem (left
+    joined to the 'F' orders) grouped by orderkey: one lineitem scan, one
+    map-side-combined key shuffle, no semi/anti join and no broadcast of
+    an order set that at scale is nearly every order.
 
 Float parity: quantity sums are integer-valued doubles (exact under any
 addition order); unit-price division and min() are order-independent, so
@@ -197,48 +196,47 @@ def q20_excess_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-order-aggregate form of the EXISTS / NOT EXISTS pair
-    (OPTIMIZATION_r15, VERDICT-r14 item 6):
+    """One per-order aggregate over lineitem LEFT JOIN the 'F' orders,
+    grouped by l_orderkey. A line is late when its order is 'F' and it
+    shipped > 90 days after the order date; `late` is its suppkey, NULL
+    on every other line (a non-'F' order's lines get a NULL order date).
 
-    - NOT EXISTS (another late supplier on the order) ⇔ the order has
-      exactly ONE distinct late supplier ⇒ aggregate the DISTINCT
-      (orderkey, suppkey) late relation per order; `count = 1` keeps the
-      order and `min(suppkey)` IS that supplier. Both ignore a NULL
-      suppkey, as the oracle's `l3.l_suppkey <> l1.l_suppkey` does.
-    - EXISTS (another supplier on the order) ⇔ the order has ≥ 2 distinct
-      suppliers overall ⇒ `min(l_suppkey) < max(l_suppkey)` per order
-      (the late supplier is on the order by construction, so a second
-      distinct supplier always differs from it) ⇒ single-key left-semi.
+    - EXISTS (another supplier on the order) ⇔ the order has ≥ 2
+      distinct suppliers ⇔ `min(l_suppkey) < max(l_suppkey)`: the late
+      supplier is on the order, so a second distinct one differs from it.
+    - NOT EXISTS (another late supplier on the order) ⇔ every late line
+      has the same supplier ⇔ `min(late) = max(late)`, both non-NULL
+      (the NULL comparison drops orders with no late line). That
+      `min(late)` IS the waiting supplier.
 
-    Both aggregates are map-side combinable on l_orderkey — strictly fewer
-    shuffled bytes than the r14 residual-join shape (which re-shipped the
-    full lineitem pair list into a semi and the late list into an anti
-    with suppkey-inequality residuals). Same-session interleaved A/B:
-    0.907× at sf0.1 and 0.813× at a synthetic ~sf1 (10× key-shifted
-    replicas), so the aggregate shape wins at both scales; the r14 round
-    had measured the non-persisted variant slower and reverted it — the
-    difference is that this form needs no persist and no residual scan.
+    min/max skip NULL suppkeys, as the oracle's `<>` comparisons never
+    hold for one, so a NULL late supplier is no second late supplier.
+
+    Replaces the r15 shape (distinct late pairs aggregated per order,
+    then left-semi joined to the per-order min<max set): that scanned
+    lineitem twice, shuffled on orderkey three times and broadcast the
+    multi-supplier order set — 10 Spark jobs warm at sf0.001, now 7.
+    Interleaved A/B (tools/ab_variants/q21_shapes.py, 4 cores, min of
+    8-12 rounds): 0.80-0.82x of the r15 shape at sf0.01; a wash at sf0.1
+    (0.98-1.06x over four runs), where lineitem is one row group, so the
+    one scan is one task while the r15 shape's two scans ran side by side.
     """
     o = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
     li = _t(spark, sf_dir, "lineitem")
-    late = (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .where(F.datediff(F.col("l_shipdate"), F.col("o_orderdate")) > 90)
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
+    late = F.when(
+        F.datediff(F.col("l_shipdate"), F.col("o_orderdate")) > 90, F.col("l_suppkey")
     )
-    cand = (
-        late.groupBy("l_orderkey")
-        .agg(F.count("l_suppkey").alias("n_late"), F.min("l_suppkey").alias("l_suppkey"))
-        .where(F.col("n_late") == 1)
+    l1 = (
+        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"), "left")
+        .groupBy("l_orderkey")
+        .agg(
+            F.min("l_suppkey").alias("mn"),
+            F.max("l_suppkey").alias("mx"),
+            F.min(late).alias("l_suppkey"),
+            F.max(late).alias("late_mx"),
+        )
+        .where((F.col("mn") < F.col("mx")) & (F.col("l_suppkey") == F.col("late_mx")))
     )
-    multi = (
-        li.groupBy("l_orderkey")
-        .agg(F.min("l_suppkey").alias("mn"), F.max("l_suppkey").alias("mx"))
-        .where(F.col("mn") < F.col("mx"))
-        .select("l_orderkey")
-    )
-    l1 = cand.join(multi, "l_orderkey", "left_semi")
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")

@@ -81,3 +81,70 @@ def test_q21_ignores_a_null_late_supplier(spark, sf_dir, tmp_path):
     assert_parity(
         QUERIES["q21_waiting_suppliers"](spark, sf), con, ORACLE["q21_waiting_suppliers"]
     )
+
+
+def test_q21_planted_order_shapes(spark, sf_dir, tmp_path):
+    """Four planted orders with EUROPE suppliers s1 < s2, each testing
+    one arm of q21's per-order aggregate against DuckDB on the same files:
+    (a) s1 late on two lines plus an on-time s2 counts s1 once; (b) two
+    distinct late suppliers count nobody; (c) a late line on a
+    single-supplier order counts nobody; (d) a late line on an order with
+    status 'O' counts nobody."""
+    import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf = copy_corpus(sf_dir, tmp_path / "sf")
+    con = duckdb.connect()
+    for t in ("lineitem", "orders", "supplier", "nation", "region"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+    oracle = ORACLE["q21_waiting_suppliers"]
+    before = dict(con.sql(oracle).fetchall())
+    (s1, name1), (s2, _) = con.sql(
+        """
+        SELECT s_suppkey, s_name FROM supplier
+        JOIN nation ON n_nationkey = s_nationkey
+        JOIN region ON r_regionkey = n_regionkey
+        WHERE r_name = 'EUROPE' ORDER BY s_suppkey LIMIT 2
+        """
+    ).fetchall()
+
+    orders = pq.read_table(f"{sf}/orders.parquet")
+    li = pq.read_table(f"{sf}/lineitem.parquet")
+    o_row, l_row = orders.slice(0, 1).to_pylist()[0], li.slice(0, 1).to_pylist()[0]
+    day0 = datetime.datetime(1996, 1, 1)
+    late, on_time = day0 + datetime.timedelta(days=120), day0 + datetime.timedelta(days=10)
+    shapes = [  # (status, [(suppkey, shipdate)]) per planted order
+        ("F", [(s1, late), (s1, late), (s2, on_time)]),  # (a)
+        ("F", [(s1, late), (s2, late)]),  # (b)
+        ("F", [(s1, late), (s1, on_time)]),  # (c)
+        ("O", [(s1, late), (s2, on_time)]),  # (d)
+    ]
+    okey = max(orders["o_orderkey"].to_pylist())
+    new_orders, new_lines = [], []
+    for status, lines in shapes:
+        okey += 1
+        new_orders.append(
+            {**o_row, "o_orderkey": okey, "o_orderstatus": status, "o_orderdate": day0}
+        )
+        for ln, (skey, ship) in enumerate(lines, 1):
+            new_lines.append(
+                {**l_row, "l_orderkey": okey, "l_suppkey": skey, "l_linenumber": ln,
+                 "l_shipdate": ship}
+            )
+    pq.write_table(
+        pa.concat_tables([orders, pa.Table.from_pylist(new_orders, schema=orders.schema)]),
+        f"{sf}/orders.parquet",
+    )
+    pq.write_table(
+        pa.concat_tables([li, pa.Table.from_pylist(new_lines, schema=li.schema)]),
+        f"{sf}/lineitem.parquet",
+    )
+
+    # the planted data says what the spec says: only (a) counts, once
+    assert dict(con.sql(oracle).fetchall()) == {
+        **before, name1: before.get(name1, 0) + 1
+    }
+    assert_parity(QUERIES["q21_waiting_suppliers"](spark, sf), con, oracle)

@@ -50,6 +50,7 @@ def test_dup_passage_planted(spark, doc_dir):
 
 
 def test_bm25_ranks_denser_shorter_doc_first(spark):
+    from kinesis3_spark.queries.decontam import doc_stats_of
     from kinesis3_spark.queries.search import bm25_scores
 
     rows = [
@@ -62,7 +63,7 @@ def test_bm25_ranks_denser_shorter_doc_first(spark):
         [(i, t, "en", "s", len(t)) for i, t in rows],
         ["doc_id", "text", "lang", "source", "n_chars"],
     )
-    got = {r.doc_id: r.bm25 for r in bm25_scores(d, ("window",)).collect()}
+    got = {r.doc_id: r.bm25 for r in bm25_scores(d, ("window",), doc_stats_of(d)).collect()}
     assert 2 not in got  # zero-hit docs are absent, not zero-scored
     assert got[1] > got[0]
 
@@ -425,6 +426,7 @@ def test_rrf_fuse_integer_arithmetic_on_planted_lists(spark):
 def test_rrf_hybrid_beats_either_leg_on_consensus(spark, sf_dir):
     """The fused top-10 must contain at least one doc from EACH leg's
     top-10 (both signals genuinely contribute at the served cut)."""
+    from kinesis3_spark.queries.decontam import doc_stats
     from kinesis3_spark.queries.search import (
         _QUERY_TERMS,
         _rrf_query_vec,
@@ -438,7 +440,9 @@ def test_rrf_hybrid_beats_either_leg_on_consensus(spark, sf_dir):
     fused = {r.doc_id for r in search_hybrid_rrf_topk(spark, sf_dir).collect()}
     sparse10 = {
         r.doc_id
-        for r in bm25_scores(_t(spark, sf_dir, "documents"), _QUERY_TERMS)
+        for r in bm25_scores(
+            _t(spark, sf_dir, "documents"), _QUERY_TERMS, doc_stats(spark, sf_dir)
+        )
         .orderBy(F.col("bm25").desc(), "doc_id")
         .limit(10)
         .collect()
@@ -506,17 +510,19 @@ def test_bm25_prf_expansion_terms_and_dynamic_scoring(spark, sf_dir):
     """The expansion set excludes the original query terms, and the
     dynamic-DataFrame scoring path is exactly the static path on the
     same term set (one bm25_scores definition, two filter shapes)."""
+    from kinesis3_spark.queries.decontam import doc_stats
     from kinesis3_spark.queries.search import _QUERY_TERMS, bm25_scores
     from kinesis3_spark.queries.relational import _t
     from pyspark.sql import functions as F
 
     d = _t(spark, sf_dir, "documents")
+    st = doc_stats(spark, sf_dir)
     terms_df = spark.createDataFrame([(t,) for t in _QUERY_TERMS], "term string")
     static = {
-        (r.doc_id, r.bm25) for r in bm25_scores(d, _QUERY_TERMS).collect()
+        (r.doc_id, r.bm25) for r in bm25_scores(d, _QUERY_TERMS, st).collect()
     }
     dynamic = {
-        (r.doc_id, r.bm25) for r in bm25_scores(d, terms_df).collect()
+        (r.doc_id, r.bm25) for r in bm25_scores(d, terms_df, st).collect()
     }
     assert static == dynamic
 

@@ -9,12 +9,13 @@ import ast
 import pathlib
 
 import duckdb
+import pytest
 
 from pyspark.sql import functions as F
 
 from kinesis3_spark.sources import read_csv, read_jsonl
 
-from .conftest import copy_corpus
+from .conftest import assert_parity, copy_corpus
 
 
 ROWS = [
@@ -279,6 +280,75 @@ def test_warm_q3_job_budget(spark, sf_dir):
 
     run()
     assert _jobs_started(spark, run) == Q3_WARM_JOBS
+
+
+# Jobs of a warm build plus noop write at the fixture SF for the queries
+# that read the memoized document statistics (`decontam.doc_stats`) or
+# compute q21 from one lineitem aggregate. Each build alone starts none.
+WARM_JOBS = {
+    "q21_waiting_suppliers": 7,
+    "llm_tfidf_top_terms": 4,
+    "search_bm25_topk": 4,
+    "search_hybrid_rrf_topk": 7,
+}
+
+
+@pytest.mark.parametrize("name", sorted(WARM_JOBS))
+def test_warm_job_budget(spark, sf_dir, name):
+    """A warm build is pure planning: the corpus statistics TF-IDF and
+    BM25 need are memoized per documents file, so no action runs before
+    the write; and q21 runs its one aggregate's jobs, not the two scans
+    and three shuffles of the semi-join shape."""
+    from kinesis3_spark.queries import QUERIES
+
+    built = []
+
+    def build():
+        built.append(QUERIES[name](spark, sf_dir))
+
+    def write():
+        built[-1].write.format("noop").mode("overwrite").save()
+
+    build()
+    write()
+    assert _jobs_started(spark, build) == 0
+    assert _jobs_started(spark, lambda: (build(), write())) == WARM_JOBS[name]
+
+
+def test_doc_stats_follow_a_rewritten_documents_file(spark, sf_dir, tmp_path):
+    """The memoized (n_docs, avgdl) are keyed by the identity of
+    documents.parquet: after the file is rewritten in place with more
+    documents, TF-IDF and BM25 in the same session score with the new
+    statistics and match their oracles on the new file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kinesis3_spark.queries import ORACLE, QUERIES
+
+    names = ("llm_tfidf_top_terms", "search_bm25_topk")
+    sf = copy_corpus(sf_dir, tmp_path / "sf")
+    for name in names:
+        QUERIES[name](spark, sf).collect()
+    docs = pq.read_table(f"{sf}/documents.parquet")
+    first = max(docs["doc_id"].to_pylist()) + 1
+    texts = [
+        " ".join(["window", "hash"] * (k + 1) + ["merge"] + ["filler"] * (3 * k))
+        for k in range(40)
+    ]
+    added = pa.table(
+        {
+            "doc_id": [first + k for k in range(len(texts))],
+            "text": texts,
+            "lang": ["en"] * len(texts),
+            "source": ["src9"] * len(texts),
+            "n_chars": [len(t) for t in texts],
+        }
+    ).cast(docs.schema)
+    pq.write_table(pa.concat_tables([docs, added]), f"{sf}/documents.parquet")
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')")
+    for name in names:
+        assert_parity(QUERIES[name](spark, sf), con, ORACLE[name])
 
 
 def test_load_table_sees_a_rewritten_schema(spark, sf_dir, tmp_path):

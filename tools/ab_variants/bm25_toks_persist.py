@@ -1,7 +1,12 @@
 """A/B: bm25_scores persisting the (doc_id, toks) relation when it feeds
-both the stats aggregate and the tf pass (new, as committed r15) vs the
-two-tokenize-pass shape (old, replicated inline via an unpersisted
+both the stats aggregate and the tf pass (decided r15: not persisted) vs
+the two-tokenize-pass shape (old, replicated inline via an unpersisted
 toks_df). Timed on the two affected headline queries.
+
+The stats aggregate has since left the scoring plan: every caller passes
+the (n_docs, avgdl) memoized per documents file (`decontam.doc_stats`),
+so `old_topk` passes them too and now differs from `new_topk` only in
+handing bm25_scores its own unpersisted toks_df.
 """
 
 from __future__ import annotations
@@ -9,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kinesis3_spark.functions.text import tokenize
+from kinesis3_spark.queries.decontam import doc_stats
 from kinesis3_spark.queries.relational import _t
 from kinesis3_spark.queries.search import (
     _QUERY_TERMS,
@@ -20,7 +26,7 @@ from kinesis3_spark.queries.search import (
 def old_topk(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     toks = d.select("doc_id", tokenize(F.col("text")).alias("toks"))
-    scores = bm25_scores(d, _QUERY_TERMS, toks_df=toks)  # unpersisted: 2 passes
+    scores = bm25_scores(d, _QUERY_TERMS, doc_stats(spark, sf_dir), toks_df=toks)
     return (
         scores.select("doc_id", "bm25", "n_terms_hit", "tf_total")
         .orderBy(F.col("bm25").desc(), "doc_id")

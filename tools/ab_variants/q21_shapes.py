@@ -1,9 +1,14 @@
-"""A/B (VERDICT r14 "Next round" #6): q21 r14 residual-join shape (old,
-inlined) vs the per-order-aggregate shape (new, registered as of r15).
-Decided at sf0.1 AND a synthetic ~sf1 (10x key-shifted lineitem/orders
-replicas under /tmp/synth_sf1 — plan-shape decision data, not oracle
-data): the aggregate shape won both (0.907x / 0.813x), so it is now the
-registered form; `new` delegates to it.
+"""A/B: q21 r15 per-order-aggregate shape (old, inlined: distinct late
+(orderkey, suppkey) pairs aggregated per order, left-semi joined to the
+per-order min<max set) vs the fused shape (new, registered: one aggregate
+over lineitem LEFT JOIN the 'F' orders, min/max of all and of the late
+suppliers per order). `new` delegates to the registered query.
+
+    python tools/ab_bench.py tools/ab_variants/q21_shapes.py --rounds 8
+
+The r15 file decided the r14 residual-join shape against the r15 shape
+(0.907x at sf0.1, 0.813x at a synthetic ~sf1); this one decides the r15
+shape against the fused one (result in CHANGES.md).
 """
 
 from __future__ import annotations
@@ -22,25 +27,19 @@ def old(spark, sf_dir):
         .where(F.datediff(F.col("l_shipdate"), F.col("o_orderdate")) > 90)
         .select("l_orderkey", "l_suppkey")
         .distinct()
-        .persist()
     )
-    l2 = li.select(
-        F.col("l_orderkey").alias("o2_orderkey"), F.col("l_suppkey").alias("o2_suppkey")
+    cand = (
+        late.groupBy("l_orderkey")
+        .agg(F.count("l_suppkey").alias("n_late"), F.min("l_suppkey").alias("l_suppkey"))
+        .where(F.col("n_late") == 1)
     )
-    l3 = late.select(
-        F.col("l_orderkey").alias("o3_orderkey"), F.col("l_suppkey").alias("o3_suppkey")
+    multi = (
+        li.groupBy("l_orderkey")
+        .agg(F.min("l_suppkey").alias("mn"), F.max("l_suppkey").alias("mx"))
+        .where(F.col("mn") < F.col("mx"))
+        .select("l_orderkey")
     )
-    l1 = late.join(
-        l2,
-        (F.col("l_orderkey") == F.col("o2_orderkey"))
-        & (F.col("l_suppkey") != F.col("o2_suppkey")),
-        "left_semi",
-    ).join(
-        l3,
-        (F.col("l_orderkey") == F.col("o3_orderkey"))
-        & (F.col("l_suppkey") != F.col("o3_suppkey")),
-        "left_anti",
-    )
+    l1 = cand.join(multi, "l_orderkey", "left_semi")
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
