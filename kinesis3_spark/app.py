@@ -14,24 +14,27 @@ This module is the same loop on Structured Streaming:
                  `{sequence_number, data, partition}` (SURVEY.md §1.1;
                  swap in the Kinesis/Kafka connector format in production —
                  everything downstream is the same DataFrame plan).
-  * per batch  — `foreachBatch`: ONE materialization of the parsed
-                 micro-batch feeds every sink; the events projection is
-                 the declarative pipeline (pipeline.ingest — from_json×2
-                 + cookie map + UTM).
-  * store      — keyed Parquet upsert (sinks.upsert_parquet), first- or
-                 last-writer-wins per --mode, matching db.clj's dedup.
+  * per batch  — `foreachBatch`: the archive append runs first and
+                 counts the batch; the quarantine and the store merge
+                 re-read it. The events projection is the declarative
+                 pipeline (pipeline.ingest — from_json×2 + cookie map +
+                 UTM).
   * archive    — raw records appended as Parquet partitioned by dt derived
                  from the record's own receive epoch (the columnar upgrade
                  of the reference's `yyyy/MM/dd/<seq>.records.log.gz`).
+  * store      — keyed Parquet upsert (sinks.upsert_parquet), first- or
+                 last-writer-wins per --mode, matching db.clj's dedup.
   * stats      — driver-side counters + per-batch timings, served as JSON
                  over stdlib HTTP (the `/stats` endpoint) and/or written to
                  a file after each batch.
 
-Scale notes: a batch with malformed records costs 5 Spark jobs — the
-parse materialization (1, which also counts rows and malformed rows
-through an Observation), the quarantine append (1), the store merge write
-(2: AQE runs the key shuffle's map stage as its own job) and the archive
-append (1); a clean batch skips the quarantine job. The projection stays
+Scale notes: a batch with malformed records costs 4 Spark jobs — the
+archive append first (1, which also counts rows and malformed rows
+through an Observation), then the quarantine append (1) and the store
+merge write (2: AQE runs the key shuffle's map stage as its own job). A
+clean batch skips the quarantine job (3); an all-malformed batch skips
+the merge (2). The quarantine and the merge re-read the batch from its
+replayable source instead of a materialized copy. The projection stays
 in whole-stage codegen. Each upsert reads and rewrites the whole store
 through a staged swap, O(table) per batch; the archive is append-only.
 The driver holds only counters (no rows)."""
@@ -135,19 +138,27 @@ class Collector:
         env_bad = F.col("_rec._corrupt").isNotNull()
         body_bad = F.col("_rec.body").isNull() | F.col("_req._corrupt").isNotNull()
         ok = ~env_bad & ~body_bad & F.col("sequence_number").isNotNull()
-        # one materialization of the parse feeds the quarantine, the store
-        # and the archive; the observation counts rows while it is built,
-        # so no sink re-reads the source and no count() runs its own job
+        parsed = parsed.withColumn("__ok", ok)
+        # The raw-record archive (date-partitioned by the record's receive
+        # epoch) runs first and carries the observation: its one job counts
+        # rows and malformed rows while it writes, so no job runs only to
+        # count. The quarantine and the store merge then re-read the batch
+        # from its replayable source. `Observation.get` blocks until the
+        # observed plan reports its metrics; placed under the store merge's
+        # key shuffle it was measured to never report and hang the batch.
         observed = Observation()
-        parsed = (
-            parsed.withColumn("__ok", ok)
-            .observe(
-                observed,
-                F.count(F.lit(1)).alias("n"),
-                F.count_if(~F.col("__ok")).alias("n_bad"),
-            )
-            .localCheckpoint(eager=True)
+        raw = parsed.observe(
+            observed,
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(~F.col("__ok")).alias("n_bad"),
+        ).select(
+            *batch.columns,
+            F.date_format(
+                F.timestamp_millis(F.get_json_object("data", "$.epoch").cast("long")),
+                "yyyy-MM-dd",
+            ).alias("dt"),
         )
+        write_partitioned(raw, self.archive_path)
         counts = observed.get
         n, n_bad = counts["n"], counts["n_bad"]
         if n == 0:
@@ -162,24 +173,14 @@ class Collector:
                 .otherwise("missing_key")
                 .alias("reason"),
             ).write.mode("append").parquet(self.quarantine_path)
-        events = project_events(
-            parsed.where(F.col("__ok")), sid_col="sequence_number", raw_col="data"
-        )
-        upsert_parquet(
-            self.spark, events, self.store_path,
-            key="id", order_col="ts", mode=self.mode,
-        )
-        # raw-record archive, date-partitioned by the record's receive epoch
-        raw = parsed.select(
-            *batch.columns,
-            F.date_format(
-                F.timestamp_millis(
-                    F.get_json_object("data", "$.epoch").cast("long")
-                ),
-                "yyyy-MM-dd",
-            ).alias("dt"),
-        )
-        write_partitioned(raw, self.archive_path)
+        if n_bad < n:  # an all-malformed batch leaves the store as it is
+            events = project_events(
+                parsed.where(F.col("__ok")), sid_col="sequence_number", raw_col="data"
+            )
+            upsert_parquet(
+                self.spark, events, self.store_path,
+                key="id", order_col="ts", mode=self.mode,
+            )
         dt = time.perf_counter() - t0
         with self._lock:
             self._stats["messages_ingested"] += n

@@ -19,9 +19,12 @@ TakeOrderedAndProject (orderBy+limit), never a global window.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import tmpdirs
 from ..functions.text import ngram_hashes, tokenize
 from ..sources import read_parquet
 from .decontam import _DUCK_TOKS, doc_stats
@@ -76,8 +79,9 @@ def bm25_scores(d: DataFrame, terms, stats: tuple[int, float],
         # Deliberately NOT persisted here (OPTIMIZATION_r15, measured):
         # the tf pass is its only consumer, and materializing a tokenized
         # corpus LARGER than the raw text is a bad trade at scale (guide
-        # §5). The PRF caller persists its own toks_df because it has 3+
-        # consumers plus collect-time jobs — that is the break-even.
+        # §5). The PRF query reads a persisted toks_df (`_doc_toks`)
+        # because it has 3+ consumers plus collect-time jobs — that is
+        # the break-even.
         toks_df = d.select("doc_id", tokenize(F.col("text")).alias("toks"))
     base = toks_df.select(
         "doc_id",
@@ -433,7 +437,6 @@ def bucketed_gram_index(spark: SparkSession, sf_dir: str) -> str:
     applied to gram space). Returns the catalog table name."""
     import hashlib
 
-    from .. import tmpdirs
     from ..functions.text import ngram_hashes_from_tokens, tokenize
     from ..sinks.bucketed import write_bucketed
 
@@ -568,7 +571,6 @@ def llm_exact_substring_incremental(
 # cleaned batches once; re-runs read the parquet back (every availableNow
 # drain goes through await_or_raise, never a partial)
 def _stream_es_materialize(spark: SparkSession, sf_dir: str) -> str:
-    from .. import tmpdirs
     from ..operators.dedup import decontaminate_spans
     from ..streaming import stream_documents
     from ..streaming.run import await_or_raise
@@ -931,6 +933,27 @@ _PRF_FEEDBACK_DOCS = 10  # docs mined for expansion terms
 _PRF_EXPANSION = 5       # expansion terms added to the query
 
 
+def _doc_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persisted (doc_id, toks) relation of the corpus's documents,
+    memoized per identity of ``documents.parquet`` like
+    ``decontam.doc_stats``: the memo unpersists it when the file is
+    rewritten, so a warm call neither persists again nor pins a second
+    copy. OPTIMIZATION_r15 (guide §2.3/§6): the PRF query's corpus passes
+    (pass-1 scoring, the 10-doc feedback mine, pass-2 scoring) each re-ran
+    the regexp tokenize over the full text column; they now read this
+    one relation, and the first call's expansion-set collect materializes
+    it. Downstream expressions are untouched, so every score is
+    bit-identical (same IEEE doubles). At 100 TB this is the materialized
+    tokenization table every IR stack keeps anyway."""
+    return tmpdirs.memo(
+        "doc_toks",
+        os.path.join(sf_dir, "documents.parquet"),
+        lambda _scratch: _t(spark, sf_dir, "documents")
+        .select("doc_id", tokenize(F.col("text")).alias("toks"))
+        .persist(),
+    )
+
+
 @query(
     "search_bm25_prf",
     oracle=f"""
@@ -1010,17 +1033,10 @@ def search_bm25_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     OPTIMIZATION_r15 (guide §2.3/§6): the tokenize passes of the two
     scoring passes and the feedback mine are now 1 — the (doc_id, toks)
     relation is tokenized once, persisted, and read by both scoring
-    passes and the feedback mine (see the inline comment)."""
+    passes and the feedback mine (`_doc_toks`, memoized per documents
+    file)."""
     d = _t(spark, sf_dir, "documents")
-    # OPTIMIZATION_r15 (guide §2.3/§6): the corpus passes (pass-1
-    # scoring, pass-2 scoring) each re-ran the regexp tokenize over the
-    # full text column. Tokenize ONCE into a persisted (doc_id, toks)
-    # relation — the expansion-set collect below (pass-1 scoring plus the
-    # 10-doc feedback mine) materializes the cache, and pass 2 reads it.
-    # Downstream expressions are untouched, so every score is
-    # bit-identical (same IEEE doubles). At 100 TB this persisted relation
-    # is the materialized tokenization table every IR stack keeps anyway.
-    toks_df = d.select("doc_id", tokenize(F.col("text")).alias("toks")).persist()
+    toks_df = _doc_toks(spark, sf_dir)
     st = doc_stats(spark, sf_dir)
     top = (
         bm25_scores(d, _QUERY_TERMS, stats=st, toks_df=toks_df)

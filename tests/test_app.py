@@ -413,10 +413,29 @@ def _collector(spark, tmp_path, landing) -> Collector:
     )
 
 
-def test_batch_into_existing_store_runs_five_jobs(spark, tmp_path):
+def _jobs_of_run(spark, c: Collector) -> tuple[int, dict]:
+    """Spark jobs one `c.run()` starts, from the DAG scheduler's job-id
+    counter, and the stats it returns."""
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.dagScheduler().nextJobId()
+    stats = c.run(timeout_s=300)
+    return sc.dagScheduler().nextJobId() - before, stats
+
+
+def _parquet_files(path: str) -> dict[str, int]:
+    """Every `.parquet` file under `path`, relative path -> mtime_ns."""
+    return {
+        os.path.relpath(os.path.join(d, f), path): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+
+
+def test_batch_into_existing_store_runs_four_jobs(spark, tmp_path):
     """A file with one malformed record, drained into an existing store,
-    costs 5 Spark jobs: the observed parse materialization, the quarantine
-    append, the store merge (map stage + write) and the archive append.
+    costs 4 Spark jobs: the archive append (which also counts the batch),
+    the quarantine append and the store merge (map stage + write).
     The file is received a day later and re-sends a stored key with a newer
     event time: the store keeps the newer row, the archive gets one `dt=`
     directory per receive day."""
@@ -432,12 +451,9 @@ def test_batch_into_existing_store_runs_five_jobs(spark, tmp_path):
         + [_record_line(10, epoch=day2, t_shift=60_000, source="resent")]
         + [_record_line(100, bad_body=True)],
     )
-    sc = spark.sparkContext._jsc.sc()
-    before = sc.dagScheduler().nextJobId()
-    stats = c.run(timeout_s=300)
-    jobs = sc.dagScheduler().nextJobId() - before
+    jobs, stats = _jobs_of_run(spark, c)
     c.stop()
-    assert jobs == 5
+    assert jobs == 4
     assert stats["message-ingested"]["count"] == 102
     assert stats["malformed"]["count"] == 1
     store = spark.read.parquet(c.store_path)
@@ -452,15 +468,37 @@ def test_batch_into_existing_store_runs_five_jobs(spark, tmp_path):
     ]
 
 
+def test_clean_batch_into_existing_store_runs_three_jobs(spark, tmp_path):
+    """A file with no malformed record skips the quarantine: the archive
+    append and the store merge, 3 Spark jobs, and no quarantine is made."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    c = _collector(spark, tmp_path, landing)
+    _land_lines(landing, "a.json", [_record_line(i) for i in range(50)])
+    c.run(timeout_s=300)
+    _land_lines(landing, "b.json", [_record_line(i) for i in range(50, 100)])
+    jobs, stats = _jobs_of_run(spark, c)
+    c.stop()
+    assert jobs == 3
+    assert stats["message-ingested"]["count"] == 100
+    assert stats["malformed"]["count"] == 0
+    assert spark.read.parquet(c.store_path).count() == 100
+    assert spark.read.parquet(c.archive_path).count() == 100
+    assert not os.path.exists(c.quarantine_path)
+
+
 def test_empty_file_batch_is_skipped(spark, tmp_path):
     """A 0-line landed file makes an empty micro-batch: no batch is counted
-    and nothing is written; the next file lands normally."""
+    and no sink gets a data file (the archive append, which counts the
+    batch, leaves only its committer's marker); the next file lands
+    normally."""
     landing = tmp_path / "landing"
     landing.mkdir()
     c = _collector(spark, tmp_path, landing)
     _land_lines(landing, "empty.json", [])
     c.run(timeout_s=300)
-    assert not os.path.exists(c.store_path)
+    for sink in (c.store_path, c.archive_path, c.quarantine_path):
+        assert _parquet_files(sink) == {}
     _land_lines(landing, "a.json", [_record_line(i) for i in range(20)])
     stats = c.run(timeout_s=300)
     c.stop()

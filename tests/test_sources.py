@@ -320,15 +320,24 @@ def test_doc_stats_follow_a_rewritten_documents_file(spark, sf_dir, tmp_path):
     documents.parquet: after the file is rewritten in place with more
     documents, TF-IDF and BM25 in the same session score with the new
     statistics and match their oracles on the new file."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from kinesis3_spark.queries import ORACLE, QUERIES
 
     names = ("llm_tfidf_top_terms", "search_bm25_topk")
     sf = copy_corpus(sf_dir, tmp_path / "sf")
     for name in names:
         QUERIES[name](spark, sf).collect()
+    con = _append_documents(sf)
+    for name in names:
+        assert_parity(QUERIES[name](spark, sf), con, ORACLE[name])
+
+
+def _append_documents(sf: str):
+    """Rewrite ``sf``'s documents.parquet in place with 40 more documents
+    that hit the BM25 query terms; returns a DuckDB connection with the
+    new file as the ``documents`` view."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     docs = pq.read_table(f"{sf}/documents.parquet")
     first = max(docs["doc_id"].to_pylist()) + 1
     texts = [
@@ -347,8 +356,27 @@ def test_doc_stats_follow_a_rewritten_documents_file(spark, sf_dir, tmp_path):
     pq.write_table(pa.concat_tables([docs, added]), f"{sf}/documents.parquet")
     con = duckdb.connect()
     con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')")
-    for name in names:
-        assert_parity(QUERIES[name](spark, sf), con, ORACLE[name])
+    return con
+
+
+def test_bm25_prf_persists_its_tokens_once_per_documents_file(spark, sf_dir, tmp_path):
+    """search_bm25_prf reads one persisted (doc_id, toks) relation per
+    identity of documents.parquet: a second warm call persists nothing
+    more, and after the file is rewritten the old relation is released
+    (the count of persisted RDDs stays put) and the query matches its
+    oracle on the new file."""
+    from kinesis3_spark.queries import ORACLE, QUERIES
+
+    prf = QUERIES["search_bm25_prf"]
+    persisted = lambda: len(spark.sparkContext._jsc.getPersistentRDDs())
+    sf = copy_corpus(sf_dir, tmp_path / "sf")
+    prf(spark, sf).collect()
+    n = persisted()
+    prf(spark, sf).collect()
+    assert persisted() == n
+    con = _append_documents(sf)
+    assert_parity(prf(spark, sf), con, ORACLE["search_bm25_prf"])
+    assert persisted() == n
 
 
 def test_load_table_sees_a_rewritten_schema(spark, sf_dir, tmp_path):
