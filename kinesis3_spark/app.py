@@ -42,6 +42,7 @@ The driver holds only counters (no rows)."""
 from __future__ import annotations
 
 import json
+import logging
 import math
 import threading
 import time
@@ -251,6 +252,11 @@ class Collector:
             try:
                 p = q.lastProgress
             except Exception:
+                # a failing progress read skips this stream, not /stats
+                logging.getLogger(__name__).warning(
+                    "could not read lastProgress of a watched stream",
+                    exc_info=True,
+                )
                 p = None
             if not p:
                 continue

@@ -2,13 +2,14 @@
 video as opaque `binary` payload columns with typed metadata, processed by
 Arrow-batched `mapInPandas` operators.
 
-Container decoding (JPEG/PNG/WAV/MP4) requires codec libraries that are NOT
-in this environment — that step is stubbed behind NotImplementedError, with
-a deterministic RAW container format standing in so every downstream stage
-(feature extraction, frame sampling, hashing) is REAL, runs on real numpy
-arrays, and is tested end-to-end. The Spark-side plumbing — schemas, batch
-iteration, output shapes, partition sizing — is exactly what a production
-deployment keeps; only `_decode_*` swaps to PIL/soundfile/pyav.
+Payloads use a deterministic RAW container format, so every stage
+(feature extraction, frame sampling, hashing) runs on real numpy arrays and
+is tested end-to-end. Real containers (JPEG/PNG/WAV/MP4) need codec
+libraries this package does not depend on; `_decode_*` refuses them with a
+ValueError naming the expected RAW magic (decode branches for optional
+codec libraries are in git history). The Spark-side plumbing — schemas,
+batch iteration, output shapes, partition sizing — is what a
+codec-backed deployment would keep.
 
 RAW container layouts (little-endian u32 header fields after a 4-byte magic):
   RAWI: magic 'RAWI' | width | height | channels | payload (w*h*c bytes)
@@ -41,7 +42,7 @@ _MAGIC_I, _MAGIC_A, _MAGIC_V = b"RAWI", b"RAWA", b"RAWV"
 
 
 # ----------------------------------------------------------------------
-# Container encode/decode (the stubbed codec boundary)
+# Container encode/decode (RAW containers only)
 # ----------------------------------------------------------------------
 
 def encode_rawi(arr: np.ndarray) -> bytes:
@@ -62,71 +63,35 @@ def encode_rawv(frames: np.ndarray) -> bytes:
     return _MAGIC_V + struct.pack("<III", w, h, n) + frames.astype(np.uint8).tobytes()
 
 
-def _decode_image(b: bytes) -> np.ndarray:
-    """payload → HxWxC uint8. Real containers AUTO-ENABLE behind an
-    import probe (the Avro-gate pattern, tests/test_sources.py): when
-    Pillow is installed in the executors' environment, JPEG/PNG/WebP
-    payloads decode through it with zero code changes; without it the
-    RAW path still works and other containers fail with the actionable
-    message. The probe runs per decode call but import caches make it a
-    dict hit after the first."""
-    if b[:4] == _MAGIC_I:
-        w, h, c = struct.unpack("<III", b[4:16])
-        return np.frombuffer(b, np.uint8, count=w * h * c, offset=16).reshape(h, w, c)
-    try:
-        from PIL import Image  # codec gate: present in prod images
-    except ImportError:
-        raise NotImplementedError(
-            "non-RAW image container (JPEG/PNG/...) — requires Pillow, "
-            "not available in this environment; pip install Pillow on "
-            "the executors and this branch activates itself"
-        ) from None
-    import io
+def _not_raw(kind: str, magic: bytes, b: bytes) -> ValueError:
+    return ValueError(
+        f"{kind} payload is not a RAW container: expected magic {magic!r}, "
+        f"got {bytes(b[:4])!r}"
+    )
 
-    img = Image.open(io.BytesIO(b))
-    if img.mode not in ("L", "RGB", "RGBA"):
-        img = img.convert("RGB")
-    arr = np.asarray(img, dtype=np.uint8)
-    return arr[:, :, None] if arr.ndim == 2 else arr
+
+def _decode_image(b: bytes) -> np.ndarray:
+    """RAWI payload → HxWxC uint8."""
+    if b[:4] != _MAGIC_I:
+        raise _not_raw("image", _MAGIC_I, b)
+    w, h, c = struct.unpack("<III", b[4:16])
+    return np.frombuffer(b, np.uint8, count=w * h * c, offset=16).reshape(h, w, c)
 
 
 def _decode_audio(b: bytes) -> tuple[np.ndarray, int]:
-    if b[:4] == _MAGIC_A:
-        rate, n = struct.unpack("<II", b[4:12])
-        return np.frombuffer(b, "<i2", count=n, offset=12), rate
-    try:
-        import soundfile as sf  # codec gate (same pattern as Pillow)
-    except ImportError:
-        raise NotImplementedError(
-            "non-RAW audio container — requires soundfile; pip install "
-            "soundfile on the executors and this branch activates itself"
-        ) from None
-    import io
-
-    samples, rate = sf.read(io.BytesIO(b), dtype="int16", always_2d=False)
-    if samples.ndim == 2:  # downmix to mono like the RAW contract
-        samples = samples.mean(axis=1).astype(np.int16)
-    return samples, int(rate)
+    """RAWA payload → (int16 samples, sample rate)."""
+    if b[:4] != _MAGIC_A:
+        raise _not_raw("audio", _MAGIC_A, b)
+    rate, n = struct.unpack("<II", b[4:12])
+    return np.frombuffer(b, "<i2", count=n, offset=12), rate
 
 
 def _decode_video(b: bytes) -> np.ndarray:
-    if b[:4] == _MAGIC_V:
-        w, h, n = struct.unpack("<III", b[4:16])
-        return np.frombuffer(b, np.uint8, count=n * h * w, offset=16).reshape(n, h, w)
-    try:
-        import av  # codec gate (same pattern as Pillow)
-    except ImportError:
-        raise NotImplementedError(
-            "non-RAW video container — requires pyav; pip install av on "
-            "the executors and this branch activates itself"
-        ) from None
-    import io
-
-    frames = []
-    with av.open(io.BytesIO(b)) as container:
-        for frame in container.decode(video=0):
-            frames.append(np.asarray(frame.to_image().convert("L"), np.uint8))
-    return np.stack(frames)
+    """RAWV payload → NxHxW uint8 gray frames."""
+    if b[:4] != _MAGIC_V:
+        raise _not_raw("video", _MAGIC_V, b)
+    w, h, n = struct.unpack("<III", b[4:16])
+    return np.frombuffer(b, np.uint8, count=n * h * w, offset=16).reshape(n, h, w)
 
 
 # ----------------------------------------------------------------------

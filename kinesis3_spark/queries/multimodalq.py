@@ -212,8 +212,8 @@ def audio_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     triad: image r5, video r6, audio here): the REAL audio_features
     operator (mapInPandas RAWA decode → sample count / rate / RMS) runs
     over synthesized constant-amplitude containers whose every feature
-    the oracle derives arithmetically. Real codecs (WAV/MP3 via
-    soundfile/pyav) stay the declared env boundary."""
+    the oracle derives arithmetically. Real codecs (WAV/MP3) are out of
+    scope: the decoder refuses any non-RAW container."""
     audio = _synthesize_audio(_t(spark, sf_dir, "documents"))
     return M.audio_features(audio).orderBy("media_id")
 

@@ -56,8 +56,6 @@ def _rewrite(spark: SparkSession, sf_dir: str, table: str, fmt: str) -> str:
             w.json(path)
         elif fmt == "csv":
             w.option("header", "true").csv(path)
-        elif fmt == "avro":
-            w.format("avro").save(path)
         elif fmt == "xml":
             w.format("xml").option("rootTag", "rows").option("rowTag", "row").save(path)
         else:
@@ -65,97 +63,6 @@ def _rewrite(spark: SparkSession, sf_dir: str, table: str, fmt: str) -> str:
         return path
 
     return tmpdirs.memo("rewrite", sf_dir, build, table, fmt)
-
-
-def _avro_available() -> bool:
-    """spark-avro has been an EXTERNAL module since Spark 2.4 — the core
-    avro-*.jar in the distribution is not the data source. Checked
-    STATICALLY (jar glob over the distribution, $SPARK_HOME, and Ivy's
-    --packages cache) so registration can be conditional at import time,
-    before any SparkSession exists (the tws/protobuf pattern,
-    streamq.py:356 — the driver never sees an err row in a sandbox
-    without the module, and the row turns official automatically the day
-    the env ships it). The static check is best-effort by nature
-    (review r8 #4): a jar supplied through an exotic classpath route is
-    caught at RUN time instead — source_avro_roundtrip probes the actual
-    data source and only raises the deployment message if that fails."""
-    import glob
-
-    import pyspark
-
-    dirs = [os.path.join(os.path.dirname(pyspark.__file__), "jars")]
-    if os.environ.get("SPARK_HOME"):
-        dirs.append(os.path.join(os.environ["SPARK_HOME"], "jars"))
-    # spark-submit --packages resolves through Ivy into ~/.ivy2/jars
-    # (pattern <org>_<artifact>-<ver>.jar)
-    dirs.append(os.path.expanduser("~/.ivy2/jars"))
-    return any(
-        glob.glob(os.path.join(d, pat))
-        for d in dirs
-        for pat in ("spark-avro_*.jar", "*spark-avro_*.jar")
-    )
-
-
-_AVRO_ORACLE = f"""
-    SELECT p_brand,
-           count(*)::BIGINT AS n_parts,
-           CAST(sum(CAST(round(p_retailprice * 100) AS BIGINT)) AS DOUBLE) / 100
-             AS sum_price,
-           CAST(min(p_partkey) AS BIGINT) AS min_key,
-           CAST(max(p_partkey) AS BIGINT) AS max_key,
-           CAST(sum({_SIG_SQL.format(col="p_name")}) AS BIGINT) AS name_sig
-    FROM part
-    GROUP BY p_brand ORDER BY p_brand
-"""
-
-
-def source_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """part → Avro → schema-pinned read-back → aggregate vs the parquet
-    original (the CSV/JSONL/ORC round-trip contract applied to the one
-    mainstream row format without a row, VERDICT r7 'Next round' #3).
-    Avro is the schema'd row format of the Kafka/Kinesis ecosystem the
-    reference collector lived in (core.clj:96-148's archive generalized) —
-    the natural wire format for its records. Env-gated like the Kinesis
-    adapter (streaming/sources.py:88): raises NotImplementedError with the
-    deployment recipe when spark-avro is absent; the official oracle row
-    registers itself only when present."""
-    # Functional probe, not the static glob: a jar supplied via --jars or
-    # any other classpath route works here even if _avro_available()
-    # couldn't see it statically (review r8 #4). Only a genuinely missing
-    # data source degrades to the deployment message.
-    try:
-        schema = load_table(spark, sf_dir, "part").schema
-        part = (
-            spark.read.schema(schema)
-            .format("avro")
-            .load(_rewrite(spark, sf_dir, "part", "avro"))
-        )
-    except Exception as ex:
-        if "avro" not in str(ex).lower():
-            raise
-        raise NotImplementedError(
-            "spark-avro is not on the classpath (external module since "
-            "Spark 2.4). Launch with --packages org.apache.spark:"
-            "spark-avro_2.13:<spark-version> and re-run; "
-            "source_avro_roundtrip registers its oracle row automatically "
-            "when the module is present."
-        ) from ex
-    cents = F.round(F.col("p_retailprice") * 100).cast("bigint")
-    return (
-        part.groupBy("p_brand")
-        .agg(
-            F.count("*").cast("bigint").alias("n_parts"),
-            (F.sum(cents).cast("double") / 100).alias("sum_price"),
-            F.min("p_partkey").cast("bigint").alias("min_key"),
-            F.max("p_partkey").cast("bigint").alias("max_key"),
-            F.sum(_sig("p_name")).cast("bigint").alias("name_sig"),
-        )
-        .orderBy("p_brand")
-    )
-
-
-if _avro_available():
-    query("source_avro_roundtrip", oracle=_AVRO_ORACLE)(source_avro_roundtrip)
 
 
 @query(
@@ -175,7 +82,7 @@ if _avro_available():
 def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """supplier → XML → schema-pinned read-back → aggregate vs the parquet
     original. Spark 4 ships the XML data source BUILT-IN (the former
-    spark-xml package), so unlike Avro this row runs live here — XML is
+    spark-xml package), so this row runs without an extra jar — XML is
     the remaining mainstream interchange format after CSV/JSONL/ORC/
     Parquet, the feed/export shape enterprise upstreams still emit.
     s_name exercises XML entity escaping ('&', '<' in text nodes) via the

@@ -204,19 +204,27 @@ def llm_dup_passage_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|grams|) shuffled as longs, vs the suffix-array build the paper
     uses single-node. A gram-hash collision could overcount one dup gram
     (P ≈ n²/2⁶⁵ — the decontamination tier accepts the same trade)."""
-    d = _t(spark, sf_dir, "documents")
     # OPTIMIZATION_r14 (guide §2.3/§2.4): the exploded distinct gram
     # relation feeds BOTH the doc-frequency aggregate and the join back;
     # unpersisted, Catalyst re-executed the explode+distinct subtree
-    # (exchange included) per alias. Persist it per call (64-bit hashes,
-    # ContextCleaner reaps it with the plan), and join against only the
-    # DUP subset (df >= 2) with a hit flag instead of the full frequency
-    # table — n_dup = count(hit) is identical, and the build side
-    # shrinks to the duplicated grams (AQE broadcasts it when small).
-    grams = d.select(
-        "doc_id", "source",
-        F.explode(ngram_hashes(F.col("text"), 8)).alias("gh"),
-    ).distinct().persist()
+    # (exchange included) per alias. It is persisted once per identity of
+    # documents.parquet (64-bit hashes; the memo unpersists it when the
+    # file is rewritten, so a rewrite is never answered from the old
+    # file's grams), and joined against only the DUP subset (df >= 2)
+    # with a hit flag instead of the full frequency table — n_dup =
+    # count(hit) is identical, and the build side shrinks to the
+    # duplicated grams (AQE broadcasts it when small).
+    grams = tmpdirs.memo(
+        "dup_grams",
+        os.path.join(sf_dir, "documents.parquet"),
+        lambda _scratch: _t(spark, sf_dir, "documents")
+        .select(
+            "doc_id", "source",
+            F.explode(ngram_hashes(F.col("text"), 8)).alias("gh"),
+        )
+        .distinct()
+        .persist(),
+    )
     dup = (
         grams.groupBy("gh")
         .agg(F.count("*").alias("n_docs_with"))

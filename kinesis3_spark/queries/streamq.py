@@ -378,58 +378,6 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _protobuf_available() -> bool:
-    """transformWithStateInPandas' Python worker speaks protobuf to the
-    JVM state server; without google.protobuf the query cannot run.
-    Registration is CONDITIONAL so the driver never sees an err row in a
-    protobuf-less sandbox, and the Spark-4 stateful surface gets its
-    official oracle row automatically the day the env supports it
-    (VERDICT r5 item 7; `tests/test_stateful.py` un-skips the same way)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-if _protobuf_available():
-
-    @query(
-        "stream_stateful_user_totals_tws",
-        oracle="""
-        SELECT user_id, count(*)::BIGINT AS n, round(sum(value), 2) AS total
-        FROM events GROUP BY user_id
-        """,
-    )
-    def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """transformWithStateInPandas twin of stream_stateful_user_totals
-        (Spark 4 arbitrary-stateful API, RocksDB-backed typed value
-        state). Same per-user scalar state; the RocksDB provider is
-        scoped to this drain and restored after."""
-        from ..streaming.stateful import running_user_totals_tws
-
-        key = "spark.sql.streaming.stateStore.providerClass"
-        rocks = (
-            "org.apache.spark.sql.execution.streaming."
-            "state.RocksDBStateStoreProvider"
-        )
-        old = spark.conf.get(key, None)
-        spark.conf.set(key, rocks)
-        try:
-            return run_to_memory(
-                running_user_totals_tws(stream_events(spark, sf_dir)),
-                output_mode="update",
-                # same eligibility as stream_stateful_user_totals
-                final_no_data_batch=False,
-            )
-        finally:
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
-
-
 # --------------------------------------------------------------------------
 # Watermark late-data drop as an ORACLE-CHECKABLE round-trip (§2b row 44).
 # --------------------------------------------------------------------------

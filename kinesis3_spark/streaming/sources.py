@@ -2,10 +2,12 @@
 
 The reference consumes an AWS Kinesis shard iterator in a worker loop
 (src/kinesis3/core.clj:150-200). The Spark-native equivalent is a
-Structured Streaming file source over the landing directory (or a real
-Kinesis/Kafka connector in production — same DataFrame downstream). File
-sources give exactly-once tracking per file, the unit the reference's
-sequence-checkpointing approximates.
+Structured Streaming file source over the landing directory. A
+Kinesis/Kafka connector source would feed the same DataFrame downstream;
+none ships, since no connector jar is a dependency of this package (an
+earlier adapter is in git history). File sources give exactly-once
+tracking per file, the unit the reference's sequence-checkpointing
+approximates.
 """
 
 from __future__ import annotations
@@ -40,49 +42,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = parquet_schema(spark, path)
     df = spark.readStream.schema(schema).parquet(_as_stream_dir(path))
     return normalize_event_ts(df)
-
-
-def kinesis_stream(
-    spark: SparkSession,
-    stream_name: str,
-    region: str = "us-east-1",
-    starting_position: str = "TRIM_HORIZON",
-    endpoint_url: str | None = None,
-) -> DataFrame:
-    """The production source the reference actually consumes: an AWS Kinesis
-    stream (core.clj:150-200's shard-iterator loop) via the public AWS Labs
-    Structured Streaming connector (format "aws-kinesis",
-    github.com/awslabs/spark-sql-kinesis-connector).
-
-    The connector jar isn't bundled in this environment, so construction is
-    attempted and failure re-raised with the exact spark-submit incantation;
-    everything downstream (pipeline.ingest projection, upsert/archive sinks,
-    windowed metrics) consumes the returned DataFrame identically to the
-    file-source stand-in — the swap is this one function.
-
-    Kinesis records arrive as binary `data` + metadata (partitionKey,
-    sequenceNumber, approximateArrivalTimestamp); cast data to string and
-    feed pipeline.ingest, exactly like the reference's record loop.
-    """
-    reader = (
-        spark.readStream.format("aws-kinesis")
-        .option("kinesis.streamName", stream_name)
-        .option("kinesis.region", region)
-        .option("kinesis.consumerType", "GetRecords")
-        .option("kinesis.startingPosition", starting_position)
-    )
-    if endpoint_url:
-        reader = reader.option("kinesis.endpointUrl", endpoint_url)
-    try:
-        return reader.load()
-    except Exception as ex:  # connector jar absent in this container
-        raise NotImplementedError(
-            "Kinesis connector not on the classpath. Run with "
-            "--packages software.amazon.awssdk:spark-streaming-sql-kinesis-"
-            "connector_2.13:<version> (github.com/awslabs/"
-            "spark-sql-kinesis-connector) and call kinesis_stream() again; "
-            "all downstream operators are source-agnostic."
-        ) from ex
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -56,50 +56,3 @@ def running_user_totals(sdf: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def running_user_totals_tws(sdf: DataFrame) -> DataFrame:
-    """`transformWithStateInPandas` twin of running_user_totals — the
-    Spark 4 arbitrary-stateful API (typed value state via a
-    StatefulProcessor, timer support, RocksDB-backed). Same semantics,
-    same per-key scalar state footprint; new operators should prefer this
-    surface (applyInPandasWithState is the 3.x-compatible path).
-
-    Requires the RocksDB state-store provider
-    (`spark.sql.streaming.stateStore.providerClass` →
-    RocksDBStateStoreProvider) — transformWithState rejects the default
-    HDFS-backed provider.
-
-    Same guide-§4.1 projection as running_user_totals: only the group
-    key and `value` cross the shuffle and the Arrow boundary."""
-    sdf = sdf.select("user_id", "value")
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n long, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._totals.exists():
-                n, total = self._totals.get()
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n": [n], "total": [round(total, 2)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return sdf.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType="user_id long, n long, total double",
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -179,77 +179,6 @@ def test_cli_query_subcommands(spark, sf_dir, capsys):
     assert main(["query", "no_such_query"]) == 2
 
 
-def test_jdbc_upsert_writer_gate_and_delete_sql(spark):
-    """The literal Postgres path (reference db.clj:113-134) as code:
-    (a) the pure statement builders chunk key lists / row lists and
-    render typed literals correctly (incl. datetime/date/bool — the
-    py4j setObject path crashed on these, review r11-2nd #1);
-    (b) NULL keys are refused up front (they break delete-then-insert
-    idempotence); (c) without a JDBC driver on the classpath the writer
-    raises the actionable --packages gate (pinned both ways like the
-    Kinesis source gate — this env has no driver jar)."""
-    import datetime as dt
-    from decimal import Decimal
-
-    import pytest
-
-    from kinesis3_spark.sinks.jdbc import (
-        _delete_statements,
-        _insert_statements,
-        _sql_literal,
-        jdbc_upsert_batch_writer,
-    )
-
-    stmts = _delete_statements("events", "id", ["a", "o'k", 3], chunk=2)
-    assert stmts == [
-        "DELETE FROM events WHERE id IN ('a', 'o''k')",
-        "DELETE FROM events WHERE id IN (3)",
-    ]
-    assert _delete_statements("t", "id", []) == []
-
-    assert _sql_literal(None) == "NULL"
-    assert _sql_literal(True) == "TRUE" and _sql_literal(False) == "FALSE"
-    assert _sql_literal(Decimal("1.50")) == "1.50"
-    assert _sql_literal(dt.date(2024, 2, 29)) == "DATE '2024-02-29'"
-    assert _sql_literal(dt.datetime(2024, 2, 29, 12, 0, 0, 123456)) == (
-        "TIMESTAMP '2024-02-29 12:00:00.123456'"
-    )
-    with pytest.raises(TypeError, match="bytes"):
-        _sql_literal(b"\x00")
-    # non-finite floats render as quoted literals (bare nan/inf is a SQL
-    # syntax error); tz-aware datetimes are refused, never zone-stripped
-    assert _sql_literal(float("nan")) == "'NaN'"
-    assert _sql_literal(float("inf")) == "'Infinity'"
-    assert _sql_literal(float("-inf")) == "'-Infinity'"
-    assert _sql_literal(Decimal("NaN")) == "'NaN'"
-    with pytest.raises(TypeError, match="timezone-aware"):
-        _sql_literal(dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc))
-
-    ins = _insert_statements(
-        "events", ["id", "ts"],
-        [("a", dt.datetime(2024, 1, 1)), ("b", None), ("c", None)],
-        chunk=2,
-    )
-    assert ins == [
-        "INSERT INTO events (id, ts) VALUES "
-        "('a', TIMESTAMP '2024-01-01 00:00:00.000000'), ('b', NULL)",
-        "INSERT INTO events (id, ts) VALUES ('c', NULL)",
-    ]
-
-    wb = jdbc_upsert_batch_writer(
-        "jdbc:postgresql://localhost/db", "events", key="id"
-    )
-    df = spark.createDataFrame([("x", 1)], "id string, v int")
-    with pytest.raises(NotImplementedError, match="--packages"):
-        wb(df, 0)
-    # NULL keys refused BEFORE the driver gate (data contract first)
-    nulldf = spark.createDataFrame([(None, 1)], "id string, v int")
-    with pytest.raises(ValueError, match="NULL values in key column"):
-        wb(nulldf, 0)
-    # empty batches are a no-op, gate untouched
-    wb(spark.createDataFrame([], "id string, v int"), 0)
-
-
 def test_stats_surfaces_stream_state_metrics(spark, tmp_path):
     """VERDICT r11 agenda #7: the /stats endpoint surfaces state-store
     metrics of watched streaming queries (rows held / updated / evicted

@@ -52,40 +52,21 @@ def test_audio_features(spark):
 
 
 def test_real_codec_gate_both_branches():
-    """The codec boundary AUTO-ENABLES behind an import probe (the Avro
-    gate pattern): with Pillow/soundfile installed, real containers
-    decode with no code change; without them, the declared
-    NotImplementedError names the exact package to install. Both
-    branches are pinned — whichever the environment takes."""
-    try:
-        from PIL import Image
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="Pillow"):
-            M._decode_image(b"\xff\xd8\xff\xe0 jpeg bytes")
-    else:
-        import io
-
-        buf = io.BytesIO()
-        Image.fromarray(np.full((4, 6, 3), 77, np.uint8)).save(buf, "PNG")
-        arr = M._decode_image(buf.getvalue())
-        assert arr.shape == (4, 6, 3) and int(arr[0, 0, 0]) == 77
-    try:
-        import soundfile as sf
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="soundfile"):
-            M._decode_audio(b"RIFF wav bytes")
-    else:
-        import io
-
-        buf = io.BytesIO()
-        sf.write(buf, np.zeros(100, np.int16), 8000, format="WAV")
-        samples, rate = M._decode_audio(buf.getvalue())
-        assert rate == 8000 and len(samples) == 100
-    try:
-        import av  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="pyav"):
-            M._decode_video(b"\x00\x00\x00 ftypmp4 bytes")
+    """A RAW payload decodes; any other container is outside input and is
+    refused with a ValueError that names the expected RAW magic, for all
+    three decoders (image, audio, video)."""
+    img = np.full((4, 6, 3), 77, np.uint8)
+    assert (M._decode_image(M.encode_rawi(img)) == img).all()
+    with pytest.raises(ValueError, match="RAWI"):
+        M._decode_image(b"\xff\xd8\xff\xe0 jpeg bytes")
+    samples, rate = M._decode_audio(M.encode_rawa(np.zeros(100, np.int16), 8000))
+    assert rate == 8000 and len(samples) == 100
+    with pytest.raises(ValueError, match="RAWA"):
+        M._decode_audio(b"RIFF wav bytes")
+    frames = np.zeros((2, 3, 5), np.uint8)
+    assert M._decode_video(M.encode_rawv(frames)).shape == (2, 3, 5)
+    with pytest.raises(ValueError, match="RAWV"):
+        M._decode_video(b"\x00\x00\x00 ftypmp4 bytes")
 
 
 # --------------------------------------------------------------------------

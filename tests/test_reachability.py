@@ -38,7 +38,6 @@ ROOT_FILES = [
 ]
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 
-_JDBC = "Postgres sink (reference db.clj), config-gated and not wired into the CLI"
 _TXN = "table operation of sinks/txn.py that only tests call"
 _SCALAR = "scalar column helper only tests call"
 _BATCH = "batch source helper only tests call"
@@ -56,19 +55,8 @@ KNOWN_UNREACHABLE = {
     "functions.scalar.url_decode_col": _SCALAR,
     "functions.scalar.url_encode_col": _SCALAR,
     "operators.sequence.user_motif_measures": "sequence operator only tests call",
-    "queries.decontam.BROADCAST_GRAM_LIMIT": "constant only a test reads",
     "queries.lmquality.score_perplexity": "perplexity scorer only tests call",
     "queries.lmquality.score_perplexity_trigram": "perplexity scorer only tests call",
-    "sinks.jdbc._DEFAULT_CHUNK": _JDBC,
-    "sinks.jdbc._delete_statements": _JDBC,
-    "sinks.jdbc._insert_statements": _JDBC,
-    "sinks.jdbc._psycopg2_connect": _JDBC,
-    "sinks.jdbc._sql_literal": _JDBC,
-    "sinks.jdbc._upsert_statements": _JDBC,
-    "sinks.jdbc.jdbc_partition_upsert_batch_writer": _JDBC,
-    "sinks.jdbc.jdbc_upsert_batch_writer": _JDBC,
-    "sinks.jdbc.partition_upsert_writer": _JDBC,
-    "sinks.jdbc.postgres_connection_factory": _JDBC,
     "sinks.txn._ORPHAN_GRACE_SECONDS": "constant only the exempt vacuum_table reads",
     "sinks.txn._live_leases": _TXN,
     "sinks.txn._prune_checkpoint_refs": _TXN,
@@ -88,7 +76,6 @@ KNOWN_UNREACHABLE = {
     "sources.batch.register_temp_views": _BATCH,
     "sources.txn_datasource._TxnBatchReader.partitions": _DS_CALLBACK,
     "sources.txn_datasource._TxnBatchReaderPushdown.pushFilters": _DS_CALLBACK,
-    "streaming.sources.kinesis_stream": "Kinesis connector source, not wired into the CLI",
 }
 
 
@@ -260,3 +247,36 @@ def test_sweep_flags_an_uncalled_method_of_a_reached_class(tmp_path):
     names, unreachable = _sweep(pkg, [pkg / "app.py"])
     assert "mod.Unused.method" not in names
     assert unreachable == {"mod.Unused", "mod.Used.planted", "app.Root.planted_too"}
+
+
+def _conditional_registrations(tree: ast.Module) -> list[int]:
+    """Lines of `@query` decorators and `query(...)(fn)` calls that sit
+    under a module-level `if`, `try` or `with`."""
+    out = []
+    for st in tree.body:
+        if not isinstance(st, (ast.If, ast.Try, ast.With)):
+            continue
+        for node in ast.walk(st):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and _is_query(
+                node
+            ):
+                out.append(node.lineno)
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Call)
+                and getattr(node.func.func, "id", None) == "query"
+            ):
+                out.append(node.lineno)
+    return out
+
+
+def test_query_registration_is_unconditional():
+    """The registry must be the same set of queries on every machine: a
+    query registered only when an optional library or jar is present is a
+    query the oracle compare never sees where it is absent."""
+    found = [
+        f"{p.relative_to(ROOT)}:{line}"
+        for p in sorted((PKG / "queries").glob("*.py"))
+        for line in _conditional_registrations(ast.parse(p.read_text()))
+    ]
+    assert not found, f"query registered under a module-level if/try/with: {found}"

@@ -60,56 +60,6 @@ def test_csv_scan_matches_duckdb(spark, tmp_path):
     assert got == exp
 
 
-def test_kinesis_adapter_degrades_gracefully(spark):
-    # The connector jar is absent here; the adapter must fail with the
-    # actionable message, not a raw py4j stack.
-    import pytest
-
-    from kinesis3_spark.streaming.sources import kinesis_stream
-
-    with pytest.raises(NotImplementedError, match="spark-sql-kinesis-connector"):
-        kinesis_stream(spark, "events-stream")
-
-
-def test_avro_roundtrip_or_declared_gate(spark, sf_dir):
-    """Avro is env-gated (spark-avro is an external module since Spark
-    2.4): when the jar is present the round-trip must match the parquet
-    original; when absent the helper must fail with the actionable
-    deployment message (the Kinesis-adapter contract) and the query must
-    NOT be registered — the driver never sees an err row."""
-    import pytest
-
-    from kinesis3_spark.queries import QUERIES
-    from kinesis3_spark.queries import roundtrip as rt
-    from kinesis3_spark.sources import load_table
-
-    if rt._avro_available():
-        assert "source_avro_roundtrip" in QUERIES
-        got = {
-            r["p_brand"]: (r["n_parts"], r["sum_price"])
-            for r in rt.source_avro_roundtrip(spark, sf_dir).collect()
-        }
-        exp = {
-            r["p_brand"]: (r["n"], float(r["s"]))
-            for r in load_table(spark, sf_dir, "part")
-            .groupBy("p_brand")
-            .agg(
-                F.count("*").alias("n"),
-                (
-                    F.sum(F.round(F.col("p_retailprice") * 100).cast("bigint"))
-                    .cast("double")
-                    / 100
-                ).alias("s"),
-            )
-            .collect()
-        }
-        assert got == exp
-    else:
-        assert "source_avro_roundtrip" not in QUERIES
-        with pytest.raises(NotImplementedError, match="spark-avro"):
-            rt.source_avro_roundtrip(spark, sf_dir)
-
-
 def test_orc_roundtrip_matches_parquet(spark, sf_dir, tmp_path):
     """ORC source/sink: the corpus orders table written as ORC and read
     back must agree with the Parquet original — same scan surface
@@ -377,6 +327,19 @@ def test_bm25_prf_persists_its_tokens_once_per_documents_file(spark, sf_dir, tmp
     con = _append_documents(sf)
     assert_parity(prf(spark, sf), con, ORACLE["search_bm25_prf"])
     assert persisted() == n
+
+
+@pytest.mark.parametrize("name", ["llm_dup_passage_stats", "llm_dsir_importance"])
+def test_persisted_grams_follow_a_rewritten_documents_file(spark, sf_dir, tmp_path, name):
+    """A query that persists a relation derived from documents.parquet is
+    answered from the rewritten file once the file is rewritten in place,
+    not from the relation an earlier call persisted."""
+    from kinesis3_spark.queries import ORACLE, QUERIES
+
+    sf = copy_corpus(sf_dir, tmp_path / "sf")
+    QUERIES[name](spark, sf).collect()
+    con = _append_documents(sf)
+    assert_parity(QUERIES[name](spark, sf), con, ORACLE[name])
 
 
 def test_load_table_sees_a_rewritten_schema(spark, sf_dir, tmp_path):

@@ -48,62 +48,3 @@ def test_state_carries_across_batches(spark, tmp_path):
     # both batches is fixed — totals must equal the batch aggregate
     assert got == {1: (3, 17.5), 2: (1, 1.0), 3: (1, 7.0)}
 
-
-def test_transform_with_state_matches_batch(spark, sf_dir):
-    """The Spark 4 transformWithStateInPandas surface: running per-user
-    totals under the typed StatefulProcessor API must drain to the same
-    final state as the batch aggregate (same contract as the
-    applyInPandasWithState twin).
-
-    Env boundary: the transformWithState runtime speaks protobuf to its
-    Python driver worker; this container ships no google.protobuf, so the
-    test skips where the API cannot physically run (same declared-boundary
-    class as the PIL/pyav codec stubs and the Kinesis connector)."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState needs protobuf (absent in this sandbox)",
-    )
-    from pyspark.sql import functions as F
-
-    from kinesis3_spark.sources import load_table
-    from kinesis3_spark.streaming import run_to_memory, stream_events
-    from kinesis3_spark.streaming.stateful import running_user_totals_tws
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = run_to_memory(
-            running_user_totals_tws(stream_events(spark, sf_dir)),
-            output_mode="update",
-        )
-        # update mode re-emits per batch; the LAST emission per user is the
-        # final state (single availableNow batch here -> one row per user)
-        from pyspark.sql.window import Window
-
-        final = (
-            out.withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("user_id").orderBy(F.desc("n"))
-                ),
-            )
-            .where(F.col("rn") == 1)
-            .select("user_id", "n", "total")
-        )
-        got = {r.user_id: (r.n, r.total) for r in final.collect()}
-        ev = load_table(spark, sf_dir, "events")
-        want = {
-            r.user_id: (r.n, r.total)
-            for r in ev.groupBy("user_id")
-            .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total"))
-            .collect()
-        }
-        assert got == want
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
