@@ -274,8 +274,7 @@ def _encode_stat(v):
 
 
 def _harvest_file_stats(
-    path: str, rel_paths: list[str], stats_cols: list[str],
-    md_cache: dict | None = None,
+    path: str, rel_paths: list[str], stats_cols: list[str]
 ) -> dict[str, dict]:
     """Per-file min/max/null_count for `stats_cols`, read from the parquet
     FOOTERS of the just-written files (tiny metadata reads, O(new files)
@@ -288,14 +287,7 @@ def _harvest_file_stats(
 
     out: dict[str, dict] = {}
     for rel in rel_paths:
-        # commit_snapshot's walk already read these footers for the rows
-        # harvest — reuse the FileMetaData instead of a second read. The
-        # cache holds metadata objects, never open ParquetFile handles
-        # (ADVICE r10: one handle per new file until commit end risks fd
-        # exhaustion on many-bucket commits).
-        md = (md_cache or {}).get(rel) or pq.read_metadata(
-            os.path.join(path, rel)
-        )
+        md = pq.read_metadata(os.path.join(path, rel))
         idx = {
             md.row_group(0).column(j).path_in_schema: j
             for j in range(md.num_columns)
@@ -574,33 +566,6 @@ def _generated(man: dict | None) -> dict[str, str]:
     return dict((man or {}).get("generated_cols") or {})
 
 
-def _plain_constraints(man: dict | None) -> dict | None:
-    """The manifest with constraints REFERENCING generated columns
-    removed: those can only bind after the commit computes the generated
-    values (_apply_generated), so batch-level enforcement evaluates the
-    rest and commit_snapshot enforces the generated-referencing ones on
-    the computed frame — a constraint on a generated column neither
-    crashes a raw batch nor goes unenforced."""
-    import re as _re
-
-    gnames = _generated(man)
-    cons = (man or {}).get("constraints") or {}
-    if not gnames or not cons:
-        return man
-    plain = {
-        k: v
-        for k, v in cons.items()
-        if not any(_re.search(rf"\b{_re.escape(g)}\b", v) for g in gnames)
-    }
-    return {**man, "constraints": plain}
-
-
-def _gen_constraints(man: dict | None) -> dict:
-    cons = (man or {}).get("constraints") or {}
-    plain = (_plain_constraints(man) or {}).get("constraints") or {}
-    return {k: v for k, v in cons.items() if k not in plain}
-
-
 def _apply_generated(merged: DataFrame, gcols: dict[str, str]) -> DataFrame:
     """Delta generated columns at write time: a batch MISSING a generated
     column gets it computed (`GENERATED ALWAYS AS (expr)`); a batch that
@@ -754,8 +719,8 @@ class ProtocolUnsupported(ValueError):
 # changes read semantics must also appear in reader_features).
 _KNOWN_MANIFEST_KEYS = frozenset({
     "epoch", "n_buckets", "stats_cols", "bloom_cols", "schema", "apps",
-    "constraints", "column_mapping", "dropped_cols", "generated_cols",
-    "files", "op", "protocol",
+    "column_mapping", "dropped_cols", "generated_cols", "files", "op",
+    "protocol",
 })
 
 
@@ -979,11 +944,6 @@ def commit_snapshot(
     # computed when absent, validated when supplied, logical namespace
     gcols = _generated(man) if man is not None else dict(generated_cols or {})
     merged = _apply_generated(merged, gcols)
-    gcons = _gen_constraints(man)
-    if gcons:
-        # constraints REFERENCING generated columns can only bind here,
-        # after the compute — batch-level enforcement handled the rest
-        _enforce_constraints(merged, {"constraints": gcons})
     # data lands under PHYSICAL names; callers speak logical throughout
     cmap = _mapping(man)
     hijack = (set(merged.columns) - set(cmap)) & set(cmap.values())
@@ -1033,10 +993,7 @@ def _finish_commit(
 ) -> int:
     """Harvest + manifest build + publish — the tail of commit_snapshot,
     split out so the writer lease wraps the whole commit in one try."""
-    import pyarrow.parquet as _pq
-
     new_entries = []
-    md_cache: dict = {}
     for root, _dirs, fs in os.walk(snap_dir):
         for f in sorted(fs):
             if not f.endswith(".parquet") or f.startswith((".", "_")):
@@ -1044,10 +1001,6 @@ def _finish_commit(
             rel = os.path.relpath(os.path.join(root, f), path)
             part_dir = os.path.basename(os.path.dirname(rel))
             assert part_dir.startswith(f"{_BUCKET_COL}="), rel
-            # FileMetaData only — read_metadata opens, parses the footer
-            # and closes; caching open ParquetFile handles held one fd
-            # per new file until commit end (ADVICE r10)
-            md_cache[rel] = _pq.read_metadata(os.path.join(root, f))
             new_entries.append(
                 {
                     "path": rel,
@@ -1057,12 +1010,6 @@ def _finish_commit(
                     # (entries from pre-r9 manifests lack it;
                     # consumers tolerate)
                     "bytes": os.path.getsize(os.path.join(root, f)),
-                    # row count from the same footer open (Delta's
-                    # stats.numRecords — what makes COUNT(*) a manifest
-                    # sum instead of a scan; see count_rows. Entries
-                    # from pre-r10 manifests lack it and count_rows
-                    # falls back honestly)
-                    "rows": md_cache[rel].num_rows,
                 }
             )
     stats_cols = list(
@@ -1074,8 +1021,7 @@ def _finish_commit(
         # footer harvest for the NEW files only; carried entries keep the
         # stats blobs they were committed with (files are immutable)
         fstats = _harvest_file_stats(
-            path, [e["path"] for e in new_entries], stats_cols,
-            md_cache=md_cache,
+            path, [e["path"] for e in new_entries], stats_cols
         )
         for e in new_entries:
             if e["path"] in fstats:
@@ -1108,7 +1054,6 @@ def _finish_commit(
             "bloom_cols": bloom_cols,
             "schema": _evolved_schema(man, merged.drop(_BUCKET_COL).schema),
             "apps": apps,
-            "constraints": dict((man.get("constraints") or {}) if man else {}),
             "column_mapping": cmap,
             "dropped_cols": _dropped(man),
             "generated_cols": gcols,
@@ -1545,7 +1490,6 @@ def upsert_manifest_txn(
             n_buckets = man["n_buckets"]
             stats_cols = man.get("stats_cols") or None
             bloom_cols = man.get("bloom_cols") or None
-        _enforce_constraints(batch, _plain_constraints(man))
         touched = {
             int(r[0])
             for r in batch.select(_bucket_expr(key, n_buckets).alias("b"))
@@ -1651,7 +1595,6 @@ def append_snapshot(
             n_buckets = man["n_buckets"]
             stats_cols = man.get("stats_cols") or None
             bloom_cols = man.get("bloom_cols") or None
-        _enforce_constraints(batch, _plain_constraints(man))
         carry = list(man["files"]) if man else []
         try:
             return commit_snapshot(
@@ -1731,9 +1674,7 @@ def merge_into(
 
     Safety: if any duplicate source key matches an existing target row
     the merge raises (Delta's "multiple source rows matched" error —
-    applying two clauses to one target row is nondeterministic); CHECK
-    constraints are validated on the FULL rewritten output (updates can
-    violate, not just inserts) before anything publishes; replayed
+    applying two clauses to one target row is nondeterministic); replayed
     micro-batches are fenced by the ``app_id``/``app_version`` watermark;
     a lost OCC race re-runs the whole merge from the winner's snapshot.
     Insert clauses must populate ``key`` (use ``"all"`` or set it
@@ -1852,7 +1793,6 @@ def merge_into(
         out = j.filter(survive).select(
             [vals[c].cast(dtypes[c]).alias(c) for c in tcols if c not in gset]
         )
-        _enforce_constraints(out, _plain_constraints(man))
         carry = [e for e in man["files"] if e["bucket"] not in touched]
         try:
             return commit_snapshot(
@@ -1873,53 +1813,6 @@ def merge_into(
         except CommitConflict as exc:
             last = exc
     raise last
-
-
-def update_where(
-    spark: SparkSession,
-    path: str,
-    condition: str,
-    set_map: dict[str, str],
-    key: str = "id",
-    max_retries: int = 5,
-) -> int:
-    """UPDATE ... SET ... WHERE as a predicate-only MERGE (Delta's UPDATE
-    statement, the last DML verb next to delete_where/merge_into): an
-    EMPTY source makes every target row not-matched-by-source, and the
-    predicate gates the update clause — rows matching ``condition`` get
-    ``set_map``'s expressions (target columns under their logical names),
-    everything else is carried unchanged. One thin wrapper, zero new
-    merge machinery: clause ordering, CHECK-constraint enforcement on
-    the rewritten output, generated-column recompute, column-mapping
-    translation, and the OCC retry loop are all inherited from
-    merge_into, so UPDATE can never drift from MERGE semantics.
-
-    Like Delta's UPDATE (and unlike the metadata-only delete_where),
-    this REWRITES the table — every bucket, since a predicate update
-    must examine every row. CDF consumers see the rewrite as
-    update_preimage/update_postimage rows (pinned in
-    tests/test_txn_merge.py). Returns the committed epoch."""
-    man = read_manifest(path)
-    assert man is not None, f"no committed table at {path}"
-    from pyspark.sql.types import StructField, StructType
-
-    fields = {f.name: f.dataType for f in _logical_struct(man).fields}
-    if key not in fields:
-        raise ValueError(
-            f"update_where key {key!r} is not a logical column of the "
-            f"table at {path}; available: {sorted(fields)}"
-        )
-    ktype = fields[key]
-    empty_src = spark.createDataFrame(
-        [], StructType([StructField(key, ktype)])
-    )
-    return merge_into(
-        spark, path, empty_src, key=key,
-        not_matched_by_source=[
-            {"condition": condition, "update": dict(set_map)}
-        ],
-        max_retries=max_retries,
-    )
 
 
 def delete_where(
@@ -1983,9 +1876,7 @@ def _delete_attempt(spark, path, man, hits, epoch, dv_dir, condition):
     hits.write.mode("overwrite").parquet(dv_dir)
     side = spark.read.parquet(dv_dir)
     # driver metadata: per-file deleted-position counts (≤ |manifest|
-    # rows) — the dict doubles as the affected-file set AND the DV
-    # cardinality Delta records per file (count_rows subtracts it for
-    # the metadata-only COUNT)
+    # rows); the keys are the affected-file set
     affected = {
         r["rel"]: r["n"]
         for r in side.groupBy("rel").agg(F.count("*").alias("n")).collect()
@@ -2005,25 +1896,10 @@ def _delete_attempt(spark, path, man, hits, epoch, dv_dir, condition):
                 )
     files = []
     for e in man["files"]:
-        e = dict(e)
-        # match on the trailing snap/bucket/file triple — identical
-        # to e["path"] for locally-written files, and what a shallow
-        # clone's inherited "../src/..." references end with (the
-        # scan's __rel is always the trailing triple)
-        triple = "/".join(e["path"].split("/")[-3:])
-        if triple in affected:
-            pre_tracking = bool(e.get("dv")) and "dv_rows" not in e
-            e["dv"] = list(e.get("dv", [])) + dv_files
-            # accumulated DV cardinality: new sidecars never repeat an
-            # already-deleted position (matching runs on the dv-applied
-            # snapshot), so addition is exact — UNLESS the entry already
-            # carried dv sidecars from before cardinality tracking, in
-            # which case it stays POISONED (no dv_rows): initializing
-            # the counter here would count only the new positions and
-            # flip count_rows from its honest None to a silent
-            # overcount (review r10-4th #1)
-            if not pre_tracking:
-                e["dv_rows"] = e.get("dv_rows", 0) + affected[triple]
+        # the scan's __rel is the snap/bucket/file triple, which is
+        # exactly e["path"] for every file commit_snapshot writes
+        if e["path"] in affected:
+            e = dict(e, dv=list(e.get("dv", [])) + dv_files)
         files.append(e)
     payload = json.dumps(
         {**{k: man[k] for k in man if k not in ("epoch", "files")},
@@ -2175,61 +2051,12 @@ def compact_table(
             spark.conf.set("spark.sql.files.maxRecordsPerFile", "0")
 
 
-def restore_table(spark: SparkSession, path: str, epoch: int) -> int:
-    """Delta RESTORE: roll the table back to a retained historical epoch
-    as a METADATA-ONLY commit — the new epoch's file list, schema,
-    layout, and stats are the old epoch's, republished under the normal
-    OCC claim. Nothing is copied or rewritten; the rolled-back-over
-    epochs stay reachable for time travel until vacuumed, so a botched
-    restore is itself restorable. The per-app version watermarks are
-    carried from the CURRENT manifest, not the restored one — rolling
-    them back would re-open already-applied streaming batches to replay
-    (double-count on the next recovery), exactly the fence the watermark
-    exists to hold."""
-    last: CommitConflict | None = None
-    for _attempt in range(5):
-        cur = read_manifest(path)
-        assert cur is not None, f"no committed table at {path}"
-        old = read_manifest(path, epoch)  # raises outside retention
-        if epoch == cur["epoch"]:
-            return epoch  # restoring to the present is a no-op
-        new_epoch = cur["epoch"] + 1
-        payload = json.dumps(
-            {
-                "epoch": new_epoch,
-                "n_buckets": old["n_buckets"],
-                "stats_cols": old.get("stats_cols") or [],
-                "bloom_cols": old.get("bloom_cols") or [],
-                "column_mapping": _mapping(old),
-                "dropped_cols": _dropped(old),
-                "generated_cols": _generated(old),
-                "schema": old.get("schema"),
-                "apps": dict(cur.get("apps") or {}),
-                "constraints": old.get("constraints") or {},
-                "files": old["files"],
-            },
-            indent=1,
-        )
-        try:
-            _publish_manifest(
-                path, new_epoch, payload,
-                op={"name": "RESTORE", "to_epoch": epoch},
-            )
-            return new_epoch
-        except CommitConflict as exc:
-            last = exc
-    raise last
-
-
 def rename_column(path: str, old: str, new: str) -> int:
     """ALTER TABLE RENAME COLUMN as a metadata-only commit (Delta column
     mapping): the files and the manifest's physical schema never change —
     the new epoch's ``column_mapping`` presents the physical column under
     the new logical name. Time travel to a pre-rename epoch presents the
-    OLD name (each epoch reads under its own mapping). Refused while a
-    CHECK constraint references the old name (constraints are stored as
-    logical SQL text and would silently stop binding — drop/re-add the
-    constraint around the rename, Delta's rule)."""
+    OLD name (each epoch reads under its own mapping)."""
     import re as _re
 
     last: CommitConflict | None = None
@@ -2241,12 +2068,6 @@ def rename_column(path: str, old: str, new: str) -> int:
             raise ValueError(f"no column {old!r} to rename (have {logical})")
         if new in logical:
             raise ValueError(f"column {new!r} already exists")
-        for cname, cond in (man.get("constraints") or {}).items():
-            if _re.search(rf"\b{_re.escape(old)}\b", cond):
-                raise ValueError(
-                    f"constraint {cname!r} references {old!r}; drop it "
-                    "before renaming"
-                )
         for gname, gexpr in _generated(man).items():
             if gname == old or _re.search(rf"\b{_re.escape(old)}\b", gexpr):
                 raise ValueError(
@@ -2278,8 +2099,7 @@ def drop_column(path: str, col: str) -> int:
     column stays in every file (and in pre-drop epochs for time travel);
     the new epoch's reads stop presenting it. Re-adding the same physical
     name later is REFUSED at commit (it would resurrect the old files'
-    data under the new column) — Delta's column-mapping drop semantics.
-    Refused while a CHECK constraint references the column."""
+    data under the new column) — Delta's column-mapping drop semantics."""
     import re as _re
 
     last: CommitConflict | None = None
@@ -2288,11 +2108,6 @@ def drop_column(path: str, col: str) -> int:
         assert man is not None, f"no committed table at {path}"
         if col not in _logical_names(man):
             raise ValueError(f"no column {col!r} to drop")
-        for cname, cond in (man.get("constraints") or {}).items():
-            if _re.search(rf"\b{_re.escape(col)}\b", cond):
-                raise ValueError(
-                    f"constraint {cname!r} references {col!r}; drop it first"
-                )
         for gname, gexpr in _generated(man).items():
             if gname == col or _re.search(rf"\b{_re.escape(col)}\b", gexpr):
                 raise ValueError(
@@ -2319,88 +2134,12 @@ def drop_column(path: str, col: str) -> int:
     raise last
 
 
-def clone_table(src: str, dst: str, epoch: int | None = None) -> int:
-    """Shallow CLONE (Delta ``CREATE TABLE ... SHALLOW CLONE``): ``dst``
-    becomes a fully independent table whose first epoch REFERENCES the
-    source's immutable data files (and dv/bloom sidecars) by relative
-    path — zero bytes copied, O(manifest) time, at any retained source
-    ``epoch``. Writes to either table never touch the other: the clone's
-    commits land under its own directory and simply stop carrying (or
-    DV-mask) inherited references; compaction fully detaches it. Layout,
-    schema, constraints, and column mapping are inherited; writer-app
-    watermarks are NOT (a replayed micro-batch is new work for the
-    clone — Delta's rule). The clone's vacuum walks only its own
-    directory, so inherited files are physically safe from it; the one
-    operational hazard is Delta's own: VACUUM ON THE SOURCE can reap
-    files the clone still references (track clones before vacuuming, or
-    compact the clone first)."""
-    man = read_manifest(src, epoch)
-    assert man is not None, f"no committed table at {src}"
-    assert read_manifest(dst) is None, f"destination {dst} already exists"
-    os.makedirs(dst, exist_ok=True)
-    rel = os.path.relpath(os.path.abspath(src), os.path.abspath(dst))
-
-    def _r(p: str) -> str:
-        return os.path.normpath(os.path.join(rel, p))
-
-    files = []
-    for e in man["files"]:
-        e = dict(e, path=_r(e["path"]))
-        if e.get("dv"):
-            e["dv"] = [_r(r) for r in e["dv"]]
-        if e.get("bloom"):
-            e["bloom"] = {c: _r(r) for c, r in e["bloom"].items()}
-        files.append(e)
-    payload = json.dumps(
-        {**{k: man[k] for k in man if k not in ("epoch", "files", "apps")},
-         "epoch": 1, "apps": {}, "files": files},
-        indent=1,
-    )
-    _publish_manifest(
-        dst, 1, payload,
-        op={"name": "CLONE", "source": src, "source_epoch": man["epoch"]},
-    )
-    return 1
-
-
-def drop_constraint(path: str, name: str) -> int:
-    """ALTER TABLE DROP CONSTRAINT: metadata-only commit removing a
-    named CHECK constraint — the release valve the rename/drop guards
-    point at ("drop the constraint, rename, re-add under the new
-    name"). Raises for an unknown name (a typo silently 'succeeding'
-    would leave the real constraint enforced)."""
-    last: CommitConflict | None = None
-    for _attempt in range(5):
-        man = read_manifest(path)
-        assert man is not None, f"no committed table at {path}"
-        cons = dict(man.get("constraints") or {})
-        if name not in cons:
-            raise ValueError(
-                f"no constraint {name!r} on {path} (have {sorted(cons)})"
-            )
-        del cons[name]
-        payload = json.dumps(
-            {**{k: man[k] for k in man if k != "epoch"},
-             "constraints": cons, "epoch": man["epoch"] + 1},
-            indent=1,
-        )
-        try:
-            _publish_manifest(
-                path, man["epoch"] + 1, payload,
-                op={"name": "DROP CONSTRAINT", "constraint": name},
-            )
-            return man["epoch"] + 1
-        except CommitConflict as exc:
-            last = exc
-    raise last
-
-
 def table_history(path: str) -> list[dict]:
     """DESCRIBE HISTORY: one record per RETAINED epoch, newest first —
     ``{"epoch", "operation", "params", "ts", "n_files"}``. Every epoch
     publisher stamps its commit with an operation record (APPEND /
-    UPSERT / MERGE / DELETE / OPTIMIZE / RESTORE / RENAME COLUMN /
-    DROP COLUMN / ADD CONSTRAINT / CLONE), so the table explains
+    UPSERT / MERGE / DELETE / OPTIMIZE / RENAME COLUMN / DROP COLUMN),
+    so the table explains
     its own lineage without external logging — Delta's DESCRIBE HISTORY
     on the manifest log. Pure driver metadata; with a consolidated
     checkpoint present (write_checkpoint — published every
@@ -2458,60 +2197,6 @@ def epoch_as_of(path: str, timestamp: str) -> int:
         f"no retained commit of {path} at or before {timestamp}; the "
         "earliest retained epoch is newer (or predates operation stamps)"
     )
-
-
-def add_constraint(path: str, name: str, condition: str) -> int:
-    """Attach a named CHECK constraint (Delta column invariants /
-    ``ALTER TABLE ADD CONSTRAINT``): a SQL boolean expression every
-    INCOMING batch must satisfy from the next epoch on — rows where the
-    condition is FALSE (NULL passes, SQL CHECK semantics) fail the
-    commit before anything publishes. Enforcement is on the batch being
-    written (one distributed filter per commit), never a retro-scan of
-    the table; existing rows are not revalidated, same as Delta's ADD
-    CONSTRAINT default on history. Metadata-only commit under OCC; Spark
-    SQL (_enforce_constraints) is the one evaluator."""
-    last: CommitConflict | None = None
-    for _attempt in range(5):
-        man = read_manifest(path)
-        assert man is not None, f"no committed table at {path}"
-        cons = dict(man.get("constraints") or {})
-        cons[name] = condition
-        payload = json.dumps(
-            {**{k: man[k] for k in man if k != "epoch"},
-             "constraints": cons, "epoch": man["epoch"] + 1},
-            indent=1,
-        )
-        try:
-            _publish_manifest(
-                path, man["epoch"] + 1, payload,
-                op={"name": "ADD CONSTRAINT", "constraint": name},
-            )
-            return man["epoch"] + 1
-        except CommitConflict as exc:
-            last = exc
-    raise last
-
-
-def _enforce_constraints(batch: DataFrame, man: dict | None) -> None:
-    """Raise if any incoming row makes a table constraint FALSE (NULL is
-    a pass — SQL CHECK). One distributed aggregate over the batch; the
-    violating constraint and a row count come back, never the rows."""
-    cons = (man or {}).get("constraints") or {}
-    if not cons:
-        return
-    checks = [
-        F.sum(
-            F.when(~F.coalesce(F.expr(cond), F.lit(True)), 1).otherwise(0)
-        ).alias(name)
-        for name, cond in cons.items()
-    ]
-    bad = batch.agg(*checks).first().asDict()
-    broken = {k: v for k, v in bad.items() if v}
-    if broken:
-        detail = ", ".join(
-            f"{k} ({cons[k]!r}: {v} rows)" for k, v in sorted(broken.items())
-        )
-        raise ValueError(f"CHECK constraint violation: {detail}")
 
 
 def vacuum_table(
@@ -2911,18 +2596,12 @@ def upsert_manifest_stream(
     key: str = "id",
     order_col: str | None = None,
     mode: str = "replace",
-    n_buckets: int = 8,
-    trigger: dict | None = None,
-    stats_cols: list[str] | None = None,
-    app_id: str | None = None,
 ):
-    """The foreachBatch wiring of upsert_manifest_txn: every micro-batch
-    is one atomic manifest commit, so a reader polling the table between
-    batches always sees a consistent merge prefix.
-    With ``app_id`` set, the batch_id rides into the manifest's app
-    watermark so a checkpoint-recovery REPLAY of a committed batch is
-    skipped (exactly-once; without it a replayed upsert is still
-    value-idempotent for replace-mode LWW, just a wasted commit)."""
+    """The foreachBatch wiring of upsert_manifest_txn, drained with
+    ``availableNow``: every micro-batch is one atomic manifest commit, so
+    a reader polling the table between batches always sees a consistent
+    merge prefix. A checkpoint-recovery replay of a committed batch is
+    value-idempotent for replace-mode LWW, just a wasted commit."""
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         upsert_manifest_txn(
@@ -2932,17 +2611,13 @@ def upsert_manifest_stream(
             key=key,
             order_col=order_col,
             mode=mode,
-            n_buckets=n_buckets,
-            stats_cols=stats_cols,
-            app_id=app_id,
-            app_version=batch_id if app_id is not None else None,
         )
 
     return (
         sdf.writeStream.foreachBatch(_merge)
         .option("checkpointLocation", checkpoint)
         .outputMode("update")
-        .trigger(**(trigger or {"availableNow": True}))
+        .trigger(availableNow=True)
         .start()
     )
 
@@ -2954,7 +2629,6 @@ def append_manifest_stream(
     app_id: str,
     key: str = "id",
     n_buckets: int = 8,
-    trigger: dict | None = None,
     stats_cols: list[str] | None = None,
 ):
     """foreachBatch append-mode ingest with the EXACTLY-ONCE contract a
@@ -2983,7 +2657,7 @@ def append_manifest_stream(
         sdf.writeStream.foreachBatch(_append)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
-        .trigger(**(trigger or {"availableNow": True}))
+        .trigger(availableNow=True)
         .start()
     )
 
@@ -3000,7 +2674,6 @@ def merge_manifest_stream(
     order_col: str | None = None,
     order_tiebreak: list[str] | None = None,
     n_buckets: int = 8,
-    trigger: dict | None = None,
 ):
     """Streaming CDC apply — the third streaming-DML mode next to the
     exactly-once append (append_manifest_stream) and the per-batch LWW
@@ -3076,89 +2749,6 @@ def merge_manifest_stream(
         sdf.writeStream.foreachBatch(_merge)
         .option("checkpointLocation", checkpoint)
         .outputMode("update")
-        .trigger(**(trigger or {"availableNow": True}))
+        .trigger(availableNow=True)
         .start()
     )
-
-
-def diff_schemas(path: str, epoch_a: int, epoch_b: int) -> dict:
-    """Schema DIFF between two retained epochs of the table — the
-    metadata answer to "what changed between the snapshot my job read
-    yesterday and today's?" that schema-sync consumers (downstream
-    sinks, catalogs, the strict failOnMappingChange streams) need as a
-    structured record instead of eyeballing DESCRIBE HISTORY. Renames
-    are detected through PHYSICAL column identity (physical names never
-    change — the column-mapping invariant), so a rename is reported as
-    a rename, never as a drop+add:
-
-      {"added":        [(logical_name, type_str), ...],
-       "dropped":      [logical_name, ...],
-       "renamed":      [(old_logical, new_logical), ...],
-       "type_changed": [(logical_name_b, type_a, type_b), ...]}
-
-    Pure driver metadata (two manifest reads); raises read_manifest's
-    ValueError outside vacuum retention — an honest "history is gone"
-    rather than a guessed diff."""
-    man_a = read_manifest(path, epoch_a)
-    man_b = read_manifest(path, epoch_b)
-    assert man_a is not None and man_b is not None, (path, epoch_a, epoch_b)
-
-    def logical_by_phys(man):
-        inv = {p: l for l, p in _mapping(man).items()}
-        drop = set(_dropped(man))
-        from pyspark.sql.types import StructType
-
-        phys = StructType.fromJson(man["schema"])
-        return {
-            f.name: (inv.get(f.name, f.name), f.dataType.simpleString())
-            for f in phys.fields
-            if f.name not in drop
-        }
-
-    a, b = logical_by_phys(man_a), logical_by_phys(man_b)
-    added = sorted(
-        (lb, tb) for p, (lb, tb) in b.items() if p not in a
-    )
-    dropped = sorted(la for p, (la, _ta) in a.items() if p not in b)
-    renamed = sorted(
-        (a[p][0], lb)
-        for p, (lb, _tb) in b.items()
-        if p in a and a[p][0] != lb
-    )
-    type_changed = sorted(
-        (lb, a[p][1], tb)
-        for p, (lb, tb) in b.items()
-        if p in a and a[p][1] != tb
-    )
-    return {
-        "added": added,
-        "dropped": dropped,
-        "renamed": renamed,
-        "type_changed": type_changed,
-    }
-
-
-def count_rows(path: str, epoch: int | None = None) -> int | None:
-    """Metadata-only COUNT(*): the snapshot's exact row count as a SUM
-    OVER THE MANIFEST — per-file ``rows`` harvested from parquet footers
-    at commit, minus per-file deletion-vector cardinality (``dv_rows``,
-    accumulated by delete_where exactly like Delta's numRecords minus DV
-    cardinality). O(|manifest|) driver metadata, zero executor work —
-    at 100 TB this is the difference between answering COUNT(*) from a
-    JSON read and scanning the table.
-
-    Returns None — "I don't know, scan instead" — whenever any entry
-    predates the harvest (pre-r10 commits lack ``rows``; a dv-carrying
-    entry from before cardinality tracking lacks ``dv_rows``): an
-    honest refusal beats a silently wrong count. Exactness across the
-    full DML lifecycle is pinned in tests/test_sinks.py."""
-    man = read_manifest(path, epoch)
-    assert man is not None, f"no committed table at {path}"
-    total = 0
-    for e in man["files"]:
-        if "rows" not in e:
-            return None
-        if e.get("dv") and "dv_rows" not in e:
-            return None
-        total += int(e["rows"]) - int(e.get("dv_rows", 0))
-    return total

@@ -86,12 +86,8 @@ def _read_slice(part: _FileSlice | None):
         side = pq.read_table(
             os.path.join(part.root, ref), columns=["rel", "pos"]
         )
-        # sidecars key rows by the trailing snap/bucket/file triple —
-        # identical to part.rel except for a shallow clone's inherited
-        # "../src/..." references
-        mask = pa.compute.equal(
-            side["rel"], "/".join(part.rel.split("/")[-3:])
-        )
+        # sidecars key rows by the snap/bucket/file triple, part.rel
+        mask = pa.compute.equal(side["rel"], part.rel)
         dead.append(side.filter(mask)["pos"].to_numpy(zero_copy_only=False))
     positions = (
         np.concatenate(dead) if dead else np.empty(0, dtype=np.int64)

@@ -29,7 +29,6 @@ SLOW_TESTS = {
     "test_oracle_parity.py::test_query_matches_oracle[llm_leakage_safe_split]",  # 28.4s
     "test_oracle_parity.py::test_query_matches_oracle[dedup_connected_components]",  # 27.4s
     "test_similarity.py::test_neardup_finds_planted_pairs",  # 26.4s
-    "test_sinks.py::test_count_rows_is_metadata_exact_across_dml_lifecycle",  # 24.6s
     "test_streaming.py::test_continuous_rollup_matches_batch",  # 24.5s
     "test_sinks.py::test_merge_manifest_stream_cdc_with_deletes",  # 23.1s
     "test_lm_property.py::test_psi_nonnegative_and_zero_on_self",  # 22.9s

@@ -61,14 +61,7 @@ KNOWN_UNREACHABLE = {
     "sinks.txn._live_leases": _TXN,
     "sinks.txn._prune_checkpoint_refs": _TXN,
     "sinks.txn._trim_checkpoint": _TXN,
-    "sinks.txn.add_constraint": _TXN,
-    "sinks.txn.clone_table": _TXN,
     "sinks.txn.compact_table": _TXN,
-    "sinks.txn.count_rows": _TXN,
-    "sinks.txn.diff_schemas": _TXN,
-    "sinks.txn.drop_constraint": _TXN,
-    "sinks.txn.restore_table": _TXN,
-    "sinks.txn.update_where": _TXN,
     "sinks.txn.vacuum_table": _TXN,
     "sources.batch.load_tables": _BATCH,
     "sources.batch.read_csv": _BATCH,

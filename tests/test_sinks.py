@@ -976,106 +976,3 @@ def test_merge_manifest_stream_cdc_with_deletes(spark, tmp_path):
     )
     assert txn.read_manifest(table)["epoch"] == man["epoch"]
     assert txn.read_snapshot(spark, table).where("id = 9").count() == 0
-
-
-@pytest.mark.slow
-def test_count_rows_is_metadata_exact_across_dml_lifecycle(spark, tmp_path):
-    """count_rows (metadata-only COUNT(*), Delta's numRecords - DV
-    cardinality): exact vs a real scan after every DML verb — two
-    appends, upsert rewrite, two accumulating deletes, MERGE, UPDATE,
-    compaction, and at time-traveled epochs — and an honest None when
-    any entry predates the row harvest."""
-    import json as _json
-    import os
-
-    from kinesis3_spark.sinks import txn
-
-    path = str(tmp_path / "t")
-
-    def check():
-        got = txn.count_rows(path)
-        want = txn.read_snapshot(spark, path).count()
-        assert got == want, (got, want)
-        return got
-
-    txn.append_snapshot(
-        spark.createDataFrame([(i, i, "a") for i in range(40)],
-                              "id bigint, v bigint, seg string"),
-        path, key="id", n_buckets=4,
-    )
-    assert check() == 40
-    txn.append_snapshot(
-        spark.createDataFrame([(100 + i, i, "d") for i in range(7)],
-                              "id bigint, v bigint, seg string"),
-        path, key="id",
-    )
-    assert check() == 47
-    txn.upsert_manifest_txn(
-        spark,
-        spark.createDataFrame([(0, 999, "u"), (200, 1, "u")],
-                              "id bigint, v bigint, seg string"),
-        path, key="id", order_col="v",
-    )
-    assert check() == 48
-    txn.delete_where(spark, path, "v >= 30 AND v < 35")   # dv tier
-    check()
-    txn.delete_where(spark, path, "v >= 35 AND v < 38")   # accumulates
-    n_after_deletes = check()
-    txn.merge_into(
-        spark, path,
-        spark.createDataFrame([(300, 3, "m"), (0, 1000, "m")],
-                              "id bigint, v bigint, seg string"),
-        key="id",
-        matched=[{"update": "all"}], not_matched=[{"insert": "all"}],
-    )
-    assert check() == n_after_deletes + 1
-    txn.update_where(spark, path, "seg = 'a'", {"v": "v + 1"})
-    check()
-    txn.compact_table(spark, path, key="id")  # folds dvs physically
-    final = check()
-    # time travel: the count is per-epoch metadata too
-    man = txn.read_manifest(path)
-    assert txn.count_rows(path, epoch=man["epoch"]) == final
-    assert txn.count_rows(path, epoch=1) == 40
-    # pre-harvest manifests refuse instead of guessing: strip one
-    # entry's rows from the CURRENT manifest copy
-    mpath = os.path.join(path, "_MANIFEST.json")
-    m = _json.load(open(mpath))
-    del m["files"][0]["rows"]
-    open(mpath, "w").write(_json.dumps(m))
-    assert txn.count_rows(path) is None
-
-
-@pytest.mark.slow
-def test_count_rows_poisoned_dv_entry_stays_honest_none(spark, tmp_path):
-    """Mixed-version safety (review r10-4th #1): an entry carrying dv
-    sidecars WITHOUT dv_rows (deletes from before cardinality tracking)
-    must stay poisoned when a new delete touches the same file —
-    initializing the counter would count only the new positions and
-    turn count_rows' honest None into a silent overcount."""
-    import json as _json
-    import os
-
-    from kinesis3_spark.sinks import txn
-
-    path = str(tmp_path / "t")
-    txn.append_snapshot(
-        spark.createDataFrame([(i, i) for i in range(20)],
-                              "id bigint, v bigint"),
-        path, key="id", n_buckets=1,
-    )
-    txn.delete_where(spark, path, "v < 3")
-    assert txn.count_rows(path) == 17
-    # simulate the pre-tracking manifest: dv present, dv_rows gone
-    mpath = os.path.join(path, "_MANIFEST.json")
-    m = _json.load(open(mpath))
-    assert any(e.get("dv") for e in m["files"])
-    for e in m["files"]:
-        e.pop("dv_rows", None)
-    open(mpath, "w").write(_json.dumps(m))
-    assert txn.count_rows(path) is None  # honest refusal
-    # a NEW delete on the poisoned file must not resurrect the counter
-    txn.delete_where(spark, path, "v >= 3 AND v < 5")
-    assert txn.count_rows(path) is None, "poisoned entry grew a partial count"
-    # the data itself is still exact (both sidecar generations applied)
-    assert txn.read_snapshot(spark, path).count() == 15

@@ -118,14 +118,6 @@ def test_compaction_reharvests_blooms(spark, table):
         assert got.where(F.col("id") == probe).count() == 1
 
 
-def test_restore_carries_bloom_config(spark, table):
-    T.restore_table(spark, table, 1)
-    man = T.read_manifest(table)
-    assert man.get("bloom_cols") == ["id"]
-    # epoch-1 snapshot: id 1017 not yet ingested
-    assert T.read_snapshot(spark, table, where=[("id", "==", 1017)]) is None
-
-
 def test_datasource_reader_prunes_partitions_with_bloom(spark, table):
     from kinesis3_spark.sources.txn_datasource import _TxnBatchReader
 

@@ -100,14 +100,6 @@ def test_rename_of_dropped_or_missing_column_refused(spark, table):
         T.rename_column(table, "val", "id")  # collision
 
 
-def test_rename_refused_while_constraint_references_column(spark, table):
-    T.add_constraint(table, "val_nonneg", "val >= 0")
-    with pytest.raises(ValueError, match="constraint"):
-        T.rename_column(table, "val", "amount")
-    with pytest.raises(ValueError, match="constraint"):
-        T.drop_column(table, "val")
-
-
 def test_rename_chain_and_back_to_physical_name(spark, table):
     T.rename_column(table, "val", "amount")
     T.rename_column(table, "amount", "price")
@@ -116,14 +108,6 @@ def test_rename_chain_and_back_to_physical_name(spark, table):
     # renaming back to the original physical name collapses the mapping
     T.rename_column(table, "price", "val")
     assert T._mapping(T.read_manifest(table)) == {}
-
-
-def test_restore_carries_mapping(spark, table):
-    ep = T.rename_column(table, "val", "amount")
-    T.rename_column(table, "amount", "price")
-    T.restore_table(spark, table, ep)
-    got = T.read_snapshot(spark, table)
-    assert "amount" in got.columns and "price" not in got.columns
 
 
 def test_datasource_batch_read_presents_logical_names(spark, table):
@@ -211,27 +195,6 @@ def test_cdf_across_drop_epoch_is_empty(spark, table):
     assert T.table_changes(spark, table, ep0, ep1, key="id").count() == 0
 
 
-def test_drop_constraint_unblocks_rename(spark, table):
-    T.add_constraint(table, "val_nonneg", "val >= 0")
-    with pytest.raises(ValueError, match="constraint"):
-        T.rename_column(table, "val", "amount")
-    with pytest.raises(ValueError, match="no constraint"):
-        T.drop_constraint(table, "typo_name")
-    T.drop_constraint(table, "val_nonneg")
-    T.rename_column(table, "val", "amount")  # now legal
-    T.add_constraint(table, "amt_nonneg", "amount >= 0")
-    # the re-added constraint binds under the NEW name: a violating
-    # batch is refused
-    bad = spark.createDataFrame([(500, -1, 0)], "id long, amount long, grp long")
-    with pytest.raises(ValueError, match="amt_nonneg"):
-        T.append_snapshot(bad, table, key="id")
-    h = T.table_history(table)  # newest first
-    assert h[0]["operation"] == "ADD CONSTRAINT"
-    assert h[1]["operation"] == "RENAME COLUMN"
-    assert h[2]["operation"] == "DROP CONSTRAINT"
-    assert h[2]["params"] == {"constraint": "val_nonneg"}
-
-
 def test_datasource_pushdown_translates_logical_predicates(spark, tmp_path):
     """Catalyst pushes predicates in LOGICAL names; file stats are keyed
     by PHYSICAL names — the reader translates before the skip walk, so
@@ -259,5 +222,3 @@ def test_datasource_pushdown_translates_logical_predicates(spark, tmp_path):
     r = _TxnBatchReaderPushdown({"path": path}, schema)
     r._push_filters([GreaterThanOrEqual(("amount",), 500)])
     assert len(r.partitions()) == 1  # the lo commit pruned via 'val' stats
-
-

@@ -283,61 +283,3 @@ def test_randomized_op_sequences_match_dict_model(spark, tmp_path):
             {r["id"]: (r["grp"], r["val"]) for r in t.collect()}
         )
         assert got == model, f"seed {seed} diverged"
-
-
-def test_restore_rolls_back_metadata_only(spark, tmp_path):
-    """Delta RESTORE: roll back to a retained epoch as a new metadata
-    commit — files identical to the target epoch, history after it still
-    reachable, app watermarks NOT rolled back (replay fence holds)."""
-    from kinesis3_spark.sinks.txn import restore_table
-
-    path = str(tmp_path / "t")
-    _seed(spark, path)                                   # epoch 1
-    append_snapshot(_mk(spark, [("bad", "x", -1)]), path, key="id",
-                    app_id="ing", app_version=5)         # epoch 2
-    delete_where(spark, path, "grp = 'odd'")             # epoch 3
-    new_epoch = restore_table(spark, path, 1)
-    assert new_epoch == 4
-    t = read_snapshot(spark, path)
-    assert t.count() == 40 and t.where("id = 'bad'").count() == 0
-    man = read_manifest(path)
-    assert man["files"] == read_manifest(path, 1)["files"]
-    assert man["apps"] == {"ing": 5}  # fence survives the rollback
-    # the bad epoch remains reachable for forensics until vacuumed
-    assert read_snapshot(spark, path, epoch=2).where(
-        "id = 'bad'").count() == 1
-    # restoring to the present is a no-op
-    assert restore_table(spark, path, 4) == 4
-
-
-def test_check_constraints_gate_commits(spark, tmp_path):
-    """CHECK constraints: FALSE fails the commit atomically (no epoch,
-    no files), NULL passes (SQL CHECK), and both merge modes enforce."""
-    from kinesis3_spark.sinks.txn import add_constraint
-
-    path = str(tmp_path / "t")
-    _seed(spark, path)
-    e = add_constraint(path, "val_nonneg", "val >= 0")
-    assert read_manifest(path)["constraints"] == {"val_nonneg": "val >= 0"}
-    with pytest.raises(ValueError, match="val_nonneg"):
-        append_snapshot(_mk(spark, [("z", "g", -5)]), path, key="id")
-    with pytest.raises(ValueError, match="val_nonneg"):
-        upsert_manifest_txn(spark, _mk(spark, [("z", "g", -5)]),
-                            path, key="id", order_col="val")
-    man = read_manifest(path)
-    assert man["epoch"] == e  # nothing published
-    assert read_snapshot(spark, path).where("id = 'z'").count() == 0
-    # NULL passes; valid rows commit; constraint survives data commits
-    ok = spark.createDataFrame([("n1", "g", None), ("n2", "g", 7)],
-                               "id string, grp string, val bigint")
-    append_snapshot(ok, path, key="id")
-    assert read_snapshot(spark, path).count() == 42
-    assert read_manifest(path)["constraints"] == {"val_nonneg": "val >= 0"}
-    # a later violating batch still fails before anything publishes, and
-    # a valid one lands
-    ep = read_manifest(path)["epoch"]
-    with pytest.raises(Exception, match="val_nonneg"):
-        append_snapshot(_mk(spark, [("w", "g", -1)]), path, key="id")
-    assert read_manifest(path)["epoch"] == ep  # nothing published
-    append_snapshot(_mk(spark, [("w", "g", 1)]), path, key="id")
-    assert read_snapshot(spark, path).where("id = 'w'").count() == 1

@@ -99,28 +99,6 @@ def test_generated_zone_maps_prune_derived_predicates(spark, tmp_path):
     assert opened == 1
 
 
-def test_constraint_on_generated_column_enforces_post_compute(spark, table):
-    """A CHECK constraint referencing a generated column binds AFTER the
-    commit computes the value — a raw batch that omits the column
-    neither crashes nor slips past it."""
-    T.add_constraint(table, "doubled_cap", "doubled <= 200")
-    ok = spark.createDataFrame([(10, 50)], "id bigint, val bigint")
-    T.append_snapshot(ok, table, key="id")  # doubled=100, passes
-    ep = T.read_manifest(table)["epoch"]
-    bad = spark.createDataFrame([(11, 500)], "id bigint, val bigint")
-    with pytest.raises(ValueError, match="doubled_cap"):
-        T.append_snapshot(bad, table, key="id")
-    with pytest.raises(ValueError, match="doubled_cap"):
-        T.upsert_manifest_txn(spark, bad, table, key="id")
-    with pytest.raises(ValueError, match="doubled_cap"):
-        T.merge_into(
-            spark, table,
-            spark.createDataFrame([(10, 999)], "id bigint, v bigint"),
-            key="id", matched=[{"update": {"val": "src_v"}}],
-        )
-    assert T.read_manifest(table)["epoch"] == ep  # nothing published
-
-
 def test_batch_missing_generated_inputs_raises_contract_error(spark, table):
     nov = spark.createDataFrame([(20,)], "id bigint")
     with pytest.raises(ValueError, match="does not carry"):

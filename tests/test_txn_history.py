@@ -30,7 +30,6 @@ def test_history_records_every_operation_newest_first(spark, table):
     )
     T.delete_where(spark, table, "val >= 30")
     T.rename_column(table, "val", "amount")
-    T.add_constraint(table, "amt_pos", "amount > 0")
     T.merge_into(
         spark, table,
         spark.createDataFrame([(2, 5)], "id bigint, amt bigint"),
@@ -38,31 +37,32 @@ def test_history_records_every_operation_newest_first(spark, table):
         matched=[{"update": {"amount": "amount + src_amt"}}],
     )
     T.compact_table(spark, table, key="id")
-    T.restore_table(spark, table, epoch=1)
+    T.drop_column(table, "seg")
     h = T.table_history(table)
     assert [r["operation"] for r in h] == [
-        "RESTORE", "OPTIMIZE", "MERGE", "ADD CONSTRAINT", "RENAME COLUMN",
-        "DELETE", "UPSERT", "APPEND",
+        "DROP COLUMN", "OPTIMIZE", "MERGE", "RENAME COLUMN", "DELETE",
+        "UPSERT", "APPEND",
     ]
-    assert [r["epoch"] for r in h] == list(range(8, 0, -1))
+    assert [r["epoch"] for r in h] == list(range(7, 0, -1))
     # params survive: the delete knows its predicate and count, the
-    # rename its endpoints, the merge its clause shape
+    # rename its endpoints, the merge its clause shape, the drop its column
     by_op = {r["operation"]: r for r in h}
     assert by_op["DELETE"]["params"]["n_deleted"] == 1
     assert "val >= 30" in by_op["DELETE"]["params"]["predicate"]
     assert by_op["RENAME COLUMN"]["params"] == {"from": "val", "to": "amount"}
     assert by_op["MERGE"]["params"]["clauses"]["matched"] == 1
-    assert by_op["RESTORE"]["params"]["to_epoch"] == 1
+    assert by_op["DROP COLUMN"]["params"] == {"column": "seg"}
     assert all(r["ts"] for r in h)  # every commit is timestamped
 
 
 def test_metadata_commits_never_carry_stale_operations(spark, table):
-    # rename/constraint payloads copy the previous manifest's keys; the
-    # op record must be THIS commit's, not the copied-forward one
+    # rename/drop payloads copy the previous manifest's keys; the op
+    # record must be THIS commit's, not the copied-forward one
     T.rename_column(table, "val", "amount")
-    T.add_constraint(table, "amt_pos", "amount > 0")
+    T.drop_column(table, "seg")
     h = T.table_history(table)
-    assert h[0]["operation"] == "ADD CONSTRAINT"
+    assert h[0]["operation"] == "DROP COLUMN"
+    assert h[0]["params"] == {"column": "seg"}
     assert h[1]["operation"] == "RENAME COLUMN"
 
 
@@ -222,41 +222,6 @@ def test_vacuum_spares_fresh_orphans_reaps_aged_ones(spark, table, monkeypatch):
     os.utime(orphan, (old, old))
     deleted2 = T.vacuum_table(table, keep_epochs=1)
     assert rel in deleted2 and not os.path.exists(orphan)
-
-
-def test_diff_schemas_reports_add_rename_drop(spark, table):
-    """diff_schemas: renames detected through physical identity (never
-    drop+add), additive evolution as added, drops as dropped — the
-    structured record a schema-sync consumer acts on."""
-    batch2 = spark.createDataFrame(
-        [(7, 70, "z", 5)], "id bigint, val bigint, seg string, extra bigint"
-    )
-    T.upsert_manifest_txn(spark, batch2, table, key="id", order_col="val")
-    e_evolved = T.read_manifest(table)["epoch"]
-    T.rename_column(table, "val", "amount")
-    T.drop_column(table, "seg")
-    e_final = T.read_manifest(table)["epoch"]
-
-    d = T.diff_schemas(table, 1, e_evolved)
-    assert d == {
-        "added": [("extra", "bigint")], "dropped": [], "renamed": [],
-        "type_changed": [],
-    }
-    d2 = T.diff_schemas(table, 1, e_final)
-    assert d2["added"] == [("extra", "bigint")]
-    assert d2["dropped"] == ["seg"]
-    assert d2["renamed"] == [("val", "amount")]
-    assert d2["type_changed"] == []
-    # reverse direction: the rename flips, the add becomes a drop, and
-    # the dropped column resurfaces as an add
-    d3 = T.diff_schemas(table, e_final, 1)
-    assert d3["added"] == [("seg", "string")]
-    assert d3["dropped"] == ["extra"]
-    assert d3["renamed"] == [("amount", "val")]
-    # identical epochs diff empty
-    assert T.diff_schemas(table, e_final, e_final) == {
-        "added": [], "dropped": [], "renamed": [], "type_changed": [],
-    }
 
 
 def test_timestamp_as_of_resolves_latest_commit_at_or_before(spark, tmp_path):

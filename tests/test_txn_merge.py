@@ -2,8 +2,8 @@
 Delta's full MERGE surface — WHEN MATCHED [AND cond] UPDATE/DELETE,
 WHEN NOT MATCHED [AND cond] INSERT, WHEN NOT MATCHED BY SOURCE
 UPDATE/DELETE — with first-satisfied-clause-wins ordering, bucket-bounded
-write amplification, the duplicate-source-match refusal, constraint
-gating on the rewritten output, and the exactly-once replay fence."""
+write amplification, the duplicate-source-match refusal and the
+exactly-once replay fence."""
 
 from __future__ import annotations
 
@@ -127,18 +127,6 @@ def test_untouched_buckets_carried_by_reference(spark, table):
     assert _rows(spark, table) == _rows(spark, table, epoch=man1["epoch"])
 
 
-def test_constraints_gate_updates_not_just_inserts(spark, table):
-    T.add_constraint(table, "bal_floor", "bal >= -1000")
-    src = spark.createDataFrame([(1, 1)], "id bigint, amt bigint")
-    with pytest.raises(ValueError, match="bal_floor"):
-        T.merge_into(
-            spark, table, src, key="id",
-            matched=[{"update": {"bal": "bal - 10000"}}],
-        )
-    # failed merge published nothing
-    assert (1, 100, "a") in _rows(spark, table)
-
-
 def test_replay_fence_skips_applied_batch(spark, table):
     src = spark.createDataFrame([(1, 5)], "id bigint, amt bigint")
     kw = dict(
@@ -161,36 +149,3 @@ def test_merge_speaks_logical_names_on_mapped_table(spark, table):
     t = T.read_snapshot(spark, table)
     assert "balance" in t.columns and "bal" not in t.columns
     assert (1, 109, "a") in _rows(spark, table)
-
-
-def test_update_where_predicate_update_with_cdf(spark, table):
-    """update_where = predicate-only MERGE (Delta's UPDATE statement):
-    matching rows get the SET expressions, everything else is carried
-    verbatim; the change feed shows exactly the updated keys as
-    update_preimage/update_postimage pairs; CHECK constraints gate the
-    rewritten output through the inherited merge machinery."""
-    epoch = T.update_where(
-        spark, table, "bal < 0", {"bal": "0", "seg": "concat(seg, '!')"}
-    )
-    assert _rows(spark, table) == [
-        (1, 100, "a"), (2, 0, "b!"), (3, 10, "a"), (4, 0, "c!"), (5, 7, "b"),
-    ]
-    ch = sorted(
-        (r["id"], r["_change_type"], r["bal"])
-        for r in T.table_changes(
-            spark, table, epoch - 1, epoch, include_preimage=True
-        ).collect()
-    )
-    assert ch == [
-        (2, "update_postimage", 0), (2, "update_preimage", -50),
-        (4, "update_postimage", 0), (4, "update_preimage", -5),
-    ]
-    # history records the commit; time travel still sees the old values
-    assert T.read_snapshot(spark, table, epoch=epoch - 1).where(
-        "id = 2"
-    ).first()["bal"] == -50
-    # a constraint added after the fact gates later predicate updates
-    T.add_constraint(table, "bal_nonneg", "bal >= 0")
-    with pytest.raises(ValueError, match="bal_nonneg"):
-        T.update_where(spark, table, "id = 1", {"bal": "-999"})
-    assert T.read_snapshot(spark, table).where("id = 1").first()["bal"] == 100

@@ -143,18 +143,23 @@ def test_writer_refuses_unknown_manifest_keys(spark, table):
     carrying an unknown top-level key (a future feature's metadata)
     would silently STRIP it from the next epoch — _publish_manifest
     refuses instead. Reads stay unaffected: a key that changes read
-    semantics must also appear in reader_features."""
-    _rewrite_manifest(
-        table, lambda m: m.update({"row_tracking": {"enabled": True}})
-    )
-    # reading is fine — the unknown key is not read-critical by contract
-    assert T.read_snapshot(spark, table).count() == 2
-    with pytest.raises(T.ProtocolUnsupported, match="row_tracking"):
-        T.append_snapshot(
-            _mk(spark, [("c", "g", 3)]).coalesce(1),
-            table, key="id", n_buckets=1,
-        )
-    with pytest.raises(T.ProtocolUnsupported, match="row_tracking"):
-        T.delete_where(spark, table, "val = 1")
-    # the unknown key is still there, untouched
-    assert "row_tracking" in T.read_manifest(table)
+    semantics must also appear in reader_features. ``constraints`` is
+    the CHECK-constraint key this engine no longer enforces: a table
+    that carries it must not lose it to a commit either."""
+    for k, v in (
+        ("row_tracking", {"enabled": True}),
+        ("constraints", {"val_pos": "val > 0"}),
+    ):
+        _rewrite_manifest(table, lambda m: m.update({k: v}))
+        # reading is fine — the unknown key is not read-critical by contract
+        assert T.read_snapshot(spark, table).count() == 2
+        with pytest.raises(T.ProtocolUnsupported, match=k):
+            T.append_snapshot(
+                _mk(spark, [("c", "g", 3)]).coalesce(1),
+                table, key="id", n_buckets=1,
+            )
+        with pytest.raises(T.ProtocolUnsupported, match=k):
+            T.delete_where(spark, table, "val = 1")
+        # the unknown key is still there, untouched
+        assert T.read_manifest(table)[k] == v
+        _rewrite_manifest(table, lambda m: m.pop(k))
