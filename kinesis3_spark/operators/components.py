@@ -29,10 +29,10 @@ def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """(node id, cluster_id) for every node appearing in `edges`;
-    cluster_id = the minimum node id of the component."""
+    cluster_id = the minimum node id of the component (label propagation,
+    at most 25 rounds)."""
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
     sym = sym.distinct().localCheckpoint()
@@ -44,7 +44,7 @@ def connected_components(
         .localCheckpoint()
     )
 
-    for _ in range(max_iter):
+    for _ in range(25):
         nbr = sym.join(labels, sym["b"] == labels["id"]).select(
             sym["a"].alias("id"), labels["lbl"].alias("lbl")
         )

@@ -36,6 +36,7 @@ N_HASHES = 64
 LSH_BANDS = 32
 LSH_ROWS = 2
 SHINGLE_N = 3
+SIMHASH_BITS = 32
 
 
 def portable_hash60(col) -> Column:
@@ -52,7 +53,7 @@ def portable_hash60(col) -> Column:
 # Exact dedup
 # --------------------------------------------------------------------------
 
-def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Group documents by canonical fingerprint (md5 of sorted distinct token
     set — whitespace/word-order insensitive). Returns one row per duplicate
     group: fp, n_docs, keep_id (min id = survivor), doc_ids (sorted, csv).
@@ -61,7 +62,7 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc
     (duplicate multiplicity), not table size.
     """
     return (
-        df.select(F.col(id_col).alias("id"), fingerprint(text_col).alias("fp"))
+        df.select(F.col("doc_id").alias("id"), fingerprint("text").alias("fp"))
         .groupBy("fp")
         .agg(
             F.count("*").alias("n_docs"),
@@ -71,24 +72,24 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def drop_exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def drop_exact_duplicates(df: DataFrame) -> DataFrame:
     """The dedup operator itself: keep the min-id document per fingerprint.
 
     Window-free formulation: groupBy(fp).min(id) then semi-join back — two
     shuffles but no full-row sort, and the join key (fp, id) is unique so
     the join never amplifies.
     """
-    keyed = df.withColumn("__fp", fingerprint(text_col))
-    keep = keyed.groupBy("__fp").agg(F.min(id_col).alias(id_col))
-    return keyed.join(keep, ["__fp", id_col], "left_semi").drop("__fp")
+    keyed = df.withColumn("__fp", fingerprint("text"))
+    keep = keyed.groupBy("__fp").agg(F.min("doc_id").alias("doc_id"))
+    return keyed.join(keep, ["__fp", "doc_id"], "left_semi").drop("__fp")
 
 
 # --------------------------------------------------------------------------
 # N-gram Jaccard near-dup (inverted index)
 # --------------------------------------------------------------------------
 
-def _gram_sets(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """(id, grams: array<bigint>) — the DISTINCT shingle set per document,
+def _gram_sets(df: DataFrame) -> DataFrame:
+    """(id, grams: array<bigint>) — the DISTINCT SHINGLE_N-gram set per document,
     as 64-bit token-sequence hashes (functions.text.ngram_hashes), never
     gram strings: every downstream consumer (inverted-index equi-join,
     minhash min-aggregate, verify-join array_intersect) only needs gram
@@ -97,23 +98,16 @@ def _gram_sets(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     P ≈ |doc_grams|²/2⁶⁵ per doc, negligible at any corpus size (same trade
     the decontamination join makes, queries/decontam.py)."""
     return df.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(ngram_hashes(text_col, n)).alias("grams"),
+        F.col("doc_id").alias("id"),
+        F.array_distinct(ngram_hashes("text", SHINGLE_N)).alias("grams"),
     ).where(F.size("grams") > 0)
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = SHINGLE_N,
-    num: int = 1,
-    den: int = 2,
-) -> DataFrame:
-    """All pairs with n-gram Jaccard >= num/den, via inverted-index self-join
+def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
+    """All pairs with n-gram Jaccard >= 1/2, via inverted-index self-join
     on shared grams (pairs sharing no gram have Jaccard 0 and can't qualify).
 
-    Threshold test is integer-exact: den*|A∩B| >= num*|A∪B|.
+    Threshold test is integer-exact: 2*|A∩B| >= |A∪B|.
     Output: id_a < id_b, inter_size, union_size (bigint).
 
     Scale note: the gram-key join is the skew hazard (a gram in f docs yields
@@ -121,7 +115,7 @@ def ngram_jaccard_pairs(
     with df > threshold from *candidate generation* only, then verify against
     full sets) — not applied here because the oracle checks exact semantics.
     """
-    g = _gram_sets(df, text_col, id_col, n)
+    g = _gram_sets(df)
     ex = g.select("id", F.size("grams").alias("sz"), F.explode("grams").alias("gram"))
     a, b = ex.alias("a"), ex.alias("b")
     inter = (
@@ -136,38 +130,30 @@ def ngram_jaccard_pairs(
     )
     return (
         inter.withColumn("union_size", F.col("sz_a") + F.col("sz_b") - F.col("inter_size"))
-        .where(den * F.col("inter_size") >= num * F.col("union_size"))
+        .where(2 * F.col("inter_size") >= F.col("union_size"))
         .select("id_a", "id_b", "inter_size", F.col("union_size").cast("bigint"))
         .withColumn("inter_size", F.col("inter_size").cast("bigint"))
     )
 
 
-def ngram_jaccard_pairs_capped(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = SHINGLE_N,
-    num: int = 1,
-    den: int = 2,
-    df_cap: int = 100,
-) -> DataFrame:
+def ngram_jaccard_pairs_capped(df: DataFrame) -> DataFrame:
     """The 100 TB form of ngram_jaccard_pairs: candidate generation drops
-    grams whose document frequency exceeds `df_cap` (a gram in f docs emits
+    grams whose document frequency exceeds 100 (a gram in f docs emits
     ~f²/2 pair rows — the quadratic skew term), then VERIFIES each candidate
     against the FULL gram sets, so reported inter/union sizes are exact.
 
     The trade-off is recall, not precision: a qualifying pair is missed only
-    if every gram it shares is more common than df_cap. Near-duplicate pairs
+    if every gram it shares is more common than the cap. Near-duplicate pairs
     share many grams, most of them rare, so a generous cap loses nothing in
     practice (tests assert equality with the uncapped operator on the
     corpus).
     """
-    g = _gram_sets(df, text_col, id_col, n)
+    g = _gram_sets(df)
     ex = g.select("id", F.explode("grams").alias("gram"))
     rare = (
         ex.groupBy("gram")
         .agg(F.count("*").alias("df"))
-        .where(F.col("df") <= df_cap)
+        .where(F.col("df") <= 100)
         .select("gram")
     )
     rare_ex = ex.join(rare, "gram")
@@ -184,7 +170,7 @@ def ngram_jaccard_pairs_capped(
         .join(gb, "id_b")
         .withColumn("inter_size", F.size(F.array_intersect("grams_a", "grams_b")))
         .withColumn("union_size", F.size("grams_a") + F.size("grams_b") - F.col("inter_size"))
-        .where(den * F.col("inter_size") >= num * F.col("union_size"))
+        .where(2 * F.col("inter_size") >= F.col("union_size"))
         .select(
             "id_a",
             "id_b",
@@ -198,16 +184,10 @@ def ngram_jaccard_pairs_capped(
 # MinHash + LSH near-dup
 # --------------------------------------------------------------------------
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = N_HASHES,
-    shingle_n: int = SHINGLE_N,
-    grams: DataFrame | None = None,
-) -> DataFrame:
-    """Per-document MinHash signature: one column m0..m{k-1}, where
-    m_i = min over shingles of xxhash64(seed=i, shingle).
+def minhash_signatures(grams: DataFrame) -> DataFrame:
+    """Per-document MinHash signature of a `_gram_sets` frame: one column
+    m0..m{k-1}, k = N_HASHES, where m_i = min over shingles of
+    xxhash64(seed=i, shingle).
 
     Returns (id, sig: array<bigint>) with sig[i] = m_i.
 
@@ -228,19 +208,15 @@ def minhash_signatures(
     partial aggregation collapses each doc to ONE row before the exchange —
     the shuffle carries |docs| rows regardless of document length.
     """
-    g = grams if grams is not None else _gram_sets(df, text_col, id_col, shingle_n)
     # grams are already 64-bit shingle hashes (_gram_sets) — no per-shingle
     # string hashing left, the k permutations seed-mix the stored long.
-    ex = g.select("id", F.explode("grams").alias("gh"))
-    mins = ", ".join(f"min(xxhash64({i}, gh))" for i in range(n_hashes))
+    ex = grams.select("id", F.explode("grams").alias("gh"))
+    mins = ", ".join(f"min(xxhash64({i}, gh))" for i in range(N_HASHES))
     return ex.groupBy("id").agg(F.expr(f"array({mins})").alias("sig"))
 
 
 def lsh_candidate_pairs(
-    signatures: DataFrame,
-    bands: int = LSH_BANDS,
-    rows: int = LSH_ROWS,
-    max_bucket: int | None = None,
+    signatures: DataFrame, max_bucket: int | None = None
 ) -> DataFrame:
     """Band the signature and bucket on (band_id, band_hash): two docs are
     candidates iff some band agrees on all its rows — the scalable LSH
@@ -250,7 +226,7 @@ def lsh_candidate_pairs(
     bucket key.
 
     Capped: `max_bucket` is the degenerate-bucket guard (the quadratic
-    skew term, same policy as ngram_jaccard_pairs_capped's df_cap): a
+    skew term, same policy as ngram_jaccard_pairs_capped's gram cap): a
     bucket of f members emits ~f²/2 pair rows, and one boilerplate bucket
     with 10⁶ members would dominate everything. The capped path groups the
     banded relation by bucket (ONE keyed shuffle — no self-join, no
@@ -266,13 +242,13 @@ def lsh_candidate_pairs(
     essentially never are.
 
     The band projection is one transform-over-sequence SQL expression
-    (single py4j call) rather than `bands` Python-built structs — see the
+    (single py4j call) rather than LSH_BANDS Python-built structs — see the
     plan-construction note on minhash_signatures."""
-    row_refs = ", ".join(f"sig[j * {rows} + {r}]" for r in range(rows))
+    row_refs = ", ".join(f"sig[j * {LSH_ROWS} + {r}]" for r in range(LSH_ROWS))
     banded = signatures.select(
         "id",
         F.expr(
-            f"explode(transform(sequence(0, {bands - 1}), "
+            f"explode(transform(sequence(0, {LSH_BANDS - 1}), "
             f"j -> named_struct('band', j, 'bh', hash({row_refs})))) AS b"
         ),
     ).select("id", "b.band", "b.bh")
@@ -309,10 +285,6 @@ def lsh_candidate_pairs(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num: int = 1,
-    den: int = 2,
     grams: DataFrame | None = None,
     signatures: DataFrame | None = None,
     max_bucket: int | None = None,
@@ -336,12 +308,8 @@ def minhash_lsh_pairs(
     scan→shingle→minhash pipeline runs twice (measured 3.1 s vs 0.4 s for
     the candidate stage at sf0.1). Pass a persisted frame
     (queries/dedup._sigs_for) or a stored signature table."""
-    g = grams if grams is not None else _gram_sets(df, text_col, id_col, SHINGLE_N)
-    sig = (
-        signatures
-        if signatures is not None
-        else minhash_signatures(df, text_col, id_col, grams=g)
-    )
+    g = grams if grams is not None else _gram_sets(df)
+    sig = signatures if signatures is not None else minhash_signatures(g)
     cand = lsh_candidate_pairs(sig, max_bucket=max_bucket)
     ga = g.select(F.col("id").alias("id_a"), F.col("grams").alias("grams_a"))
     gb = g.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b"))
@@ -352,7 +320,7 @@ def minhash_lsh_pairs(
         .withColumn(
             "union_size", F.size("grams_a") + F.size("grams_b") - F.col("inter_size")
         )
-        .where(den * F.col("inter_size") >= num * F.col("union_size"))
+        .where(2 * F.col("inter_size") >= F.col("union_size"))
     )
     return verified.select(
         "id_a",
@@ -366,16 +334,10 @@ def minhash_lsh_pairs(
 # Winnowing (rolling-hash fingerprints, Schleimer et al. — the MOSS scheme)
 # --------------------------------------------------------------------------
 
-def winnowing_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    w: int = 4,
-) -> DataFrame:
-    """Per-document winnowing fingerprint set: hash every character k-gram,
-    then keep the minimum hash of each length-w window of consecutive
-    k-gram hashes. Guarantees any shared substring of length >= k+w-1
+def winnowing_fingerprints(df: DataFrame) -> DataFrame:
+    """Per-document winnowing fingerprint set: hash every character k-gram
+    (k = 8), then keep the minimum hash of each length-w window (w = 4) of
+    consecutive k-gram hashes. Guarantees any shared substring of length >= k+w-1
     produces a shared fingerprint — the positional/local dedup complement
     to set-based MinHash.
 
@@ -393,14 +355,15 @@ def winnowing_fingerprints(
     """
     from pyspark.sql.window import Window
 
-    txt = F.lower(F.trim(F.col(text_col)))
+    k, w = 8, 4
+    txt = F.lower(F.trim(F.col("text")))
     m = F.length(txt) - (k - 1)  # number of k-grams
     grams = F.when(
         m >= 1,
         F.transform(F.sequence(F.lit(1), F.greatest(m, F.lit(1))), lambda i: txt.substr(i, F.lit(k))),
     ).otherwise(F.array().cast("array<string>"))
     ex = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.size(grams).alias("m"),
         F.posexplode(grams).alias("pos", "gram"),
     ).withColumn("h", portable_hash60("gram"))
@@ -412,7 +375,7 @@ def winnowing_fingerprints(
         .agg(F.array_sort(F.collect_set("win_min")).alias("fps"))
     )
     # documents too short for a single window keep an empty fingerprint set
-    ids = df.select(F.col(id_col).alias("id"))
+    ids = df.select(F.col("doc_id").alias("id"))
     return ids.join(fps, "id", "left").select(
         "id",
         F.coalesce(F.size("fps"), F.lit(0)).cast("bigint").alias("n_fingerprints"),
@@ -424,27 +387,25 @@ def winnowing_fingerprints(
 # SimHash
 # --------------------------------------------------------------------------
 
-def simhash(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 32
-) -> DataFrame:
-    """Per-document SimHash over the distinct token set using the portable
-    60-bit md5 hash: bit b of the signature is 1 iff more tokens have bit b
-    set than clear. Returns (id, simhash).
+def simhash(df: DataFrame) -> DataFrame:
+    """Per-document SIMHASH_BITS-bit SimHash over the distinct token set
+    using the portable 60-bit md5 hash: bit b of the signature is 1 iff
+    more tokens have bit b set than clear. Returns (id, simhash).
 
-    Explode + groupBy with `bits` integer sums — all JVM-side, one shuffle.
+    Explode + groupBy with one integer sum per bit — all JVM-side, one shuffle.
     Both the per-bit sums and the bit-reassembly are single SQL strings:
-    built as `bits` Python Column objects they cost ~200 py4j round-trips
+    built as one Python Column per bit they cost ~200 py4j round-trips
     of driver-side plan construction (see minhash_signatures).
     """
     tok = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(tokenize(text_col))).alias("t"),
+        F.col("doc_id").alias("id"),
+        F.explode(F.array_distinct(tokenize("text"))).alias("t"),
     ).withColumn("hv", portable_hash60("t"))
     sums = ", ".join(
-        f"sum(if((shiftright(hv, {b}) & 1) = 1, 1, -1))" for b in range(bits)
+        f"sum(if((shiftright(hv, {b}) & 1) = 1, 1, -1))" for b in range(SIMHASH_BITS)
     )
     per_bit = tok.groupBy("id").agg(F.expr(f"array({sums})").alias("s"))
-    sig = " + ".join(f"if(s[{b}] > 0, {1 << b}L, 0L)" for b in range(bits))
+    sig = " + ".join(f"if(s[{b}] > 0, {1 << b}L, 0L)" for b in range(SIMHASH_BITS))
     return per_bit.select("id", F.expr(f"({sig})").cast("bigint").alias("simhash"))
 
 
@@ -452,12 +413,7 @@ def simhash(
 # Incremental dedup (new batch vs stored fingerprint index)
 # --------------------------------------------------------------------------
 
-def incremental_dedup(
-    new_df: DataFrame,
-    known_fps: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def incremental_dedup(new_df: DataFrame, known_fps: DataFrame) -> DataFrame:
     """Deduplicate an incoming batch against an EXISTING corpus: drop docs
     whose fingerprint is already in `known_fps` (one column `fp`), then
     keep the min-id survivor per fingerprint within the batch — the shape
@@ -478,11 +434,11 @@ def incremental_dedup(
     """
     from pyspark.sql.window import Window
 
-    keyed = new_df.withColumn("__fp", fingerprint(text_col))
+    keyed = new_df.withColumn("__fp", fingerprint("text"))
     fresh = keyed.join(
         known_fps.select(F.col("fp").alias("__fp")).distinct(), "__fp", "left_anti"
     )
-    w = Window.partitionBy("__fp").orderBy(id_col)
+    w = Window.partitionBy("__fp").orderBy("doc_id")
     return (
         fresh.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
@@ -490,12 +446,7 @@ def incremental_dedup(
     )
 
 
-def exact_substring_spans(
-    d: DataFrame,
-    k: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def exact_substring_spans(d: DataFrame, k: int = 50) -> DataFrame:
     """ExactSubstr duplicated-span DISCOVERY (Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better" §4.1):
     find, per document, the maximal token spans whose every k-token
@@ -533,9 +484,7 @@ def exact_substring_spans(
 
     from ..functions.text import ngram_hashes_from_tokens
 
-    toks_df = d.select(
-        F.col(id_col).alias("__id"), tokenize(F.col(text_col)).alias("toks")
-    )
+    toks_df = d.select(F.col("doc_id").alias("__id"), tokenize("text").alias("toks"))
     occ = toks_df.select(
         "__id",
         F.posexplode(ngram_hashes_from_tokens(F.col("toks"), k)).alias(
@@ -550,10 +499,10 @@ def exact_substring_spans(
         F.row_number().over(wgo).alias("rn"),
     )
     dup = marked.where((F.col("cnt") >= 2) & (F.col("rn") > 1))
-    return _merge_spans(dup, k, id_col)
+    return _merge_spans(dup, k)
 
 
-def _merge_spans(dup: DataFrame, k: int, id_col: str) -> DataFrame:
+def _merge_spans(dup: DataFrame, k: int) -> DataFrame:
     """Gaps-and-islands merge of marked k-window positions (columns
     ``__id``, ``pos``) into maximal spans [span_start, span_end) —
     windows <= k apart overlap or touch and fuse. Shared by the
@@ -577,18 +526,13 @@ def _merge_spans(dup: DataFrame, k: int, id_col: str) -> DataFrame:
             F.count("*").alias("n_windows"),
         )
         .select(
-            F.col("__id").alias(id_col), "span_start", "span_end",
+            F.col("__id").alias("doc_id"), "span_start", "span_end",
             "n_windows",
         )
     )
 
 
-def exact_substring_dedup(
-    d: DataFrame,
-    k: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def exact_substring_dedup(d: DataFrame, k: int = 50) -> DataFrame:
     """ExactSubstr REMOVAL: rebuild each document with its duplicated
     spans (exact_substring_spans) cut out — the operation Lee et al.
     apply to C4/RealNews before training, removing all but one
@@ -609,24 +553,21 @@ def exact_substring_dedup(
     DSIR (alias-subtree re-execution makes sharing the exploded
     subtree a false economy; at 100 TB the span relation is tiny next
     to the corpus and broadcasts)."""
-    spans = exact_substring_spans(d, k=k, id_col=id_col, text_col=text_col)
-    return _cut_spans(d, spans, id_col, text_col)
+    return _cut_spans(d, exact_substring_spans(d, k=k))
 
 
-def _cut_spans(
-    d: DataFrame, spans: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
+def _cut_spans(d: DataFrame, spans: DataFrame) -> DataFrame:
     """Rebuild each document with ``spans`` cut out of its token stream —
     the removal tail shared by exact_substring_dedup and the benchmark
     decontaminator (decontaminate_spans): spans aggregate per doc into a
     bounded struct array, LEFT-join back to the corpus scan, and a
     JVM-side indexed higher-order filter keeps token i iff no span
     contains it."""
-    span_arr = spans.groupBy(id_col).agg(
+    span_arr = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__rm")
     )
-    toks_df = d.withColumn("__toks", tokenize(F.col(text_col)))
-    joined = toks_df.join(span_arr, id_col, "left")
+    toks_df = d.withColumn("__toks", tokenize("text"))
+    joined = toks_df.join(span_arr, "doc_id", "left")
     kept = F.when(F.col("__rm").isNull(), F.col("__toks")).otherwise(
         F.filter(
             F.col("__toks"),
@@ -650,13 +591,7 @@ def _cut_spans(
     )
 
 
-def contaminated_spans(
-    d: DataFrame,
-    bench_grams: DataFrame,
-    k: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def contaminated_spans(d: DataFrame, bench_grams: DataFrame, k: int = 13) -> DataFrame:
     """Benchmark-overlap spans: maximal token spans of ``d`` whose every
     k-window also occurs in the BENCHMARK gram set (``bench_grams``: a
     one-column ``gh`` relation of the eval set's k-gram hashes) — the
@@ -673,9 +608,7 @@ def contaminated_spans(
     shuffle for the merge."""
     from ..functions.text import ngram_hashes_from_tokens
 
-    toks_df = d.select(
-        F.col(id_col).alias("__id"), tokenize(F.col(text_col)).alias("toks")
-    )
+    toks_df = d.select(F.col("doc_id").alias("__id"), tokenize("text").alias("toks"))
     occ = toks_df.select(
         "__id",
         F.posexplode(ngram_hashes_from_tokens(F.col("toks"), k)).alias(
@@ -685,16 +618,10 @@ def contaminated_spans(
     dup = occ.join(bench_grams.select("gh"), "gh", "left_semi").select(
         "__id", "pos"
     )
-    return _merge_spans(dup, k, id_col)
+    return _merge_spans(dup, k)
 
 
-def decontaminate_spans(
-    d: DataFrame,
-    bench_grams: DataFrame,
-    k: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def decontaminate_spans(d: DataFrame, bench_grams: DataFrame, k: int = 13) -> DataFrame:
     """Span-level decontamination REMOVAL: cut every benchmark-overlap
     span (contaminated_spans) out of the corpus — the middle ground
     between doing nothing and dropping flagged documents whole, and
@@ -702,29 +629,21 @@ def decontaminate_spans(
     boilerplate-shaped (a shared license header should not cost the
     whole document). Returns the same shape as exact_substring_dedup:
     every input column + clean_text / n_spans / n_tokens_removed."""
-    spans = contaminated_spans(
-        d, bench_grams, k=k, id_col=id_col, text_col=text_col
-    )
-    return _cut_spans(d, spans, id_col, text_col)
+    return _cut_spans(d, contaminated_spans(d, bench_grams, k=k))
 
 
-def leakage_split_expr(
-    grp: Column,
-    train_pct: int = 80,
-    valid_pct: int = 90,
-    salt: str = "split:",
-) -> Column:
+def leakage_split_expr(grp: Column) -> Column:
     """Deterministic group-level train/valid/test assignment: a salted
     portable hash of the GROUP id buckets 0-99, then thresholds cut
-    train/valid/test. Shared by the registered llm_leakage_safe_split
+    train (<80) / valid (<90) / test. Shared by the registered llm_leakage_safe_split
     query and its planted tests (one definition — a regression in the
     hash key or thresholds cannot pass the test while breaking the
     query; review r10-2nd #4). Group-level hashing is the leakage
     guarantee: every member of a near-dup cluster shares the hash
     input, hence the split."""
-    bucket = portable_hash60(F.concat(F.lit(salt), grp.cast("string"))) % 100
+    bucket = portable_hash60(F.concat(F.lit("split:"), grp.cast("string"))) % 100
     return (
-        F.when(bucket < train_pct, "train")
-        .when(bucket < valid_pct, "valid")
+        F.when(bucket < 80, "train")
+        .when(bucket < 90, "valid")
         .otherwise("test")
     )

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _MAGIC_I, _MAGIC_A, _MAGIC_V = b"RAWI", b"RAWA", b"RAWV"
+AUDIO_WINDOWS = 65  # audio_fingerprint energy windows: 64 delta bits
 
 
 # ----------------------------------------------------------------------
@@ -98,17 +99,17 @@ def _decode_video(b: bytes) -> np.ndarray:
 # Operators
 # ----------------------------------------------------------------------
 
-def payload_stats(df: DataFrame, id_col: str = "media_id", data_col: str = "data") -> DataFrame:
+def payload_stats(df: DataFrame) -> DataFrame:
     """Metadata-only integrity pass — stays entirely JVM-side (no decode,
     no Python): size + checksum per payload."""
     return df.select(
-        F.col(id_col),
-        F.octet_length(data_col).cast("bigint").alias("n_bytes"),
-        F.md5(F.col(data_col)).alias("payload_md5"),
+        F.col("media_id"),
+        F.octet_length("data").cast("bigint").alias("n_bytes"),
+        F.md5(F.col("data")).alias("payload_md5"),
     )
 
 
-def image_features(df: DataFrame, id_col: str = "media_id", data_col: str = "data") -> DataFrame:
+def image_features(df: DataFrame) -> DataFrame:
     """Decode + per-image features: dims, channel mean/std, brightness.
     `n_bytes` (raw payload size) rides along so a downstream integrity
     check can compare the container size against the decoded shape without
@@ -117,7 +118,7 @@ def image_features(df: DataFrame, id_col: str = "media_id", data_col: str = "dat
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for mid, b in zip(pdf[id_col], pdf[data_col]):
+            for mid, b in zip(pdf["media_id"], pdf["data"]):
                 b = bytes(b)
                 a = _decode_image(b).astype(np.float64)
                 out.append(
@@ -133,18 +134,18 @@ def image_features(df: DataFrame, id_col: str = "media_id", data_col: str = "dat
                 )
             yield pd.DataFrame(out)
 
-    return df.select(id_col, data_col).mapInPandas(
+    return df.select("media_id", "data").mapInPandas(
         run,
         schema="media_id long, n_bytes long, width int, height int, channels int, "
         "mean_px double, std_px double",
     )
 
 
-def audio_features(df: DataFrame, id_col: str = "media_id", data_col: str = "data") -> DataFrame:
+def audio_features(df: DataFrame) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for mid, b in zip(pdf[id_col], pdf[data_col]):
+            for mid, b in zip(pdf["media_id"], pdf["data"]):
                 samples, rate = _decode_audio(bytes(b))
                 x = samples.astype(np.float64)
                 out.append(
@@ -157,38 +158,34 @@ def audio_features(df: DataFrame, id_col: str = "media_id", data_col: str = "dat
                 )
             yield pd.DataFrame(out)
 
-    return df.select(id_col, data_col).mapInPandas(
+    return df.select("media_id", "data").mapInPandas(
         run, schema="media_id long, sample_rate int, duration_ms long, rms double"
     )
 
 
-def sample_frames(
-    df: DataFrame, every_n: int = 2, id_col: str = "media_id", data_col: str = "data"
-) -> DataFrame:
-    """Video → one row per sampled frame (frame re-encoded as 1-channel
+def sample_frames(df: DataFrame) -> DataFrame:
+    """Video → one row per second frame (frame re-encoded as 1-channel
     RAWI). Repartitions the exploded output so per-video frame counts don't
     skew downstream stages."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, frames = [], [], []
-            for mid, b in zip(pdf[id_col], pdf[data_col]):
+            for mid, b in zip(pdf["media_id"], pdf["data"]):
                 v = _decode_video(bytes(b))
-                for i in range(0, v.shape[0], every_n):
+                for i in range(0, v.shape[0], 2):
                     ids.append(mid)
                     idxs.append(i)
                     frames.append(encode_rawi(v[i][:, :, None]))
             yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "data": frames})
 
-    out = df.select(id_col, data_col).mapInPandas(
+    out = df.select("media_id", "data").mapInPandas(
         run, schema="media_id long, frame_idx int, data binary"
     )
     return out.repartition("media_id", "frame_idx")
 
 
-def image_ahash(
-    df: DataFrame, id_col: str = "media_id", data_col: str = "data"
-) -> DataFrame:
+def image_ahash(df: DataFrame) -> DataFrame:
     """Perceptual average-hash (aHash) per image, as 4 × 16-bit Hamming
     bands — the DCT-free tier of the pHash family every image pretraining
     corpus runs before (expensive) embedding dedup.
@@ -215,12 +212,12 @@ def image_ahash(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, bands_out = [], []
-            for mid, b in zip(pdf[id_col], pdf[data_col]):
+            for mid, b in zip(pdf["media_id"], pdf["data"]):
                 ids.append(mid)
                 bands_out.append(_ahash_bands_of(bytes(b)))
             yield pd.DataFrame({"media_id": ids, "bands": bands_out})
 
-    return df.select(id_col, data_col).mapInPandas(
+    return df.select("media_id", "data").mapInPandas(
         run, schema="media_id long, bands array<int>"
     )
 
@@ -248,15 +245,10 @@ def _ahash_bands_of(payload: bytes) -> list[int]:
     return bands
 
 
-def audio_fingerprint(
-    df: DataFrame,
-    id_col: str = "media_id",
-    data_col: str = "data",
-    n_windows: int = 65,
-) -> DataFrame:
+def audio_fingerprint(df: DataFrame) -> DataFrame:
     """Chromaprint-style banded audio fingerprint per clip — the
     spectral-free integer tier (energy-delta sign bits): decode RAWA,
-    partition the sample stream into `n_windows` equal windows with
+    partition the sample stream into AUDIO_WINDOWS (65) equal windows with
     floor boundaries (window k covers samples [floor(k*n/W),
     floor((k+1)*n/W)) — the image_ahash grid trick on the time axis),
     take per-window energy E[k] = Σ sample², and emit one bit per
@@ -277,10 +269,10 @@ def audio_fingerprint(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, bands_out = [], []
-            for mid, b in zip(pdf[id_col], pdf[data_col]):
+            for mid, b in zip(pdf["media_id"], pdf["data"]):
                 samples, _rate = _decode_audio(bytes(b))
                 n = len(samples)
-                wb = (np.arange(n_windows + 1) * n) // n_windows
+                wb = (np.arange(AUDIO_WINDOWS + 1) * n) // AUDIO_WINDOWS
                 cs = np.concatenate(
                     [[0], np.cumsum(samples.astype(np.int64) ** 2)]
                 )
@@ -288,13 +280,13 @@ def audio_fingerprint(
                 bits = (e[1:] > e[:-1]).astype(np.int64)
                 bands = [
                     int(sum(int(bits[8 * g + j]) << j for j in range(8)))
-                    for g in range((n_windows - 1) // 8)
+                    for g in range((AUDIO_WINDOWS - 1) // 8)
                 ]
                 ids.append(mid)
                 bands_out.append(bands)
             yield pd.DataFrame({"media_id": ids, "bands": bands_out})
 
-    return df.select(id_col, data_col).mapInPandas(
+    return df.select("media_id", "data").mapInPandas(
         run, schema="media_id long, bands array<int>"
     )
 

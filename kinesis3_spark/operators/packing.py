@@ -36,23 +36,21 @@ _GROUP_SHIFT = 1 << 32
 def pack_sequences(
     df: DataFrame,
     budget: int,
-    id_col: str = "doc_id",
-    token_col: str = "n_tokens",
     num_groups: int = 8,
 ) -> DataFrame:
     """Assign each row to a token-budgeted bin.
 
-    Returns (id_col, n_tokens, bin_id, oversize) with one row per input row.
+    Returns (doc_id, n_tokens, bin_id, oversize) with one row per input row.
     """
 
     def pack_group(pdf: pd.DataFrame) -> pd.DataFrame:
         # FFD: largest first; ties broken by id so the assignment is
         # deterministic regardless of Arrow batch arrival order.
-        pdf = pdf.sort_values([token_col, id_col], ascending=[False, True])
+        pdf = pdf.sort_values(["n_tokens", "doc_id"], ascending=[False, True])
         group_id = int(pdf["__grp"].iloc[0])
         bins: list[int] = []  # remaining capacity per local bin
         assigned = []
-        for tokens in pdf[token_col].astype("int64"):
+        for tokens in pdf["n_tokens"].astype("int64"):
             placed = -1
             for i, room in enumerate(bins):
                 if tokens <= room:
@@ -66,20 +64,20 @@ def pack_sequences(
             assigned.append(placed)
         out = pd.DataFrame(
             {
-                id_col: pdf[id_col].values,
-                "n_tokens": pdf[token_col].astype("int64").values,
+                "doc_id": pdf["doc_id"].values,
+                "n_tokens": pdf["n_tokens"].astype("int64").values,
                 "bin_id": [group_id * _GROUP_SHIFT + b for b in assigned],
-                "oversize": (pdf[token_col].astype("int64") > budget).astype("int32"),
+                "oversize": (pdf["n_tokens"].astype("int64") > budget).astype("int32"),
             }
         )
         return out
 
     grouped = df.select(
-        F.col(id_col),
-        F.col(token_col).cast("long").alias(token_col),
-        F.pmod(F.hash(F.col(id_col)), F.lit(num_groups)).alias("__grp"),
+        F.col("doc_id"),
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+        F.pmod(F.hash(F.col("doc_id")), F.lit(num_groups)).alias("__grp"),
     )
-    schema = f"{id_col} long, n_tokens long, bin_id long, oversize int"
+    schema = "doc_id long, n_tokens long, bin_id long, oversize int"
     return grouped.groupBy("__grp").applyInPandas(pack_group, schema=schema)
 
 
@@ -94,11 +92,9 @@ def bin_stats(packed: DataFrame) -> DataFrame:
 
 def cumulative_token_positions(
     df: DataFrame,
-    id_col: str = "doc_id",
-    token_col: str = "n_tokens",
     bucket_width: int = 1024,
 ) -> DataFrame:
-    """(id, n_tokens, cum): inclusive running token total in `id_col`
+    """(doc_id, n_tokens, cum): inclusive running token total in doc_id
     order — the primitive behind concat-and-chunk sequence packing, where
     every example/bin assignment is a pure function of the cumulative
     count (token at global position p lands in example p // L).
@@ -115,16 +111,16 @@ def cumulative_token_positions(
     from pyspark.sql import Window
 
     d = df.select(
-        id_col,
-        F.col(token_col).cast("long").alias(token_col),
-        F.expr(f"CAST({id_col} DIV {bucket_width} AS BIGINT)").alias("__b"),
+        "doc_id",
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+        F.expr(f"CAST(doc_id DIV {bucket_width} AS BIGINT)").alias("__b"),
     )
     w_local = (
         Window.partitionBy("__b")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    local = d.withColumn("__lc", F.sum(token_col).over(w_local))
+    local = d.withColumn("__lc", F.sum("n_tokens").over(w_local))
     w_off = (
         # scale-ok: input is the |buckets| = |ids|/bucket_width rollup, not corpus rows (~10^6 at 10^9 docs; re-bucket the rollup — same recursion — if it outgrows one task)
         Window.orderBy("__b")
@@ -132,14 +128,14 @@ def cumulative_token_positions(
     )
     offs = (
         d.groupBy("__b")
-        .agg(F.sum(token_col).alias("__bt"))
+        .agg(F.sum("n_tokens").alias("__bt"))
         .select(
             "__b",
             F.coalesce(F.sum("__bt").over(w_off), F.lit(0)).alias("__off"),
         )
     )
     return local.join(F.broadcast(offs), "__b").select(
-        id_col,
-        token_col,
+        "doc_id",
+        "n_tokens",
         (F.col("__lc") + F.col("__off")).cast("long").alias("cum"),
     )

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["validate_motif", "user_motif_counts", "user_motif_measures"]
@@ -107,17 +107,10 @@ def validate_motif(pattern: str, alphabet: str) -> str:
     return pattern
 
 
-def user_motif_counts(
-    events: DataFrame,
-    pattern: str,
-    alphabet: str,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
-    symbol: Column | None = None,
-) -> DataFrame:
-    """(key, n_matches): leftmost non-overlapping count of the contiguous
-    `pattern` motif in each key's ordered symbol sequence.
+def user_motif_counts(events: DataFrame, pattern: str, alphabet: str) -> DataFrame:
+    """(user_id, n_matches): leftmost non-overlapping count of the contiguous
+    `pattern` motif in each user's symbol sequence: one symbol per event,
+    the first letter of its event_type, ordered by (ts, event_id).
 
     Plan shape (the only one that scales): one groupBy(key) whose
     aggregate is array_sort(collect_list(struct(order..., symbol))) —
@@ -125,14 +118,16 @@ def user_motif_counts(
     string and regexp_count, all inside the post-shuffle project of the
     SAME stage. No window, no second shuffle, no per-row Python."""
     validate_motif(pattern, alphabet)
-    sym = symbol if symbol is not None else F.substring(type_col, 1, 1)
-    seq = events.groupBy(key_col).agg(
+    seq = events.groupBy("user_id").agg(
         F.concat_ws(
             "",
             F.transform(
                 F.array_sort(
                     F.collect_list(
-                        F.struct(*order_cols, sym.alias("__sym"))
+                        F.struct(
+                            "ts", "event_id",
+                            F.substring("event_type", 1, 1).alias("__sym"),
+                        )
                     )
                 ),
                 lambda x: x["__sym"],
@@ -140,21 +135,12 @@ def user_motif_counts(
         ).alias("seq")
     )
     return seq.select(
-        key_col,
+        "user_id",
         F.regexp_count("seq", F.lit(pattern)).cast("bigint").alias("n_matches"),
     )
 
 
-def user_motif_measures(
-    events: DataFrame,
-    pattern: str,
-    alphabet: str,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
-    symbol: Column | None = None,
-) -> DataFrame:
+def user_motif_measures(events: DataFrame, pattern: str, alphabet: str) -> DataFrame:
     """MATCH_RECOGNIZE MEASURES for the contiguous motif: per key, one
     row per match with its position, symbol length, and wall-clock span
     — `user_motif_counts` answers HOW MANY, this answers WHERE and HOW
@@ -172,16 +158,19 @@ def user_motif_measures(
     Same one-shuffle envelope as the counter; the per-key arrays are the
     sessionization bound."""
     validate_motif(pattern, alphabet)
-    sym = symbol if symbol is not None else F.substring(type_col, 1, 1)
-    base = events.groupBy(key_col).agg(
+    base = events.groupBy("user_id").agg(
         F.array_sort(
             F.collect_list(
-                F.struct(*order_cols, sym.alias("__sym"), F.col(ts_col).alias("__ts"))
+                F.struct(
+                    "ts", "event_id",
+                    F.substring("event_type", 1, 1).alias("__sym"),
+                    F.col("ts").alias("__ts"),
+                )
             )
         ).alias("__evs")
     )
     seq = base.select(
-        key_col,
+        "user_id",
         "__evs",
         F.concat_ws(
             "", F.transform("__evs", lambda x: x["__sym"])
@@ -189,7 +178,7 @@ def user_motif_measures(
     )
     lit = F.lit(pattern)
     m = seq.select(
-        key_col,
+        "user_id",
         "__evs",
         F.regexp_extract_all("seq", lit, 0).alias("__m"),
         F.split("seq", pattern, -1).alias("__s"),
@@ -197,7 +186,7 @@ def user_motif_measures(
     seg_lens = F.transform("__s", lambda x: F.length(x))
     match_lens = F.transform("__m", lambda x: F.length(x))
     m = m.select(
-        key_col,
+        "user_id",
         "__evs",
         match_lens.alias("__ml"),
         seg_lens.alias("__sl"),
@@ -208,13 +197,13 @@ def user_motif_measures(
         lambda x, i: F.aggregate(F.slice("__sl", 1, i + 1), F.lit(0), add)
         + F.aggregate(F.slice("__ml", 1, i), F.lit(0), add),
     )
-    m = m.select(key_col, "__evs", "__ml", starts.alias("__st"))
+    m = m.select("user_id", "__evs", "__ml", starts.alias("__st"))
     out = m.select(
-        key_col,
+        "user_id",
         F.posexplode(F.arrays_zip("__st", "__ml")).alias("__i", "__z"),
         "__evs",
     ).select(
-        key_col,
+        "user_id",
         (F.col("__i") + 1).alias("match_no"),
         F.col("__z.__st").alias("start_idx"),
         F.col("__z.__ml").alias("match_len"),

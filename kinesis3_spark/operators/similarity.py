@@ -41,6 +41,7 @@ from ..sources import read_parquet
 LSH_SEED = 42
 LSH_TABLES = 4
 LSH_BITS = 8  # bits per table
+PQ_M = 8  # product-quantization subspaces
 
 
 def _topk_from_scores(cand: DataFrame, k: int) -> DataFrame:
@@ -56,8 +57,6 @@ def cosine_topk_bruteforce(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     pair_predicate=None,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -76,11 +75,11 @@ def cosine_topk_bruteforce(
     exact-scoring variant, so tie-break and cast discipline cannot drift
     between them (review r10-3rd #5)."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
         *[F.col(c).alias(f"q_{c}") for c in carry],
     )
     e = emb.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"),
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv"),
         *[F.col(c).alias(f"n_{c}") for c in carry],
     )
     pred = (
@@ -100,8 +99,6 @@ def cosine_topk_pandas(
     emb: DataFrame,
     queries_pdf: pd.DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k neighbors, Arrow/pandas tier with per-batch partial top-k.
 
@@ -110,16 +107,16 @@ def cosine_topk_pandas(
     batch x Q with one numpy matmul and emits only its local top-k per
     query; the final global rank merges batch winners.
     """
-    qids = queries_pdf[id_col].to_numpy()
-    Q = np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64)
+    qids = queries_pdf["vec_id"].to_numpy()
+    Q = np.stack(queries_pdf["embedding"].to_numpy()).astype(np.float64)
     Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
 
     def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy()
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            ids = pdf["vec_id"].to_numpy()
+            M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
             S = Mn @ Qn.T  # (batch, |Q|)
             out_q, out_n, out_c = [], [], []
@@ -135,7 +132,7 @@ def cosine_topk_pandas(
                 {"query_id": out_q, "neighbor_id": out_n, "cos": out_c}
             )
 
-    cand = emb.select(id_col, vec_col).mapInPandas(
+    cand = emb.select("vec_id", "embedding").mapInPandas(
         score_batches, schema="query_id long, neighbor_id long, cos double"
     )
     return _topk_from_scores(cand, k)
@@ -145,14 +142,12 @@ def cosine_topk_pandas(
 # Random-hyperplane LSH (scale path)
 # --------------------------------------------------------------------------
 
-def _planes(dim: int, seed: int = LSH_SEED) -> np.ndarray:
-    rng = np.random.RandomState(seed)
+def _planes(dim: int) -> np.ndarray:
+    rng = np.random.RandomState(LSH_SEED)
     return rng.standard_normal((LSH_TABLES * LSH_BITS, dim))
 
 
-def lsh_signatures(
-    emb: DataFrame, dim: int, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def lsh_signatures(emb: DataFrame, dim: int) -> DataFrame:
     """(id, table, sig): one `LSH_BITS`-bit sign-pattern signature per hash
     table, computed batch-at-a-time with a single numpy matmul."""
     P = _planes(dim)
@@ -161,8 +156,8 @@ def lsh_signatures(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy()
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            ids = pdf["vec_id"].to_numpy()
+            M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             bits = (M @ P.T) > 0  # (n, tables*bits)
             weights = 1 << np.arange(LSH_BITS)
             rows = {"id": np.repeat(ids, LSH_TABLES)}
@@ -173,7 +168,7 @@ def lsh_signatures(
             rows["sig"] = sigs.reshape(-1)
             yield pd.DataFrame(rows)
 
-    return emb.select(id_col, vec_col).mapInPandas(
+    return emb.select("vec_id", "embedding").mapInPandas(
         sign_batches, schema="id long, table int, sig long"
     )
 
@@ -183,8 +178,6 @@ def cosine_topk_lsh(
     queries: DataFrame,
     dim: int,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k: candidates = vectors sharing any table signature with the
     query (equi-join on (table, sig) — sub-linear, never all-pairs), then
@@ -192,8 +185,8 @@ def cosine_topk_lsh(
 
     Recall depends on the similarity regime: ~(1 - (1 - p^BITS)^TABLES) per
     neighbor with p = 1 - theta/pi. Tuned for cos >= ~0.8 neighborhoods."""
-    sig_e = lsh_signatures(emb, dim, id_col, vec_col)
-    sig_q = lsh_signatures(queries, dim, id_col, vec_col).withColumnRenamed(
+    sig_e = lsh_signatures(emb, dim)
+    sig_q = lsh_signatures(queries, dim).withColumnRenamed(
         "id", "query_id"
     )
     cand_ids = (
@@ -202,8 +195,8 @@ def cosine_topk_lsh(
         .select("query_id", F.col("id").alias("neighbor_id"))
         .distinct()
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    e = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+    e = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv"))
     scored = (
         cand_ids.join(F.broadcast(q), "query_id")
         .join(e, "neighbor_id")
@@ -218,27 +211,21 @@ def cosine_topk_lsh(
 # --------------------------------------------------------------------------
 
 def train_ivf_centroids(
-    emb: DataFrame,
-    n_centroids: int = 16,
-    iters: int = 5,
-    sample: int = 4096,
-    seed: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, n_centroids: int = 16, sample: int = 4096
 ) -> np.ndarray:
     """Spherical k-means centroids trained on a bounded driver-side sample
     (standard IVF practice — the index trains on a sample, assigns the full
-    corpus distributed). Deterministic: fixed seed, fixed iteration count.
+    corpus distributed). Deterministic: seed 0, 5 iterations.
     Returns L2-normalized (n_centroids, dim)."""
     # orderBy before limit: a bare limit takes arbitrary rows, which would
     # make the trained centroids (and thus cell assignment) run-dependent.
     # Bounded sort — at full scale use TABLESAMPLE with a seed instead.
-    pdf = emb.select(id_col, vec_col).orderBy(id_col).limit(sample).toPandas()
-    X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    pdf = emb.select("vec_id", "embedding").orderBy("vec_id").limit(sample).toPandas()
+    X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
     Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(0)
     C = Xn[rng.choice(len(Xn), size=min(n_centroids, len(Xn)), replace=False)]
-    for _ in range(iters):
+    for _ in range(5):
         assign = np.argmax(Xn @ C.T, axis=1)
         for j in range(len(C)):
             members = Xn[assign == j]
@@ -251,8 +238,6 @@ def train_ivf_centroids(
 def ivf_assign(
     emb: DataFrame,
     centroids: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     with_vec: bool = False,
     n_assign: int = 1,
 ) -> DataFrame:
@@ -272,33 +257,33 @@ def ivf_assign(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
             sims = Mn @ centroids.T
             m = min(n_assign, sims.shape[1])
             if m <= 1:
                 out = {
-                    "id": pdf[id_col].to_numpy(),
+                    "id": pdf["vec_id"].to_numpy(),
                     "cell": np.argmax(sims, axis=1).astype(np.int32),
                 }
                 if with_vec:
-                    out["v"] = pdf[vec_col]
+                    out["v"] = pdf["embedding"]
             else:
                 near = np.argsort(-sims, axis=1)[:, :m]
                 out = {
-                    "id": np.repeat(pdf[id_col].to_numpy(), m),
+                    "id": np.repeat(pdf["vec_id"].to_numpy(), m),
                     "cell": near.reshape(-1).astype(np.int32),
                 }
                 if with_vec:
                     out["v"] = (
-                        pdf[vec_col].repeat(m).reset_index(drop=True)
+                        pdf["embedding"].repeat(m).reset_index(drop=True)
                     )
             yield pd.DataFrame(out)
 
     vec_t = [f.dataType.simpleString() for f in emb.schema.fields
-             if f.name == vec_col][0]
+             if f.name == "embedding"][0]
     schema = "id long, cell int" + (f", v {vec_t}" if with_vec else "")
-    return emb.select(id_col, vec_col).mapInPandas(assign_batches, schema)
+    return emb.select("vec_id", "embedding").mapInPandas(assign_batches, schema)
 
 
 def semdedup_pairs(
@@ -306,11 +291,7 @@ def semdedup_pairs(
     threshold: float,
     n_centroids: int | None = None,
     n_assign: int = 1,
-    centroids: np.ndarray | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     target_cell: int = 256,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): embedding near-dup
@@ -342,26 +323,19 @@ def semdedup_pairs(
     ``max(16, ceil(N / target_cell))``: bounded ~target_cell-row cells,
     so within-cell work is O(N * m² * target_cell) — LINEAR in corpus
     size, the paper's operating point (Abbas et al. use 11k clusters
-    for LAION's 233M embeddings ≈ 21k per cell). N comes from ``n_rows``
-    when the caller already knows it, else one count() over the
-    embedding scan (column-pruned metadata pass — cheap next to the
-    assignment scan). The training sample widens with k (≥8 vectors per
+    for LAION's 233M embeddings ≈ 21k per cell). N comes from one
+    count() over the embedding scan (column-pruned metadata pass —
+    cheap next to the assignment scan). The training sample widens with k (≥8 vectors per
     centroid) so derived cells are actually trainable; at corpora where
     that sample outgrows the driver, swap the bounded-sort sample for
     distributed k-means — the derivation logic is unchanged."""
-    if centroids is None and n_centroids is None:
-        n = n_rows if n_rows is not None else emb.count()
-        n_centroids = max(16, -(-int(n) // target_cell))
-    C = (
-        centroids
-        if centroids is not None
-        else train_ivf_centroids(
-            emb, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col,
-            sample=max(4096, 8 * n_centroids),
-        )
+    if n_centroids is None:
+        n_centroids = max(16, -(-emb.count() // target_cell))
+    C = train_ivf_centroids(
+        emb, n_centroids=n_centroids, sample=max(4096, 8 * n_centroids)
     )
     tagged = ivf_assign(
-        emb, C, id_col, vec_col, with_vec=True, n_assign=n_assign
+        emb, C, with_vec=True, n_assign=n_assign
     )
     a = tagged.select(
         "cell", F.col("id").alias("id_a"), F.col("v").alias("va")
@@ -393,8 +367,6 @@ def cosine_topk_ivf(
     k: int = 5,
     nprobe: int = 4,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF ANN top-k: probe the `nprobe` nearest cells per query; exact
@@ -407,15 +379,15 @@ def cosine_topk_ivf(
     C = (
         centroids
         if centroids is not None
-        else train_ivf_centroids(emb, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col)
+        else train_ivf_centroids(emb, n_centroids=n_centroids)
     )
-    cells = ivf_assign(emb, C, id_col, vec_col)
-    qpdf = queries.select(id_col, vec_col).toPandas()
-    Q = np.stack(qpdf[vec_col].to_numpy()).astype(np.float64)
+    cells = ivf_assign(emb, C)
+    qpdf = queries.select("vec_id", "embedding").toPandas()
+    Q = np.stack(qpdf["embedding"].to_numpy()).astype(np.float64)
     Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
     probes = [
         (int(qid), int(cell))
-        for qid, row in zip(qpdf[id_col], np.argsort(-(Qn @ C.T), axis=1)[:, :nprobe])
+        for qid, row in zip(qpdf["vec_id"], np.argsort(-(Qn @ C.T), axis=1)[:, :nprobe])
         for cell in row
     ]
     spark = emb.sparkSession
@@ -425,8 +397,8 @@ def cosine_topk_ivf(
         .where(F.col("id") != F.col("query_id"))
         .select("query_id", F.col("id").alias("neighbor_id"))
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    e = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+    e = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv"))
     scored = (
         cand_ids.join(F.broadcast(q), "query_id")
         .join(e, "neighbor_id")
@@ -439,8 +411,6 @@ def cosine_topk_ivf(
 def embedding_neardup_pairs(
     emb: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """All pairs (id_a < id_b) with cosine >= threshold — the embedding
     analogue of near-dup text detection.
@@ -448,8 +418,8 @@ def embedding_neardup_pairs(
     Exhaustive formulation for oracle checking; the production path at scale
     is the same verify step fed by `lsh_signatures` candidates (pairs sharing
     a table signature), which is how FAISS-style dedup pipelines block."""
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("cos", cosine_similarity("va", "vb"))
@@ -467,44 +437,34 @@ def embedding_neardup_pairs(
 # codebook lookup tables without touching raw vectors.
 # ----------------------------------------------------------------------
 
-def fetch_pq_sample(
-    emb: DataFrame,
-    sample: int = 4096,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
+def fetch_pq_sample(emb: DataFrame) -> np.ndarray:
     """The bounded DETERMINISTIC training sample (orderBy before limit —
     the same contract as train_ivf_centroids; at full scale, seeded
     TABLESAMPLE). Fetch ONCE and share across codebook trainings — each
     fetch is a full scan+sort+collect job."""
-    pdf = emb.select(id_col, vec_col).orderBy(id_col).limit(sample).toPandas()
-    return np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    pdf = emb.select("vec_id", "embedding").orderBy("vec_id").limit(4096).toPandas()
+    return np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
 
 
 def train_pq_codebooks(
     emb: DataFrame,
-    m: int = 8,
     k: int = 64,
     iters: int = 8,
-    sample: int = 4096,
-    seed: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     X: np.ndarray | None = None,
 ) -> np.ndarray:
     """Per-subspace Lloyd k-means codebooks over the bounded sample
     (pass a prefetched `X` from fetch_pq_sample to train several
     codebooks — e.g. the K=1 baseline — without re-collecting).
-    Returns (m, k, dim/m) float64. Empty clusters keep their previous
+    Returns (PQ_M, k, dim/PQ_M) float64. Empty clusters keep their previous
     centroid (standard Lloyd degeneracy handling, deterministic)."""
     if X is None:
-        X = fetch_pq_sample(emb, sample=sample, id_col=id_col, vec_col=vec_col)
+        X = fetch_pq_sample(emb)
     n, dim = X.shape
-    assert dim % m == 0, (dim, m)
-    sub = dim // m
-    rng = np.random.RandomState(seed)
-    books = np.empty((m, min(k, n), sub))
-    for s in range(m):
+    assert dim % PQ_M == 0, (dim, PQ_M)
+    sub = dim // PQ_M
+    rng = np.random.RandomState(0)
+    books = np.empty((PQ_M, min(k, n), sub))
+    for s in range(PQ_M):
         Xs = X[:, s * sub : (s + 1) * sub]
         C = Xs[rng.choice(n, size=min(k, n), replace=False)]
         for _ in range(iters):
@@ -527,16 +487,7 @@ def train_pq_codebooks(
 
 
 def train_ivfpq(
-    emb: DataFrame,
-    n_centroids: int = 16,
-    m: int = 8,
-    k: int = 64,
-    iters: int = 8,
-    sample: int = 4096,
-    seed: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    X: np.ndarray | None = None,
+    emb: DataFrame, n_centroids: int = 16, k: int = 64, iters: int = 8
 ) -> tuple[np.ndarray, np.ndarray]:
     """IVF-PQ index training (the FAISS `IVFx,PQy` default composition,
     Jégou et al. 2011 §IV): coarse spherical-k-means centroids for cell
@@ -546,11 +497,10 @@ def train_ivfpq(
     them far more finely than raw vectors. Codebooks are SHARED across
     cells (standard: per-cell books would be n_centroids x the memory).
     One sample fetch feeds both trainings. Returns (C, books):
-    (n_centroids, dim) L2-normalized and (m, k, dim/m)."""
-    if X is None:
-        X = fetch_pq_sample(emb, sample=sample, id_col=id_col, vec_col=vec_col)
+    (n_centroids, dim) L2-normalized and (PQ_M, k, dim/PQ_M)."""
+    X = fetch_pq_sample(emb)
     Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(0)
     C = Xn[rng.choice(len(Xn), size=min(n_centroids, len(Xn)), replace=False)]
     for _ in range(iters):
         assign = np.argmax(Xn @ C.T, axis=1)
@@ -560,19 +510,13 @@ def train_ivfpq(
                 c = members.mean(axis=0)
                 C[j] = c / np.linalg.norm(c)
     residuals = Xn - C[np.argmax(Xn @ C.T, axis=1)]
-    books = train_pq_codebooks(
-        emb, m=m, k=k, iters=iters, seed=seed, id_col=id_col, vec_col=vec_col,
-        X=residuals,
-    )
-    return C, books
+    return C, train_pq_codebooks(emb, k=k, iters=iters, X=residuals)
 
 
 def ivfpq_encode(
     emb: DataFrame,
     centroids: np.ndarray,
     codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, cell, codes[m]): the compressed IVF-PQ index rows — cell
     assignment plus residual PQ codes, one vectorized pass per Arrow
@@ -586,7 +530,7 @@ def ivfpq_encode(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
             cell = np.argmax(Mn @ centroids.T, axis=1)
             R = Mn - centroids[cell]
@@ -601,13 +545,13 @@ def ivfpq_encode(
                 codes[:, s] = d2.argmin(axis=1)
             yield pd.DataFrame(
                 {
-                    "id": pdf[id_col].to_numpy(),
+                    "id": pdf["vec_id"].to_numpy(),
                     "cell": cell.astype(np.int32),
                     "codes": list(codes),
                 }
             )
 
-    return emb.select(id_col, vec_col).mapInPandas(
+    return emb.select("vec_id", "embedding").mapInPandas(
         encode_batches, schema="id long, cell int, codes array<int>"
     )
 
@@ -615,11 +559,8 @@ def ivfpq_encode(
 def ivfpq_adc_scores(
     emb: DataFrame,
     queries: DataFrame,
+    index: tuple[np.ndarray, np.ndarray],
     nprobe: int = 4,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    index: tuple[np.ndarray, np.ndarray] | None = None,
     enc: DataFrame | None = None,
 ) -> DataFrame:
     """The ADC-scored candidate relation `(query_id, neighbor_id, cos)`
@@ -629,17 +570,15 @@ def ivfpq_adc_scores(
     compute the cell-pruned scan + Arrow ADC pass ONCE, persist it, and
     pay only the bounded top-k windows per consumer (guide §2.3: Spark
     re-plans a non-materialized subtree under every alias — the r14
-    alias-subtree lesson)."""
-    C, books = index if index is not None else train_ivfpq(
-        emb, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
-    )
+    alias-subtree lesson). `index` is the trained (C, books) pair."""
+    C, books = index
     if enc is None:
-        enc = ivfpq_encode(emb, C, books, id_col, vec_col)
+        enc = ivfpq_encode(emb, C, books)
     m, kcode, sub = books.shape
 
-    qpdf = queries.select(id_col, vec_col).toPandas()
-    qids = qpdf[id_col].to_numpy()
-    Q = np.stack(qpdf[vec_col].to_numpy()).astype(np.float64)
+    qpdf = queries.select("vec_id", "embedding").toPandas()
+    qids = qpdf["vec_id"].to_numpy()
+    Q = np.stack(qpdf["embedding"].to_numpy()).astype(np.float64)
     Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
     QC = Qn @ C.T  # (|Q|, n_centroids)
     # LUT[i, s, j] = q_i's subvector s dot codeword j of book s
@@ -695,12 +634,9 @@ def ivfpq_adc_scores(
 def cosine_topk_ivfpq(
     emb: DataFrame,
     queries: DataFrame,
+    index: tuple[np.ndarray, np.ndarray],
     k: int = 5,
     nprobe: int = 4,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    index: tuple[np.ndarray, np.ndarray] | None = None,
     enc: DataFrame | None = None,
     scores: DataFrame | None = None,
 ) -> DataFrame:
@@ -714,27 +650,21 @@ def cosine_topk_ivfpq(
     matrix; scoring a candidate is m table lookups + adds over the 1+m
     byte index row. This is the full production ANN shape: compressed
     index scan, cell-pruned candidates, no raw-vector I/O on the probe
-    path. Pass `index`/`enc` to reuse a trained index and its encoded
-    corpus across queries; pass `scores` (from `ivfpq_adc_scores`) to
+    path. `index` is the trained (C, books) pair; pass `enc` to reuse its
+    encoded corpus across queries; pass `scores` (from `ivfpq_adc_scores`) to
     reuse an already-computed ADC pass and pay only the top-k window."""
     if scores is None:
-        scores = ivfpq_adc_scores(
-            emb, queries, nprobe=nprobe, n_centroids=n_centroids,
-            id_col=id_col, vec_col=vec_col, index=index, enc=enc,
-        )
+        scores = ivfpq_adc_scores(emb, queries, index, nprobe=nprobe, enc=enc)
     return _topk_from_scores(scores, k)
 
 
 def cosine_topk_ivfpq_rerank(
     emb: DataFrame,
     queries: DataFrame,
+    index: tuple[np.ndarray, np.ndarray],
     k: int = 5,
     fetch_r: int = 64,
     nprobe: int = 4,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    index: tuple[np.ndarray, np.ndarray] | None = None,
     enc: DataFrame | None = None,
     pair_predicate=None,
     carry: tuple[str, ...] = (),
@@ -770,15 +700,14 @@ def cosine_topk_ivfpq_rerank(
     why it composes with over-probe. Hard-negative mining at scale is
     exactly this with ``n_label != q_label``."""
     cand = cosine_topk_ivfpq(
-        emb, queries, k=fetch_r, nprobe=nprobe, n_centroids=n_centroids,
-        id_col=id_col, vec_col=vec_col, index=index, enc=enc, scores=scores,
+        emb, queries, index, k=fetch_r, nprobe=nprobe, enc=enc, scores=scores
     ).select("query_id", "neighbor_id")
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
         *[F.col(c).alias(f"q_{c}") for c in carry],
     )
     e = emb.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"),
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv"),
         *[F.col(c).alias(f"n_{c}") for c in carry],
     )
     scored = (
@@ -875,11 +804,9 @@ def knn_graph_ivfpq(
     emb: DataFrame,
     index: tuple[np.ndarray, np.ndarray],
     enc: DataFrame,
-    k: int = 5,
+    k: int,
     nprobe: int = 4,
     rerank_mult: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """OFFLINE kNN-graph construction over an IVF-PQ index: every corpus
     vector is a query; returns the (query_id, rank, neighbor_id) edge
@@ -939,8 +866,8 @@ def knn_graph_ivfpq(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy()
-            Q = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            ids = pdf["vec_id"].to_numpy()
+            Q = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             norms = np.linalg.norm(Q, axis=1, keepdims=True)
             norms[norms == 0] = 1.0
             Qn = Q / norms
@@ -954,7 +881,7 @@ def knn_graph_ivfpq(
                 }
             )
 
-    probes = emb.select(id_col, vec_col).mapInPandas(
+    probes = emb.select("vec_id", "embedding").mapInPandas(
         probe_batches, schema="query_id long, cell int, qn array<double>"
     )
     scored = (
@@ -979,9 +906,9 @@ def knn_graph_ivfpq(
     shortlist = _topk_from_scores(scored, rerank_mult * k).select(
         "query_id", "neighbor_id"
     )
-    qv = emb.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+    qv = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
     nv = emb.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv")
     )
     exact = (
         shortlist.join(nv, "neighbor_id")
@@ -994,8 +921,6 @@ def knn_graph_ivfpq(
 def pq_encode(
     emb: DataFrame,
     codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     baseline: np.ndarray | None = None,
 ) -> DataFrame:
     """(id, codes[m], err_micro): nearest-codeword assignment per subspace
@@ -1038,10 +963,10 @@ def pq_encode(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             codes, err = _err_codes(X, codebooks)
             out = {
-                "id": pdf[id_col].to_numpy(),
+                "id": pdf["vec_id"].to_numpy(),
                 "codes": list(codes),
                 "err_micro": err,
             }
@@ -1052,35 +977,28 @@ def pq_encode(
     schema = "id long, codes array<int>, err_micro long"
     if baseline is not None:
         schema += ", base_err_micro long"
-    return emb.select(id_col, vec_col).mapInPandas(encode_batches, schema=schema)
+    return emb.select("vec_id", "embedding").mapInPandas(encode_batches, schema=schema)
 
 
 # --------------------------------------------------------------------------
 # Johnson-Lindenstrauss random projection (Achlioptas 2003 sign matrix).
 # --------------------------------------------------------------------------
 
-def jl_sign(k: int, j: int, salt: str = "rp") -> float:
+def jl_sign(k: int, j: int) -> float:
     """Deterministic +-1 projection-matrix entry R[k][j] from md5 parity —
     engine-portable model config (any SQL engine, and any future run,
     rebuilds the identical matrix; no RNG state to ship)."""
     import hashlib
 
-    return 1.0 if int(hashlib.md5(f"{salt}:{k}:{j}".encode()).hexdigest(), 16) & 1 else -1.0
+    return 1.0 if int(hashlib.md5(f"rp:{k}:{j}".encode()).hexdigest(), 16) & 1 else -1.0
 
 
-def jl_signs(out_dim: int, in_dim: int, salt: str = "rp") -> list[list[float]]:
-    return [[jl_sign(k, j, salt) for j in range(in_dim)] for k in range(out_dim)]
+def jl_signs(out_dim: int, in_dim: int) -> list[list[float]]:
+    return [[jl_sign(k, j) for j in range(in_dim)] for k in range(out_dim)]
 
 
-def random_project(
-    df: DataFrame,
-    in_dim: int,
-    out_dim: int,
-    vec_col: str = "embedding",
-    out_col: str = "proj",
-    salt: str = "rp",
-) -> DataFrame:
-    """Append an `out_dim`-element array<double> column:
+def random_project(df: DataFrame, in_dim: int, out_dim: int) -> DataFrame:
+    """Append an `out_dim`-element array<double> column `proj` of `embedding`:
     proj[k] = (1/sqrt(out_dim)) * sum_j v[j] * R[k][j], R the +-1
     Achlioptas sign matrix (sparse-JL variant with density 1: E preserves
     inner products, JL distortion ~ sqrt(2/out_dim)).
@@ -1100,9 +1018,9 @@ def random_project(
     vector never yields for ALL terms).
     """
     scale = 1.0 / (out_dim ** 0.5)
-    signs = jl_signs(out_dim, in_dim, salt)
+    signs = jl_signs(out_dim, in_dim)
     R = F.array(*[F.array(*[F.lit(s) for s in row]) for row in signs])
-    vd = F.col(vec_col).cast("array<double>")
+    vd = F.col("embedding").cast("array<double>")
     proj = F.transform(
         R,
         lambda row: F.aggregate(
@@ -1112,7 +1030,7 @@ def random_project(
         )
         * F.lit(scale),
     )
-    return df.withColumn(out_col, proj)
+    return df.withColumn("proj", proj)
 
 
 def squared_l2(a, b):
@@ -1138,9 +1056,7 @@ def squared_l2(a, b):
 # --------------------------------------------------------------------------
 
 
-def partial_gram(
-    emb: DataFrame, vec_col: str = "embedding"
-) -> DataFrame:
+def partial_gram(emb: DataFrame) -> DataFrame:
     """Per-Arrow-batch second-moment partials: one row (n, s[d], g[d*d])
     per batch — numpy X.T @ X per batch, nothing quadratic in rows."""
 
@@ -1148,7 +1064,7 @@ def partial_gram(
         for pdf in it:
             if not len(pdf):
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             yield pd.DataFrame(
                 {
                     "n": [len(X)],
@@ -1157,20 +1073,18 @@ def partial_gram(
                 }
             )
 
-    return emb.select(vec_col).mapInPandas(
+    return emb.select("embedding").mapInPandas(
         batches, "n bigint, s array<double>, g array<double>"
     )
 
 
-def train_pca(
-    emb: DataFrame, k: int = 8, vec_col: str = "embedding"
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def train_pca(emb: DataFrame, k: int = 8) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(mean[d], components[k,d], eigvals[k]) of the population covariance,
     components row-orthonormal, eigenvalues descending. The driver holds
     d^2+d+1 doubles (the partials fold DISTRIBUTED via a pos-keyed
     aggregate — the collect is bounded by the dimension, not the corpus
     or the batch count)."""
-    parts = partial_gram(emb, vec_col)
+    parts = partial_gram(emb)
     flat = parts.select(
         F.posexplode(
             F.concat(
@@ -1192,24 +1106,16 @@ def train_pca(
     return mean, evecs[:, order].T.copy(), evals[order]
 
 
-def matrix_project(
-    df: DataFrame,
-    M: np.ndarray,
-    vec_col: str = "embedding",
-    out_col: str = "proj",
-    center: np.ndarray | None = None,
-) -> DataFrame:
-    """Append proj[k] = sum_j (v[j] - center[j]) * M[k][j] — the
+def matrix_project(df: DataFrame, M: np.ndarray, center: np.ndarray) -> DataFrame:
+    """Append proj[k] = sum_j (v[j] - center[j]) * M[k][j] of `embedding` — the
     random_project fold generalized to an arbitrary double matrix (same
     literal-array + transform/zip_with/aggregate shape, same left-fold
     cross-engine determinism, scan-stage only)."""
     rows = F.array(
         *[F.array(*[F.lit(float(x)) for x in row]) for row in M]
     )
-    vd = F.col(vec_col).cast("array<double>")
-    if center is not None:
-        c = F.array(*[F.lit(float(x)) for x in center])
-        vd = F.zip_with(vd, c, lambda x, m: x - m)
+    c = F.array(*[F.lit(float(x)) for x in center])
+    vd = F.zip_with(F.col("embedding").cast("array<double>"), c, lambda x, m: x - m)
     proj = F.transform(
         rows,
         lambda row: F.aggregate(
@@ -1218,4 +1124,4 @@ def matrix_project(
             lambda acc, t: acc + t,
         ),
     )
-    return df.withColumn(out_col, proj)
+    return df.withColumn("proj", proj)

@@ -2,9 +2,9 @@
 
 At 100 TB a single hot key (one viral URL, one bot user) turns a
 groupBy-shuffle into a one-reducer straggler. The standard fix is salting:
-shuffle on (key, salt) so the hot key's rows spread over `buckets`
-reducers, partially aggregate, then re-aggregate on the bare key — the
-second shuffle carries only |keys| x buckets rows. AQE's skew-join handling
+shuffle on (key, salt) so the hot key's rows spread over 16 salt
+buckets, partially aggregate, then re-aggregate on the bare key — the
+second shuffle carries only |keys| x 16 rows. AQE's skew-join handling
 covers JOINS automatically; aggregation salting still has to be expressed
 in the plan, which is what this module does.
 
@@ -23,7 +23,6 @@ def salted_agg(
     df: DataFrame,
     keys: list[str],
     aggs: dict[str, tuple[str, str]],
-    buckets: int = 16,
 ) -> DataFrame:
     """Two-phase salted aggregation.
 
@@ -32,7 +31,7 @@ def salted_agg(
     and finalized as a single division (deterministic: one div at the end,
     not an average of averages).
     """
-    salt = (F.rand(seed=0) * buckets).cast("int")
+    salt = (F.rand(seed=0) * 16).cast("int")
     partial_exprs: list[Column] = []
     final_exprs: list[Column] = []
     for out, (col, fn) in aggs.items():

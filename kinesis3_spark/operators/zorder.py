@@ -8,7 +8,7 @@ dimensions, so parquet footer stats prune files for any 2-D box predicate —
 the same trick Delta/Iceberg `OPTIMIZE ZORDER BY` applies, built here from
 plain Column expressions:
 
-  1. min-max scale each column to `bits` integer buckets (bounds come from
+  1. min-max scale each column to Z_BITS-bit integer buckets (bounds come from
      one tiny agg — 2 values per column);
   2. interleave the bucket bits into a single long (x at even positions, y
      at odd) with shift/and/or expressions — whole-stage codegen, no UDF;
@@ -29,22 +29,24 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+Z_BITS = 16
 
-def _bucket(col: Column, lo: float, hi: float, bits: int) -> Column:
-    """Min-max scale to [0, 2^bits - 1] integer buckets (clamped)."""
+
+def _bucket(col: Column, lo: float, hi: float) -> Column:
+    """Min-max scale to [0, 2^Z_BITS - 1] integer buckets (clamped)."""
     span = (hi - lo) or 1.0
     scaled = ((col.cast("double") - F.lit(float(lo))) / F.lit(span)) * F.lit(
-        float((1 << bits) - 1)
+        float((1 << Z_BITS) - 1)
     )
     return F.least(
-        F.lit((1 << bits) - 1), F.greatest(F.lit(0), F.round(scaled).cast("long"))
+        F.lit((1 << Z_BITS) - 1), F.greatest(F.lit(0), F.round(scaled).cast("long"))
     )
 
 
-def z_value(x: Column, y: Column, bits: int = 16) -> Column:
-    """Interleave the low `bits` of two bucket columns (x even, y odd)."""
+def z_value(x: Column, y: Column) -> Column:
+    """Interleave the low Z_BITS bits of two bucket columns (x even, y odd)."""
     parts = []
-    for i in range(bits):
+    for i in range(Z_BITS):
         parts.append(F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i))
         parts.append(F.shiftleft(F.shiftright(y, i).bitwiseAND(F.lit(1)), 2 * i + 1))
     return reduce(lambda a, b: a.bitwiseOR(b), parts)
@@ -56,7 +58,6 @@ def write_zordered(
     col_x: str,
     col_y: str,
     n_files: int = 16,
-    bits: int = 16,
 ) -> None:
     """Rewrite df into n_files parquet files clustered on the Morton curve
     of (col_x, col_y). Bounds via one 4-value agg; NULLs sort to bucket 0."""
@@ -64,9 +65,8 @@ def write_zordered(
         F.min(col_x), F.max(col_x), F.min(col_y), F.max(col_y)
     ).first()
     z = z_value(
-        _bucket(F.coalesce(F.col(col_x), F.lit(lo_x)), lo_x, hi_x, bits),
-        _bucket(F.coalesce(F.col(col_y), F.lit(lo_y)), lo_y, hi_y, bits),
-        bits,
+        _bucket(F.coalesce(F.col(col_x), F.lit(lo_x)), lo_x, hi_x),
+        _bucket(F.coalesce(F.col(col_y), F.lit(lo_y)), lo_y, hi_y),
     )
     (
         df.withColumn("__z", z)

@@ -129,8 +129,7 @@ def project_events(
     )
 
 
-def ingest(df: DataFrame, raw_col: str = "raw", sid_col: str | None = None) -> DataFrame:
-    """raw records → events rows, one declarative plan."""
-    return project_events(
-        parse_raw_records(df, raw_col), sid_col=sid_col, raw_col=raw_col
-    )
+def ingest(df: DataFrame, sid_col: str | None = None) -> DataFrame:
+    """raw records (JSON strings in column `raw`) → events rows, one
+    declarative plan."""
+    return project_events(parse_raw_records(df), sid_col=sid_col)

@@ -238,15 +238,10 @@ PSI_SMOOTH = 0.5  # add-k on bucket counts: a source missing a top token
 _DQ_TOKS = "string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$', '', 'g'), '\\s+')"
 
 
-def token_drift_psi(
-    docs: DataFrame,
-    ref_source: str = PSI_REF_SOURCE,
-    top_k: int = PSI_TOP_K,
-    cache_key: str | None = None,
-) -> DataFrame:
+def token_drift_psi(docs: DataFrame, cache_key: str | None = None) -> DataFrame:
     """Per-source Population Stability Index of the token distribution
-    against `ref_source`: PSI = sum_bucket (p_s - p_ref) * ln(p_s / p_ref)
-    over the top-K reference tokens + '(other)', add-k smoothed.
+    against PSI_REF_SOURCE: PSI = sum_bucket (p_s - p_ref) * ln(p_s / p_ref)
+    over the top-K (PSI_TOP_K) reference tokens + '(other)', add-k smoothed.
     PSI(ref) = 0 by construction — a free self-check row.
 
     Plan: TakeOrderedAndProject picks the K bin tokens (never a full
@@ -258,7 +253,7 @@ def token_drift_psi(
     the corpus.
 
     With `cache_key` (the path `docs` was read from) the bucket table is
-    memoized per (cache_key, ref_source, top_k), so repeated invocations
+    memoized per cache_key, so repeated invocations
     reuse ONE persisted handle instead of stacking a new one per call
     (r12 advice fix); it is rebuilt when that path changes on disk, and
     `docs` is not read on a hit."""
@@ -266,16 +261,16 @@ def token_drift_psi(
 
     toks = docs.select("source", F.explode(T.tokenize("text")).alias("tok"))
     ref_top = (
-        toks.where(F.col("source") == ref_source)
+        toks.where(F.col("source") == PSI_REF_SOURCE)
         .groupBy("tok")
         .agg(F.count("*").alias("c"))
         .orderBy(F.col("c").desc(), "tok")
-        .limit(top_k)
+        .limit(PSI_TOP_K)
         .select("tok", F.lit(1).alias("is_top"))
     )
     bucket = F.when(F.col("is_top") == 1, F.col("tok")).otherwise(F.lit("(other)"))
 
-    def build(_scratch, *_params):
+    def build(_scratch):
         return (
             toks.join(F.broadcast(ref_top), "tok", "left")
             .groupBy("source", bucket.alias("bucket"))
@@ -286,19 +281,19 @@ def token_drift_psi(
     if cache_key is None:
         counts = build(None)
     else:
-        counts = tmpdirs.memo("psi_buckets", cache_key, build, ref_source, top_k)
+        counts = tmpdirs.memo("psi_buckets", cache_key, build)
     totals = counts.groupBy("source").agg(F.sum("c").alias("n_tokens"))
     buckets = counts.select("bucket").distinct()
     ref = (
-        counts.where(F.col("source") == ref_source)
+        counts.where(F.col("source") == PSI_REF_SOURCE)
         .select("bucket", F.col("c").alias("c_ref"))
     )
     ref_total = (
-        totals.where(F.col("source") == ref_source)
+        totals.where(F.col("source") == PSI_REF_SOURCE)
         .select(F.col("n_tokens").alias("n_ref"))
     )
     k = F.lit(PSI_SMOOTH)
-    nb = F.lit(top_k + 1)
+    nb = F.lit(PSI_TOP_K + 1)
     grid = totals.crossJoin(F.broadcast(buckets))
     joined = (
         grid.join(counts, ["source", "bucket"], "left")

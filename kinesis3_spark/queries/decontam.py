@@ -63,11 +63,9 @@ def doc_stats(spark: SparkSession, sf_dir: str) -> tuple[int, float]:
     )
 
 
-def decontaminate_grams(
-    d: DataFrame, n: int = 13, bench_source: str = "src0"
-) -> DataFrame:
-    """Flag corpus documents sharing any n-gram with the benchmark slice
-    (`bench_source` stands in for the eval set). The benchmark gram set is
+def decontaminate_grams(d: DataFrame) -> DataFrame:
+    """Flag corpus documents sharing any 13-gram with the benchmark slice
+    (source src0 stands in for the eval set). The benchmark gram set is
     deduped then broadcast when small enough; the corpus side is a
     left-semi join, so a document short-circuits on its first hit and
     nothing wider than (doc_id, gram_hash) ever shuffles.
@@ -81,18 +79,18 @@ def decontaminate_grams(
     §wrong-4), judged on measured bytes rather than a row-count proxy."""
     # Join on the 64-bit hash of each gram, not the ~90-char gram string:
     # the broadcast set and the probe keys shrink ~10x and the hash join
-    # compares longs. ngram_hashes hashes the n tokens directly, so the
+    # compares longs. ngram_hashes hashes the 13 tokens directly, so the
     # gram string is never even built. A hash collision could flag a clean
     # doc, but at P(collision) ≈ n²/2⁶⁵ it is negligible even at corpus
     # scale (the minhash tier makes the same trade, dedup.py).
     grams = d.select(
         "doc_id",
         "source",
-        F.explode(ngram_hashes(F.col("text"), n)).alias("gh"),
+        F.explode(ngram_hashes(F.col("text"), 13)).alias("gh"),
     )
-    bench = grams.where(F.col("source") == bench_source).select("gh").distinct()
+    bench = grams.where(F.col("source") == "src0").select("gh").distinct()
     return (
-        grams.where(F.col("source") != bench_source)
+        grams.where(F.col("source") != "src0")
         .join(bench, "gh", "left_semi")
         .select("doc_id", "source")
         .distinct()
@@ -120,7 +118,7 @@ def decontaminate_grams(
     """,
 )
 def llm_decontaminate_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return decontaminate_grams(_t(spark, sf_dir, "documents"), 13)
+    return decontaminate_grams(_t(spark, sf_dir, "documents"))
 
 
 @query(

@@ -14,6 +14,8 @@ Oracle-parity notes:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -124,7 +126,7 @@ def dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _grams_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(_scratch):
         docs = _t(spark, sf_dir, "documents")
-        return D._gram_sets(docs, "text", "doc_id", D.SHINGLE_N).persist()
+        return D._gram_sets(docs).persist()
 
     return tmpdirs.memo("gram_index", sf_dir, build)
 
@@ -136,8 +138,7 @@ def _grams_for(spark: SparkSession, sf_dir: str) -> DataFrame:
 # minhash_lsh_pairs docstring; measured 3.1 s vs 0.4 s at sf0.1).
 def _sigs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(_scratch):
-        doc = _t(spark, sf_dir, "documents")
-        return D.minhash_signatures(doc, grams=_grams_for(spark, sf_dir)).persist()
+        return D.minhash_signatures(_grams_for(spark, sf_dir)).persist()
 
     return tmpdirs.memo("sig_index", sf_dir, build)
 
@@ -183,7 +184,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the uncapped operator).
 @query("dedup_ngram_jaccard_capped", oracle=_JACCARD_ORACLE)
 def dedup_ngram_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return D.ngram_jaccard_pairs_capped(_t(spark, sf_dir, "documents"), df_cap=100)
+    return D.ngram_jaccard_pairs_capped(_t(spark, sf_dir, "documents"))
 
 
 @query("dedup_minhash_lsh_capped", oracle=_JACCARD_ORACLE)
@@ -229,17 +230,16 @@ def dedup_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = D.winnowing_fingerprints(_t(spark, sf_dir, "documents"), k=8, w=4)
+    out = D.winnowing_fingerprints(_t(spark, sf_dir, "documents"))
     return out.withColumnRenamed("id", "doc_id")
 
 
-_SIMHASH_BITS = 32
 _BIT_SUMS = ",\n             ".join(
     f"SUM(CASE WHEN (hv >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
-    for b in range(_SIMHASH_BITS)
+    for b in range(D.SIMHASH_BITS)
 )
 _BIT_ASSEMBLE = " + ".join(
-    f"CASE WHEN s{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(_SIMHASH_BITS)
+    f"CASE WHEN s{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(D.SIMHASH_BITS)
 )
 
 
@@ -265,7 +265,7 @@ _BIT_ASSEMBLE = " + ".join(
     """,
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = D.simhash(_t(spark, sf_dir, "documents"), bits=_SIMHASH_BITS)
+    sig = D.simhash(_t(spark, sf_dir, "documents"))
     from pyspark.sql.window import Window
 
     return sig.select(
@@ -365,24 +365,22 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bucketed_fp_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the src0 fingerprint history as a parquet table BUCKETED
-    on `fp` (sinks/bucketed.py), once per sf_dir — the stored shape the
-    incremental-dedup docstring promises: hashed once at write time, so the
-    daily anti join needs NO Exchange on the history side, ever. Returns
-    the catalog table name."""
-    import hashlib
-
+    on `fp` (sinks/bucketed.py), once per identity of documents.parquet —
+    the stored shape the incremental-dedup docstring promises: hashed once
+    at write time, so the daily anti join needs NO Exchange on the history
+    side, ever. Returns the catalog table name."""
     from ..sinks.bucketed import write_bucketed
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    name = f"bk_doc_fps_{tag}"
-    if not spark.catalog.tableExists(name):
+    def build(scratch):
+        name = os.path.basename(scratch)
         d = _t(spark, sf_dir, "documents")
         fps = d.where(F.col("source") == "src0").select(
             D.fingerprint("text").alias("fp")
         )
-        base = tmpdirs.mkdtemp(prefix=f"k3s_fp_index_{tag}_")
-        write_bucketed(fps, name, ["fp"], 8, f"{base}/fps")
-    return name
+        write_bucketed(fps, name, ["fp"], 8, f"{scratch}/fps")
+        return name
+
+    return tmpdirs.memo("fp_index", os.path.join(sf_dir, "documents.parquet"), build)
 
 
 @query("dedup_incremental_bucketed", oracle=_INCR_ORACLE)

@@ -531,7 +531,7 @@ def llm_bpe_merge_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_train(
-    spark: SparkSession, sf_dir: str, rounds: int = _BPE_ROUNDS
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[tuple[int, str, int]]]:
     """The shared training loop: returns (final vocab DataFrame with
     columns (w, enc, f) — every merge applied to `enc` — and the merge
@@ -549,7 +549,7 @@ def _bpe_train(
     )
     merges: list[tuple[int, str, int]] = []
     cur = vocab
-    for r in range(1, rounds + 1):
+    for r in range(1, _BPE_ROUNDS + 1):
         pairs = (
             cur.select(
                 F.split(

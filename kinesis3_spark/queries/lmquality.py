@@ -78,10 +78,11 @@ def _bigram_pairs(col) -> F.Column:
     return T._let(T.tokenize(col), build)
 
 
-def train_bigram_lm(docs: DataFrame, train_source: str = LM_TRAIN_SOURCE):
+def train_bigram_lm(docs: DataFrame):
     """(bigram_counts, unigram_counts, vocab_size_df) from the trusted
-    slice. vocab_size_df is a 1-row aggregate (joined back by broadcast)."""
-    train = docs.where(F.col("source") == train_source)
+    slice LM_TRAIN_SOURCE. vocab_size_df is a 1-row aggregate (joined back
+    by broadcast)."""
+    train = docs.where(F.col("source") == LM_TRAIN_SOURCE)
     train_pairs = train.select(F.explode(_bigram_pairs(F.col("text"))).alias("bg"))
     bg_counts = train_pairs.groupBy(
         F.col("bg.prev").alias("prev"), F.col("bg.w").alias("w")
@@ -157,15 +158,15 @@ def backoff_model_for(spark: SparkSession, sf_dir: str):
     return tg, bg, ug, totals
 
 
-def score_perplexity(docs: DataFrame, train_source: str = LM_TRAIN_SOURCE) -> DataFrame:
+def score_perplexity(docs: DataFrame) -> DataFrame:
     """Per-document average negative log-likelihood (nats/bigram) under the
-    add-k bigram LM trained on `train_source`, for every doc OUTSIDE the
+    add-k bigram LM trained on LM_TRAIN_SOURCE, for every doc OUTSIDE the
     training slice. avg NLL is monotone with perplexity (ppl = exp(nll));
     the exp is left to the caller so the filter threshold stays in
     ulp-stable log space."""
-    bg_counts, ug_counts, vocab = train_bigram_lm(docs, train_source)
+    bg_counts, ug_counts, vocab = train_bigram_lm(docs)
     return score_docs_with_lm(
-        docs.where(F.col("source") != train_source), bg_counts, ug_counts, vocab
+        docs.where(F.col("source") != LM_TRAIN_SOURCE), bg_counts, ug_counts, vocab
     )
 
 
@@ -277,10 +278,9 @@ def _trigram_triples(col) -> F.Column:
     return T._let(T.tokenize(col), build)
 
 
-def train_backoff_lm(
-    docs: DataFrame, train_source: str = LM_TRAIN_SOURCE, bg_ug=None
-):
-    """(tg_counts, bg_counts, ug_counts, totals) from the trusted slice.
+def train_backoff_lm(docs: DataFrame, bg_ug=None):
+    """(tg_counts, bg_counts, ug_counts, totals) from the trusted slice
+    LM_TRAIN_SOURCE.
     totals is a 1-row (n_tokens, v) aggregate joined back by broadcast.
     The bi/unigram tables are train_bigram_lm's verbatim (one model
     definition across the bigram and trigram gates); pass ``bg_ug`` to
@@ -288,8 +288,8 @@ def train_backoff_lm(
     if bg_ug is not None:
         bg_counts, ug_counts = bg_ug
     else:
-        bg_counts, ug_counts, _vocab = train_bigram_lm(docs, train_source)
-    train = docs.where(F.col("source") == train_source)
+        bg_counts, ug_counts, _vocab = train_bigram_lm(docs)
+    train = docs.where(F.col("source") == LM_TRAIN_SOURCE)
     tg_counts = (
         train.select(F.explode(_trigram_triples(F.col("text"))).alias("tg"))
         .groupBy(
@@ -373,15 +373,13 @@ def score_docs_with_backoff_lm(
     )
 
 
-def score_perplexity_trigram(
-    docs: DataFrame, train_source: str = LM_TRAIN_SOURCE
-) -> DataFrame:
+def score_perplexity_trigram(docs: DataFrame) -> DataFrame:
     """Per-document avg negative log-score (nats/trigram) under the
-    stupid-backoff trigram LM trained on `train_source`, for every doc
+    stupid-backoff trigram LM trained on LM_TRAIN_SOURCE, for every doc
     outside the training slice."""
-    tg, bg, ug, totals = train_backoff_lm(docs, train_source)
+    tg, bg, ug, totals = train_backoff_lm(docs)
     return score_docs_with_backoff_lm(
-        docs.where(F.col("source") != train_source), tg, bg, ug, totals
+        docs.where(F.col("source") != LM_TRAIN_SOURCE), tg, bg, ug, totals
     )
 
 
@@ -700,17 +698,16 @@ _QC_AUC_FLOOR_X100 = 65  # binned AUC >= 0.65; measured 0.82 at sf0.01
 _QC_BINS = 1000
 
 
-def binned_auc(scored: DataFrame, label_col: str, score_col: str,
-               bins: int = _QC_BINS):
+def binned_auc(scored: DataFrame, label_col: str, score_col: str):
     """AUC from a score HISTOGRAM (the production shape at corpus scale —
     exact rank-AUC needs a global sort; binning needs one map-side-
-    combined rollup of |bins| rows): AUC = sum over ascending bins of
+    combined rollup of _QC_BINS rows): AUC = sum over ascending bins of
     pos_in * (neg_below + neg_in/2) / (P*N), ties-within-bin handled by
     the half term. Returns a 1-row DataFrame (auc double)."""
     from pyspark.sql.window import Window
 
     b = F.least(
-        F.floor(F.col(score_col) * bins).cast("int"), F.lit(bins - 1)
+        F.floor(F.col(score_col) * _QC_BINS).cast("int"), F.lit(_QC_BINS - 1)
     )
     hist = (
         scored.groupBy(b.alias("bin"))
@@ -719,7 +716,7 @@ def binned_auc(scored: DataFrame, label_col: str, score_col: str,
             F.sum(1 - F.col(label_col)).alias("neg_in"),
         )
     )
-    # scale-ok: input is the |bins|-row histogram rollup, never the corpus
+    # scale-ok: input is the _QC_BINS-row histogram rollup, never the corpus
     w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1)
     cum = hist.select(
         "pos_in",

@@ -150,7 +150,7 @@ def video_frame_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     shapes, explode fan-out, Arrow boundaries — is the production
     plumbing."""
     vids = _synthesize_videos(_t(spark, sf_dir, "documents"))
-    sampled = M.sample_frames(vids, every_n=2)
+    sampled = M.sample_frames(vids)
 
     def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -17,7 +17,8 @@ deployment leans on:
 
 from __future__ import annotations
 
-import hashlib
+import os
+
 from .. import tmpdirs
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,30 +33,23 @@ _BUCKETS = 8
 
 
 def bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """customer+orders bucketed by custkey; materialized once per sf_dir
-    (catalog-checked so a fresh session re-materializes into the same
-    layout rather than failing on a stale cache)."""
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    cust_name, ord_name = f"bk_customer_{tag}", f"bk_orders_{tag}"
-    if not (
-        spark.catalog.tableExists(cust_name) and spark.catalog.tableExists(ord_name)
-    ):
-        base = tmpdirs.mkdtemp(prefix=f"k3s_bucketed_{tag}_")
-        write_bucketed(
-            load_table(spark, sf_dir, "customer"),
-            cust_name,
-            ["c_custkey"],
-            _BUCKETS,
-            f"{base}/customer",
-        )
-        write_bucketed(
-            load_table(spark, sf_dir, "orders"),
-            ord_name,
-            ["o_custkey"],
-            _BUCKETS,
-            f"{base}/orders",
-        )
-    return cust_name, ord_name
+    """customer+orders bucketed by custkey: the catalog names of one
+    memoized build per identity of sf_dir, so a rewritten table is
+    bucketed again under new names."""
+
+    def build(scratch):
+        tag = os.path.basename(scratch)
+        for table, key in (("customer", "c_custkey"), ("orders", "o_custkey")):
+            write_bucketed(
+                load_table(spark, sf_dir, table),
+                f"{tag}_{table}",
+                [key],
+                _BUCKETS,
+                f"{scratch}/{table}",
+            )
+        return f"{tag}_customer", f"{tag}_orders"
+
+    return tmpdirs.memo("bucketed_pair", sf_dir, build)
 
 
 @query(

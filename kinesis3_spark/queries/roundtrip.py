@@ -887,7 +887,6 @@ def _txn_upsert_table(spark: SparkSession, sf_dir: str) -> str:
             checkpoint=base + "/ck",
             key="user_id",
             order_col="__ord",
-            mode="replace",
         )
         await_or_raise(q)
         return table

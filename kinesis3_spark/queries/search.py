@@ -40,9 +40,8 @@ _QUERY_TERMS = ("window", "hash", "merge")
 
 
 def bm25_scores(d: DataFrame, terms, stats: tuple[int, float],
-                k1: float = _K1, b: float = _B,
                 toks_df: DataFrame | None = None) -> DataFrame:
-    """BM25 score of every document against a bag-of-words query.
+    """BM25 score (k1 = _K1, b = _B) of every document against a bag-of-words query.
     ``terms`` is a static tuple (isin filter in the scan stage) or a
     1-column ``term`` DataFrame (broadcast equi-join — the dynamic-query
     path pseudo-relevance feedback needs; both shapes keep the term
@@ -104,8 +103,8 @@ def bm25_scores(d: DataFrame, terms, stats: tuple[int, float],
         + (n_docs_col - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
     contrib = idf * (
-        F.col("tf") * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl_col))
+        F.col("tf") * (_K1 + 1.0)
+        / (F.col("tf") + _K1 * (1.0 - _B + _B * F.col("dl") / avgdl_col))
     )
     return (
         tf
@@ -437,20 +436,17 @@ def _es_rollup(cleaned: DataFrame) -> DataFrame:
 
 def bucketed_gram_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the src0 (canonical history) k-gram hash set as a
-    parquet table BUCKETED on `gh` (sinks/bucketed.py), once per sf_dir
-    — the stored shape incremental ExactSubstr rides: the history's
+    parquet table BUCKETED on `gh` (sinks/bucketed.py), once per identity
+    of documents.parquet — the stored shape incremental ExactSubstr rides: the history's
     grams are hashed AND hash-partitioned once at ingest time, so every
     subsequent daily batch's marking semi-join needs NO Exchange on the
     history side, ever (the dedup_incremental_bucketed discipline
     applied to gram space). Returns the catalog table name."""
-    import hashlib
-
     from ..functions.text import ngram_hashes_from_tokens, tokenize
     from ..sinks.bucketed import write_bucketed
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    name = f"bk_es_grams_{tag}"
-    if not spark.catalog.tableExists(name):
+    def build(scratch):
+        name = os.path.basename(scratch)
         d = _t(spark, sf_dir, "documents")
         grams = (
             d.where(F.col("source") == "src0")
@@ -461,9 +457,10 @@ def bucketed_gram_index(spark: SparkSession, sf_dir: str) -> str:
             )
             .distinct()
         )
-        base = tmpdirs.mkdtemp(prefix=f"k3s_es_grams_{tag}_")
-        write_bucketed(grams, name, ["gh"], 8, f"{base}/grams")
-    return name
+        write_bucketed(grams, name, ["gh"], 8, f"{scratch}/grams")
+        return name
+
+    return tmpdirs.memo("es_grams", os.path.join(sf_dir, "documents.parquet"), build)
 
 
 @query(
@@ -662,10 +659,9 @@ _RRF_W = 1_000_000   # integer weight: term = _RRF_W DIV (K + rank)
 _RRF_QVEC = 0        # dense-leg query = embedding of vec_id 0
 
 
-def rrf_fuse(legs: list[DataFrame], k: int = _RRF_K, top: int = _RRF_TOP,
-             weight: int = _RRF_W) -> DataFrame:
+def rrf_fuse(legs: list[DataFrame]) -> DataFrame:
     """Fuse per-leg (doc_id, rnk) candidate lists by reciprocal-rank
-    fusion, integer-exact. Input legs are top-N lists (bounded by
+    fusion, integer-exact, into the top _RRF_TOP. Input legs are top-N lists (bounded by
     construction — N*|legs| rows total), so the whole fusion is
     broadcast-size: one union, one groupBy over <= N*|legs| rows, a
     TakeOrderedAndProject cut, and a final rank window over <= top rows."""
@@ -675,10 +671,10 @@ def rrf_fuse(legs: list[DataFrame], k: int = _RRF_K, top: int = _RRF_TOP,
 
     allr = reduce(DataFrame.unionByName, [x.select("doc_id", "rnk") for x in legs])
     fused = allr.groupBy("doc_id").agg(
-        F.sum(F.expr(f"{weight} div ({k} + rnk)")).cast("bigint").alias("rrf_score"),
+        F.sum(F.expr(f"{_RRF_W} div ({_RRF_K} + rnk)")).cast("bigint").alias("rrf_score"),
         F.count("*").cast("int").alias("n_legs"),
     )
-    top_df = fused.orderBy(F.col("rrf_score").desc(), "doc_id").limit(top)
+    top_df = fused.orderBy(F.col("rrf_score").desc(), "doc_id").limit(_RRF_TOP)
     # scale-ok: input is the post-TakeOrderedAndProject fused top rows only
     w = Window.orderBy(F.col("rrf_score").desc(), "doc_id")
     return top_df.select(

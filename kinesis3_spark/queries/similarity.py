@@ -669,8 +669,8 @@ def embed_pq_reconstruction_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     # one bounded sample job feeds BOTH trainings (review fix r6)
     X = S.fetch_pq_sample(emb)
-    books = S.train_pq_codebooks(emb, m=8, k=64, X=X)
-    base = S.train_pq_codebooks(emb, m=8, k=1, iters=2, X=X)
+    books = S.train_pq_codebooks(emb, k=64, X=X)
+    base = S.train_pq_codebooks(emb, k=1, iters=2, X=X)
     # OPTIMIZATION_r14 (guide §4.1): the k=1 baseline error is scored in
     # the SAME Arrow pass (pq_encode's `baseline` column) — previously a
     # whole second decode+encode corpus pass fed the baseline aggregate.
@@ -1338,7 +1338,7 @@ def ivfpq_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     topk = S.cosine_topk_ivfpq(
         emb, probes, k=3, index=(C, books), enc=enc,
-        nprobe=_RERANK_NPROBE, n_centroids=n_centroids,
+        nprobe=_RERANK_NPROBE,
     )
     found = topk.where(
         F.col("neighbor_id") == F.col("query_id") - 1_000_000
@@ -1391,7 +1391,7 @@ def ivfpq_delete_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     qset = _query_set(spark, sf_dir)
     topk = S.cosine_topk_ivfpq(
         emb, qset, k=_K, index=(C, books), enc=live,
-        nprobe=_RERANK_NPROBE, n_centroids=len(C),
+        nprobe=_RERANK_NPROBE,
     )
     n_deleted = tombstones.agg(F.count("*").cast("bigint").alias("n_deleted"))
     n_enc = enc.agg(F.count("*").cast("bigint").alias("corpus_encoded"))
@@ -1422,13 +1422,14 @@ def ivfpq_delete_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rp_proj_cols_sql(var: str = "v") -> str:
-    """SQL projection columns y0..y{out-1} from the shared sign matrix
-    (same left-assoc chains as _rp_oracle — one generator, no drift)."""
+def _rp_proj_cols_sql() -> str:
+    """SQL projection columns y0..y{out-1} of the array `v` from the shared
+    sign matrix (same left-assoc chains as _rp_oracle — one generator, no
+    drift)."""
     signs = S.jl_signs(_RP_OUT, _DIM)
     cols = []
     for k in range(_RP_OUT):
-        chain = " + ".join(f"({var}[{j + 1}] * {signs[k][j]!r})" for j in range(_DIM))
+        chain = " + ".join(f"(v[{j + 1}] * {signs[k][j]!r})" for j in range(_DIM))
         cols.append(f"({chain}) * 0.25 AS y{k}")
     return ", ".join(cols)
 

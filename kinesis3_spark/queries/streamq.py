@@ -121,7 +121,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicates(event_id) + watermark restores exactly-once, matching
     the reference's purify :diff (db.clj:100-111)."""
     doubled = stream_events(spark, sf_dir).unionByName(stream_events(spark, sf_dir))
-    deduped = dedup_stream(doubled, keys=("event_id",))
+    deduped = dedup_stream(doubled)
     return run_to_memory(
         deduped.select("event_id", "event_type", "user_id"),
         output_mode="append",
@@ -804,7 +804,7 @@ def stream_dedup_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture as stream_dedup_replay; identical exactly-once output is the
     oracle's plain projection."""
     doubled = stream_events(spark, sf_dir).unionByName(stream_events(spark, sf_dir))
-    deduped = dedup_stream(doubled, keys=("event_id",), within_watermark=True)
+    deduped = dedup_stream(doubled, within_watermark=True)
     return run_to_memory(
         deduped.select("event_id", "event_type", "user_id"),
         output_mode="append",

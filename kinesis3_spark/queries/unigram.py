@@ -176,31 +176,38 @@ def unigram_model_for(spark: SparkSession, sf_dir: str) -> dict[str, int]:
 
 
 def _train_unigram(spark: SparkSession, sf_dir: str) -> dict[str, int]:
-    """seed -> EM_KEEP rounds of (lattice usage count, prune)."""
+    """seed -> EM_KEEP rounds of (lattice usage count, prune). The word
+    table is cached for the rounds and unpersisted before returning: a
+    cached plan outlives the build, and Spark serves its rows to every
+    later `_word_freq` plan over the same path, after the file changed
+    too."""
     wf = _word_freq(spark, sf_dir).cache()
-    seed = (
-        wf.select(F.explode(F.expr(_SUBS_EXPR)).alias("piece"), "f")
-        .groupBy("piece")
-        .agg(F.sum("f").cast("bigint").alias("cnt"))
-    )
-    # bounded collects: all single chars (<= 36 under the [a-z0-9] filter)
-    # + the top SEED_MULTI multi-char seeds — never the corpus
-    chars = seed.where(F.length("piece") == 1).collect()
-    multi = (
-        seed.where(F.length("piece") >= 2)
-        .orderBy(F.col("cnt").desc(), "piece")
-        .limit(SEED_MULTI)
-        .collect()
-    )
-    counts = {r["piece"]: int(r["cnt"]) for r in chars}
-    counts.update({r["piece"]: int(r["cnt"]) for r in multi})
-    for keep in EM_KEEP:
-        if not counts:
-            break  # empty corpus: nothing to train
-        use_rows = _usage_pass(wf, counts).collect()  # bounded: <= |pieces|
-        use = {r["piece"]: int(r["cnt"]) for r in use_rows}
-        counts = _prune(counts, use, keep)
-    return counts
+    try:
+        seed = (
+            wf.select(F.explode(F.expr(_SUBS_EXPR)).alias("piece"), "f")
+            .groupBy("piece")
+            .agg(F.sum("f").cast("bigint").alias("cnt"))
+        )
+        # bounded collects: all single chars (<= 36 under the [a-z0-9] filter)
+        # + the top SEED_MULTI multi-char seeds — never the corpus
+        chars = seed.where(F.length("piece") == 1).collect()
+        multi = (
+            seed.where(F.length("piece") >= 2)
+            .orderBy(F.col("cnt").desc(), "piece")
+            .limit(SEED_MULTI)
+            .collect()
+        )
+        counts = {r["piece"]: int(r["cnt"]) for r in chars}
+        counts.update({r["piece"]: int(r["cnt"]) for r in multi})
+        for keep in EM_KEEP:
+            if not counts:
+                break  # empty corpus: nothing to train
+            use_rows = _usage_pass(wf, counts).collect()  # bounded: <= |pieces|
+            use = {r["piece"]: int(r["cnt"]) for r in use_rows}
+            counts = _prune(counts, use, keep)
+        return counts
+    finally:
+        wf.unpersist()
 
 
 def _encode_k(wf: DataFrame, counts: dict[str, int]) -> DataFrame:

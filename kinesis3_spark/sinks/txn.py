@@ -1444,17 +1444,12 @@ def upsert_manifest_txn(
     path: str,
     key: str = "id",
     order_col: str | None = None,
-    mode: str = "replace",
     n_buckets: int = 8,
-    stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     max_retries: int = 5,
-    app_id: str | None = None,
-    app_version: int | None = None,
-    generated_cols: dict[str, str] | None = None,
 ) -> int:
     """One transactional merge of `batch` into the manifest table —
-    upsert_parquet's exact merge semantics (first- or last-writer-wins by
+    upsert_parquet's replace-mode merge semantics (last-writer-wins by
     `order_col`, shared `_dedup_last` helper) on the MVCC layout:
 
       1. touched buckets = distinct key-hash buckets in the batch
@@ -1473,22 +1468,15 @@ def upsert_manifest_txn(
     tests/test_sinks.py (partial files + stale tmp manifests planted; a
     failed swap leaves the old snapshot intact); two-thread interleaved
     upserts converge in tests/test_txn_concurrency.py."""
-    assert mode in ("ignore", "replace")
     os.makedirs(path, exist_ok=True)
     order = order_col or key
     last: CommitConflict | None = None
     for _attempt in range(max_retries):
         man = read_manifest(path)
-        if (
-            app_id is not None
-            and man is not None
-            and (man.get("apps") or {}).get(app_id, -1) >= app_version
-        ):
-            return man["epoch"]  # replayed batch: already merged
+        # layout + stats config are fixed at table creation
+        stats_cols = (man or {}).get("stats_cols") or None
         if man is not None:
-            # layout + stats config are fixed at table creation
             n_buckets = man["n_buckets"]
-            stats_cols = man.get("stats_cols") or None
             bloom_cols = man.get("bloom_cols") or None
         touched = {
             int(r[0])
@@ -1503,9 +1491,7 @@ def upsert_manifest_txn(
         # values are not re-validated with an extra aggregate. A
         # batch-SUPPLIED generated column stays on both sides and the
         # commit validates every merged row.
-        gcols = (
-            _generated(man) if man is not None else dict(generated_cols or {})
-        )
+        gcols = _generated(man) if man is not None else {}
         gdrop = [
             c for c in gcols
             if c not in batch.columns and c not in (key, order)
@@ -1516,7 +1502,7 @@ def upsert_manifest_txn(
             current = current.drop(*gdrop)
         if current is None:
             merged = _dedup_last(
-                new, key, order, prefer="new" if mode == "replace" else "old"
+                new, key, order, prefer="new"
             )
         else:
             # allowMissingColumns = additive schema evolution: a batch
@@ -1529,7 +1515,7 @@ def upsert_manifest_txn(
                 ),
                 key,
                 order,
-                prefer="new" if mode == "replace" else "old",
+                prefer="new",
             )
         carry = [
             e
@@ -1540,9 +1526,7 @@ def upsert_manifest_txn(
             return commit_snapshot(
                 merged, path, key, n_buckets, base_man=man, carry=carry,
                 stats_cols=stats_cols, bloom_cols=bloom_cols,
-                app_id=app_id, app_version=app_version,
-                op={"name": "UPSERT", "key": key, "mode": mode},
-                generated_cols=generated_cols,
+                op={"name": "UPSERT", "key": key, "mode": "replace"},
             )
         except CommitConflict as exc:
             last = exc
@@ -1815,9 +1799,7 @@ def merge_into(
     raise last
 
 
-def delete_where(
-    spark: SparkSession, path: str, condition, max_retries: int = 5
-) -> tuple[int, int]:
+def delete_where(spark: SparkSession, path: str, condition) -> tuple[int, int]:
     """Row-level DELETE as a METADATA-ONLY commit (Delta deletion
     vectors): rows of the current snapshot matching ``condition`` (a SQL
     boolean expression string or Column) are recorded as
@@ -1839,12 +1821,12 @@ def delete_where(
     (manifest-scale metadata) comes to the driver, to know which entries
     get the dv reference. Publishes through the same OCC epoch claim as
     data commits; on conflict the whole delete recomputes against the
-    winner's snapshot. Returns (epoch, n_deleted); a no-match delete
+    winner's snapshot, up to 5 attempts. Returns (epoch, n_deleted); a no-match delete
     commits nothing and returns the current epoch."""
     import uuid
 
     last: CommitConflict | None = None
-    for _attempt in range(max_retries):
+    for _attempt in range(5):
         man = read_manifest(path)
         assert man is not None, f"no committed table at {path}"
         live = read_snapshot(spark, path, _with_pos=True)
@@ -2020,9 +2002,8 @@ def compact_table(
         merged = merged.withColumn(
             "__zv",
             z_value(
-                _zb(F.coalesce(F.col(cx), F.lit(lo_x)), lo_x, hi_x, 16),
-                _zb(F.coalesce(F.col(cy), F.lit(lo_y)), lo_y, hi_y, 16),
-                16,
+                _zb(F.coalesce(F.col(cx), F.lit(lo_x)), lo_x, hi_x),
+                _zb(F.coalesce(F.col(cy), F.lit(lo_y)), lo_y, hi_y),
             ),
         )
         sort_cols = ["__zv"]
@@ -2590,27 +2571,17 @@ def apply_changes_to_mv(
 
 
 def upsert_manifest_stream(
-    sdf: DataFrame,
-    path: str,
-    checkpoint: str,
-    key: str = "id",
-    order_col: str | None = None,
-    mode: str = "replace",
+    sdf: DataFrame, path: str, checkpoint: str, key: str, order_col: str
 ):
-    """The foreachBatch wiring of upsert_manifest_txn, drained with
-    ``availableNow``: every micro-batch is one atomic manifest commit, so
+    """The foreachBatch wiring of a last-writer-wins upsert_manifest_txn,
+    drained with ``availableNow``: every micro-batch is one atomic manifest commit, so
     a reader polling the table between batches always sees a consistent
     merge prefix. A checkpoint-recovery replay of a committed batch is
     value-idempotent for replace-mode LWW, just a wasted commit."""
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         upsert_manifest_txn(
-            batch_df.sparkSession,
-            batch_df,
-            path,
-            key=key,
-            order_col=order_col,
-            mode=mode,
+            batch_df.sparkSession, batch_df, path, key=key, order_col=order_col
         )
 
     return (
@@ -2629,7 +2600,6 @@ def append_manifest_stream(
     app_id: str,
     key: str = "id",
     n_buckets: int = 8,
-    stats_cols: list[str] | None = None,
 ):
     """foreachBatch append-mode ingest with the EXACTLY-ONCE contract a
     blind append needs: Structured Streaming's checkpoint guarantees each
@@ -2648,7 +2618,6 @@ def append_manifest_stream(
             path,
             key=key,
             n_buckets=n_buckets,
-            stats_cols=stats_cols,
             app_id=app_id,
             app_version=batch_id,
         )
@@ -2670,7 +2639,6 @@ def merge_manifest_stream(
     key: str = "id",
     matched: list[dict] | None = None,
     not_matched: list[dict] | None = None,
-    not_matched_by_source: list[dict] | None = None,
     order_col: str | None = None,
     order_tiebreak: list[str] | None = None,
     n_buckets: int = 8,
@@ -2741,7 +2709,6 @@ def merge_manifest_stream(
         merge_into(
             b.sparkSession, path, b, key=key,
             matched=matched, not_matched=not_matched,
-            not_matched_by_source=not_matched_by_source,
             app_id=app_id, app_version=batch_id,
         )
 

@@ -1,4 +1,4 @@
-"""Batch sources: the driver-generated parquet corpus + generic readers.
+"""Batch sources: the generated parquet corpus.
 
 Reference parity: the reference's only batch "source" is re-reading its own
 S3 gzip archive (implied by `separate-number-data`, utils.clj:17-19); the
@@ -28,8 +28,8 @@ TABLES = (
 )
 
 
-def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Normalize the events timestamp column to session-zone TimestampType,
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """Normalize the events timestamp column `ts` to session-zone TimestampType,
     whatever physical type the corpus stored it as. The corpus has shipped
     `ts` in three different physical schemas across regenerations:
 
@@ -44,11 +44,11 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    dtype = dict(df.dtypes).get(col)
+    dtype = dict(df.dtypes).get("ts")
     if dtype == "bigint":
-        return df.withColumn(col, F.timestamp_micros((F.col(col) / 1000).cast("long")))
+        return df.withColumn("ts", F.timestamp_micros((F.col("ts") / 1000).cast("long")))
     if dtype == "timestamp_ntz":
-        return df.withColumn(col, F.to_timestamp(F.col(col)))
+        return df.withColumn("ts", F.to_timestamp(F.col("ts")))
     return df
 
 
@@ -109,27 +109,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every corpus table as a temp view for spark.sql queries."""
     for t in TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
-def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_csv(spark: SparkSession, path: str, schema=None, header: bool = True) -> DataFrame:
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)

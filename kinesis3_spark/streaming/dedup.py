@@ -7,24 +7,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def dedup_stream(
-    df: DataFrame,
-    keys: tuple[str, ...] = ("event_id",),
-    watermark: tuple[str, str] | None = ("ts", "10 minutes"),
-    within_watermark: bool = False,
-) -> DataFrame:
-    """First occurrence per key wins (exactly the reference's semantics).
+def dedup_stream(df: DataFrame, within_watermark: bool = False) -> DataFrame:
+    """First occurrence per event_id wins (exactly the reference's semantics).
 
-    With `watermark`, state for keys older than the horizon is evicted —
-    the difference between O(distinct keys ever) and O(keys per window)
-    state at 100 TB. `within_watermark=True` uses
+    A 10-minute watermark on `ts` evicts state for keys older than the
+    horizon — the difference between O(distinct keys ever) and O(keys per
+    window) state at 100 TB. `within_watermark=True` uses
     dropDuplicatesWithinWatermark: dedup only among rows whose event times
     fall inside the watermark delay of each other (tolerates re-delivery
     with drifted timestamps, the at-least-once replay case).
     """
-    out = df
-    if watermark is not None:
-        out = out.withWatermark(*watermark)
-        if within_watermark:
-            return out.dropDuplicatesWithinWatermark(list(keys))
-    return out.dropDuplicates(list(keys))
+    out = df.withWatermark("ts", "10 minutes")
+    if within_watermark:
+        return out.dropDuplicatesWithinWatermark(["event_id"])
+    return out.dropDuplicates(["event_id"])

@@ -32,12 +32,12 @@ from ..sinks.upsert import upsert_parquet
 _FMT = "yyyy-MM-dd HH:mm:ss"
 
 
-def rollup_events(sdf: DataFrame, window: str = "5 minutes") -> DataFrame:
-    """Tumbling (window, event_type) rollup: count + value sum. The rollup
+def rollup_events(sdf: DataFrame) -> DataFrame:
+    """Tumbling 5-minute (window, event_type) rollup: count + value sum. The rollup
     key is materialized as one string column so the generic keyed upsert
     sink can merge on it."""
     return (
-        sdf.groupBy(F.window("ts", window).alias("win"), "event_type")
+        sdf.groupBy(F.window("ts", "5 minutes").alias("win"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(
             F.date_format("win.start", _FMT).alias("win_start"),
@@ -49,10 +49,9 @@ def rollup_events(sdf: DataFrame, window: str = "5 minutes") -> DataFrame:
     )
 
 
-def continuous_rollup(
-    rollup_sdf: DataFrame, target: str, checkpoint: str, trigger: dict | None = None
-):
-    """Maintain `target` as the materialization of a streaming rollup.
+def continuous_rollup(rollup_sdf: DataFrame, target: str, checkpoint: str):
+    """Maintain `target` as the materialization of a streaming rollup,
+    draining what is available now.
 
     Update output mode emits each changed key once per batch; the batch id
     is the upsert ordering column, so a key touched in batches 3 and 7
@@ -71,10 +70,10 @@ def continuous_rollup(
             mode="replace",
         )
 
-    writer = (
+    return (
         rollup_sdf.writeStream.outputMode("update")
         .foreachBatch(_merge)
         .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    trig = trigger or {"availableNow": True}
-    return writer.trigger(**trig).start()

@@ -34,8 +34,6 @@ def await_or_raise(q, timeout_s: int = 300) -> None:
 def run_to_memory(
     sdf: DataFrame,
     output_mode: str = "append",
-    timeout_s: int = 300,
-    state_partitions: int = 4,
     final_no_data_batch: bool = True,
 ) -> DataFrame:
     """ORACLE-HARNESS ONLY: execute a streaming plan with
@@ -77,7 +75,7 @@ def run_to_memory(
     old_ndb = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
     if not final_no_data_batch:
         spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     try:
@@ -89,12 +87,12 @@ def run_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-        await_or_raise(q, timeout_s)
+        await_or_raise(q)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", old_ndb)
     # The memory sink keeps the drained rows on the driver split across the
-    # state_partitions sink partitions; downstream oracle queries then pay
+    # 4 sink partitions; downstream oracle queries then pay
     # one scheduler round per partition for a few thousand rows. coalesce(1)
     # makes every later read a single task — row-identical, and measured
     # ~0.1 s per drain at sf0.1 (OPTIMIZATION_r15, guide §5 driver/latency).

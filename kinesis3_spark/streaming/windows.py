@@ -18,16 +18,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
+_WATERMARK = "10 minutes"
 
 
-def tumbling_counts(
-    df: DataFrame, width: str = "5 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Non-overlapping event-time buckets: count + value sum per
+def tumbling_counts(df: DataFrame) -> DataFrame:
+    """Non-overlapping 5-minute event-time buckets: count + value sum per
     (window, event_type)."""
     return (
-        df.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
+        df.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(
             F.date_format("w.start", _FMT).alias("win_start"),
@@ -38,33 +37,24 @@ def tumbling_counts(
     )
 
 
-def sliding_value_stats(
-    df: DataFrame,
-    width: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Overlapping windows (each event lands in width/slide windows)."""
+def sliding_value_stats(df: DataFrame) -> DataFrame:
+    """Overlapping 10-minute windows sliding by 5 minutes (each event lands
+    in two windows)."""
     return (
-        df.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("w"))
+        df.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(F.date_format("w.start", _FMT).alias("win_start"), "n", "total_value")
     )
 
 
-def stream_stream_attribution(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    lookback: str = "10 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
+def stream_stream_attribution(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
     """Stream-stream inner interval join: every (purchase, click) pair where
-    the same user clicked within `lookback` before the purchase — the
+    the same user clicked within 10 minutes before the purchase — the
     streaming form of the batch range join (queries/temporal.py).
 
     Both sides carry watermarks and the join condition bounds event-time
-    distance, so the state store retains only `lookback + watermark` of each
+    distance, so the state store retains only lookback + watermark of each
     stream per user — the requirement for an unbounded-safe stream-stream
     join. Matched rows emit immediately (append mode); the watermark governs
     state eviction, not emission, for inner joins.
@@ -77,16 +67,16 @@ def stream_stream_attribution(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
         F.col("ts").alias("c_ts"),
-    ).withWatermark("c_ts", watermark)
+    ).withWatermark("c_ts", _WATERMARK)
     p = purchases.select(
         F.col("user_id").alias("p_user"),
         F.col("event_id").alias("purchase_id"),
         F.col("ts").alias("p_ts"),
-    ).withWatermark("p_ts", watermark)
+    ).withWatermark("p_ts", _WATERMARK)
     joined = p.join(
         c,
         (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 minutes"))
         & (F.col("c_ts") < F.col("p_ts")),
     )
     return joined.select(
@@ -96,15 +86,13 @@ def stream_stream_attribution(
     )
 
 
-def session_counts(
-    df: DataFrame, gap: str = "10 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
+def session_counts(df: DataFrame) -> DataFrame:
     """Per-user session windows: a session extends while consecutive events
-    arrive within `gap`; the window closes `gap` after the last event
-    (Spark session_window == gaps-and-islands in batch SQL)."""
+    arrive within a 10-minute gap; the window closes 10 minutes after the
+    last event (Spark session_window == gaps-and-islands in batch SQL)."""
     return (
-        df.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        df.withWatermark("ts", _WATERMARK)
+        .groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",

@@ -21,7 +21,7 @@ def test_capped_matches_exact_operator(spark, sf_dir):
     exact = {(r.id_a, r.id_b) for r in D.ngram_jaccard_pairs(df).collect()}
     capped = {
         (r.id_a, r.id_b)
-        for r in D.ngram_jaccard_pairs_capped(df, df_cap=100).collect()
+        for r in D.ngram_jaccard_pairs_capped(df).collect()
     }
     assert capped == exact
 

@@ -45,7 +45,7 @@ def clustered_dir(tmp_path_factory):
 def test_ivfpq_routes_clusters_to_shared_cells(spark, clustered_dir):
     d, labels = clustered_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    C, books = S.train_ivfpq(emb, n_centroids=8, m=8, k=16)
+    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
     enc = S.ivfpq_encode(emb, C, books).collect()
     assert len(enc) == len(labels)
     # k-means may legitimately SPLIT a planted cluster across cells (8
@@ -77,7 +77,7 @@ def test_ivfpq_topk_matches_numpy_adc_reference_exactly(spark, clustered_dir):
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
     qids = [0, 50, 100, 150]
     qset = emb.where(F.col("vec_id").isin(qids))
-    C, books = S.train_ivfpq(emb, n_centroids=8, m=8, k=16)
+    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
     enc_rows = {r["id"]: r for r in S.ivfpq_encode(emb, C, books).collect()}
     got = S.cosine_topk_ivfpq(
         emb, qset, k=5, nprobe=2, index=(C, books)
@@ -124,7 +124,7 @@ def test_persisted_probe_matches_in_session_and_prunes_cell_files(
 
     d, labels = clustered_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    C, books = S.train_ivfpq(emb, n_centroids=8, m=8, k=16)
+    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
     path = tmpdirs.mkdtemp(prefix="t_ivfpq_persist_") + "/index"
     S.persist_ivfpq_index(S.ivfpq_encode(emb, C, books), path)
     enc = S.read_ivfpq_index(spark, path)
@@ -170,8 +170,8 @@ def test_ivfpq_training_is_deterministic(spark, sf_dir):
     from kinesis3_spark.sources import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    C1, b1 = S.train_ivfpq(emb, n_centroids=8, m=8, k=16, iters=4)
-    C2, b2 = S.train_ivfpq(emb, n_centroids=8, m=8, k=16, iters=4)
+    C1, b1 = S.train_ivfpq(emb, n_centroids=8, k=16, iters=4)
+    C2, b2 = S.train_ivfpq(emb, n_centroids=8, k=16, iters=4)
     assert np.array_equal(C1, C2) and np.array_equal(b1, b2)
 
 
@@ -189,7 +189,7 @@ def test_rerank_recovers_exact_topk_and_never_loses_to_adc(
     from pyspark.sql import functions as F
 
     qset = emb.where(F.col("vec_id") < 8)
-    C, books = S.train_ivfpq(emb, n_centroids=8, m=8, k=16)
+    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
     enc = S.ivfpq_encode(emb, C, books)
     brute = {
         (r["query_id"], r["neighbor_id"], r["rank"])
@@ -199,7 +199,7 @@ def test_rerank_recovers_exact_topk_and_never_loses_to_adc(
     rr_full = {
         (r["query_id"], r["neighbor_id"], r["rank"])
         for r in S.cosine_topk_ivfpq_rerank(
-            emb, qset, k=5, fetch_r=60, nprobe=8, n_centroids=8,
+            emb, qset, k=5, fetch_r=60, nprobe=8,
             index=(C, books), enc=enc,
         ).collect()
     }
@@ -209,14 +209,14 @@ def test_rerank_recovers_exact_topk_and_never_loses_to_adc(
     adc = {
         (r["query_id"], r["neighbor_id"])
         for r in S.cosine_topk_ivfpq(
-            emb, qset, k=5, nprobe=2, n_centroids=8,
+            emb, qset, k=5, nprobe=2,
             index=(C, books), enc=enc,
         ).collect()
     }
     rr_part = {
         (r["query_id"], r["neighbor_id"])
         for r in S.cosine_topk_ivfpq_rerank(
-            emb, qset, k=5, fetch_r=30, nprobe=2, n_centroids=8,
+            emb, qset, k=5, fetch_r=30, nprobe=2,
             index=(C, books), enc=enc,
         ).collect()
     }
@@ -238,7 +238,7 @@ def test_index_meta_sidecar_enables_fresh_process_probe(
 
     d, labels = clustered_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    C, books = S.train_ivfpq(emb, n_centroids=8, m=8, k=16)
+    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
     path = tmpdirs.mkdtemp(prefix="t_ivfpq_meta_") + "/index"
     S.persist_ivfpq_index(
         S.ivfpq_encode(emb, C, books), path, index=(C, books),
@@ -265,7 +265,7 @@ def test_index_meta_sidecar_enables_fresh_process_probe(
     ).collect()))
     assert got == want and len(got) == 15
     # bit-identical round-trip (json repr of finite doubles is exact)
-    C3, books3 = S.train_ivfpq(emb, n_centroids=8, m=8, k=16)
+    C3, books3 = S.train_ivfpq(emb, n_centroids=8, k=16)
     assert np.array_equal(C2, C3) and np.array_equal(books2, books3)
     # a pre-sidecar index reports None instead of guessing
     bare = tmpdirs.mkdtemp(prefix="t_ivfpq_bare_") + "/index"
@@ -284,7 +284,7 @@ def test_rerank_post_filter_mines_hard_negatives_exactly(spark, clustered_dir):
 
     d, labels = clustered_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    C, books = S.train_ivfpq(emb, n_centroids=8, m=8, k=16)
+    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
     qset = emb.where(F.col("vec_id").isin([0, 50, 100]))
     pred = F.col("n_label") != F.col("q_label")
     ann = sorted(map(tuple, S.cosine_topk_ivfpq_rerank(
@@ -383,7 +383,7 @@ def test_knn_graph_edges_stay_within_planted_clusters(spark, clustered_dir):
     the distributed all-vectors build, not the driver-side query path."""
     d, labels = clustered_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    C, books = S.train_ivfpq(emb, n_centroids=8, m=8, k=16)
+    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
     enc = S.ivfpq_encode(emb, C, books)
     edges = S.knn_graph_ivfpq(
         emb, (C, books), enc, k=5, nprobe=2, rerank_mult=4
@@ -407,7 +407,7 @@ def test_knn_graph_refine_matches_bruteforce_on_planted(spark, clustered_dir):
     that regime is covered by the recall band, not exactness."""
     d, _labels = clustered_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    C, books = S.train_ivfpq(emb, n_centroids=8, m=8, k=16)
+    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
     enc = S.ivfpq_encode(emb, C, books)
     got = {
         (r.query_id, r.rank, r.neighbor_id)
@@ -431,7 +431,7 @@ def test_shared_adc_scores_path_matches_per_leg_recompute(spark, clustered_dir):
     d, _labels = clustered_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
     qset = emb.where("vec_id < 8")
-    C, books = S.train_ivfpq(emb, n_centroids=8, m=8, k=16)
+    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
     enc = S.ivfpq_encode(emb, C, books)
     scores = S.ivfpq_adc_scores(emb, qset, nprobe=4, index=(C, books), enc=enc)
 

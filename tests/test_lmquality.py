@@ -252,10 +252,9 @@ def test_psi_bucket_cache_reused_across_invocations(spark, sf_dir, monkeypatch):
     call (r12 advice fix — long-lived-session cache accumulation)."""
     from kinesis3_spark import tmpdirs
     from kinesis3_spark.queries import QUERIES
-    from kinesis3_spark.queries import dataquality as DQ
 
     QUERIES["dq_token_drift_psi"](spark, sf_dir).collect()
-    key = ("psi_buckets", sf_dir, DQ.PSI_REF_SOURCE, DQ.PSI_TOP_K)
+    key = ("psi_buckets", sf_dir)
     handle = _memoized(*key)
     built = []
     real_memo = tmpdirs.memo

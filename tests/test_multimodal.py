@@ -32,7 +32,7 @@ def test_frame_sampling(spark):
     df = spark.createDataFrame(
         [(1, bytearray(M.encode_rawv(frames)))], "media_id long, data binary"
     )
-    out = M.sample_frames(df, every_n=2).collect()
+    out = M.sample_frames(df).collect()
     assert sorted(r.frame_idx for r in out) == [0, 2, 4]
     # sampled frames decode back to the original planes
     f0 = next(r for r in out if r.frame_idx == 2)

@@ -105,7 +105,7 @@ def test_decontam_shuffle_fallback_matches_broadcast(spark, sf_dir):
     from kinesis3_spark.sources.batch import load_table
 
     d = load_table(spark, sf_dir, "documents")
-    aqe = decontaminate_grams(d, 13)
+    aqe = decontaminate_grams(d)
     rows_a = [tuple(r) for r in aqe.collect()]
     # default path: AQE converted the semi join once runtime sizes landed
     assert "BroadcastHashJoin" in aqe._jdf.queryExecution().executedPlan().toString()
@@ -118,7 +118,7 @@ def test_decontam_shuffle_fallback_matches_broadcast(spark, sf_dir):
     for k in keys:
         spark.conf.set(k, "-1")
     try:
-        shuf = decontaminate_grams(d, 13)
+        shuf = decontaminate_grams(d)
         rows_s = [tuple(r) for r in shuf.collect()]
         plan_s = shuf._jdf.queryExecution().executedPlan().toString()
     finally:

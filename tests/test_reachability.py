@@ -19,7 +19,11 @@ be referenced by name from a root or a reached definition too. Methods a
 framework calls by name (Spark Data Source callbacks) are exempt.
 
 The exemption list only shrinks: an exempt name that is reached again, or
-is gone, fails the test as well, so the entry must be deleted with it."""
+is gone, fails the test as well, so the entry must be deleted with it.
+
+A second guard holds every defaulted parameter of the package to a second
+value in use: a parameter that every call site sets the same way is a
+constant, and the branches only another value reaches are dead code."""
 
 from __future__ import annotations
 
@@ -29,6 +33,14 @@ import re
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 PKG = ROOT / "kinesis3_spark"
+CALLER_FILES = [
+    *sorted(PKG.rglob("*.py")),
+    ROOT / "bench.py",
+    ROOT / "__spark_entry__.py",
+    *sorted((ROOT / "perfbench").rglob("*.py")),
+    *sorted((ROOT / "tools").rglob("*.py")),
+    *sorted((ROOT / "tests").rglob("*.py")),
+]
 ROOT_FILES = [
     ROOT / "bench.py",
     ROOT / "__spark_entry__.py",
@@ -63,9 +75,6 @@ KNOWN_UNREACHABLE = {
     "sinks.txn._trim_checkpoint": _TXN,
     "sinks.txn.compact_table": _TXN,
     "sinks.txn.vacuum_table": _TXN,
-    "sources.batch.load_tables": _BATCH,
-    "sources.batch.read_csv": _BATCH,
-    "sources.batch.read_jsonl": _BATCH,
     "sources.batch.register_temp_views": _BATCH,
     "sources.txn_datasource._TxnBatchReader.partitions": _DS_CALLBACK,
     "sources.txn_datasource._TxnBatchReaderPushdown.pushFilters": _DS_CALLBACK,
@@ -273,3 +282,187 @@ def test_query_registration_is_unconditional():
         for line in _conditional_registrations(ast.parse(p.read_text()))
     ]
     assert not found, f"query registered under a module-level if/try/with: {found}"
+
+
+# Defaulted parameters with one value in use, by `module.function.param`
+# -> reason: a test sets the second value through a call the scan skips,
+# a txn scale path (compaction, vacuum, leases) keeps it, or it is the
+# CLI's `argv`. Only shrinks, like KNOWN_UNREACHABLE.
+ONE_VALUE_EXEMPT: dict[str, str] = {}
+
+
+def _functions(pkg: pathlib.Path):
+    """{bare name: [(qualified name, def node, is a method, file)]} of
+    every function the package defines, nested ones and methods included."""
+    out: dict[str, list] = {}
+
+    def visit(node, path, prefix, in_class):
+        for st in ast.iter_child_nodes(node):
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                q = f"{prefix}{st.name}"
+                out.setdefault(st.name, []).append((q, st, in_class, path))
+                visit(st, path, f"{q}.", False)
+            elif isinstance(st, ast.ClassDef):
+                visit(st, path, f"{prefix}{st.name}.", True)
+            else:
+                visit(st, path, prefix, in_class)
+
+    for p in sorted(pkg.rglob("*.py")):
+        visit(ast.parse(p.read_text()), p, f"{_module_name(p, pkg)}.", False)
+    return out
+
+
+def _defaulted(fn: ast.FunctionDef, is_method: bool):
+    """[(param, positional index at a call site or None, default)]."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    shown = pos[1:] if is_method and pos and pos[0].arg in ("self", "cls") else pos
+    out = [
+        (arg.arg, shown.index(arg) if arg in shown else None, d)
+        for arg, d in zip(pos[len(pos) - len(a.defaults) :], a.defaults)
+    ]
+    out += [(arg.arg, None, d) for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+    return out
+
+
+def _module_literals(pkg: pathlib.Path) -> dict[str, str]:
+    """Module constants bound to a literal, by name -> repr of the value,
+    so `N_HASHES`, `dedup.N_HASHES` and `64` read as one value."""
+    seen: dict[str, set] = {}
+    for p in pkg.rglob("*.py"):
+        for st in ast.parse(p.read_text()).body:
+            names = _assigned_names(st)
+            if names and len(names) == 1:
+                try:
+                    seen.setdefault(names[0], set()).add(repr(ast.literal_eval(st.value)))
+                except ValueError:
+                    seen.setdefault(names[0], set()).add(None)
+    return {n: v.pop() for n, v in seen.items() if len(v) == 1 and None not in v}
+
+
+def _one_value_params(
+    pkg: pathlib.Path = PKG, caller_files: list[pathlib.Path] = CALLER_FILES
+) -> tuple[int, dict[str, str]]:
+    """(number of defaulted parameters of uniquely named package
+    functions, {qualified parameter: its one value} for those whose call
+    sites all set the same value).
+
+    Call sites are found by name; a call with `*args`/`**kwargs` is
+    skipped. An argument that forwards a parameter of the enclosing
+    function takes that parameter's values: a required one, or one of a
+    function the scan cannot resolve, counts as varying."""
+    funcs = {n: v[0] for n, v in _functions(pkg).items() if len(v) == 1}
+    literals = _module_literals(pkg)
+
+    def norm(e: ast.expr) -> str:
+        name = e.id if isinstance(e, ast.Name) else getattr(e, "attr", None)
+        if name in literals:
+            return literals[name]
+        try:
+            return repr(ast.literal_eval(e))
+        except ValueError:
+            return ast.unparse(e)
+
+    params = {
+        name: {p: (i, norm(d)) for p, i, d in _defaulted(fn, is_method)}
+        for name, (_, fn, is_method, _) in funcs.items()
+    }
+    values: dict[tuple[str, str], set] = {
+        (f, p): set() for f, ps in params.items() for p in ps
+    }
+
+    def visit(node, path, enclosing):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                visit(child, path, child)
+                continue
+            visit(child, path, enclosing)
+            if not isinstance(child, ast.Call):
+                continue
+            f = child.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            if name not in params or not params[name]:
+                continue
+            if any(isinstance(a, ast.Starred) for a in child.args) or any(
+                k.arg is None for k in child.keywords
+            ):
+                continue
+            kw = {k.arg: k.value for k in child.keywords}
+            for p, (i, default) in params[name].items():
+                e = kw.get(p)
+                if e is None and i is not None and i < len(child.args):
+                    e = child.args[i]
+                values[name, p].add(
+                    default if e is None else forwarded(e, path, enclosing)
+                )
+
+    def forwarded(e, path, enclosing):
+        if not (isinstance(e, ast.Name) and enclosing is not None):
+            return norm(e)
+        a = enclosing.args
+        if e.id not in {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}:
+            return norm(e)
+        name = getattr(enclosing, "name", None)
+        f = funcs.get(name)
+        if f and (f[3], f[1].lineno) == (path, enclosing.lineno) and e.id in params[name]:
+            return ("forward", name, e.id)
+        return ("varying",)
+
+    for p in caller_files:
+        visit(ast.parse(p.read_text()), p, None)
+
+    def resolve(key, seen):
+        out = set()
+        for v in values[key]:
+            if isinstance(v, tuple) and v[0] == "forward":
+                if v[1:] not in seen:
+                    out |= resolve(v[1:], seen | {v[1:]})
+            else:
+                out.add(v)
+        return out
+
+    one = {}
+    for (f, p) in values:
+        vs = resolve((f, p), {(f, p)})
+        if len(vs) <= 1 and ("varying",) not in vs:
+            one[f"{funcs[f][0]}.{p}"] = str(next(iter(vs), "no call site"))
+    return len(values), one
+
+
+def test_every_default_has_a_second_value():
+    """A defaulted parameter that no call site, tests included, sets to a
+    second value is a constant: fold it into the body and delete the
+    branches only another value reached. A test that passes the default
+    explicitly sets the same value."""
+    _, one = _one_value_params()
+    new = sorted(f"{q} = {v}" for q, v in one.items() if q not in ONE_VALUE_EXEMPT)
+    assert not new, f"one value at every call site; make it a constant: {new}"
+    stale = sorted(q for q in ONE_VALUE_EXEMPT if q not in one)
+    assert not stale, f"set two ways now, or gone; drop from ONE_VALUE_EXEMPT: {stale}"
+
+
+def test_one_value_scan_follows_forwarded_parameters(tmp_path):
+    """`width` is set to the default through a module constant; `cap` is
+    forwarded from a wrapper whose callers set two values; `seed` is
+    forwarded from a required parameter; `mode` is forwarded from a
+    wrapper whose only value is its default."""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text(
+        "WIDTH = 4\n"
+        "def leaf(x, width=4, cap=None, seed=0, mode='a'):\n"
+        "    return x\n"
+        "def wrapper(x, cap=None, mode='a'):\n"
+        "    return leaf(x, width=WIDTH, cap=cap, mode=mode)\n"
+        "def outer(x, seed):\n"
+        "    return leaf(x, seed=seed)\n"
+        "wrapper(1)\n"
+        "wrapper(1, cap=3)\n"
+    )
+    total, one = _one_value_params(pkg, [pkg / "mod.py"])
+    assert total == 6
+    assert one == {
+        "mod.leaf.width": "4",
+        "mod.leaf.mode": "'a'",
+        "mod.wrapper.mode": "'a'",
+    }

@@ -415,7 +415,7 @@ def test_rrf_fuse_integer_arithmetic_on_planted_lists(spark):
 
     leg1 = spark.createDataFrame([(10, 1), (20, 2)], "doc_id long, rnk int")
     leg2 = spark.createDataFrame([(20, 1), (30, 2)], "doc_id long, rnk int")
-    rows = {r.doc_id: r for r in rrf_fuse([leg1, leg2], top=10).collect()}
+    rows = {r.doc_id: r for r in rrf_fuse([leg1, leg2]).collect()}
     assert rows[20].rrf_score == 1_000_000 // 61 + 1_000_000 // 62
     assert rows[10].rrf_score == 1_000_000 // 61
     assert rows[30].rrf_score == 1_000_000 // 62

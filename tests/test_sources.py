@@ -1,7 +1,7 @@
-"""Source-format tests (SURVEY.md §2b rows 2-3): JSON-lines and CSV scans
-round-trip against DuckDB's readers on the same files. Parquet inputs that
-do not change are read with a memoized schema: the job budget, the
-file-identity contract and a guard against bare reads are pinned here."""
+"""Source-format tests: ORC round-trips against the Parquet original.
+Parquet inputs that do not change are read with a memoized schema: the job
+budget, the file-identity contract and a guard against bare reads are
+pinned here."""
 
 from __future__ import annotations
 
@@ -13,51 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from kinesis3_spark.sources import read_csv, read_jsonl
-
 from .conftest import assert_parity, copy_corpus
-
-
-ROWS = [
-    {"id": 1, "name": "alpha", "score": 1.5},
-    {"id": 2, "name": "beta", "score": -2.0},
-    {"id": 3, "name": "gamma, delta", "score": 0.0},  # embedded comma
-]
-
-
-def test_jsonl_scan_matches_duckdb(spark, tmp_path):
-    import json
-
-    p = tmp_path / "d.jsonl"
-    p.write_text("\n".join(json.dumps(r) for r in ROWS))
-    got = {
-        r.id: (r.name, r.score)
-        for r in read_jsonl(spark, str(p), schema="id long, name string, score double").collect()
-    }
-    exp = {
-        r[0]: (r[1], r[2])
-        for r in duckdb.sql(f"SELECT id, name, score FROM read_json_auto('{p}')").fetchall()
-    }
-    assert got == exp
-
-
-def test_csv_scan_matches_duckdb(spark, tmp_path):
-    import csv
-
-    p = tmp_path / "d.csv"
-    with open(p, "w", newline="") as f:
-        w = csv.DictWriter(f, fieldnames=["id", "name", "score"])
-        w.writeheader()
-        w.writerows(ROWS)
-    got = {
-        r.id: (r.name, r.score)
-        for r in read_csv(spark, str(p), schema="id long, name string, score double").collect()
-    }
-    exp = {
-        r[0]: (r[1], r[2])
-        for r in duckdb.sql(f"SELECT id, name, score FROM read_csv_auto('{p}')").fetchall()
-    }
-    assert got == exp
 
 
 def test_orc_roundtrip_matches_parquet(spark, sf_dir, tmp_path):
@@ -329,16 +285,83 @@ def test_bm25_prf_persists_its_tokens_once_per_documents_file(spark, sf_dir, tmp
     assert persisted() == n
 
 
-@pytest.mark.parametrize("name", ["llm_dup_passage_stats", "llm_dsir_importance"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "llm_dup_passage_stats",
+        "llm_dsir_importance",
+        "llm_unigram_train",
+        "llm_unigram_encode_corpus",
+    ],
+)
 def test_persisted_grams_follow_a_rewritten_documents_file(spark, sf_dir, tmp_path, name):
-    """A query that persists a relation derived from documents.parquet is
-    answered from the rewritten file once the file is rewritten in place,
-    not from the relation an earlier call persisted."""
+    """A query that persists or caches a relation derived from
+    documents.parquet is answered from the rewritten file once the file is
+    rewritten in place, not from the relation an earlier call kept."""
     from kinesis3_spark.queries import ORACLE, QUERIES
 
     sf = copy_corpus(sf_dir, tmp_path / "sf")
     QUERIES[name](spark, sf).collect()
     con = _append_documents(sf)
+    assert_parity(QUERIES[name](spark, sf), con, ORACLE[name])
+
+
+def _append_orders(sf: str) -> None:
+    """Rewrite ``sf``'s orders.parquet in place with 50 more orders: copies
+    of the first 50 under new order keys."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    orders = pq.read_table(f"{sf}/orders.parquet")
+    first = max(orders["o_orderkey"].to_pylist()) + 1
+    added = orders.slice(0, 50).set_column(
+        0, "o_orderkey", pa.array(range(first, first + 50), pa.int64())
+    )
+    pq.write_table(pa.concat_tables([orders, added]), f"{sf}/orders.parquet")
+
+
+def _copy_into_src0(sf: str) -> None:
+    """Rewrite ``sf``'s documents.parquet in place with src0 copies of the
+    three longest documents of other sources, so the src0 history changes."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(f"{sf}/documents.parquet")
+    others = docs.filter(pc.not_equal(docs["source"], "src0"))
+    longest = others.take(
+        pc.sort_indices(others, [("n_chars", "descending")])[:3]
+    )
+    first = max(docs["doc_id"].to_pylist()) + 1
+    added = longest.set_column(
+        0, "doc_id", pa.array(range(first, first + 3), pa.int64())
+    ).set_column(3, "source", pa.array(["src0"] * 3))
+    pq.write_table(
+        pa.concat_tables([docs, added.cast(docs.schema)]), f"{sf}/documents.parquet"
+    )
+
+
+_BUCKETED_REWRITES = {
+    "join_bucketed_colocated": _append_orders,
+    "dedup_incremental_bucketed": _copy_into_src0,
+    "llm_exact_substring_incremental": _copy_into_src0,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BUCKETED_REWRITES))
+def test_bucketed_tables_follow_a_rewritten_file(spark, sf_dir, tmp_path, name):
+    """A bucketed catalog table built from a corpus file is built again
+    once that file is rewritten in place: the query matches its oracle on
+    the new file, not on the table an earlier call wrote."""
+    from kinesis3_spark.queries import ORACLE, QUERIES
+    from kinesis3_spark.sources import TABLES
+
+    sf = copy_corpus(sf_dir, tmp_path / "sf")
+    QUERIES[name](spark, sf).collect()
+    _BUCKETED_REWRITES[name](sf)
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
     assert_parity(QUERIES[name](spark, sf), con, ORACLE[name])
 
 

@@ -80,7 +80,7 @@ def test_z_value_matches_python_morton(spark):
     df = spark.createDataFrame(pairs, "x long, y long")
     got = [
         r.z
-        for r in df.select(z_value(F.col("x"), F.col("y"), bits=16).alias("z"))
+        for r in df.select(z_value(F.col("x"), F.col("y")).alias("z"))
         .collect()
     ]
 
