@@ -8,7 +8,7 @@ in the scan stage, so no Python in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Tiny per-language function-word lists for the n-gram/stopword heuristic.
@@ -132,6 +132,27 @@ def run_lengths(s: Column, st: Column) -> Column:
     return F.when(
         F.size(st) > 0, F.zip_with(ends, st, lambda e, b: e - b)
     ).otherwise(F.array().cast("array<int>"))
+
+
+def term_frequencies(doc_terms: DataFrame, *extra_aggs: Column) -> DataFrame:
+    """(doc_id, term, tf, *extra_aggs): one row per distinct (doc, term) of
+    a token stream with ``doc_id`` and ``term`` columns, counted on the
+    stream hash-partitioned by ``term`` alone.
+
+    Every consumer follows tf with a per-term statistic (a df window
+    partitioned by term, or a groupBy term), and a hash partitioning on
+    ``term`` also satisfies the (doc_id, term) aggregate: the count and
+    the per-term pass run in one stage behind ONE exchange, where the
+    default plan shuffles on (doc_id, term) and then again on term. The
+    trade: that exchange carries tokens, not distinct (doc, term) pairs
+    (no map-side combine), so a hot term's partition holds all its
+    occurrences rather than its documents (SCALE.md). The exchange is a
+    column repartition, which AQE still coalesces."""
+    return (
+        doc_terms.repartition("term")
+        .groupBy("doc_id", "term")
+        .agg(F.count("*").alias("tf"), *extra_aggs)
+    )
 
 
 def punct_ratio(col) -> Column:

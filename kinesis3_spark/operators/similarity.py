@@ -286,12 +286,40 @@ def ivf_assign(
     return emb.select("vec_id", "embedding").mapInPandas(assign_batches, schema)
 
 
+def semdedup_centroids(
+    emb: DataFrame, n_centroids: int | None = None, target_cell: int = 256
+) -> np.ndarray:
+    """The k-means cells ``semdedup_pairs`` compares within.
+
+    CELL-COUNT DERIVATION (VERDICT r9 'Next round' #5): the m²N²/k cost
+    claim only holds when k SCALES WITH N — a fixed k=16 makes the
+    within-cell join quadratic again as the corpus grows. When
+    ``n_centroids`` is not given, it derives as
+    ``max(16, ceil(N / target_cell))``: bounded ~target_cell-row cells,
+    so within-cell work is O(N * m² * target_cell) — LINEAR in corpus
+    size, the paper's operating point (Abbas et al. use 11k clusters
+    for LAION's 233M embeddings ≈ 21k per cell). N comes from one
+    count() over the embedding scan (column-pruned metadata pass —
+    cheap next to the assignment scan). The training sample widens with k (≥8 vectors per
+    centroid) so derived cells are actually trainable; at corpora where
+    that sample outgrows the driver, swap the bounded-sort sample for
+    distributed k-means — the derivation logic is unchanged.
+
+    The count and the training sample are eager jobs that depend only on
+    the corpus: a caller answering repeated queries over one corpus file
+    memoizes the result (``queries/similarity.semdedup_cells``)."""
+    if n_centroids is None:
+        n_centroids = max(16, -(-emb.count() // target_cell))
+    return train_ivf_centroids(
+        emb, n_centroids=n_centroids, sample=max(4096, 8 * n_centroids)
+    )
+
+
 def semdedup_pairs(
     emb: DataFrame,
     threshold: float,
-    n_centroids: int | None = None,
+    centroids: np.ndarray,
     n_assign: int = 1,
-    target_cell: int = 256,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): embedding near-dup
@@ -314,28 +342,11 @@ def semdedup_pairs(
     mapInPandas pass), self-joined on the cell key — both sides shuffle
     by cell, pairs never cross cells, the i<j predicate keeps each pair
     once per shared cell and a final distinct collapses multi-cell
-    rediscoveries. Returns distinct (id_a, id_b).
-
-    CELL-COUNT DERIVATION (VERDICT r9 'Next round' #5): the m²N²/k cost
-    claim only holds when k SCALES WITH N — a fixed k=16 makes the
-    within-cell join quadratic again as the corpus grows. When
-    ``n_centroids`` is not given, it derives as
-    ``max(16, ceil(N / target_cell))``: bounded ~target_cell-row cells,
-    so within-cell work is O(N * m² * target_cell) — LINEAR in corpus
-    size, the paper's operating point (Abbas et al. use 11k clusters
-    for LAION's 233M embeddings ≈ 21k per cell). N comes from one
-    count() over the embedding scan (column-pruned metadata pass —
-    cheap next to the assignment scan). The training sample widens with k (≥8 vectors per
-    centroid) so derived cells are actually trainable; at corpora where
-    that sample outgrows the driver, swap the bounded-sort sample for
-    distributed k-means — the derivation logic is unchanged."""
-    if n_centroids is None:
-        n_centroids = max(16, -(-emb.count() // target_cell))
-    C = train_ivf_centroids(
-        emb, n_centroids=n_centroids, sample=max(4096, 8 * n_centroids)
-    )
+    rediscoveries. Returns distinct (id_a, id_b). ``centroids`` are the
+    trained cells (``semdedup_centroids``); building the plan starts no
+    job."""
     tagged = ivf_assign(
-        emb, C, with_vec=True, n_assign=n_assign
+        emb, centroids, with_vec=True, n_assign=n_assign
     )
     a = tagged.select(
         "cell", F.col("id").alias("id_a"), F.col("v").alias("va")

@@ -11,8 +11,8 @@ Scale notes: the contamination check is an equi-join on the gram string —
 never a cross join. The benchmark side is DISTINCT-collapsed first (its
 gram set is tiny relative to the corpus) and broadcasts; the corpus side
 streams map-side through explode → semi join without materializing the
-gram table. TF-IDF's two aggregates (term frequency, document frequency)
-both shuffle on the term key with map-side combine; the per-doc top-k is
+gram table. TF-IDF's two statistics (term frequency, document frequency)
+run in one stage behind one exchange on the term key; the per-doc top-k is
 one window pass partitioned by doc_id.
 """
 
@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import tmpdirs
-from ..functions.text import ngram_hashes, ngrams, tokenize
+from ..functions.text import ngram_hashes, ngrams, term_frequencies, tokenize
 from .relational import _t
 from . import query
 
@@ -146,27 +146,25 @@ def llm_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 characteristic terms per document. The TF-IDF score (smoothed
     idf, reported rounded) is informational; the RANKING key is the pure
     integer triple (tf desc, df asc, term) so the top-k cut is exact on
-    every engine — no float ordering anywhere. df is an aggregate over
-    the same exploded token relation (one extra shuffle keyed by term,
-    |vocab| rows out) and joins back via broadcast at corpus scale."""
+    every engine — no float ordering anywhere. df is a window count over
+    tf in the same stage, so nothing joins back."""
     d = _t(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(tokenize(F.col("text"))).alias("term"))
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    tf = term_frequencies(toks)
     # tf holds one row per (doc, term), so document frequency is a window
     # row-count over tf partitioned by term — the token relation is
     # exploded and aggregated ONCE and there is no tf-vs-df join (the
     # two-aggregate + join formulation recomputed the whole explode per
     # side: column pruning differentiates the subtrees, so ReusedExchange
-    # never fires). Pipeline: explode -> hash agg (doc,term) -> window by
-    # term -> window by doc — three key exchanges, each carrying
-    # |distinct (doc,term)| rows, not |tokens|.
+    # never fires). Pipeline: explode -> exchange on term -> hash agg
+    # (doc,term) + window by term -> window by doc — two key exchanges:
+    # the first carries |tokens| rows, the second |distinct (doc,term)|.
     # OPTIMIZATION_r15 tried the scan-stage sorted-run tf here (the
     # text_repetition_signals rewrite): measured SLOWER (interleaved
     # min-of-8: 0.796 old vs 0.857 s) — per-doc string array_sort costs
-    # more than the map-side-combined hash agg, and unlike the
-    # repetition query the df/rank windows still need their exchanges,
-    # so nothing downstream is saved. Reverted; variant kept in
-    # tools/ab_variants/tfidf_terms.py.
+    # more than the hash agg, and the df/rank windows still need their
+    # exchanges, so nothing downstream is saved. Reverted; variant kept
+    # in tools/ab_variants/tfidf_terms.py.
     n_docs, _ = doc_stats(spark, sf_dir)  # memoized per documents file
     w = Window.partitionBy("doc_id").orderBy(
         F.col("tf").desc(), F.col("df").asc(), F.col("term").asc()

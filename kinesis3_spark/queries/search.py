@@ -11,8 +11,10 @@ measuring cross-document passage duplication (the signal behind
 approximation), and materializing term posting lists.
 
 Scale notes (100 TB): every pipeline below starts from ONE explode of the
-tokenized corpus and aggregates with map-side combine before any shuffle —
-the wide token relation never shuffles raw. Cross-doc statistics join on
+tokenized corpus. Term statistics (BM25, the posting lists) shuffle that
+stream once, on term (`functions.text.term_frequencies`), and count tf and
+the per-term statistic in the stage after it; BM25 filters to its query
+terms in the scan stage first. Cross-doc statistics join on
 64-bit gram/term hashes, not strings. Final top-k cuts are
 TakeOrderedAndProject (orderBy+limit), never a global window.
 """
@@ -25,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tmpdirs
-from ..functions.text import ngram_hashes, tokenize
+from ..functions.text import ngram_hashes, term_frequencies, tokenize
 from ..sources import read_parquet
 from .decontam import _DUCK_TOKS, doc_stats
 from .relational import _t
@@ -49,15 +51,16 @@ def bm25_scores(d: DataFrame, terms, stats: tuple[int, float],
 
     Pipeline: tokenize once into a projected column, then ONE relation
     carries both the per-doc length and the exploded terms — the query-
-    term filter lands in the scan stage, so the (doc, term) hash agg (the
-    only corpus-width shuffle) receives |terms| * |matching docs| rows,
-    and the doc length rides the aggregate as first(dl) instead of a
-    second scan + |docs|-row shuffle join (plan-audited: the dl join was
-    the one exchange whose rows scaled with the corpus, not the match
-    set). Term df is a WINDOW count over the tf relation — a df-side
-    groupBy+join would duplicate the whole scan→tokenize→tf subtree
-    (column pruning defeats ReusedExchange; the round-4 TF-IDF lesson),
-    measured as a third corpus scan in the plan audit. ``stats`` =
+    term filter lands in the scan stage, so the one corpus-width exchange
+    (on term, ``term_frequencies``) receives only the query terms'
+    occurrences, and the doc length rides the tf aggregate as first(dl)
+    instead of a second scan + |docs|-row shuffle join (plan-audited: the
+    dl join was the one exchange whose rows scaled with the corpus, not
+    the match set). Term df is a WINDOW count over the tf relation in the
+    same stage as tf — a df-side groupBy+join would duplicate the whole
+    scan→tokenize→tf subtree (column pruning defeats ReusedExchange; the
+    round-4 TF-IDF lesson), measured as a third corpus scan in the plan
+    audit. ``stats`` =
     (n_docs, avgdl) of the corpus is inlined as literals: the registered
     queries pass ``decontam.doc_stats`` (memoized per documents file, so
     a warm build starts no job for it), a frame that is not a corpus
@@ -91,11 +94,10 @@ def bm25_scores(d: DataFrame, terms, stats: tuple[int, float],
         base = base.join(F.broadcast(terms.select("term")), "term")
     else:
         base = base.where(F.col("term").isin(*terms))
-    tf = base.groupBy("doc_id", "term").agg(
-        F.count("*").alias("tf"), F.first("dl").alias("dl")
-    )
+    tf = term_frequencies(base, F.first("dl").alias("dl"))
     # Document frequency per query term: distinct-doc row-count over tf
-    # (one row per (doc, term)) via window — no join, no second subtree.
+    # (one row per (doc, term)) via window — no join, no second subtree,
+    # no exchange: tf is already partitioned by term.
     tf = tf.withColumn("df", F.count("*").over(Window.partitionBy("term")))
     n_docs_col, avgdl_col = F.lit(int(stats[0])), F.lit(float(stats[1]))
     idf = F.log(
@@ -272,8 +274,9 @@ def llm_dup_passage_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def search_inverted_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index build: per term, document frequency, total term
     frequency, and the head of the doc_id posting list (first 5, ascending
-    — the shape a search shard stores). One explode → (doc, term) agg →
-    per-term RANK window → per-term agg whose collect holds ≤5 ids of
+    — the shape a search shard stores). One explode → exchange on term →
+    (doc, term) agg → per-term RANK window → per-term agg, all in the
+    stage after that one exchange, whose collect holds ≤5 ids of
     state (at 100 TB a stopword's complete postings would be the corpus
     itself, so the rank filter runs BEFORE aggregation buffers anything;
     production writes the full list sharded by (term, bucket) with the
@@ -283,7 +286,7 @@ def search_inverted_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(tokenize(F.col("text"))).alias("term"))
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    tf = term_frequencies(toks)
     # rank postings per term BEFORE aggregating so the collect_list holds
     # at most 5 ids per group — the unranked form buffered a term's ENTIRE
     # posting list in aggregation state (a stopword's list is the corpus).

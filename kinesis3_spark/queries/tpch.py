@@ -338,9 +338,11 @@ def q14_promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q15_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The scalar-max subquery is a 1-ROW AGGREGATE over the cached revenue
-    view, cross-broadcast back as an equality filter (the q11 global-
-    threshold pattern) — never a `Window.partitionBy()` global window,
+    """The scalar-max subquery is a 1-ROW AGGREGATE over the revenue view
+    (both consumers read its one exchange, ReusedExchange — one lineitem
+    scan and no cache to serve a rewritten file stale), cross-broadcast
+    back as an equality filter (the q11 global-threshold pattern) — never
+    a `Window.partitionBy()` global window,
     which would funnel all |suppliers-in-quarter| rows (10k x SF) through
     ONE task at extreme SF. Two cheap passes of the |suppliers| rollup
     replace the single-partition sort. Revenue is an exact integer-cents
@@ -353,15 +355,19 @@ def q15_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
         _exact_revenue_spark().alias("total_revenue")
     )
-    revenue = revenue.cache()
     mx = revenue.agg(F.max("total_revenue").alias("mx"))
     top = (
         revenue.join(F.broadcast(mx))
         .where(F.col("total_revenue") == F.col("mx"))
         .select("supplier_no", "total_revenue")
     )
-    s = _t(spark, sf_dir, "supplier")
-    return s.join(top, F.col("s_suppkey") == F.col("supplier_no")).select(
+    # a NULL key names no supplier: filtered here, and the join is the
+    # null-safe form of the same equality, because an `=` join infers
+    # isnotnull(supplier_no) and pushes it into the top side's lineitem
+    # scan alone — the two revenue subtrees then differ, and lineitem is
+    # scanned twice instead of once through a ReusedExchange
+    s = _t(spark, sf_dir, "supplier").where(F.col("s_suppkey").isNotNull())
+    return s.join(top, F.col("s_suppkey").eqNullSafe(F.col("supplier_no"))).select(
         "s_suppkey", "s_name", "total_revenue"
     )
 

@@ -127,13 +127,14 @@ def q11_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11's HAVING-against-global-total shape on the lineitem
     part-value rollup (the corpus has no partsupp). lineitem collapses to
     |parts| rows first; the global threshold is a 1-row aggregate OVER THAT
-    VIEW (cached, two cheap passes of |parts| rows — never a second
-    lineitem scan) cross-broadcast back as a filter. Revenue uses the
+    VIEW cross-broadcast back as a filter. Both consumers read the one
+    rollup exchange (ReusedExchange: one lineitem scan, two cheap passes
+    of |parts| rows) with no cache, so a rewritten lineitem file is read
+    again rather than served from a cached plan. Revenue uses the
     exact integer-cents sum so the threshold comparison can't flip on
     float summation order."""
     li = _t(spark, sf_dir, "lineitem")
     pr = li.groupBy("l_partkey").agg(_exact_revenue_spark().alias("value"))
-    pr = pr.cache()
     thresh = pr.agg((F.sum("value") * 0.0005).alias("thresh"))
     return (
         pr.join(F.broadcast(thresh))

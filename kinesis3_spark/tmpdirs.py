@@ -18,9 +18,12 @@ file source tracks). ``build`` is called as ``build(scratch, *params)``
 where ``scratch`` is a fresh directory from ``mkdtemp``. A build that
 writes into ``scratch`` gets a path-valued entry: it rebuilds if
 ``scratch`` is gone. A build that leaves ``scratch`` empty has the
-directory removed at once. A stale entry is released when it is replaced: its scratch
-directory is removed and every persisted DataFrame in its value (the
-value itself or a member of a value tuple) is unpersisted.
+directory removed at once. A build that registers catalog tables names
+them after its scratch dir (the dir's basename, or that plus a suffix)
+and returns the names. A stale entry is released when it is replaced: its
+scratch directory is removed, every persisted DataFrame in its value (the
+value itself or a member of a value tuple) is unpersisted, and every
+catalog table it named is dropped.
 ``clear(kind=None)`` releases every entry of ``kind`` (all entries when
 ``None``).
 
@@ -79,9 +82,15 @@ def _fingerprint(path: str) -> tuple | None:
 
 
 def _release(scratch: str | None, value) -> None:
+    tag = os.path.basename(scratch) if scratch is not None else None
     for v in value if isinstance(value, tuple) else (value,):
         if getattr(v, "is_cached", False):  # a persisted DataFrame
             v.unpersist()
+        elif tag is not None and isinstance(v, str) and v.startswith(tag):
+            # a catalog table named after the scratch dir
+            from pyspark.sql import SparkSession
+
+            SparkSession.builder.getOrCreate().sql(f"DROP TABLE IF EXISTS `{v}`")
     if scratch is not None:
         _remove(scratch)
 

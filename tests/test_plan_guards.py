@@ -318,3 +318,30 @@ def test_market_basket_builds_lazily(spark, sf_dir, monkeypatch):
     monkeypatch.undo()
     top = df.limit(1).collect()
     assert top and top[0]["support_ppm"] > 0
+
+
+# The queries that count term frequency with `functions.text.term_frequencies`.
+TERM_FAMILY = (
+    "llm_tfidf_top_terms",
+    "search_bm25_topk",
+    "search_bm25_prf",
+    "search_inverted_postings",
+    "search_hybrid_rrf_topk",
+    "search_hybrid_rrf_ann",
+)
+
+
+def test_term_statistics_shuffle_the_tokens_once(spark, sf_dir):
+    """tf is counted on the token stream hash-partitioned by term, so no
+    term-family plan shuffles on (doc_id, term) and then again on term:
+    the (doc, term) aggregate and the per-term df window or groupBy run in
+    the stage after the one term exchange."""
+    from tools.plan_audit import key_names, nested_exchanges
+
+    doc_term, term = frozenset({"doc_id", "term"}), frozenset({"term"})
+    for name in TERM_FAMILY:
+        pairs = {
+            (key_names(k1), key_names(k2))
+            for k1, k2 in nested_exchanges(QUERIES[name](spark, sf_dir))
+        }
+        assert (term, doc_term) not in pairs, (name, pairs)

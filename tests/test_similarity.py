@@ -79,20 +79,21 @@ def test_semdedup_finds_planted_dups_within_cells(spark, planted):
     pairs must be a subset of the exact all-pairs truth (cell bounding
     can only lose pairs, never invent them)."""
     emb, expected = planted
+    C = S.semdedup_centroids(emb, n_centroids=8)
     truth = {
         (r.id_a, r.id_b)
         for r in S.embedding_neardup_pairs(emb, 0.9).collect()
     }
     found = {
         (r.id_a, r.id_b)
-        for r in S.semdedup_pairs(emb, 0.9, n_centroids=8, n_assign=1).collect()
+        for r in S.semdedup_pairs(emb, 0.9, C, n_assign=1).collect()
     }
     assert found <= truth
     assert {(p, d) for p, d in expected.items()} <= found
     # soft assignment only widens coverage, never shrinks it
     found4 = {
         (r.id_a, r.id_b)
-        for r in S.semdedup_pairs(emb, 0.9, n_centroids=8, n_assign=4).collect()
+        for r in S.semdedup_pairs(emb, 0.9, C, n_assign=4).collect()
     }
     assert found <= found4 <= truth
 
@@ -138,7 +139,7 @@ def test_semdedup_cell_count_derives_from_corpus_size(spark):
         found = {
             (r.id_a, r.id_b)
             for r in S.semdedup_pairs(
-                emb, 0.9, n_assign=4, target_cell=tc
+                emb, 0.9, S.semdedup_centroids(emb, target_cell=tc), n_assign=4
             ).collect()
         }
         truth = {

@@ -189,22 +189,28 @@ def test_warm_q3_job_budget(spark, sf_dir):
 
 
 # Jobs of a warm build plus noop write at the fixture SF for the queries
-# that read the memoized document statistics (`decontam.doc_stats`) or
-# compute q21 from one lineitem aggregate. Each build alone starts none.
+# that read the memoized document statistics (`decontam.doc_stats`) or the
+# memoized SemDeDup cells, that count tf on the term-partitioned token
+# stream (`functions.text.term_frequencies`), or that compute q21 from one
+# lineitem aggregate. Each build alone starts none.
 WARM_JOBS = {
     "q21_waiting_suppliers": 7,
-    "llm_tfidf_top_terms": 4,
-    "search_bm25_topk": 4,
-    "search_hybrid_rrf_topk": 7,
+    "llm_tfidf_top_terms": 3,
+    "search_bm25_topk": 3,
+    "search_hybrid_rrf_topk": 6,
+    "search_inverted_postings": 2,
+    "dedup_semdedup_cells": 6,
 }
 
 
 @pytest.mark.parametrize("name", sorted(WARM_JOBS))
 def test_warm_job_budget(spark, sf_dir, name):
     """A warm build is pure planning: the corpus statistics TF-IDF and
-    BM25 need are memoized per documents file, so no action runs before
-    the write; and q21 runs its one aggregate's jobs, not the two scans
-    and three shuffles of the semi-join shape."""
+    BM25 need are memoized per documents file and the SemDeDup cells per
+    embeddings file, so no action runs before the write; the term
+    statistics count tf in the stage after their one exchange on term;
+    and q21 runs its one aggregate's jobs, not the two scans and three
+    shuffles of the semi-join shape."""
     from kinesis3_spark.queries import QUERIES
 
     built = []
@@ -320,6 +326,47 @@ def _append_orders(sf: str) -> None:
     pq.write_table(pa.concat_tables([orders, added]), f"{sf}/orders.parquet")
 
 
+def _append_lineitem(sf: str) -> None:
+    """Rewrite ``sf``'s lineitem.parquet in place with 10 copies of its
+    first line under new order keys, shipped in 1999-Q1 at a price that
+    makes that line's part and supplier the top revenue ones."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    li = pq.read_table(f"{sf}/lineitem.parquet")
+    first = max(li["l_orderkey"].to_pylist()) + 1
+    added = li.slice(0, 1).take([0] * 10)
+    for name, values in (
+        ("l_orderkey", pa.array(range(first, first + 10), pa.int64())),
+        ("l_extendedprice", pa.array([1e6] * 10)),
+        ("l_shipdate", pa.array([datetime.datetime(1999, 2, 1)] * 10)),
+    ):
+        i = li.schema.get_field_index(name)
+        added = added.set_column(i, name, values.cast(li.schema.field(i).type))
+    pq.write_table(pa.concat_tables([li, added]), f"{sf}/lineitem.parquet")
+
+
+@pytest.mark.parametrize(
+    "name", ["q11_important_part_value", "q15_top_revenue_supplier"]
+)
+def test_lineitem_rollups_follow_a_rewritten_lineitem_file(spark, sf_dir, tmp_path, name):
+    """A query that reads its lineitem rollup twice (the rows and a global
+    scalar over them) answers from the rewritten file once lineitem is
+    rewritten in place, not from a relation an earlier call cached."""
+    from kinesis3_spark.queries import ORACLE, QUERIES
+    from kinesis3_spark.sources import TABLES
+
+    sf = copy_corpus(sf_dir, tmp_path / "sf")
+    QUERIES[name](spark, sf).collect()
+    _append_lineitem(sf)
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+    assert_parity(QUERIES[name](spark, sf), con, ORACLE[name])
+
+
 def _copy_into_src0(sf: str) -> None:
     """Rewrite ``sf``'s documents.parquet in place with src0 copies of the
     three longest documents of other sources, so the src0 history changes."""
@@ -352,17 +399,23 @@ _BUCKETED_REWRITES = {
 def test_bucketed_tables_follow_a_rewritten_file(spark, sf_dir, tmp_path, name):
     """A bucketed catalog table built from a corpus file is built again
     once that file is rewritten in place: the query matches its oracle on
-    the new file, not on the table an earlier call wrote."""
+    the new file, not on the table an earlier call wrote, and the tables
+    the earlier call registered are dropped from the catalog."""
     from kinesis3_spark.queries import ORACLE, QUERIES
     from kinesis3_spark.sources import TABLES
 
+    tables = lambda: {t.name for t in spark.catalog.listTables()}
     sf = copy_corpus(sf_dir, tmp_path / "sf")
+    before = tables()
     QUERIES[name](spark, sf).collect()
+    first = tables() - before
+    assert first
     _BUCKETED_REWRITES[name](sf)
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
     assert_parity(QUERIES[name](spark, sf), con, ORACLE[name])
+    assert not first & tables()
 
 
 def test_load_table_sees_a_rewritten_schema(spark, sf_dir, tmp_path):
