@@ -537,7 +537,10 @@ def _bpe_train(
     columns (w, enc, f) — every merge applied to `enc` — and the merge
     list [(round, pair, n)]). One definition for the merge-sequence
     query and the corpus-encode query, so tie-break/guard semantics
-    cannot drift between them."""
+    cannot drift between them. The vocab table is cached for the rounds
+    and unpersisted before returning, as in `unigram._train_unigram`: a
+    cached plan outlives the build and would serve its rows to later
+    plans over a rewritten documents file."""
     d = _t(spark, sf_dir, "documents")
     vocab = (
         d.select(F.explode(T.tokenize(F.col("text"))).alias("w"))
@@ -549,32 +552,35 @@ def _bpe_train(
     )
     merges: list[tuple[int, str, int]] = []
     cur = vocab
-    for r in range(1, _BPE_ROUNDS + 1):
-        pairs = (
-            cur.select(
-                F.split(
-                    F.expr("substring(enc, 2, length(enc) - 2)"), r"\)\("
-                ).alias("syms"),
-                "f",
+    try:
+        for r in range(1, _BPE_ROUNDS + 1):
+            pairs = (
+                cur.select(
+                    F.split(
+                        F.expr("substring(enc, 2, length(enc) - 2)"), r"\)\("
+                    ).alias("syms"),
+                    "f",
+                )
+                .select(F.explode(F.expr(_BPE_PAIRS_EXPR)).alias("pair"), "f")
             )
-            .select(F.explode(F.expr(_BPE_PAIRS_EXPR)).alias("pair"), "f")
-        )
-        best = (
-            pairs.groupBy("pair")
-            .agg(F.sum("f").cast("bigint").alias("n"))
-            .orderBy(F.col("n").desc(), "pair")
-            .limit(1)
-            .collect()  # bounded: exactly 1 row per superstep
-        )
-        if not best:
-            break  # vocabulary fully merged before N rounds
-        pair, n = best[0]["pair"], best[0]["n"]
-        merges.append((r, pair, int(n)))
-        a, b = pair.split(" ")
-        # a, b are ^[a-z0-9]+$ by the vocab filter — safe literal inline
-        cur = cur.withColumn(
-            "enc", F.expr(f"replace(enc, '({a})({b})', '({a}{b})')")
-        )
+            best = (
+                pairs.groupBy("pair")
+                .agg(F.sum("f").cast("bigint").alias("n"))
+                .orderBy(F.col("n").desc(), "pair")
+                .limit(1)
+                .collect()  # bounded: exactly 1 row per superstep
+            )
+            if not best:
+                break  # vocabulary fully merged before N rounds
+            pair, n = best[0]["pair"], best[0]["n"]
+            merges.append((r, pair, int(n)))
+            a, b = pair.split(" ")
+            # a, b are ^[a-z0-9]+$ by the vocab filter — safe literal inline
+            cur = cur.withColumn(
+                "enc", F.expr(f"replace(enc, '({a})({b})', '({a}{b})')")
+            )
+    finally:
+        vocab.unpersist()
     return cur, merges
 
 
@@ -621,8 +627,9 @@ def llm_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: training as in llm_bpe_merge_loop (cached |vocab|-row table,
     one bounded argmax per round); encoding adds ONE aggregate over the
-    same cache plus a distinct-symbol count (explode over |vocab| rows
-    — symbol space, never the corpus)."""
+    vocab table (rebuilt from documents: the training cache is released)
+    plus a distinct-symbol count (explode over |vocab| rows — symbol
+    space, never the corpus)."""
     final, merges = _bpe_train(spark, sf_dir)
     syms = final.select(
         "w", "f",

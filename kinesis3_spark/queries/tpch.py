@@ -41,15 +41,21 @@ def _exact_revenue_spark() -> F.Column:
     (exact, overflow-safe to ~9e14 dollars), and dividing once yields the
     bit-identical double on every engine, so no final rounding is needed.
     Map-side partial aggregation still applies — it's a plain sum."""
+    return _revenue_e4_spark().cast("double") / 10000.0
+
+
+def _revenue_e4_spark() -> F.Column:
+    """The BIGINT sum of revenue in ten-thousandths under the exact sum."""
     term = F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
-    return F.sum(F.round(term, 0).cast("bigint")).cast("double") / 10000.0
+    return F.sum(F.round(term, 0).cast("bigint"))
 
 
-# DuckDB spelling of the same exact-integer revenue sum.
-_EXACT_REVENUE_SQL = (
-    "CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT))"
-    " AS DOUBLE) / 10000.0"
-)
+# DuckDB spelling of the same exact-integer revenue sum. DuckDB sums a
+# BIGINT to a HUGEINT; _REVENUE_E4_SQL casts it back so both engines
+# compare BIGINTs.
+_REVENUE_E4_SUM = "sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT))"
+_REVENUE_E4_SQL = "CAST(" + _REVENUE_E4_SUM + " AS BIGINT)"
+_EXACT_REVENUE_SQL = "CAST(" + _REVENUE_E4_SUM + " AS DOUBLE) / 10000.0"
 
 
 # --------------------------------------------------------------------------

@@ -28,7 +28,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .relational import _t
-from .tpch import _EXACT_REVENUE_SQL, _exact_revenue_spark
+from .tpch import (
+    _EXACT_REVENUE_SQL,
+    _REVENUE_E4_SQL,
+    _exact_revenue_spark,
+    _revenue_e4_spark,
+)
 from . import query
 
 
@@ -107,19 +112,21 @@ def q8_national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Q11-shape: aggregate view + global-fraction scalar threshold.
+# Q11-shape: aggregate view + global scalar threshold.
 # --------------------------------------------------------------------------
 @query(
     "q11_important_part_value",
     oracle="""
     WITH pr AS (
-      SELECT l_partkey, """ + _EXACT_REVENUE_SQL + """ AS value
+      SELECT l_partkey, """ + _REVENUE_E4_SQL + """ AS v
       FROM lineitem
       GROUP BY l_partkey
+    ), tot AS (
+      SELECT CAST(sum(v) AS BIGINT) AS total, count(*) AS n_parts FROM pr
     )
-    SELECT l_partkey, value
-    FROM pr
-    WHERE value > (SELECT 0.0005 * sum(value) FROM pr)
+    SELECT l_partkey, CAST(v AS DOUBLE) / 10000.0 AS value
+    FROM pr, tot
+    WHERE 2 * v * n_parts > 3 * total
     ORDER BY value DESC, l_partkey
     """,
 )
@@ -130,16 +137,22 @@ def q11_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     VIEW cross-broadcast back as a filter. Both consumers read the one
     rollup exchange (ReusedExchange: one lineitem scan, two cheap passes
     of |parts| rows) with no cache, so a rewritten lineitem file is read
-    again rather than served from a cached plan. Revenue uses the
-    exact integer-cents sum so the threshold comparison can't flip on
-    float summation order."""
+    again rather than served from a cached plan.
+
+    A part is kept when its revenue exceeds 1.5x the mean part revenue,
+    a threshold that keeps a similar share of parts at every scale
+    (TPC-H instead scales its fixed fraction by 1/SF). The comparison
+    runs on exact BIGINT ten-thousandths, ``2 * v * n_parts > 3 *
+    total``, so it can't flip on float summation order or division."""
     li = _t(spark, sf_dir, "lineitem")
-    pr = li.groupBy("l_partkey").agg(_exact_revenue_spark().alias("value"))
-    thresh = pr.agg((F.sum("value") * 0.0005).alias("thresh"))
+    pr = li.groupBy("l_partkey").agg(_revenue_e4_spark().alias("v"))
+    tot = pr.agg(
+        F.sum("v").alias("total"), F.count(F.lit(1)).alias("n_parts")
+    )
     return (
-        pr.join(F.broadcast(thresh))
-        .where(F.col("value") > F.col("thresh"))
-        .select("l_partkey", "value")
+        pr.join(F.broadcast(tot))
+        .where(2 * F.col("v") * F.col("n_parts") > 3 * F.col("total"))
+        .select("l_partkey", (F.col("v").cast("double") / 10000.0).alias("value"))
         .orderBy(F.col("value").desc(), "l_partkey")
     )
 

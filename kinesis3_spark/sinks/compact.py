@@ -12,16 +12,21 @@ see a half-written state.
 
 `coalesce` (not `repartition`) on the shrink path: it merges input splits
 without a shuffle — the rewrite cost is one read + one write, no exchange.
+
+The rewrite is written to `<path>.__next` and swapped in with the store's
+staged swap (sinks/upsert.py), so a crash at any point leaves `path` or
+`<path>.__prev` holding the complete table, and the next write over
+`path` finishes or undoes the swap first.
 """
 
 from __future__ import annotations
 
 import math
 import os
-import shutil
-import uuid
 
 from pyspark.sql import SparkSession
+
+from .upsert import _NEXT, _recover_swap, _swap_in
 
 
 def _dir_bytes(path: str) -> int:
@@ -43,19 +48,10 @@ def compact_parquet(
     Returns the number of output files. Local-filesystem directory swap; on
     an object store the same flow is write-to-staging + prefix rename.
     """
+    _recover_swap(path)
     n_files = max(1, math.ceil(_dir_bytes(path) / target_file_bytes))
-    staging = f"{path}.__compact_{uuid.uuid4().hex[:8]}"
-    spark.read.parquet(path).coalesce(n_files).write.mode("overwrite").parquet(staging)
-    backup = f"{path}.__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, backup)
-    try:
-        os.rename(staging, path)
-    except OSError:
-        # the gap between the two renames is the swap's exposed window
-        # (review note r6): if the second rename fails, ROLL BACK so
-        # readers find the original directory, not a missing path.
-        os.rename(backup, path)
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    shutil.rmtree(backup, ignore_errors=True)  # best-effort; orphan is inert
+    spark.read.parquet(path).coalesce(n_files).write.mode("overwrite").parquet(
+        path + _NEXT
+    )
+    _swap_in(path)
     return n_files

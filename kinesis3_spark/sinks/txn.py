@@ -1,57 +1,38 @@
 """Manifest-transactional Parquet table: MVCC by atomic manifest swap.
 
-Composes the r7 manifest-consistent reader (queries/llmprep.py:336) with
-the keyed upsert sink (sinks/upsert.py:49) so the reference's Q4/Q5 merge
-path (src/kinesis3/db.clj:113-134 flush-events!) gets torn-read immunity
-without Delta/Iceberg (neither importable in this environment; this is
-the poor-man's transaction log an immutable-file layout affords):
+Composes the manifest-consistent reader of ``queries/llmprep.py`` with
+the keyed upsert of ``sinks/upsert.py``, so the reference's merge path
+(the Postgres ``events`` upsert) gets torn-read immunity without
+Delta/Iceberg (neither is importable in this environment):
 
   * Data files are IMMUTABLE: every commit writes into a fresh
-    ``snap-<epoch>/`` directory and never touches a file a reader might
-    hold open. There is no read-then-overwrite window, so the merge needs
-    no staging directory (contrast upsert_parquet, which rewrites the
-    whole table and swaps it in).
+    ``snap-<epoch>-<nonce>/`` directory and never touches a file a
+    reader might hold open, so the merge needs no staging directory
+    (contrast upsert_parquet, which rewrites the whole table and swaps
+    it in).
   * The table's visible state is exactly the file list in
     ``_MANIFEST.json``. Commit = write files → fsync → ``os.replace`` the
     manifest (atomic on POSIX). A reader that goes through the manifest
-    sees the pre-commit snapshot or the post-commit snapshot, never a
-    torn mix; a crash mid-commit leaves unreferenced garbage files and a
-    fully intact previous snapshot.
-  * Write amplification is bounded by HASH-BUCKET pruning, the same idea
-    as partition pruning but keyed: the table is laid out in
-    ``n_buckets`` portable-hash buckets of the merge key, a batch touches
-    only the buckets its keys hash into, and a commit rewrites those
-    buckets while CARRYING FORWARD the untouched buckets' file references
-    unchanged in the new manifest. At 100 TB a micro-batch
-    merge costs O(touched buckets), not O(table) — the Delta MERGE
-    file-rewrite shape, expressed with a JSON manifest.
+    sees the pre-commit or the post-commit snapshot, never a torn mix; a
+    crash mid-commit leaves unreferenced files and an intact previous
+    snapshot.
+  * The table is laid out in ``n_buckets`` portable-hash buckets of the
+    merge key: a batch rewrites only the buckets its keys hash into and
+    carries every untouched file reference forward unchanged.
 
 Row-level deletes ride DELETION VECTORS (delete_where): a delete is a
-metadata-only commit referencing position sidecars, never a data-file
-rewrite; scans anti-join the positions out. Streaming ingest is
-EXACTLY-ONCE: the manifest's per-app version watermark (Delta's
-txnAppId/txnVersion) turns foreachBatch's at-least-once replays into
-no-ops for both append and upsert commits.
+metadata-only commit referencing position sidecars; scans anti-join the
+positions out. Streaming ingest is EXACTLY-ONCE: the manifest's per-app
+version watermark (Delta's txnAppId/txnVersion) turns foreachBatch's
+at-least-once replays into no-ops.
 
-Multi-writer optimistic concurrency (round 8): the commit point is the
-EXCLUSIVE CREATE (O_CREAT|O_EXCL) of the epoch's versioned manifest —
-exactly one writer can claim ``_MANIFEST.v<epoch>.json``, so two writers
-that both computed epoch N serialize: the loser gets CommitConflict,
-re-reads the winner's snapshot, re-merges its batch, and retries at N+1
-(Delta's log-entry rename arbitration on a POSIX directory). Data-file
-safety needs no locking because every attempt writes into its own
-uuid-suffixed ``snap-<epoch>-<nonce>/`` directory — a losing attempt's
-files are unreferenced garbage for vacuum, never a torn table. The
-vacuum/writer interaction is MACHINE-CHECKED (round 10; staging gap
-closed round 11): every commit heartbeats a lease file under
-``_leases/`` for its duration, and vacuum refuses to run
-destructively while an unexpired lease exists (``force=True``
-overrides; crashed writers' leases expire after _LEASE_TTL_SECONDS) —
-reaping a versioned manifest re-opens its epoch number to exclusive
-create, so the old rule "don't vacuum concurrently with stalled
-writers" is now enforced, not just documented; the commit
-additionally re-checks the current pointer after claiming to shrink
-the window a forced vacuum would leave.
+Multi-writer optimistic concurrency: the commit point is the EXCLUSIVE
+CREATE (O_CREAT|O_EXCL) of the epoch's versioned manifest — exactly one
+writer can claim ``_MANIFEST.v<epoch>.json``, so two writers that both
+computed epoch N serialize: the loser gets CommitConflict, re-reads the
+winner's snapshot, re-merges its batch and retries at N+1. Data files
+need no locking because every attempt writes into its own uuid-suffixed
+directory; a losing attempt's files are never referenced.
 
 LOCAL-FILESYSTEM ASSUMPTION: every safety argument above rests on
 POSIX-local primitives — O_CREAT|O_EXCL exclusive create, atomic
@@ -82,164 +63,6 @@ from .upsert import _dedup_last
 MANIFEST = "_MANIFEST.json"
 _BUCKET_COL = "__bucket"
 _EPOCH0 = _dt.datetime(1970, 1, 1)
-
-# ---- manifest-log checkpointing (VERDICT r11 'Next round' #4) --------
-# Snapshot reads are O(1) via the _MANIFEST.json pointer, but the walks
-# that consult PER-EPOCH manifests — DESCRIBE HISTORY and vacuum's
-# historical-reference sweep — were O(epochs); at 10k+ commits that is
-# 10k driver-side JSON opens per call. Delta solves this with periodic
-# checkpoint files named by _last_checkpoint; the analog here is a
-# consolidated _CHECKPOINT.v<epoch>.json (per-epoch history records +
-# the cumulative file-reference set) found via the _LAST_CHECKPOINT
-# pointer. Walks start from the checkpoint and read only the manifests
-# ABOVE it (≤ _CHECKPOINT_INTERVAL + retention window). Every
-# _CHECKPOINT_INTERVAL'th commit refreshes it best-effort (a checkpoint
-# failure never fails the commit — the walk just stays on the older
-# one). The checkpoint is derived, read-optional metadata: a reader
-# that ignores it gets identical results, just slower, so it is
-# deliberately NOT a protocol reader feature (the stats/bloom rule).
-_CHECKPOINT_PTR = "_LAST_CHECKPOINT"
-_CHECKPOINT_INTERVAL = 10
-
-
-def _checkpoint_path(path: str, epoch: int) -> str:
-    return os.path.join(path, f"_CHECKPOINT.v{epoch:06d}.json")
-
-
-def read_checkpoint(path: str) -> dict | None:
-    """The latest consolidated checkpoint, or None (missing pointer,
-    missing/garbled file — callers degrade to the full manifest walk).
-    ``{"epoch": E, "floor": f, "history": [newest-first records for
-    epochs f..E], "refs": [every data/dv/bloom path referenced by any
-    manifest ≤ E readable when the checkpoint was built]}``."""
-    try:
-        with open(os.path.join(path, _CHECKPOINT_PTR)) as fh:
-            ptr = json.load(fh)
-        with open(_checkpoint_path(path, int(ptr["epoch"]))) as fh:
-            ck = json.load(fh)
-    except (OSError, ValueError, KeyError, TypeError):
-        return None
-    if not (
-        isinstance(ck, dict)
-        and isinstance(ck.get("history"), list)
-        and isinstance(ck.get("refs"), list)
-        and isinstance(ck.get("epoch"), int)
-        and isinstance(ck.get("floor"), int)
-    ):
-        return None
-    return ck
-
-
-def _history_record(ep: int, m: dict) -> dict:
-    """One DESCRIBE HISTORY row from a manifest — ONE definition shared
-    by the live walk and the checkpoint builder, so the two can never
-    drift (the identity contract pinned in tests/test_txn_checkpoint)."""
-    op = dict(m.get("op") or {})
-    return {
-        "epoch": ep,
-        "operation": op.pop("name", "UNKNOWN"),
-        "ts": op.pop("ts", None),
-        "params": op,
-        "n_files": len(m["files"]),
-    }
-
-
-def _manifest_refs(m: dict) -> set[str]:
-    refs: set[str] = set()
-    refs.update(x["path"] for x in m["files"])
-    for x in m["files"]:
-        refs.update(x.get("dv", []))
-        refs.update((x.get("bloom") or {}).values())
-    return refs
-
-
-def write_checkpoint(path: str) -> int:
-    """Write/refresh the consolidated checkpoint up to the CURRENT epoch
-    and swap the _LAST_CHECKPOINT pointer; returns the checkpointed
-    epoch (0 for an uncreated table). Incremental: manifests are read
-    only for epochs ABOVE the previous checkpoint, so the amortized cost
-    over a table's life is one read per epoch total. The file then the
-    pointer are published with the tmp+fsync+rename discipline of the
-    manifest pointer itself; superseded checkpoint files (all but the
-    previous one, kept for crash headroom) are reaped here."""
-    cur = read_manifest(path)
-    if cur is None:
-        return 0
-    prev = read_checkpoint(path)
-    epoch = cur["epoch"]
-    if prev is not None and prev["epoch"] >= epoch:
-        return prev["epoch"]
-    floor = prev["floor"] if prev is not None else 1
-    refs = set(prev["refs"]) if prev is not None else set()
-    older = list(prev["history"]) if prev is not None else []
-    newer: list[dict] = []
-    for ep in range(prev["epoch"] + 1 if prev is not None else 1, epoch + 1):
-        try:
-            m = cur if ep == epoch else read_manifest(path, ep)
-        except ProtocolUnsupported:
-            raise  # a future-writer epoch must never be summarized away
-        except ValueError:
-            # reaped below this epoch: the live history walk would stop
-            # here, so records beneath the gap must not survive either
-            floor = ep + 1
-            newer = []
-            continue
-        newer.append(_history_record(ep, m))
-        refs |= _manifest_refs(m)
-    history = [r for r in reversed(newer) if r["epoch"] >= floor] + [
-        r for r in older if r["epoch"] >= floor
-    ]
-    payload = json.dumps(
-        {"epoch": epoch, "floor": floor, "history": history,
-         "refs": sorted(refs)},
-        indent=1,
-    )
-    _swap_small_file(path, _checkpoint_path(path, epoch), payload)
-    _swap_small_file(
-        path,
-        os.path.join(path, _CHECKPOINT_PTR),
-        json.dumps({"epoch": epoch}),
-    )
-    keep = {epoch, prev["epoch"]} if prev is not None else {epoch}
-    for f in os.listdir(path):
-        if f.startswith("_CHECKPOINT.v"):
-            v = int(f[len("_CHECKPOINT.v"):].split(".")[0])
-            if v not in keep:
-                try:
-                    os.remove(os.path.join(path, f))
-                except OSError:
-                    pass  # a racing writer's jurisdiction
-    return epoch
-
-
-def _trim_checkpoint(path: str, keep_from: int) -> None:
-    """Raise the checkpoint's floor after vacuum reaped manifests below
-    ``keep_from``, so checkpoint-served DESCRIBE HISTORY stays identical
-    to what the live manifest walk can still prove. refs are kept intact
-    — they index files by path, and vacuum only consults them for files
-    that still exist."""
-    ck = read_checkpoint(path)
-    if ck is None or ck["floor"] >= keep_from:
-        return
-    ck["floor"] = keep_from
-    ck["history"] = [r for r in ck["history"] if r["epoch"] >= keep_from]
-    _swap_small_file(
-        path, _checkpoint_path(path, ck["epoch"]), json.dumps(ck, indent=1)
-    )
-
-
-def _swap_small_file(table: str, dest: str, payload: str) -> None:
-    """tmp + fsync + atomic rename for driver-side metadata sidecars (the
-    _swap_pointer discipline without the directory fsync — checkpoint
-    loss is always recoverable by rebuild)."""
-    import uuid
-
-    tmp = os.path.join(table, f".{os.path.basename(dest)}.{uuid.uuid4().hex[:8]}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(payload)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, dest)
 
 
 class CommitConflict(RuntimeError):
@@ -364,7 +187,7 @@ def _file_may_match(stats: dict | None, col: str, op: str, *vals) -> bool:
 # ---- bloom-filter file skipping (Delta's bloom filter index) ----------
 #
 # Zone maps prune predicates CORRELATED with file layout (time ranges on
-# an append log, cluster keys after OPTIMIZE); an equality probe on a
+# an append log); an equality probe on a
 # high-cardinality, layout-uncorrelated column (user id, request id) hits
 # every file's [min, max] and zone maps prune nothing. A per-file bloom
 # filter answers "might this file contain value v" with no false
@@ -382,7 +205,7 @@ def _bloom_key(v) -> tuple[str, bytes] | None:
     identically on the write and probe sides. The tag rides in the
     sidecar and a probe whose tag differs from the stored one is NOT
     bloom-answerable (int 7 vs float 7.0 hash differently but compare
-    equal in SQL — an untagged filter would false-negative, review r8).
+    equal in SQL — an untagged filter would false-negative).
     None = type not bloom-indexable. Negative zero normalizes to 0.0
     (repr differs, equality doesn't)."""
     e = _encode_stat(v)
@@ -414,8 +237,7 @@ def _harvest_bloom(
     harvest this is a driver loop over the JUST-WRITTEN files (columnar
     single-column reads); on a real cluster the filter is accumulated in
     the write tasks. Sidecar names embed the snap-dir nonce via the file
-    rel, so concurrent attempts never collide; a losing attempt's
-    sidecars are unreferenced garbage for vacuum."""
+    rel, so concurrent attempts never collide."""
     import base64
 
     import pyarrow.parquet as pq
@@ -475,10 +297,10 @@ def _harvest_bloom(
 @_functools.lru_cache(maxsize=4096)
 def _load_bloom(abs_sidecar: str) -> tuple[str | None, int, int, bytes]:
     """Sidecars are immutable and nonce-named, so caching on the absolute
-    path is safe across commits and vacuum/recreate cycles. Validates the
+    path is safe across commits. Validates the
     payload's internal consistency (integer m/k, enough bits for m) so a
     truncated-but-JSON-valid sidecar fails HERE as ValueError and the
-    caller degrades to a scan, never an IndexError mid-read (review r8)."""
+    caller degrades to a scan, never an IndexError mid-read."""
     import base64
 
     with open(abs_sidecar) as fh:
@@ -516,7 +338,7 @@ def _bloom_may_match(path: str, entry: dict, col: str, op: str, vals) -> bool:
     try:
         tag, m, k, bits = _load_bloom(os.path.join(path, ref))
     except (OSError, ValueError, KeyError, TypeError):
-        return True  # reaped/corrupt sidecar: scan the file
+        return True  # missing/corrupt sidecar: scan the file
     if tag != probe_tag:
         return True  # cross-type equality is not bloom-answerable
     return all(
@@ -529,7 +351,7 @@ def _entry_may_match(path: str, entry: dict, pred: tuple) -> bool:
     An IN-list evaluates PER VALUE — some single value must pass both
     checks; evaluating the two checks decoupled over the whole list is
     strictly weaker (value A passes stats, value B passes bloom, no
-    value passes both — review r8; matches the DS reader's semantics)."""
+    value passes both; matches the DS reader's semantics)."""
     col, op, vals = pred[0], pred[1], pred[2:]
     if op == "in":
         return any(
@@ -612,7 +434,7 @@ def _to_physical(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     # ONE select, never sequential withColumnRenamed: chained renames can
     # legally make one entry's logical name equal another entry's
     # physical name (rename b->c then a->b gives {c: b, b: a}), and a
-    # sequential walk would collide mid-flight (review r8 #1)
+    # sequential walk would collide mid-flight
     if not mapping or not any(c in mapping for c in df.columns):
         return df
     return df.select(
@@ -653,10 +475,10 @@ def _manifest_path(path: str, epoch: int | None = None) -> str:
 def read_manifest(path: str, epoch: int | None = None) -> dict | None:
     """The committed snapshot descriptor, or None for a not-yet-created
     table. ``{"epoch": int, "n_buckets": int, "files":
-    [{"path": rel, "bucket": int}, ...]}``. ``epoch`` reads a RETAINED
-    historical version (time travel — Delta's ``versionAsOf``): every
-    commit also files an immutable ``_MANIFEST.v<epoch>.json`` copy;
-    raises ValueError for an epoch vacuum has reaped, and for an epoch
+    [{"path": rel, "bucket": int}, ...]}``. ``epoch`` reads a historical
+    version (time travel — Delta's ``versionAsOf``): every commit also
+    files an immutable ``_MANIFEST.v<epoch>.json`` copy. Raises
+    ValueError for an epoch whose copy is missing, and for an epoch
     ABOVE the current pointer — a crash between the version-copy and the
     atomic swap can leave an uncommitted ``v<epoch+1>`` file behind, and
     the current manifest, not that residue, is the source of truth."""
@@ -672,16 +494,14 @@ def read_manifest(path: str, epoch: int | None = None) -> dict | None:
     except FileNotFoundError:
         if epoch is not None:
             raise ValueError(
-                f"epoch {epoch} is not retained (vacuumed) for table "
-                f"{path}"
+                f"epoch {epoch} is not retained for table {path}"
             ) from None
         return None
     _check_protocol(man, path)
     return man
 
 
-# -- protocol versioning (Delta's protocol action, VERDICT r10 agenda #7):
-# the manifest format has grown 15+ features; a reader from BEFORE a
+# -- protocol versioning (Delta's protocol action): a reader from BEFORE a
 # feature existed must refuse a table that REQUIRES it rather than
 # silently misread (e.g. ignore deletion vectors -> resurrect deleted
 # rows). Every commit stamps `protocol` = the minimum reader version +
@@ -702,11 +522,9 @@ _SUPPORTED_READER_FEATURES = frozenset(
 class ProtocolUnsupported(ValueError):
     """A manifest requires a reader version/feature this engine predates.
 
-    A DEDICATED subtype because several reader loops legitimately
-    `except ValueError` around read_manifest to mean "vacuum-reaped
-    history, skip it" — a protocol refusal caught by those handlers
-    would silently SKIP the epoch a newer writer committed instead of
-    surfacing it (review r11 #2); such loops re-raise this type."""
+    A ValueError subtype, so a caller that treats an unreadable epoch as
+    bad input still stops on it, while one that must tell "newer
+    format" from "no such epoch" can catch it alone."""
 
 
 # the WRITER half of forward compatibility: every payload builder copies
@@ -716,7 +534,9 @@ class ProtocolUnsupported(ValueError):
 # committing on top of a newer table (Delta gates this with writer
 # features). _publish_manifest refuses when the CURRENT manifest carries
 # keys outside this closed set; reads stay unaffected (a key that
-# changes read semantics must also appear in reader_features).
+# changes read semantics must also appear in reader_features). "op" is
+# the per-commit record an earlier build wrote; it stays known so such a
+# table still takes commits (_publish_manifest drops it).
 _KNOWN_MANIFEST_KEYS = frozenset({
     "epoch", "n_buckets", "stats_cols", "bloom_cols", "schema", "apps",
     "column_mapping", "dropped_cols", "generated_cols", "files", "op",
@@ -788,7 +608,7 @@ def _bucket_expr(key: str, n_buckets: int):
     # LWW merge, so they must land in a deterministic bucket rather than
     # hash to NULL — which would crash the touched-bucket collect and,
     # worse, write a __HIVE_DEFAULT_PARTITION__ dir the manifest harvest
-    # can't parse (review r8 #3).
+    # can't parse.
     key_s = F.coalesce(F.col(key).cast("string"), F.lit("\x00__null_key__"))
     return (portable_hash60(key_s) % n_buckets).cast("int")
 
@@ -799,17 +619,15 @@ def read_snapshot(
     buckets: set[int] | None = None,
     epoch: int | None = None,
     where: list[tuple] | None = None,
-    timestamp: str | None = None,
     _with_pos: bool = False,
-    _entries: list[dict] | None = None,
 ) -> DataFrame | None:
     """Scan the committed snapshot STRICTLY through the manifest's file
     list (never a directory listing — stray/partial files from a torn or
     concurrent commit are invisible). ``buckets`` prunes the scan to the
     named hash buckets' files: O(|touched files|) I/O, the read half of
     the bounded-write-amplification contract. ``epoch`` time-travels to a
-    retained historical version (immutable files + retained manifests
-    make every old snapshot fully reconstructible until vacuumed).
+    historical version (immutable files + versioned manifests make every
+    old snapshot fully reconstructible).
     ``where`` — ``[(col, op, v...)...]`` with ops ``== < <= > >= between
     in`` (conjunction; ``in`` takes splatted values) — DATA-SKIPS: files whose manifest min/max stats prove
     the predicate unsatisfiable are dropped from the scan before Spark
@@ -827,22 +645,11 @@ def read_snapshot(
     next to the data) so AQE plans it as a broadcast anti-join; files
     with no deletes pay nothing (the fast path below is untouched when
     no selected entry has a dv). Returns None when the table (or the
-    selected file set) has no committed files.
-
-    ``timestamp`` is Delta's ``timestampAsOf``: the snapshot of the
-    latest commit at or before the ISO-8601 UTC instant (epoch_as_of —
-    mutually exclusive with ``epoch``)."""
-    if timestamp is not None:
-        if epoch is not None:
-            # ValueError, not assert: under python -O the assert vanishes
-            # and the named epoch would be silently overridden (review
-            # r12 #8)
-            raise ValueError("pass epoch OR timestamp, not both")
-        epoch = epoch_as_of(path, timestamp)
+    selected file set) has no committed files."""
     man = read_manifest(path, epoch)
     if man is None:
         return None
-    entries = man["files"] if _entries is None else list(_entries)
+    entries = man["files"]
     if buckets is not None:
         entries = [e for e in entries if e["bucket"] in buckets]
     if where is not None:
@@ -902,7 +709,6 @@ def commit_snapshot(
     bloom_cols: list[str] | None = None,
     app_id: str | None = None,
     app_version: int | None = None,
-    op: dict | None = None,
     generated_cols: dict[str, str] | None = None,
 ) -> int:
     """Publish `merged` as the rewritten-buckets portion of the next
@@ -911,12 +717,12 @@ def commit_snapshot(
     replaces the old atomically. The nonce makes every ATTEMPT's data
     directory unique, so concurrent writers (and torn-commit retries)
     never touch each other's files — a losing attempt's directory is
-    unreferenced garbage for vacuum. The epoch itself is claimed by
-    exclusive create of the versioned manifest; losing that race raises
-    CommitConflict with nothing published. The bucket of each new file
-    is parsed from the layout this function itself wrote, so manifest
-    metadata can't drift from the physical files. fsync on the manifest
-    + directory makes the rename durable, not merely atomic.
+    never referenced. The epoch itself is claimed by exclusive create of
+    the versioned manifest; losing that race raises CommitConflict with
+    nothing published. The bucket of each new file is parsed from the
+    layout this function itself wrote, so manifest metadata can't drift
+    from the physical files. fsync on the manifest + directory makes the
+    rename durable, not merely atomic.
 
     ``app_id``/``app_version`` record a writer-application watermark in
     the manifest (Delta's ``txnAppId``/``txnVersion``): the committed
@@ -931,10 +737,9 @@ def commit_snapshot(
     ``base_man.epoch + 1`` and this function never re-reads the
     manifest: a writer that committed between the caller's read and
     this claim makes the exclusive create FAIL (CommitConflict) and the
-    caller re-merges from the winner's snapshot. Re-reading here was
-    the round-8 lost-update race — the re-read claimed the RACING
-    WINNER's epoch + 1 for output computed against the older snapshot,
-    silently erasing the interleaved commit (pinned by
+    caller re-merges from the winner's snapshot. A re-read here would
+    claim the racing winner's epoch + 1 for output computed against the
+    older snapshot, silently erasing the interleaved commit (pinned by
     tests/test_txn_concurrency.py::test_interleaved_commit_conflicts)."""
     import uuid
 
@@ -961,38 +766,16 @@ def commit_snapshot(
         raise ValueError(
             f"column name(s) {sorted(reused)} were DROPPED from this table; "
             "re-adding a dropped physical name would resurrect old files' "
-            "data under it (needs a full rewrite/vacuum of history first)"
+            "data under it"
         )
     epoch = (man["epoch"] if man else 0) + 1
-    snap = f"snap-{epoch:06d}-{uuid.uuid4().hex[:8]}"
-    snap_dir = os.path.join(path, snap)
-    # lease spans the WHOLE commit — data write, harvest, publish:
-    # until the manifest lands, this attempt's snap dir is unreferenced,
-    # which is exactly what vacuum reaps
-    _lease = _acquire_lease(path)
-    try:
-        (
-            merged.withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
-            .write.mode("overwrite")
-            .partitionBy(_BUCKET_COL)
-            .parquet(snap_dir)
-        )
-        return _finish_commit(
-            merged, path, key, n_buckets, man=man, carry=carry,
-            stats_cols=stats_cols, bloom_cols=bloom_cols, app_id=app_id,
-            app_version=app_version, op=op, gcols=gcols, cmap=cmap,
-            epoch=epoch, snap_dir=snap_dir,
-        )
-    finally:
-        _release_lease(_lease)
-
-
-def _finish_commit(
-    merged, path, key, n_buckets, *, man, carry, stats_cols, bloom_cols,
-    app_id, app_version, op, gcols, cmap, epoch, snap_dir,
-) -> int:
-    """Harvest + manifest build + publish — the tail of commit_snapshot,
-    split out so the writer lease wraps the whole commit in one try."""
+    snap_dir = os.path.join(path, f"snap-{epoch:06d}-{uuid.uuid4().hex[:8]}")
+    (
+        merged.withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
+        .write.mode("overwrite")
+        .partitionBy(_BUCKET_COL)
+        .parquet(snap_dir)
+    )
     new_entries = []
     for root, _dirs, fs in os.walk(snap_dir):
         for f in sorted(fs):
@@ -1002,15 +785,7 @@ def _finish_commit(
             part_dir = os.path.basename(os.path.dirname(rel))
             assert part_dir.startswith(f"{_BUCKET_COL}="), rel
             new_entries.append(
-                {
-                    "path": rel,
-                    "bucket": int(part_dir.split("=", 1)[1]),
-                    # file size: drives bin-packing compaction —
-                    # harvested from the walk this loop already does
-                    # (entries from pre-r9 manifests lack it;
-                    # consumers tolerate)
-                    "bytes": os.path.getsize(os.path.join(root, f)),
-                }
+                {"path": rel, "bucket": int(part_dir.split("=", 1)[1])}
             )
     stats_cols = list(
         stats_cols
@@ -1061,13 +836,11 @@ def _finish_commit(
         },
         indent=1,
     )
-    _publish_manifest(path, epoch, payload, op=op or {"name": "COMMIT"})
+    _publish_manifest(path, epoch, payload)
     return epoch
 
 
-def _publish_manifest(
-    path: str, epoch: int, payload: str, op: dict | None = None
-) -> None:
+def _publish_manifest(path: str, epoch: int, payload: str) -> None:
     """The commit protocol shared by every epoch publisher (data commits
     and metadata-only commits like row deletes): claim the epoch by
     EXCLUSIVE CREATE of the versioned manifest, fsync it (time-travel
@@ -1075,18 +848,16 @@ def _publish_manifest(
     ``_MANIFEST.json``. Raises CommitConflict with nothing visible when
     another writer won the epoch.
 
-    ``op`` stamps the commit with its operation record (Delta's
-    DESCRIBE HISTORY row): ``{"name": ..., **params}`` plus a UTC
-    timestamp — injected last, so a payload that copied the previous
-    manifest's keys never carries a stale operation forward. The
-    ``protocol`` stamp (min reader version + the read-critical features
-    this state actually uses) is likewise derived fresh here, never
+    The ``protocol`` stamp (min reader version + the read-critical
+    features this state actually uses) is derived fresh here, never
     carried, so it can only reflect the published content. Before
     claiming, the CURRENT manifest is checked for top-level keys this
     engine does not know (_KNOWN_MANIFEST_KEYS): the payload was built
     by copying known state, so publishing over a newer-format table
     would silently strip the future feature's metadata — refuse
     instead (the writer half of the protocol gate)."""
+    import fcntl
+
     cur = read_manifest(path)
     if cur is not None:
         unknown = set(cur) - _KNOWN_MANIFEST_KEYS
@@ -1098,75 +869,28 @@ def _publish_manifest(
                 "upgrade before writing"
             )
     d = json.loads(payload)
+    d.pop("op", None)  # an earlier build's per-commit record, never carried
     d["protocol"] = {
         "min_reader_version": _READER_VERSION,
         "reader_features": _required_reader_features(d),
     }
-    if op is not None:
-        d["op"] = {
-            **op,
-            "ts": _dt.datetime.now(_dt.timezone.utc).isoformat(
-                timespec="seconds"
-            ),
-        }
     payload = json.dumps(d, indent=1)
-    # WRITER LEASE: held across the claim/swap window (and re-created
-    # on every retry — the heartbeat), so a concurrent vacuum refuses
-    # instead of reaping this writer's claim or versioned manifest
-    # mid-commit. Metadata-only commits (delete_where, renames) get
-    # their lease here; data commits additionally hold one across
-    # their snap-dir write (commit_snapshot).
-    _lease = _acquire_lease(path)
-    try:
-        _publish_manifest_locked(path, epoch, payload)
-        if epoch % _CHECKPOINT_INTERVAL == 0:
-            # periodic consolidated checkpoint (Delta's every-10-commits
-            # default) — BEST-EFFORT: the commit above is already durable,
-            # and a failed/raced checkpoint only leaves walks on the older
-            # one, so nothing here may fail the publish. Built UNDER the
-            # writer lease (ADVICE r12): released first, a vacuum starting
-            # inside the build window could reap manifests and trim the
-            # floor mid-build, and the then-published stale-floor
-            # checkpoint would over-claim vacuumed epochs until the next
-            # vacuum re-trimmed it.
-            try:
-                write_checkpoint(path)
-            except Exception:
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "checkpoint of %s at epoch %d failed; the commit "
-                    "stands and walks stay on the older checkpoint",
-                    path, epoch, exc_info=True,
-                )
-    finally:
-        _release_lease(_lease)
-
-
-def _publish_manifest_locked(path: str, epoch: int, payload: str) -> None:
-    import fcntl
-
     # PRE-CLAIM GUARD: the pointer must name epoch-1 RIGHT NOW. A writer
-    # that stalled so long that the table advanced past its base AND
-    # vacuum reaped its target version file would otherwise win a fresh
-    # O_EXCL on the reopened number and publish stale output as forged
-    # history (review r9 #1 — the vacuum-reopened-epoch lost update).
-    # The guard leaves only a microsecond claim window, and vacuum's
-    # contract already requires operator-asserted writer quiescence.
-    cur0 = read_manifest(path)
-    if (cur0["epoch"] if cur0 else 0) != epoch - 1:
+    # whose base is stale conflicts before it creates anything, so a
+    # missing version file under a later pointer can never be claimed
+    # afresh and published as forged history.
+    if (cur["epoch"] if cur else 0) != epoch - 1:
         raise CommitConflict(
             f"table {path} no longer names epoch {epoch - 1}; re-merge "
             "from the current snapshot"
         )
     # COMMIT POINT: exclusive create of the versioned manifest claims the
     # epoch — exactly one concurrent writer wins; the loser's data files
-    # stay unreferenced (vacuum's problem) and it retries from the
-    # winner's snapshot. Written-then-fsynced FIRST (time-travel history),
-    # then the atomic swap of the current pointer — a crash between the
-    # two leaves the claimed version as residue ABOVE the pointer, which
-    # read_manifest refuses and repair/vacuum reap (review r8 #7
-    # durability retained).
+    # stay unreferenced and it retries from the winner's snapshot.
+    # Written-then-fsynced FIRST (time-travel history), then the atomic
+    # swap of the current pointer — a crash between the two leaves the
+    # claimed version as residue ABOVE the pointer, which read_manifest
+    # refuses and _repair_claim_residue repairs.
     vpath = _manifest_path(path, epoch)
     try:
         vfd = os.open(vpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
@@ -1186,8 +910,8 @@ def _publish_manifest_locked(path: str, epoch: int, payload: str) -> None:
         # this epoch's claim and pointer — our write+swap AND a
         # repairer's roll-forward/reclaim — serializes on an exclusive
         # flock of the claim file, with the pointer re-checked INSIDE
-        # the lock. Locking before the write closes the review-r9-2nd
-        # races: a repairer could otherwise (a) read a half-written
+        # the lock. Locking before the write closes two races: a
+        # repairer could otherwise (a) read a half-written
         # claim as torn and delete a claim that became complete a
         # moment later, and (b) its check-then-rename could land after
         # a third writer advanced the pointer, regressing the table.
@@ -1203,14 +927,9 @@ def _publish_manifest_locked(path: str, epoch: int, payload: str) -> None:
         # different inode, so the locks never met). We then just wrote
         # a claim nobody can see, on an unlinked inode. An empty claim
         # is never rolled forward, so nothing of ours was published:
-        # conflicting and re-merging is exactly right (review r9-2nd
-        # #1/#2 — this also guarantees the pointer never names an epoch
-        # whose durable history file is missing). Residual ambiguity:
-        # a vacuum that violates its writer-quiescence contract could
-        # reap a rolled-forward claim mid-stall and turn this into a
-        # spurious conflict (re-merge) — safe for LWW upserts, and the
-        # app_id/app_version fence is the exactly-once answer for
-        # increment-shaped merges.
+        # conflicting and re-merging is exactly right (this also
+        # guarantees the pointer never names an epoch whose durable
+        # history file is missing).
         try:
             ours = os.stat(vpath).st_ino == os.fstat(vfd).st_ino
         except OSError:
@@ -1262,112 +981,6 @@ def _swap_pointer(path: str, payload: str, epoch: int) -> None:
 # crashed writer's leavings, safe to repair
 _RESIDUE_GRACE_SECONDS = 10.0
 
-# ---- writer leases (VERDICT r9 'Next round' #3) --------------------
-# The commit protocol's one residual ambiguity was OPERATOR-ASSERTED:
-# "don't run vacuum concurrently with stalled writers" lived in a
-# docstring, and a contract-violating vacuum could reap a live writer's
-# claim (spurious conflict) or its in-flight snap directory. The lease
-# mechanizes the contract: every commit holds a heartbeat file under
-# _leases/ for its duration (re-created per retry iteration — the
-# heartbeat), and vacuum REFUSES while any unexpired lease exists
-# unless forced. A crashed writer's lease simply expires after
-# _LEASE_TTL_SECONDS — vacuum is delayed by at most the TTL, never
-# wedged. The wall-clock comparison shares the module's local-
-# filesystem assumption (single coherent clock).
-_LEASE_DIR = "_leases"
-_LEASE_TTL_SECONDS = 60.0
-# vacuum spares NEVER-referenced files younger than this (a concurrent
-# writer's in-flight snap/dv/claim files vs a dead OCC attempt's
-# garbage are indistinguishable except by age — Delta's tombstone-
-# retention discipline); tests that reap fresh garbage monkeypatch it
-_ORPHAN_GRACE_SECONDS = 60.0
-
-
-class _LeaseHandle(str):
-    """The lease file's path, plus the heartbeat machinery riding on it
-    (str subclass so tests and logs can treat it as a plain path)."""
-
-    __slots__ = ("stop", "thread")
-
-
-def _acquire_lease(path: str) -> _LeaseHandle | None:
-    """Create a heartbeat lease file for one commit attempt and start a
-    daemon thread that re-touches it every TTL/3 — a LIVE writer's
-    lease never expires mid-commit no matter how long its data write
-    takes (review r10 #1: acquisition-time-only mtime silently lost
-    vacuum protection after 60 s of writing), while a CRASHED process
-    takes its daemon thread with it and the lease ages out. Returns
-    None if the table dir doesn't exist yet — nothing to vacuum there
-    either."""
-    import threading
-    import uuid
-
-    if not os.path.isdir(path):
-        return None
-    d = os.path.join(path, _LEASE_DIR)
-    os.makedirs(d, exist_ok=True)
-    full = os.path.join(d, f"{uuid.uuid4().hex[:16]}.lease")
-    with open(full, "w") as fh:
-        fh.write(str(os.getpid()))
-    h = _LeaseHandle(full)
-    h.stop = threading.Event()
-
-    def _beat() -> None:
-        while not h.stop.wait(_LEASE_TTL_SECONDS / 3.0):
-            try:
-                os.utime(full)
-            except OSError:
-                break  # released, or force-vacuumed out from under us
-
-    h.thread = threading.Thread(
-        target=_beat, name="k3s-lease-heartbeat", daemon=True
-    )
-    h.thread.start()
-    return h
-
-
-def _release_lease(lease: _LeaseHandle | None) -> None:
-    if lease is None:
-        return
-    stop = getattr(lease, "stop", None)
-    if stop is not None:
-        stop.set()
-    try:
-        os.remove(lease)
-    except OSError:
-        pass  # vacuum GC'd an expired lease out from under a stall
-
-
-def _live_leases(path: str, gc_expired: bool = False) -> list[str]:
-    """Lease files younger than the TTL (by mtime, the heartbeat).
-    ``gc_expired`` additionally removes expired ones — done by real
-    vacuum runs so crashed writers' leavings don't accumulate."""
-    import time
-
-    d = os.path.join(path, _LEASE_DIR)
-    try:
-        names = os.listdir(d)
-    except OSError:
-        return []
-    live = []
-    now = time.time()
-    for f in names:
-        if not f.endswith(".lease"):
-            continue
-        full = os.path.join(d, f)
-        try:
-            age = now - os.path.getmtime(full)
-        except OSError:
-            continue  # released concurrently
-        if age <= _LEASE_TTL_SECONDS:
-            live.append(f)
-        elif gc_expired:
-            try:
-                os.remove(full)
-            except OSError:
-                pass
-    return sorted(live)
-
 
 def _repair_claim_residue(path: str, epoch: int, vpath: str) -> None:
     """A versioned manifest exists for ``epoch`` but the pointer still
@@ -1389,7 +1002,7 @@ def _repair_claim_residue(path: str, epoch: int, vpath: str) -> None:
       retry's O_EXCL can succeed. A reclaimed claim whose owner turns
       out to be stalled (not dead) is still safe: the owner holds its
       lock on the now-UNLINKED inode, fails its inode-identity check,
-      and conflicts instead of acking (review r9 #2) — an owner can
+      and conflicts instead of acking — an owner can
       only be reclaimed while its claim is still empty, because it
       takes the lock BEFORE writing.
 
@@ -1397,8 +1010,7 @@ def _repair_claim_residue(path: str, epoch: int, vpath: str) -> None:
     same lock the owner holds from before its claim write through its
     pointer swap — with the pointer re-checked INSIDE the lock, so a
     repairer can never perform a stale rename after the table advanced
-    (review r9 #3) and can never read a half-written claim as torn
-    (review r9-2nd #2)."""
+    and can never read a half-written claim as torn."""
     import fcntl
     import time
 
@@ -1438,14 +1050,15 @@ def _repair_claim_residue(path: str, epoch: int, vpath: str) -> None:
         os.close(rfd)
 
 
+_UPSERT_BUCKETS = 8
+
+
 def upsert_manifest_txn(
     spark: SparkSession,
     batch: DataFrame,
     path: str,
     key: str = "id",
     order_col: str | None = None,
-    n_buckets: int = 8,
-    bloom_cols: list[str] | None = None,
     max_retries: int = 5,
 ) -> int:
     """One transactional merge of `batch` into the manifest table —
@@ -1473,11 +1086,10 @@ def upsert_manifest_txn(
     last: CommitConflict | None = None
     for _attempt in range(max_retries):
         man = read_manifest(path)
-        # layout + stats config are fixed at table creation
-        stats_cols = (man or {}).get("stats_cols") or None
-        if man is not None:
-            n_buckets = man["n_buckets"]
-            bloom_cols = man.get("bloom_cols") or None
+        # layout + stats/bloom config are fixed at table creation
+        # (commit_snapshot carries them); a table created here has
+        # _UPSERT_BUCKETS buckets and neither
+        n_buckets = man["n_buckets"] if man is not None else _UPSERT_BUCKETS
         touched = {
             int(r[0])
             for r in batch.select(_bucket_expr(key, n_buckets).alias("b"))
@@ -1524,9 +1136,7 @@ def upsert_manifest_txn(
         ]
         try:
             return commit_snapshot(
-                merged, path, key, n_buckets, base_man=man, carry=carry,
-                stats_cols=stats_cols, bloom_cols=bloom_cols,
-                op={"name": "UPSERT", "key": key, "mode": "replace"},
+                merged, path, key, n_buckets, base_man=man, carry=carry
             )
         except CommitConflict as exc:
             last = exc
@@ -1585,7 +1195,6 @@ def append_snapshot(
                 batch, path, key, n_buckets, base_man=man, carry=carry,
                 stats_cols=stats_cols, bloom_cols=bloom_cols,
                 app_id=app_id, app_version=app_version,
-                op={"name": "APPEND", "key": key},
                 generated_cols=generated_cols,
             )
         except CommitConflict as exc:
@@ -1784,15 +1393,6 @@ def merge_into(
                 stats_cols=man.get("stats_cols") or None,
                 bloom_cols=man.get("bloom_cols") or None,
                 app_id=app_id, app_version=app_version,
-                op={
-                    "name": "MERGE",
-                    "key": key,
-                    "clauses": {
-                        "matched": len(matched),
-                        "not_matched": len(not_matched),
-                        "not_matched_by_source": len(not_matched_by_source),
-                    },
-                },
             )
         except CommitConflict as exc:
             last = exc
@@ -1810,10 +1410,7 @@ def delete_where(spark: SparkSession, path: str, condition) -> tuple[int, int]:
     (GDPR erasure, bad-batch retraction) costs one distributed position
     scan plus a positions-sized write, not a rewrite of every touched
     file. read_snapshot anti-joins the positions back out on every
-    scan; time travel to a pre-delete epoch still sees the rows (erasure
-    of HISTORY additionally needs vacuum of the old epochs, same as
-    Delta); compaction rewrites buckets from the DV-filtered scan, so it
-    physically purges deleted rows and drops the dv references.
+    scan; time travel to a pre-delete epoch still sees the rows.
 
     Matching is computed on the DV-APPLIED snapshot, so re-deleting an
     already-deleted row never bloats sidecars. Positions are harvested
@@ -1834,202 +1431,46 @@ def delete_where(spark: SparkSession, path: str, condition) -> tuple[int, int]:
             F.col("__rel").alias("rel"), F.col("__pos").alias("pos")
         )
         epoch = man["epoch"] + 1
-        dv_rel = f"dv-{epoch:06d}-{uuid.uuid4().hex[:8]}"
-        dv_dir = os.path.join(path, dv_rel)
-        # lease spans the sidecar write through publish (review r10 #2:
-        # until the manifest references it, the fresh dv parquet is
-        # exactly what vacuum reaps as unreferenced garbage)
-        _lease = _acquire_lease(path)
-        try:
-            return _delete_attempt(
-                spark, path, man, hits, epoch, dv_dir, condition
-            )
-        except CommitConflict as exc:
-            last = exc  # sidecar of the losing attempt is vacuum garbage
-        finally:
-            _release_lease(_lease)
-    raise last
+        dv_dir = os.path.join(path, f"dv-{epoch:06d}-{uuid.uuid4().hex[:8]}")
+        hits.write.mode("overwrite").parquet(dv_dir)
+        side = spark.read.parquet(dv_dir)
+        # driver metadata: per-file deleted-position counts (≤ |manifest|
+        # rows); the keys are the affected-file set
+        affected = {
+            r["rel"]: r["n"]
+            for r in side.groupBy("rel").agg(F.count("*").alias("n")).collect()
+        }
+        n_deleted = sum(affected.values())
+        if n_deleted == 0:
+            import shutil
 
-
-def _delete_attempt(spark, path, man, hits, epoch, dv_dir, condition):
-    """One leased delete_where attempt: dv sidecar write, manifest
-    reference patch, publish. Raises CommitConflict to the caller's
-    retry loop."""
-    hits.write.mode("overwrite").parquet(dv_dir)
-    side = spark.read.parquet(dv_dir)
-    # driver metadata: per-file deleted-position counts (≤ |manifest|
-    # rows); the keys are the affected-file set
-    affected = {
-        r["rel"]: r["n"]
-        for r in side.groupBy("rel").agg(F.count("*").alias("n")).collect()
-    }
-    n_deleted = sum(affected.values())
-    if n_deleted == 0:
-        import shutil
-
-        shutil.rmtree(dv_dir, ignore_errors=True)  # empty sidecar
-        return man["epoch"], 0
-    dv_files = []
-    for root, _dirs, fs in os.walk(dv_dir):
-        for f in sorted(fs):
-            if f.endswith(".parquet") and not f.startswith((".", "_")):
-                dv_files.append(
-                    os.path.relpath(os.path.join(root, f), path)
-                )
-    files = []
-    for e in man["files"]:
-        # the scan's __rel is the snap/bucket/file triple, which is
-        # exactly e["path"] for every file commit_snapshot writes
-        if e["path"] in affected:
-            e = dict(e, dv=list(e.get("dv", [])) + dv_files)
-        files.append(e)
-    payload = json.dumps(
-        {**{k: man[k] for k in man if k not in ("epoch", "files")},
-         "epoch": epoch, "files": files},
-        indent=1,
-    )
-    _publish_manifest(
-        path, epoch, payload,
-        op={"name": "DELETE", "predicate": str(condition),
-            "n_deleted": n_deleted},
-    )
-    return epoch, n_deleted
-
-
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    key: str,
-    cluster_by: list[str] | None = None,
-    zorder: tuple[str, str] | None = None,
-    max_records_per_file: int | None = None,
-    small_file_bytes: int | None = None,
-) -> int:
-    """Small-file compaction as an ordinary commit: read the current
-    snapshot, rewrite every bucket with one shuffle task per bucket (≈one
-    file per bucket directory), publish as the next epoch. Data is
-    UNCHANGED — only the file layout; the old epoch's files stay on disk
-    for time travel until vacuumed, so a reader mid-compaction is as safe
-    as during any other commit. This is the maintenance op a long-running
-    upsert table needs: N micro-batch commits leave O(N) files per
-    touched bucket; compaction folds them back to O(1). (The in-place
-    twin for plain directories is sinks/compact.py; this one inherits
-    MVCC atomicity for free.) Deliberately ONE-SHOT under contention: a
-    compaction that loses the commit race raises CommitConflict rather
-    than retrying — its folded layout describes a superseded snapshot,
-    and the right response is to re-run against the new state (or let
-    the next scheduled compaction handle it), not to republish stale
-    folding.
-
-    ``cluster_by`` / ``zorder`` make this the Delta ``OPTIMIZE ZORDER
-    BY`` maintenance op: rows are sorted inside each bucket by the named
-    column(s) (or by the Morton interleave of a 2-D pair, reusing
-    operators/zorder.z_value — codegen expressions, no UDF), and
-    ``max_records_per_file`` splits each bucket into several files, so
-    every emitted file covers a TIGHT range of the cluster column(s) and
-    the manifest's zone-map stats (harvested fresh by the commit) start
-    pruning predicates that ingest order never clustered — the
-    compose-point of the r8 skipping + lifecycle features: ingest
-    append-ordered by time, compact clustered by what you query.
-
-    ``small_file_bytes`` switches to BIN-PACKING (Delta OPTIMIZE's
-    default, r9): only files below the threshold are rewritten (per-file
-    sizes come from the manifest's commit-time harvest) and every
-    right-sized file is CARRIED by reference with its stats, bloom
-    sidecars, and dv refs intact — the maintenance cost scales with the
-    small-file debt, not the table. Folding a dv-carrying small file
-    physically purges its deleted rows; single small files with no dv
-    are left alone; with nothing to pack the call is a no-op returning
-    the current epoch (no empty commit)."""
-    man = read_manifest(path)
-    assert man is not None, f"no committed table at {path}"
-    n_buckets = man["n_buckets"]
-    carry: list[dict] = []
-    op_extra: dict = {}
-    if small_file_bytes is not None:
-        # BIN-PACKING mode (Delta OPTIMIZE's default): rewrite ONLY the
-        # buckets' small files — entries below the threshold (or from
-        # pre-size-harvest manifests) — and carry every right-sized file
-        # by reference, stats/bloom/dv intact. At 100 TB this is the
-        # difference between a maintenance op proportional to the
-        # ingest's small-file debt and one proportional to the table.
-        # DV refs on folded files are applied by the scan, so folding
-        # physically purges their deleted rows; a bucket with a single
-        # small file and no dv is left alone (folding it buys nothing).
-        assert not (cluster_by or zorder), (
-            "bin-packing (small_file_bytes) and re-clustering are "
-            "separate maintenance passes; run them as two commits"
-        )
-        by_bucket: dict[int, int] = {}
-        small = []
+            shutil.rmtree(dv_dir, ignore_errors=True)  # empty sidecar
+            return man["epoch"], 0
+        dv_files = []
+        for root, _dirs, fs in os.walk(dv_dir):
+            for f in sorted(fs):
+                if f.endswith(".parquet") and not f.startswith((".", "_")):
+                    dv_files.append(
+                        os.path.relpath(os.path.join(root, f), path)
+                    )
+        files = []
         for e in man["files"]:
-            if e.get("bytes") is None or e["bytes"] < small_file_bytes:
-                small.append(e)
-                by_bucket[e["bucket"]] = by_bucket.get(e["bucket"], 0) + 1
-        fold = [
-            e for e in small
-            if by_bucket[e["bucket"]] > 1 or e.get("dv")
-        ]
-        if not fold:
-            return man["epoch"]  # nothing to pack: no-op, no new epoch
-        folded = {e["path"] for e in fold}
-        carry = [e for e in man["files"] if e["path"] not in folded]
-        op_extra = {"bin_packed": len(fold)}
-        cur = read_snapshot(spark, path, _entries=fold)
-    else:
-        cur = read_snapshot(spark, path)
-    # generated columns: recompute at commit instead of re-validating
-    # the (correct-by-construction) stored values with an extra full
-    # scan — unless the layout clusters BY the generated column, which
-    # needs it materialized through the sort (the commit then validates)
-    keep_for_sort = set(cluster_by or []) | set(zorder or ())
-    gdrop = [
-        c for c in _generated(man)
-        if c in cur.columns and c not in keep_for_sort
-    ]
-    if gdrop:
-        cur = cur.drop(*gdrop)
-    b = _bucket_expr(key, n_buckets)
-    merged = cur.repartition(n_buckets, b)
-    sort_cols: list = []
-    if zorder is not None:
-        from ..operators.zorder import _bucket as _zb, z_value
-
-        cx, cy = zorder
-        lo_x, hi_x, lo_y, hi_y = cur.agg(
-            F.min(cx), F.max(cx), F.min(cy), F.max(cy)
-        ).first()
-        merged = merged.withColumn(
-            "__zv",
-            z_value(
-                _zb(F.coalesce(F.col(cx), F.lit(lo_x)), lo_x, hi_x),
-                _zb(F.coalesce(F.col(cy), F.lit(lo_y)), lo_y, hi_y),
-            ),
+            # the scan's __rel is the snap/bucket/file triple, which is
+            # exactly e["path"] for every file commit_snapshot writes
+            if e["path"] in affected:
+                e = dict(e, dv=list(e.get("dv", [])) + dv_files)
+            files.append(e)
+        payload = json.dumps(
+            {**{k: man[k] for k in man if k not in ("epoch", "files")},
+             "epoch": epoch, "files": files},
+            indent=1,
         )
-        sort_cols = ["__zv"]
-    elif cluster_by:
-        sort_cols = list(cluster_by)
-    if sort_cols:
-        # a task may hold rows of several hash buckets; leading with the
-        # bucket keeps each output dir's files on contiguous sorted runs
-        merged = merged.sortWithinPartitions(b, *sort_cols)
-        if zorder is not None:
-            merged = merged.drop("__zv")
-    if max_records_per_file is not None:
-        spark.conf.set(
-            "spark.sql.files.maxRecordsPerFile", str(max_records_per_file)
-        )
-    try:
-        return commit_snapshot(
-            merged, path, key, n_buckets, base_man=man, carry=carry,
-            op={"name": "OPTIMIZE",
-                "zorder": list(zorder) if zorder else None,
-                "cluster_by": list(cluster_by) if cluster_by else None,
-                **op_extra},
-        )
-    finally:
-        if max_records_per_file is not None:
-            spark.conf.set("spark.sql.files.maxRecordsPerFile", "0")
+        try:
+            _publish_manifest(path, epoch, payload)
+            return epoch, n_deleted
+        except CommitConflict as exc:
+            last = exc  # the losing attempt's sidecar is never referenced
+    raise last
 
 
 def rename_column(path: str, old: str, new: str) -> int:
@@ -2065,10 +1506,7 @@ def rename_column(path: str, old: str, new: str) -> int:
             indent=1,
         )
         try:
-            _publish_manifest(
-                path, man["epoch"] + 1, payload,
-                op={"name": "RENAME COLUMN", "from": old, "to": new},
-            )
+            _publish_manifest(path, man["epoch"] + 1, payload)
             return man["epoch"] + 1
         except CommitConflict as exc:
             last = exc
@@ -2105,309 +1543,11 @@ def drop_column(path: str, col: str) -> int:
             indent=1,
         )
         try:
-            _publish_manifest(
-                path, man["epoch"] + 1, payload,
-                op={"name": "DROP COLUMN", "column": col},
-            )
+            _publish_manifest(path, man["epoch"] + 1, payload)
             return man["epoch"] + 1
         except CommitConflict as exc:
             last = exc
     raise last
-
-
-def table_history(path: str) -> list[dict]:
-    """DESCRIBE HISTORY: one record per RETAINED epoch, newest first —
-    ``{"epoch", "operation", "params", "ts", "n_files"}``. Every epoch
-    publisher stamps its commit with an operation record (APPEND /
-    UPSERT / MERGE / DELETE / OPTIMIZE / RENAME COLUMN / DROP COLUMN),
-    so the table explains
-    its own lineage without external logging — Delta's DESCRIBE HISTORY
-    on the manifest log. Pure driver metadata; with a consolidated
-    checkpoint present (write_checkpoint — published every
-    _CHECKPOINT_INTERVAL commits) the walk reads only the manifests
-    ABOVE the checkpoint epoch and serves the rest from the
-    checkpoint's stored records, so the cost is O(interval), not
-    O(retained epochs) — results are IDENTICAL either way (pinned in
-    tests/test_txn_checkpoint.py). History older than the vacuum
-    retention window is gone with its manifests (vacuum raises the
-    checkpoint floor in step), exactly like Delta."""
-    cur = read_manifest(path)
-    if cur is None:
-        return []
-    ck = read_checkpoint(path)
-    out = []
-    for ep in range(cur["epoch"], 0, -1):
-        if ck is not None and ep <= ck["epoch"]:
-            # checkpoint takes over: its records are newest-first and
-            # floor-trimmed; keep only epochs at/below the walk position
-            # (the checkpoint may be AHEAD of a stale pointer read)
-            out.extend(
-                {**r, "params": dict(r["params"])}
-                for r in ck["history"]
-                if r["epoch"] <= ep
-            )
-            return out
-        try:
-            m = cur if ep == cur["epoch"] else read_manifest(path, ep)
-        except ProtocolUnsupported:
-            raise  # future-writer epoch: surface, never truncate lineage
-        except ValueError:
-            break  # vacuumed below this epoch — history ends here
-        out.append(_history_record(ep, m))
-    return out
-
-
-def epoch_as_of(path: str, timestamp: str) -> int:
-    """Delta's ``timestampAsOf`` resolution: the LATEST retained epoch
-    committed at or before the ISO-8601 instant (naive and 'Z' forms
-    normalize to UTC, matching the commits' own stamps). Rides
-    table_history, so with a checkpoint present the walk is O(interval);
-    commits predating the op-stamp era (no ts) are skipped — they cannot
-    prove their instant. Raises ValueError when every retained commit is
-    newer than the cutoff (Delta's timestamp-before-earliest error).
-    Time-ranged CDF composes directly: table_changes(spark, path,
-    epoch_as_of(path, t0), epoch_as_of(path, t1))."""
-    cutoff = _dt.datetime.fromisoformat(timestamp.replace("Z", "+00:00"))
-    if cutoff.tzinfo is None:
-        cutoff = cutoff.replace(tzinfo=_dt.timezone.utc)
-    for rec in table_history(path):  # newest-first
-        ts = rec.get("ts")
-        if ts is not None and _dt.datetime.fromisoformat(ts) <= cutoff:
-            return rec["epoch"]
-    raise ValueError(
-        f"no retained commit of {path} at or before {timestamp}; the "
-        "earliest retained epoch is newer (or predates operation stamps)"
-    )
-
-
-def vacuum_table(
-    path: str,
-    keep_epochs: int = 1,
-    retain_after: str | None = None,
-    dry_run: bool = False,
-    force: bool = False,
-) -> list[str]:
-    """Reap files unreachable from the RETAINED manifests: keep the
-    current manifest plus the ``keep_epochs - 1`` versions before it,
-    delete every older versioned manifest and every data file no retained
-    manifest references. Time travel remains exact within the retention
-    window and fails loudly (read_manifest ValueError) outside it —
-    Delta's VACUUM contract. Driver-side listing is O(|files|) metadata,
-    the same walk the commit itself does; at real scale the deletes fan
-    out to the object store's batch-delete API. Returns the deleted
-    paths (tests pin the exact set).
-
-    ``retain_after`` (ISO-8601 UTC string) ADDITIONALLY retains every
-    epoch committed at or after that instant — Delta's ``RETAIN n
-    HOURS``, read from the commits' own operation timestamps, so a
-    count-based policy can never reap history a time-based SLA still
-    owes (the effective window is the union of both). ``dry_run=True``
-    reports exactly what a real run would delete and touches nothing —
-    the audit step before an irreversible reap.
-
-    WRITER LEASES: a destructive run REFUSES while any unexpired
-    writer lease exists (every commit heartbeats one under
-    ``_leases/`` — see _acquire_lease), mechanizing the writer-
-    quiescence contract that was previously operator-asserted: vacuum
-    can no longer reap a live writer's claim file or in-flight snap
-    directory by being run at the wrong moment. A crashed writer's
-    lease expires after _LEASE_TTL_SECONDS (vacuum is delayed, never
-    wedged; expired leases are GC'd here). ``force=True`` restores the
-    old operator-asserted behavior for operators who know the writers
-    are dead NOW. Dry runs proceed regardless (they touch nothing)."""
-    man = read_manifest(path)
-    if man is None:
-        return []
-    if not dry_run:
-        # expired leases are GC'd on EVERY destructive run, forced or
-        # not (ADVICE r10: gc only on unforced runs let an always-force
-        # operator accumulate lease files indefinitely — the walk below
-        # never enters _leases/, so nothing else cleans them)
-        live = _live_leases(path, gc_expired=True)
-        if live and not force:
-            raise RuntimeError(
-                f"vacuum refused: live writer lease(s) {live} on {path}; "
-                f"wait up to {_LEASE_TTL_SECONDS:.0f}s for expiry, or pass "
-                "force=True if every writer is known dead"
-            )
-    keep_from = man["epoch"] - max(keep_epochs, 1) + 1
-    if retain_after is not None:
-        # compare INSTANTS, never ISO strings — a 'Z' suffix or non-UTC
-        # offset in the cutoff would misorder lexicographically against
-        # the stored '+00:00' timestamps and reap inside the SLA
-        cutoff = _dt.datetime.fromisoformat(retain_after.replace("Z", "+00:00"))
-        if cutoff.tzinfo is None:
-            cutoff = cutoff.replace(tzinfo=_dt.timezone.utc)
-        # widen retention backwards while commits are younger than the
-        # cutoff; epochs without a timestamp (pre-history commits) count
-        # as old. Contiguous walk: the first too-old epoch ends it.
-        for v in range(keep_from - 1, 0, -1):
-            try:
-                m = read_manifest(path, v)
-            except ProtocolUnsupported:
-                raise  # never shrink an SLA window on an unreadable epoch
-            except ValueError:
-                break
-            ts = ((m or {}).get("op") or {}).get("ts")
-            if ts is not None and _dt.datetime.fromisoformat(ts) >= cutoff:
-                keep_from = v
-            else:
-                break
-    referenced: set[str] = set()
-    for e in range(keep_from, man["epoch"] + 1):
-        try:
-            m = read_manifest(path, e)
-        except ProtocolUnsupported:
-            # a retained epoch this engine cannot parse: skipping would
-            # classify its files as unreferenced and REAP committed data
-            # of a newer writer — refuse the whole vacuum instead
-            raise
-        except ValueError:
-            continue
-        if m:
-            referenced.update(x["path"] for x in m["files"])
-            for x in m["files"]:
-                referenced.update(x.get("dv", []))
-                referenced.update((x.get("bloom") or {}).values())
-    # PROTOCOL-DEAD references (review r10 #3): files referenced only by
-    # SUB-retention manifests were committed and then aged out — reaping
-    # them at any age is the point of vacuum. Files referenced by NO
-    # manifest at all are ambiguous: a losing OCC attempt's garbage, OR
-    # a concurrent writer's IN-FLIGHT files (the lease check above is
-    # once-per-run; a writer can start mid-walk). Never-referenced
-    # files younger than the orphan grace are therefore SPARED — the
-    # same age discipline Delta's tombstone retention applies, closing
-    # the walk-duration TOCTOU the up-front lease check leaves open.
-    historical: set[str] = set()
-    # the checkpoint's cumulative reference set covers every epoch ≤ its
-    # own in ONE read, so the sub-retention sweep reads only manifests
-    # ABOVE it — O(interval), not O(all epochs ever). Including refs of
-    # RETAINED epochs ≤ the checkpoint is harmless: `historical` is only
-    # consulted for files NOT in `referenced`, and anything a retained
-    # manifest references is in `referenced`.
-    ck = read_checkpoint(path)
-    hist_start = 1
-    if ck is not None:
-        historical.update(ck["refs"])
-        hist_start = ck["epoch"] + 1
-    for e in range(hist_start, keep_from):
-        try:
-            m = read_manifest(path, e)
-        except ProtocolUnsupported:
-            raise  # same reap hazard as the retained-epoch walk above
-        except ValueError:
-            continue
-        if m:
-            historical.update(_manifest_refs(m))
-    if not dry_run:
-        # trim the checkpoint floor BEFORE any manifest is reaped
-        # (review r12 #2): a crash between the two then leaves the
-        # checkpoint UNDER-claiming (floor raised while the manifests
-        # still exist — conservative truncation; epoch_as_of refuses
-        # below the floor) instead of OVER-claiming epochs whose
-        # manifests are gone, which would poison checkpoint-served
-        # history until the next destructive vacuum.
-        _trim_checkpoint(path, keep_from)
-    import time as _time
-
-    now = _time.time()
-
-    def _orphan_dead(full: str) -> bool:
-        try:
-            return now - os.path.getmtime(full) > _ORPHAN_GRACE_SECONDS
-        except OSError:
-            return False  # vanished under us: nothing to reap
-    deleted = []
-    for root, _dirs, fs in os.walk(path, topdown=False):
-        for f in fs:
-            full = os.path.join(root, f)
-            rel = os.path.relpath(full, path)
-            if f == MANIFEST:
-                continue
-            if f.endswith(".tmp"):
-                # stale temp manifests from torn commits (review r8 #6);
-                # grace-gated: a LIVE writer's swap tmp exists for
-                # milliseconds but could be walked mid-rename
-                if _orphan_dead(full):
-                    if not dry_run:
-                        os.remove(full)
-                    deleted.append(rel)
-                continue
-            if f.startswith("_MANIFEST.v"):
-                v = int(f[len("_MANIFEST.v"):].split(".")[0])
-                # below retention at any age; residue ABOVE the current
-                # pointer (crash between version copy and swap) only
-                # past the orphan grace — a claim created mid-walk is a
-                # live writer's commit point, not residue
-                if v < keep_from or (v > man["epoch"] and _orphan_dead(full)):
-                    if not dry_run:
-                        os.remove(full)
-                    deleted.append(rel)
-                continue
-            top = rel.split(os.sep, 1)[0]
-            if top == _LEASE_DIR:
-                continue  # leases are _live_leases' jurisdiction
-            if top == _BLOOM_DIR:
-                # bloom sidecars: losing OCC attempts and sidecars of
-                # vacuumed files are referenced by no retained manifest —
-                # exactly the reap rule for data files (a reaped sidecar
-                # mid-commit only degrades the probe to a scan:
-                # _bloom_may_match treats a missing sidecar as may-match)
-                if rel not in referenced and (
-                    rel in historical or _orphan_dead(full)
-                ):
-                    if not dry_run:
-                        os.remove(full)
-                    deleted.append(rel)
-                continue
-            if not top.startswith(("snap-", "dv-")):
-                continue
-            if rel in referenced:
-                continue
-            # unreferenced parquet: historically-referenced at any age,
-            # never-referenced only past the orphan grace; writer
-            # bookkeeping (_SUCCESS, .crc) only once its whole epoch
-            # left the retention window (dir formats: snap-<epoch>
-            # pre-r8, snap-<epoch>-<nonce>, dv-<epoch>-<nonce>)
-            if f.endswith(".parquet"):
-                if rel in historical or _orphan_dead(full):
-                    if not dry_run:
-                        os.remove(full)
-                    deleted.append(rel)
-            elif int(top.split("-")[1]) < keep_from:
-                if not dry_run:
-                    os.remove(full)
-                deleted.append(rel)
-        if not dry_run and root != path and os.path.basename(root) != _LEASE_DIR:
-            try:
-                if not os.listdir(root):
-                    os.rmdir(root)
-            except OSError:
-                pass  # a racing writer repopulated it
-    if not dry_run and deleted:
-        # Prune the checkpoint's cumulative refs for paths this vacuum
-        # ACTUALLY deleted (ADVICE r12: carried forward verbatim, refs
-        # grow O(all paths ever written) and are rewritten every 10
-        # commits — at 10k+ commits the checkpoint itself becomes the
-        # unbounded driver-side JSON). Safe because `historical` is only
-        # consulted for files that still exist; pruning AFTER the reap
-        # means a crash between the two leaves refs over-claiming
-        # now-deleted paths — today's steady state, merely conservative.
-        _prune_checkpoint_refs(path, set(deleted))
-    return sorted(deleted)
-
-
-def _prune_checkpoint_refs(path: str, gone: set[str]) -> None:
-    ck = read_checkpoint(path)
-    if ck is None:
-        return
-    kept = [r for r in ck["refs"] if r not in gone]
-    if len(kept) == len(ck["refs"]):
-        return
-    ck["refs"] = kept
-    _swap_small_file(
-        path, _checkpoint_path(path, ck["epoch"]), json.dumps(ck, indent=1)
-    )
 
 
 def table_changes(
@@ -2418,7 +1558,7 @@ def table_changes(
     key: str = "id",
     include_preimage: bool = False,
 ) -> DataFrame:
-    """Change data feed between two retained epochs (Delta's
+    """Change data feed between two committed epochs (Delta's
     ``table_changes`` on the manifest table): full-outer join the two
     snapshots on the merge key and classify each key as insert / delete /
     update_postimage (emitted with the TO-epoch row values; unchanged keys
@@ -2432,7 +1572,7 @@ def table_changes(
 
     Scale: one key-hash shuffle over the two snapshots; with bucket
     layouts shared between epochs the join co-locates per bucket. Time
-    travel supplies both sides from retained manifests — no extra
+    travel supplies both sides from versioned manifests — no extra
     bookkeeping is written at commit time (contrast Delta, which persists
     CDF files per commit; here immutable snapshots make the diff
     recomputable on demand)."""
@@ -2442,8 +1582,8 @@ def table_changes(
     # the feed is presented under the TO epoch's schema (Delta CDF under
     # the latest column mapping): translate the FROM side's names through
     # PHYSICAL identity, so a metadata-only RENAME between the epochs is
-    # the no-op it is (not a full table of spurious value->NULL updates,
-    # review r8 #5), and a column the TO epoch DROPPED vanishes from the
+    # the no-op it is (not a full table of spurious value->NULL updates),
+    # and a column the TO epoch DROPPED vanishes from the
     # feed rather than retracting every row
     man_a = read_manifest(path, from_epoch)
     man_b = read_manifest(path, to_epoch)
@@ -2664,9 +1804,9 @@ def merge_manifest_stream(
     EMPTY epoch (schema only) and then MERGEs like every other batch —
     appending the batch verbatim would bypass the clause semantics
     (delete-op tombstones inserted as live rows, insert conditions and
-    expression maps ignored; review r9-3rd #1).
+    expression maps ignored).
 
-    SCHEMA CAVEAT (ADVICE r9): the bootstrap freezes the table schema to
+    SCHEMA CAVEAT: the bootstrap freezes the table schema to
     the RAW source batch schema, so CDC transport columns (op flags,
     sequence numbers such as ``order_col`` itself) become permanent
     table columns whenever clauses use ``"all"``. Project transport
@@ -2694,7 +1834,7 @@ def merge_manifest_stream(
         # one materialization of the collapsed batch: merge_into drives
         # several actions over its source (touched-bucket collect,
         # dup-key probe, the merge join) and a bare subtree would re-run
-        # the window collapse per action (review r9-3rd #4)
+        # the window collapse per action
         b = b.localCheckpoint(eager=True)
         if b.isEmpty():
             return

@@ -41,6 +41,14 @@ from pyspark.sql import functions as F
 _NEXT, _PREV = ".__next", ".__prev"
 
 
+def _swap_in(path: str) -> None:
+    """Swap the fully written `.__next` in for `path` (see the module
+    notes)."""
+    os.rename(path, path + _PREV)
+    os.rename(path + _NEXT, path)
+    shutil.rmtree(path + _PREV)
+
+
 def _recover_swap(path: str) -> None:
     """Finish or undo a staged swap a crash interrupted (see the module
     notes). A stale `.__next` needs nothing: the next write overwrites it."""
@@ -103,6 +111,4 @@ def upsert_parquet(
     )
     merged = _dedup_last(current.unionByName(new), key, order_col, prefer)
     merged.write.mode("overwrite").parquet(path + _NEXT)
-    os.rename(path, path + _PREV)
-    os.rename(path + _NEXT, path)
-    shutil.rmtree(path + _PREV)
+    _swap_in(path)

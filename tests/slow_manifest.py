@@ -21,10 +21,8 @@ SLOW_TESTS = {
     "test_similarity.py::test_semdedup_cell_count_derives_from_corpus_size",  # 83.6s
     "test_properties.py::test_exact_substring_span_invariants",  # 48.4s
     "test_statestore.py::test_rocksdb_drains_match_default_provider",  # 47.3s
-    "test_sinks.py::test_txn_bin_packing_rewrites_only_small_files",  # 39.7s
     "test_oracle_parity.py::test_query_matches_oracle[llm_split_contamination_audit]",  # 33.4s
     "test_similarity.py::test_semdedup_finds_planted_dups_within_cells",  # 32.8s
-    "test_sinks.py::test_txn_clustered_compaction_tightens_zone_maps",  # 30.4s
     "test_oracle_parity.py::test_query_matches_oracle[dedup_keep_best_per_cluster]",  # 30.1s
     "test_oracle_parity.py::test_query_matches_oracle[llm_leakage_safe_split]",  # 28.4s
     "test_oracle_parity.py::test_query_matches_oracle[dedup_connected_components]",  # 27.4s
@@ -38,26 +36,19 @@ SLOW_TESTS = {
     "test_txn_generated.py::test_generated_zone_maps_prune_derived_predicates",  # 21.4s
     "test_packing.py::test_chunk_layout_properties",  # 20.7s
     "test_app.py::test_stats_surfaces_stream_state_metrics",  # 20.2s
-    "test_txn_checkpoint.py::test_vacuum_trims_floor_and_history_stays_identical",  # 19.3s
-    "test_txn_checkpoint.py::test_history_identical_with_and_without_checkpoint",  # 18.9s
     "test_fullouter_property.py::test_full_outer_matches_bruteforce",  # 18.6s
     "test_lm_property.py::test_lm_scorer_matches_python_reference",  # 18.5s
     "test_merge_property.py::test_merge_matches_python_model",  # 18.4s
     "test_txn_datasource.py::test_pushdown_prunes_files_and_stays_exact",  # 17.5s
-    "test_txn_checkpoint.py::test_auto_checkpoint_written_every_interval",  # 17.3s
     "test_stateful.py::test_state_carries_across_batches",  # 17.2s
     "test_bpe.py::test_bpe_loop_matches_pure_python_reference_on_random_corpora",  # 16.7s
     "test_sql_surface.py::test_txntable_sql_view_pushdown_prunes_through_pure_sql",  # 15.1s
     "test_txn_protocol.py::test_protocol_refusal_is_not_swallowed_as_reaped_history",  # 15.0s
-    "test_txn_checkpoint.py::test_vacuum_reaps_historical_files_via_checkpoint_refs",  # 14.1s
     "test_txn_dv.py::test_randomized_op_sequences_match_dict_model",  # 14.1s
     "test_lmquality.py::test_quality_classifier_cache_holds_plain_floats_not_model",  # 14.0s
-    "test_txn_checkpoint.py::test_checkpoint_loss_degrades_to_full_walk",  # 13.6s
     "test_sequence_ops.py::test_duckdb_re2_count_matches_python",  # 13.3s
     "test_fullouter_property.py::test_right_outer_is_full_outer_minus_unmatched_purchases",  # 13.1s
     "test_lmquality.py::test_quality_classifier_separates_planted_vocabularies",  # 13.0s
-    "test_txn_checkpoint.py::test_history_reads_bounded_manifests_after_checkpoint",  # 12.4s
-    "test_txn_checkpoint.py::test_vacuum_prunes_refs_for_deleted_paths",  # 12.1s
     "test_colmap_property.py::test_random_alter_chains_match_name_model",  # 11.9s
     "test_oracle_parity.py::test_query_matches_oracle[graph_knn_edges_recall_band]",  # 11.3s
     "test_txn_protocol.py::test_writer_refuses_unknown_manifest_keys",  # 10.6s

@@ -96,3 +96,55 @@ def test_pq_encode_baseline_column_matches_separate_pass(spark, pq_dir):
         assert r["codes"] == main_only[i]["codes"]
         assert r["err_micro"] == main_only[i]["err_micro"]
         assert r["base_err_micro"] == base_only[i]["err_micro"]
+
+
+def _sum_form_codes(X: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """Nearest codeword per sub-vector by ``((x - c) ** 2).sum(-1)``."""
+    m, _, sub = books.shape
+    return np.stack(
+        [
+            ((X[:, None, s * sub : (s + 1) * sub] - books[s][None]) ** 2)
+            .sum(-1)
+            .argmin(axis=1)
+            for s in range(m)
+        ],
+        axis=1,
+    )
+
+
+def test_einsum_distances_pick_the_sum_form_codes(spark, sf_dir, monkeypatch):
+    """The PQ distances in operators/similarity.py are an einsum over the
+    difference tensor, which can differ from ``((x - c) ** 2).sum(-1)`` in
+    the last ulp and so could flip a near-tie argmin. On the sf0.001
+    embeddings both forms pick the same code for every sub-vector: in
+    every Lloyd assignment of training (the books come out identical),
+    in pq_encode's raw codes and in ivfpq_encode's residual codes."""
+    from kinesis3_spark.sources import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    X = S.fetch_pq_sample(emb)
+    books = S.train_pq_codebooks(emb, k=64, X=X)
+    C, res_books = S.train_ivfpq(emb)
+
+    einsum = np.einsum
+
+    def sum_form(subscripts, *ops, **kw):
+        if subscripts == "ijk,ijk->ij":
+            return (ops[0] ** 2).sum(-1)
+        return einsum(subscripts, *ops, **kw)
+
+    monkeypatch.setattr(np, "einsum", sum_form)
+    assert np.array_equal(S.train_pq_codebooks(emb, k=64, X=X), books)
+    C2, res_books2 = S.train_ivfpq(emb)
+    assert np.array_equal(C2, C) and np.array_equal(res_books2, res_books)
+    monkeypatch.undo()
+
+    pdf = emb.select("vec_id", "embedding").toPandas()
+    M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+    ids = pdf["vec_id"].to_numpy()
+    raw = {r["id"]: r["codes"] for r in S.pq_encode(emb, books).collect()}
+    assert [raw[i] for i in ids] == _sum_form_codes(M, books).tolist()
+    Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
+    R = Mn - C[np.argmax(Mn @ C.T, axis=1)]
+    res = {r["id"]: r["codes"] for r in S.ivfpq_encode(emb, C, res_books).collect()}
+    assert [res[i] for i in ids] == _sum_form_codes(R, res_books).tolist()

@@ -50,7 +50,6 @@ ROOT_FILES = [
 ]
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 
-_TXN = "table operation of sinks/txn.py that only tests call"
 _SCALAR = "scalar column helper only tests call"
 _BATCH = "batch source helper only tests call"
 _DS_CALLBACK = "Spark Data Source callback, called by Spark by name"
@@ -69,12 +68,6 @@ KNOWN_UNREACHABLE = {
     "operators.sequence.user_motif_measures": "sequence operator only tests call",
     "queries.lmquality.score_perplexity": "perplexity scorer only tests call",
     "queries.lmquality.score_perplexity_trigram": "perplexity scorer only tests call",
-    "sinks.txn._ORPHAN_GRACE_SECONDS": "constant only the exempt vacuum_table reads",
-    "sinks.txn._live_leases": _TXN,
-    "sinks.txn._prune_checkpoint_refs": _TXN,
-    "sinks.txn._trim_checkpoint": _TXN,
-    "sinks.txn.compact_table": _TXN,
-    "sinks.txn.vacuum_table": _TXN,
     "sources.batch.register_temp_views": _BATCH,
     "sources.txn_datasource._TxnBatchReader.partitions": _DS_CALLBACK,
     "sources.txn_datasource._TxnBatchReaderPushdown.pushFilters": _DS_CALLBACK,
@@ -286,8 +279,7 @@ def test_query_registration_is_unconditional():
 
 # Defaulted parameters with one value in use, by `module.function.param`
 # -> reason: a test sets the second value through a call the scan skips,
-# a txn scale path (compaction, vacuum, leases) keeps it, or it is the
-# CLI's `argv`. Only shrinks, like KNOWN_UNREACHABLE.
+# or it is the CLI's `argv`. Only shrinks, like KNOWN_UNREACHABLE.
 ONE_VALUE_EXEMPT: dict[str, str] = {}
 
 

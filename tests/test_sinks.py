@@ -1,7 +1,7 @@
 """Sink tests: dt-partitioned archive layout + upsert replay equivalence with
 DuckDB INSERT OR REPLACE (last-wins) / INSERT OR IGNORE (first-wins,
 the reference db.clj:100-134 behavior), recovery of an interrupted store
-swap and the upsert's Spark job budget. Most are slow-marked; the last
+swap (upsert and compaction) and the upsert's Spark job budget. Most are slow-marked; the last
 two are in the default profile."""
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from kinesis3_spark.sinks import upsert_parquet, write_partitioned
+from kinesis3_spark.sinks import compact_parquet, upsert_parquet, write_partitioned
 
 
 def _events(spark, rows):
@@ -75,14 +75,18 @@ def test_upsert_duplicate_ids_within_batch(spark, tmp_path):
     assert len(out) == 1 and out[0].val == 2.0  # latest ts wins
 
 
-@pytest.mark.parametrize("mode", ["replace", "ignore"])
+@pytest.mark.parametrize("mode", ["replace", "ignore", "compact"])
 @pytest.mark.parametrize("crash", ["partial_next", "store_moved_away", "both_present"])
 def test_upsert_recovers_from_interrupted_swap(spark, tmp_path, mode, crash):
-    """The upsert swaps a fully written `.__next` in for the table; a crash
-    at any point of that swap must leave a table the next upsert merges
-    into as if nothing had happened."""
+    """The upsert and the compaction swap a fully written `.__next` in for
+    the table; a crash at any point of that swap must leave a table the
+    next upsert merges into, or the next compaction rewrites, as if
+    nothing had happened."""
     path = str(tmp_path / "t")
-    upsert_parquet(spark, _events(spark, B1), path, key="id", order_col="ts", mode=mode)
+    merge = "replace" if mode == "compact" else mode
+    upsert_parquet(spark, _events(spark, B1), path, key="id", order_col="ts", mode=merge)
+    if mode == "compact":
+        upsert_parquet(spark, _events(spark, B2), path, key="id", order_col="ts")
     if crash == "partial_next":  # mid-write of the next table: a torn part file
         os.makedirs(path + ".__next")
         with open(os.path.join(path + ".__next", "part-00000-torn.snappy.parquet"), "wb") as f:
@@ -92,9 +96,12 @@ def test_upsert_recovers_from_interrupted_swap(spark, tmp_path, mode, crash):
     else:  # before the old table is removed; a different one, so reading it would show
         stale = [("z", "2024-01-01 00:00:00", 99.0, "2024-01-01")]
         upsert_parquet(spark, _events(spark, stale), path + ".__prev", key="id", order_col="ts")
-    upsert_parquet(spark, _events(spark, B2), path, key="id", order_col="ts", mode=mode)
+    if mode == "compact":
+        assert compact_parquet(spark, path) == 1
+    else:
+        upsert_parquet(spark, _events(spark, B2), path, key="id", order_col="ts", mode=mode)
     got = {r.id: r.val for r in spark.read.parquet(path).collect()}
-    assert got == _duck_expected(mode)
+    assert got == _duck_expected(merge)
     assert sorted(os.listdir(tmp_path)) == ["t"]  # no staging directory left
 
 
@@ -197,6 +204,38 @@ def _txn_rows(spark, path):
 
     snap = read_snapshot(spark, path)
     return {r["id"]: r["val"] for r in snap.collect()} if snap is not None else {}
+
+
+def test_txn_commit_starts_no_thread_and_writes_only_table_files(
+    spark, tmp_path, monkeypatch
+):
+    """A txn commit (data and metadata-only) starts no Python thread and
+    leaves only the manifest, its versioned copies and the data and
+    deletion-vector directories in the table."""
+    import threading
+
+    from kinesis3_spark.sinks import txn
+
+    path = str(tmp_path / "t")
+    txn.append_snapshot(_events(spark, B1), path)  # the table exists first
+    started = []
+    real_start = threading.Thread.start
+
+    def record(self):
+        started.append(self.name)
+        return real_start(self)
+
+    monkeypatch.setattr(threading.Thread, "start", record)
+    txn.upsert_manifest_txn(spark, _events(spark, B2), path, key="id", order_col="ts")
+    txn.delete_where(spark, path, "id = 'a'")
+    monkeypatch.undo()
+    assert started == []
+    tops = sorted(os.listdir(path))
+    assert [t for t in tops if t.startswith("_")] == [
+        "_MANIFEST.json", "_MANIFEST.v000001.json",
+        "_MANIFEST.v000002.json", "_MANIFEST.v000003.json",
+    ]
+    assert all(t.startswith(("_MANIFEST", "snap-", "dv-")) for t in tops), tops
 
 
 @pytest.mark.slow
@@ -328,74 +367,16 @@ def test_txn_time_travel_reads_exact_historical_snapshots(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_txn_compact_preserves_data_and_folds_files(spark, tmp_path):
-    """Compaction is a data-identical commit that reduces live file count
-    (one shuffle task per bucket) and bumps the epoch; the pre-compaction
-    snapshot stays time-travel readable."""
-    from kinesis3_spark.sinks.txn import (
-        compact_table,
-        read_manifest,
-        read_snapshot,
-        upsert_manifest_txn,
-    )
-
-    path = str(tmp_path / "t")
-    for batch in (B1, B2, [("e", "2024-01-06 00:00:00", 6.0, "2024-01-06")]):
-        upsert_manifest_txn(spark, _events(spark, batch), path, key="id", order_col="ts")
-    before = _txn_rows(spark, path)
-    n_files_before = len(read_manifest(path)["files"])
-    epoch = compact_table(spark, path, key="id")
-    assert epoch == 4
-    assert _txn_rows(spark, path) == before
-    assert len(read_manifest(path)["files"]) <= n_files_before
-    assert {r["id"] for r in read_snapshot(spark, path, epoch=3).collect()} == set(
-        before
-    )
-
-
-@pytest.mark.slow
-def test_txn_vacuum_reaps_outside_retention_only(spark, tmp_path):
-    """vacuum(keep_epochs=1): files referenced only by pre-current epochs
-    are deleted, the current snapshot is bit-identical, and time travel
-    outside the retention window fails loudly instead of returning a
-    torn read."""
-    import os as _os
-
-    from kinesis3_spark.sinks.txn import (
-        read_manifest,
-        read_snapshot,
-        upsert_manifest_txn,
-        vacuum_table,
-    )
-
-    path = str(tmp_path / "t")
-    upsert_manifest_txn(spark, _events(spark, B1), path, key="id", order_col="ts")
-    upsert_manifest_txn(spark, _events(spark, B2), path, key="id", order_col="ts")
-    before = _txn_rows(spark, path)
-    current_files = {e["path"] for e in read_manifest(path)["files"]}
-    deleted = vacuum_table(path, keep_epochs=1)
-    assert deleted and not (set(deleted) & current_files)
-    assert _txn_rows(spark, path) == before
-    # carried epoch-1 files referenced by the CURRENT manifest survive
-    assert all(
-        _os.path.exists(_os.path.join(path, f)) for f in current_files
-    )
-    with pytest.raises(ValueError, match="not retained"):
-        read_snapshot(spark, path, epoch=1)
-
-
-@pytest.mark.slow
 def test_txn_uncommitted_version_residue_is_not_readable(spark, tmp_path, monkeypatch):
     """A crash BETWEEN the versioned-manifest claim and the atomic swap
     leaves a v<epoch+1> residue file; time travel must refuse it (the
     current manifest is the source of truth). FRESH residue (younger
     than the live-writer grace window) blocks the epoch number — an
     exclusive create can't distinguish a dead writer from a live one
-    mid-commit, so a retry raises CommitConflict. Recovery is twofold
-    since r9: residue OLDER than the grace window is repaired in-line by
-    the next colliding writer (rolled forward when complete, reclaimed
-    when torn — tests/test_txn_concurrency.py), and vacuum_table — run
-    under operator-asserted writer quiescence — reaps it immediately."""
+    mid-commit, so a retry raises CommitConflict. Residue OLDER than the
+    grace window is repaired in-line by the next colliding writer (rolled
+    forward when complete, reclaimed when torn —
+    tests/test_txn_concurrency.py)."""
     import os as _os
 
     from kinesis3_spark.sinks import txn
@@ -418,21 +399,19 @@ def test_txn_uncommitted_version_residue_is_not_readable(spark, tmp_path, monkey
     assert _os.path.exists(_os.path.join(path, "_MANIFEST.v000002.json"))
     with pytest.raises(ValueError, match="not committed"):
         txn.read_snapshot(spark, path, epoch=2)
-    # the claimed-but-unswapped epoch number is blocked until vacuum
+    # the claimed-but-unswapped epoch number is blocked while fresh
     with pytest.raises(txn.CommitConflict):
         txn.upsert_manifest_txn(
             spark, _events(spark, B2), path, key="id", order_col="ts",
             max_retries=1,
         )
-    # fresh above-pointer residue is orphan-grace-gated (a mid-walk
-    # live claim must not be reaped); simulate the residue aging out
-    monkeypatch.setattr(txn, "_ORPHAN_GRACE_SECONDS", -1.0)
-    deleted = txn.vacuum_table(path, keep_epochs=99)
-    monkeypatch.undo()
-    assert "_MANIFEST.v000002.json" in deleted
-    # retry lands epoch 2 for real and the state is the full merge
+    # aged past the grace window, the complete claim rolls forward as
+    # epoch 2 and the retry lands on top of it as epoch 3
+    vpath = _os.path.join(path, "_MANIFEST.v000002.json")
+    old = _os.path.getmtime(vpath) - txn._RESIDUE_GRACE_SECONDS - 1
+    _os.utime(vpath, (old, old))
     txn.upsert_manifest_txn(spark, _events(spark, B2), path, key="id", order_col="ts")
-    assert txn.read_manifest(path)["epoch"] == 2
+    assert txn.read_manifest(path)["epoch"] == 3
     assert _txn_rows(spark, path) == _duck_expected("replace")
     assert {r["id"] for r in txn.read_snapshot(spark, path, epoch=2).collect()} == set(
         _duck_expected("replace")
@@ -469,8 +448,8 @@ def test_txn_table_changes_classifies_epoch_diff(spark, tmp_path):
     """CDF between retained epochs: B2 over B1 yields d=insert,
     c=update_postimage (newer ts wins), b=NO change (the replay lost LWW,
     so the key's surviving row is identical across epochs), a=untouched
-    (omitted); deletes appear when a key vanishes (compaction epoch diff
-    of a filtered rewrite)."""
+    (omitted); deletes appear when a key vanishes (a filtered
+    rewrite)."""
     from kinesis3_spark.sinks.txn import (
         commit_snapshot,
         read_manifest,
@@ -582,35 +561,6 @@ def test_txn_skipping_is_conservative_where_stats_cannot_decide():
     allnull = {"val": {"type": None, "min": None, "max": None, "nulls": 7}}
     assert not _file_may_match(allnull, "val", ">=", 0.0)
     assert not _file_may_match(allnull, "val", "==", 0.0)
-
-
-@pytest.mark.slow
-def test_txn_compaction_recomputes_stats_for_folded_files(spark, tmp_path):
-    """compact_table rewrites every bucket; the folded files must carry
-    freshly harvested stats spanning the union of their inputs."""
-    from kinesis3_spark.sinks.txn import (
-        append_snapshot,
-        compact_table,
-        read_manifest,
-    )
-
-    path = str(tmp_path / "log")
-    for lo in (0, 100):
-        rows = [
-            (f"k{lo}_{i}", "2024-01-01 10:00:00", float(lo + i), "2024-01-01")
-            for i in range(4)
-        ]
-        append_snapshot(
-            _events(spark, rows), path, key="id", n_buckets=2,
-            stats_cols=["val"],
-        )
-    compact_table(spark, path, key="id")
-    man = read_manifest(path)
-    assert all(e["path"].startswith("snap-000003") for e in man["files"])
-    assert all("stats" in e for e in man["files"])
-    mn = min(e["stats"]["val"]["min"] for e in man["files"])
-    mx = max(e["stats"]["val"]["max"] for e in man["files"])
-    assert (mn, mx) == (0.0, 103.0)
 
 
 @pytest.mark.slow
@@ -746,164 +696,6 @@ def test_txn_batch_missing_column_null_fills_updated_rows(spark, tmp_path):
     )
     snap = {r["id"]: r["score"] for r in read_snapshot(spark, path).collect()}
     assert snap["c"] is None and snap["a"] == 2.0
-
-
-@pytest.mark.slow
-def test_txn_clustered_compaction_tightens_zone_maps(spark, tmp_path):
-    """Ingest-ordered commits give every file the FULL value range (no
-    range probe prunes); compacting clustered by the probe column splits
-    each bucket into tight-range files, after which the same probe skips
-    most of them — and the table content is unchanged."""
-    from kinesis3_spark.sinks.txn import (
-        append_snapshot,
-        compact_table,
-        read_manifest,
-        read_snapshot,
-    )
-
-    path = str(tmp_path / "log")
-    # 3 commits, each spanning the whole 0..299 range (interleaved)
-    for start in range(3):
-        rows = [
-            (f"k{v}", "2024-01-01 10:00:00", float(v), "2024-01-01")
-            for v in range(start, 300, 3)
-        ]
-        # coalesce(1): one writer task per commit, so each bucket gets ONE
-        # file spanning the commit's ENTIRE value range (the realistic
-        # arrival-ordered ingest; without it the 32-way local parallelism
-        # would accidentally pre-cluster tiny files)
-        append_snapshot(
-            _events(spark, rows).coalesce(1), path, key="id", n_buckets=2,
-            stats_cols=["val"],
-        )
-    probe = [("val", "between", 100.0, 119.0)]
-    man = read_manifest(path)
-    from kinesis3_spark.sinks.txn import _file_may_match
-
-    kept_before = [
-        e for e in man["files"]
-        if _file_may_match(e.get("stats"), *probe[0])
-    ]
-    assert len(kept_before) == len(man["files"])  # every file overlaps
-    before = sorted(r["id"] for r in read_snapshot(spark, path).collect())
-
-    compact_table(
-        spark, path, key="id", cluster_by=["val"], max_records_per_file=40
-    )
-    man2 = read_manifest(path)
-    assert len(man2["files"]) >= 8  # max_records_per_file split buckets
-    kept_after = [
-        e for e in man2["files"]
-        if _file_may_match(e.get("stats"), *probe[0])
-    ]
-    assert len(kept_after) <= len(man2["files"]) // 2
-    after = sorted(r["id"] for r in read_snapshot(spark, path).collect())
-    assert after == before
-    got = sorted(
-        r["id"]
-        for r in read_snapshot(spark, path, where=probe)
-        .where("val BETWEEN 100.0 AND 119.0")
-        .collect()
-    )
-    assert got == [f"k{v}" for v in range(100, 120)]
-
-
-@pytest.mark.slow
-def test_txn_zorder_compaction_prunes_2d_box(spark, tmp_path):
-    """Z-ordered compaction gives each file a tight box in BOTH
-    dimensions: a 2-D box probe (val band AND score band) prunes files
-    the 1-D ingest layout kept."""
-    from kinesis3_spark.sinks.txn import (
-        _file_may_match,
-        append_snapshot,
-        compact_table,
-        read_manifest,
-        read_snapshot,
-    )
-    from pyspark.sql import functions as SF
-
-    path = str(tmp_path / "log")
-    rows = [
-        (f"k{v}", "2024-01-01 10:00:00", float(v % 100), "2024-01-01")
-        for v in range(400)
-    ]
-    df = _events(spark, rows).withColumn(
-        "score", (SF.crc32(SF.col("id")) % 100).cast("double")
-    )
-    append_snapshot(df, path, key="id", n_buckets=2, stats_cols=["val", "score"])
-    compact_table(
-        spark, path, key="id", zorder=("val", "score"),
-        max_records_per_file=50,
-    )
-    man = read_manifest(path)
-    box = [("val", "between", 0.0, 24.0), ("score", "between", 0.0, 24.0)]
-    kept = [
-        e for e in man["files"]
-        if all(_file_may_match(e.get("stats"), *p) for p in box)
-    ]
-    assert 0 < len(kept) < len(man["files"])
-    # correctness: pruned + exact filter == full + exact filter
-    pruned = (
-        read_snapshot(spark, path, where=box)
-        .where("val <= 24.0 AND score <= 24.0").count()
-    )
-    full = (
-        read_snapshot(spark, path)
-        .where("val <= 24.0 AND score <= 24.0").count()
-    )
-    assert pruned == full > 0
-
-
-@pytest.mark.slow
-def test_txn_bin_packing_rewrites_only_small_files(spark, tmp_path):
-    """OPTIMIZE bin-packing (r9): compact_table(small_file_bytes=...)
-    folds only sub-threshold files; right-sized files are CARRIED by
-    reference (path identity in the next manifest, stats/dv intact), so
-    maintenance cost scales with the small-file debt, not the table.
-    Folding a dv-carrying small file physically purges its deleted rows;
-    with nothing to pack the call is a no-op (no empty commit)."""
-    import os as _os
-
-    from kinesis3_spark.sinks import txn
-
-    path = str(tmp_path / "t")
-    # one BIG commit (all rows) then several small ones, single bucket
-    # so everything contends in the same bucket dir
-    big = spark.createDataFrame(
-        [(f"k{i:04d}", "2024-01-01 00:00:00", float(i)) for i in range(4000)],
-        "id string, ts string, val double",
-    ).withColumn("ts", F.to_timestamp("ts")).coalesce(1)
-    txn.append_snapshot(big, path, key="id", n_buckets=1)
-    for j in range(3):
-        small = spark.createDataFrame(
-            [(f"s{j}", "2024-01-02 00:00:00", float(j))],
-            "id string, ts string, val double",
-        ).withColumn("ts", F.to_timestamp("ts")).coalesce(1)
-        txn.append_snapshot(small, path, key="id")
-    man = txn.read_manifest(path)
-    assert all(isinstance(e.get("bytes"), int) for e in man["files"])
-    sizes = sorted(e["bytes"] for e in man["files"])
-    threshold = sizes[-1]  # everything below the big file is "small"
-    big_paths = {e["path"] for e in man["files"] if e["bytes"] >= threshold}
-    assert len(big_paths) == 1 and len(man["files"]) == 4
-    # a dv on one small row: folding must purge it physically
-    txn.delete_where(spark, path, "id = 's1'")
-    before = sorted(map(tuple, txn.read_snapshot(spark, path).collect()))
-
-    ep = txn.compact_table(spark, path, key="id", small_file_bytes=threshold)
-    man2 = txn.read_manifest(path)
-    assert man2["epoch"] == ep
-    # the big file is carried by path identity; small files folded to one
-    assert big_paths <= {e["path"] for e in man2["files"]}
-    assert len(man2["files"]) == 2
-    assert not any(e.get("dv") for e in man2["files"])  # purged, not carried
-    after = sorted(map(tuple, txn.read_snapshot(spark, path).collect()))
-    assert after == before
-    # nothing left to pack: no-op, same epoch, no empty commit
-    assert txn.compact_table(
-        spark, path, key="id", small_file_bytes=threshold
-    ) == ep
-    assert txn.read_manifest(path)["epoch"] == ep
 
 
 @pytest.mark.slow

@@ -298,6 +298,8 @@ def test_bm25_prf_persists_its_tokens_once_per_documents_file(spark, sf_dir, tmp
         "llm_dsir_importance",
         "llm_unigram_train",
         "llm_unigram_encode_corpus",
+        "llm_bpe_merge_loop",
+        "llm_bpe_encode_corpus",
     ],
 )
 def test_persisted_grams_follow_a_rewritten_documents_file(spark, sf_dir, tmp_path, name):

@@ -1,8 +1,6 @@
 """Bloom-filter file skipping on the manifest txn table (sinks/txn.py):
 no false negatives, real pruning on layout-uncorrelated point probes,
-lifecycle composition (vacuum keeps referenced sidecars, compaction
-re-harvests, restore carries the config), and DS-reader partition
-pruning through the same sidecars."""
+and DS-reader partition pruning through the same sidecars."""
 
 from __future__ import annotations
 
@@ -93,29 +91,6 @@ def test_bloom_is_equality_only_and_conservative(spark, table):
     ref = next(iter(e["bloom"].values()))
     e2 = dict(e, bloom={"id": ref + ".missing"})
     assert T._bloom_may_match(table, e2, "id", "==", (17,))
-
-
-def test_vacuum_keeps_referenced_bloom_sidecars(spark, table):
-    deleted = T.vacuum_table(table, keep_epochs=1)
-    man = T.read_manifest(table)
-    refs = {r for e in man["files"] for r in (e.get("bloom") or {}).values()}
-    assert refs  # table still bloom-indexed
-    for r in refs:
-        assert os.path.exists(os.path.join(table, r)), r
-        assert r not in deleted
-    # pruning still works after vacuum
-    assert len(_candidates(table, [("id", "==", 17)])) < len(man["files"])
-
-
-def test_compaction_reharvests_blooms(spark, table):
-    T.compact_table(spark, table, key="id")
-    man = T.read_manifest(table)
-    assert man.get("bloom_cols") == ["id"]
-    assert all(e.get("bloom") for e in man["files"])
-    # both epochs' ids answer through the NEW files' sidecars
-    for probe in (17, 1017):
-        got = T.read_snapshot(spark, table, where=[("id", "==", probe)])
-        assert got.where(F.col("id") == probe).count() == 1
 
 
 def test_datasource_reader_prunes_partitions_with_bloom(spark, table):

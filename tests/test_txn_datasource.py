@@ -113,42 +113,6 @@ def test_epoch_option_time_travels_batch_reads(registered, tmp_path):
     assert old.count() == 1 and "extra" not in old.columns
 
 
-def test_vacuum_reaps_orphan_bloom_sidecars(registered, tmp_path):
-    """Bloom sidecars of vacuumed files (and losing OCC attempts) are
-    referenced by no retained manifest and must be reaped with their
-    files; referenced sidecars stay and keep answering probes."""
-    import os
-
-    from kinesis3_spark.sinks.txn import read_manifest, vacuum_table
-
-    spark, path = registered, str(tmp_path / "t")
-    upsert_manifest_txn(
-        spark, _mk(spark, [(f"k{i}", "g", i) for i in range(10)]),
-        path, key="id", order_col="val", n_buckets=1, bloom_cols=["id"],
-    )
-    upsert_manifest_txn(  # rewrites the only bucket: epoch-1 file orphaned
-        spark, _mk(spark, [("k0", "g", 100)]),
-        path, key="id", order_col="val",
-    )
-    man = read_manifest(path)
-    live_refs = {r for e in man["files"] for r in (e.get("bloom") or {}).values()}
-    all_side = {
-        os.path.join("_bloom", f) for f in os.listdir(os.path.join(path, "_bloom"))
-    }
-    orphans = all_side - live_refs
-    assert orphans  # epoch 1's sidecar is no longer referenced
-    deleted = vacuum_table(path, keep_epochs=1)
-    assert orphans <= set(deleted)
-    for ref in live_refs:
-        assert os.path.exists(os.path.join(path, ref)), ref
-    # probes still answered from the retained sidecars
-    from kinesis3_spark.sinks import txn as T
-
-    assert T.read_snapshot(spark, path, where=[("id", "==", "k0")]).where(
-        "id = 'k0'"
-    ).first()["val"] == 100
-
-
 def test_datasource_reads_manifest_exactly_once(registered, tmp_path):
     """schema() and reader() must consume ONE memoized manifest read — a
     commit between two independent reads would pair one epoch's schema

@@ -3,16 +3,12 @@
 Row-level delete must be a METADATA-ONLY commit (sinks/txn.delete_where):
 the data-file set is bit-identical across the delete epoch, deleted rows
 vanish from every scan (including bucket-pruned and zone-map-skipped
-reads), time travel to a pre-delete epoch still sees them, compaction
-physically purges them, and vacuum reaps sidecars that leave retention.
+reads), and time travel to a pre-delete epoch still sees them.
 Exactly-once: a replayed (app_id, batch_id) append is skipped via the
 manifest's app watermark — the Delta txnAppId/txnVersion protocol.
 """
 
 from __future__ import annotations
-
-import json
-import os
 
 import pytest
 
@@ -23,13 +19,11 @@ from pyspark.sql import functions as F
 from kinesis3_spark.sinks.txn import (
     append_manifest_stream,
     append_snapshot,
-    compact_table,
     delete_where,
     read_manifest,
     read_snapshot,
     table_changes,
     upsert_manifest_txn,
-    vacuum_table,
 )
 from kinesis3_spark.streaming.run import await_or_raise
 
@@ -109,37 +103,6 @@ def test_upsert_after_delete_does_not_resurrect(spark, tmp_path):
     t = read_snapshot(spark, path)
     assert t.where("id = 'k001'").count() == 0
     assert t.where("grp = 'new'").count() == 5
-
-
-def test_compaction_purges_vectors_physically(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _seed(spark, path)
-    delete_where(spark, path, "grp = 'odd'")
-    compact_table(spark, path, key="id")
-    man = read_manifest(path)
-    assert not any(e.get("dv") for e in man["files"])
-    t = read_snapshot(spark, path)
-    assert t.count() == 20 and t.where("grp='odd'").count() == 0
-    # the compacted epoch's parquet no longer CONTAINS the rows (purged,
-    # not merely filtered): read the files raw, bypassing the manifest
-    raw = spark.read.parquet(
-        *(os.path.join(path, e["path"]) for e in man["files"])
-    )
-    assert raw.where("grp = 'odd'").count() == 0
-
-
-def test_vacuum_keeps_referenced_sidecars_reaps_expired(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _seed(spark, path)
-    delete_where(spark, path, "grp = 'odd'")  # epoch 2 + dv sidecar
-    # retention covers epoch 2: its sidecar must survive vacuum
-    deleted = vacuum_table(path, keep_epochs=1)
-    assert not any(d.startswith("dv-") for d in deleted)
-    assert read_snapshot(spark, path).count() == 20
-    compact_table(spark, path, key="id")  # epoch 3, dv-free
-    deleted = vacuum_table(path, keep_epochs=1)
-    assert any(d.startswith("dv-") for d in deleted)
-    assert read_snapshot(spark, path).count() == 20
 
 
 def test_append_replay_skipped_by_app_watermark(spark, tmp_path):
@@ -236,12 +199,12 @@ def test_dv_composes_with_zone_map_skipping(spark, tmp_path):
 
 
 def test_randomized_op_sequences_match_dict_model(spark, tmp_path):
-    """Model-based check: random interleavings of upsert / delete_where /
-    compact / vacuum must leave the table equal to a plain dict model
-    (key → last-written row, minus deleted). Seeded RNG, three sequences —
-    the cross-feature interactions (delete then upsert same key, compact
-    mid-history, vacuum after deletes) are where layered metadata goes
-    wrong, not in any single op."""
+    """Model-based check: random interleavings of upsert / delete_where
+    must leave the table equal to a plain dict model (key → last-written
+    row, minus deleted). Seeded RNG, three sequences — the cross-feature
+    interactions (delete then upsert same key, deletes stacking vectors
+    on one file) are where layered metadata goes wrong, not in any
+    single op."""
     import random
 
     from kinesis3_spark.sinks.txn import delete_where
@@ -255,7 +218,7 @@ def test_randomized_op_sequences_match_dict_model(spark, tmp_path):
         for i in range(30):
             model[f"k{i:03d}"] = ("even" if i % 2 == 0 else "odd", i)
         for step in range(8):
-            op = rnd.choice(["upsert", "delete", "compact", "vacuum"])
+            op = rnd.choice(["upsert", "delete"])
             if op == "upsert":
                 ver += 1
                 keys = rnd.sample(range(60), rnd.randint(1, 6))
@@ -265,7 +228,7 @@ def test_randomized_op_sequences_match_dict_model(spark, tmp_path):
                 )
                 for kid, g, v in rows:
                     model[kid] = (g, v)
-            elif op == "delete":
+            else:
                 lo = rnd.randint(0, 1500 * max(ver, 1))
                 cond = f"val >= {lo} AND val < {lo + 400}"
                 delete_where(spark, path, cond)
@@ -273,10 +236,6 @@ def test_randomized_op_sequences_match_dict_model(spark, tmp_path):
                     k: (g, v) for k, (g, v) in model.items()
                     if not (lo <= v < lo + 400)
                 }
-            elif op == "compact":
-                compact_table(spark, path, key="id")
-            else:
-                vacuum_table(path, keep_epochs=rnd.randint(1, 2))
         t = read_snapshot(spark, path)
         got = (
             {} if t is None else

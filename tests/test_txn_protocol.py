@@ -105,12 +105,9 @@ def test_legacy_manifest_without_protocol_still_reads(spark, table):
 
 
 def test_protocol_refusal_is_not_swallowed_as_reaped_history(spark, table):
-    """Review r11 #2: several walks `except ValueError` around
-    read_manifest to mean 'vacuum-reaped, skip'. A protocol refusal is
-    a DEDICATED subtype those handlers re-raise — otherwise vacuum
-    would classify a future-writer epoch's files as unreferenced
-    garbage and REAP committed data, and history/stream walks would
-    silently skip the epoch."""
+    """A protocol refusal on a historical epoch is a DEDICATED
+    ValueError subtype that surfaces from every read of that epoch
+    (time travel, the change feed), never mistaken for a missing one."""
     # second epoch, then stamp EPOCH 2's retained manifest with an
     # unknown feature (epoch 3 = current stays readable)
     T.append_snapshot(
@@ -129,9 +126,9 @@ def test_protocol_refusal_is_not_swallowed_as_reaped_history(spark, table):
         json.dump(man, fh, indent=1)
 
     with pytest.raises(T.ProtocolUnsupported, match="time_crystals"):
-        T.table_history(table)
+        T.read_snapshot(spark, table, epoch=2)
     with pytest.raises(T.ProtocolUnsupported, match="time_crystals"):
-        T.vacuum_table(table, keep_epochs=2, dry_run=True)
+        T.table_changes(spark, table, 2, 3)
     # the current epoch itself stays readable — refusal is scoped to
     # walks that must interpret the refused epoch
     assert T.read_snapshot(spark, table).count() == 4
