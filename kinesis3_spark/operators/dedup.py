@@ -37,6 +37,9 @@ LSH_BANDS = 32
 LSH_ROWS = 2
 SHINGLE_N = 3
 SIMHASH_BITS = 32
+SUBSTR_K = 25  # ExactSubstr window (paper uses 50; this corpus averages
+               # 54 tokens/doc, so 25 keeps the operator non-vacuous —
+               # 21 affected docs at sf0.01, 199 at sf0.1)
 
 
 def portable_hash60(col) -> Column:
@@ -284,9 +287,8 @@ def lsh_candidate_pairs(
 
 
 def minhash_lsh_pairs(
-    df: DataFrame,
-    grams: DataFrame | None = None,
-    signatures: DataFrame | None = None,
+    grams: DataFrame,
+    signatures: DataFrame,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Full near-dup pipeline: shingle → minhash → LSH bucket-join →
@@ -298,21 +300,21 @@ def minhash_lsh_pairs(
     The gram-set subplan has three consumers (signatures, both verify join
     sides); left to Catalyst they become three full shingle recomputations
     (the post-pruning subplans differ, so ReusedExchange does NOT fire —
-    measured). Pass a persisted `grams` (see queries/dedup._grams_for) to
-    compute shingles once; at production scale that persisted frame is the
-    STORED signature index maintained beside the corpus.
+    measured). `grams` is a `_gram_sets` frame, persisted by the caller
+    (see queries/dedup._grams_for) so shingles are computed once; at
+    production scale that persisted frame is the STORED signature index
+    maintained beside the corpus.
 
-    Same story one level up for `signatures`: the LSH band self-join
-    consumes the signature subplan on BOTH sides, and Spark does not fire
-    ReusedExchange across the aliased copies — unpersisted, the whole
-    scan→shingle→minhash pipeline runs twice (measured 3.1 s vs 0.4 s for
-    the candidate stage at sf0.1). Pass a persisted frame
-    (queries/dedup._sigs_for) or a stored signature table."""
-    g = grams if grams is not None else _gram_sets(df)
-    sig = signatures if signatures is not None else minhash_signatures(g)
-    cand = lsh_candidate_pairs(sig, max_bucket=max_bucket)
-    ga = g.select(F.col("id").alias("id_a"), F.col("grams").alias("grams_a"))
-    gb = g.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b"))
+    Same story one level up for `signatures` (`minhash_signatures` of
+    `grams`): the LSH band self-join consumes the signature subplan on
+    BOTH sides, and Spark does not fire ReusedExchange across the aliased
+    copies — unpersisted, the whole scan→shingle→minhash pipeline runs
+    twice (measured 3.1 s vs 0.4 s for the candidate stage at sf0.1).
+    Pass a persisted frame (queries/dedup._sigs_for) or a stored
+    signature table."""
+    cand = lsh_candidate_pairs(signatures, max_bucket=max_bucket)
+    ga = grams.select(F.col("id").alias("id_a"), F.col("grams").alias("grams_a"))
+    gb = grams.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b"))
     verified = (
         cand.join(ga, "id_a")
         .join(gb, "id_b")
@@ -446,14 +448,15 @@ def incremental_dedup(new_df: DataFrame, known_fps: DataFrame) -> DataFrame:
     )
 
 
-def exact_substring_spans(d: DataFrame, k: int = 50) -> DataFrame:
+def exact_substring_spans(d: DataFrame) -> DataFrame:
     """ExactSubstr duplicated-span DISCOVERY (Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better" §4.1):
     find, per document, the maximal token spans whose every k-token
-    window also occurs elsewhere in the corpus — keeping ONE canonical
-    occurrence (the globally first by (id, position)) and marking the
-    rest for removal. The paper's single-node suffix array is replaced
-    by the distributed window-hash approximation: a span is duplicated
+    window (k = ``SUBSTR_K``) also occurs elsewhere in the corpus —
+    keeping ONE canonical occurrence (the globally first by (id,
+    position)) and marking the rest for removal. The paper's
+    single-node suffix array is replaced by the distributed window-hash
+    approximation: a span is duplicated
     iff all its k-windows are, so k-window identity + contiguous-merge
     reconstructs the paper's >=k-token duplicated substrings without
     any global ordering structure. Companion to the duplicate-passage
@@ -484,6 +487,7 @@ def exact_substring_spans(d: DataFrame, k: int = 50) -> DataFrame:
 
     from ..functions.text import ngram_hashes_from_tokens
 
+    k = SUBSTR_K
     toks_df = d.select(F.col("doc_id").alias("__id"), tokenize("text").alias("toks"))
     occ = toks_df.select(
         "__id",
@@ -532,7 +536,7 @@ def _merge_spans(dup: DataFrame, k: int) -> DataFrame:
     )
 
 
-def exact_substring_dedup(d: DataFrame, k: int = 50) -> DataFrame:
+def exact_substring_dedup(d: DataFrame) -> DataFrame:
     """ExactSubstr REMOVAL: rebuild each document with its duplicated
     spans (exact_substring_spans) cut out — the operation Lee et al.
     apply to C4/RealNews before training, removing all but one
@@ -553,7 +557,7 @@ def exact_substring_dedup(d: DataFrame, k: int = 50) -> DataFrame:
     DSIR (alias-subtree re-execution makes sharing the exploded
     subtree a false economy; at 100 TB the span relation is tiny next
     to the corpus and broadcasts)."""
-    return _cut_spans(d, exact_substring_spans(d, k=k))
+    return _cut_spans(d, exact_substring_spans(d))
 
 
 def _cut_spans(d: DataFrame, spans: DataFrame) -> DataFrame:

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 _MAGIC_I, _MAGIC_A, _MAGIC_V = b"RAWI", b"RAWA", b"RAWV"
 AUDIO_WINDOWS = 65  # audio_fingerprint energy windows: 64 delta bits
+AHASH_MAX_HAMMING = 3  # image near-dup radius: lossless under the 4-band split
 
 
 # ----------------------------------------------------------------------
@@ -454,10 +455,11 @@ def banded_hamming_pairs(
     return cross.unionByName(same)
 
 
-def ahash_neardup_pairs(hashes: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Image-aHash near-dup pairs: banded_hamming_pairs under the 4 ×
-    16-bit band encoding of image_ahash (lossless for radius ≤ 3)."""
-    return banded_hamming_pairs(hashes, max_hamming, n_bands=4)
+def ahash_neardup_pairs(hashes: DataFrame) -> DataFrame:
+    """Image-aHash near-dup pairs within ``AHASH_MAX_HAMMING`` bits:
+    banded_hamming_pairs under the 4 × 16-bit band encoding of
+    image_ahash (lossless for radius ≤ 3)."""
+    return banded_hamming_pairs(hashes, AHASH_MAX_HAMMING, n_bands=4)
 
 
 def banded_hamming_matches(

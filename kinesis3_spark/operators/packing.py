@@ -5,7 +5,7 @@ Training pipelines pack variable-length documents into fixed-size context
 windows so no padding tokens are wasted; at 100 TB the packing itself must
 be distributed. The classic FFD heuristic is inherently sequential, so the
 scale shape here is *partitioned FFD*: documents are hash-bucketed into
-`num_groups` independent groups (deterministic `pmod(hash(id), g)`), each
+`PACK_GROUPS` independent groups (deterministic `pmod(hash(id), g)`), each
 group is packed locally by an `applyInPandas` worker, and bin ids are made
 globally unique as `group_id * 2^32 + local_bin`. Each group sees ~N/g
 documents, so worker memory is bounded and adding executors scales packing
@@ -16,7 +16,7 @@ Guarantees (asserted in tests/test_packing.py):
   * every bin's token total is <= budget, except single-document bins whose
     one document alone exceeds the budget (flagged `oversize = 1` — the
     caller decides whether to truncate or drop those);
-  * deterministic: same input + same num_groups => identical assignment
+  * deterministic: same input + same group count => identical assignment
     (FFD order ties broken by id, hash partitioning is seed-free).
 
 No reference counterpart (bcambel/kinesis3 has no training-data surface);
@@ -31,13 +31,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _GROUP_SHIFT = 1 << 32
+PACK_GROUPS = 8  # independent FFD groups of pack_sequences
+BUCKET_WIDTH = 1024  # ids per local-cumsum bucket of cumulative_token_positions
 
 
-def pack_sequences(
-    df: DataFrame,
-    budget: int,
-    num_groups: int = 8,
-) -> DataFrame:
+def pack_sequences(df: DataFrame, budget: int) -> DataFrame:
     """Assign each row to a token-budgeted bin.
 
     Returns (doc_id, n_tokens, bin_id, oversize) with one row per input row.
@@ -75,7 +73,7 @@ def pack_sequences(
     grouped = df.select(
         F.col("doc_id"),
         F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.pmod(F.hash(F.col("doc_id")), F.lit(num_groups)).alias("__grp"),
+        F.pmod(F.hash(F.col("doc_id")), F.lit(PACK_GROUPS)).alias("__grp"),
     )
     schema = "doc_id long, n_tokens long, bin_id long, oversize int"
     return grouped.groupBy("__grp").applyInPandas(pack_group, schema=schema)
@@ -90,10 +88,7 @@ def bin_stats(packed: DataFrame) -> DataFrame:
     )
 
 
-def cumulative_token_positions(
-    df: DataFrame,
-    bucket_width: int = 1024,
-) -> DataFrame:
+def cumulative_token_positions(df: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, cum): inclusive running token total in doc_id
     order — the primitive behind concat-and-chunk sequence packing, where
     every example/bin assignment is a pure function of the cumulative
@@ -101,7 +96,7 @@ def cumulative_token_positions(
 
     A single global `Window.orderBy(id)` would funnel the whole corpus
     through one task; this is the TWO-LEVEL distributed scan instead:
-    order-preserving range buckets (id DIV bucket_width) localize the
+    order-preserving range buckets (id DIV BUCKET_WIDTH) localize the
     per-row cumsum (a keyed window), the per-bucket totals roll up to a
     |buckets|-row relation whose *exclusive* cumsum gives each bucket its
     global offset (the only ordered window, over bucket count not row
@@ -113,7 +108,7 @@ def cumulative_token_positions(
     d = df.select(
         "doc_id",
         F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.expr(f"CAST(doc_id DIV {bucket_width} AS BIGINT)").alias("__b"),
+        F.expr(f"CAST(doc_id DIV {BUCKET_WIDTH} AS BIGINT)").alias("__b"),
     )
     w_local = (
         Window.partitionBy("__b")
@@ -122,7 +117,7 @@ def cumulative_token_positions(
     )
     local = d.withColumn("__lc", F.sum("n_tokens").over(w_local))
     w_off = (
-        # scale-ok: input is the |buckets| = |ids|/bucket_width rollup, not corpus rows (~10^6 at 10^9 docs; re-bucket the rollup — same recursion — if it outgrows one task)
+        # scale-ok: input is the |buckets| = |ids|/BUCKET_WIDTH rollup, not corpus rows (~10^6 at 10^9 docs; re-bucket the rollup — same recursion — if it outgrows one task)
         Window.orderBy("__b")
         .rowsBetween(Window.unboundedPreceding, -1)
     )

@@ -26,39 +26,21 @@ from pyspark.sql import functions as F
 MAX_PRUNE_VALUES = 10_000
 
 
-# Pre-filtering the fact side with isin(dim keys) is semantics-preserving
-# ONLY for joins that anyway drop fact rows without a dim match. An outer
-# join would silently lose the unmatched fact rows; an anti join would
-# invert. Those shapes are not partition-pruning candidates — refuse them.
-_PRUNABLE_HOW = {"inner", "semi", "leftsemi", "left_semi"}
-
-
-def pruned_star_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Join `fact` (partitioned by `key`) with a filtered `dim`, pruning
+def pruned_star_join(fact: DataFrame, dim: DataFrame, key: str) -> DataFrame:
+    """Inner-join `fact` (partitioned by `key`) with a filtered `dim`, pruning
     fact partitions by dim's distinct key values before the join. Runs
     one small job over the dim side at plan-construction time (noted —
     same contract as the upsert sink's partition discovery); returns the
     joined frame with the static partition filter in place. Falls back
     to the plain join when the dim key set exceeds MAX_PRUNE_VALUES.
 
-    Only inner/left-semi joins are accepted (see _PRUNABLE_HOW): for any
-    other `how` the isin pre-filter would change the result, so the
-    function raises rather than silently mis-joining. The dim side gets
+    The isin pre-filter is semantics-preserving because the join is
+    inner: it drops only fact rows the join drops anyway (an outer join
+    would lose them, an anti join would invert). The dim side gets
     no forced broadcast hint — MAX_PRUNE_VALUES bounds DISTINCT KEYS,
     not dim rows (a 10k-key billion-row dim must not be broadcast);
     AQE picks the join strategy from actual runtime sizes."""
-    if how.lower().replace("_", "") not in {h.replace("_", "") for h in _PRUNABLE_HOW}:
-        raise ValueError(
-            f"pruned_star_join: how={how!r} is not prunable — the isin "
-            "pre-filter drops unmatched fact rows, which only inner/"
-            "left_semi joins tolerate. Use a plain join for outer/anti."
-        )
     keys = [r[0] for r in dim.select(key).distinct().limit(MAX_PRUNE_VALUES + 1).collect()]
     if len(keys) > MAX_PRUNE_VALUES:
-        return fact.join(dim, key, how)
-    return fact.where(F.col(key).isin(keys)).join(dim, key, how)
+        return fact.join(dim, key)
+    return fact.where(F.col(key).isin(keys)).join(dim, key)

@@ -42,6 +42,18 @@ LSH_SEED = 42
 LSH_TABLES = 4
 LSH_BITS = 8  # bits per table
 PQ_M = 8  # product-quantization subspaces
+TOP_K = 5  # neighbors per query of the pandas, LSH and IVF top-k
+IVF_NPROBE = 4  # cells cosine_topk_ivf probes per query
+IVFPQ_CELLS = 16  # coarse centroids of train_ivfpq
+IVFPQ_CODEWORDS = 64  # codewords per subspace book of train_ivfpq
+IVFPQ_ITERS = 8  # Lloyd iterations of both train_ivfpq trainings
+RERANK_NPROBE = 12  # of 16 cells: over-probe buys cell coverage
+RERANK_FETCH_R = 128  # over-fetch: ADC candidates kept for exact re-rank
+KNN_NPROBE = 8  # cells knn_graph_ivfpq probes per vector
+KNN_RERANK_MULT = 4  # knn_graph_ivfpq's exact-refine shortlist, in units of k
+SEMDEDUP_TARGET_CELL = 256  # vectors per derived SemDeDup cell
+SEMDEDUP_N_ASSIGN = 4  # SemDeDup soft-assigns each vector to its 4 nearest cells
+PCA_K = 8  # principal components train_pca keeps
 
 
 def _topk_from_scores(cand: DataFrame, k: int) -> DataFrame:
@@ -95,18 +107,16 @@ def cosine_topk_bruteforce(
     return _topk_from_scores(scored, k)
 
 
-def cosine_topk_pandas(
-    emb: DataFrame,
-    queries_pdf: pd.DataFrame,
-    k: int = 5,
-) -> DataFrame:
-    """Exact top-k neighbors, Arrow/pandas tier with per-batch partial top-k.
+def cosine_topk_pandas(emb: DataFrame, queries_pdf: pd.DataFrame) -> DataFrame:
+    """Exact top-k neighbors (k = TOP_K), Arrow/pandas tier with per-batch
+    partial top-k.
 
     `queries_pdf` is a driver-side pandas frame (the query set is bounded by
     definition — it plays the broadcast role). Each mapInPandas batch scores
     batch x Q with one numpy matmul and emits only its local top-k per
     query; the final global rank merges batch winners.
     """
+    k = TOP_K
     qids = queries_pdf["vec_id"].to_numpy()
     Q = np.stack(queries_pdf["embedding"].to_numpy()).astype(np.float64)
     Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
@@ -173,15 +183,10 @@ def lsh_signatures(emb: DataFrame, dim: int) -> DataFrame:
     )
 
 
-def cosine_topk_lsh(
-    emb: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 5,
-) -> DataFrame:
-    """ANN top-k: candidates = vectors sharing any table signature with the
-    query (equi-join on (table, sig) — sub-linear, never all-pairs), then
-    exact cosine + rank over candidates only.
+def cosine_topk_lsh(emb: DataFrame, queries: DataFrame, dim: int) -> DataFrame:
+    """ANN top-k (k = TOP_K): candidates = vectors sharing any table
+    signature with the query (equi-join on (table, sig) — sub-linear,
+    never all-pairs), then exact cosine + rank over candidates only.
 
     Recall depends on the similarity regime: ~(1 - (1 - p^BITS)^TABLES) per
     neighbor with p = 1 - theta/pi. Tuned for cos >= ~0.8 neighborhoods."""
@@ -203,7 +208,7 @@ def cosine_topk_lsh(
         .withColumn("cos", cosine_similarity("qv", "nv"))
         .select("query_id", "neighbor_id", "cos")
     )
-    return _topk_from_scores(scored, k)
+    return _topk_from_scores(scored, TOP_K)
 
 
 # --------------------------------------------------------------------------
@@ -286,17 +291,15 @@ def ivf_assign(
     return emb.select("vec_id", "embedding").mapInPandas(assign_batches, schema)
 
 
-def semdedup_centroids(
-    emb: DataFrame, n_centroids: int | None = None, target_cell: int = 256
-) -> np.ndarray:
+def semdedup_centroids(emb: DataFrame) -> np.ndarray:
     """The k-means cells ``semdedup_pairs`` compares within.
 
     CELL-COUNT DERIVATION (VERDICT r9 'Next round' #5): the m²N²/k cost
     claim only holds when k SCALES WITH N — a fixed k=16 makes the
-    within-cell join quadratic again as the corpus grows. When
-    ``n_centroids`` is not given, it derives as
-    ``max(16, ceil(N / target_cell))``: bounded ~target_cell-row cells,
-    so within-cell work is O(N * m² * target_cell) — LINEAR in corpus
+    within-cell join quadratic again as the corpus grows. The cell count
+    derives as ``max(16, ceil(N / SEMDEDUP_TARGET_CELL))``: bounded
+    ~SEMDEDUP_TARGET_CELL-row cells, so within-cell work is
+    O(N * m² * SEMDEDUP_TARGET_CELL) — LINEAR in corpus
     size, the paper's operating point (Abbas et al. use 11k clusters
     for LAION's 233M embeddings ≈ 21k per cell). N comes from one
     count() over the embedding scan (column-pruned metadata pass —
@@ -308,18 +311,14 @@ def semdedup_centroids(
     The count and the training sample are eager jobs that depend only on
     the corpus: a caller answering repeated queries over one corpus file
     memoizes the result (``queries/similarity.semdedup_cells``)."""
-    if n_centroids is None:
-        n_centroids = max(16, -(-emb.count() // target_cell))
+    n_centroids = max(16, -(-emb.count() // SEMDEDUP_TARGET_CELL))
     return train_ivf_centroids(
         emb, n_centroids=n_centroids, sample=max(4096, 8 * n_centroids)
     )
 
 
 def semdedup_pairs(
-    emb: DataFrame,
-    threshold: float,
-    centroids: np.ndarray,
-    n_assign: int = 1,
+    emb: DataFrame, threshold: float, centroids: np.ndarray
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): embedding near-dup
@@ -331,12 +330,12 @@ def semdedup_pairs(
     embeddings, so they land in the same cell with high probability —
     the recall the registered query audits against exact truth.
 
-    ``n_assign`` soft-assigns each vector to its m nearest cells
-    (multi-probe): a pair straddling a cell boundary is still caught
-    when ANY cell is shared, at m² the comparison volume — the recall/
-    cost dial for thresholds well below true-duplicate similarity
-    (boundary-straddling is rare for genuine dups, common for weakly
-    similar pairs).
+    Each vector is soft-assigned to its m = ``SEMDEDUP_N_ASSIGN``
+    nearest cells (multi-probe): a pair straddling a cell boundary is
+    still caught when ANY cell is shared, at m² the comparison volume —
+    the recall/cost dial for thresholds well below true-duplicate
+    similarity (boundary-straddling is rare for genuine dups, common for
+    weakly similar pairs).
 
     Plan: one assignment scan (m cells + vector per row, from one
     mapInPandas pass), self-joined on the cell key — both sides shuffle
@@ -346,7 +345,7 @@ def semdedup_pairs(
     trained cells (``semdedup_centroids``); building the plan starts no
     job."""
     tagged = ivf_assign(
-        emb, centroids, with_vec=True, n_assign=n_assign
+        emb, centroids, with_vec=True, n_assign=SEMDEDUP_N_ASSIGN
     )
     a = tagged.select(
         "cell", F.col("id").alias("id_a"), F.col("v").alias("va")
@@ -373,33 +372,22 @@ def semdedup_pairs(
 
 
 def cosine_topk_ivf(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    n_centroids: int = 16,
-    centroids: np.ndarray | None = None,
+    emb: DataFrame, queries: DataFrame, centroids: np.ndarray
 ) -> DataFrame:
-    """IVF ANN top-k: probe the `nprobe` nearest cells per query; exact
-    cosine + rank over cell members only — candidate volume ~ nprobe/
-    n_centroids of the corpus instead of all of it.
+    """IVF ANN top-k (k = TOP_K): probe the IVF_NPROBE nearest cells per
+    query; exact cosine + rank over cell members only — candidate volume
+    ~ IVF_NPROBE/n_centroids of the corpus instead of all of it.
 
-    `centroids` lets a caller that also needs the cell assignment (e.g. the
-    banded integrity query) train once and share the index — retraining is
-    deterministic but costs an extra bounded-sample job."""
-    C = (
-        centroids
-        if centroids is not None
-        else train_ivf_centroids(emb, n_centroids=n_centroids)
-    )
-    cells = ivf_assign(emb, C)
+    `centroids` (``train_ivf_centroids``) are trained by the caller, which
+    also needs the cell assignment (e.g. the banded integrity query) and
+    so shares one trained index."""
+    cells = ivf_assign(emb, centroids)
     qpdf = queries.select("vec_id", "embedding").toPandas()
     Q = np.stack(qpdf["embedding"].to_numpy()).astype(np.float64)
     Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    near = np.argsort(-(Qn @ centroids.T), axis=1)[:, :IVF_NPROBE]
     probes = [
-        (int(qid), int(cell))
-        for qid, row in zip(qpdf["vec_id"], np.argsort(-(Qn @ C.T), axis=1)[:, :nprobe])
-        for cell in row
+        (int(qid), int(cell)) for qid, row in zip(qpdf["vec_id"], near) for cell in row
     ]
     spark = emb.sparkSession
     probe_df = spark.createDataFrame(probes, "query_id long, cell int")
@@ -416,7 +404,7 @@ def cosine_topk_ivf(
         .withColumn("cos", cosine_similarity("qv", "nv"))
         .select("query_id", "neighbor_id", "cos")
     )
-    return _topk_from_scores(scored, k)
+    return _topk_from_scores(scored, TOP_K)
 
 
 def embedding_neardup_pairs(
@@ -497,9 +485,7 @@ def train_pq_codebooks(
     return books
 
 
-def train_ivfpq(
-    emb: DataFrame, n_centroids: int = 16, k: int = 64, iters: int = 8
-) -> tuple[np.ndarray, np.ndarray]:
+def train_ivfpq(emb: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """IVF-PQ index training (the FAISS `IVFx,PQy` default composition,
     Jégou et al. 2011 §IV): coarse spherical-k-means centroids for cell
     routing, then product-quantization codebooks trained on the
@@ -507,13 +493,14 @@ def train_ivfpq(
     — residuals concentrate near zero, so a fixed code budget quantizes
     them far more finely than raw vectors. Codebooks are SHARED across
     cells (standard: per-cell books would be n_centroids x the memory).
-    One sample fetch feeds both trainings. Returns (C, books):
-    (n_centroids, dim) L2-normalized and (PQ_M, k, dim/PQ_M)."""
+    One sample fetch feeds both trainings, each IVFPQ_ITERS Lloyd
+    iterations. Returns (C, books): (IVFPQ_CELLS, dim) L2-normalized and
+    (PQ_M, IVFPQ_CODEWORDS, dim/PQ_M)."""
     X = fetch_pq_sample(emb)
     Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
     rng = np.random.RandomState(0)
-    C = Xn[rng.choice(len(Xn), size=min(n_centroids, len(Xn)), replace=False)]
-    for _ in range(iters):
+    C = Xn[rng.choice(len(Xn), size=min(IVFPQ_CELLS, len(Xn)), replace=False)]
+    for _ in range(IVFPQ_ITERS):
         assign = np.argmax(Xn @ C.T, axis=1)
         for j in range(len(C)):
             members = Xn[assign == j]
@@ -521,7 +508,9 @@ def train_ivfpq(
                 c = members.mean(axis=0)
                 C[j] = c / np.linalg.norm(c)
     residuals = Xn - C[np.argmax(Xn @ C.T, axis=1)]
-    return C, train_pq_codebooks(emb, k=k, iters=iters, X=residuals)
+    return C, train_pq_codebooks(
+        emb, k=IVFPQ_CODEWORDS, iters=IVFPQ_ITERS, X=residuals
+    )
 
 
 def ivfpq_encode(
@@ -673,18 +662,17 @@ def cosine_topk_ivfpq_rerank(
     emb: DataFrame,
     queries: DataFrame,
     index: tuple[np.ndarray, np.ndarray],
+    enc: DataFrame,
     k: int = 5,
-    fetch_r: int = 64,
-    nprobe: int = 4,
-    enc: DataFrame | None = None,
     pair_predicate=None,
     carry: tuple[str, ...] = (),
     scores: DataFrame | None = None,
 ) -> DataFrame:
     """Two-stage retrieve-then-rerank — the standard production recall
     lift over a compressed index (FAISS's refine/`k_factor`, Milvus's
-    reorder): stage 1 over-fetches the top ``fetch_r`` (>> k) candidates
-    per query from the IVF-PQ index by ADC score (compressed rows only,
+    reorder): stage 1 probes RERANK_NPROBE cells of the encoded corpus
+    ``enc`` and over-fetches the top fetch_r = RERANK_FETCH_R (>> k)
+    candidates per query by ADC score (compressed rows only,
     raw vectors untouched); stage 2 exact-scores ONLY those |Q| x
     fetch_r survivors with raw vectors and returns the exact-cosine
     top-k. Re-ranking cancels the PQ quantization error entirely — any
@@ -711,7 +699,8 @@ def cosine_topk_ivfpq_rerank(
     why it composes with over-probe. Hard-negative mining at scale is
     exactly this with ``n_label != q_label``."""
     cand = cosine_topk_ivfpq(
-        emb, queries, index, k=fetch_r, nprobe=nprobe, enc=enc, scores=scores
+        emb, queries, index, k=RERANK_FETCH_R, nprobe=RERANK_NPROBE, enc=enc,
+        scores=scores,
     ).select("query_id", "neighbor_id")
     q = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
@@ -736,8 +725,8 @@ def cosine_topk_ivfpq_rerank(
 def persist_ivfpq_index(
     enc: DataFrame,
     path: str,
-    index: tuple[np.ndarray, np.ndarray] | None = None,
-    params: dict | None = None,
+    index: tuple[np.ndarray, np.ndarray],
+    params: dict,
 ) -> None:
     """Write the encoded IVF-PQ corpus CLUSTERED BY CELL: one parquet
     partition directory per cell (`cell=<n>/part-*.parquet`), the on-disk
@@ -748,8 +737,8 @@ def persist_ivfpq_index(
     the index, not all of it. At real scale the same write lands on the
     object store and the cell directories are the retrieval unit.
 
-    ``index=(C, books)`` additionally writes the trained centroids and
-    codebooks (plus optional probe ``params``) as a ``_INDEX_META.json``
+    ``index=(C, books)``, the trained centroids and codebooks, is written
+    with the probe ``params`` as a ``_INDEX_META.json``
     sidecar INSIDE the index directory — the piece that makes the index
     durable: encoded rows are meaningless without the codebooks that
     decode them, and without the sidecar a fresh process would have to
@@ -758,28 +747,24 @@ def persist_ivfpq_index(
     driver metadata (~100 KB at 16x64 float64: n_centroids*dim +
     m*k*dim/m doubles), written AFTER the data files so a reader that
     sees the sidecar sees a complete index."""
+    import json as _json
+    import os as _os
+
     enc.write.partitionBy("cell").mode("overwrite").parquet(path)
-    if index is not None:
-        import json as _json
-        import os as _os
-
-        C, books = index
-        meta = {
-            "centroids": C.tolist(),
-            "codebooks": books.tolist(),
-            "params": dict(params or {}),
-        }
-        tmp = _os.path.join(path, "_INDEX_META.json.tmp")
-        with open(tmp, "w") as f:
-            _json.dump(meta, f)
-        _os.replace(tmp, _os.path.join(path, "_INDEX_META.json"))
+    C, books = index
+    meta = {
+        "centroids": C.tolist(),
+        "codebooks": books.tolist(),
+        "params": dict(params),
+    }
+    tmp = _os.path.join(path, "_INDEX_META.json.tmp")
+    with open(tmp, "w") as f:
+        _json.dump(meta, f)
+    _os.replace(tmp, _os.path.join(path, "_INDEX_META.json"))
 
 
-def read_ivfpq_index_meta(
-    path: str,
-) -> tuple[np.ndarray, np.ndarray, dict] | None:
-    """Read the ``_INDEX_META.json`` sidecar back as (C, books, params),
-    or None for a pre-sidecar index (caller decides whether to retrain).
+def read_ivfpq_index_meta(path: str) -> tuple[np.ndarray, np.ndarray, dict]:
+    """Read the ``_INDEX_META.json`` sidecar back as (C, books, params).
     Round-trip is exact: float64 -> JSON repr -> float64 is value-
     preserving for finite doubles (Python json emits repr(float), which
     reads back bit-identical), so a fresh process probes the on-disk
@@ -788,15 +773,12 @@ def read_ivfpq_index_meta(
     import json as _json
     import os as _os
 
-    p = _os.path.join(path, "_INDEX_META.json")
-    if not _os.path.exists(p):
-        return None
-    with open(p) as f:
+    with open(_os.path.join(path, "_INDEX_META.json")) as f:
         meta = _json.load(f)
     return (
         np.asarray(meta["centroids"], dtype=np.float64),
         np.asarray(meta["codebooks"], dtype=np.float64),
-        meta.get("params", {}),
+        meta["params"],
     )
 
 
@@ -816,8 +798,6 @@ def knn_graph_ivfpq(
     index: tuple[np.ndarray, np.ndarray],
     enc: DataFrame,
     k: int,
-    nprobe: int = 4,
-    rerank_mult: int = 4,
 ) -> DataFrame:
     """OFFLINE kNN-graph construction over an IVF-PQ index: every corpus
     vector is a query; returns the (query_id, rank, neighbor_id) edge
@@ -834,7 +814,8 @@ def knn_graph_ivfpq(
          pass — the codebooks are driver constants in the closure
          (~100 KB), raw corpus vectors are never read on this side.
       2. PROBE-ASSIGN queries: one mapInPandas pass over the corpus
-         emits (query_id, probed cell, normalized vector) x nprobe —
+         emits (query_id, probed cell, normalized vector) x nprobe
+         (nprobe = KNN_NPROBE) —
          np.argsort(kind="stable") so cell routing is deterministic.
       3. ONE equi-join on `cell` co-shuffles queries and decoded
          candidates (the only shuffle of the build); scoring is the
@@ -850,6 +831,7 @@ def knn_graph_ivfpq(
     payloads, safe to shuffle."""
     C, books = index
     m, _kcode, sub = books.shape
+    nprobe = KNN_NPROBE
 
     def dec_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         srange = np.arange(m)
@@ -908,13 +890,11 @@ def knn_graph_ivfpq(
             ).alias("cos"),
         )
     )
-    if rerank_mult <= 0:
-        return _topk_from_scores(scored, k)
     # exact REFINE (FAISS's IVFPQ,Refine shape): keep the ADC top
-    # rerank_mult*k shortlist per query, fetch ONLY those raw vectors
+    # KNN_RERANK_MULT*k shortlist per query, fetch ONLY those raw vectors
     # (bounded raw I/O: R rows per query, never the probed cells), and
     # re-rank by exact cosine — PQ routes and prunes, floats decide.
-    shortlist = _topk_from_scores(scored, rerank_mult * k).select(
+    shortlist = _topk_from_scores(scored, KNN_RERANK_MULT * k).select(
         "query_id", "neighbor_id"
     )
     qv = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
@@ -930,11 +910,9 @@ def knn_graph_ivfpq(
 
 
 def pq_encode(
-    emb: DataFrame,
-    codebooks: np.ndarray,
-    baseline: np.ndarray | None = None,
+    emb: DataFrame, codebooks: np.ndarray, baseline: np.ndarray
 ) -> DataFrame:
-    """(id, codes[m], err_micro): nearest-codeword assignment per subspace
+    """(id, codes[m], err_micro, base_err_micro): nearest-codeword assignment per subspace
     — one vectorized distance computation per Arrow batch per subspace
     (the corpus-side pass is distributed; only the (m, k, sub) codebook
     array ships to executors in the closure, ~32 KB at 8x64x8). err_micro
@@ -943,7 +921,7 @@ def pq_encode(
     (float-parity discipline).
 
     `baseline` (OPTIMIZATION_r14, guide §4.1): a second (m', k', sub')
-    codebook array scored in the SAME Arrow pass, adding a
+    codebook array scored in the SAME Arrow pass, giving the
     `base_err_micro` column with identical per-vector arithmetic — the
     reconstruction-band query previously ran a whole second
     decode+encode corpus pass just for the k=1 baseline error sum."""
@@ -976,18 +954,16 @@ def pq_encode(
                 continue
             X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             codes, err = _err_codes(X, codebooks)
-            out = {
-                "id": pdf["vec_id"].to_numpy(),
-                "codes": list(codes),
-                "err_micro": err,
-            }
-            if baseline is not None:
-                out["base_err_micro"] = _err_codes(X, baseline)[1]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(
+                {
+                    "id": pdf["vec_id"].to_numpy(),
+                    "codes": list(codes),
+                    "err_micro": err,
+                    "base_err_micro": _err_codes(X, baseline)[1],
+                }
+            )
 
-    schema = "id long, codes array<int>, err_micro long"
-    if baseline is not None:
-        schema += ", base_err_micro long"
+    schema = "id long, codes array<int>, err_micro long, base_err_micro long"
     return emb.select("vec_id", "embedding").mapInPandas(encode_batches, schema=schema)
 
 
@@ -1089,8 +1065,9 @@ def partial_gram(emb: DataFrame) -> DataFrame:
     )
 
 
-def train_pca(emb: DataFrame, k: int = 8) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(mean[d], components[k,d], eigvals[k]) of the population covariance,
+def train_pca(emb: DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(mean[d], components[k,d], eigvals[k]) of the population covariance
+    (k = PCA_K),
     components row-orthonormal, eigenvalues descending. The driver holds
     d^2+d+1 doubles (the partials fold DISTRIBUTED via a pos-keyed
     aggregate — the collect is bounded by the dimension, not the corpus
@@ -1113,7 +1090,7 @@ def train_pca(emb: DataFrame, k: int = 8) -> tuple[np.ndarray, np.ndarray, np.nd
     cov = vals[1 + d :].reshape(d, d) / n - np.outer(mean, mean)
     cov = (cov + cov.T) / 2.0  # exact symmetry for eigh
     evals, evecs = np.linalg.eigh(cov)
-    order = np.argsort(evals)[::-1][:k]
+    order = np.argsort(evals)[::-1][:PCA_K]
     return mean, evecs[:, order].T.copy(), evals[order]
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 Z_BITS = 16
+Z_FILES = 16  # files write_zordered writes, one curve segment each
 
 
 def _bucket(col: Column, lo: float, hi: float) -> Column:
@@ -52,14 +53,8 @@ def z_value(x: Column, y: Column) -> Column:
     return reduce(lambda a, b: a.bitwiseOR(b), parts)
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_x: str,
-    col_y: str,
-    n_files: int = 16,
-) -> None:
-    """Rewrite df into n_files parquet files clustered on the Morton curve
+def write_zordered(df: DataFrame, path: str, col_x: str, col_y: str) -> None:
+    """Rewrite df into Z_FILES parquet files clustered on the Morton curve
     of (col_x, col_y). Bounds via one 4-value agg; NULLs sort to bucket 0."""
     lo_x, hi_x, lo_y, hi_y = df.agg(
         F.min(col_x), F.max(col_x), F.min(col_y), F.max(col_y)
@@ -70,7 +65,7 @@ def write_zordered(
     )
     (
         df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
+        .repartitionByRange(Z_FILES, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode("overwrite")

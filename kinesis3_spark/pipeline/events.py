@@ -129,7 +129,7 @@ def project_events(
     )
 
 
-def ingest(df: DataFrame, sid_col: str | None = None) -> DataFrame:
+def ingest(df: DataFrame) -> DataFrame:
     """raw records (JSON strings in column `raw`) → events rows, one
     declarative plan."""
-    return project_events(parse_raw_records(df), sid_col=sid_col)
+    return project_events(parse_raw_records(df))

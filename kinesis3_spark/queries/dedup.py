@@ -154,9 +154,8 @@ def _neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     doc = _t(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_pairs(
-        doc,
-        grams=_grams_for(spark, sf_dir),
-        signatures=_sigs_for(spark, sf_dir),
+        _grams_for(spark, sf_dir),
+        _sigs_for(spark, sf_dir),
     )
     comp = connected_components(pairs.select("id_a", "id_b"))
     return (
@@ -170,11 +169,9 @@ def _neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Oracle is the same exact all-pairs Jaccard — see module docstring.
 @query("dedup_minhash_lsh", oracle=_JACCARD_ORACLE)
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    doc = _t(spark, sf_dir, "documents")
     return D.minhash_lsh_pairs(
-        doc,
-        grams=_grams_for(spark, sf_dir),
-        signatures=_sigs_for(spark, sf_dir),
+        _grams_for(spark, sf_dir),
+        _sigs_for(spark, sf_dir),
     )
 
 
@@ -196,11 +193,9 @@ def dedup_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     13 members (measured at sf0.1), far under the cap, so the result equals
     the exact all-pairs oracle; the recall trade when a bucket DOES hit the
     cap is pinned by the planted-flood test in tests/test_dedup_scale.py."""
-    doc = _t(spark, sf_dir, "documents")
     return D.minhash_lsh_pairs(
-        doc,
-        grams=_grams_for(spark, sf_dir),
-        signatures=_sigs_for(spark, sf_dir),
+        _grams_for(spark, sf_dir),
+        _sigs_for(spark, sf_dir),
         max_bucket=64,
     )
 
@@ -290,11 +285,9 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     feasible for DuckDB at test scale, where Spark's iterative form is the
     one that survives 100 TB (closure materializes O(cluster_size^2) rows,
     propagation never exceeds O(edges) per round)."""
-    doc = _t(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_pairs(
-        doc,
-        grams=_grams_for(spark, sf_dir),
-        signatures=_sigs_for(spark, sf_dir),
+        _grams_for(spark, sf_dir),
+        _sigs_for(spark, sf_dir),
     )
     from ..operators.components import connected_components
 
@@ -321,9 +314,8 @@ def dedup_drop_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a corpus-wide shuffle of payloads."""
     doc = _t(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_pairs(
-        doc,
-        grams=_grams_for(spark, sf_dir),
-        signatures=_sigs_for(spark, sf_dir),
+        _grams_for(spark, sf_dir),
+        _sigs_for(spark, sf_dir),
     )
     from ..operators.components import connected_components
 
@@ -632,9 +624,8 @@ def llm_split_contamination_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     pair relation and one two-row rollup. Auditing a third-party split
     is this query with `tagged` swapped for the external assignment."""
     pairs = D.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"),
-        grams=_grams_for(spark, sf_dir),
-        signatures=_sigs_for(spark, sf_dir),
+        _grams_for(spark, sf_dir),
+        _sigs_for(spark, sf_dir),
     ).select("id_a", "id_b")
     tagged = (
         _neardup_groups(spark, sf_dir)

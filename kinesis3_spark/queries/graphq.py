@@ -84,31 +84,43 @@ def _oriented_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import tmpdirs
 
     def build(scratch):
-        edges = _part_edges(spark, sf_dir)
-        deg = (
-            edges.select(F.col("u").alias("node"))
-            .unionAll(edges.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("d"))
-        )
-        du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-        dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-        u_first = (F.col("du") < F.col("dv")) | (
-            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-        )
-        oriented = (
-            edges.join(du, "u")
-            .join(dv, "v")
-            .select(
-                F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-                F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-            )
-        )
         path = scratch + "/part_edges_oriented"
-        oriented.write.mode("overwrite").parquet(path)
+        orient_by_degree(_part_edges(spark, sf_dir)).write.mode(
+            "overwrite"
+        ).parquet(path)
         return path
 
     return read_parquet(spark, tmpdirs.memo("graph_oriented", sf_dir, build))
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """(node, d) of an undirected (u, v) edge list."""
+    return (
+        edges.select(F.col("u").alias("node"))
+        .unionAll(edges.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("d"))
+    )
+
+
+def orient_by_degree(edges: DataFrame) -> DataFrame:
+    """(a, b): each (u, v) edge re-oriented from its lower-(degree, id)
+    endpoint to the higher, so out-degrees become O(sqrt(m)) regardless
+    of raw skew."""
+    deg = _degrees(edges)
+    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
+    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
+    u_first = (F.col("du") < F.col("dv")) | (
+        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
+    )
+    return (
+        edges.join(du, "u")
+        .join(dv, "v")
+        .select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
+        )
+    )
 
 
 @query(
@@ -172,47 +184,23 @@ def graph_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark re-executes a non-materialized subtree per alias (the deg
     join would run 3x)."""
     return triangle_census(
-        _part_edges(spark, sf_dir),
-        oriented=_oriented_part_edges(spark, sf_dir),
+        _part_edges(spark, sf_dir), _oriented_part_edges(spark, sf_dir)
     )
 
 
-def triangle_census(
-    edges: DataFrame, oriented: DataFrame | None = None
-) -> DataFrame:
+def triangle_census(edges: DataFrame, oriented: DataFrame) -> DataFrame:
     """One-row census of an undirected graph given its (u < v) edge list:
     n_edges, n_wedges (from the degree sequence), n_triangles (wedge
     join over the DEGREE-ORDERED orientation — the bounded-out-degree
-    enumeration), clustering_ppm = 3T/W in integer ppm. Pass a stored
-    ``oriented`` (a, b) edge list to skip recomputing the orientation
-    under each of the three join aliases (Spark re-executes the subtree
-    per alias)."""
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
+    enumeration), clustering_ppm = 3T/W in integer ppm. ``oriented`` is
+    ``orient_by_degree(edges)``, stored by the caller so the three join
+    aliases below do not each recompute it (Spark re-executes a
+    non-materialized subtree per alias)."""
+    deg = _degrees(edges)
     n_edges = edges.agg(F.count("*").cast("bigint").alias("n_edges"))
     n_wedges = deg.agg(
         F.sum(F.expr("d * (d - 1) DIV 2")).cast("bigint").alias("n_wedges")
     )
-    if oriented is None:
-        # re-orient each edge from its lower-(degree, id) endpoint to the
-        # higher: out-degrees become O(sqrt(m)) regardless of raw skew
-        du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-        dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-        u_first = (F.col("du") < F.col("dv")) | (
-            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-        )
-        oriented = (
-            edges.join(du, "u")
-            .join(dv, "v")
-            .select(
-                F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-                F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-            )
-        )
     # OPTIMIZATION_r14 (guide §2.3 "shuffle keys and metadata instead of
     # payloads"): the wedge self-join materialized Σ outdeg² rows through
     # an exchange into the closing join — 41 M wedge rows at sf0.1
@@ -581,7 +569,7 @@ def graph_knn_edges_recall_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN-GRAPH BUILD over the persisted IVF-PQ index, banded-recall
     form (the sim_ivf_recall_band pattern): knn_graph_ivfpq materializes
     per-vector top-5 edges — probe-assign, one cell-keyed co-shuffle,
-    ADC shortlist, exact refine of rerank_mult*k raw vectors per query
+    ADC shortlist, exact refine of KNN_RERANK_MULT*k raw vectors per query
     (FAISS's IVFPQ,Refine) — and the result is audited against the
     brute-force exact 5-NN graph computed in the same job:
 
@@ -608,9 +596,7 @@ def graph_knn_edges_recall_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     C, books, path = _ivfpq_persisted_index(spark, sf_dir)
     enc = S.read_ivfpq_index(spark, path)
-    edges = S.knn_graph_ivfpq(
-        emb, (C, books), enc, k=_KNN_K, nprobe=8, rerank_mult=4
-    ).persist()
+    edges = S.knn_graph_ivfpq(emb, (C, books), enc, k=_KNN_K).persist()
     truth = _knn_truth_edges(spark, sf_dir).persist()
     t_stats = truth.agg(F.count("*").cast("bigint").alias("n_truth_pairs"))
     n_vec = emb.agg(F.count("*").cast("bigint").alias("n_vectors"))

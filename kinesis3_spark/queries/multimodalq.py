@@ -316,7 +316,7 @@ def image_phash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes/image, the join keys are 64-bit-equivalent, and exact
     re-uploads (the dominant duplicate class) never touch the banded
     join."""
-    return M.ahash_neardup_pairs(_phash_for(spark, sf_dir), max_hamming=3)
+    return M.ahash_neardup_pairs(_phash_for(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -558,7 +558,7 @@ def image_phash_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     per round, never O(cluster^2) materialization)."""
     from ..operators.components import connected_components
 
-    pairs = M.ahash_neardup_pairs(_phash_for(spark, sf_dir), max_hamming=3)
+    pairs = M.ahash_neardup_pairs(_phash_for(spark, sf_dir))
     out = connected_components(
         pairs.select("media_id_a", "media_id_b"),
         src="media_id_a",

@@ -773,7 +773,6 @@ def sink_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             path,
             "user_id",
             "value",
-            n_files=16,
         )
         return path
 
@@ -834,7 +833,7 @@ def sink_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             for f in os.listdir(path)
             if f.endswith(".parquet") and not f.startswith((".", "_"))
         )
-        compact_parquet(spark, path, target_file_bytes=64 * 1024 * 1024)
+        compact_parquet(spark, path)
         n_after = sum(
             1
             for f in os.listdir(path)
@@ -1007,9 +1006,7 @@ def txn_incremental_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["value_cents"],
     )
     for e in (2, 3):
-        ch = table_changes(
-            spark, tbl, e - 1, e, key="user_id", include_preimage=True
-        )
+        ch = table_changes(spark, tbl, e - 1, e, key="user_id")
         mv = apply_changes_to_mv(mv, prep(ch), ["event_type"], ["value_cents"])
     return mv.select("event_type", "n_rows", "sum_value_cents").orderBy(
         "event_type"
@@ -1554,7 +1551,6 @@ def _txn_exactly_once_table(spark: SparkSession, sf_dir: str) -> str:
             checkpoint=base + "/ck",
             app_id="events-ingest",
             key="user_id",
-            n_buckets=4,
         )
         await_or_raise(q)
         man = read_manifest(table)
@@ -1687,7 +1683,6 @@ def _txn_cdc_merge_table(spark: SparkSession, sf_dir: str) -> str:
             matched=[{"condition": newer, "update": "all"}],
             not_matched=[{"insert": "all"}],
             order_col="ts", order_tiebreak=["event_id"],
-            n_buckets=4,
         )
         await_or_raise(q)
         man = read_manifest(table)
@@ -1777,7 +1772,7 @@ def stream_txn_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_txntable_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The lakehouse table addressed from PURE SQL TEXT (VERDICT r12
     next-round #5): ``CREATE TEMPORARY VIEW ... USING txntable OPTIONS
-    (path ..., pushdown 'true')`` binds the manifest table into the SQL
+    (path ...)`` binds the manifest table into the SQL
     dialect the way Delta binds into a catalog, then the query itself is
     one ``spark.sql(...)`` string — no DataFrame calls touch the data
     path. The WHERE runs through the full stack: Catalyst pushes the
@@ -1802,7 +1797,7 @@ def sql_txntable_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     view = "txn_events_sql_" + hashlib.md5(path.encode()).hexdigest()[:10]
     spark.sql(
         f"CREATE OR REPLACE TEMPORARY VIEW {view} "
-        f"USING txntable OPTIONS (path '{path}', pushdown 'true')"
+        f"USING txntable OPTIONS (path '{path}')"
     )
     return spark.sql(
         f"""

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .. import tmpdirs
 from ..functions.text import ngram_hashes, term_frequencies, tokenize
+from ..operators.dedup import SUBSTR_K as _ES_K
 from ..sources import read_parquet
 from .decontam import _DUCK_TOKS, doc_stats
 from .relational import _t
@@ -310,11 +311,6 @@ def search_inverted_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ES_K = 25  # ExactSubstr window (paper uses 50; this corpus averages
-            # 54 tokens/doc, so 25 keeps the operator non-vacuous —
-            # 21 affected docs at sf0.01, 199 at sf0.1)
-
-
 @query(
     "llm_exact_substring_dedup",
     oracle=f"""
@@ -407,7 +403,7 @@ def llm_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import exact_substring_dedup
 
     d = _t(spark, sf_dir, "documents")
-    cleaned = exact_substring_dedup(d, k=_ES_K)
+    cleaned = exact_substring_dedup(d)
     return _es_rollup(cleaned)
 
 
@@ -805,7 +801,7 @@ def search_hybrid_rrf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariants of the served
     list (<= 10 rows, dense unique ranks from 1, n_legs in [1, 2])."""
     from ..operators import similarity as S
-    from .similarity import _RERANK_NPROBE, _RERANK_R, _ivfpq_persisted_index
+    from .similarity import _ivfpq_persisted_index
 
     emb = _t(spark, sf_dir, "embeddings")
     qvec = _rrf_query_vec(spark, sf_dir)
@@ -819,8 +815,7 @@ def search_hybrid_rrf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     C, books, path = _ivfpq_persisted_index(spark, sf_dir)
     enc = S.read_ivfpq_index(spark, path)
     dense_ann = S.cosine_topk_ivfpq_rerank(
-        emb, qvec, k=_RRF_N, fetch_r=_RERANK_R, nprobe=_RERANK_NPROBE,
-        index=(C, books), enc=enc,
+        emb, qvec, k=_RRF_N, index=(C, books), enc=enc
     ).select(F.col("neighbor_id").alias("doc_id"), F.col("rank").alias("rnk"))
     ann_top = rrf_fuse([sparse, dense_ann])
 

@@ -20,7 +20,7 @@ from ..operators import similarity as S
 from .relational import _t
 from . import query
 
-_K = 5
+_K = S.TOP_K  # the oracles rank the same top-k the operators return
 _N_QUERIES = 10  # query set = vec_id < 10
 _NEARDUP_T = 0.45
 _DIM = 64
@@ -57,7 +57,7 @@ def topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
 def topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qpdf = _query_set(spark, sf_dir).select("vec_id", "embedding").toPandas()
-    out = S.cosine_topk_pandas(emb, qpdf, k=_K)
+    out = S.cosine_topk_pandas(emb, qpdf)
     return out.withColumnRenamed("rank", "rnk")
 
 
@@ -137,7 +137,7 @@ def topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     count is metadata."""
     emb = _t(spark, sf_dir, "embeddings")
     qset = _query_set(spark, sf_dir)
-    topk = S.cosine_topk_lsh(emb, qset, dim=_DIM, k=_K)
+    topk = S.cosine_topk_lsh(emb, qset, dim=_DIM)
     flags = _topk_integrity(topk, emb, qset.select(F.col("vec_id").alias("query_id")), _K)
     sig_rows = S.lsh_signatures(emb, _DIM).agg(
         F.count("*").cast("bigint").alias("sig_rows")
@@ -166,7 +166,7 @@ def topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qset = _query_set(spark, sf_dir)
     C = S.train_ivf_centroids(emb)
-    topk = S.cosine_topk_ivf(emb, qset, k=_K, centroids=C)
+    topk = S.cosine_topk_ivf(emb, qset, C)
     flags = _topk_integrity(topk, emb, qset.select(F.col("vec_id").alias("query_id")), _K)
     assigned = S.ivf_assign(emb, C).agg(
         F.count("*").cast("bigint").alias("corpus_assigned")
@@ -259,7 +259,7 @@ def _ivfpq_persisted_index(spark: SparkSession, sf_dir: str):
         path = scratch + "/index"
         S.persist_ivfpq_index(
             S.ivfpq_encode(emb, C, books), path, index=(C, books),
-            params={"nprobe": _RERANK_NPROBE, "fetch_r": _RERANK_R},
+            params={"nprobe": S.RERANK_NPROBE, "fetch_r": S.RERANK_FETCH_R},
         )
         return C, books, path
 
@@ -303,9 +303,6 @@ def topk_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.embedding_neardup_pairs(_t(spark, sf_dir, "embeddings"), _NEARDUP_T)
-
-
-_SEMDEDUP_M = 4  # soft-assign each vector to its 4 nearest cells
 
 
 @query(
@@ -354,9 +351,7 @@ def semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(sf_dir, "embeddings.parquet"),
         lambda _scratch: S.semdedup_centroids(emb),
     )
-    found = S.semdedup_pairs(
-        emb, _NEARDUP_T, C, n_assign=_SEMDEDUP_M
-    ).withColumn("f", F.lit(1))
+    found = S.semdedup_pairs(emb, _NEARDUP_T, C).withColumn("f", F.lit(1))
     true = (
         S.embedding_neardup_pairs(emb, _NEARDUP_T)
         .select("id_a", "id_b")
@@ -715,8 +710,6 @@ def embed_pq_reconstruction_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RERANK_NPROBE = 12  # of 16 cells: over-probe buys cell coverage
-_RERANK_R = 128      # over-fetch: ADC candidates kept for exact re-rank
 
 
 @query(
@@ -767,14 +760,13 @@ def topk_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doubles either way, so both top-ks — and the oracle row — are
     # unchanged.
     scores = S.ivfpq_adc_scores(
-        emb, qset, nprobe=_RERANK_NPROBE, index=(C, books), enc=enc
+        emb, qset, nprobe=S.RERANK_NPROBE, index=(C, books), enc=enc
     ).persist()
     rr = S.cosine_topk_ivfpq_rerank(
-        emb, qset, k=_K, fetch_r=_RERANK_R, nprobe=_RERANK_NPROBE,
-        index=(C, books), enc=enc, scores=scores,
+        emb, qset, k=_K, index=(C, books), enc=enc, scores=scores
     ).select("query_id", "neighbor_id")
     adc = S.cosine_topk_ivfpq(
-        emb, qset, k=_K, nprobe=_RERANK_NPROBE, index=(C, books), enc=enc,
+        emb, qset, k=_K, nprobe=S.RERANK_NPROBE, index=(C, books), enc=enc,
         scores=scores,
     ).select("query_id", "neighbor_id")
     brute = S.cosine_topk_bruteforce(emb, qset, k=_K).select(
@@ -878,7 +870,7 @@ def ivf_recall_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qset = _query_set(spark, sf_dir)
     C = S.train_ivf_centroids(emb)
-    ivf = S.cosine_topk_ivf(emb, qset, k=_K, centroids=C).select(
+    ivf = S.cosine_topk_ivf(emb, qset, C).select(
         "query_id", "neighbor_id"
     )
     brute = S.cosine_topk_bruteforce(emb, qset, k=_K).select(
@@ -973,8 +965,8 @@ def hard_negative_mining_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = S.read_ivfpq_index(spark, path)
     pred = F.col("n_label") != F.col("q_label")
     ann = S.cosine_topk_ivfpq_rerank(
-        emb, qset, k=_K, fetch_r=_RERANK_R, nprobe=_RERANK_NPROBE,
-        index=(C, books), enc=enc, pair_predicate=pred, carry=("label",),
+        emb, qset, k=_K, index=(C, books), enc=enc, pair_predicate=pred,
+        carry=("label",),
     ).select("query_id", "neighbor_id", F.lit(1).alias("in_ann"))
     # re-attach labels to the mined pairs (bounded |Q| x k rows) so the
     # label invariant is CHECKED, not assumed from the predicate
@@ -1272,7 +1264,7 @@ def _ivfpq_incremental_index(spark: SparkSession, sf_dir: str) -> str:
         path = scratch + "/index"
         S.persist_ivfpq_index(
             S.ivfpq_encode(base, C, books), path, index=(C, books),
-            params={"nprobe": _RERANK_NPROBE, "fetch_r": _RERANK_R},
+            params={"nprobe": S.RERANK_NPROBE, "fetch_r": S.RERANK_FETCH_R},
         )
         # the append half runs as a FRESH consumer: quantizers come from the
         # sidecar, not the training cache (the restart path, like test_ivfpq's
@@ -1346,7 +1338,7 @@ def ivfpq_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     topk = S.cosine_topk_ivfpq(
         emb, probes, k=3, index=(C, books), enc=enc,
-        nprobe=_RERANK_NPROBE,
+        nprobe=S.RERANK_NPROBE,
     )
     found = topk.where(
         F.col("neighbor_id") == F.col("query_id") - 1_000_000
@@ -1399,7 +1391,7 @@ def ivfpq_delete_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     qset = _query_set(spark, sf_dir)
     topk = S.cosine_topk_ivfpq(
         emb, qset, k=_K, index=(C, books), enc=live,
-        nprobe=_RERANK_NPROBE,
+        nprobe=S.RERANK_NPROBE,
     )
     n_deleted = tombstones.agg(F.count("*").cast("bigint").alias("n_deleted"))
     n_enc = enc.agg(F.count("*").cast("bigint").alias("corpus_encoded"))
@@ -1510,7 +1502,6 @@ def topk_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _topk_from_scores(scored, _K).withColumnRenamed("rank", "rnk")
 
 
-_PCA_K = 8
 _PCA_CAPTURE_FLOOR_PCT = 14  # measured 16.0-20.5% across test SFs; the
 # isotropic baseline is k/d = 12.5%, so a projection bug that scrambles
 # components (capture -> below-baseline) trips the floor
@@ -1520,7 +1511,7 @@ _PCA_CAPTURE_FLOOR_PCT = 14  # measured 16.0-20.5% across test SFs; the
     "embed_pca_variance",
     oracle=f"""
     SELECT (SELECT count(*) FROM embeddings)::BIGINT AS n_rows,
-           {_PCA_K} AS k, 1 AS var_monotone_ok, 1 AS var_match_ok,
+           {S.PCA_K} AS k, 1 AS var_monotone_ok, 1 AS var_match_ok,
            1 AS capture_ok
     """,
 )
@@ -1545,10 +1536,10 @@ def embed_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     numpy and planted-anisotropy recovery are pytest-pinned
     (tests/test_similarity.py)."""
     emb = _t(spark, sf_dir, "embeddings")
-    mean, P, evals = S.train_pca(emb, k=_PCA_K)
+    mean, P, evals = S.train_pca(emb)
     proj = S.matrix_project(emb, P, center=mean)
     aggs = [F.count("*").cast("bigint").alias("n_rows")]
-    for j in range(_PCA_K):
+    for j in range(S.PCA_K):
         x = F.col("proj")[j]
         aggs.append((F.avg(x * x) - F.avg(x) * F.avg(x)).alias(f"v{j}"))
     aggs.append(
@@ -1563,7 +1554,7 @@ def embed_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     mono = F.lit(True)
     match = F.lit(True)
     cap = F.lit(0.0)
-    for j in range(_PCA_K):
+    for j in range(S.PCA_K):
         v = F.col(f"v{j}")
         if j:
             mono = mono & (v <= F.col(f"v{j - 1}") + F.lit(1e-9))
@@ -1572,7 +1563,7 @@ def embed_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
         cap = cap + v
     return row.select(
         "n_rows",
-        F.lit(_PCA_K).alias("k"),
+        F.lit(S.PCA_K).alias("k"),
         mono.cast("int").alias("var_monotone_ok"),
         match.cast("int").alias("var_match_ok"),
         (cap * 100 >= _PCA_CAPTURE_FLOOR_PCT * F.col("total_var"))

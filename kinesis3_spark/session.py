@@ -44,9 +44,9 @@ _RUNTIME_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Let Catalyst hand conjunctive predicates to Python Data Source
     # readers that define pushFilters (the txntable zone-map/bloom file
-    # skipping, sources/txn_datasource.py). Opt-in per scan stays the
-    # reader's `option("pushdown", "true")`; with the session flag off,
-    # Spark raises on any reader that merely DEFINES pushFilters.
+    # skipping, sources/txn_datasource.py). Every txntable scan pushes
+    # filters, and with this flag off Spark raises on any reader that
+    # merely DEFINES pushFilters; tune() re-asserts it on every table load.
     "spark.sql.python.filterPushdown.enabled": "true",
     # Scan-split sizing: the right value gives each core a few tasks for the
     # data ACTUALLY in play. The 128 MB default assumes multi-GB inputs; the

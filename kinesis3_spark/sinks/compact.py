@@ -1,5 +1,5 @@
-"""Small-file compaction: rewrite a Parquet directory into ~target-size
-files.
+"""Small-file compaction: rewrite a Parquet directory into files of about
+`TARGET_FILE_BYTES`.
 
 The operational problem this solves is the streaming archive's long tail:
 a `processingTime` trigger writing every few seconds (core.clj:113-120
@@ -28,6 +28,8 @@ from pyspark.sql import SparkSession
 
 from .upsert import _NEXT, _recover_swap, _swap_in
 
+TARGET_FILE_BYTES = 64 * 1024 * 1024
+
 
 def _dir_bytes(path: str) -> int:
     total = 0
@@ -38,18 +40,14 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
+def compact_parquet(spark: SparkSession, path: str) -> int:
     """Rewrite `path` (a Parquet directory) into ceil(bytes/target) files.
 
     Returns the number of output files. Local-filesystem directory swap; on
     an object store the same flow is write-to-staging + prefix rename.
     """
     _recover_swap(path)
-    n_files = max(1, math.ceil(_dir_bytes(path) / target_file_bytes))
+    n_files = max(1, math.ceil(_dir_bytes(path) / TARGET_FILE_BYTES))
     spark.read.parquet(path).coalesce(n_files).write.mode("overwrite").parquet(
         path + _NEXT
     )

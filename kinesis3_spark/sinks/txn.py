@@ -63,6 +63,8 @@ from .upsert import _dedup_last
 MANIFEST = "_MANIFEST.json"
 _BUCKET_COL = "__bucket"
 _EPOCH0 = _dt.datetime(1970, 1, 1)
+_COMMIT_ATTEMPTS = 5  # OCC budget: a commit that loses this many races raises
+_STREAM_BUCKETS = 4  # buckets of a table the streaming sinks create
 
 
 class CommitConflict(RuntimeError):
@@ -704,7 +706,7 @@ def commit_snapshot(
     n_buckets: int,
     *,
     base_man: dict | None,
-    carry: list[dict] | None = None,
+    carry: list[dict],
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     app_id: str | None = None,
@@ -816,7 +818,7 @@ def commit_snapshot(
             if e["path"] in fbloom:
                 e["bloom"] = fbloom[e["path"]]
     files = sorted(
-        list(carry or []) + new_entries, key=lambda e: (e["bucket"], e["path"])
+        carry + new_entries, key=lambda e: (e["bucket"], e["path"])
     )
     apps = dict(man.get("apps") or {}) if man else {}
     if app_id is not None:
@@ -1059,7 +1061,6 @@ def upsert_manifest_txn(
     path: str,
     key: str = "id",
     order_col: str | None = None,
-    max_retries: int = 5,
 ) -> int:
     """One transactional merge of `batch` into the manifest table —
     upsert_parquet's replace-mode merge semantics (last-writer-wins by
@@ -1076,7 +1077,7 @@ def upsert_manifest_txn(
     Returns the committed epoch. On a multi-writer CommitConflict the
     whole merge RE-RUNS from the winner's snapshot (optimistic
     concurrency — the merge inputs must be the now-current table, not
-    the one read before losing the race), up to `max_retries` times.
+    the one read before losing the race), up to `_COMMIT_ATTEMPTS` times.
     The reader/writer pair is exercised mid-commit in
     tests/test_sinks.py (partial files + stale tmp manifests planted; a
     failed swap leaves the old snapshot intact); two-thread interleaved
@@ -1084,7 +1085,7 @@ def upsert_manifest_txn(
     os.makedirs(path, exist_ok=True)
     order = order_col or key
     last: CommitConflict | None = None
-    for _attempt in range(max_retries):
+    for _attempt in range(_COMMIT_ATTEMPTS):
         man = read_manifest(path)
         # layout + stats/bloom config are fixed at table creation
         # (commit_snapshot carries them); a table created here has
@@ -1177,7 +1178,7 @@ def append_snapshot(
     replay (or a concurrent duplicate task) converges to the skip."""
     os.makedirs(path, exist_ok=True)
     last: CommitConflict | None = None
-    for _attempt in range(5):
+    for _attempt in range(_COMMIT_ATTEMPTS):
         man = read_manifest(path)
         if (
             app_id is not None
@@ -1227,7 +1228,6 @@ def merge_into(
     matched: list[dict] | None = None,
     not_matched: list[dict] | None = None,
     not_matched_by_source: list[dict] | None = None,
-    max_retries: int = 5,
     app_id: str | None = None,
     app_version: int | None = None,
 ) -> int:
@@ -1282,7 +1282,7 @@ def merge_into(
     ).withColumn("__s", F.lit(True))
 
     last: CommitConflict | None = None
-    for _attempt in range(max_retries):
+    for _attempt in range(_COMMIT_ATTEMPTS):
         man = read_manifest(path)
         assert man is not None, f"no committed table at {path}"
         if (
@@ -1418,12 +1418,13 @@ def delete_where(spark: SparkSession, path: str, condition) -> tuple[int, int]:
     (manifest-scale metadata) comes to the driver, to know which entries
     get the dv reference. Publishes through the same OCC epoch claim as
     data commits; on conflict the whole delete recomputes against the
-    winner's snapshot, up to 5 attempts. Returns (epoch, n_deleted); a no-match delete
-    commits nothing and returns the current epoch."""
+    winner's snapshot, up to `_COMMIT_ATTEMPTS` attempts. Returns (epoch,
+    n_deleted); a no-match delete commits nothing and returns the current
+    epoch."""
     import uuid
 
     last: CommitConflict | None = None
-    for _attempt in range(5):
+    for _attempt in range(_COMMIT_ATTEMPTS):
         man = read_manifest(path)
         assert man is not None, f"no committed table at {path}"
         live = read_snapshot(spark, path, _with_pos=True)
@@ -1482,7 +1483,7 @@ def rename_column(path: str, old: str, new: str) -> int:
     import re as _re
 
     last: CommitConflict | None = None
-    for _attempt in range(5):
+    for _attempt in range(_COMMIT_ATTEMPTS):
         man = read_manifest(path)
         assert man is not None, f"no committed table at {path}"
         logical = _logical_names(man)
@@ -1522,7 +1523,7 @@ def drop_column(path: str, col: str) -> int:
     import re as _re
 
     last: CommitConflict | None = None
-    for _attempt in range(5):
+    for _attempt in range(_COMMIT_ATTEMPTS):
         man = read_manifest(path)
         assert man is not None, f"no committed table at {path}"
         if col not in _logical_names(man):
@@ -1555,19 +1556,17 @@ def table_changes(
     path: str,
     from_epoch: int,
     to_epoch: int,
-    key: str = "id",
-    include_preimage: bool = False,
+    key: str,
 ) -> DataFrame:
     """Change data feed between two committed epochs (Delta's
     ``table_changes`` on the manifest table): full-outer join the two
     snapshots on the merge key and classify each key as insert / delete /
     update_postimage (emitted with the TO-epoch row values; unchanged keys
-    — all non-key columns equal, NULL-safe — are omitted).
-    ``include_preimage=True`` additionally emits an ``update_preimage``
-    row carrying the FROM-epoch values for every updated key — Delta's
-    full CDF row set, which is what subtractive consumers (incremental
-    aggregate maintenance, index deletion lists) need: the preimage says
-    what to retract, the postimage what to add. Downstream incremental
+    — all non-key columns equal, NULL-safe — are omitted), plus an
+    ``update_preimage`` row carrying the FROM-epoch values for every
+    updated key — Delta's full CDF row set, which is what subtractive
+    consumers (incremental aggregate maintenance, index deletion lists)
+    need: the preimage says what to retract, the postimage what to add. Downstream incremental
     consumers read the delta instead of re-scanning the table.
 
     Scale: one key-hash shuffle over the two snapshots; with bucket
@@ -1630,10 +1629,9 @@ def table_changes(
     emitted = [
         F.when(is_ins, _tagged("insert", F.col("__b"))),
         F.when(is_del, _tagged("delete", F.col("__a"))),
+        F.when(is_upd, _tagged("update_preimage", F.col("__a"))),
+        F.when(is_upd, _tagged("update_postimage", F.col("__b"))),
     ]
-    if include_preimage:
-        emitted.append(F.when(is_upd, _tagged("update_preimage", F.col("__a"))))
-    emitted.append(F.when(is_upd, _tagged("update_postimage", F.col("__b"))))
     out_key = F.coalesce(b_r["__k"], a_r["__k"]).alias(key)
     ch = F.col("__ch")
     return (
@@ -1672,7 +1670,7 @@ def apply_changes_to_mv(
     metrics: list[str],
 ) -> DataFrame:
     """Incremental materialized-view maintenance from a change feed:
-    fold a `table_changes(..., include_preimage=True)` delta into a
+    fold a `table_changes` delta into a
     `count_sum_mv` state without touching the base table. insert /
     update_postimage rows add (+1, +metric); delete / update_preimage
     rows retract (−1, −metric); groups whose row count reaches zero are
@@ -1738,8 +1736,7 @@ def append_manifest_stream(
     path: str,
     checkpoint: str,
     app_id: str,
-    key: str = "id",
-    n_buckets: int = 8,
+    key: str,
 ):
     """foreachBatch append-mode ingest with the EXACTLY-ONCE contract a
     blind append needs: Structured Streaming's checkpoint guarantees each
@@ -1757,7 +1754,7 @@ def append_manifest_stream(
             batch_df,
             path,
             key=key,
-            n_buckets=n_buckets,
+            n_buckets=_STREAM_BUCKETS,
             app_id=app_id,
             app_version=batch_id,
         )
@@ -1776,12 +1773,11 @@ def merge_manifest_stream(
     path: str,
     checkpoint: str,
     app_id: str,
-    key: str = "id",
-    matched: list[dict] | None = None,
-    not_matched: list[dict] | None = None,
-    order_col: str | None = None,
-    order_tiebreak: list[str] | None = None,
-    n_buckets: int = 8,
+    key: str,
+    matched: list[dict],
+    not_matched: list[dict],
+    order_col: str,
+    order_tiebreak: list[str],
 ):
     """Streaming CDC apply — the third streaming-DML mode next to the
     exactly-once append (append_manifest_stream) and the per-batch LWW
@@ -1792,7 +1788,7 @@ def merge_manifest_stream(
     loop, so a checkpoint-replayed batch publishes nothing. This is the
     Delta "foreachBatch + MERGE" CDC pattern on the manifest table.
 
-    ``order_col`` (+ ``order_tiebreak``) pre-collapses each batch to
+    ``order_col`` (then ``order_tiebreak``) pre-collapses each batch to
     its LAST change per key — MERGE refuses duplicate source keys that
     match a target row (Delta's ambiguity rule), and a CDC batch
     routinely carries several changes for one key. With a
@@ -1820,17 +1816,14 @@ def merge_manifest_stream(
     from pyspark.sql.window import Window
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df
-        if order_col is not None:
-            w = Window.partitionBy(key).orderBy(
-                F.desc(order_col),
-                *[F.desc(c) for c in (order_tiebreak or [])],
-            )
-            b = (
-                b.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+        w = Window.partitionBy(key).orderBy(
+            F.desc(order_col), *[F.desc(c) for c in order_tiebreak]
+        )
+        b = (
+            batch_df.withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") == 1)
+            .drop("__rn")
+        )
         # one materialization of the collapsed batch: merge_into drives
         # several actions over its source (touched-bucket collect,
         # dup-key probe, the merge join) and a bare subtree would re-run
@@ -1844,7 +1837,7 @@ def merge_manifest_stream(
             # below would be skipped as a replay. A crash between the
             # two replays the batch onto the now-existing empty table.
             append_snapshot(
-                b.limit(0), path, key=key, n_buckets=n_buckets
+                b.limit(0), path, key=key, n_buckets=_STREAM_BUCKETS
             )
         merge_into(
             b.sparkSession, path, b, key=key,

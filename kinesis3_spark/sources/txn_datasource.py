@@ -3,8 +3,9 @@
 ``spark.read.format("txntable").load(path)`` over a `sinks/txn.py`
 table, after ``spark.dataSource.register(TxnTableDataSource)``; SQL
 reaches it through ``CREATE TEMPORARY VIEW ... USING txntable``. The
-options are ``path``, ``epoch`` (time travel to a retained version) and
-``pushdown`` (Catalyst file skipping, see _TxnBatchReaderPushdown).
+options are ``path`` and ``epoch`` (time travel to a retained version);
+Catalyst file skipping (see _TxnBatchReader) needs the session's
+``spark.sql.python.filterPushdown.enabled``, which `session.py` sets.
 Writes go through `sinks/txn.py` (``commit_snapshot`` and the
 ``*_manifest_stream`` foreachBatch sinks), never through this source.
 
@@ -28,7 +29,7 @@ from typing import Iterator, Sequence
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
-from ..sinks.txn import read_manifest
+from ..sinks.txn import _entry_may_match, read_manifest
 
 
 def _norm_path(options: dict) -> str:
@@ -118,19 +119,12 @@ class _TxnBatchReader(DataSourceReader):
     every filter is returned to Spark for exact post-scan evaluation, so
     a wrong prune can only LOSE rows — which the parity oracle would
     catch — never invent them. An `epoch` option time-travels the whole
-    scan (schema included) to a retained version."""
+    scan (schema included) to a retained version. ``man`` is that
+    version's manifest, read once by the DataSource."""
 
-    def __init__(
-        self, options: dict, schema_json: str, man: dict | None = None
-    ):
+    def __init__(self, options: dict, schema_json: str, man: dict | None):
         self.path = _norm_path(options)
         self.schema_json = schema_json
-        if man is None:
-            # standalone construction (tests): one read, self-consistent
-            ep = options.get("epoch")
-            man = read_manifest(
-                self.path, int(ep) if ep is not None else None
-            )
         self.entries = man["files"] if man else []
         # column mapping: Catalyst pushes predicates in LOGICAL names;
         # file stats/bloom sidecars are keyed by PHYSICAL names, and the
@@ -138,7 +132,7 @@ class _TxnBatchReader(DataSourceReader):
         self.l2p = dict((man or {}).get("column_mapping") or {})
         self.pushed: list[tuple] = []  # (col, kind, values)
 
-    def _push_filters(self, filters):
+    def pushFilters(self, filters):
         from pyspark.sql.datasource import (
             EqualTo,
             GreaterThan,
@@ -170,20 +164,10 @@ class _TxnBatchReader(DataSourceReader):
         return filters  # skipping is I/O-only; Spark re-applies exactly
 
     def _may_match(self, entry: dict) -> bool:
-        from ..sinks.txn import _bloom_may_match, _file_may_match
-
-        stats = entry.get("stats")
         for col, kind, vals in self.pushed:
             col = self.l2p.get(col, col)  # stats keyed by physical name
-            s = (stats or {}).get(col)
-            if kind == "in":
-                if not any(
-                    _file_may_match(stats, col, "==", v)
-                    and _bloom_may_match(self.path, entry, col, "==", (v,))
-                    for v in vals
-                ):
-                    return False
-            elif kind == "isnull":
+            s = (entry.get("stats") or {}).get(col)
+            if kind == "isnull":
                 # a recorded zero null_count proves IS NULL unsatisfiable
                 if s is not None and s.get("nulls") == 0:
                     return False
@@ -191,11 +175,8 @@ class _TxnBatchReader(DataSourceReader):
                 # all-null file (min is None) has no non-null rows
                 if s is not None and s["min"] is None and s["max"] is None:
                     return False
-            else:
-                if not _file_may_match(stats, col, kind, *vals):
-                    return False
-                if not _bloom_may_match(self.path, entry, col, kind, vals):
-                    return False
+            elif not _entry_may_match(self.path, entry, (col, kind, *vals)):
+                return False
         return True
 
     def partitions(self) -> Sequence[InputPartition]:
@@ -210,19 +191,6 @@ class _TxnBatchReader(DataSourceReader):
 
     def read(self, partition: _FileSlice) -> Iterator:
         return _read_slice(partition)
-
-
-class _TxnBatchReaderPushdown(_TxnBatchReader):
-    """The pushdown-enabled variant, returned only when the read sets
-    ``option("pushdown", "true")``: merely DEFINING pushFilters makes
-    Spark raise when ``spark.sql.python.filterPushdown.enabled`` is off
-    (and the planner worker can't inspect the conf), so opting in is the
-    reader's own declaration that the session enables it. Without the
-    option, scans work everywhere and skipping is available through
-    read_snapshot's manual ``where=``."""
-
-    def pushFilters(self, filters):
-        return self._push_filters(filters)
 
 
 class TxnTableDataSource(DataSource):
@@ -273,11 +241,8 @@ class TxnTableDataSource(DataSource):
         return StructType.fromJson(json.loads(self._schema_json()))
 
     def reader(self, schema: StructType) -> DataSourceReader:
-        opts = dict(self.options)
         # schema and file entries from the SAME memoized manifest read —
         # never one epoch's mapping over another epoch's files
-        if str(opts.get("pushdown", "false")).lower() == "true":
-            return _TxnBatchReaderPushdown(
-                opts, self._schema_json(), man=self._manifest()
-            )
-        return _TxnBatchReader(opts, self._schema_json(), man=self._manifest())
+        return _TxnBatchReader(
+            dict(self.options), self._schema_json(), self._manifest()
+        )

@@ -24,8 +24,7 @@ and returns the names. A stale entry is released when it is replaced: its
 scratch directory is removed, every persisted DataFrame in its value (the
 value itself or a member of a value tuple) is unpersisted, and every
 catalog table it named is dropped.
-``clear(kind=None)`` releases every entry of ``kind`` (all entries when
-``None``).
+``clear()`` releases every entry.
 
 At 100 TB these paths are executor-local scratch under ``spark.local.dir``
 / the object store; the lifecycle contract (create lazily, reuse while the
@@ -115,7 +114,7 @@ def memo(kind: str, source: str, build, *params):
     return value
 
 
-def clear(kind: str | None = None) -> None:
-    """Release every memoized entry of ``kind`` (all kinds when None)."""
-    for key in [k for k in _MEMO if kind is None or k[0] == kind]:
+def clear() -> None:
+    """Release every memoized entry."""
+    for key in list(_MEMO):
         _release(*_MEMO.pop(key)[1:])

@@ -6,10 +6,12 @@ import glob
 
 from pyspark.sql import functions as F
 
+from kinesis3_spark.sinks import compact
 from kinesis3_spark.sinks.compact import compact_parquet
 
 
-def test_compact_reduces_files_preserves_data(spark, sf_dir, tmp_path):
+def test_compact_reduces_files_preserves_data(spark, sf_dir, tmp_path, monkeypatch):
+    monkeypatch.setattr(compact, "TARGET_FILE_BYTES", 1 << 30)
     path = str(tmp_path / "frag")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     ev.repartition(40).write.parquet(path)  # simulate micro-batch fragmentation
@@ -19,7 +21,7 @@ def test_compact_reduces_files_preserves_data(spark, sf_dir, tmp_path):
         F.count("*"), F.sum(F.xxhash64("event_id", "event_type"))
     ).first()
 
-    n = compact_parquet(spark, path, target_file_bytes=1 << 30)
+    n = compact_parquet(spark, path)
 
     after = len(glob.glob(f"{path}/part-*.parquet"))
     assert after == n == 1

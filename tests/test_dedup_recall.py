@@ -9,10 +9,15 @@ from kinesis3_spark.operators import dedup as D
 from kinesis3_spark.queries.relational import _t
 
 
+def _lsh_pairs(docs, max_bucket=None):
+    g = D._gram_sets(docs)
+    return D.minhash_lsh_pairs(g, D.minhash_signatures(g), max_bucket=max_bucket)
+
+
 def test_lsh_matches_exact_operator(spark, sf_dir):
     df = _t(spark, sf_dir, "documents")
     exact = {(r.id_a, r.id_b) for r in D.ngram_jaccard_pairs(df).collect()}
-    lsh = {(r.id_a, r.id_b) for r in D.minhash_lsh_pairs(df).collect()}
+    lsh = {(r.id_a, r.id_b) for r in _lsh_pairs(df).collect()}
     assert lsh == exact
 
 
@@ -48,7 +53,7 @@ def test_leakage_safe_split_groups_never_straddle(spark, sf_dir):
     ]
     dups = [(1000 + i, base[i][1]) for i in range(15)]
     d = spark.createDataFrame(base + dups, "doc_id long, text string")
-    pairs = D.minhash_lsh_pairs(d)
+    pairs = _lsh_pairs(d)
     comp = connected_components(pairs.select("id_a", "id_b"))
     rep = (
         d.select("doc_id").join(comp, "doc_id", "left")

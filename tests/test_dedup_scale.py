@@ -10,6 +10,11 @@ from pyspark.sql import functions as F
 from kinesis3_spark.operators import dedup as D
 
 
+def _lsh_pairs(docs, max_bucket=None):
+    g = D._gram_sets(docs)
+    return D.minhash_lsh_pairs(g, D.minhash_signatures(g), max_bucket=max_bucket)
+
+
 def _flood_corpus(spark):
     """40 identical boilerplate docs (one degenerate LSH bucket per band)
     plus one genuine near-dup pair of long, distinctive docs."""
@@ -26,8 +31,8 @@ def _flood_corpus(spark):
 
 def test_lsh_bucket_cap_drops_flood_keeps_neardups(spark):
     doc = _flood_corpus(spark)
-    uncapped = D.minhash_lsh_pairs(doc)
-    capped = D.minhash_lsh_pairs(doc, max_bucket=10)
+    uncapped = _lsh_pairs(doc)
+    capped = _lsh_pairs(doc, max_bucket=10)
     got_un = {(r.id_a, r.id_b) for r in uncapped.collect()}
     got_cap = {(r.id_a, r.id_b) for r in capped.collect()}
     # uncapped: the flood produces ~40*39/2 pairs plus the planted pair
@@ -42,8 +47,8 @@ def test_lsh_cap_noop_below_threshold(spark, sf_dir):
     from kinesis3_spark.sources import load_table
 
     doc = load_table(spark, sf_dir, "documents")
-    a = {tuple(r) for r in D.minhash_lsh_pairs(doc).collect()}
-    b = {tuple(r) for r in D.minhash_lsh_pairs(doc, max_bucket=64).collect()}
+    a = {tuple(r) for r in _lsh_pairs(doc).collect()}
+    b = {tuple(r) for r in _lsh_pairs(doc, max_bucket=64).collect()}
     assert a == b and len(a) > 0
 
 

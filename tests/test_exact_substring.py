@@ -9,12 +9,18 @@ import pytest
 
 pytestmark = pytest.mark.slow  # excluded by the -m 'not slow' quick path
 
+from kinesis3_spark.operators import dedup
 from kinesis3_spark.operators.dedup import (
     exact_substring_dedup,
     exact_substring_spans,
 )
 
 K = 10
+
+
+@pytest.fixture(autouse=True)
+def _window(monkeypatch):
+    monkeypatch.setattr(dedup, "SUBSTR_K", K)
 
 
 @pytest.fixture(scope="module")
@@ -43,7 +49,7 @@ def test_spans_exact_boundaries_and_canonical_first(spark, planted):
     d, _ = planted
     spans = {
         (r.doc_id, r.span_start, r.span_end, r.n_windows)
-        for r in exact_substring_spans(d, k=K).collect()
+        for r in exact_substring_spans(d).collect()
     }
     # doc a is the canonical occurrence (smallest doc_id) — no spans;
     # doc b loses exactly the embedded range [10, 41); doc c loses
@@ -53,7 +59,7 @@ def test_spans_exact_boundaries_and_canonical_first(spark, planted):
 
 def test_removal_reconstructs_expected_text(spark, planted):
     d, docs = planted
-    out = {r.doc_id: r for r in exact_substring_dedup(d, k=K).collect()}
+    out = {r.doc_id: r for r in exact_substring_dedup(d).collect()}
     assert set(out) == {"a", "b", "c", "d"}
     toks = {k: v.split() for k, v in docs.items()}
     assert out["a"].clean_text == docs["a"]
@@ -78,7 +84,7 @@ def test_three_way_duplicate_keeps_exactly_one(spark, planted):
         ("m3", " ".join(["z1", "z2"] + S)),
     ]
     d = spark.createDataFrame(rows, "doc_id string, text string")
-    out = {r.doc_id: r for r in exact_substring_dedup(d, k=K).collect()}
+    out = {r.doc_id: r for r in exact_substring_dedup(d).collect()}
     assert out["m1"].n_tokens_removed == 0          # canonical
     assert out["m2"].n_tokens_removed == 15
     assert out["m2"].clean_text == "v1 v2"
@@ -96,13 +102,13 @@ def test_adjacent_spans_merge_full_doc_removal(spark):
         ("dup", " ".join(A + ["gap1", "gap2"] + B)),  # full copy
     ]
     d = spark.createDataFrame(rows, "doc_id string, text string")
-    spans = exact_substring_spans(d, k=K).collect()
+    spans = exact_substring_spans(d).collect()
     assert [(r.doc_id, r.span_start, r.span_end) for r in spans] == [
         ("src", 0, 26)
     ] or [(r.doc_id, r.span_start, r.span_end) for r in spans] == [
         ("dup", 0, 26)
     ]
-    out = {r.doc_id: r for r in exact_substring_dedup(d, k=K).collect()}
+    out = {r.doc_id: r for r in exact_substring_dedup(d).collect()}
     removed = {k: v.n_tokens_removed for k, v in out.items()}
     assert sorted(removed.values()) == [0, 26]
     gone = [k for k, v in out.items() if v.n_tokens_removed]

@@ -15,19 +15,23 @@ def _edges(spark, pairs):
     )
 
 
+def _census(edges):
+    return graphq.triangle_census(edges, graphq.orient_by_degree(edges))
+
+
 def test_triangle_census_on_k4(spark):
     # Complete graph on 4 nodes: 6 edges, C(4,2) wedges per node pattern:
     # every node has degree 3 -> wedges = 4 * 3 = 12, triangles = C(4,3) = 4,
     # clustering = 3*4/12 = 1.0 exactly.
     k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
-    row = graphq.triangle_census(_edges(spark, k4)).collect()[0]
+    row = _census(_edges(spark, k4)).collect()[0]
     assert (row.n_edges, row.n_wedges, row.n_triangles) == (6, 12, 4)
     assert row.clustering_ppm == 1_000_000
 
 
 def test_triangle_census_on_path(spark):
     # Path 0-1-2-3: 3 edges, 2 wedges, 0 triangles, clustering 0.
-    row = graphq.triangle_census(_edges(spark, [(0, 1), (1, 2), (2, 3)])).collect()[0]
+    row = _census(_edges(spark, [(0, 1), (1, 2), (2, 3)])).collect()[0]
     assert (row.n_edges, row.n_wedges, row.n_triangles) == (3, 2, 0)
     assert row.clustering_ppm == 0
 
@@ -35,7 +39,7 @@ def test_triangle_census_on_path(spark):
 def test_triangle_census_counts_each_triangle_once(spark):
     # Two triangles sharing edge (0,1): nodes {0,1,2} and {0,1,3}.
     pairs = [(0, 1), (0, 2), (1, 2), (0, 3), (1, 3)]
-    row = graphq.triangle_census(_edges(spark, pairs)).collect()[0]
+    row = _census(_edges(spark, pairs)).collect()[0]
     assert row.n_triangles == 2
     # degrees: 0->3, 1->3, 2->2, 3->2 => wedges 3+3+1+1 = 8
     assert row.n_wedges == 8

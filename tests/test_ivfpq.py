@@ -42,10 +42,18 @@ def clustered_dir(tmp_path_factory):
     return str(d), np.array(labels)
 
 
-def test_ivfpq_routes_clusters_to_shared_cells(spark, clustered_dir):
+@pytest.fixture
+def cells8(monkeypatch):
+    """The 8-cell, 16-codeword index sized for the planted 4-cluster corpus."""
+    monkeypatch.setattr(S, "IVFPQ_CELLS", 8)
+    monkeypatch.setattr(S, "IVFPQ_CODEWORDS", 16)
+    return monkeypatch
+
+
+def test_ivfpq_routes_clusters_to_shared_cells(spark, clustered_dir, cells8):
     d, labels = clustered_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
+    C, books = S.train_ivfpq(emb)
     enc = S.ivfpq_encode(emb, C, books).collect()
     assert len(enc) == len(labels)
     # k-means may legitimately SPLIT a planted cluster across cells (8
@@ -61,7 +69,7 @@ def test_ivfpq_routes_clusters_to_shared_cells(spark, clustered_dir):
         assert len(cell_labels) == 1
 
 
-def test_ivfpq_topk_matches_numpy_adc_reference_exactly(spark, clustered_dir):
+def test_ivfpq_topk_matches_numpy_adc_reference_exactly(spark, clustered_dir, cells8):
     """The distributed probe path (cell routing -> broadcast probe join ->
     LUT gather -> rank) must reproduce a plain-numpy ADC reference
     EXACTLY, ranks and tie-breaks included — the compressed
@@ -77,7 +85,7 @@ def test_ivfpq_topk_matches_numpy_adc_reference_exactly(spark, clustered_dir):
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
     qids = [0, 50, 100, 150]
     qset = emb.where(F.col("vec_id").isin(qids))
-    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
+    C, books = S.train_ivfpq(emb)
     enc_rows = {r["id"]: r for r in S.ivfpq_encode(emb, C, books).collect()}
     got = S.cosine_topk_ivfpq(
         emb, qset, k=5, nprobe=2, index=(C, books)
@@ -109,7 +117,7 @@ def test_ivfpq_topk_matches_numpy_adc_reference_exactly(spark, clustered_dir):
 
 
 def test_persisted_probe_matches_in_session_and_prunes_cell_files(
-    spark, clustered_dir
+    spark, clustered_dir, cells8
 ):
     """The persisted cell-partitioned index is the same index: probing
     THROUGH the parquet round-trip must reproduce the in-session probe
@@ -124,9 +132,9 @@ def test_persisted_probe_matches_in_session_and_prunes_cell_files(
 
     d, labels = clustered_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
+    C, books = S.train_ivfpq(emb)
     path = tmpdirs.mkdtemp(prefix="t_ivfpq_persist_") + "/index"
-    S.persist_ivfpq_index(S.ivfpq_encode(emb, C, books), path)
+    S.persist_ivfpq_index(S.ivfpq_encode(emb, C, books), path, (C, books), {})
     enc = S.read_ivfpq_index(spark, path)
 
     qset = emb.where(F.col("vec_id").isin([0, 50]))
@@ -166,17 +174,18 @@ def test_persisted_probe_matches_in_session_and_prunes_cell_files(
     assert "PartitionFilters" in plan and "cell#" in plan
 
 
-def test_ivfpq_training_is_deterministic(spark, sf_dir):
+def test_ivfpq_training_is_deterministic(spark, sf_dir, cells8):
     from kinesis3_spark.sources import load_table
 
+    cells8.setattr(S, "IVFPQ_ITERS", 4)
     emb = load_table(spark, sf_dir, "embeddings")
-    C1, b1 = S.train_ivfpq(emb, n_centroids=8, k=16, iters=4)
-    C2, b2 = S.train_ivfpq(emb, n_centroids=8, k=16, iters=4)
+    C1, b1 = S.train_ivfpq(emb)
+    C2, b2 = S.train_ivfpq(emb)
     assert np.array_equal(C1, C2) and np.array_equal(b1, b2)
 
 
 def test_rerank_recovers_exact_topk_and_never_loses_to_adc(
-    spark, clustered_dir
+    spark, clustered_dir, cells8
 ):
     """Retrieve-then-rerank on the planted clusters: with every cell
     probed and fetch_r covering the cluster, the exact re-rank must
@@ -189,18 +198,19 @@ def test_rerank_recovers_exact_topk_and_never_loses_to_adc(
     from pyspark.sql import functions as F
 
     qset = emb.where(F.col("vec_id") < 8)
-    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
+    C, books = S.train_ivfpq(emb)
     enc = S.ivfpq_encode(emb, C, books)
     brute = {
         (r["query_id"], r["neighbor_id"], r["rank"])
         for r in S.cosine_topk_bruteforce(emb, qset, k=5).collect()
     }
     # full probe + generous over-fetch: exact equality with brute force
+    cells8.setattr(S, "RERANK_FETCH_R", 60)
+    cells8.setattr(S, "RERANK_NPROBE", 8)
     rr_full = {
         (r["query_id"], r["neighbor_id"], r["rank"])
         for r in S.cosine_topk_ivfpq_rerank(
-            emb, qset, k=5, fetch_r=60, nprobe=8,
-            index=(C, books), enc=enc,
+            emb, qset, k=5, index=(C, books), enc=enc
         ).collect()
     }
     assert rr_full == brute
@@ -213,18 +223,19 @@ def test_rerank_recovers_exact_topk_and_never_loses_to_adc(
             index=(C, books), enc=enc,
         ).collect()
     }
+    cells8.setattr(S, "RERANK_FETCH_R", 30)
+    cells8.setattr(S, "RERANK_NPROBE", 2)
     rr_part = {
         (r["query_id"], r["neighbor_id"])
         for r in S.cosine_topk_ivfpq_rerank(
-            emb, qset, k=5, fetch_r=30, nprobe=2,
-            index=(C, books), enc=enc,
+            emb, qset, k=5, index=(C, books), enc=enc
         ).collect()
     }
     assert len(rr_part & truth_pairs) >= len(adc & truth_pairs)
 
 
 def test_index_meta_sidecar_enables_fresh_process_probe(
-    spark, clustered_dir
+    spark, clustered_dir, cells8
 ):
     """VERDICT r9 'Next round' #2: the persisted index must be durable —
     a process that NEVER trained (no in-memory C/books, cleared query
@@ -238,7 +249,7 @@ def test_index_meta_sidecar_enables_fresh_process_probe(
 
     d, labels = clustered_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
+    C, books = S.train_ivfpq(emb)
     path = tmpdirs.mkdtemp(prefix="t_ivfpq_meta_") + "/index"
     S.persist_ivfpq_index(
         S.ivfpq_encode(emb, C, books), path, index=(C, books),
@@ -253,7 +264,7 @@ def test_index_meta_sidecar_enables_fresh_process_probe(
 
     # "fresh process": drop every in-memory trace of training and the
     # query-layer cache, then reconstruct everything from the path
-    tmpdirs.clear("ivfpq_index")
+    tmpdirs.clear()
     del C, books
     meta = S.read_ivfpq_index_meta(path)
     assert meta is not None
@@ -265,15 +276,11 @@ def test_index_meta_sidecar_enables_fresh_process_probe(
     ).collect()))
     assert got == want and len(got) == 15
     # bit-identical round-trip (json repr of finite doubles is exact)
-    C3, books3 = S.train_ivfpq(emb, n_centroids=8, k=16)
+    C3, books3 = S.train_ivfpq(emb)
     assert np.array_equal(C2, C3) and np.array_equal(books2, books3)
-    # a pre-sidecar index reports None instead of guessing
-    bare = tmpdirs.mkdtemp(prefix="t_ivfpq_bare_") + "/index"
-    S.persist_ivfpq_index(S.ivfpq_encode(emb, C3, books3), bare)
-    assert S.read_ivfpq_index_meta(bare) is None
 
 
-def test_rerank_post_filter_mines_hard_negatives_exactly(spark, clustered_dir):
+def test_rerank_post_filter_mines_hard_negatives_exactly(spark, clustered_dir, cells8):
     """pair_predicate/carry on the rerank tier (VERDICT r10 agenda #3):
     with full cell coverage (nprobe = n_centroids) and fetch_r covering
     the whole corpus, the post-filtered rerank must EQUAL the exact
@@ -284,11 +291,13 @@ def test_rerank_post_filter_mines_hard_negatives_exactly(spark, clustered_dir):
 
     d, labels = clustered_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
+    C, books = S.train_ivfpq(emb)
     qset = emb.where(F.col("vec_id").isin([0, 50, 100]))
     pred = F.col("n_label") != F.col("q_label")
+    cells8.setattr(S, "RERANK_FETCH_R", 200)
+    cells8.setattr(S, "RERANK_NPROBE", 8)
     ann = sorted(map(tuple, S.cosine_topk_ivfpq_rerank(
-        emb, qset, k=5, fetch_r=200, nprobe=8, index=(C, books),
+        emb, qset, k=5, index=(C, books), enc=S.ivfpq_encode(emb, C, books),
         pair_predicate=pred, carry=("label",),
     ).select("query_id", "rank", "neighbor_id").collect()))
     want = sorted(map(tuple, S.cosine_topk_bruteforce(
@@ -317,7 +326,7 @@ def test_incremental_append_leaves_base_files_untouched(spark, tmp_path):
     batch = emb.where(F.col("vec_id") >= 100)
     C, books = S.train_ivfpq(base)
     path = str(tmp_path / "index")
-    S.persist_ivfpq_index(S.ivfpq_encode(base, C, books), path, index=(C, books))
+    S.persist_ivfpq_index(S.ivfpq_encode(base, C, books), path, (C, books), {})
 
     def snapshot():
         out = {}
@@ -376,18 +385,17 @@ def test_tombstoned_top1_is_replaced_by_next_live(spark, tmp_path):
     assert after.first().neighbor_id == 2
 
 
-def test_knn_graph_edges_stay_within_planted_clusters(spark, clustered_dir):
+def test_knn_graph_edges_stay_within_planted_clusters(spark, clustered_dir, cells8):
     """knn_graph_ivfpq over the planted 4-cluster corpus: every vector's
     top-5 edges must point at cluster-mates (wide cosine margin), every
     vector gets exactly 5 edges, and the graph contains no self-loops —
     the distributed all-vectors build, not the driver-side query path."""
     d, labels = clustered_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
+    C, books = S.train_ivfpq(emb)
     enc = S.ivfpq_encode(emb, C, books)
-    edges = S.knn_graph_ivfpq(
-        emb, (C, books), enc, k=5, nprobe=2, rerank_mult=4
-    ).collect()
+    cells8.setattr(S, "KNN_NPROBE", 2)
+    edges = S.knn_graph_ivfpq(emb, (C, books), enc, k=5).collect()
     assert len(edges) == len(labels) * 5
     per_q: dict[int, list] = {}
     for r in edges:
@@ -397,9 +405,9 @@ def test_knn_graph_edges_stay_within_planted_clusters(spark, clustered_dir):
     assert all(sorted(v) == [1, 2, 3, 4, 5] for v in per_q.values())
 
 
-def test_knn_graph_refine_matches_bruteforce_on_planted(spark, clustered_dir):
+def test_knn_graph_refine_matches_bruteforce_on_planted(spark, clustered_dir, cells8):
     """With enough probes to cover a cluster's cells AND a shortlist
-    wider than the cluster (rerank_mult*k = 80 > 50 cluster-mates, whose
+    wider than the cluster (KNN_RERANK_MULT*k = 80 > 50 cluster-mates, whose
     ADC scores dominate every cross-cluster candidate by the planted
     margin), the exact-refine stage must reproduce the brute-force top-5
     exactly. A shortlist NARROWER than the cluster legitimately drops
@@ -407,13 +415,13 @@ def test_knn_graph_refine_matches_bruteforce_on_planted(spark, clustered_dir):
     that regime is covered by the recall band, not exactness."""
     d, _labels = clustered_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
+    C, books = S.train_ivfpq(emb)
     enc = S.ivfpq_encode(emb, C, books)
+    cells8.setattr(S, "KNN_NPROBE", 4)
+    cells8.setattr(S, "KNN_RERANK_MULT", 16)
     got = {
         (r.query_id, r.rank, r.neighbor_id)
-        for r in S.knn_graph_ivfpq(
-            emb, (C, books), enc, k=5, nprobe=4, rerank_mult=16
-        ).collect()
+        for r in S.knn_graph_ivfpq(emb, (C, books), enc, k=5).collect()
     }
     want = {
         (r.query_id, r.rank, r.neighbor_id)
@@ -422,7 +430,7 @@ def test_knn_graph_refine_matches_bruteforce_on_planted(spark, clustered_dir):
     assert got == want
 
 
-def test_shared_adc_scores_path_matches_per_leg_recompute(spark, clustered_dir):
+def test_shared_adc_scores_path_matches_per_leg_recompute(spark, clustered_dir, cells8):
     """OPTIMIZATION_r15: sim_cosine_topk_ivfpq_rerank computes ONE
     ivfpq_adc_scores relation and feeds it to both the rerank (k=fetch_r)
     and plain-ADC (k=k) legs. The shared-scores path must be row-identical
@@ -431,7 +439,7 @@ def test_shared_adc_scores_path_matches_per_leg_recompute(spark, clustered_dir):
     d, _labels = clustered_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
     qset = emb.where("vec_id < 8")
-    C, books = S.train_ivfpq(emb, n_centroids=8, k=16)
+    C, books = S.train_ivfpq(emb)
     enc = S.ivfpq_encode(emb, C, books)
     scores = S.ivfpq_adc_scores(emb, qset, nprobe=4, index=(C, books), enc=enc)
 
@@ -446,11 +454,12 @@ def test_shared_adc_scores_path_matches_per_leg_recompute(spark, clustered_dir):
     )
     assert rows(adc_shared) == rows(adc_own)
 
+    cells8.setattr(S, "RERANK_FETCH_R", 16)
+    cells8.setattr(S, "RERANK_NPROBE", 4)
     rr_shared = S.cosine_topk_ivfpq_rerank(
-        emb, qset, k=5, fetch_r=16, nprobe=4, index=(C, books), enc=enc,
-        scores=scores,
+        emb, qset, k=5, index=(C, books), enc=enc, scores=scores
     )
     rr_own = S.cosine_topk_ivfpq_rerank(
-        emb, qset, k=5, fetch_r=16, nprobe=4, index=(C, books), enc=enc
+        emb, qset, k=5, index=(C, books), enc=enc
     )
     assert rows(rr_shared) == rows(rr_own)

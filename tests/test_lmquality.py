@@ -375,7 +375,7 @@ def test_quality_classifier_cache_holds_plain_floats_not_model(spark, sf_dir):
     from kinesis3_spark import tmpdirs
     from kinesis3_spark.queries.lmquality import quality_classifier_scores
 
-    tmpdirs.clear("qc_model")
+    tmpdirs.clear()
     scored = quality_classifier_scores(spark, sf_dir)
     coefs, intercept = _memoized("qc_model", sf_dir)
     assert isinstance(coefs, list) and all(isinstance(c, float) for c in coefs)

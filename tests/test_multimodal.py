@@ -237,8 +237,6 @@ def test_banded_hamming_pairs_radius_guard():
     """Pigeonhole losslessness requires max_hamming < n_bands."""
     with pytest.raises(ValueError):
         M.banded_hamming_pairs(None, max_hamming=8, n_bands=8)
-    with pytest.raises(ValueError):
-        M.ahash_neardup_pairs(None, max_hamming=4)
 
 
 def _hash_df(spark, rows):

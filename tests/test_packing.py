@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from kinesis3_spark.operators import packing
 from kinesis3_spark.operators.packing import bin_stats, pack_sequences
 
 BUDGET = 100
@@ -18,9 +19,10 @@ def _fixture(spark):
     return spark.createDataFrame(rows, "doc_id long, n_tokens long")
 
 
-def test_conservation_and_budget(spark):
+def test_conservation_and_budget(spark, monkeypatch):
+    monkeypatch.setattr(packing, "PACK_GROUPS", 4)
     df = _fixture(spark)
-    packed = pack_sequences(df, BUDGET, num_groups=4).cache()
+    packed = pack_sequences(df, BUDGET).cache()
     try:
         # every doc assigned exactly once
         assert packed.count() == 42
@@ -40,16 +42,18 @@ def test_conservation_and_budget(spark):
         packed.unpersist()
 
 
-def test_deterministic(spark):
+def test_deterministic(spark, monkeypatch):
+    monkeypatch.setattr(packing, "PACK_GROUPS", 4)
     df = _fixture(spark)
-    a = sorted(pack_sequences(df, BUDGET, num_groups=4).collect())
-    b = sorted(pack_sequences(df, BUDGET, num_groups=4).collect())
+    a = sorted(pack_sequences(df, BUDGET).collect())
+    b = sorted(pack_sequences(df, BUDGET).collect())
     assert a == b
 
 
-def test_ffd_actually_packs(spark):
+def test_ffd_actually_packs(spark, monkeypatch):
+    monkeypatch.setattr(packing, "PACK_GROUPS", 2)
     df = _fixture(spark).where(F.col("n_tokens") <= BUDGET)
-    stats = bin_stats(pack_sequences(df, BUDGET, num_groups=2))
+    stats = bin_stats(pack_sequences(df, BUDGET))
     n_bins = stats.count()
     total = df.agg(F.sum("n_tokens")).first()[0]
     # lower bound: ceil(total/budget); FFD within 2 groups should be close.
@@ -57,7 +61,7 @@ def test_ffd_actually_packs(spark):
 
 # ---------------------------------------------------------------------------
 # Concat-and-chunk (split-policy) packer: cumulative_token_positions must
-# equal a single-sequence running total regardless of bucket_width, and the
+# equal a single-sequence running total regardless of BUCKET_WIDTH, and the
 # derived example layout must chunk exactly (full bins = L, docs crossing a
 # boundary appear in every bin they touch, token shares conserve).
 # ---------------------------------------------------------------------------
@@ -67,7 +71,7 @@ from kinesis3_spark.operators.packing import cumulative_token_positions
 L = 10
 
 
-def test_cumsum_matches_serial_scan_any_bucket_width(spark):
+def test_cumsum_matches_serial_scan_any_bucket_width(spark, monkeypatch):
     rows = [(i, (i * 7) % 13 + 1) for i in range(50)]
     df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
     expect, c = {}, 0
@@ -75,11 +79,12 @@ def test_cumsum_matches_serial_scan_any_bucket_width(spark):
         c += n
         expect[i] = c
     for w in (1, 4, 1024):
+        monkeypatch.setattr(packing, "BUCKET_WIDTH", w)
         got = {
             r["doc_id"]: r["cum"]
-            for r in cumulative_token_positions(df, bucket_width=w).collect()
+            for r in cumulative_token_positions(df).collect()
         }
-        assert got == expect, f"bucket_width={w}"
+        assert got == expect, f"BUCKET_WIDTH={w}"
 
 
 def test_chunk_layout_boundaries(spark):

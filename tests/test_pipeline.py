@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import json
 
-from kinesis3_spark.pipeline import ingest
+from kinesis3_spark.pipeline import ingest, parse_raw_records, project_events
 
 
 def _record(body_obj, **outer):
@@ -71,6 +71,6 @@ def test_sid_override(spark):
     df = spark.createDataFrame(
         [("seq-42", _record(BODY))], "kinesis_seq string, raw string"
     )
-    row = ingest(df, sid_col="kinesis_seq").collect()[0]
+    row = project_events(parse_raw_records(df), sid_col="kinesis_seq").collect()[0]
     # the reference keys events by the Kinesis sequence id (db.clj:159)
     assert row.id == "seq-42"

@@ -40,7 +40,7 @@ def test_pq_reconstructs_planted_clusters_exactly(spark, pq_dir):
     d, picks = pq_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
     books = S.train_pq_codebooks(emb, k=4, iters=8)
-    enc = {r["id"]: r for r in S.pq_encode(emb, books).collect()}
+    enc = {r["id"]: r for r in S.pq_encode(emb, books, books).collect()}
     # every vector reconstructs exactly: the 2 planted points per subspace
     # are <= 4 codewords, so Lloyd converges onto them
     assert all(r["err_micro"] == 0 for r in enc.values())
@@ -78,19 +78,19 @@ def test_pq_training_is_deterministic(spark, sf_dir):
 
 
 def test_pq_encode_baseline_column_matches_separate_pass(spark, pq_dir):
-    """OPTIMIZATION_r14: pq_encode(baseline=...) scores the second
-    codebook in the SAME Arrow pass; its base_err_micro must be
-    bit-identical to a separate pq_encode run over the baseline books
-    (same floor(err*1e6) per-vector arithmetic), and the main
-    codes/err_micro must be unchanged by the extra column."""
+    """OPTIMIZATION_r14: pq_encode scores the baseline codebook in the
+    SAME Arrow pass; its base_err_micro must be bit-identical to the
+    err_micro of a separate pq_encode run over the baseline books (same
+    floor(err*1e6) per-vector arithmetic), and the main codes/err_micro
+    must not depend on which baseline rides along."""
     d, _ = pq_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
     X = S.fetch_pq_sample(emb)
     books = S.train_pq_codebooks(emb, k=4, iters=8, X=X)
     base = S.train_pq_codebooks(emb, k=1, iters=2, X=X)
     combined = {r["id"]: r for r in S.pq_encode(emb, books, baseline=base).collect()}
-    main_only = {r["id"]: r for r in S.pq_encode(emb, books).collect()}
-    base_only = {r["id"]: r for r in S.pq_encode(emb, base).collect()}
+    main_only = {r["id"]: r for r in S.pq_encode(emb, books, books).collect()}
+    base_only = {r["id"]: r for r in S.pq_encode(emb, base, base).collect()}
     assert set(combined) == set(main_only) == set(base_only)
     for i, r in combined.items():
         assert r["codes"] == main_only[i]["codes"]
@@ -142,7 +142,7 @@ def test_einsum_distances_pick_the_sum_form_codes(spark, sf_dir, monkeypatch):
     pdf = emb.select("vec_id", "embedding").toPandas()
     M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
     ids = pdf["vec_id"].to_numpy()
-    raw = {r["id"]: r["codes"] for r in S.pq_encode(emb, books).collect()}
+    raw = {r["id"]: r["codes"] for r in S.pq_encode(emb, books, books).collect()}
     assert [raw[i] for i in ids] == _sum_form_codes(M, books).tolist()
     Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
     R = Mn - C[np.argmax(Mn @ C.T, axis=1)]

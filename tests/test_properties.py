@@ -108,6 +108,7 @@ def test_tokenize_matches_python_split(spark, s):
 )
 @_SLOW
 def test_exact_substring_span_invariants(spark, docs, k):
+    from kinesis3_spark.operators import dedup
     from kinesis3_spark.operators.dedup import (
         exact_substring_dedup,
         exact_substring_spans,
@@ -115,10 +116,17 @@ def test_exact_substring_span_invariants(spark, docs, k):
 
     rows = [(str(i), " ".join(toks)) for i, toks in enumerate(docs)]
     d = spark.createDataFrame(rows, "doc_id string, text string")
-    spans = sorted(
-        (r.doc_id, r.span_start, r.span_end)
-        for r in exact_substring_spans(d, k=k).collect()
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "SUBSTR_K", k)
+        spans = sorted(
+            (r.doc_id, r.span_start, r.span_end)
+            for r in exact_substring_spans(d).collect()
+        )
+        out = {r.doc_id: r for r in exact_substring_dedup(d).collect()}
+        spans2 = sorted(
+            (r.doc_id, r.span_start, r.span_end)
+            for r in exact_substring_spans(d).collect()
+        )
     n_toks = {str(i): len(t) for i, t in enumerate(docs)}
     prev: dict[str, int] = {}
     for doc_id, s, e in spans:
@@ -128,15 +136,10 @@ def test_exact_substring_span_invariants(spark, docs, k):
     removed_by_doc: dict[str, int] = {}
     for doc_id, s, e in spans:
         removed_by_doc[doc_id] = removed_by_doc.get(doc_id, 0) + (e - s)
-    out = {r.doc_id: r for r in exact_substring_dedup(d, k=k).collect()}
     assert set(out) == set(n_toks)
     for doc_id, r in out.items():
         assert r.n_tokens_removed == removed_by_doc.get(doc_id, 0)
         kept_n = len(r.clean_text.split()) if r.clean_text else 0
         assert kept_n == n_toks[doc_id] - r.n_tokens_removed
     # determinism
-    spans2 = sorted(
-        (r.doc_id, r.span_start, r.span_end)
-        for r in exact_substring_spans(d, k=k).collect()
-    )
     assert spans2 == spans

@@ -13,30 +13,13 @@ from kinesis3_spark.operators.pruning import pruned_star_join
 
 
 def _scan_metrics(df):
-    nodes = []
+    from tools.plan_audit import _walk
 
-    def walk(node):
-        nodes.append(node)
-        it = node.children().iterator()
-        while it.hasNext():
-            walk(it.next())
-        name = node.getClass().getSimpleName()
-        if name == "AdaptiveSparkPlanExec":
-            walk(node.executedPlan())
-        elif name.endswith("QueryStageExec"):
-            walk(node.plan())
-
-    walk(df._jdf.queryExecution().executedPlan())
-    out = []
-    for n in nodes:
-        if n.getClass().getSimpleName() == "FileSourceScanExec":
-            it = n.metrics().iterator()
-            mets = {}
-            while it.hasNext():
-                kv = it.next()
-                mets[kv._1()] = kv._2().value()
-            out.append(mets)
-    return out
+    return [
+        m
+        for name, _, m in _walk(df._jdf.queryExecution().executedPlan())
+        if name == "FileSourceScanExec"
+    ]
 
 
 def test_static_isin_prunes_fact_scan(spark):
@@ -90,16 +73,3 @@ def test_oversized_dim_falls_back_to_plain_join(spark):
     finally:
         pruning.MAX_PRUNE_VALUES = old
 
-
-def test_non_prunable_how_is_rejected(spark):
-    """The isin pre-filter drops unmatched fact rows — legal only for
-    inner/left_semi. Outer and anti joins must be refused loudly, never
-    silently mis-joined (ADVICE r5)."""
-    import pytest
-
-    fact = spark.range(10).select(F.col("id").alias("k"))
-    dim = spark.range(5).select(F.col("id").alias("k"))
-    for how in ("left", "full", "left_anti", "right", "anti"):
-        with pytest.raises(ValueError, match="not prunable"):
-            pruned_star_join(fact, dim, "k", how=how)
-    assert pruned_star_join(fact, dim, "k", how="left_semi").count() == 5

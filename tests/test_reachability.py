@@ -22,8 +22,10 @@ The exemption list only shrinks: an exempt name that is reached again, or
 is gone, fails the test as well, so the entry must be deleted with it.
 
 A second guard holds every defaulted parameter of the package to a second
-value in use: a parameter that every call site sets the same way is a
-constant, and the branches only another value reaches are dead code."""
+value in use: a parameter that every call site outside the tests sets the
+same way is a constant, and the branches only another value reaches are
+dead code. A test that needs another value of such a constant patches the
+module constant."""
 
 from __future__ import annotations
 
@@ -33,14 +35,22 @@ import re
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 PKG = ROOT / "kinesis3_spark"
-CALLER_FILES = [
-    *sorted(PKG.rglob("*.py")),
-    ROOT / "bench.py",
-    ROOT / "__spark_entry__.py",
-    *sorted((ROOT / "perfbench").rglob("*.py")),
-    *sorted((ROOT / "tools").rglob("*.py")),
-    *sorted((ROOT / "tests").rglob("*.py")),
-]
+
+
+def _caller_files(root: pathlib.Path) -> list[pathlib.Path]:
+    """The files whose call sites count as values in use: the package,
+    the entry points, perfbench and tools. Tests are not callers: a value
+    only a test passes does not justify a parameter."""
+    return [
+        *sorted((root / "kinesis3_spark").rglob("*.py")),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+        *sorted((root / "perfbench").rglob("*.py")),
+        *sorted((root / "tools").rglob("*.py")),
+    ]
+
+
+CALLER_FILES = _caller_files(ROOT)
 ROOT_FILES = [
     ROOT / "bench.py",
     ROOT / "__spark_entry__.py",
@@ -70,7 +80,7 @@ KNOWN_UNREACHABLE = {
     "queries.lmquality.score_perplexity_trigram": "perplexity scorer only tests call",
     "sources.batch.register_temp_views": _BATCH,
     "sources.txn_datasource._TxnBatchReader.partitions": _DS_CALLBACK,
-    "sources.txn_datasource._TxnBatchReaderPushdown.pushFilters": _DS_CALLBACK,
+    "sources.txn_datasource._TxnBatchReader.pushFilters": _DS_CALLBACK,
 }
 
 
@@ -278,9 +288,10 @@ def test_query_registration_is_unconditional():
 
 
 # Defaulted parameters with one value in use, by `module.function.param`
-# -> reason: a test sets the second value through a call the scan skips,
-# or it is the CLI's `argv`. Only shrinks, like KNOWN_UNREACHABLE.
-ONE_VALUE_EXEMPT: dict[str, str] = {}
+# -> reason. Only shrinks, like KNOWN_UNREACHABLE.
+ONE_VALUE_EXEMPT: dict[str, str] = {
+    "__main__.main.argv": "the CLI's input: sys.argv when run, a list when embedded",
+}
 
 
 def _functions(pkg: pathlib.Path):
@@ -422,9 +433,9 @@ def _one_value_params(
 
 
 def test_every_default_has_a_second_value():
-    """A defaulted parameter that no call site, tests included, sets to a
+    """A defaulted parameter that no call site outside the tests sets to a
     second value is a constant: fold it into the body and delete the
-    branches only another value reached. A test that passes the default
+    branches only another value reached. A caller that passes the default
     explicitly sets the same value."""
     _, one = _one_value_params()
     new = sorted(f"{q} = {v}" for q, v in one.items() if q not in ONE_VALUE_EXEMPT)
@@ -458,3 +469,25 @@ def test_one_value_scan_follows_forwarded_parameters(tmp_path):
         "mod.leaf.mode": "'a'",
         "mod.wrapper.mode": "'a'",
     }
+
+
+def test_one_value_scan_does_not_count_tests_as_callers(tmp_path):
+    """`width` gets a second value only from a test: still one value in
+    use. `cap` gets its second value from a tool: two."""
+    pkg = tmp_path / "kinesis3_spark"
+    for d in (pkg, tmp_path / "perfbench", tmp_path / "tools", tmp_path / "tests"):
+        d.mkdir()
+    (pkg / "mod.py").write_text(
+        "def leaf(x, width=4, cap=None):\n"
+        "    return x\n"
+        "leaf(1)\n"
+    )
+    (tmp_path / "bench.py").write_text("from kinesis3_spark.mod import leaf\nleaf(2)\n")
+    (tmp_path / "__spark_entry__.py").write_text("")
+    (tmp_path / "tools" / "tool.py").write_text("leaf(3, cap=9)\n")
+    (tmp_path / "tests" / "test_mod.py").write_text("leaf(4, width=8)\n")
+    files = _caller_files(tmp_path)
+    assert tmp_path / "tests" / "test_mod.py" not in files
+    total, one = _one_value_params(pkg, files)
+    assert total == 2
+    assert one == {"mod.leaf.width": "4"}

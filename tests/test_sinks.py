@@ -400,11 +400,12 @@ def test_txn_uncommitted_version_residue_is_not_readable(spark, tmp_path, monkey
     with pytest.raises(ValueError, match="not committed"):
         txn.read_snapshot(spark, path, epoch=2)
     # the claimed-but-unswapped epoch number is blocked while fresh
+    monkeypatch.setattr(txn, "_COMMIT_ATTEMPTS", 1)
     with pytest.raises(txn.CommitConflict):
         txn.upsert_manifest_txn(
-            spark, _events(spark, B2), path, key="id", order_col="ts",
-            max_retries=1,
+            spark, _events(spark, B2), path, key="id", order_col="ts"
         )
+    monkeypatch.undo()
     # aged past the grace window, the complete claim rolls forward as
     # epoch 2 and the retry lands on top of it as epoch 3
     vpath = _os.path.join(path, "_MANIFEST.v000002.json")
@@ -463,7 +464,8 @@ def test_txn_table_changes_classifies_epoch_diff(spark, tmp_path):
     upsert_manifest_txn(spark, _events(spark, B2), path, key="id", order_col="ts")
     ch = {
         r["id"]: (r["_change_type"], r["val"])
-        for r in table_changes(spark, path, 1, 2).collect()
+        for r in table_changes(spark, path, 1, 2, key="id").collect()
+        if r["_change_type"] != "update_preimage"
     }
     assert ch == {"c": ("update_postimage", 30.0), "d": ("insert", 4.0)}
     # a delete: commit a filtered rewrite (drop key 'a') as epoch 3
@@ -471,11 +473,11 @@ def test_txn_table_changes_classifies_epoch_diff(spark, tmp_path):
     man = read_manifest(path)
     commit_snapshot(
         cur.where("id <> 'a'"), path, key="id",
-        n_buckets=man["n_buckets"], base_man=man,
+        n_buckets=man["n_buckets"], base_man=man, carry=[],
     )
     ch3 = {
         r["id"]: r["_change_type"]
-        for r in table_changes(spark, path, 2, 3).collect()
+        for r in table_changes(spark, path, 2, 3, key="id").collect()
     }
     assert ch3 == {"a": "delete"}
 
@@ -565,9 +567,9 @@ def test_txn_skipping_is_conservative_where_stats_cannot_decide():
 
 @pytest.mark.slow
 def test_txn_cdf_preimage_rows(spark, tmp_path):
-    """include_preimage=True emits BOTH images for an update (FROM values
+    """The change feed emits BOTH images for an update (FROM values
     under update_preimage, TO values under update_postimage) and leaves
-    insert/delete rows unchanged; the default stays postimage-only."""
+    insert/delete rows unchanged."""
     from kinesis3_spark.sinks.txn import table_changes, upsert_manifest_txn
 
     path = str(tmp_path / "t")
@@ -575,19 +577,13 @@ def test_txn_cdf_preimage_rows(spark, tmp_path):
     upsert_manifest_txn(spark, _events(spark, B2), path, key="id", order_col="ts")
     full = sorted(
         (r["id"], r["_change_type"], r["val"])
-        for r in table_changes(
-            spark, path, 1, 2, include_preimage=True
-        ).collect()
+        for r in table_changes(spark, path, 1, 2, key="id").collect()
     )
     assert full == [
         ("c", "update_postimage", 30.0),
         ("c", "update_preimage", 3.0),
         ("d", "insert", 4.0),
     ]
-    default = {
-        r["_change_type"] for r in table_changes(spark, path, 1, 2).collect()
-    }
-    assert "update_preimage" not in default
 
 
 @pytest.mark.slow
@@ -623,11 +619,11 @@ def test_txn_incremental_mv_matches_full_recompute(spark, tmp_path):
     man = read_manifest(path)
     commit_snapshot(
         cur.where("id <> 'c'"), path, key="id",
-        n_buckets=man["n_buckets"], base_man=man,
+        n_buckets=man["n_buckets"], base_man=man, carry=[],
     )
     mv = count_sum_mv(read_snapshot(spark, path, epoch=1), ["dt"], ["val"])
     for e in (2, 3):
-        ch = table_changes(spark, path, e - 1, e, include_preimage=True)
+        ch = table_changes(spark, path, e - 1, e, key="id")
         mv = apply_changes_to_mv(mv, ch, ["dt"], ["val"])
     got = sorted(map(tuple, mv.collect()))
     want = sorted(
@@ -669,7 +665,7 @@ def test_txn_schema_evolution_widens_and_backfills(spark, tmp_path):
     # CDF across the widening pads the FROM side instead of crashing
     ch = {
         (r["id"], r["_change_type"])
-        for r in table_changes(spark, path, 1, 2).collect()
+        for r in table_changes(spark, path, 1, 2, key="id").collect()
     }
     assert ("d", "insert") in ch
     bad = _events(spark, [("z", "2024-01-01 10:00:00", 1.0, "2024-01-01")]
@@ -727,7 +723,7 @@ def test_merge_manifest_stream_cdc_with_deletes(spark, tmp_path):
                 {"condition": "src_op <> 'd'", "insert": "all"},
             ],
             order_col="seq",
-            n_buckets=2,
+            order_tiebreak=[],
         )
         from kinesis3_spark.streaming.run import await_or_raise
 

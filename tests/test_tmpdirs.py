@@ -84,11 +84,11 @@ def test_memo_reuses_until_source_changes(tmp_path):
     second = tmpdirs.memo("t_value", str(src), build, "a")
     assert second is not first and calls == ["a", "b", "a"]
     assert not first[0].is_cached  # the stale entry was unpersisted
-    tmpdirs.clear("t_value")
+    tmpdirs.clear()
     assert not second[0].is_cached
     tmpdirs.memo("t_value", str(src), build, "a")
     assert calls == ["a", "b", "a", "a"]
-    tmpdirs.clear("t_value")
+    tmpdirs.clear()
 
 
 def test_memo_directory_source_and_path_values(tmp_path):
@@ -114,8 +114,7 @@ def test_memo_directory_source_and_path_values(tmp_path):
     n_dirs = len(tmpdirs._CREATED)
     tmpdirs.memo("t_plain", str(sf), lambda scratch: 42)
     assert len(tmpdirs._CREATED) == n_dirs
-    tmpdirs.clear("t_path")
-    tmpdirs.clear("t_plain")
+    tmpdirs.clear()
     assert not os.path.exists(path3)
 
 

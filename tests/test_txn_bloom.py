@@ -4,6 +4,7 @@ and DS-reader partition pruning through the same sidecars."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -97,16 +98,7 @@ def test_datasource_reader_prunes_partitions_with_bloom(spark, table):
     from kinesis3_spark.sources.txn_datasource import _TxnBatchReader
 
     man = T.read_manifest(table)
-    schema_json = man["schema"]
-
-    class _Opts(dict):
-        pass
-
-    reader = _TxnBatchReader.__new__(_TxnBatchReader)
-    reader.path = table
-    reader.entries = man["files"]
-    reader.schema_json = schema_json
-    reader.l2p = {}
+    reader = _TxnBatchReader({"path": table}, json.dumps(man["schema"]), man)
     reader.pushed = [("id", "==", (17,))]
     parts = reader.partitions()
     assert 0 < len(parts) < len(man["files"])

@@ -184,9 +184,9 @@ def test_cdf_across_rename_epoch_is_empty(spark, table):
     ch = T.table_changes(
         spark, table, ep0, T.read_manifest(table)["epoch"], key="id"
     )
-    rows = ch.collect()
-    assert [r["_change_type"] for r in rows] == ["update_postimage"]
-    assert rows[0]["amount"] == 555
+    rows = {r["_change_type"]: r for r in ch.collect()}
+    assert sorted(rows) == ["update_postimage", "update_preimage"]
+    assert rows["update_postimage"]["amount"] == 555
 
 
 def test_cdf_across_drop_epoch_is_empty(spark, table):
@@ -201,10 +201,7 @@ def test_datasource_pushdown_translates_logical_predicates(spark, tmp_path):
     renaming a column never turns off its data skipping."""
     from pyspark.sql.datasource import GreaterThanOrEqual
 
-    from kinesis3_spark.sources.txn_datasource import (
-        _TxnBatchReader,
-        _TxnBatchReaderPushdown,
-    )
+    from kinesis3_spark.sources.txn_datasource import _TxnBatchReader
 
     path = str(tmp_path / "t")
     lo = spark.range(0, 20).coalesce(1).select(
@@ -218,7 +215,8 @@ def test_datasource_pushdown_translates_logical_predicates(spark, tmp_path):
     T.rename_column(path, "val", "amount")
 
     schema = '{"type":"struct","fields":[]}'  # unused by partitions()
-    assert len(_TxnBatchReader({"path": path}, schema).partitions()) == 2
-    r = _TxnBatchReaderPushdown({"path": path}, schema)
-    r._push_filters([GreaterThanOrEqual(("amount",), 500)])
+    man = T.read_manifest(path)
+    assert len(_TxnBatchReader({"path": path}, schema, man).partitions()) == 2
+    r = _TxnBatchReader({"path": path}, schema, man)
+    r.pushFilters([GreaterThanOrEqual(("amount",), 500)])
     assert len(r.partitions()) == 1  # the lo commit pruned via 'val' stats

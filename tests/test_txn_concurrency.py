@@ -34,7 +34,10 @@ def _batch(spark, writer, rnd, n=20):
     return df.withColumn("ts", F.to_timestamp("ts"))
 
 
-def test_two_writers_interleaved_upserts_converge(spark, tmp_path):
+def test_two_writers_interleaved_upserts_converge(spark, tmp_path, monkeypatch):
+    from kinesis3_spark.sinks import txn
+
+    monkeypatch.setattr(txn, "_COMMIT_ATTEMPTS", 10)
     path = str(tmp_path / "t")
     rounds = 3
     errors: list[Exception] = []
@@ -48,7 +51,6 @@ def test_two_writers_interleaved_upserts_converge(spark, tmp_path):
                     path,
                     key="id",
                     order_col="ts",
-                    max_retries=10,
                 )
         except Exception as exc:  # surface into the main thread
             errors.append(exc)
@@ -92,24 +94,26 @@ def test_conflict_raises_after_max_retries(spark, tmp_path, monkeypatch):
         return real_open(p, flags, *a)
 
     monkeypatch.setattr(txn.os, "open", always_taken)
+    monkeypatch.setattr(txn, "_COMMIT_ATTEMPTS", 2)
     try:
         import pytest
 
         with pytest.raises(CommitConflict):
             upsert_manifest_txn(
-                spark, _batch(spark, 2, 1), path, key="id",
-                order_col="ts", max_retries=2,
+                spark, _batch(spark, 2, 1), path, key="id", order_col="ts"
             )
     finally:
         monkeypatch.undo()
 
 
-def test_two_writers_interleaved_merges_converge(spark, tmp_path):
+def test_two_writers_interleaved_merges_converge(spark, tmp_path, monkeypatch):
     """Racing merge_into commits: each loser re-runs its WHOLE merge from
     the winner's snapshot, so increments compose additively no matter the
     interleaving — lost-update is exactly the bug OCC must prevent."""
+    from kinesis3_spark.sinks import txn
     from kinesis3_spark.sinks.txn import append_snapshot, merge_into
 
+    monkeypatch.setattr(txn, "_COMMIT_ATTEMPTS", 12)
     path = str(tmp_path / "t")
     base = spark.createDataFrame(
         [(i, 0) for i in range(10)], "id bigint, total bigint"
@@ -126,7 +130,6 @@ def test_two_writers_interleaved_merges_converge(spark, tmp_path):
                 merge_into(
                     spark, path, src, key="id",
                     matched=[{"update": {"total": "total + src_amt"}}],
-                    max_retries=12,
                 )
         except Exception as exc:
             errors.append(exc)

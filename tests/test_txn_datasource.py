@@ -47,8 +47,8 @@ def test_batch_read_equals_read_snapshot(registered, tmp_path):
 
 
 def test_pushdown_prunes_files_and_stays_exact(registered, tmp_path):
-    """Catalyst-integrated zone-map skipping: with pushdown opted in,
-    Spark's pushed predicates prune stats-unsat files at the READER
+    """Catalyst-integrated zone-map skipping: Spark's pushed predicates
+    prune stats-unsat files at the READER
     level (asserted on the reader directly — task packing hides the
     partition count), and every query answer stays exact because all
     filters are re-applied post-scan."""
@@ -59,10 +59,8 @@ def test_pushdown_prunes_files_and_stays_exact(registered, tmp_path):
         IsNull,
     )
 
-    from kinesis3_spark.sources.txn_datasource import (
-        _TxnBatchReader,
-        _TxnBatchReaderPushdown,
-    )
+    from kinesis3_spark.sinks.txn import read_manifest
+    from kinesis3_spark.sources.txn_datasource import _TxnBatchReader
 
     spark, path = registered, str(tmp_path / "t")
     append_snapshot(_mk(spark, [(f"a{i}", "lo", i) for i in range(20)])
@@ -71,13 +69,14 @@ def test_pushdown_prunes_files_and_stays_exact(registered, tmp_path):
                     .coalesce(1), path, key="id")
 
     man_schema = spark.read.format("txntable").load(path).schema.json()
-    base = _TxnBatchReader({"path": path}, man_schema)
+    man = read_manifest(path)
+    base = _TxnBatchReader({"path": path}, man_schema, man)
     total = len(base.partitions())
     assert total >= 2
 
     def pruned(*filters):
-        r = _TxnBatchReaderPushdown({"path": path}, man_schema)
-        kept = list(r._push_filters(list(filters)))
+        r = _TxnBatchReader({"path": path}, man_schema, man)
+        kept = list(r.pushFilters(list(filters)))
         assert kept == list(filters)  # skipping is I/O-only: Spark re-applies
         return len(r.partitions())
 
@@ -87,17 +86,12 @@ def test_pushdown_prunes_files_and_stays_exact(registered, tmp_path):
     assert pruned(IsNull(("grp",))) == 0          # null_count == 0 recorded
     assert pruned(EqualTo(("other",), 1)) == total  # unknown col: keep all
 
-    # end-to-end: answers identical with and without pushdown
-    old = spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        df = spark.read.format("txntable").option("pushdown", "true").load(path)
-        plain = spark.read.format("txntable").load(path)
-        for cond in ["val >= 1000", "val = 5", "val in (3, 1003)",
-                     "grp = 'hi'", "grp is null", "val > 99999"]:
-            assert df.where(cond).count() == plain.where(cond).count()
-    finally:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", old)
+    # end-to-end: the pruned scan answers exactly what read_snapshot does
+    df = spark.read.format("txntable").load(path)
+    snap = read_snapshot(spark, path)
+    for cond in ["val >= 1000", "val = 5", "val in (3, 1003)",
+                 "grp = 'hi'", "grp is null", "val > 99999"]:
+        assert df.where(cond).count() == snap.where(cond).count()
 
 
 def test_epoch_option_time_travels_batch_reads(registered, tmp_path):

@@ -133,7 +133,7 @@ def test_stream_append_exactly_once_through_foreachbatch(spark, tmp_path):
     )
     q = append_manifest_stream(
         sdf, path, checkpoint=str(tmp_path / "ck"), app_id="stream-ing",
-        key="id", n_buckets=2,
+        key="id",
     )
     await_or_raise(q)
     assert read_snapshot(spark, path).count() == 30

@@ -128,7 +128,7 @@ def test_protocol_refusal_is_not_swallowed_as_reaped_history(spark, table):
     with pytest.raises(T.ProtocolUnsupported, match="time_crystals"):
         T.read_snapshot(spark, table, epoch=2)
     with pytest.raises(T.ProtocolUnsupported, match="time_crystals"):
-        T.table_changes(spark, table, 2, 3)
+        T.table_changes(spark, table, 2, 3, key="id")
     # the current epoch itself stays readable — refusal is scoped to
     # walks that must interpret the refused epoch
     assert T.read_snapshot(spark, table).count() == 4

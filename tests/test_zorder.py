@@ -9,9 +9,7 @@ import glob
 
 import pyarrow.parquet as pq
 
-from kinesis3_spark.operators.zorder import write_zordered
-
-N_FILES = 16
+from kinesis3_spark.operators.zorder import Z_FILES as N_FILES, write_zordered
 
 
 def _touched(path: str, user_box: tuple, value_box: tuple) -> tuple[int, int]:
@@ -51,7 +49,7 @@ def test_zorder_prunes_2d_boxes(spark, sf_dir, tmp_path):
     rand_path = str(tmp_path / "random")
     ev.repartition(N_FILES).write.parquet(rand_path)
     z_path = str(tmp_path / "zorder")
-    write_zordered(ev, z_path, "user_id", "value", n_files=N_FILES)
+    write_zordered(ev, z_path, "user_id", "value")
 
     # same data either way
     assert (

@@ -32,22 +32,23 @@ def _children(node):
         yield it.next()
 
 
-def _walk(node, out):
+def _walk(node):
+    """Yield (class name, node, {metric: value}) for every node of an
+    executed plan, through the adaptive plan and its query stages."""
     name = node.getClass().getSimpleName()
     it = node.metrics().iterator()
     mets = {}
     while it.hasNext():
         kv = it.next()
         mets[kv._1()] = kv._2().value()
-    out.append((name, mets))
+    yield name, node, mets
     if name == "AdaptiveSparkPlanExec":
-        _walk(node.executedPlan(), out)
+        yield from _walk(node.executedPlan())
     else:
         for ch in _children(node):
-            _walk(ch, out)
+            yield from _walk(ch)
         if name.endswith("QueryStageExec"):
-            _walk(node.plan(), out)
-    return out
+            yield from _walk(node.plan())
 
 
 def _hash_keys(exchange) -> frozenset | None:
@@ -100,7 +101,7 @@ def audit_query(spark, fn, sf_dir: str) -> dict:
     aggregate its plan metrics."""
     df = fn(spark, sf_dir)
     rows_out = len(df.collect())
-    nodes = _walk(df._jdf.queryExecution().executedPlan(), [])
+    nodes = [(n, m) for n, _, m in _walk(df._jdf.queryExecution().executedPlan())]
     return {
         "rows_out": rows_out,
         "scan_rows": sum(

@@ -190,31 +190,13 @@ def static_window_findings(src_root: str | None = None) -> list[str]:
     return findings
 
 
-def _walk(node, out):
-    name = node.getClass().getSimpleName()
-    it = node.metrics().iterator()
-    mets = {}
-    while it.hasNext():
-        kv = it.next()
-        mets[kv._1()] = kv._2().value()
-    out.append((name, node, mets))
-    if name == "AdaptiveSparkPlanExec":
-        _walk(node.executedPlan(), out)
-    else:
-        cit = node.children().iterator()
-        while cit.hasNext():
-            _walk(cit.next(), out)
-        if name.endswith("QueryStageExec"):
-            _walk(node.plan(), out)
-    return out
-
-
 def lint_query(spark, fn, sf_dir: str) -> list[str]:
+    from tools.plan_audit import _children, _walk
+
     df = fn(spark, sf_dir)
     df.collect()
     findings = []
-    nodes = _walk(df._jdf.queryExecution().executedPlan(), [])
-    for name, node, mets in nodes:
+    for name, node, mets in _walk(df._jdf.queryExecution().executedPlan()):
         if name == "ShuffleExchangeExec" and "SinglePartition" in node.toString().splitlines()[0]:
             rows = mets.get("shuffleRecordsWritten", 0)
             if rows > SINGLE_PARTITION_ROW_BOUND:
@@ -224,17 +206,14 @@ def lint_query(spark, fn, sf_dir: str) -> list[str]:
             # a cross join that ATTACHES a 1-row (or tiny) broadcast side
             # multiplies nothing: output ≈ the larger input. Flag only
             # genuine pair amplification (output well beyond either input).
-            child_rows = []
-            cit = node.children().iterator()
-            while cit.hasNext():
-                sub = _walk(cit.next(), [])
-                child_rows.append(
-                    max(
-                        (m.get("numOutputRows", 0) for _, _, m in sub),
-                        default=0,
-                    )
-                )
-            biggest_input = max(child_rows, default=0)
+            biggest_input = max(
+                (
+                    m.get("numOutputRows", 0)
+                    for ch in _children(node)
+                    for _, _, m in _walk(ch)
+                ),
+                default=0,
+            )
             if rows > NESTED_LOOP_ROW_BOUND and rows > 2 * biggest_input:
                 findings.append(
                     f"{name} amplifying {biggest_input} -> {rows} rows"
