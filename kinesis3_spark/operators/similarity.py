@@ -560,8 +560,8 @@ def ivfpq_adc_scores(
     emb: DataFrame,
     queries: DataFrame,
     index: tuple[np.ndarray, np.ndarray],
+    enc: DataFrame,
     nprobe: int = 4,
-    enc: DataFrame | None = None,
 ) -> DataFrame:
     """The ADC-scored candidate relation `(query_id, neighbor_id, cos)`
     underlying `cosine_topk_ivfpq` — exposed so a caller that needs the
@@ -570,10 +570,10 @@ def ivfpq_adc_scores(
     compute the cell-pruned scan + Arrow ADC pass ONCE, persist it, and
     pay only the bounded top-k windows per consumer (guide §2.3: Spark
     re-plans a non-materialized subtree under every alias — the r14
-    alias-subtree lesson). `index` is the trained (C, books) pair."""
+    alias-subtree lesson). `index` is the trained (C, books) pair and
+    `enc` the corpus encoded with it (`ivfpq_encode`, or a persisted index
+    read back)."""
     C, books = index
-    if enc is None:
-        enc = ivfpq_encode(emb, C, books)
     m, kcode, sub = books.shape
 
     qpdf = queries.select("vec_id", "embedding").toPandas()
@@ -635,9 +635,9 @@ def cosine_topk_ivfpq(
     emb: DataFrame,
     queries: DataFrame,
     index: tuple[np.ndarray, np.ndarray],
+    enc: DataFrame,
     k: int = 5,
     nprobe: int = 4,
-    enc: DataFrame | None = None,
     scores: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-PQ ANN top-k via asymmetric distance computation (ADC): probe
@@ -650,11 +650,11 @@ def cosine_topk_ivfpq(
     matrix; scoring a candidate is m table lookups + adds over the 1+m
     byte index row. This is the full production ANN shape: compressed
     index scan, cell-pruned candidates, no raw-vector I/O on the probe
-    path. `index` is the trained (C, books) pair; pass `enc` to reuse its
-    encoded corpus across queries; pass `scores` (from `ivfpq_adc_scores`) to
+    path. `index` is the trained (C, books) pair and `enc` the corpus
+    encoded with it; pass `scores` (from `ivfpq_adc_scores`) to
     reuse an already-computed ADC pass and pay only the top-k window."""
     if scores is None:
-        scores = ivfpq_adc_scores(emb, queries, index, nprobe=nprobe, enc=enc)
+        scores = ivfpq_adc_scores(emb, queries, index, enc, nprobe=nprobe)
     return _topk_from_scores(scores, k)
 
 
@@ -726,7 +726,6 @@ def persist_ivfpq_index(
     enc: DataFrame,
     path: str,
     index: tuple[np.ndarray, np.ndarray],
-    params: dict,
 ) -> None:
     """Write the encoded IVF-PQ corpus CLUSTERED BY CELL: one parquet
     partition directory per cell (`cell=<n>/part-*.parquet`), the on-disk
@@ -738,8 +737,7 @@ def persist_ivfpq_index(
     object store and the cell directories are the retrieval unit.
 
     ``index=(C, books)``, the trained centroids and codebooks, is written
-    with the probe ``params`` as a ``_INDEX_META.json``
-    sidecar INSIDE the index directory — the piece that makes the index
+    as a ``_INDEX_META.json`` sidecar INSIDE the index directory — the piece that makes the index
     durable: encoded rows are meaningless without the codebooks that
     decode them, and without the sidecar a fresh process would have to
     RETRAIN to probe (VERDICT r9 'Next round' #2 — FAISS serializes the
@@ -755,7 +753,6 @@ def persist_ivfpq_index(
     meta = {
         "centroids": C.tolist(),
         "codebooks": books.tolist(),
-        "params": dict(params),
     }
     tmp = _os.path.join(path, "_INDEX_META.json.tmp")
     with open(tmp, "w") as f:
@@ -763,8 +760,8 @@ def persist_ivfpq_index(
     _os.replace(tmp, _os.path.join(path, "_INDEX_META.json"))
 
 
-def read_ivfpq_index_meta(path: str) -> tuple[np.ndarray, np.ndarray, dict]:
-    """Read the ``_INDEX_META.json`` sidecar back as (C, books, params).
+def read_ivfpq_index_meta(path: str) -> tuple[np.ndarray, np.ndarray]:
+    """Read the ``_INDEX_META.json`` sidecar back as (C, books).
     Round-trip is exact: float64 -> JSON repr -> float64 is value-
     preserving for finite doubles (Python json emits repr(float), which
     reads back bit-identical), so a fresh process probes the on-disk
@@ -778,7 +775,6 @@ def read_ivfpq_index_meta(path: str) -> tuple[np.ndarray, np.ndarray, dict]:
     return (
         np.asarray(meta["centroids"], dtype=np.float64),
         np.asarray(meta["codebooks"], dtype=np.float64),
-        meta["params"],
     )
 
 
@@ -823,12 +819,13 @@ def knn_graph_ivfpq(
          (qn · decoded), matching cosine_topk_ivfpq's ranking.
       4. Per-query top-k window (rank ties broken by neighbor_id).
 
-    Scale: per-cell work is |Q_cell| x |X_cell| — the IVF balance knob;
-    with n_centroids ~ sqrt(N) (train_ivfpq's derivation) each cell's
-    candidate block stays ~N, total ~N·nprobe·N/n_centroids ≈ the
-    textbook IVF build cost. Skewed cells are AQE skew-join territory;
-    the decoded side is (dim+2) doubles/row — 2000x smaller than
-    payloads, safe to shuffle."""
+    Scale: per-cell work is |Q_cell| x |X_cell| — the IVF balance knob —
+    so the cell join costs ~N·nprobe·N/n_centroids. train_ivfpq trains a
+    FIXED n_centroids = IVFPQ_CELLS (16), not ~sqrt(N), so this build
+    grows ~N²·nprobe/16 with the corpus: quadratic, an open SCALE.md
+    item until the cell count follows N. Skewed cells are AQE skew-join
+    territory; the decoded side is (dim+2) doubles/row — 2000x smaller
+    than payloads, safe to shuffle."""
     C, books = index
     m, _kcode, sub = books.shape
     nprobe = KNN_NPROBE

@@ -13,7 +13,7 @@ handling.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -25,6 +25,29 @@ from . import query
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tune(spark)
     return load_table(spark, sf_dir, name)
+
+
+def _dims(first: DataFrame, *joins: tuple[DataFrame, Column]) -> DataFrame:
+    """A dimension chain, joined in one task and broadcast once.
+
+    ``first`` inner-joins each ``(dim, on)`` in turn. Every input is
+    coalesced to one partition and every join is a shuffled hash join
+    whose output is coalesced to one partition again, so no join of the
+    chain needs an exchange: the whole chain is one stage, and its
+    ``BroadcastExchange`` one Spark job, where broadcasting each table on
+    its own costs one job per table. The coalesce after each join is
+    needed: a join of two single-partition sides does not report
+    ``SinglePartition`` itself, so the next join would hash-shuffle both
+    sides. A table small enough to broadcast is small enough to scan in
+    one task. Only these join a chain: ``nation`` and ``region`` (fixed
+    size) and ``supplier`` (10k x SF rows; SCALE.md "Joins" gives the SF
+    where that broadcast stops being sound); never ``customer``,
+    ``orders``, ``part`` or ``lineitem``.
+    """
+    out = first.coalesce(1)
+    for dim, on in joins:
+        out = out.join(dim.coalesce(1).hint("shuffle_hash"), on).coalesce(1)
+    return F.broadcast(out)
 
 
 # --------------------------------------------------------------------------
@@ -111,8 +134,10 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Star join through broadcast dimensions (TPC-H Q5 shape). region/nation are
-# fixed-size at every SF → explicit broadcast() keeps them off the shuffle.
+# Star join through a broadcast dimension chain (TPC-H Q5 shape).
+# supplier⋈nation⋈region is joined in one task and broadcast once (`_dims`):
+# region/nation are fixed-size at every SF, so the chain grows only with
+# supplier, and the region filter cuts it before it meets the facts.
 # --------------------------------------------------------------------------
 @query(
     "q5_region_revenue",
@@ -134,15 +159,22 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders").where(F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
     li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").where(F.col("r_name").isin("ASIA", "AMERICA"))
+    snr = _dims(
+        _t(spark, sf_dir, "supplier"),
+        (_t(spark, sf_dir, "nation"), F.col("s_nationkey") == F.col("n_nationkey")),
+        (
+            _t(spark, sf_dir, "region").where(F.col("r_name").isin("ASIA", "AMERICA")),
+            F.col("n_regionkey") == F.col("r_regionkey"),
+        ),
+    )
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, li.l_orderkey == o.o_orderkey)
-        .join(s, (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey))
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(
+            snr,
+            (F.col("l_suppkey") == F.col("s_suppkey"))
+            & (F.col("c_nationkey") == F.col("s_nationkey")),
+        )
         .groupBy(F.col("n_name").alias("nation"))
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
     )
@@ -459,11 +491,12 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    nr = _dims(
+        _t(spark, sf_dir, "nation"),
+        (_t(spark, sf_dir, "region"), F.col("n_regionkey") == F.col("r_regionkey")),
+    )
     return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        c.join(nr, F.col("c_nationkey") == F.col("n_nationkey"))
         .rollup("r_name", "n_name")
         .agg(F.round(F.sum("c_acctbal"), 2).alias("balance"))
         .select(

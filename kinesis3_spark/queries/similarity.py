@@ -258,8 +258,7 @@ def _ivfpq_persisted_index(spark: SparkSession, sf_dir: str):
         C, books = S.train_ivfpq(emb)
         path = scratch + "/index"
         S.persist_ivfpq_index(
-            S.ivfpq_encode(emb, C, books), path, index=(C, books),
-            params={"nprobe": S.RERANK_NPROBE, "fetch_r": S.RERANK_FETCH_R},
+            S.ivfpq_encode(emb, C, books), path, index=(C, books)
         )
         return C, books, path
 
@@ -1263,13 +1262,12 @@ def _ivfpq_incremental_index(spark: SparkSession, sf_dir: str) -> str:
         C, books = S.train_ivfpq(base)
         path = scratch + "/index"
         S.persist_ivfpq_index(
-            S.ivfpq_encode(base, C, books), path, index=(C, books),
-            params={"nprobe": S.RERANK_NPROBE, "fetch_r": S.RERANK_FETCH_R},
+            S.ivfpq_encode(base, C, books), path, index=(C, books)
         )
         # the append half runs as a FRESH consumer: quantizers come from the
         # sidecar, not the training cache (the restart path, like test_ivfpq's
         # cleared-cache probe)
-        C2, books2, _params = S.read_ivfpq_index_meta(path)
+        C2, books2 = S.read_ivfpq_index_meta(path)
         S.ivfpq_encode(batch, C2, books2).write.partitionBy("cell").mode(
             "append"
         ).parquet(path)
@@ -1308,7 +1306,7 @@ def ivfpq_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     job (dq_token_drift_psi's embedding twin) and a periodic rebuild."""
     path = _ivfpq_incremental_index(spark, sf_dir)
     enc = S.read_ivfpq_index(spark, path)
-    C, books, _params = S.read_ivfpq_index_meta(path)
+    C, books = S.read_ivfpq_index_meta(path)
     is_batch = F.col("id") % _APPEND_MOD == _APPEND_MOD - 1
     n_centroids, (m, kcode, _sub) = len(C), books.shape
     code_in_range = F.aggregate(
@@ -1382,7 +1380,7 @@ def ivfpq_delete_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction thresholds keep it bounded."""
     path = _ivfpq_incremental_index(spark, sf_dir)
     enc = S.read_ivfpq_index(spark, path)
-    C, books, _params = S.read_ivfpq_index_meta(path)
+    C, books = S.read_ivfpq_index_meta(path)
     emb = _t(spark, sf_dir, "embeddings")
     tombstones = emb.where(F.col("vec_id") % 20 == 0).select(
         F.col("vec_id").alias("id")

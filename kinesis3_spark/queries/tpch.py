@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .relational import _t
+from .relational import _dims, _t
 from . import query
 
 
@@ -152,25 +152,32 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two broadcast nation joins (fixed 25 rows each) hang off the
-    supplier/customer keys; the only real shuffles are the two fact-fact
-    joins (lineitem⋈orders, orders⋈customer). The n1 < n2 pair filter
-    halves the output without affecting the join strategy."""
+    """Two nation joins (fixed 25 rows each) hang off the supplier and
+    customer keys: the supplier-side one is joined to supplier in one
+    task and broadcast as one chain (`_dims`), the customer-side one is
+    broadcast alone (customer never joins a chain). The only real
+    shuffles are the two fact-fact joins (lineitem⋈orders,
+    orders⋈customer). The n1 < n2 pair filter halves the output without
+    affecting the join strategy."""
     li = _t(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1999-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("2001-01-01").cast("timestamp"))
     )
-    s = _t(spark, sf_dir, "supplier")
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation")
-    n1 = F.broadcast(n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")))
-    n2 = F.broadcast(n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")))
+    sn = _dims(
+        _t(spark, sf_dir, "supplier"),
+        (
+            n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")),
+            F.col("s_nk") == F.col("s_nationkey"),
+        ),
+    )
+    n2 = _dims(n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")))
     return (
-        li.join(s, F.col("s_suppkey") == F.col("l_suppkey"))
+        li.join(sn, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .join(n1, F.col("s_nk") == F.col("s_nationkey"))
         .join(n2, F.col("c_nk") == F.col("c_nationkey"))
         .where(F.col("supp_nation") < F.col("cust_nation"))
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
@@ -198,17 +205,22 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The selective p_type filter lands on the part side BEFORE the join,
     so AQE converts part into a broadcast build (1/6 of parts). Supplier
-    and nation broadcast outright; orders⋈lineitem is the one big shuffle."""
+    and nation are joined in one task and broadcast once as one chain
+    (`_dims`); orders⋈lineitem is the one big shuffle."""
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part").where(F.col("p_type") == "PROMO").select("p_partkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    sn = _dims(
+        _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey"),
+        (
+            _t(spark, sf_dir, "nation").select("n_nationkey", "n_name"),
+            F.col("n_nationkey") == F.col("s_nationkey"),
+        ),
+    )
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    n = F.broadcast(_t(spark, sf_dir, "nation").select("n_nationkey", "n_name"))
     return (
         li.join(p, F.col("p_partkey") == F.col("l_partkey"))
-        .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(sn, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(n, F.col("n_nationkey") == F.col("s_nationkey"))
         .groupBy(
             F.col("n_name").alias("sup_nation"), F.year("o_orderdate").alias("o_year")
         )
@@ -247,7 +259,7 @@ def q10_returned_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
     )
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
+    n = _dims(_t(spark, sf_dir, "nation"))
     return (
         c.join(o, F.col("c_custkey") == F.col("o_custkey"))
         .join(li, F.col("l_orderkey") == F.col("o_orderkey"))

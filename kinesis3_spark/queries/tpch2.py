@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .relational import _t
+from .relational import _dims, _t
 from .tpch import (
     _EXACT_REVENUE_SQL,
     _REVENUE_E4_SQL,
@@ -68,39 +68,42 @@ def q8_national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8: the share of one supplier nation's revenue among all
     suppliers selling ECONOMY parts to European customers, per year.
     Numerator and denominator come out of ONE aggregation pass
-    (conditional sum), not two query branches. All five dimension inputs
-    (part-filtered, supplier, nation x2, region) broadcast; the two
-    fact-fact joins (lineitem-orders, orders-customer) are the only
-    shuffles."""
+    (conditional sum), not two query branches. The dimension inputs
+    broadcast: part (filtered) alone, supplier⋈nation and nation⋈region
+    each as one chain built in one task (`_dims`); the two fact-fact
+    joins (lineitem-orders, orders-customer) are the only shuffles."""
     li = _t(spark, sf_dir, "lineitem")
     p = (
         _t(spark, sf_dir, "part")
         .where(F.col("p_type") == "ECONOMY")
         .select("p_partkey")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    # Customer-side nation restricted to the region FIRST so the broadcast
-    # carries only the five European nations.
-    n1 = F.broadcast(
-        n.join(r, F.col("r_regionkey") == F.col("n_regionkey"))
-        .where(F.col("r_name") == "EUROPE")
-        .select(F.col("n_nationkey").alias("c_nk"))
+    sn = _dims(
+        _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey"),
+        (
+            n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("nation")),
+            F.col("s_nk") == F.col("s_nationkey"),
+        ),
     )
-    n2 = F.broadcast(
-        n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("nation"))
+    # Customer-side nation restricted to the region in the chain, so the
+    # broadcast carries only the five European nations.
+    nr = _dims(
+        n.select(F.col("n_nationkey").alias("c_nk"), "n_regionkey"),
+        (
+            _t(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE"),
+            F.col("r_regionkey") == F.col("n_regionkey"),
+        ),
     )
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
-        .join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(sn, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .join(n1, F.col("c_nk") == F.col("c_nationkey"))
-        .join(n2, F.col("s_nk") == F.col("s_nationkey"))
+        .join(nr, F.col("c_nk") == F.col("c_nationkey"))
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             F.round(

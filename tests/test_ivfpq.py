@@ -88,7 +88,7 @@ def test_ivfpq_topk_matches_numpy_adc_reference_exactly(spark, clustered_dir, ce
     C, books = S.train_ivfpq(emb)
     enc_rows = {r["id"]: r for r in S.ivfpq_encode(emb, C, books).collect()}
     got = S.cosine_topk_ivfpq(
-        emb, qset, k=5, nprobe=2, index=(C, books)
+        emb, qset, k=5, nprobe=2, index=(C, books), enc=S.ivfpq_encode(emb, C, books)
     ).collect()
 
     m, kcode, sub = books.shape
@@ -134,7 +134,7 @@ def test_persisted_probe_matches_in_session_and_prunes_cell_files(
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
     C, books = S.train_ivfpq(emb)
     path = tmpdirs.mkdtemp(prefix="t_ivfpq_persist_") + "/index"
-    S.persist_ivfpq_index(S.ivfpq_encode(emb, C, books), path, (C, books), {})
+    S.persist_ivfpq_index(S.ivfpq_encode(emb, C, books), path, (C, books))
     enc = S.read_ivfpq_index(spark, path)
 
     qset = emb.where(F.col("vec_id").isin([0, 50]))
@@ -146,7 +146,8 @@ def test_persisted_probe_matches_in_session_and_prunes_cell_files(
         map(
             tuple,
             S.cosine_topk_ivfpq(
-                emb, qset, k=5, nprobe=2, index=(C, books)
+                emb, qset, k=5, nprobe=2, index=(C, books),
+                enc=S.ivfpq_encode(emb, C, books),
             ).collect(),
         )
     )
@@ -251,10 +252,7 @@ def test_index_meta_sidecar_enables_fresh_process_probe(
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
     C, books = S.train_ivfpq(emb)
     path = tmpdirs.mkdtemp(prefix="t_ivfpq_meta_") + "/index"
-    S.persist_ivfpq_index(
-        S.ivfpq_encode(emb, C, books), path, index=(C, books),
-        params={"nprobe": 2},
-    )
+    S.persist_ivfpq_index(S.ivfpq_encode(emb, C, books), path, index=(C, books))
     # training-session probe (ground truth for parity)
     qset = emb.where(F.col("vec_id").isin([0, 50, 100]))
     want = sorted(map(tuple, S.cosine_topk_ivfpq(
@@ -268,10 +266,9 @@ def test_index_meta_sidecar_enables_fresh_process_probe(
     del C, books
     meta = S.read_ivfpq_index_meta(path)
     assert meta is not None
-    C2, books2, params = meta
-    assert params == {"nprobe": 2}
+    C2, books2 = meta
     got = sorted(map(tuple, S.cosine_topk_ivfpq(
-        emb, qset, k=5, nprobe=int(params["nprobe"]), index=(C2, books2),
+        emb, qset, k=5, nprobe=2, index=(C2, books2),
         enc=S.read_ivfpq_index(spark, path),
     ).collect()))
     assert got == want and len(got) == 15
@@ -326,7 +323,7 @@ def test_incremental_append_leaves_base_files_untouched(spark, tmp_path):
     batch = emb.where(F.col("vec_id") >= 100)
     C, books = S.train_ivfpq(base)
     path = str(tmp_path / "index")
-    S.persist_ivfpq_index(S.ivfpq_encode(base, C, books), path, (C, books), {})
+    S.persist_ivfpq_index(S.ivfpq_encode(base, C, books), path, (C, books))
 
     def snapshot():
         out = {}
@@ -338,7 +335,7 @@ def test_incremental_append_leaves_base_files_untouched(spark, tmp_path):
         return out
 
     before = snapshot()
-    C2, books2, _ = S.read_ivfpq_index_meta(path)
+    C2, books2 = S.read_ivfpq_index_meta(path)
     S.ivfpq_encode(batch, C2, books2).write.partitionBy("cell").mode(
         "append"
     ).parquet(path)

@@ -5,6 +5,8 @@ on the optimized/executed plan text, the same evidence SCALE.md cites."""
 
 from __future__ import annotations
 
+import pytest
+
 from kinesis3_spark.queries import QUERIES
 
 
@@ -345,3 +347,53 @@ def test_term_statistics_shuffle_the_tokens_once(spark, sf_dir):
             for k1, k2 in nested_exchanges(QUERIES[name](spark, sf_dir))
         }
         assert (term, doc_term) not in pairs, (name, pairs)
+
+
+# BroadcastExchange nodes per query in the executed plan at the fixture SF,
+# with every dimension chain built by `relational._dims`. The other
+# broadcasts carry part, orders, customer, lineitem or q20's
+# excess-supplier set.
+CHAIN_BROADCASTS = {
+    "q21_waiting_suppliers": 2,
+    "q9_profit_by_nation_year": 3,
+    "q5_region_revenue": 3,
+    "q8_national_market_share": 5,
+    "q2_min_cost_supplier": 2,
+    "q7_volume_shipping": 4,
+    "q20_excess_shipments": 3,
+    "agg_rollup_geo_revenue": 1,
+    "q10_returned_top_customers": 3,
+}
+
+# The tables a dimension chain may join.
+DIMENSIONS = {"nation", "region", "supplier"}
+
+
+def _scanned_table(scan) -> str:
+    """Corpus table name of a FileSourceScanExec (`nation.parquet` -> `nation`)."""
+    return scan.relation().location().rootPaths().head().getName().split(".")[0]
+
+
+@pytest.mark.parametrize("name", sorted(CHAIN_BROADCASTS))
+def test_dimension_chains_broadcast_once(spark, sf_dir, name):
+    """A dimension chain is joined in one task and broadcast once: a
+    broadcast that scans only dimension tables has no shuffle and no other
+    broadcast under it, and the query has its measured broadcast count.
+
+    The two subtree checks cover the chain broadcasts only. AQE may
+    broadcast a small aggregate at runtime (q20's excess-supplier set),
+    and that side carries its own shuffles and part broadcast."""
+    from tools.plan_audit import _walk
+
+    df = QUERIES[name](spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    broadcasts = [node for cls, node, _ in _walk(plan) if cls == "BroadcastExchangeExec"]
+    for b in broadcasts:
+        below = [(cls, node) for cls, node, _ in _walk(b)][1:]
+        tables = {_scanned_table(node) for cls, node in below if cls == "FileSourceScanExec"}
+        if tables <= DIMENSIONS:
+            classes = {cls for cls, _ in below}
+            assert "ShuffleExchangeExec" not in classes, (name, tables)
+            assert "BroadcastExchangeExec" not in classes, (name, tables)
+    assert len(broadcasts) == CHAIN_BROADCASTS[name]

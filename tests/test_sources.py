@@ -191,10 +191,12 @@ def test_warm_q3_job_budget(spark, sf_dir):
 # Jobs of a warm build plus noop write at the fixture SF for the queries
 # that read the memoized document statistics (`decontam.doc_stats`) or the
 # memoized SemDeDup cells, that count tf on the term-partitioned token
-# stream (`functions.text.term_frequencies`), or that compute q21 from one
-# lineitem aggregate. Each build alone starts none.
+# stream (`functions.text.term_frequencies`), that compute q21 from one
+# lineitem aggregate, or that broadcast a dimension chain once
+# (`relational._dims`: q21 and q9). Each build alone starts none.
 WARM_JOBS = {
-    "q21_waiting_suppliers": 7,
+    "q21_waiting_suppliers": 5,
+    "q9_profit_by_nation_year": 5,
     "llm_tfidf_top_terms": 3,
     "search_bm25_topk": 3,
     "search_hybrid_rrf_topk": 6,
@@ -209,8 +211,9 @@ def test_warm_job_budget(spark, sf_dir, name):
     BM25 need are memoized per documents file and the SemDeDup cells per
     embeddings file, so no action runs before the write; the term
     statistics count tf in the stage after their one exchange on term;
-    and q21 runs its one aggregate's jobs, not the two scans and three
-    shuffles of the semi-join shape."""
+    q21 runs its one aggregate's jobs, not the two scans and three
+    shuffles of the semi-join shape; and q21 and q9 broadcast their
+    supplier chain in one job, not one job per dimension table."""
     from kinesis3_spark.queries import QUERIES
 
     built = []
