@@ -423,7 +423,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query; keys absent here are rows-only."""
+    """DuckDB-equivalent SQL per query (every registered query has one)."""
     from kinesis3_spark.queries import ORACLE
 
     return {n: ORACLE[n] for n in _ordered(ORACLE)}

@@ -45,12 +45,12 @@ def _query_main(argv: list[str]) -> int:
         ap.add_argument("pattern", nargs="?", default="", help="substring filter")
     args = ap.parse_args(argv[1:])
 
-    from .queries import ORACLE, QUERIES
+    from .queries import QUERIES
 
     if cmd == "list":
         for n in sorted(QUERIES):
             if args.pattern in n:
-                print(n + ("" if n in ORACLE else "  [rows-only]"))
+                print(n)
         return 0
     if args.name not in QUERIES:
         print(f"unknown query {args.name!r}; try `list`", file=sys.stderr)

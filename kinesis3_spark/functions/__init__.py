@@ -1,13 +1,7 @@
 from .scalar import (
     epoch_ms_to_datetime_str,
-    epoch_ms_to_day,
-    epoch_ms_to_hour_start_s,
     epoch_ms_to_ts,
-    extract_json,
     parse_cookies,
-    separate_number_data,
-    url_decode_col,
-    url_encode_col,
 )
 from .text import (
     fingerprint,
@@ -24,14 +18,8 @@ from .vectors import cosine_similarity, dot, l2_norm
 
 __all__ = [
     "epoch_ms_to_datetime_str",
-    "epoch_ms_to_day",
-    "epoch_ms_to_hour_start_s",
     "epoch_ms_to_ts",
-    "extract_json",
     "parse_cookies",
-    "separate_number_data",
-    "url_decode_col",
-    "url_encode_col",
     "fingerprint",
     "lang_id",
     "ngram_hashes",

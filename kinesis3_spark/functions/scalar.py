@@ -12,16 +12,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def url_decode_col(col) -> Column:
-    """UTF-8 URL decode (reference `<urlsafe-str`, utils.clj:79-81)."""
-    return F.url_decode(col)
-
-
-def url_encode_col(col) -> Column:
-    """UTF-8 URL encode (reference `>urlsafe-str`, utils.clj:83-85)."""
-    return F.url_encode(col)
-
-
 def parse_cookies(col) -> Column:
     """`"k=v; k2=v%202"` → map<string,string> with URL-decoded values.
 
@@ -48,11 +38,6 @@ def parse_cookies(col) -> Column:
     return F.map_from_entries(entries)
 
 
-def extract_json(col, schema) -> Column:
-    """Safe JSON parse: corrupt input → NULL (reference `extract-json`,
-    utils.clj:65-71, which returns {}/nil on parse failure)."""
-    return F.from_json(col, schema)
-
 
 def epoch_ms_to_ts(col) -> Column:
     """Epoch milliseconds (int or numeric string) → timestamp
@@ -60,31 +45,9 @@ def epoch_ms_to_ts(col) -> Column:
     return F.timestamp_millis(col.cast("long") if isinstance(col, Column) else F.col(col).cast("long"))
 
 
-def epoch_ms_to_day(col) -> Column:
-    """Epoch ms → 'yyyy-MM-dd' (reference `get-day`, utils.clj:32-35)."""
-    return F.date_format(epoch_ms_to_ts(col), "yyyy-MM-dd")
-
 
 def epoch_ms_to_datetime_str(col) -> Column:
     """Epoch ms → "yyyy-MM-dd'T'HH:mm:ss" (reference `epoch->datetime`,
     utils.clj:37-40). Invalid input → NULL (deviation from the reference's
     now() fallback, documented in FIXTURES.md §6)."""
     return F.date_format(epoch_ms_to_ts(col), "yyyy-MM-dd'T'HH:mm:ss")
-
-
-def epoch_ms_to_hour_start_s(col) -> Column:
-    """Epoch ms → epoch *seconds* of the containing hour start
-    (reference `get-hour`, utils.clj:51-63; documented example
-    1437609280911 → 1437606000)."""
-    return F.unix_timestamp(F.date_trunc("hour", epoch_ms_to_ts(col)))
-
-
-def separate_number_data(col) -> Column:
-    """Fixed-width split of an archive line into (seq-number, payload)
-    (reference `separate-number-data`, utils.clj:17-19: chars [0,56) and
-    [57,∞))."""
-    c = col if isinstance(col, Column) else F.col(col)
-    return F.struct(
-        F.substring(c, 1, 56).alias("sequence_number"),
-        F.substring(c, 58, 2_147_483_647 - 58).alias("data"),
-    )

@@ -33,7 +33,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["validate_motif", "user_motif_counts", "user_motif_measures"]
+__all__ = ["validate_motif", "user_motif_counts"]
 
 
 def validate_motif(pattern: str, alphabet: str) -> str:
@@ -138,78 +138,3 @@ def user_motif_counts(events: DataFrame, pattern: str, alphabet: str) -> DataFra
         "user_id",
         F.regexp_count("seq", F.lit(pattern)).cast("bigint").alias("n_matches"),
     )
-
-
-def user_motif_measures(events: DataFrame, pattern: str, alphabet: str) -> DataFrame:
-    """MATCH_RECOGNIZE MEASURES for the contiguous motif: per key, one
-    row per match with its position, symbol length, and wall-clock span
-    — `user_motif_counts` answers HOW MANY, this answers WHERE and HOW
-    LONG. Columns: (key, match_no 1-based, start_idx 0-based in the
-    key's event order, match_len, t_start, t_end).
-
-    Because one symbol == one event, match positions in the symbol
-    string map straight back to event indices. Positions are recovered
-    WITHOUT a second regex engine pass over per-match loops: the
-    sequence splits around the matches (split keeps trailing empties so
-    segment i is exactly the gap before match i), and
-      start_i = Σ_{j≤i} len(seg_j) + Σ_{j<i} len(match_j)
-    is a pure array fold — transform/slice/aggregate, all JVM built-ins
-    in the SAME post-shuffle stage as the rollup that built the string.
-    Same one-shuffle envelope as the counter; the per-key arrays are the
-    sessionization bound."""
-    validate_motif(pattern, alphabet)
-    base = events.groupBy("user_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    "ts", "event_id",
-                    F.substring("event_type", 1, 1).alias("__sym"),
-                    F.col("ts").alias("__ts"),
-                )
-            )
-        ).alias("__evs")
-    )
-    seq = base.select(
-        "user_id",
-        "__evs",
-        F.concat_ws(
-            "", F.transform("__evs", lambda x: x["__sym"])
-        ).alias("seq"),
-    )
-    lit = F.lit(pattern)
-    m = seq.select(
-        "user_id",
-        "__evs",
-        F.regexp_extract_all("seq", lit, 0).alias("__m"),
-        F.split("seq", pattern, -1).alias("__s"),
-    ).where(F.size("__m") > 0)
-    seg_lens = F.transform("__s", lambda x: F.length(x))
-    match_lens = F.transform("__m", lambda x: F.length(x))
-    m = m.select(
-        "user_id",
-        "__evs",
-        match_lens.alias("__ml"),
-        seg_lens.alias("__sl"),
-    )
-    add = lambda acc, v: acc + v  # noqa: E731
-    starts = F.transform(
-        "__ml",
-        lambda x, i: F.aggregate(F.slice("__sl", 1, i + 1), F.lit(0), add)
-        + F.aggregate(F.slice("__ml", 1, i), F.lit(0), add),
-    )
-    m = m.select("user_id", "__evs", "__ml", starts.alias("__st"))
-    out = m.select(
-        "user_id",
-        F.posexplode(F.arrays_zip("__st", "__ml")).alias("__i", "__z"),
-        "__evs",
-    ).select(
-        "user_id",
-        (F.col("__i") + 1).alias("match_no"),
-        F.col("__z.__st").alias("start_idx"),
-        F.col("__z.__ml").alias("match_len"),
-        F.element_at("__evs", F.col("__z.__st") + 1)["__ts"].alias("t_start"),
-        F.element_at("__evs", F.col("__z.__st") + F.col("__z.__ml"))["__ts"].alias(
-            "t_end"
-        ),
-    )
-    return out

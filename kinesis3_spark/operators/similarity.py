@@ -445,19 +445,12 @@ def fetch_pq_sample(emb: DataFrame) -> np.ndarray:
     return np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
 
 
-def train_pq_codebooks(
-    emb: DataFrame,
-    k: int = 64,
-    iters: int = 8,
-    X: np.ndarray | None = None,
-) -> np.ndarray:
-    """Per-subspace Lloyd k-means codebooks over the bounded sample
-    (pass a prefetched `X` from fetch_pq_sample to train several
-    codebooks — e.g. the K=1 baseline — without re-collecting).
+def train_pq_codebooks(X: np.ndarray, k: int = 64, iters: int = 8) -> np.ndarray:
+    """Per-subspace Lloyd k-means codebooks over the bounded sample `X`
+    (fetch_pq_sample's, fetched once to train several codebooks — e.g.
+    the K=1 baseline — without re-collecting).
     Returns (PQ_M, k, dim/PQ_M) float64. Empty clusters keep their previous
     centroid (standard Lloyd degeneracy handling, deterministic)."""
-    if X is None:
-        X = fetch_pq_sample(emb)
     n, dim = X.shape
     assert dim % PQ_M == 0, (dim, PQ_M)
     sub = dim // PQ_M
@@ -508,9 +501,7 @@ def train_ivfpq(emb: DataFrame) -> tuple[np.ndarray, np.ndarray]:
                 c = members.mean(axis=0)
                 C[j] = c / np.linalg.norm(c)
     residuals = Xn - C[np.argmax(Xn @ C.T, axis=1)]
-    return C, train_pq_codebooks(
-        emb, k=IVFPQ_CODEWORDS, iters=IVFPQ_ITERS, X=residuals
-    )
+    return C, train_pq_codebooks(residuals, k=IVFPQ_CODEWORDS, iters=IVFPQ_ITERS)
 
 
 def ivfpq_encode(
@@ -636,7 +627,7 @@ def cosine_topk_ivfpq(
     queries: DataFrame,
     index: tuple[np.ndarray, np.ndarray],
     enc: DataFrame,
-    k: int = 5,
+    k: int,
     nprobe: int = 4,
     scores: DataFrame | None = None,
 ) -> DataFrame:
@@ -663,7 +654,7 @@ def cosine_topk_ivfpq_rerank(
     queries: DataFrame,
     index: tuple[np.ndarray, np.ndarray],
     enc: DataFrame,
-    k: int = 5,
+    k: int,
     pair_predicate=None,
     carry: tuple[str, ...] = (),
     scores: DataFrame | None = None,

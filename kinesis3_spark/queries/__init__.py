@@ -26,14 +26,13 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
 
 
-def query(name: str, oracle: str | None = None):
-    """Register a query; `oracle=None` marks it rows-only (non-SQL ops)."""
+def query(name: str, oracle: str):
+    """Register a query with the DuckDB SQL its result must match."""
 
     def deco(fn):
         assert name not in QUERIES, f"duplicate query name {name!r}"
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
+        ORACLE[name] = oracle
         return fn
 
     return deco

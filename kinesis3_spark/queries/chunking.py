@@ -20,21 +20,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
+from .decontam import _DUCK_TOKS
 from .relational import _t
 from . import query
 
 _CHUNK = 64
 _STRIDE = 48
 
-# DuckDB twin of functions.text.tokenize (same regex, same lower/strip).
-_TOKS = "string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$', '', 'g'), '\\s+')"
-
-
 @query(
     "llm_chunk_documents",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKS} AS t FROM documents
+      SELECT doc_id, {_DUCK_TOKS} AS t FROM documents
     ),
     chunks AS (
       SELECT doc_id, t, unnest(range(0, len(t), {_STRIDE})) AS s

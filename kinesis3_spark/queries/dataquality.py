@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tmpdirs
+from .decontam import _DUCK_TOKS
 from .relational import _t
 from . import query
 
@@ -234,29 +235,15 @@ PSI_TOP_K = 20
 PSI_SMOOTH = 0.5  # add-k on bucket counts: a source missing a top token
 # (or the ref missing '(other)') still yields a finite term
 
-# mirrors functions.text.tokenize (regexp edge-strip, not spaces-only trim)
-_DQ_TOKS = "string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$', '', 'g'), '\\s+')"
-
-
-def token_drift_psi(docs: DataFrame, cache_key: str | None = None) -> DataFrame:
-    """Per-source Population Stability Index of the token distribution
-    against PSI_REF_SOURCE: PSI = sum_bucket (p_s - p_ref) * ln(p_s / p_ref)
-    over the top-K (PSI_TOP_K) reference tokens + '(other)', add-k smoothed.
-    PSI(ref) = 0 by construction — a free self-check row.
+def psi_bucket_counts(docs: DataFrame) -> DataFrame:
+    """The persisted (source, bucket, c) token counts token_drift_psi
+    reads: the bins are the top-K (PSI_TOP_K) PSI_REF_SOURCE tokens +
+    '(other)'.
 
     Plan: TakeOrderedAndProject picks the K bin tokens (never a full
     sort), the bin set broadcasts into the token stream (model config,
-    bounded by construction), ONE map-side-combined (source, bucket)
-    aggregate crosses the wire, and everything downstream operates on the
-    persisted |sources| x (K+1) bucket table — re-deriving ref counts,
-    totals, and the bucket grid from it costs nothing and never rescans
-    the corpus.
-
-    With `cache_key` (the path `docs` was read from) the bucket table is
-    memoized per cache_key, so repeated invocations
-    reuse ONE persisted handle instead of stacking a new one per call
-    (r12 advice fix); it is rebuilt when that path changes on disk, and
-    `docs` is not read on a hit."""
+    bounded by construction) and ONE map-side-combined (source, bucket)
+    aggregate crosses the wire into a |sources| x (K+1) table."""
     from ..functions import text as T
 
     toks = docs.select("source", F.explode(T.tokenize("text")).alias("tok"))
@@ -269,19 +256,21 @@ def token_drift_psi(docs: DataFrame, cache_key: str | None = None) -> DataFrame:
         .select("tok", F.lit(1).alias("is_top"))
     )
     bucket = F.when(F.col("is_top") == 1, F.col("tok")).otherwise(F.lit("(other)"))
+    return (
+        toks.join(F.broadcast(ref_top), "tok", "left")
+        .groupBy("source", bucket.alias("bucket"))
+        .agg(F.count("*").alias("c"))
+        .persist()  # |sources| x (K+1) rows, bounded by construction
+    )
 
-    def build(_scratch):
-        return (
-            toks.join(F.broadcast(ref_top), "tok", "left")
-            .groupBy("source", bucket.alias("bucket"))
-            .agg(F.count("*").alias("c"))
-            .persist()  # |sources| x (K+1) rows, bounded by construction
-        )
 
-    if cache_key is None:
-        counts = build(None)
-    else:
-        counts = tmpdirs.memo("psi_buckets", cache_key, build)
+def token_drift_psi(counts: DataFrame) -> DataFrame:
+    """Per-source Population Stability Index of the token distribution
+    against PSI_REF_SOURCE from its psi_bucket_counts: PSI = sum_bucket
+    (p_s - p_ref) * ln(p_s / p_ref), add-k smoothed. PSI(ref) = 0 by
+    construction — a free self-check row. Ref counts, totals and the
+    bucket grid all derive from the bucket table: nothing here rescans
+    the corpus."""
     totals = counts.groupBy("source").agg(F.sum("c").alias("n_tokens"))
     buckets = counts.select("bucket").distinct()
     ref = (
@@ -316,7 +305,7 @@ def token_drift_psi(docs: DataFrame, cache_key: str | None = None) -> DataFrame:
 @query(
     "dq_token_drift_psi",
     oracle=f"""
-    WITH toks AS (SELECT source, unnest({_DQ_TOKS}) AS tok FROM documents),
+    WITH toks AS (SELECT source, unnest({_DUCK_TOKS}) AS tok FROM documents),
     ref_top AS (
       SELECT tok FROM toks WHERE source = '{PSI_REF_SOURCE}'
       GROUP BY tok ORDER BY count(*) DESC, tok LIMIT {PSI_TOP_K}
@@ -360,5 +349,11 @@ def dq_token_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.1-0.25 drifting, >0.25 shifted — the synthetic word-soup sources
     land near 0, with the reference row exactly 0 as a self-check).
     Repeated invocations share one persisted bucket table per sf_dir via
-    the keyed registry (no cache accumulation in a long-lived session)."""
-    return token_drift_psi(_t(spark, sf_dir, "documents"), cache_key=sf_dir)
+    the keyed registry (no cache accumulation in a long-lived session);
+    it is rebuilt when the corpus changes on disk, and the documents are
+    not read on a hit."""
+    docs = _t(spark, sf_dir, "documents")
+    counts = tmpdirs.memo(
+        "psi_buckets", sf_dir, lambda _scratch: psi_bucket_counts(docs)
+    )
+    return token_drift_psi(counts)

@@ -21,12 +21,10 @@ from pyspark.sql import functions as F
 
 from .. import tmpdirs
 from ..operators import dedup as D
+from .decontam import _DUCK_TOKS
 from .relational import _t
 from . import query
 
-# mirrors functions.text.tokenize: regexp edge-strip (NOT trim — that's
-# spaces-only in both engines), then whitespace split
-_TOKS = "string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$', '', 'g'), '\\s+')"
 # DuckDB trigrams: list slices are 1-based inclusive, range() end-exclusive →
 # range(1, len-1) x toks[i:i+2] == Spark sequence(1, size-2) x slice(toks,i,3).
 _GRAMS = (
@@ -42,7 +40,7 @@ _GRAMS = (
 # invalidate the existing queries' recorded source hashes.
 _CLOSURE_CTES = f"""WITH RECURSIVE g AS (
       SELECT doc_id, {_GRAMS} AS grams
-      FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)
+      FROM (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents)
     ),
     pairs AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
@@ -67,7 +65,7 @@ _CLOSURE_CTES = f"""WITH RECURSIVE g AS (
     oracle=f"""
     WITH c AS (
       SELECT doc_id,
-             md5(array_to_string(list_sort(list_distinct({_TOKS})), ' ')) AS fp
+             md5(array_to_string(list_sort(list_distinct({_DUCK_TOKS})), ' ')) AS fp
       FROM documents
     )
     SELECT fp,
@@ -85,7 +83,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_drop_exact",
     oracle=f"""
     WITH c AS (
-      SELECT *, md5(array_to_string(list_sort(list_distinct({_TOKS})), ' ')) AS fp
+      SELECT *, md5(array_to_string(list_sort(list_distinct({_DUCK_TOKS})), ' ')) AS fp
       FROM documents
     )
     SELECT doc_id, lang, source, n_chars FROM c
@@ -100,7 +98,7 @@ def dedup_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 _JACCARD_ORACLE = f"""
     WITH g AS (
       SELECT doc_id, {_GRAMS} AS grams
-      FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)
+      FROM (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents)
     )
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            len(list_intersect(a.grams, b.grams))::BIGINT AS inter_size,
@@ -242,7 +240,7 @@ _BIT_ASSEMBLE = " + ".join(
     "dedup_simhash_clusters",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest(list_distinct({_TOKS})) AS t FROM documents
+      SELECT doc_id, unnest(list_distinct({_DUCK_TOKS})) AS t FROM documents
     ),
     h AS (
       SELECT doc_id, ('0x' || substr(md5(t), 1, 15))::BIGINT AS hv FROM tok
@@ -326,7 +324,7 @@ def dedup_drop_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _INCR_ORACLE = f"""
     WITH k AS (
-      SELECT *, md5(array_to_string(list_sort(list_distinct({_TOKS})), ' ')) AS fp
+      SELECT *, md5(array_to_string(list_sort(list_distinct({_DUCK_TOKS})), ' ')) AS fp
       FROM documents
     ),
     hist AS (SELECT DISTINCT fp FROM k WHERE source = 'src0'),

@@ -15,11 +15,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from .decontam import _DUCK_TOKS
 from .relational import _t
 from . import query
 
-# mirrors functions.text.tokenize (regexp edge-strip, not spaces-only trim)
-_TOKS = "string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$', '', 'g'), '\\s+')"
 _BPE_RE = r"\w+|[^\w\s]"
 
 
@@ -27,10 +26,10 @@ _BPE_RE = r"\w+|[^\w\s]"
     "text_token_stats",
     oracle=f"""
     SELECT doc_id,
-           len({_TOKS})::BIGINT AS token_cnt,
-           len(list_distinct({_TOKS}))::BIGINT AS distinct_tokens,
+           len({_DUCK_TOKS})::BIGINT AS token_cnt,
+           len(list_distinct({_DUCK_TOKS}))::BIGINT AS distinct_tokens,
            len(regexp_extract_all(text, '{_BPE_RE}'))::BIGINT AS bpe_token_cnt,
-           len(list_filter({_TOKS},
+           len(list_filter({_DUCK_TOKS},
                t -> list_contains({list(T.STOPWORDS)}, t)))::BIGINT AS stopword_hits
     FROM documents
     """,
@@ -54,7 +53,7 @@ def _lang_case_sql() -> str:
     """DuckDB mirror of T.lang_id's deterministic fold (argmax, ties → first
     alphabetically, 'und' when no marker hits)."""
     hits = {
-        lang: f"len(list_filter({_TOKS}, t -> list_contains({list(m)}, t)))"
+        lang: f"len(list_filter({_DUCK_TOKS}, t -> list_contains({list(m)}, t)))"
         for lang, m in sorted(T.LANG_MARKERS.items())
     }
     best, best_hits = "'und'", "0"
@@ -114,7 +113,7 @@ def quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH g AS (
       SELECT unnest(list_transform(range(1, len(toks) - 1),
                     i -> array_to_string(toks[i:i+2], ' '))) AS gram
-      FROM (SELECT {_TOKS} AS toks FROM documents)
+      FROM (SELECT {_DUCK_TOKS} AS toks FROM documents)
     )
     SELECT gram, count(*)::BIGINT AS n
     FROM g GROUP BY gram
@@ -136,7 +135,7 @@ def ngram_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_repetition_signals",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_TOKS} AS toks FROM documents WHERE len({_TOKS}) >= 3
+      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents WHERE len({_DUCK_TOKS}) >= 3
     ),
     g2 AS (
       SELECT doc_id, unnest(list_transform(range(1, len(toks)),
@@ -251,7 +250,7 @@ def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tf AS (
       SELECT t AS term, count(*)::BIGINT AS cnt
-      FROM (SELECT unnest({_TOKS}) AS t FROM documents) GROUP BY 1
+      FROM (SELECT unnest({_DUCK_TOKS}) AS t FROM documents) GROUP BY 1
     ),
     ranked AS (
       SELECT term, cnt,
@@ -309,7 +308,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_token_rarity_score",
     oracle=f"""
-    WITH t AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
+    WITH t AS (SELECT doc_id, unnest({_DUCK_TOKS}) AS tok FROM documents),
     h AS (
       SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS hv FROM t
     ),
@@ -361,7 +360,7 @@ def token_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "llm_bpe_first_merges",
     oracle=f"""
     WITH words AS (
-      SELECT unnest({_TOKS}) AS w FROM documents
+      SELECT unnest({_DUCK_TOKS}) AS w FROM documents
     ),
     freq AS (
       SELECT w, count(*)::BIGINT AS f FROM words
@@ -462,7 +461,7 @@ _BPE_STEP_SQL = """
 
 _BPE_BASE_CTES = f"""
     words AS (
-      SELECT unnest({_TOKS}) AS w FROM documents
+      SELECT unnest({_DUCK_TOKS}) AS w FROM documents
     ),
     freq AS (
       SELECT w, count(*)::BIGINT AS f FROM words

@@ -42,11 +42,9 @@ from pyspark.sql import functions as F
 from .. import tmpdirs
 from ..functions import text as T
 from ..sources import read_parquet
+from .decontam import _DUCK_TOKS
 from .relational import _t
 from . import query
-
-# mirrors functions.text.tokenize (regexp edge-strip, not spaces-only trim)
-_TOKS = "string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$', '', 'g'), '\\s+')"
 
 # LM hyperparameters: trusted slice, add-k constant, keep threshold.
 # 3.64 splits the synthetic corpus ~50/50 at every test SF with the nearest
@@ -151,30 +149,18 @@ def backoff_model_for(spark: SparkSession, sf_dir: str):
 
     def build(_scratch):
         docs = _t(spark, sf_dir, "documents")
-        tg, _bg2, _ug2, totals = train_backoff_lm(docs, bg_ug=(bg, ug))
+        tg, totals = train_backoff_lm(docs, ug)
         return tg.persist(), totals
 
     tg, totals = tmpdirs.memo("lm_trigram", sf_dir, build)
     return tg, bg, ug, totals
 
 
-def score_perplexity(docs: DataFrame) -> DataFrame:
-    """Per-document average negative log-likelihood (nats/bigram) under the
-    add-k bigram LM trained on LM_TRAIN_SOURCE, for every doc OUTSIDE the
-    training slice. avg NLL is monotone with perplexity (ppl = exp(nll));
-    the exp is left to the caller so the filter threshold stays in
-    ulp-stable log space."""
-    bg_counts, ug_counts, vocab = train_bigram_lm(docs)
-    return score_docs_with_lm(
-        docs.where(F.col("source") != LM_TRAIN_SOURCE), bg_counts, ug_counts, vocab
-    )
-
-
 # Shared oracle CTE: the DuckDB twin of train_bigram_lm + score_docs_with_lm
 # (both registered LM queries derive from it, so the model definition can
 # never drift between the batch filter and the streaming admission gate).
 _SCORED_CTE = f"""
-    WITH toksv AS (SELECT doc_id, source, {_TOKS} AS t FROM documents),
+    WITH toksv AS (SELECT doc_id, source, {_DUCK_TOKS} AS t FROM documents),
     bigrams AS (
       SELECT doc_id, source, t[i + 1] AS prev, t[i + 2] AS w
       FROM toksv, UNNEST(generate_series(0, greatest(len(t) - 2, -1))) AS u(i)
@@ -278,17 +264,12 @@ def _trigram_triples(col) -> F.Column:
     return T._let(T.tokenize(col), build)
 
 
-def train_backoff_lm(docs: DataFrame, bg_ug=None):
-    """(tg_counts, bg_counts, ug_counts, totals) from the trusted slice
-    LM_TRAIN_SOURCE.
+def train_backoff_lm(docs: DataFrame, ug_counts: DataFrame):
+    """(tg_counts, totals) from the trusted slice LM_TRAIN_SOURCE.
     totals is a 1-row (n_tokens, v) aggregate joined back by broadcast.
-    The bi/unigram tables are train_bigram_lm's verbatim (one model
-    definition across the bigram and trigram gates); pass ``bg_ug`` to
-    reuse already-built (e.g. persisted-registry) handles."""
-    if bg_ug is not None:
-        bg_counts, ug_counts = bg_ug
-    else:
-        bg_counts, ug_counts, _vocab = train_bigram_lm(docs)
+    The bi/unigram tiers are train_bigram_lm's verbatim (one model
+    definition across the bigram and trigram gates): the caller passes
+    its already-built unigram counts."""
     train = docs.where(F.col("source") == LM_TRAIN_SOURCE)
     tg_counts = (
         train.select(F.explode(_trigram_triples(F.col("text"))).alias("tg"))
@@ -302,7 +283,7 @@ def train_backoff_lm(docs: DataFrame, bg_ug=None):
     totals = ug_counts.agg(
         F.sum("c_ug").alias("n_tokens"), F.count("*").alias("v")
     )
-    return tg_counts, bg_counts, ug_counts, totals
+    return tg_counts, totals
 
 
 def score_docs_with_backoff_lm(
@@ -373,18 +354,8 @@ def score_docs_with_backoff_lm(
     )
 
 
-def score_perplexity_trigram(docs: DataFrame) -> DataFrame:
-    """Per-document avg negative log-score (nats/trigram) under the
-    stupid-backoff trigram LM trained on LM_TRAIN_SOURCE, for every doc
-    outside the training slice."""
-    tg, bg, ug, totals = train_backoff_lm(docs)
-    return score_docs_with_backoff_lm(
-        docs.where(F.col("source") != LM_TRAIN_SOURCE), tg, bg, ug, totals
-    )
-
-
 _TRI_SCORED_CTE = f"""
-    WITH toksv AS (SELECT doc_id, source, {_TOKS} AS t FROM documents),
+    WITH toksv AS (SELECT doc_id, source, {_DUCK_TOKS} AS t FROM documents),
     trigrams AS (
       SELECT doc_id, source, t[i + 1] AS w1, t[i + 2] AS w2, t[i + 3] AS w3
       FROM toksv, UNNEST(generate_series(0, greatest(len(t) - 3, -1))) AS u(i)
@@ -548,7 +519,7 @@ def _lexicon_values_sql() -> str:
     "llm_domain_tagging",
     oracle=f"""
     WITH lexicon(term, domain) AS (VALUES {_lexicon_values_sql()}),
-    toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
+    toks AS (SELECT doc_id, unnest({_DUCK_TOKS}) AS term FROM documents),
     hits AS (
       SELECT doc_id, domain, count(*) AS hits
       FROM toks JOIN lexicon USING (term) GROUP BY 1, 2
@@ -603,7 +574,7 @@ def _stream_ppl_materialize(spark: SparkSession, sf_dir: str) -> str:
     """Drain the document stream through the LM admission gate once per
     corpus; returns the admitted-docs parquet path."""
     from ..streaming import stream_documents
-    from ..streaming.run import await_or_raise
+    from ..streaming.run import drain
 
     def build(scratch):
         out = scratch + "/admitted"
@@ -619,14 +590,7 @@ def _stream_ppl_materialize(spark: SparkSession, sf_dir: str) -> str:
             )
             write_admitted_batch(scored.where(F.col("nll") <= LM_NLL_KEEP), out, batch_id)
 
-        q = (
-            stream_documents(spark, sf_dir)
-            .writeStream.foreachBatch(admit_batch)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q)
+        drain(stream_documents(spark, sf_dir), admit_batch, ck)
         return out
 
     return tmpdirs.memo("stream_ppl", sf_dir, build)

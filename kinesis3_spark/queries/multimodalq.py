@@ -1,8 +1,7 @@
 """Multimodal queries over synthesized binary columns (the corpus has no
 media table, so payloads are derived deterministically from `documents`).
-The metadata-only pass is oracle-checked; the decode path is rows-only
-(pixel decoding is not SQL-expressible) and pytest-verified in
-tests/test_multimodal.py."""
+Every query is oracle-checked like the rest of the registry; the decode
+operators are also pytest-verified in tests/test_multimodal.py."""
 
 from __future__ import annotations
 
@@ -580,7 +579,7 @@ def image_phash_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stream_phash_materialize(spark: SparkSession, sf_dir: str) -> str:
     from ..streaming import stream_documents
-    from ..streaming.run import await_or_raise
+    from ..streaming.run import drain
 
     def build(scratch):
         out = scratch + "/admitted"
@@ -617,14 +616,7 @@ def _stream_phash_materialize(spark: SparkSession, sf_dir: str) -> str:
                 .parquet(out)
             )
 
-        q = (
-            stream_documents(spark, sf_dir)
-            .writeStream.foreachBatch(gate_batch)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q)
+        drain(stream_documents(spark, sf_dir), gate_batch, ck)
         return out
 
     return tmpdirs.memo("stream_ph", sf_dir, build)

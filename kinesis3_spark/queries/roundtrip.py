@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import portable_hash60
 from ..sources import load_table, read_parquet
-from ..streaming.run import await_or_raise
+from ..streaming.run import await_or_raise, drain
 from ..streaming.sources import stream_events
 from . import query
 
@@ -861,7 +861,7 @@ def _txn_upsert_table(spark: SparkSession, sf_dir: str) -> str:
     """Drive the manifest-transactional upsert once per corpus:
     events land as a 3-file directory, a file stream over it with
     maxFilesPerTrigger=1 yields three sequential micro-batches, and each
-    batch is one atomic manifest commit (sinks/txn.upsert_manifest_stream)
+    batch is one atomic manifest commit (sinks/txn.upsert_manifest_txn)
     into a user-keyed table — so the final table is the product of
     REPEATED transactional merges, not one lucky write. Key = user_id,
     last-writer-wins by the (ts, event_id) struct: a total order, so the
@@ -869,7 +869,7 @@ def _txn_upsert_table(spark: SparkSession, sf_dir: str) -> str:
     rows across batches."""
 
     def build(base):
-        from ..sinks.txn import upsert_manifest_stream
+        from ..sinks.txn import upsert_manifest_txn
 
         landing, table = base + "/landing", base + "/users"
         ev = load_table(spark, sf_dir, "events")
@@ -880,14 +880,14 @@ def _txn_upsert_table(spark: SparkSession, sf_dir: str) -> str:
             .parquet(landing)
             .withColumn("__ord", F.struct("ts", "event_id"))
         )
-        q = upsert_manifest_stream(
+        # a replayed batch is value-idempotent for replace-mode LWW
+        drain(
             sdf,
-            table,
-            checkpoint=base + "/ck",
-            key="user_id",
-            order_col="__ord",
+            lambda b, _id: upsert_manifest_txn(
+                b.sparkSession, b, table, "user_id", "__ord"
+            ),
+            base + "/ck",
         )
-        await_or_raise(q)
         return table
 
     return tmpdirs.memo("txn", sf_dir, build)
@@ -1524,18 +1524,14 @@ def txn_deletion_vector_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _txn_exactly_once_table(spark: SparkSession, sf_dir: str) -> str:
     """Append-mode ingest of events through foreachBatch in three
-    micro-batches (sinks/txn.append_manifest_stream), then a simulated
-    checkpoint-recovery REPLAY of the final batch: append_snapshot is
+    micro-batches (sinks/txn.append_snapshot fenced by batch_id), then a
+    simulated checkpoint-recovery REPLAY of the final batch: append_snapshot is
     re-invoked with the same (app_id, batch_id) and a non-empty payload.
     The manifest's app watermark must skip it — if the fence fails, the
     table double-counts and the registered query's parity breaks."""
 
     def build(base):
-        from ..sinks.txn import (
-            append_manifest_stream,
-            append_snapshot,
-            read_manifest,
-        )
+        from ..sinks.txn import STREAM_BUCKETS, append_snapshot, read_manifest
 
         landing, table = base + "/landing", base + "/events_log"
         ev = load_table(spark, sf_dir, "events")
@@ -1545,14 +1541,14 @@ def _txn_exactly_once_table(spark: SparkSession, sf_dir: str) -> str:
             .option("maxFilesPerTrigger", 1)
             .parquet(landing)
         )
-        q = append_manifest_stream(
+        drain(
             sdf,
-            table,
-            checkpoint=base + "/ck",
-            app_id="events-ingest",
-            key="user_id",
+            lambda b, batch_id: append_snapshot(
+                b, table, "user_id", STREAM_BUCKETS,
+                app_id="events-ingest", app_version=batch_id,
+            ),
+            base + "/ck",
         )
-        await_or_raise(q)
         man = read_manifest(table)
         last_v = man["apps"]["events-ingest"]
         # the replay: same app, same batch version, real rows
@@ -1677,14 +1673,13 @@ def _txn_cdc_merge_table(spark: SparkSession, sf_dir: str) -> str:
         newer = (
             "src_ts > ts OR (src_ts = ts AND src_event_id > event_id)"
         )
-        q = merge_manifest_stream(
+        merge_manifest_stream(
             sdf, table, checkpoint=base + "/ck", app_id="user-state-cdc",
             key="user_id",
             matched=[{"condition": newer, "update": "all"}],
             not_matched=[{"insert": "all"}],
             order_col="ts", order_tiebreak=["event_id"],
         )
-        await_or_raise(q)
         man = read_manifest(table)
         last_v = man["apps"]["user-state-cdc"]
         # checkpoint-recovery replay: same app + batch version, real

@@ -572,12 +572,12 @@ def llm_exact_substring_incremental(
 
 
 # one memoized materialization per corpus: the streaming drain writes its
-# cleaned batches once; re-runs read the parquet back (every availableNow
-# drain goes through await_or_raise, never a partial)
+# cleaned batches once; re-runs read the parquet back (a drain that does
+# not finish raises, never leaves a partial)
 def _stream_es_materialize(spark: SparkSession, sf_dir: str) -> str:
     from ..operators.dedup import decontaminate_spans
     from ..streaming import stream_documents
-    from ..streaming.run import await_or_raise
+    from ..streaming.run import drain
 
     def build(scratch):
         out = scratch + "/cleaned"
@@ -597,14 +597,7 @@ def _stream_es_materialize(spark: SparkSession, sf_dir: str) -> str:
                 .parquet(out)
             )
 
-        q = (
-            stream_documents(spark, sf_dir)
-            .writeStream.foreachBatch(cut_batch)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q)
+        drain(stream_documents(spark, sf_dir), cut_batch, ck)
         return out
 
     return tmpdirs.memo("stream_es", sf_dir, build)

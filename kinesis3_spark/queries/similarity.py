@@ -671,8 +671,8 @@ def embed_pq_reconstruction_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     # one bounded sample job feeds BOTH trainings (review fix r6)
     X = S.fetch_pq_sample(emb)
-    books = S.train_pq_codebooks(emb, k=64, X=X)
-    base = S.train_pq_codebooks(emb, k=1, iters=2, X=X)
+    books = S.train_pq_codebooks(X, k=64)
+    base = S.train_pq_codebooks(X, k=1, iters=2)
     # OPTIMIZATION_r14 (guide §4.1): the k=1 baseline error is scored in
     # the SAME Arrow pass (pq_encode's `baseline` column) — previously a
     # whole second decode+encode corpus pass fed the baseline aggregate.

@@ -532,8 +532,7 @@ def _continuous_rollup_table(spark: SparkSession, sf_dir: str) -> str:
         old = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "4")
         try:
-            q = continuous_rollup(rollup_events(sdf), target, ck)
-            await_or_raise(q, 300)
+            continuous_rollup(rollup_events(sdf), target, ck)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", old)
         return target

@@ -61,7 +61,8 @@ from pyspark.sql import functions as F
 from .. import tmpdirs
 from ..functions import text as T
 from . import query
-from .llmtext import _TOKS, _bpe_train
+from .decontam import _DUCK_TOKS
+from .llmtext import _bpe_train
 from .relational import _t
 
 LMAX = 4          # max piece length considered (SentencePiece default-ish)
@@ -246,7 +247,7 @@ def _encode_k(wf: DataFrame, counts: dict[str, int]) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _BASE_CTES = f"""
-    uwords AS (SELECT unnest({_TOKS}) AS w FROM documents),
+    uwords AS (SELECT unnest({_DUCK_TOKS}) AS w FROM documents),
     ufreq AS MATERIALIZED (
       SELECT row_number() OVER (ORDER BY w) AS wid, w, f, n FROM (
         SELECT w, count(*)::BIGINT AS f, length(w)::INT AS n FROM uwords
@@ -482,7 +483,7 @@ from .llmtext import _BPE_BASE_CTES, _BPE_ROUNDS, _bpe_steps_sql  # noqa: E402
     {_train_ctes()},
     {_ENCODE_CTES},
     src_words AS (
-      SELECT source, unnest({_TOKS}) AS w FROM documents
+      SELECT source, unnest({_DUCK_TOKS}) AS w FROM documents
     ),
     src_freq AS (
       SELECT source, w, count(*)::BIGINT AS f FROM src_words

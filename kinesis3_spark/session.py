@@ -63,7 +63,7 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def get_spark(app_name: str = "kinesis3-spark") -> SparkSession:
+def get_spark(app_name: str) -> SparkSession:
     """Create (or get) a local SparkSession tuned for this engine."""
     cpus = default_parallelism()
     builder = (

@@ -58,13 +58,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import portable_hash60
+from ..streaming.run import drain
 from .upsert import _dedup_last
 
 MANIFEST = "_MANIFEST.json"
 _BUCKET_COL = "__bucket"
 _EPOCH0 = _dt.datetime(1970, 1, 1)
 _COMMIT_ATTEMPTS = 5  # OCC budget: a commit that loses this many races raises
-_STREAM_BUCKETS = 4  # buckets of a table the streaming sinks create
+STREAM_BUCKETS = 4  # buckets of a table a streaming drain creates
 
 
 class CommitConflict(RuntimeError):
@@ -536,13 +537,10 @@ class ProtocolUnsupported(ValueError):
 # committing on top of a newer table (Delta gates this with writer
 # features). _publish_manifest refuses when the CURRENT manifest carries
 # keys outside this closed set; reads stay unaffected (a key that
-# changes read semantics must also appear in reader_features). "op" is
-# the per-commit record an earlier build wrote; it stays known so such a
-# table still takes commits (_publish_manifest drops it).
+# changes read semantics must also appear in reader_features).
 _KNOWN_MANIFEST_KEYS = frozenset({
     "epoch", "n_buckets", "stats_cols", "bloom_cols", "schema", "apps",
-    "column_mapping", "dropped_cols", "generated_cols", "files", "op",
-    "protocol",
+    "column_mapping", "dropped_cols", "generated_cols", "files", "protocol",
 })
 
 
@@ -871,7 +869,6 @@ def _publish_manifest(path: str, epoch: int, payload: str) -> None:
                 "upgrade before writing"
             )
     d = json.loads(payload)
-    d.pop("op", None)  # an earlier build's per-commit record, never carried
     d["protocol"] = {
         "min_reader_version": _READER_VERSION,
         "reader_features": _required_reader_features(d),
@@ -1052,6 +1049,35 @@ def _repair_claim_residue(path: str, epoch: int, vpath: str) -> None:
         os.close(rfd)
 
 
+def _commit_loop(path: str, attempt):
+    """The optimistic-commit protocol every writer shares: run
+    ``attempt(man)`` on the current manifest (None for a not-yet-created
+    table) and return its result. An attempt computes everything from
+    ``man`` and publishes at epoch ``man.epoch + 1``; on CommitConflict
+    it RE-RUNS from the winner's snapshot (the inputs must be the
+    now-current table, not the one read before losing the race), up to
+    `_COMMIT_ATTEMPTS` times, after which the last conflict is raised."""
+    last: CommitConflict | None = None
+    for _attempt in range(_COMMIT_ATTEMPTS):
+        man = read_manifest(path)
+        try:
+            return attempt(man)
+        except CommitConflict as exc:
+            last = exc  # a losing attempt's files are never referenced
+    raise last
+
+
+def _publish_next(path: str, man: dict, **changes) -> int:
+    """Metadata-only commit: publish ``man`` with ``changes`` applied as
+    epoch ``man.epoch + 1`` — the same data files, a new descriptor.
+    Returns the epoch."""
+    epoch = man["epoch"] + 1
+    _publish_manifest(
+        path, epoch, json.dumps({**man, **changes, "epoch": epoch}, indent=1)
+    )
+    return epoch
+
+
 _UPSERT_BUCKETS = 8
 
 
@@ -1059,8 +1085,8 @@ def upsert_manifest_txn(
     spark: SparkSession,
     batch: DataFrame,
     path: str,
-    key: str = "id",
-    order_col: str | None = None,
+    key: str,
+    order_col: str,
 ) -> int:
     """One transactional merge of `batch` into the manifest table —
     upsert_parquet's replace-mode merge semantics (last-writer-wins by
@@ -1074,19 +1100,14 @@ def upsert_manifest_txn(
          every untouched file, one atomic manifest swap.
 
     Readers through read_snapshot never observe the intermediate state.
-    Returns the committed epoch. On a multi-writer CommitConflict the
-    whole merge RE-RUNS from the winner's snapshot (optimistic
-    concurrency — the merge inputs must be the now-current table, not
-    the one read before losing the race), up to `_COMMIT_ATTEMPTS` times.
-    The reader/writer pair is exercised mid-commit in
+    Returns the committed epoch; a lost race re-runs the whole merge
+    (_commit_loop). The reader/writer pair is exercised mid-commit in
     tests/test_sinks.py (partial files + stale tmp manifests planted; a
     failed swap leaves the old snapshot intact); two-thread interleaved
     upserts converge in tests/test_txn_concurrency.py."""
     os.makedirs(path, exist_ok=True)
-    order = order_col or key
-    last: CommitConflict | None = None
-    for _attempt in range(_COMMIT_ATTEMPTS):
-        man = read_manifest(path)
+
+    def attempt(man):
         # layout + stats/bloom config are fixed at table creation
         # (commit_snapshot carries them); a table created here has
         # _UPSERT_BUCKETS buckets and neither
@@ -1107,16 +1128,14 @@ def upsert_manifest_txn(
         gcols = _generated(man) if man is not None else {}
         gdrop = [
             c for c in gcols
-            if c not in batch.columns and c not in (key, order)
+            if c not in batch.columns and c not in (key, order_col)
         ]
         new = batch.withColumn("__is_new", F.lit(1))
         current = read_snapshot(spark, path, buckets=touched)
         if current is not None and gdrop:
             current = current.drop(*gdrop)
         if current is None:
-            merged = _dedup_last(
-                new, key, order, prefer="new"
-            )
+            merged = _dedup_last(new, key, order_col, prefer="new")
         else:
             # allowMissingColumns = additive schema evolution: a batch
             # with a NEW column widens the table (old rows read back NULL
@@ -1127,7 +1146,7 @@ def upsert_manifest_txn(
                     new, allowMissingColumns=True
                 ),
                 key,
-                order,
+                order_col,
                 prefer="new",
             )
         carry = [
@@ -1135,19 +1154,17 @@ def upsert_manifest_txn(
             for e in (man["files"] if man else [])
             if e["bucket"] not in touched
         ]
-        try:
-            return commit_snapshot(
-                merged, path, key, n_buckets, base_man=man, carry=carry
-            )
-        except CommitConflict as exc:
-            last = exc
-    raise last
+        return commit_snapshot(
+            merged, path, key, n_buckets, base_man=man, carry=carry
+        )
+
+    return _commit_loop(path, attempt)
 
 
 def append_snapshot(
     batch: DataFrame,
     path: str,
-    key: str = "id",
+    key: str,
     n_buckets: int = 8,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
@@ -1173,34 +1190,31 @@ def append_snapshot(
     commit mode a replay genuinely corrupts — the same rows land twice —
     so the manifest records each application's high-water version
     (Delta's txnAppId/txnVersion) and a commit at or below it is SKIPPED,
-    returning the current epoch unchanged. The check re-runs inside the
-    retry loop, so a writer that loses the OCC race to its own earlier
+    returning the current epoch unchanged. The check re-runs in every
+    attempt, so a writer that loses the OCC race to its own earlier
     replay (or a concurrent duplicate task) converges to the skip."""
     os.makedirs(path, exist_ok=True)
-    last: CommitConflict | None = None
-    for _attempt in range(_COMMIT_ATTEMPTS):
-        man = read_manifest(path)
-        if (
-            app_id is not None
-            and man is not None
-            and (man.get("apps") or {}).get(app_id, -1) >= app_version
-        ):
-            return man["epoch"]  # replayed batch: already applied
-        if man is not None:
-            n_buckets = man["n_buckets"]
-            stats_cols = man.get("stats_cols") or None
-            bloom_cols = man.get("bloom_cols") or None
-        carry = list(man["files"]) if man else []
-        try:
+
+    def attempt(man):
+        if man is None:
             return commit_snapshot(
-                batch, path, key, n_buckets, base_man=man, carry=carry,
+                batch, path, key, n_buckets, base_man=None, carry=[],
                 stats_cols=stats_cols, bloom_cols=bloom_cols,
                 app_id=app_id, app_version=app_version,
                 generated_cols=generated_cols,
             )
-        except CommitConflict as exc:
-            last = exc
-    raise last
+        if (
+            app_id is not None
+            and (man.get("apps") or {}).get(app_id, -1) >= app_version
+        ):
+            return man["epoch"]  # replayed batch: already applied
+        # layout, skip indexes and generated columns are fixed at creation
+        return commit_snapshot(
+            batch, path, key, man["n_buckets"], base_man=man,
+            carry=list(man["files"]), app_id=app_id, app_version=app_version,
+        )
+
+    return _commit_loop(path, attempt)
 
 
 def _logical_struct(man: dict):
@@ -1224,9 +1238,9 @@ def merge_into(
     spark: SparkSession,
     path: str,
     source: DataFrame,
-    key: str = "id",
-    matched: list[dict] | None = None,
-    not_matched: list[dict] | None = None,
+    key: str,
+    matched: list[dict],
+    not_matched: list[dict],
     not_matched_by_source: list[dict] | None = None,
     app_id: str | None = None,
     app_version: int | None = None,
@@ -1273,17 +1287,13 @@ def merge_into(
     Insert clauses must populate ``key`` (use ``"all"`` or set it
     explicitly) — a NULL merge key is legal but almost always a bug.
     Returns the committed epoch."""
-    matched = list(matched or [])
-    not_matched = list(not_matched or [])
     not_matched_by_source = list(not_matched_by_source or [])
     assert matched or not_matched or not_matched_by_source, "no clauses"
     src = source.select(
         [F.col(c).alias(f"src_{c}") for c in source.columns]
     ).withColumn("__s", F.lit(True))
 
-    last: CommitConflict | None = None
-    for _attempt in range(_COMMIT_ATTEMPTS):
-        man = read_manifest(path)
+    def attempt(man):
         assert man is not None, f"no committed table at {path}"
         if (
             app_id is not None
@@ -1387,16 +1397,12 @@ def merge_into(
             [vals[c].cast(dtypes[c]).alias(c) for c in tcols if c not in gset]
         )
         carry = [e for e in man["files"] if e["bucket"] not in touched]
-        try:
-            return commit_snapshot(
-                out, path, key, n_buckets, base_man=man, carry=carry,
-                stats_cols=man.get("stats_cols") or None,
-                bloom_cols=man.get("bloom_cols") or None,
-                app_id=app_id, app_version=app_version,
-            )
-        except CommitConflict as exc:
-            last = exc
-    raise last
+        return commit_snapshot(
+            out, path, key, n_buckets, base_man=man, carry=carry,
+            app_id=app_id, app_version=app_version,
+        )
+
+    return _commit_loop(path, attempt)
 
 
 def delete_where(spark: SparkSession, path: str, condition) -> tuple[int, int]:
@@ -1421,18 +1427,18 @@ def delete_where(spark: SparkSession, path: str, condition) -> tuple[int, int]:
     winner's snapshot, up to `_COMMIT_ATTEMPTS` attempts. Returns (epoch,
     n_deleted); a no-match delete commits nothing and returns the current
     epoch."""
+    import shutil
     import uuid
 
-    last: CommitConflict | None = None
-    for _attempt in range(_COMMIT_ATTEMPTS):
-        man = read_manifest(path)
+    def attempt(man):
         assert man is not None, f"no committed table at {path}"
         live = read_snapshot(spark, path, _with_pos=True)
         hits = live.where(condition).select(
             F.col("__rel").alias("rel"), F.col("__pos").alias("pos")
         )
-        epoch = man["epoch"] + 1
-        dv_dir = os.path.join(path, f"dv-{epoch:06d}-{uuid.uuid4().hex[:8]}")
+        dv_dir = os.path.join(
+            path, f"dv-{man['epoch'] + 1:06d}-{uuid.uuid4().hex[:8]}"
+        )
         hits.write.mode("overwrite").parquet(dv_dir)
         side = spark.read.parquet(dv_dir)
         # driver metadata: per-file deleted-position counts (≤ |manifest|
@@ -1443,8 +1449,6 @@ def delete_where(spark: SparkSession, path: str, condition) -> tuple[int, int]:
         }
         n_deleted = sum(affected.values())
         if n_deleted == 0:
-            import shutil
-
             shutil.rmtree(dv_dir, ignore_errors=True)  # empty sidecar
             return man["epoch"], 0
         dv_files = []
@@ -1461,17 +1465,27 @@ def delete_where(spark: SparkSession, path: str, condition) -> tuple[int, int]:
             if e["path"] in affected:
                 e = dict(e, dv=list(e.get("dv", [])) + dv_files)
             files.append(e)
-        payload = json.dumps(
-            {**{k: man[k] for k in man if k not in ("epoch", "files")},
-             "epoch": epoch, "files": files},
-            indent=1,
-        )
-        try:
-            _publish_manifest(path, epoch, payload)
-            return epoch, n_deleted
-        except CommitConflict as exc:
-            last = exc  # the losing attempt's sidecar is never referenced
-    raise last
+        return _publish_next(path, man, files=files), n_deleted
+
+    return _commit_loop(path, attempt)
+
+
+def _alterable(man: dict | None, path: str, col: str) -> None:
+    """Refuse an ALTER of ``col`` unless it is a column of the table that
+    no generated column involves (generated bindings are fixed at
+    creation)."""
+    import re as _re
+
+    assert man is not None, f"no committed table at {path}"
+    logical = _logical_names(man)
+    if col not in logical:
+        raise ValueError(f"no column {col!r} in the table (have {logical})")
+    for gname, gexpr in _generated(man).items():
+        if gname == col or _re.search(rf"\b{_re.escape(col)}\b", gexpr):
+            raise ValueError(
+                f"generated column {gname!r} (AS {gexpr!r}) involves "
+                f"{col!r}; generated bindings are fixed at creation"
+            )
 
 
 def rename_column(path: str, old: str, new: str) -> int:
@@ -1480,38 +1494,18 @@ def rename_column(path: str, old: str, new: str) -> int:
     the new epoch's ``column_mapping`` presents the physical column under
     the new logical name. Time travel to a pre-rename epoch presents the
     OLD name (each epoch reads under its own mapping)."""
-    import re as _re
 
-    last: CommitConflict | None = None
-    for _attempt in range(_COMMIT_ATTEMPTS):
-        man = read_manifest(path)
-        assert man is not None, f"no committed table at {path}"
-        logical = _logical_names(man)
-        if old not in logical:
-            raise ValueError(f"no column {old!r} to rename (have {logical})")
-        if new in logical:
+    def attempt(man):
+        _alterable(man, path, old)
+        if new in _logical_names(man):
             raise ValueError(f"column {new!r} already exists")
-        for gname, gexpr in _generated(man).items():
-            if gname == old or _re.search(rf"\b{_re.escape(old)}\b", gexpr):
-                raise ValueError(
-                    f"generated column {gname!r} (AS {gexpr!r}) involves "
-                    f"{old!r}; generated bindings are fixed at creation"
-                )
         cmap = _mapping(man)
         phys = cmap.pop(old, old)
         if new != phys:  # rename back to the physical name = identity
             cmap[new] = phys
-        payload = json.dumps(
-            {**{k: man[k] for k in man if k != "epoch"},
-             "column_mapping": cmap, "epoch": man["epoch"] + 1},
-            indent=1,
-        )
-        try:
-            _publish_manifest(path, man["epoch"] + 1, payload)
-            return man["epoch"] + 1
-        except CommitConflict as exc:
-            last = exc
-    raise last
+        return _publish_next(path, man, column_mapping=cmap)
+
+    return _commit_loop(path, attempt)
 
 
 def drop_column(path: str, col: str) -> int:
@@ -1520,35 +1514,16 @@ def drop_column(path: str, col: str) -> int:
     the new epoch's reads stop presenting it. Re-adding the same physical
     name later is REFUSED at commit (it would resurrect the old files'
     data under the new column) — Delta's column-mapping drop semantics."""
-    import re as _re
 
-    last: CommitConflict | None = None
-    for _attempt in range(_COMMIT_ATTEMPTS):
-        man = read_manifest(path)
-        assert man is not None, f"no committed table at {path}"
-        if col not in _logical_names(man):
-            raise ValueError(f"no column {col!r} to drop")
-        for gname, gexpr in _generated(man).items():
-            if gname == col or _re.search(rf"\b{_re.escape(col)}\b", gexpr):
-                raise ValueError(
-                    f"generated column {gname!r} (AS {gexpr!r}) involves "
-                    f"{col!r}; generated bindings are fixed at creation"
-                )
+    def attempt(man):
+        _alterable(man, path, col)
         cmap = _mapping(man)
         phys = cmap.pop(col, col)
-        dropped = _dropped(man) + [phys]
-        payload = json.dumps(
-            {**{k: man[k] for k in man if k != "epoch"},
-             "column_mapping": cmap, "dropped_cols": dropped,
-             "epoch": man["epoch"] + 1},
-            indent=1,
+        return _publish_next(
+            path, man, column_mapping=cmap, dropped_cols=_dropped(man) + [phys]
         )
-        try:
-            _publish_manifest(path, man["epoch"] + 1, payload)
-            return man["epoch"] + 1
-        except CommitConflict as exc:
-            last = exc
-    raise last
+
+    return _commit_loop(path, attempt)
 
 
 def table_changes(
@@ -1708,66 +1683,6 @@ def apply_changes_to_mv(
     )
 
 
-def upsert_manifest_stream(
-    sdf: DataFrame, path: str, checkpoint: str, key: str, order_col: str
-):
-    """The foreachBatch wiring of a last-writer-wins upsert_manifest_txn,
-    drained with ``availableNow``: every micro-batch is one atomic manifest commit, so
-    a reader polling the table between batches always sees a consistent
-    merge prefix. A checkpoint-recovery replay of a committed batch is
-    value-idempotent for replace-mode LWW, just a wasted commit."""
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_manifest_txn(
-            batch_df.sparkSession, batch_df, path, key=key, order_col=order_col
-        )
-
-    return (
-        sdf.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def append_manifest_stream(
-    sdf: DataFrame,
-    path: str,
-    checkpoint: str,
-    app_id: str,
-    key: str,
-):
-    """foreachBatch append-mode ingest with the EXACTLY-ONCE contract a
-    blind append needs: Structured Streaming's checkpoint guarantees each
-    batch_id's contents are replayed identically after a failure
-    (at-least-once), and the manifest's (app_id, batch_id) watermark
-    turns the replay into a no-op (append_snapshot skips versions at or
-    below it) — together, exactly-once appends into the txn table, the
-    Delta streaming-sink idempotence protocol (txnAppId/txnVersion) on
-    the manifest layout. Each micro-batch is one atomic epoch; a reader
-    polling between batches sees a consistent ingest prefix, never a
-    torn batch or a doubled one."""
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        append_snapshot(
-            batch_df,
-            path,
-            key=key,
-            n_buckets=_STREAM_BUCKETS,
-            app_id=app_id,
-            app_version=batch_id,
-        )
-
-    return (
-        sdf.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def merge_manifest_stream(
     sdf: DataFrame,
     path: str,
@@ -1778,15 +1693,15 @@ def merge_manifest_stream(
     not_matched: list[dict],
     order_col: str,
     order_tiebreak: list[str],
-):
-    """Streaming CDC apply — the third streaming-DML mode next to the
-    exactly-once append (append_manifest_stream) and the per-batch LWW
-    upsert: each micro-batch is MERGEd into the txn table with the full
+) -> None:
+    """Streaming CDC apply, drained with ``availableNow`` (streaming.run
+    .drain): each micro-batch is MERGEd into the txn table with the full
     ordered-clause surface (conditional updates, conditional inserts,
-    deletes), fenced exactly-once by the same (app_id, batch_id)
-    watermark — merge_into re-checks the fence inside its OCC retry
-    loop, so a checkpoint-replayed batch publishes nothing. This is the
-    Delta "foreachBatch + MERGE" CDC pattern on the manifest table.
+    deletes), fenced exactly-once by the (app_id, batch_id) watermark
+    that also fences a streamed append_snapshot — merge_into re-checks
+    the fence in every commit attempt, so a checkpoint-replayed batch
+    publishes nothing. This is the Delta "foreachBatch + MERGE" CDC
+    pattern on the manifest table.
 
     ``order_col`` (then ``order_tiebreak``) pre-collapses each batch to
     its LAST change per key — MERGE refuses duplicate source keys that
@@ -1815,7 +1730,7 @@ def merge_manifest_stream(
     carried by reference."""
     from pyspark.sql.window import Window
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         w = Window.partitionBy(key).orderBy(
             F.desc(order_col), *[F.desc(c) for c in order_tiebreak]
         )
@@ -1837,7 +1752,7 @@ def merge_manifest_stream(
             # below would be skipped as a replay. A crash between the
             # two replays the batch onto the now-existing empty table.
             append_snapshot(
-                b.limit(0), path, key=key, n_buckets=_STREAM_BUCKETS
+                b.limit(0), path, key=key, n_buckets=STREAM_BUCKETS
             )
         merge_into(
             b.sparkSession, path, b, key=key,
@@ -1845,10 +1760,4 @@ def merge_manifest_stream(
             app_id=app_id, app_version=batch_id,
         )
 
-    return (
-        sdf.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(sdf, merge_batch, checkpoint)

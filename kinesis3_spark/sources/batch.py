@@ -107,9 +107,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "embedding", df["embedding"].cast("array<float>")
             )
     return df
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every corpus table as a temp view for spark.sql queries."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -6,8 +6,8 @@ reaches it through ``CREATE TEMPORARY VIEW ... USING txntable``. The
 options are ``path`` and ``epoch`` (time travel to a retained version);
 Catalyst file skipping (see _TxnBatchReader) needs the session's
 ``spark.sql.python.filterPushdown.enabled``, which `session.py` sets.
-Writes go through `sinks/txn.py` (``commit_snapshot`` and the
-``*_manifest_stream`` foreachBatch sinks), never through this source.
+Writes go through `sinks/txn.py` (its writers, batch or drained by
+``streaming.run.drain``), never through this source.
 
 Scale shape: the driver touches only the MANIFEST; each InputPartition
 is one data file, read executor-side with pyarrow and yielded as Arrow

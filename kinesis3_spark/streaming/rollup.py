@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sinks.upsert import upsert_parquet
+from .run import drain
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -49,14 +50,13 @@ def rollup_events(sdf: DataFrame) -> DataFrame:
     )
 
 
-def continuous_rollup(rollup_sdf: DataFrame, target: str, checkpoint: str):
+def continuous_rollup(rollup_sdf: DataFrame, target: str, checkpoint: str) -> None:
     """Maintain `target` as the materialization of a streaming rollup,
-    draining what is available now.
+    draining what is available now (streaming.run.drain).
 
     Update output mode emits each changed key once per batch; the batch id
     is the upsert ordering column, so a key touched in batches 3 and 7
-    keeps the batch-7 row — the cumulative (correct) one. Returns the
-    started StreamingQuery."""
+    keeps the batch-7 row — the cumulative (correct) one."""
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
@@ -70,10 +70,4 @@ def continuous_rollup(rollup_sdf: DataFrame, target: str, checkpoint: str):
             mode="replace",
         )
 
-    return (
-        rollup_sdf.writeStream.outputMode("update")
-        .foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(rollup_sdf, _merge, checkpoint)

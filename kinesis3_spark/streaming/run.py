@@ -2,8 +2,9 @@
 a stream to completion with the availableNow trigger
 (process-everything-then-stop — the testable form of the reference's
 batch-size/interval flush loop, core.clj:113-120 `time-to-save?`) and fail
-hard when a drain does not finish. The collector's own sinks live in app.py (`Collector`) and
-streaming/rollup.py (`continuous_rollup`)."""
+hard when a drain does not finish. `drain` is the foreachBatch sink every
+drain in the package runs through; the collector's own sink lives in
+app.py (`Collector`)."""
 
 from __future__ import annotations
 
@@ -29,6 +30,23 @@ def await_or_raise(q, timeout_s: int = 300) -> None:
         raise TimeoutError(
             f"streaming drain did not finish within {timeout_s}s"
         )
+
+
+def drain(sdf: DataFrame, batch_fn, checkpoint: str) -> None:
+    """Run ``batch_fn(batch_df, batch_id)`` on each micro-batch of ``sdf``
+    until what is available now is drained, and fail hard if the drain
+    does not finish (await_or_raise). This is the foreachBatch sink:
+    the checkpoint replays a failed batch_id with the same rows, so an
+    idempotent ``batch_fn`` makes the sink exactly-once. Update output
+    mode: a streaming aggregation emits each row a batch changed, and a
+    plan without one runs exactly as in append mode."""
+    await_or_raise(
+        sdf.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def run_to_memory(

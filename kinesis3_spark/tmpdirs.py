@@ -53,7 +53,7 @@ def _cleanup() -> None:
 atexit.register(_cleanup)
 
 
-def mkdtemp(prefix: str = "k3s_", dir: str | None = None) -> str:
+def mkdtemp(prefix: str, dir: str | None = None) -> str:
     """``tempfile.mkdtemp`` that is reaped at interpreter exit."""
     d = tempfile.mkdtemp(prefix=prefix, dir=dir)
     _CREATED.append(d)

@@ -8,18 +8,12 @@ from pyspark.sql import functions as F
 
 from kinesis3_spark.functions import (
     epoch_ms_to_datetime_str,
-    epoch_ms_to_day,
-    epoch_ms_to_hour_start_s,
-    extract_json,
     fingerprint,
     lang_id,
     ngrams,
     parse_cookies,
     quality_score,
-    separate_number_data,
     token_count,
-    url_decode_col,
-    url_encode_col,
 )
 
 
@@ -27,18 +21,9 @@ def one(spark, col):
     return spark.range(1).select(col.alias("v")).collect()[0]["v"]
 
 
-def test_get_hour_documented_example(spark):
-    # reference utils.clj:54-56: 1437609280911 → 1437606000
-    assert one(spark, epoch_ms_to_hour_start_s(F.lit("1437609280911"))) == 1437606000
-
-
 def test_epoch_to_datetime_str(spark):
     # 1437609280911 ms = 2015-07-22T23:54:40.911 UTC
     assert one(spark, epoch_ms_to_datetime_str(F.lit("1437609280911"))) == "2015-07-22T23:54:40"
-
-
-def test_epoch_to_day(spark):
-    assert one(spark, epoch_ms_to_day(F.lit(1437609280911))) == "2015-07-22"
 
 
 def test_epoch_invalid_input_is_null(spark):
@@ -69,28 +54,6 @@ def test_parse_cookies_value_with_equals(spark):
     # split on FIRST '=' only: "tok=abc=def" → {"tok": "abc=def"}
     m = one(spark, parse_cookies(F.lit("tok=abc=def")))
     assert m == {"tok": "abc=def"}
-
-
-def test_url_codec_roundtrip(spark):
-    assert one(spark, url_encode_col(F.lit("x y&z"))) == "x+y%26z"
-    assert one(spark, url_decode_col(F.lit("x+y%26z"))) == "x y&z"
-
-
-def test_separate_number_data(spark):
-    line = "s" * 56 + " payload here"
-    row = one(spark, separate_number_data(F.lit(line)))
-    assert row["sequence_number"] == "s" * 56
-    assert row["data"] == "payload here"
-
-
-def test_extract_json_corrupt_is_null(spark):
-    parsed = one(spark, extract_json(F.lit("{not json"), "a INT"))
-    assert parsed is None or parsed["a"] is None
-
-
-def test_extract_json_valid(spark):
-    parsed = one(spark, extract_json(F.lit('{"a": 7}'), "a INT"))
-    assert parsed["a"] == 7
 
 
 def test_tokenize_and_ngrams(spark):

@@ -16,7 +16,14 @@ pytestmark = pytest.mark.slow  # excluded by the -m 'not slow' quick path
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from kinesis3_spark.queries.lmquality import LM_ADD_K, score_perplexity
+from pyspark.sql import functions as F
+
+from kinesis3_spark.queries.lmquality import (
+    LM_ADD_K,
+    LM_TRAIN_SOURCE,
+    score_docs_with_lm,
+    train_bigram_lm,
+)
 
 WORDS = ["alpha", "beta", "gamma", "delta"]
 
@@ -70,7 +77,11 @@ def test_lm_scorer_matches_python_reference(spark, rows):
         [(i, s, t) for i, (s, t) in enumerate(rows)],
         "doc_id long, source string, text string",
     )
-    got = {r.doc_id: r.nll for r in score_perplexity(d).collect()}
+    bg, ug, vocab = train_bigram_lm(d)
+    scored = score_docs_with_lm(
+        d.where(F.col("source") != LM_TRAIN_SOURCE), bg, ug, vocab
+    )
+    got = {r.doc_id: r.nll for r in scored.collect()}
     want = _brute_nll(rows)
     assert set(got) == set(want)
     for i in want:
@@ -92,13 +103,13 @@ def test_lm_scorer_matches_python_reference(spark, rows):
 def test_psi_nonnegative_and_zero_on_self(spark, rows):
     """PSI is a sum of (p-q)*ln(p/q) terms, each >= 0 — the monitor must
     never go negative, and the reference row is exactly 0."""
-    from kinesis3_spark.queries.dataquality import token_drift_psi
+    from kinesis3_spark.queries.dataquality import psi_bucket_counts, token_drift_psi
 
     d = spark.createDataFrame(
         [(i, s, t) for i, (s, t) in enumerate(rows)],
         "doc_id long, source string, text string",
     )
-    got = {r.source: r.psi for r in token_drift_psi(d).collect()}
+    got = {r.source: r.psi for r in token_drift_psi(psi_bucket_counts(d)).collect()}
     assert got["src0"] == 0.0
     assert all(v >= 0 for v in got.values()), got
 
@@ -107,12 +118,12 @@ def test_psi_invariant_to_token_order(spark):
     """A source whose docs are a PERMUTATION of the reference's tokens has
     the identical distribution — PSI must be exactly 0 even though no
     document string matches."""
-    from kinesis3_spark.queries.dataquality import token_drift_psi
+    from kinesis3_spark.queries.dataquality import psi_bucket_counts, token_drift_psi
 
     ref = ["alpha beta gamma", "beta beta delta"]
     perm = ["gamma beta alpha", "delta beta beta"]
     rows = [(i, "src0", t) for i, t in enumerate(ref)]
     rows += [(100 + i, "srcP", t) for i, t in enumerate(perm)]
     d = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    got = {r.source: r.psi for r in token_drift_psi(d).collect()}
+    got = {r.source: r.psi for r in token_drift_psi(psi_bucket_counts(d)).collect()}
     assert got == {"src0": 0.0, "srcP": 0.0}

@@ -15,8 +15,12 @@ from kinesis3_spark.operators.similarity import jl_signs, random_project, square
 from kinesis3_spark.queries.lmquality import (
     DOMAIN_LEXICON,
     LM_ADD_K,
-    score_perplexity,
+    LM_TRAIN_SOURCE,
+    score_docs_with_backoff_lm,
+    score_docs_with_lm,
     tag_domains,
+    train_backoff_lm,
+    train_bigram_lm,
 )
 
 
@@ -27,6 +31,24 @@ from kinesis3_spark.queries.lmquality import (
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, source string, text string")
+
+
+def score_perplexity(docs):
+    """Avg NLL under the bigram LM trained on LM_TRAIN_SOURCE, for every
+    doc outside the training slice."""
+    bg, ug, vocab = train_bigram_lm(docs)
+    return score_docs_with_lm(
+        docs.where(F.col("source") != LM_TRAIN_SOURCE), bg, ug, vocab
+    )
+
+
+def score_perplexity_trigram(docs):
+    """The same under the stupid-backoff trigram LM."""
+    bg, ug, _vocab = train_bigram_lm(docs)
+    tg, totals = train_backoff_lm(docs, ug)
+    return score_docs_with_backoff_lm(
+        docs.where(F.col("source") != LM_TRAIN_SOURCE), tg, bg, ug, totals
+    )
 
 
 def test_perplexity_in_distribution_beats_gibberish(spark):
@@ -176,7 +198,7 @@ def test_random_project_preserves_expected_norm(spark):
 
 
 def test_psi_zero_for_identical_and_positive_for_shifted(spark):
-    from kinesis3_spark.queries.dataquality import token_drift_psi
+    from kinesis3_spark.queries.dataquality import psi_bucket_counts, token_drift_psi
 
     same = "the cat sat on the mat " * 10
     shifted = "zebra quark lattice " * 20
@@ -184,7 +206,7 @@ def test_psi_zero_for_identical_and_positive_for_shifted(spark):
         [(0, "src0", same), (1, "mirror", same), (2, "drifted", shifted)],
         "doc_id long, source string, text string",
     )
-    got = {r.source: r.psi for r in token_drift_psi(d).collect()}
+    got = {r.source: r.psi for r in token_drift_psi(psi_bucket_counts(d)).collect()}
     assert got["src0"] == 0.0  # self-check row
     assert got["mirror"] == 0.0  # identical distribution
     assert got["drifted"] > 0.25  # 'shifted' band: all mass in (other)
@@ -194,10 +216,7 @@ def test_stream_admission_matches_batch_filter(spark, sf_dir):
     """Batch-split invariance end-to-end: the streamed admitted set must be
     exactly the batch scorer's kept set (same model, same threshold)."""
     from kinesis3_spark.queries import QUERIES
-    from kinesis3_spark.queries.lmquality import (
-        LM_NLL_KEEP,
-        score_perplexity,
-    )
+    from kinesis3_spark.queries.lmquality import LM_NLL_KEEP
     from kinesis3_spark.queries.relational import _t
 
     streamed = {
@@ -281,8 +300,6 @@ def test_trigram_backoff_direction_indist_beats_shuffled(spark):
     """The VERDICT r11 #6 direction pin: a doc of in-order training
     phrases must score a lower NLL than the SAME tokens shuffled (the
     trigram/bigram evidence vanishes, only the unigram base survives)."""
-    from kinesis3_spark.queries.lmquality import score_perplexity_trigram
-
     phrase = "the cat sat on the mat and the dog ran to the door"
     train = [(i, "src0", phrase) for i in range(5)]
     shuffled = "door the to ran dog mat the on and cat the sat the"
@@ -300,11 +317,7 @@ def test_trigram_backoff_matches_hand_computation(spark):
     trigram, tier 2 the seen bigram, tier 3 the add-k unigram base."""
     import math
 
-    from kinesis3_spark.queries.lmquality import (
-        LM_ADD_K,
-        LM_BACKOFF,
-        score_perplexity_trigram,
-    )
+    from kinesis3_spark.queries.lmquality import LM_BACKOFF
 
     train = [(0, "src0", "a b c a b c")]
     # trigrams: abc x2, bca, cab; bigrams: ab x2, bc x2, ca; unigrams a:2 b:2 c:2 N=6 V=3
@@ -323,7 +336,7 @@ def test_trigram_backoff_tier2_bigram_backoff(spark):
     must take tier 2: a * c(w2 w3)/c(w2)."""
     import math
 
-    from kinesis3_spark.queries.lmquality import LM_BACKOFF, score_perplexity_trigram
+    from kinesis3_spark.queries.lmquality import LM_BACKOFF
 
     train = [(0, "src0", "a b c a b c")]
     target = [(1, "srcX", "q a b")]  # (q,a,b): tg unseen, bigram (a,b) seen c=2, c(a)=2

@@ -39,7 +39,7 @@ def pq_dir(tmp_path_factory):
 def test_pq_reconstructs_planted_clusters_exactly(spark, pq_dir):
     d, picks = pq_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    books = S.train_pq_codebooks(emb, k=4, iters=8)
+    books = S.train_pq_codebooks(S.fetch_pq_sample(emb), k=4, iters=8)
     enc = {r["id"]: r for r in S.pq_encode(emb, books, books).collect()}
     # every vector reconstructs exactly: the 2 planted points per subspace
     # are <= 4 codewords, so Lloyd converges onto them
@@ -72,8 +72,8 @@ def test_pq_training_is_deterministic(spark, sf_dir):
     from kinesis3_spark.sources import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    b1 = S.train_pq_codebooks(emb, k=16, iters=4)
-    b2 = S.train_pq_codebooks(emb, k=16, iters=4)
+    b1 = S.train_pq_codebooks(S.fetch_pq_sample(emb), k=16, iters=4)
+    b2 = S.train_pq_codebooks(S.fetch_pq_sample(emb), k=16, iters=4)
     assert np.array_equal(b1, b2)
 
 
@@ -86,8 +86,8 @@ def test_pq_encode_baseline_column_matches_separate_pass(spark, pq_dir):
     d, _ = pq_dir
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
     X = S.fetch_pq_sample(emb)
-    books = S.train_pq_codebooks(emb, k=4, iters=8, X=X)
-    base = S.train_pq_codebooks(emb, k=1, iters=2, X=X)
+    books = S.train_pq_codebooks(X, k=4, iters=8)
+    base = S.train_pq_codebooks(X, k=1, iters=2)
     combined = {r["id"]: r for r in S.pq_encode(emb, books, baseline=base).collect()}
     main_only = {r["id"]: r for r in S.pq_encode(emb, books, books).collect()}
     base_only = {r["id"]: r for r in S.pq_encode(emb, base, base).collect()}
@@ -123,7 +123,7 @@ def test_einsum_distances_pick_the_sum_form_codes(spark, sf_dir, monkeypatch):
 
     emb = load_table(spark, sf_dir, "embeddings")
     X = S.fetch_pq_sample(emb)
-    books = S.train_pq_codebooks(emb, k=64, X=X)
+    books = S.train_pq_codebooks(X, k=64)
     C, res_books = S.train_ivfpq(emb)
 
     einsum = np.einsum
@@ -134,7 +134,7 @@ def test_einsum_distances_pick_the_sum_form_codes(spark, sf_dir, monkeypatch):
         return einsum(subscripts, *ops, **kw)
 
     monkeypatch.setattr(np, "einsum", sum_form)
-    assert np.array_equal(S.train_pq_codebooks(emb, k=64, X=X), books)
+    assert np.array_equal(S.train_pq_codebooks(X, k=64), books)
     C2, res_books2 = S.train_ivfpq(emb)
     assert np.array_equal(C2, C) and np.array_equal(res_books2, res_books)
     monkeypatch.undo()

@@ -25,7 +25,9 @@ A second guard holds every defaulted parameter of the package to a second
 value in use: a parameter that every call site outside the tests sets the
 same way is a constant, and the branches only another value reaches are
 dead code. A test that needs another value of such a constant patches the
-module constant."""
+module constant. A third holds every default to being used: a default that
+no call site outside the tests passes is dead, and the parameter is
+required."""
 
 from __future__ import annotations
 
@@ -60,8 +62,6 @@ ROOT_FILES = [
 ]
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 
-_SCALAR = "scalar column helper only tests call"
-_BATCH = "batch source helper only tests call"
 _DS_CALLBACK = "Spark Data Source callback, called by Spark by name"
 
 # Known debt: qualified name -> reason. Delete an entry together with its code.
@@ -69,16 +69,6 @@ KNOWN_UNREACHABLE = {
     "app.Collector.watch": (
         "embedding API for side-stream state metrics, which the CLI never calls"
     ),
-    "functions.scalar.epoch_ms_to_day": _SCALAR,
-    "functions.scalar.epoch_ms_to_hour_start_s": _SCALAR,
-    "functions.scalar.extract_json": _SCALAR,
-    "functions.scalar.separate_number_data": _SCALAR,
-    "functions.scalar.url_decode_col": _SCALAR,
-    "functions.scalar.url_encode_col": _SCALAR,
-    "operators.sequence.user_motif_measures": "sequence operator only tests call",
-    "queries.lmquality.score_perplexity": "perplexity scorer only tests call",
-    "queries.lmquality.score_perplexity_trigram": "perplexity scorer only tests call",
-    "sources.batch.register_temp_views": _BATCH,
     "sources.txn_datasource._TxnBatchReader.partitions": _DS_CALLBACK,
     "sources.txn_datasource._TxnBatchReader.pushFilters": _DS_CALLBACK,
 }
@@ -343,12 +333,12 @@ def _module_literals(pkg: pathlib.Path) -> dict[str, str]:
     return {n: v.pop() for n, v in seen.items() if len(v) == 1 and None not in v}
 
 
-def _one_value_params(
-    pkg: pathlib.Path = PKG, caller_files: list[pathlib.Path] = CALLER_FILES
-) -> tuple[int, dict[str, str]]:
-    """(number of defaulted parameters of uniquely named package
-    functions, {qualified parameter: its one value} for those whose call
-    sites all set the same value).
+def _param_values(
+    pkg: pathlib.Path, caller_files: list[pathlib.Path]
+) -> dict[str, tuple[str, set]]:
+    """{qualified parameter: (its default, the values its call sites set)}
+    for every defaulted parameter of a uniquely named package function.
+    An omitted argument sets the default.
 
     Call sites are found by name; a call with `*args`/`**kwargs` is
     skipped. An argument that forwards a parameter of the enclosing
@@ -424,12 +414,39 @@ def _one_value_params(
                 out.add(v)
         return out
 
-    one = {}
-    for (f, p) in values:
-        vs = resolve((f, p), {(f, p)})
-        if len(vs) <= 1 and ("varying",) not in vs:
-            one[f"{funcs[f][0]}.{p}"] = str(next(iter(vs), "no call site"))
+    return {
+        f"{funcs[f][0]}.{p}": (params[f][p][1], resolve((f, p), {(f, p)}))
+        for (f, p) in values
+    }
+
+
+def _one_value_params(
+    pkg: pathlib.Path = PKG, caller_files: list[pathlib.Path] = CALLER_FILES
+) -> tuple[int, dict[str, str]]:
+    """(number of defaulted parameters of uniquely named package
+    functions, {qualified parameter: its one value} for those whose call
+    sites all set the same value)."""
+    values = _param_values(pkg, caller_files)
+    one = {
+        q: str(next(iter(vs), "no call site"))
+        for q, (_, vs) in values.items()
+        if len(vs) <= 1 and ("varying",) not in vs
+    }
     return len(values), one
+
+
+def _unused_defaults(
+    pkg: pathlib.Path = PKG, caller_files: list[pathlib.Path] = CALLER_FILES
+) -> dict[str, str]:
+    """{qualified parameter: its default} for the defaulted parameters
+    that have call sites, none of which passes the default, literally or
+    by omitting the argument. A forwarded parameter whose values the scan
+    cannot resolve may pass it."""
+    return {
+        q: default
+        for q, (default, vs) in _param_values(pkg, caller_files).items()
+        if vs and default not in vs and ("varying",) not in vs
+    }
 
 
 def test_every_default_has_a_second_value():
@@ -442,6 +459,14 @@ def test_every_default_has_a_second_value():
     assert not new, f"one value at every call site; make it a constant: {new}"
     stale = sorted(q for q in ONE_VALUE_EXEMPT if q not in one)
     assert not stale, f"set two ways now, or gone; drop from ONE_VALUE_EXEMPT: {stale}"
+
+
+def test_every_default_is_passed():
+    """A default that no call site outside the tests passes is dead: make
+    the parameter required and delete the branches only the default
+    reached. A test that relied on the default passes the value."""
+    unused = sorted(f"{q} = {v}" for q, v in _unused_defaults().items())
+    assert not unused, f"no call site passes the default; make it required: {unused}"
 
 
 def test_one_value_scan_follows_forwarded_parameters(tmp_path):
@@ -491,3 +516,27 @@ def test_one_value_scan_does_not_count_tests_as_callers(tmp_path):
     total, one = _one_value_params(pkg, files)
     assert total == 2
     assert one == {"mod.leaf.width": "4"}
+
+
+def test_default_scan_flags_a_default_no_caller_passes(tmp_path):
+    """`width`'s default is never passed outside the tests: its callers
+    set 8 and 16, and only a test omits it. `cap`'s default reaches the
+    leaf through a wrapper whose caller omits it. `seed` is forwarded from
+    a required parameter. `mode`'s default is passed literally."""
+    pkg = tmp_path / "kinesis3_spark"
+    for d in (pkg, tmp_path / "perfbench", tmp_path / "tools", tmp_path / "tests"):
+        d.mkdir()
+    (pkg / "mod.py").write_text(
+        "def leaf(x, width=4, cap=None, seed=0, mode='a'):\n"
+        "    return x\n"
+        "def wrapper(x, cap=None):\n"
+        "    return leaf(x, width=8, cap=cap, mode='a')\n"
+        "def outer(x, seed):\n"
+        "    return leaf(x, width=16, seed=seed, mode='b')\n"
+        "wrapper(1)\n"
+    )
+    (tmp_path / "bench.py").write_text("")
+    (tmp_path / "__spark_entry__.py").write_text("")
+    (tmp_path / "tools" / "tool.py").write_text("wrapper(2, cap=3)\n")
+    (tmp_path / "tests" / "test_mod.py").write_text("leaf(5)\n")
+    assert _unused_defaults(pkg, _caller_files(tmp_path)) == {"mod.leaf.width": "4"}

@@ -178,74 +178,3 @@ def test_spark_java_count_matches_python_batch(spark):
         .collect()
     )
     assert bad == [], bad
-
-
-# ---------------------------------------------------------------------------
-# MEASURES mode: positions/lengths/spans per match must equal a Python
-# re.finditer reference on planted sequences (one symbol == one event).
-# ---------------------------------------------------------------------------
-
-from kinesis3_spark.operators.sequence import user_motif_measures
-
-
-def _ev_df(spark, rows):
-    # rows: (user_id, ts_sec, event_id, event_type)
-    return spark.createDataFrame(
-        [(u, float(t), eid, et) for (u, t, eid, et) in rows],
-        "user_id long, ts double, event_id long, event_type string",
-    )
-
-
-def test_measures_positions_lengths_spans(spark):
-    # user 1 sequence: v c c p v p  (ts = index * 10)
-    names = {"v": "view", "c": "click", "p": "purchase", "e": "error"}
-    seq1 = "vccpvp"
-    rows = [(1, 10 * i, i, names[ch]) for i, ch in enumerate(seq1)]
-    # user 2: no match
-    rows += [(2, 0, 0, "purchase"), (2, 10, 1, "view")]
-    out = user_motif_measures(_ev_df(spark, rows), "vc*p", AL).collect()
-    got = {
-        (r.user_id, r.match_no): (r.start_idx, r.match_len, r.t_start, r.t_end)
-        for r in out
-    }
-    ref = {
-        (1, i + 1): (m.start(), m.end() - m.start(),
-                     float(10 * m.start()), float(10 * (m.end() - 1)))
-        for i, m in enumerate(_re.finditer("vc*p", seq1))
-    }
-    assert got == ref  # {(1,1): (0,4,0,30), (1,2): (4,2,40,50)}
-    assert not any(u == 2 for (u, _n) in got)
-
-
-def test_measures_agree_with_finditer_random(spark):
-    """Batch check over seeded random sequences: positions and lengths
-    from the array-fold reconstruction == Python re.finditer for every
-    match, for several motifs."""
-    import random
-
-    rng = random.Random(7)
-    names = {"v": "view", "c": "click", "p": "purchase", "e": "error", "s": "signup"}
-    cases = []
-    uid = 0
-    for pat in ["vc*p", "e[cv]*p", "v(c|e)+p", "[cepsv]{2,3}"]:
-        for _ in range(8):
-            seq = "".join(rng.choice(AL) for _ in range(rng.randrange(1, 15)))
-            cases.append((uid, pat, seq))
-            uid += 1
-    for pat in sorted({p for _, p, _ in cases}):
-        sub = [(u, s) for (u, p, s) in cases if p == pat]
-        rows = [
-            (u, float(3 * i), i, names[ch])
-            for (u, s) in sub
-            for i, ch in enumerate(s)
-        ]
-        out = user_motif_measures(_ev_df(spark, rows), pat, AL).collect()
-        got = {
-            (r.user_id, r.match_no): (r.start_idx, r.match_len)
-            for r in out
-        }
-        ref = {}
-        for (u, s) in sub:
-            for i, m in enumerate(_re.finditer(pat, s)):
-                ref[(u, i + 1)] = (m.start(), m.end() - m.start())
-        assert got == ref, f"pattern {pat!r}"

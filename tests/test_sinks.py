@@ -217,7 +217,7 @@ def test_txn_commit_starts_no_thread_and_writes_only_table_files(
     from kinesis3_spark.sinks import txn
 
     path = str(tmp_path / "t")
-    txn.append_snapshot(_events(spark, B1), path)  # the table exists first
+    txn.append_snapshot(_events(spark, B1), path, key="id")  # the table exists first
     started = []
     real_start = threading.Thread.start
 
@@ -712,7 +712,7 @@ def test_merge_manifest_stream_cdc_with_deletes(spark, tmp_path):
 
     def drain():
         sdf = spark.readStream.schema(schema).parquet(landing)
-        q = txn.merge_manifest_stream(
+        txn.merge_manifest_stream(
             sdf, table, checkpoint=ck, app_id="cdc",
             key="id",
             matched=[
@@ -725,9 +725,6 @@ def test_merge_manifest_stream_cdc_with_deletes(spark, tmp_path):
             order_col="seq",
             order_tiebreak=[],
         )
-        from kinesis3_spark.streaming.run import await_or_raise
-
-        await_or_raise(q, 120)
 
     # batch 0: schema-only bootstrap then a clause-honoring merge; id=1
     # carries TWO changes -> within-batch collapse keeps seq 2; the
@@ -761,6 +758,7 @@ def test_merge_manifest_stream_cdc_with_deletes(spark, tmp_path):
         spark.createDataFrame([(9, "z", 9, "u")], schema), key="id",
         not_matched=[{"insert": "all"}],
         app_id="cdc", app_version=man["apps"]["cdc"],
+        matched=[],
     )
     assert txn.read_manifest(table)["epoch"] == man["epoch"]
     assert txn.read_snapshot(spark, table).where("id = 9").count() == 0

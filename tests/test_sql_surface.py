@@ -1,10 +1,10 @@
-"""spark.sql(...) over the registered corpus views — the engine's SQL-string
-entry point (register_temp_views) must agree with DuckDB running the very
+"""spark.sql(...) over the corpus tables registered as temp views — the
+engine's SQL-string entry point must agree with DuckDB running the very
 same ANSI SQL text."""
 
 from __future__ import annotations
 
-from kinesis3_spark.sources import register_temp_views
+from kinesis3_spark.sources import TABLES, load_table
 
 from .conftest import assert_parity
 
@@ -30,7 +30,8 @@ PORTABLE_SQL = [
 
 
 def test_sql_string_surface(spark, duck, sf_dir):
-    register_temp_views(spark, sf_dir)
+    for t in TABLES:
+        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     for sql in PORTABLE_SQL:
         assert_parity(spark.sql(sql), duck, sql)
 

@@ -53,10 +53,9 @@ def test_continuous_rollup_matches_batch(spark, tmp_path):
         .withColumn("ts", F.timestamp_seconds("ts_s"))
     )
     target = str(tmp_path / "rollup_tbl")
-    q = continuous_rollup(
+    continuous_rollup(
         rollup_events(sdf), target, checkpoint=str(tmp_path / "ck_roll")
     )
-    q.awaitTermination(180)
 
     got = {
         (r.win_start, r.event_type): (r.n, r.total_value)

@@ -69,7 +69,7 @@ def test_rename_then_write_lands_under_physical_name(spark, table):
 def test_upsert_after_rename_merges_on_logical_key(spark, table):
     T.rename_column(table, "val", "amount")
     batch = spark.createDataFrame([(5, 999, 0)], "id long, amount long, grp long")
-    T.upsert_manifest_txn(spark, batch, table, key="id")
+    T.upsert_manifest_txn(spark, batch, table, key="id", order_col="id")
     got = T.read_snapshot(spark, table)
     assert got.where(F.col("id") == 5).select("amount").first()[0] == 999
     assert got.count() == 30  # merged, not appended
@@ -165,7 +165,7 @@ def test_new_column_under_renamed_away_physical_name_refused(spark, table):
     with pytest.raises(ValueError, match="PHYSICAL storage"):
         T.append_snapshot(bad, table, key="id")
     with pytest.raises(ValueError, match="PHYSICAL storage"):
-        T.upsert_manifest_txn(spark, bad, table, key="id")
+        T.upsert_manifest_txn(spark, bad, table, key="id", order_col="id")
 
 
 def test_cdf_across_rename_epoch_is_empty(spark, table):
@@ -180,6 +180,7 @@ def test_cdf_across_rename_epoch_is_empty(spark, table):
         spark,
         spark.createDataFrame([(0, 555, 0)], "id long, amount long, grp long"),
         table, key="id",
+        order_col="id",
     )
     ch = T.table_changes(
         spark, table, ep0, T.read_manifest(table)["epoch"], key="id"

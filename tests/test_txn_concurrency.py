@@ -130,6 +130,7 @@ def test_two_writers_interleaved_merges_converge(spark, tmp_path, monkeypatch):
                 merge_into(
                     spark, path, src, key="id",
                     matched=[{"update": {"total": "total + src_amt"}}],
+                    not_matched=[],
                 )
         except Exception as exc:
             errors.append(exc)
@@ -181,6 +182,7 @@ def test_interleaved_commit_conflicts(spark, tmp_path, monkeypatch):
                 txn.merge_into(
                     spark, path_, src100, key="id",
                     matched=[{"update": {"total": "total + src_amt"}}],
+                    not_matched=[],
                 )
             finally:
                 monkeypatch.setattr(
@@ -195,6 +197,7 @@ def test_interleaved_commit_conflicts(spark, tmp_path, monkeypatch):
     txn.merge_into(
         spark, path, src1, key="id",
         matched=[{"update": {"total": "total + src_amt"}}],
+        not_matched=[],
     )
     assert fired["n"] == 1
     man = read_manifest(path)
@@ -223,7 +226,7 @@ def test_crash_residue_rolls_forward(spark, tmp_path):
     # pointer still names epoch 1
     with open(_manifest_path(path, 1)) as fh:
         man1 = json.load(fh)
-    man2 = dict(man1, epoch=2, op={"name": "CRASHED", "ts": "2024-01-01T00:00:00+00:00"})
+    man2 = dict(man1, epoch=2, apps={"crashed-writer": 7})
     vpath = _manifest_path(path, 2)
     with open(vpath, "w") as fh:
         json.dump(man2, fh)
@@ -239,7 +242,7 @@ def test_crash_residue_rolls_forward(spark, tmp_path):
     man = read_manifest(path)
     # crashed epoch 2 rolled forward, new upsert landed as epoch 3
     assert man["epoch"] == 3
-    assert read_manifest(path, 2)["op"]["name"] == "CRASHED"
+    assert read_manifest(path, 2)["apps"] == {"crashed-writer": 7}
     # the new upsert's rows are live (merged against the rolled-forward
     # snapshot, which referenced epoch 1's files)
     snap = {r["id"]: r["val"] for r in read_snapshot(spark, path).collect()}

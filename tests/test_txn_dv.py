@@ -17,7 +17,6 @@ pytestmark = pytest.mark.slow  # excluded by the -m 'not slow' quick path
 from pyspark.sql import functions as F
 
 from kinesis3_spark.sinks.txn import (
-    append_manifest_stream,
     append_snapshot,
     delete_where,
     read_manifest,
@@ -25,7 +24,7 @@ from kinesis3_spark.sinks.txn import (
     table_changes,
     upsert_manifest_txn,
 )
-from kinesis3_spark.streaming.run import await_or_raise
+from kinesis3_spark.streaming.run import drain
 
 
 def _mk(spark, rows):
@@ -131,11 +130,13 @@ def test_stream_append_exactly_once_through_foreachbatch(spark, tmp_path):
         spark.readStream.schema(src.schema)
         .option("maxFilesPerTrigger", 1).parquet(landing)
     )
-    q = append_manifest_stream(
-        sdf, path, checkpoint=str(tmp_path / "ck"), app_id="stream-ing",
-        key="id",
+    drain(
+        sdf,
+        lambda b, batch_id: append_snapshot(
+            b, path, "id", 4, app_id="stream-ing", app_version=batch_id
+        ),
+        str(tmp_path / "ck"),
     )
-    await_or_raise(q)
     assert read_snapshot(spark, path).count() == 30
     # simulate a post-checkpoint-recovery replay of the LAST batch: the
     # runtime re-invokes foreachBatch with the same batch_id and payload

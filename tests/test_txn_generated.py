@@ -46,6 +46,7 @@ def test_upsert_computes_on_updated_rows(spark, table):
         spark,
         spark.createDataFrame([(1, 100)], "id bigint, val bigint"),
         table, key="id",
+        order_col="id",
     )
     got = {r["id"]: r["doubled"] for r in T.read_snapshot(spark, table).collect()}
     assert got[1] == 200 and got[2] == 40
@@ -66,6 +67,7 @@ def test_merge_recomputes_and_refuses_clause_assignment(spark, table):
         T.merge_into(
             spark, table, src, key="id",
             matched=[{"update": {"doubled": "src_v"}}],
+            not_matched=[],
         )
 
 
@@ -105,7 +107,7 @@ def test_batch_missing_generated_inputs_raises_contract_error(spark, table):
         T.append_snapshot(nov, table, key="id")
     # the upsert path survives it: the union restores the input column
     # (NULL for the batch row) and the expression computes over it
-    T.upsert_manifest_txn(spark, nov, table, key="id")
+    T.upsert_manifest_txn(spark, nov, table, key="id", order_col="id")
     row = (
         T.read_snapshot(spark, table).where("id = 20").first()
     )

@@ -84,6 +84,7 @@ def test_duplicate_source_key_matching_target_raises(spark, table):
         T.merge_into(
             spark, table, dup, key="id",
             matched=[{"update": {"bal": "src_amt"}}],
+            not_matched=[],
         )
     # the same dup keys are legal while they MISS the target (pure
     # insert fan-out is append-like, Delta's rule)
@@ -104,6 +105,7 @@ def test_untouched_buckets_carried_by_reference(spark, table):
     T.merge_into(
         spark, table, src, key="id",
         matched=[{"update": {"bal": "bal + src_amt"}}],
+        not_matched=[],
     )
     man1 = T.read_manifest(table)
     touched = {
@@ -120,6 +122,7 @@ def test_untouched_buckets_carried_by_reference(spark, table):
         spark, table, src, key="id",
         not_matched_by_source=[{"condition": "bal < -1000000000",
                                 "delete": True}],
+        matched=[], not_matched=[],
     )
     man2 = T.read_manifest(table)
     assert not ({e["path"] for e in man1["files"]}
@@ -131,7 +134,7 @@ def test_replay_fence_skips_applied_batch(spark, table):
     src = spark.createDataFrame([(1, 5)], "id bigint, amt bigint")
     kw = dict(
         key="id", matched=[{"update": {"bal": "bal + src_amt"}}],
-        app_id="merge-app", app_version=7,
+        not_matched=[], app_id="merge-app", app_version=7,
     )
     ep1 = T.merge_into(spark, table, src, **kw)
     ep2 = T.merge_into(spark, table, src, **kw)  # replay: skipped
@@ -145,6 +148,7 @@ def test_merge_speaks_logical_names_on_mapped_table(spark, table):
     T.merge_into(
         spark, table, src, key="id",
         matched=[{"update": {"balance": "balance + src_amt"}}],
+        not_matched=[],
     )
     t = T.read_snapshot(spark, table)
     assert "balance" in t.columns and "bal" not in t.columns

@@ -50,18 +50,15 @@ def main() -> None:
             fails.append(n)
             continue
         s = q[n](spark, sf).toPandas()
-        if n in o:
-            d = con.sql(o[n]).df()
-            ok = (
-                len(s) == len(d)
-                and sorted(s.columns) == sorted(d.columns)
-                and vhash(s) == vhash(d)
-            )
-            if not ok:
-                fails.append(n)
-            print(n, len(s), "rows:", "ok" if ok else "FAIL")
-        else:
-            print(n, len(s), "rows (rows-only, no oracle)")
+        d = con.sql(o[n]).df()
+        ok = (
+            len(s) == len(d)
+            and sorted(s.columns) == sorted(d.columns)
+            and vhash(s) == vhash(d)
+        )
+        if not ok:
+            fails.append(n)
+        print(n, len(s), "rows:", "ok" if ok else "FAIL")
     print("FAILS:", fails)
     sys.exit(1 if fails else 0)
 
